@@ -111,50 +111,37 @@ object RelationalQueries {
     table
   }
 
+  /** The embeddings count every frozen-quantizer row splits the
+    * corpus at (qc3/qe1/qe3/qfn/qg2 build on `vec_id * 2 < n`) —
+    * memoized per dir: counting inline cost a driver-blocking job per
+    * invocation (every bench repetition re-paid it after the index
+    * itself was buildOnce-amortized). Each build derives its own nlist
+    * from the rows it trains on, and each probe its nprobe from the
+    * stored nlist. */
+  private val embeddingCounts =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  private def embeddingCount(s: SparkSession, d: String): Long =
+    embeddingCounts.computeIfAbsent(dirTag(d), _ =>
+      Tables.embeddings(s, d).count())
+
   /** The shared persisted ADC index (q99/qa6/qb7/qc2/qc4), same
-    * single-definition contract. Returns (table, nprobe). The derived
-    * (nlist, nprobe) memoize beside the build: they are a pure
-    * function of the corpus count, and re-counting the embeddings on
-    * every co-consumer invocation was one more driver-blocking job per
-    * probe batch. */
-  private val denseParams =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-
-  /** The full-corpus (nlist, nprobe) every dense-index consumer shares
-    * (q99's derivation), memoized per source dir. */
-  private def denseParamsFor(s: SparkSession, d: String): (Int, Int) =
-    denseParams.computeIfAbsent(dirTag(d), _ =>
-      Similarity.ivfParams(Tables.embeddings(s, d).count(),
-        targetRecall = q35cTargetRecall))
-
-  /** The half-corpus (count, nlist, nprobe) shared by every
-    * frozen-quantizer row (qc3/qe1/qe3 build on the first half) —
-    * memoized per dir under the denseParams discipline: deriving them
-    * inline cost two driver-blocking embedding counts per invocation
-    * (every bench repetition re-paid them after the index itself was
-    * buildOnce-amortized). */
-  private val halfParams =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Int, Int)]()
-
-  private def halfParamsFor(s: SparkSession, d: String): (Long, Int, Int) =
-    halfParams.computeIfAbsent(dirTag(d), _ => {
-      val vecs = Tables.embeddings(s, d)
-      val n = vecs.count()
-      val (nlist, nprobe) = Similarity.ivfParams(
-        vecs.filter(col("vec_id") * 2 < n).count(),
-        targetRecall = q35cTargetRecall)
-      (n, nlist, nprobe)
-    })
-
-  private def denseIndex(s: SparkSession, d: String): (String, Int) = {
+    * single-definition contract: one unsharded build per sf dir per
+    * process. Returns the table name. */
+  private def denseIndex(s: SparkSession, d: String): String = {
     val table = "q99_idx_" + dirTag(d)
-    val (nlist, nprobe) = denseParamsFor(s, d)
     buildOnce(table) {
-      Similarity.writeIvfAdcIndex(Tables.embeddings(s, d), "vec_id",
-        "embedding", table, nlist = nlist, dim = 64)
+      Similarity.writeIvfAdcIndexSharded(Tables.embeddings(s, d),
+        "vec_id", "embedding", table, targetRecall = q35cTargetRecall)
     }
-    (table, nprobe)
+    table
   }
+
+  /** q99's probe of the persisted index `table` — every dense-index
+    * row's probe, at the q35c fraction law the oracles unroll. */
+  private def denseProbe(q: DataFrame, k: Int, table: String): DataFrame =
+    Similarity.ivfAdcTopKIndexedSharded(q, "vec_id", "embedding", k,
+      table, targetRecall = q35cTargetRecall)
 
   /** qa1's re-rank depth — the quantized tier hands this many survivors
     * per query to the full-precision re-rank; single-sourced into the
@@ -349,8 +336,8 @@ object RelationalQueries {
   /** qb7's hybrid stack with the DENSE LEG pluggable (r17 verdict item
     * 1): `denseLeg(queryVecs, k)` produces the (q_id, nb_id, rank)
     * candidate list. The registry row passes the oracle-gated
-    * fraction-law probe; [[qb7Tuned]] passes the tuned broadcast/hier
-    * probe. ONE body, so serving mode can differ from the gated row in
+    * fraction-law probe; [[qb7TunedStored]] passes the tuned serving
+    * path. ONE body, so serving mode can differ from the gated row in
     * NOTHING but the dense probe. */
   private[graft] def qb7Stack(s: SparkSession, d: String,
       denseLeg: (DataFrame, Int) => DataFrame): DataFrame = {
@@ -363,18 +350,6 @@ object RelationalQueries {
     Similarity.rrfFuse(Seq(lex, dense), "q_id", "doc_id", "rank",
       k = qb2K, c = qb2C)
   }
-
-  /** The TUNED SERVING twin of qb7: the same stack body probing the
-    * caller's persisted index through [[Similarity.ivfAdcTopKIndexedHier]]
-    * at recall-gated absolute dials ([[Similarity.tuneNprobe]] /
-    * [[Similarity.tuneGprobe]] at monitoring cadence, never per query).
-    * OPT-IN serving path — a measured-recall operator (its agreement
-    * with the fraction-law stack is itself a gated GrowthBench number),
-    * never substituted under the oracle-gated qb7 row. */
-  private[graft] def qb7Tuned(s: SparkSession, d: String,
-      vtable: String, nprobe: Int, gprobe: Int): DataFrame =
-    qb7Stack(s, d, (q, k) => Similarity.ivfAdcTopKIndexedHier(q,
-      "vec_id", "embedding", k, nprobe, gprobe, vtable, dim = 64))
 
   /** qc2's production stack with the DENSE LEG pluggable — same
     * single-body contract as [[qb7Stack]]. */
@@ -416,50 +391,29 @@ object RelationalQueries {
       k = qb2K, c = qb2C)
   }
 
-  /** The TUNED SERVING twin of qc2 — [[qb7Tuned]]'s contract on the
-    * full screened stack. */
-  private[graft] def qc2Tuned(s: SparkSession, d: String,
-      vtable: String, nprobe: Int, gprobe: Int): DataFrame =
-    qc2Stack(s, d, (q, k) => Similarity.ivfAdcTopKIndexedHier(q,
-      "vec_id", "embedding", k, nprobe, gprobe, vtable, dim = 64))
+  /** Dense leg served from the index's STORED per-shard serving rows
+    * ([[Similarity.ivfAdcTopKIndexedShardedServed]]: each shard's
+    * tuned two-level probe, or its escalated exact-dot re-rank),
+    * refusing stale or missing rows LOUDLY — no exact leg and no
+    * hand-passed dials at serving time. The stored rows come from
+    * `tuneShardServingPersist` (or `tuneShardDialsPersist`) at
+    * monitoring cadence. OPT-IN serving path: its agreement with the
+    * fraction-law stack is itself a gated GrowthBench number; never
+    * substituted under the oracle-gated rows. */
+  private def storedDenseLeg(s: SparkSession, d: String,
+      vtable: String): (DataFrame, Int) => DataFrame = (q, k) =>
+    Similarity.ivfAdcTopKIndexedShardedServed(Tables.embeddings(s, d), q,
+        "vec_id", "embedding", k, vtable)
+      .select(col("q_id"), col("nb_id"), col("rank"))
 
-  /** Dense leg driven by the PERSISTED serving decision (r18 verdict
-    * item 3): reads [[Similarity.readServingDecision]] — refusing a
-    * stale or missing one LOUDLY — and serves through the mode it
-    * prescribes (flat tuned probe, two-level probe when a gprobe was
-    * stored, or the escalated exact-dot re-rank), with NO exact leg
-    * and no hand-passed dials at serving time. The decision read is
-    * one sidecar row + a metadata state-key check per stack plan. */
-  private[graft] def storedDenseLeg(s: SparkSession, d: String,
-      vtable: String): (DataFrame, Int) => DataFrame = {
-    val (serving, gp) = Similarity.readServingDecision(s, vtable)
-      .getOrElse(throw new IllegalStateException(
-        s"$vtable has no fresh serving decision — the index was " +
-          "retrained/rebuilt since the last tune (or never tuned): " +
-          "run tuneServingPersist at monitoring cadence, then serve"))
-    serving match {
-      case Similarity.RerankServing(np, depth, _) => (q, k) =>
-        Similarity.ivfAdcRerankIndexed(Tables.embeddings(s, d), q,
-            "vec_id", "embedding", k, math.max(depth, k), np, vtable,
-            dim = 64)
-          .select(col("q_id"), col("nb_id"), col("rank"))
-      case Similarity.ProbeServing(np, _) if gp > 0 => (q, k) =>
-        Similarity.ivfAdcTopKIndexedHier(q, "vec_id", "embedding", k,
-          np, gp, vtable, dim = 64)
-      case Similarity.ProbeServing(np, _) => (q, k) =>
-        Similarity.ivfAdcTopKIndexed(q, "vec_id", "embedding", k, np,
-          vtable, dim = 64)
-    }
-  }
-
-  /** [[qb7Tuned]] serving from the STORED decision instead of
-    * hand-passed dials. */
+  /** The TUNED SERVING twin of qb7: the same stack body with the dense
+    * leg served from the stored decision. */
   private[graft] def qb7TunedStored(s: SparkSession, d: String,
       vtable: String): DataFrame =
     qb7Stack(s, d, storedDenseLeg(s, d, vtable))
 
-  /** [[qc2Tuned]] serving from the STORED decision instead of
-    * hand-passed dials. */
+  /** The TUNED SERVING twin of qc2 — [[qb7TunedStored]]'s contract on
+    * the full screened stack. */
   private[graft] def qc2TunedStored(s: SparkSession, d: String,
       vtable: String): DataFrame =
     qc2Stack(s, d, storedDenseLeg(s, d, vtable))
@@ -846,11 +800,8 @@ object RelationalQueries {
     // quantizer retrain, no code re-pack, and NO shuffle on the stored
     // side (plan-asserted). Same oracle as q89 — the stored index must
     // lose nothing vs the retrain-every-run tier.
-    "q99" -> ((s, d) => {
-      val (table, nprobe) = denseIndex(s, d)
-      Similarity.ivfAdcTopKIndexed(Tables.embeddings(s, d), "vec_id",
-        "embedding", k = 3, nprobe = nprobe, table = table, dim = 64)
-    }),
+    "q99" -> ((s, d) =>
+      denseProbe(Tables.embeddings(s, d), 3, denseIndex(s, d))),
 
     // QA6 — q99's persisted-index retrieval with the QUERIES AS A
     // STREAM (the online serving shape): stateless map-side probe
@@ -860,12 +811,13 @@ object RelationalQueries {
     // its own micro-batch). Shares q99's oracle VERBATIM — stream ==
     // batch == oracle, the q70s gate shape on the retrieval tier.
     "qa6" -> ((s, d) => {
-      val (table, nprobe) = denseIndex(s, d)
+      val table = denseIndex(s, d)
       val stream = Tables.streamOf(s, d, "embeddings")
       val sink = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_qa6_${s.sparkContext.applicationId}").getAbsolutePath
-      Similarity.streamAdcTopK(stream, "vec_id", "embedding", k = 3,
-        nprobe = nprobe, table = table, sinkDir = sink, dim = 64)
+      Similarity.streamAdcTopKSharded(stream, "vec_id", "embedding",
+        k = 3, table = table, sinkDir = sink,
+        targetRecall = q35cTargetRecall)
     }),
 
     // QA1 — two-stage retrieval: q89's quantized candidate generation to
@@ -1804,9 +1756,8 @@ object RelationalQueries {
     // dense chain's queries post-rank is exact: per-query ranking is
     // independent of the query set).
     "qb7" -> ((s, d) => {
-      val (vtable, nprobe) = denseIndex(s, d)
-      qb7Stack(s, d, (q, k) => Similarity.ivfAdcTopKIndexed(q,
-        "vec_id", "embedding", k, nprobe, vtable, dim = 64))
+      val vtable = denseIndex(s, d)
+      qb7Stack(s, d, denseProbe(_, _, vtable))
     }),
 
     // QB3 — qb1 against a PERSISTED postings index (the third persisted
@@ -1977,14 +1928,13 @@ object RelationalQueries {
     // chain, and the label predicate in SQL — unchanged by the indexed
     // verification, which is gated equal to the scan path.
     "qc2" -> ((s, d) => {
-      val (vtable, nprobe) = denseIndex(s, d)
-      qc2Stack(s, d, (q, k) => Similarity.ivfAdcTopKIndexed(q,
-        "vec_id", "embedding", k, nprobe, vtable, dim = 64))
+      val vtable = denseIndex(s, d)
+      qc2Stack(s, d, denseProbe(_, _, vtable))
     }),
 
     // QC3 — IVF index DRIFT audit: build the ADC index on the FIRST
     // HALF of the corpus (quantizer trained there, frozen), append the
-    // second half against the stored centroids (appendIvfAdcIndex — the
+    // second half against the stored centroids (appendIvfAdcIndexSharded — the
     // 2x-growth maintenance scenario), then gate the grown index's
     // recall@3 against the exact MIPS scan over the full corpus. The
     // recall DEGRADATION itself is the oracle-gated quantity: DuckDB
@@ -1996,18 +1946,19 @@ object RelationalQueries {
     // this is that monitor as a standing gate.
     "qc3" -> ((s, d) => {
       val vecs = Tables.embeddings(s, d)
-      val (n, nlist, nprobe) = halfParamsFor(s, d)
+      val n = embeddingCount(s, d)
       val build = vecs.filter(col("vec_id") * 2 < n)
       val table = "qc3_idx_" + dirTag(d)
       buildOnce(table) {
-        Similarity.writeIvfAdcIndex(build, "vec_id", "embedding", table,
-          nlist = nlist, dim = 64)
-        Similarity.appendIvfAdcIndex(vecs.filter(col("vec_id") * 2 >= n),
-          "vec_id", "embedding", table, dim = 64)
+        Similarity.writeIvfAdcIndexSharded(build, "vec_id", "embedding",
+          table, targetRecall = q35cTargetRecall)
+        Similarity.appendIvfAdcIndexSharded(
+          vecs.filter(col("vec_id") * 2 >= n), "vec_id", "embedding",
+          table)
       }
       Similarity.recallAuditIndexed(vecs,
         vecs.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-        k = 3, nprobe = nprobe, table = table, dim = 64)
+        k = 3, table = table, targetRecall = q35cTargetRecall)
     }),
 
     // QC4 — qb7's HYBRID serving with the queries AS A STREAM: the
@@ -2025,7 +1976,7 @@ object RelationalQueries {
     "qc4" -> ((s, d) => {
       val vecs = Tables.embeddings(s, d)
       val ltable = lexIndex(s, d)
-      val (vtable, nprobe) = denseIndex(s, d)
+      val vtable = denseIndex(s, d)
       // LEFT join: a query doc with no embedding row keeps its lexical
       // leg (null qvec skips only the dense probe) — documents can
       // outnumber embeddings (they do at sf0.1), and qb7's legs are
@@ -2037,7 +1988,7 @@ object RelationalQueries {
       val sink = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_qc4_${s.sparkContext.applicationId}").getAbsolutePath
       Similarity.streamHybridTopK(stream, "q_id", "qtext", "qvec",
-        ltable, vtable, lexDepth = qb1K, denseDepth = 3, nprobe = nprobe,
+        ltable, vtable, lexDepth = qb1K, denseDepth = 3,
         k = qb2K, sinkDir = sink, c = qb2C, k1 = qb1K1, b = qb1B)
     }),
 
@@ -2193,19 +2144,16 @@ object RelationalQueries {
     "qd4" -> ((s, d) => {
       val vecs = Tables.embeddings(s, d)
       val table = "qd4_idx_" + dirTag(d)
-      val (nlist, nprobe) = denseParamsFor(s, d)
       buildOnce(table) {
-        Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding", table,
-          nlist = nlist, dim = 64)
-        Similarity.deleteIvfVecs(s, table,
+        Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+          table, targetRecall = q35cTargetRecall)
+        Similarity.deleteIvfVecsSharded(s, table,
           vecs.filter(col("vec_id") % qd3DelMod === qd3DelRes)
             .select("vec_id"), "vec_id")
-        Similarity.compactIvfAdcIndex(s, table)
+        Similarity.compactIvfAdcIndexSharded(s, table)
       }
-      Similarity.ivfAdcTopKIndexed(
-        vecs.filter(col("vec_id") % qd3DelMod =!= qd3DelRes),
-        "vec_id", "embedding", k = 3, nprobe = nprobe, table = table,
-        dim = 64)
+      denseProbe(vecs.filter(col("vec_id") % qd3DelMod =!= qd3DelRes), 3,
+        table)
     }),
 
     // QE1 — STREAMING index maintenance on the DENSE tier (r14): qd6's
@@ -2220,19 +2168,18 @@ object RelationalQueries {
     // (StreamingSpec).
     "qe1" -> ((s, d) => {
       val vecs = Tables.embeddings(s, d)
-      val (n, nlist, nprobe) = halfParamsFor(s, d)
+      val n = embeddingCount(s, d)
       val build = vecs.filter(col("vec_id") * 2 < n)
       val table = "qe1_idx_" + dirTag(d)
       buildOnce(table) {
-        Similarity.writeIvfAdcIndex(build, "vec_id", "embedding", table,
-          nlist = nlist, dim = 64)
-        Similarity.streamAppendIvfAdcIndex(
+        Similarity.writeIvfAdcIndexSharded(build, "vec_id", "embedding",
+          table, targetRecall = q35cTargetRecall)
+        Similarity.streamAppendIvfAdcIndexSharded(
           Tables.streamOf(s, d, "embeddings")
             .filter(col("vec_id") * 2 >= n),
-          "vec_id", "embedding", table, dim = 64)
+          "vec_id", "embedding", table)
       }
-      Similarity.ivfAdcTopKIndexed(vecs, "vec_id", "embedding", k = 3,
-        nprobe = nprobe, table = table, dim = 64)
+      denseProbe(vecs, 3, table)
     }),
 
     // QE2 — STREAMING index maintenance on the SIGNATURE tier (r14),
@@ -2269,7 +2216,7 @@ object RelationalQueries {
     // signal, closing the dense tier's maintenance loop. The index is
     // built on the first half (quantizer frozen there), grown by a
     // batch append (the drifted 2x state qc3 monitors), then
-    // retrainIvfAdcIndex retrains the quantizer over the FULL corpus
+    // retrainIvfAdcIndexSharded retrains the quantizer over the FULL corpus
     // and swaps the re-packed index in via the shadow protocol. The
     // probe must now equal a FRESH full-corpus build — q99's oracle
     // VERBATIM — proving the retrain fully erases the drift debt: the
@@ -2279,20 +2226,19 @@ object RelationalQueries {
     // (PipelineSpec).
     "qe3" -> ((s, d) => {
       val vecs = Tables.embeddings(s, d)
-      val (n, bNlist, _) = halfParamsFor(s, d)
+      val n = embeddingCount(s, d)
       val build = vecs.filter(col("vec_id") * 2 < n)
-      val (fNlist, fNprobe) = denseParamsFor(s, d)
       val table = "qe3_idx_" + dirTag(d)
       buildOnce(table) {
-        Similarity.writeIvfAdcIndex(build, "vec_id", "embedding", table,
-          nlist = bNlist, dim = 64)
-        Similarity.appendIvfAdcIndex(vecs.filter(col("vec_id") * 2 >= n),
-          "vec_id", "embedding", table, dim = 64)
-        Similarity.retrainIvfAdcIndex(vecs, "vec_id", "embedding", table,
-          nlist = fNlist, dim = 64)
+        Similarity.writeIvfAdcIndexSharded(build, "vec_id", "embedding",
+          table, targetRecall = q35cTargetRecall)
+        Similarity.appendIvfAdcIndexSharded(
+          vecs.filter(col("vec_id") * 2 >= n), "vec_id", "embedding",
+          table)
+        Similarity.retrainIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+          table, targetRecall = q35cTargetRecall)
       }
-      Similarity.ivfAdcTopKIndexed(vecs, "vec_id", "embedding", k = 3,
-        nprobe = fNprobe, table = table, dim = 64)
+      denseProbe(vecs, 3, table)
     }),
 
     // QE4 — mergeable quantile sketch (r14): p50/p90/p99 of
@@ -2936,11 +2882,10 @@ object RelationalQueries {
       val (h, b) = Dedup.minhashParams(0.8, 0.95, maxHashes = 24)
       val (lexT, adcT, mhT) = (s"qfj_lex_${dirTag(d)}",
         s"qfj_adc_${dirTag(d)}", s"qfj_mh_${dirTag(d)}")
-      val (nlist, nprobe) = denseParamsFor(s, d)
       buildOnce(lexT) {
         TextAnalysis.writeBm25Index(docs, "doc_id", "text", lexT)
-        Similarity.writeIvfAdcIndex(Tables.embeddings(s, d), "vec_id",
-          "embedding", adcT, nlist = nlist, dim = 64)
+        Similarity.writeIvfAdcIndexSharded(Tables.embeddings(s, d),
+          "vec_id", "embedding", adcT, targetRecall = q35cTargetRecall)
         Dedup.writeMinhashIndex(docs.filter(col("doc_id") < 400),
           "doc_id", "text", mhT, n = 3, numHashes = h, bands = b)
         Takedown.takedownSource(s, docs, "source", "doc_id",
@@ -2955,11 +2900,8 @@ object RelationalQueries {
           col("score_u").cast("double").as("v"))
       val revoked = docs.filter(col("source") === qfeRetiredSource)
         .select(col("doc_id").as("vec_id"))
-      val dense = Similarity.ivfAdcTopKIndexed(
-          Tables.embeddings(s, d)
-            .join(revoked, Seq("vec_id"), "left_anti"),
-          "vec_id", "embedding", k = 3, nprobe = nprobe, table = adcT,
-          dim = 64)
+      val dense = denseProbe(Tables.embeddings(s, d)
+            .join(revoked, Seq("vec_id"), "left_anti"), 3, adcT)
         .select(lit("dense").as("leg"), col("q_id"),
           col("nb_id").as("item_id"),
           col("rank").cast("long").as("rnk"),
@@ -3099,8 +3041,8 @@ object RelationalQueries {
     }),
 
     // QFN — ONLINE auto-compaction on the DENSE INDEX tier: qfm's
-    // contract on the ADC index (keys in table_g, carried into
-    // table_g_hwm by compactIvfAdcIndex — and by retrainIvfAdcIndex,
+    // contract on the ADC index (keys in table_sv_g, carried into
+    // table_sv_g_hwm by compaction — and by retrain,
     // whose generation reset has the same exposure). Built on the
     // first half (quantizer frozen there), grown to 3/4 by a batch
     // append, the last quarter STREAMED with the in-loop policy
@@ -3109,23 +3051,23 @@ object RelationalQueries {
     // VERBATIM.
     "qfn" -> ((s, d) => {
       val vecs = Tables.embeddings(s, d)
-      val (n, nlist, nprobe) = halfParamsFor(s, d)
+      val n = embeddingCount(s, d)
       val table = "qfn_idx_" + dirTag(d)
       buildOnce(table) {
-        Similarity.writeIvfAdcIndex(vecs.filter(col("vec_id") * 2 < n),
-          "vec_id", "embedding", table, nlist = nlist, dim = 64)
-        Similarity.appendIvfAdcIndex(
+        Similarity.writeIvfAdcIndexSharded(
+          vecs.filter(col("vec_id") * 2 < n), "vec_id", "embedding",
+          table, targetRecall = q35cTargetRecall)
+        Similarity.appendIvfAdcIndexSharded(
           vecs.filter(col("vec_id") * 2 >= n &&
             col("vec_id") * 4 < 3 * n),
           "vec_id", "embedding", table)
-        val q = Similarity.startStreamAppendIvfAdcIndex(
+        val q = Similarity.startStreamAppendIvfAdcIndexSharded(
           Tables.streamOf(s, d, "embeddings")
             .filter(col("vec_id") * 4 >= 3 * n),
-          "vec_id", "embedding", table, dim = 64, maxGen = Some(2))
+          "vec_id", "embedding", table, maxGen = Some(2))
         try q.processAllAvailable() finally q.stop()
       }
-      Similarity.ivfAdcTopKIndexed(vecs, "vec_id", "embedding", k = 3,
-        nprobe = nprobe, table = table, dim = 64)
+      denseProbe(vecs, 3, table)
     }),
 
     // QG1 — the SHARDED persisted ADC index (r17 verdict item 3;
@@ -3154,8 +3096,7 @@ object RelationalQueries {
           targetRecall = q35cTargetRecall)
       }
       Similarity.ivfAdcTopKIndexedSharded(vecs, "vec_id", "embedding",
-        k = 3, table = table, dim = 64,
-        targetRecall = q35cTargetRecall)
+        k = 3, table = table, targetRecall = q35cTargetRecall)
     }),
 
     // QG2 — STREAM-GROWN SHARDED index (r18 verdict item 5): the
@@ -3165,12 +3106,12 @@ object RelationalQueries {
     // micro-batch)), then qg1's fan-out/merge probe over the full
     // corpus. Oracle: qg1's per-shard CTE chains with each shard's
     // quantizer trained on the FIRST-HALF rows of that shard only
-    // (the frozen-quantizer law qe1 gates on the single table,
+    // (the frozen-quantizer law qe1 gates at one shard,
     // composed with the shard law) — stream == batch == oracle at
     // N shards.
     "qg2" -> ((s, d) => {
       val vecs = Tables.embeddings(s, d)
-      val (n, _, _) = halfParamsFor(s, d)
+      val n = embeddingCount(s, d)
       val table = "qg2_idx_" + dirTag(d)
       buildOnce(table) {
         Similarity.writeIvfAdcIndexSharded(
@@ -3180,11 +3121,10 @@ object RelationalQueries {
         Similarity.streamAppendIvfAdcIndexSharded(
           Tables.streamOf(s, d, "embeddings")
             .filter(col("vec_id") * 2 >= n),
-          "vec_id", "embedding", table, dim = 64)
+          "vec_id", "embedding", table)
       }
       Similarity.ivfAdcTopKIndexedSharded(vecs, "vec_id", "embedding",
-        k = 3, table = table, dim = 64,
-        targetRecall = q35cTargetRecall)
+        k = 3, table = table, targetRecall = q35cTargetRecall)
     }),
 
     // QG3 — RESHARD, oracle-gated end to end (r18 verdict item 4):
@@ -3213,8 +3153,7 @@ object RelationalQueries {
           targetRecall = q35cTargetRecall)
       }
       Similarity.ivfAdcTopKIndexedSharded(vecs, "vec_id", "embedding",
-        k = 3, table = table, dim = 64,
-        targetRecall = q35cTargetRecall)
+        k = 3, table = table, targetRecall = q35cTargetRecall)
     }),
 
     // QG4 — STREAMED queries against the SHARDED index (qa6's serving
@@ -3239,7 +3178,7 @@ object RelationalQueries {
       Similarity.streamAdcTopKSharded(
         Tables.streamOf(s, d, "embeddings"), "vec_id", "embedding",
         k = 3, table = table, sinkDir = sink,
-        dim = 64, targetRecall = q35cTargetRecall)
+        targetRecall = q35cTargetRecall)
     })
   )
 
@@ -3511,7 +3450,7 @@ object RelationalQueries {
     * identical parameters at any scale factor. Distance forms mirror each
     * Scala phase deliberately: training assignment uses Σ(v−c)² (the
     * trainCoarseQuantizer loop), corpus assignment/probing uses
-    * |c|² − 2·v·c (the NearestCellsExpr key; |v|² drops out of the
+    * |c|² − 2·v·c (the NearestCells.nearest key; |v|² drops out of the
     * ordering), both with ties to the lower cell id. Centroids only pick
     * integer candidate sets — the output cos values are data-only, so the
     * cross-engine fp exposure is argmin near-ties between distinct
@@ -3671,7 +3610,7 @@ object RelationalQueries {
       |  FROM cand$sfx)""".stripMargin
 
   /** DuckDB twin of [[Similarity.ivfAdcTopK]] (q89) — and, verbatim, of
-    * [[Similarity.ivfAdcTopKIndexed]] (q99), whose contract is that the
+    * [[Similarity.ivfAdcTopKIndexedSharded]] (q99), whose contract is that the
     * persisted index loses nothing vs the retrain-every-run tier. */
   private def adcOracleSql(k: Int, fracNum: Int, occ: Int, iters: Int,
       dim: Int): String =
@@ -3709,7 +3648,7 @@ object RelationalQueries {
     * shard law is `vec_id % nShards`, HashPartitioner's function, so
     * the restriction is the stored shard bit-for-bit) — then ONE
     * global rank over the UNION of the per-shard candidate sets, the
-    * identical key and tie-break as the single-table chain. Shards
+    * identical key and tie-break as the one-shard chain. Shards
     * partition the corpus, so the union is duplicate-free by
     * construction. */
   private def shardedAdcOracleSql(k: Int, nShards: Int, fracNum: Int,

@@ -1,104 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit, typedLit}
-import org.apache.spark.sql.types._
 
 /** The `nprobe` nearest coarse-quantizer cells of an embedding — the
-  * IVF index's assignment/probe primitive.
-  *
-  * The declarative form (`array_sort` over an `array(struct(dist, cell))`
-  * built from nlist literal dot products) is correct but builds an
-  * expression tree with nlist × dim literal leaves: at nlist=64, dim=64
-  * that is a ~4k-node tree whose planning + codegen time dwarfs the
-  * actual arithmetic at every phase (train, assign, probe). Here the
-  * centroid matrix is ONE foldable literal child, folded once into flat
-  * primitive arrays; the generated code is a single static call into a
-  * tight loop — whole-stage-codegen friendly, O(nlist × dim) per row,
-  * no allocation beyond the output ids.
+  * IVF index's assignment/probe primitive, as a scalar kernel. The
+  * plan-side expressions ([[NearestCellsBcExpr]] and the sharded
+  * [[NearestCellsShardedBcExpr]]) carry the centroid matrix in a
+  * broadcast and call [[NearestCells.nearest]] from generated code: a
+  * declarative `array_sort` over nlist × dim literal dot products
+  * builds a ~4k-node tree at nlist=64, dim=64 whose planning and
+  * codegen dwarf the arithmetic, while this is one static call into a
+  * tight loop — O(nlist × dim) per row, no allocation beyond the
+  * output ids.
   *
   * Distance key is |c|² − 2·v·c (|v|² is row-constant and drops out of
-  * the ordering); ties break toward the lower cell id, matching the
-  * `array_sort(struct(d, cell))` semantics it replaces.
+  * the ordering); ties break toward the lower cell id.
   */
-case class NearestCellsExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  @transient private lazy val cents: Array[Array[Double]] = {
-    val arr = second.eval().asInstanceOf[ArrayData]
-    val m = Array.tabulate(arr.numElements())(i => arr.getArray(i).toDoubleArray())
-    // the kernel reads the matrix as flat c*dim offsets — a ragged row
-    // would silently misalign every distance, so fail loudly instead
-    m.find(_.length != m(0).length).foreach(r =>
-      throw new IllegalArgumentException(
-        s"nearest_cells: ragged centroid matrix (row of length ${r.length}" +
-        s" vs ${m(0).length})"))
-    m
-  }
-  @transient private lazy val dim: Int =
-    if (cents.isEmpty) 0 else cents(0).length
-  @transient private lazy val flat: Array[Double] = cents.flatten
-  @transient private lazy val norms2: Array[Double] =
-    cents.map(_.map(x => x * x).sum)
-  @transient private lazy val nprobe: Int =
-    third.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  private def isFloat: Boolean = first.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = first.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _                                                  => false
-    }
-    val centsOk = second.foldable && (second.dataType match {
-      case ArrayType(ArrayType(DoubleType, _), _) => true
-      case _                                      => false
-    })
-    val probeOk = third.foldable && third.dataType == IntegerType
-    if (vecOk && centsOk && probeOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "nearest_cells expects (array<float|double>, foldable " +
-      s"array<array<double>>, foldable int); got (${first.dataType.sql}, " +
-      s"${second.dataType.sql}, ${third.dataType.sql})")
-  }
-
-  override def nullSafeEval(v: Any, c: Any, p: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(NearestCells.nearest(
-      v.asInstanceOf[ArrayData], isFloat, flat, norms2, dim, nprobe))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, _, _) => {
-      val flatRef = ctx.addReferenceObj("ivfFlat", flat, "double[]")
-      val normsRef = ctx.addReferenceObj("ivfNorms2", norms2, "double[]")
-      s"""
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray(
-         |    graft.functions.NearestCells.nearest(
-         |      $v, $isFloat, $flatRef, $normsRef, $dim, $nprobe));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): NearestCellsExpr =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object NearestCells {
-
-  /** Column API: ids of the `nprobe` cells nearest to `vec`, ascending
-    * by distance. Requires [[VectorOps.ensureRegistered]]. */
-  def apply(vec: Column, cents: Array[Array[Double]], nprobe: Int): Column =
-    call_function("nearest_cells", vec,
-      typedLit(cents.map(_.toSeq).toSeq), lit(nprobe))
 
   /** The first `k` POSITIONS of a (key, id) argsort — ascending by
     * `Double.compare` on the key (NaN last), ties to the lower id.

@@ -11,9 +11,9 @@ import org.apache.spark.sql.types._
 /** The coarse-quantizer probe with the centroid state riding a
   * BROADCAST VARIABLE instead of a plan literal.
   *
-  * [[NearestCellsExpr]] folds its centroid literal into codegen
-  * reference objects — correct, but those arrays serialize into the
-  * TASK BINARY of every stage of every plan that probes the index:
+  * A centroid literal folded into codegen reference objects is
+  * correct, but those arrays serialize into the TASK BINARY of every
+  * stage of every plan that probes the index:
   * measured ~0.4 µs per cell per plan on the growth corpus (the
   * qadc_tuned probe's residual 1x→100x growth was almost entirely this
   * term — candidates were constant and the parquet was cell-pruned),
@@ -21,9 +21,10 @@ import org.apache.spark.sql.types._
   * ~0.5 GB — unworkable. A Broadcast ships the quantizer ONCE per
   * executor lifetime and every subsequent probe plan carries only the
   * handle; serving batches then pay candidate-sized work regardless of
-  * nlist. Kernels are shared with the literal forms, so results are
-  * bit-identical (spec-gated); [[graft.pipeline.Similarity]] memoizes
-  * one broadcast per (table, epoch) and swaps it on a retrain's flip.
+  * nlist. The kernel is [[NearestCells.nearest]], shared with the
+  * sharded probe ([[NearestCellsShardedBcExpr]]), which is what the
+  * persisted index serves through; this single-quantizer form serves
+  * the live tiers (ivfTopK, ivfAdcTopK, semDedup) and index assignment.
   *
   * Built directly as an [[Expression]] (no registry form): a broadcast
   * handle cannot ride `call_function` literals. */
@@ -74,55 +75,6 @@ case class NearestCellsBcExpr(child: Expression,
       : NearestCellsBcExpr = copy(child = newChild)
 }
 
-/** [[NearestCellsHierExpr]]'s broadcast twin — the two-level grouping
-  * ships once per executor, not once per plan (the grouping is
-  * sqrt-level smaller than the matrix but still nlist-proportional in
-  * its cell arrays). */
-case class NearestCellsHierBcExpr(child: Expression,
-    bc: Broadcast[NearestCellsHier.Grouping], gprobe: Int, nprobe: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(IntegerType, containsNull = false)
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"nearest_cells_hier_bc expects array<float|double>, got " +
-          other.sql)
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(NearestCellsHier.nearest(
-      v.asInstanceOf[ArrayData], isFloat, bc.value, gprobe, nprobe))
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val bcRef = ctx.addReferenceObj("hierBcast", bc,
-        classOf[Broadcast[NearestCellsHier.Grouping]].getName)
-      val g = ctx.freshName("grouping")
-      val cls = classOf[NearestCellsHier.Grouping].getName
-      s"""
-         |$cls $g = ($cls) $bcRef.value();
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray(
-         |    graft.functions.NearestCellsHier.nearest(
-         |      $v, $isFloat, $g, $gprobe, $nprobe));
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : NearestCellsHierBcExpr = copy(child = newChild)
-}
-
 object NearestCellsBc {
 
   /** The executor-shared quantizer state: flat centroid matrix,
@@ -132,8 +84,7 @@ object NearestCellsBc {
 
   def quantizerOf(cents: Array[Array[Double]]): Quantizer = {
     // the kernel reads the matrix as flat c*dim offsets — a ragged row
-    // would silently misalign every distance ([[NearestCellsExpr]]'s
-    // guard, preserved on the broadcast path), so fail loudly instead
+    // would silently misalign every distance, so fail loudly instead
     if (cents.nonEmpty)
       cents.find(_.length != cents(0).length).foreach(r =>
         throw new IllegalArgumentException(
@@ -149,12 +100,4 @@ object NearestCellsBc {
       NearestCellsBcExpr(
         org.apache.spark.sql.classic.GraftColumnBridge.expression(vec),
         bc, nprobe))
-
-  /** Column API over a pre-broadcast two-level grouping. */
-  def hier(vec: Column, bc: Broadcast[NearestCellsHier.Grouping],
-      gprobe: Int, nprobe: Int): Column =
-    org.apache.spark.sql.classic.GraftColumnBridge.column(
-      NearestCellsHierBcExpr(
-        org.apache.spark.sql.classic.GraftColumnBridge.expression(vec),
-        bc, gprobe, nprobe))
 }

@@ -1,17 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit, typedLit}
-import org.apache.spark.sql.types._
 
 /** TWO-LEVEL coarse-quantizer probe — `nprobe` nearest cells selected
   * through a group layer instead of a full centroid scan.
   *
-  * [[NearestCellsExpr]] computes one distance per CELL per row:
+  * [[NearestCells.nearest]] computes one distance per CELL per row:
   * O(nlist × dim). With the occupancy-constant law (`nlist ~ n / 32`)
   * that term is linear in the corpus — invisible at bench scale, real
   * at production shard scale (nlist = 10^6 cells → 64M multiplies per
@@ -26,105 +20,15 @@ import org.apache.spark.sql.types._
   *
   * Semantics: ascending (distance, cell id); with `gprobe` = group
   * count the candidate set is every cell and the result equals
-  * [[NearestCells]] exactly (NaN-free; property-gated). Smaller
+  * [[NearestCells.nearest]] exactly (NaN-free; property-gated). Smaller
   * `gprobe` trades recall for the sqrt scan — a RECALL dial like
-  * nprobe, gated the same way (measured, via
-  * [[graft.pipeline.Similarity.recallAuditIndexed]]); it changes WHICH
+  * nprobe, tuned and gated the same way
+  * ([[graft.pipeline.Similarity.tuneShardDials]]); it changes WHICH
   * cells are probed, so it is an opt-in serving path, never silently
-  * swapped under an oracle-gated query.
-  *
-  * On the CODEGEN path the grouping is computed once on the driver
-  * (inside `doGenCode`, where the centroid literal folds) and ships
-  * to executors as a reference object. CAVEAT — interpreted fallback
-  * (wholeStage codegen off, or a compile failure): the lazy grouping
-  * re-derives per deserialized expression instance, i.e. potentially
-  * per task. This literal form is therefore the spec/convenience
-  * form; the SERVING path is [[NearestCellsHierBcExpr]], whose
-  * grouping rides a broadcast and is computed exactly once per
-  * (table, epoch) regardless of execution mode
-  * ([[graft.pipeline.Similarity.ivfAdcTopKIndexedHier]] uses it). */
-case class NearestCellsHierExpr(first: Expression, second: Expression,
-    third: Expression, fourth: Expression) extends QuaternaryExpression {
-
-  @transient private lazy val cents: Array[Array[Double]] = {
-    val arr = second.eval().asInstanceOf[ArrayData]
-    val m = Array.tabulate(arr.numElements())(i =>
-      arr.getArray(i).toDoubleArray())
-    m.find(_.length != m(0).length).foreach(r =>
-      throw new IllegalArgumentException(
-        s"nearest_cells_hier: ragged centroid matrix (row of length " +
-        s"${r.length} vs ${m(0).length})"))
-    m
-  }
-  @transient private lazy val grouping: NearestCellsHier.Grouping =
-    NearestCellsHier.group(cents)
-  @transient private lazy val gprobe: Int =
-    third.eval().asInstanceOf[Number].intValue()
-  @transient private lazy val nprobe: Int =
-    fourth.eval().asInstanceOf[Number].intValue()
-
-  override def dataType: DataType =
-    ArrayType(IntegerType, containsNull = false)
-
-  private def isFloat: Boolean = first.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = first.dataType match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _                                                  => false
-    }
-    val centsOk = second.foldable && (second.dataType match {
-      case ArrayType(ArrayType(DoubleType, _), _) => true
-      case _                                      => false
-    })
-    val probesOk = third.foldable && third.dataType == IntegerType &&
-      fourth.foldable && fourth.dataType == IntegerType
-    if (vecOk && centsOk && probesOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "nearest_cells_hier expects (array<float|double>, foldable " +
-      s"array<array<double>>, foldable int, foldable int); got " +
-      s"(${first.dataType.sql}, ${second.dataType.sql}, " +
-      s"${third.dataType.sql}, ${fourth.dataType.sql})")
-  }
-
-  override def nullSafeEval(v: Any, c: Any, g: Any, p: Any): Any =
-    UnsafeArrayData.fromPrimitiveArray(NearestCellsHier.nearest(
-      v.asInstanceOf[ArrayData], isFloat, grouping, gprobe, nprobe))
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, _, _, _) => {
-      // grouping computed HERE, on the driver, and shipped as one
-      // reference object — executors never re-run the Lloyd pass
-      val hRef = ctx.addReferenceObj("hierGrouping", grouping,
-        classOf[NearestCellsHier.Grouping].getName)
-      s"""
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray(
-         |    graft.functions.NearestCellsHier.nearest(
-         |      $v, $isFloat, $hRef, $gprobe, $nprobe));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression,
-      newFourth: Expression): NearestCellsHierExpr =
-    copy(first = newFirst, second = newSecond, third = newThird,
-      fourth = newFourth)
-}
-
+  * swapped under an oracle-gated query. The grouping is computed once
+  * per (index, epochs) on the driver and ships in the sharded probe's
+  * broadcast ([[NearestCellsSharded.ShardedHier]]). */
 object NearestCellsHier {
-
-  /** Column API: ids of the `nprobe` nearest cells among the `gprobe`
-    * nearest groups, ascending by (distance, cell id). Requires
-    * [[VectorOps.ensureRegistered]]. */
-  def apply(vec: Column, cents: Array[Array[Double]], gprobe: Int,
-      nprobe: Int): Column =
-    call_function("nearest_cells_hier", vec,
-      typedLit(cents.map(_.toSeq).toSeq), lit(gprobe), lit(nprobe))
 
   /** The precomputed two-level layout: group centroids plus the cell
     * centroids re-ordered group-major, with offsets. Serializable —

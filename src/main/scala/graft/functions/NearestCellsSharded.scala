@@ -251,7 +251,7 @@ case class NearestCellsShardedHierBcExpr(child: Expression,
 
 /** Assignment: (vec, shard) → the 1-nearest cell id (int) within that
   * shard's quantizer. Null vec or null shard → null row (dropped by
-  * the write paths' packing like the single-table tier's). */
+  * the write paths' packing). */
 case class AssignShardedCellExpr(left: Expression, right: Expression,
     bc: Broadcast[NearestCellsSharded.ShardedQuant])
     extends BinaryExpression {

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * ~4k-leaf tree whose generated code blows past the JIT-able method
   * size and drops the whole stage to interpreted evaluation, costing ~1s
   * of the q34b bucket projection at sf0.1 (measured; the same trap
-  * [[NearestCellsExpr]] exists for). Here the hyperplane matrix is ONE
+  * [[NearestCells.nearest]] avoids). Here the hyperplane matrix is ONE
   * foldable literal child folded into a flat primitive array carried as
   * a codegen reference object; the kernel is a tight static loop shared
   * by eval and generated code.

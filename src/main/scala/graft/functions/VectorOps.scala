@@ -95,13 +95,6 @@ object VectorOps {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cells",
-      exprs => NearestCellsExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_cells_hier",
-      exprs => NearestCellsHierExpr(exprs(0), exprs(1), exprs(2),
-        exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "hash60", exprs => Hash60Expr(exprs(0)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "sign_buckets",

@@ -404,7 +404,7 @@ object Dedup {
     * minhash archive index — the maintenance story for
     * [[writeMinhashIndex]]'s write-once build, completing the
     * append tier across all three persisted indexes (BM25
-    * `appendBm25Index`, ADC `appendIvfAdcIndex`, and this). The
+    * `appendBm25Index`, ADC `appendIvfAdcIndexSharded`, and this). The
     * batch's band rows are pure functions of the documents and the
     * fixed hash family (no trained state, no corpus scalars), so the
     * append is ONE bucketed file append: new files land in the
@@ -444,7 +444,7 @@ object Dedup {
   /** [[appendMinhashIndex]] with the NEW DOCUMENTS ARRIVING AS A
     * STREAM — the signature tier's twin of
     * [[graft.pipeline.TextAnalysis.streamAppendBm25Index]] (qd6) and
-    * [[graft.pipeline.Similarity.streamAppendIvfAdcIndex]] (qe1),
+    * [[graft.pipeline.Similarity.streamAppendIvfAdcIndexSharded]] (qe1),
     * completing streaming maintenance across all three persisted
     * indexes: [[streamIncrementalDedup]] streams batches AGAINST the
     * archive; this streams the corpus INTO it. Each micro-batch runs
@@ -518,7 +518,7 @@ object Dedup {
   /** Delete documents from a persisted minhash archive index — the
     * takedown/dedup-verdict consumer on the signature tier, completing
     * deletion across all three persisted indexes (BM25
-    * `deleteBm25Docs`, ADC `deleteIvfVecs`, and this). Tombstone id
+    * `deleteBm25Docs`, ADC `deleteIvfVecsSharded`, and this). Tombstone id
     * rows append to `table_t`; like the ADC tier there are NO scalars
     * (each row carries its own `n`), so the single append IS the
     * commit — present means deleted, no multi-table window — and

@@ -206,7 +206,7 @@ private[graft] object MergeTables {
     * the registry holds it, and the registry re-check inside the lock
     * preserves the concurrent-allocation guarantee. `keyTable` is
     * wherever the tier stores its `batch_key` column: the state table
-    * itself for [[MergeTables]] tiers, `table_s` / `table_g` for the
+    * itself for [[MergeTables]] tiers, `table_s` / `table_sv_g` for the
     * BM25 / ADC generation-protocol tiers.
     *
     * SCOPE: two concurrent streaming writers in SEPARATE driver
@@ -1147,7 +1147,7 @@ private[graft] object MergeTables {
     * reachable state of the scalar/generation tables, and an
     * un-dropped tombstone table is inert against rows the rewrite
     * already excluded. (Since r17 the ADC RETRAIN needs no heal of its
-    * own: its only swap is `table_g`'s — the single commit point —
+    * own: its only swap is `table_sv_g`'s — the single commit point —
     * healed by [[recoverCompactCrash]] like every sidecar's; every
     * other retrain land is inert until that flip.) No-op unless
     * exactly the crash state is found. */
@@ -1175,7 +1175,7 @@ private[graft] object MergeTables {
   /** [[swapIn]] for a frame that already carries its own protocol
     * columns — the shared shadow-then-rename replace, healed by
     * [[recoverCompactCrash]]. Used directly by the ADC retrain's
-    * single-commit `table_g` flip. */
+    * single-commit `table_sv_g` flip. */
   private[graft] def swapInKeyed(spark: SparkSession, df: DataFrame,
       keyCol: String, table: String): Unit = {
     val shadow = table + "_compact_shadow"
@@ -1225,7 +1225,7 @@ private[graft] object MergeTables {
     * `keyTable` plus any prior marks — into the [[hwmTable]] sidecar.
     * The step every key-clearing rewrite runs FIRST: [[compact]] on
     * the MergeTables tiers, and the index tiers' compactions/retrain
-    * (their keys live in `table_s` / `table_g`). Safe under every
+    * (their keys live in `table_s` / `table_sv_g`). Safe under every
     * crash ordering because committed-ness is permanent: a crash after
     * the mark write leaves the old keys live AND marked — both answers
     * agree. */

@@ -344,20 +344,15 @@ object Similarity {
       .select(col(vecCol))
   }
 
-  /** The `nprobe` nearest quantizer cells, ascending by distance —
-    * backed by the native [[graft.functions.NearestCells]] expression
-    * (the centroid matrix rides as a codegen reference object; a literal
-    * expression tree at nlist=64 × dim=64 costs more to plan and compile
-    * than the whole scan). */
   /** The scan-path operators' quantizer, shipped as a BROADCAST handle
     * instead of a plan literal (r22, the r21 verdict's q35c item): the
     * literal form folds the centroid matrix into every stage's task
     * binary of every plan — at sf0.1 the q35c/q89 plan TEXT alone was
     * ~258 KB (q88 427 KB), re-planned per run, and at a production
     * nlist the per-plan payload is ~0.5 GB (the measured ~0.4 µs/cell/
-    * plan tax that motivated [[adcQuantBc]] on the indexed path).
-    * Kernel and flat/norms2 derivation are shared with the literal
-    * expression, so results are bit-identical; the broadcast is
+    * plan tax that motivated [[svQuantBc]] on the indexed path).
+    * The kernel is [[graft.functions.NearestCells.nearest]], shared
+    * with every other cell-selection path; the broadcast is
     * per-operator-call and reclaimed by the ContextCleaner like any
     * broadcast join's. */
   private def broadcastQuantizer(spark: SparkSession,
@@ -393,11 +388,11 @@ object Similarity {
     * prefix clumps into whichever cluster sorts lowest, and Lloyd
     * iterations cannot migrate centroids across separated clusters —
     * the surviving giant multi-cluster cells inflate the probe dial
-    * ([[tuneNprobe]]) with useless candidates. `"strided"` takes every
+    * ([[tuneShardDials]]) with useless candidates. `"strided"` takes every
     * (len/nlist)-th sorted point instead — still fully deterministic,
     * but spread across the value range so each cluster attracts seeds
-    * proportional to its mass. Production clustered-corpus builds
-    * pre-train with it and pass `cents` into [[writeIvfAdcIndex]]. */
+    * proportional to its mass. Clustered-corpus builds pass
+    * `init = "strided"` to [[writeIvfAdcIndexSharded]]. */
   def trainCoarseQuantizer(vecs: DataFrame, vecCol: String, nlist: Int,
       dim: Int, iters: Int = defaultLloydIters,
       init: String = "first"): Array[Array[Double]] = {
@@ -406,7 +401,7 @@ object Similarity {
       .select(transform(col(vecCol), _.cast("double")).as("v"))
       .collect().map(_.getSeq[Double](0).toArray)
       .sortBy(_.toSeq)
-    // ragged centroid rows would silently misalign NearestCellsExpr's
+    // ragged centroid rows would silently misalign NearestCells.nearest's
     // flat c*dim offsets — reject mismatched input up front
     data.find(_.length != dim).foreach(v => throw new IllegalArgumentException(
       s"vector of length ${v.length} does not match dim=$dim"))
@@ -603,8 +598,8 @@ object Similarity {
   /** Per-query top-k over (q_id, nb_id, idot, scale) candidates by the
     * ADC key `idot * scale` desc (ties by nb_id) — through a per-query
     * WINDOW (hash-partitioned by q_id, sort-based, SPILLING). Shared by
-    * [[ivfAdcTopK]] and [[ivfAdcTopKIndexed]] so the live and persisted
-    * tiers cannot rank differently.
+    * [[ivfAdcTopK]] and every probe of the persisted sharded index so
+    * the live and persisted tiers cannot rank differently.
     *
     * Why not the [[rankTopK]] grouped-collect shape (which this was
     * until r18): a probe group's size is nprobe × occupancy — under
@@ -612,9 +607,9 @@ object Similarity {
     * r18 100× growth run OOM'd the collect ranker exactly there (the
     * object-hash aggregate holds up to 128 in-flight group buffers per
     * task; at ~100k-row groups × 24 tasks that is the whole heap).
-    * The window sorts and spills at any group size; [[adcFullTopK]]'s
-    * spec pins the window and collect rankings bit-equal (same key,
-    * same nb_id tie-break). [[rankTopK]] remains correct where groups
+    * The window sorts and spills at any group size with the same key
+    * and nb_id tie-break the collect ranker used. [[rankTopK]] remains
+    * correct where groups
     * are depth-bounded by construction (the re-rank tails). */
   private def rankByScaledIdot(candidates: DataFrame, k: Int): DataFrame =
     candidates
@@ -625,273 +620,10 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("q_id"), col("nb_id"), col("rank"), col("idot"))
 
-  /** Bucket count of the persisted ADC index ([[writeIvfAdcIndex]]) —
+  /** Bucket count of the persisted ADC index ([[writeIvfAdcIndexSharded]]) —
     * shared with the probe's co-partitioning repartition so the stored
     * side never re-shuffles. */
   val ivfIndexBuckets: Int = 16
-
-  /** Persist the IVF-ADC retrieval index (q99) — the [[ivfAdcTopK]]
-    * corpus side written ONCE into the MapFile bucketed layout
-    * ([[graft.sources.MapFiles]]), the write-once-probe-many shape q86
-    * proved for minhash applied to vector retrieval: in production the
-    * coarse quantizer is trained and every code packed once per archive
-    * append, not once per query batch. Three tables: `table` holds
-    * (cell, id, qc, scale, gen) bucketed + sorted by `cell` (the join
-    * key of every probe), `table_c` holds the nlist centroid rows so a
-    * probing session reconstructs the EXACT quantizer (the index is
-    * self-describing — no driver-side state survives between write and
-    * probe), and `table_g` is the committed-generation set of the r13
-    * maintenance protocol (see [[appendIvfAdcIndex]]).
-    *
-    * Scale: the write is one map-side projection of the corpus (cell
-    * assignment via broadcast centroids, pack_quant in the scan) plus
-    * the bucketed sink's own cell-keyed exchange — paid once; after
-    * that, every batch probe reads the stored side with NO shuffle
-    * (plan-asserted) and 64-byte blobs instead of float vectors.
-    * Reference analog: `MapFileOutputFormat`'s build-then-`getEntry`
-    * contract (mapred/MapFileOutputFormat.java:39). Returns the trained
-    * quantizer. */
-  def writeIvfAdcIndex(vecs: DataFrame, idCol: String, vecCol: String,
-      table: String, nlist: Int, dim: Int = 64,
-      cents: Array[Array[Double]] = null,
-      buckets: Int = ivfIndexBuckets,
-      init: String = "first"): Array[Array[Double]] = {
-    val spark = vecs.sparkSession
-    VectorOps.ensureRegistered(spark)
-    // a fresh index has no committed batches and no deletions — stale
-    // replay marks OR tombstones from a previous build at this name
-    // must not outlive it (leftover tombstones would silently delete
-    // the fresh build's rows at matching ids)
-    MergeTables.dropHwms(spark, table + "_g")
-    // and no stale quantizer broadcasts: a same-name rebuild restarts
-    // epochs at 0, so (table, epoch) alone would hit the OLD memo and
-    // probes would silently rank against the previous quantizer
-    Option(quantBcMemo.remove(table)).foreach(_._2.unpersist(false))
-    Option(hierBcMemo.remove(table)).foreach(_._2.unpersist(false))
-    spark.sql(s"DROP TABLE IF EXISTS `${table}_t`")
-    graft.sources.MapFiles.clearStaleLocation(spark, table + "_t")
-    val quantizer =
-      if (cents != null) cents
-      else trainCoarseQuantizer(
-        trainingSample(vecs, idCol, vecCol, trainingCap(nlist)),
-        vecCol, nlist, dim, init = init)
-    // epoch 0: rows, centroids, generations and tombstones all carry
-    // the quantizer EPOCH — retrain bumps it and commits the bump with
-    // ONE table_g swap ([[retrainIvfAdcIndex]]); probes filter every
-    // side to the active epoch, so a half-landed retrain is invisible
-    // fresh quantizer, broadcast ad hoc for the one build plan (the
-    // probe/append memo keys on the POST-write table state) and
-    // unpersisted after it — a pinned dead quantizer is ~0.5 GB of
-    // executor block space at a 10^6-cell shard
-    val bc = spark.sparkContext.broadcast(
-      graft.functions.NearestCellsBc.quantizerOf(quantizer))
-    try graft.sources.MapFiles.write(
-      packedRows(vecs, idCol, vecCol, bc)
-        .withColumn("gen", lit(0L)).withColumn("epoch", lit(0L)),
-      "cell", buckets, table)
-    finally bc.unpersist(false)
-    graft.sources.MapFiles.write(
-      centroidRows(spark, quantizer, 0L), "cell", 1, table + "_c")
-    import spark.implicits._
-    graft.sources.MapFiles.write(
-      Seq((0L, -1L, 0L)).toDF("gen", "batch_key", "epoch"), "gen", 1,
-      table + "_g")
-    quantizer
-  }
-
-  /** The (cell, cent, epoch) rows of one trained quantizer — shared by
-    * build and retrain so the stored form cannot diverge. */
-  private def centroidRows(spark: SparkSession,
-      quantizer: Array[Array[Double]], epoch: Long): DataFrame =
-    spark.createDataFrame(
-        quantizer.zipWithIndex.map { case (c, i) => (i, c.toSeq, epoch) }
-          .toSeq)
-      .toDF("cell", "cent", "epoch")
-
-  /** The ACTIVE quantizer epoch of a persisted ADC index — the single
-    * epoch on `table_g`'s committed-generation rows (appends commit
-    * under it; retrain's one-swap commit replaces it wholesale, so the
-    * table is single-epoch in every reachable state). Epochs exist for
-    * one reason: to give RETRAIN a single commit point — the new
-    * epoch's rows, centroids and generation set all land inert, and
-    * this value flipping IS the retrain (r16 verdict item 2). */
-  private[graft] def activeAdcEpoch(spark: SparkSession, table: String)
-      : Long = {
-    // driver-side sidecar read (r22): `_g` is protocol-sized (bounded
-    // by the compaction contract), and the max-epoch resolution ran a
-    // full Spark job per probe plan — the serving metadata floor. The
-    // reader takes the same crash-healed fresh listing the job form
-    // scanned, so freshness (TTL=0: every plan sees a foreign
-    // retrain's flip) is unchanged.
-    val rows = graft.sources.SidecarRead.rows(spark, table + "_g")
-    if (rows.isEmpty) 0L else rows.iterator.map(_.getLong("epoch")).max
-  }
-
-  /** TTL cache over the PROBE paths' epoch resolution — the other half
-    * of the serving metadata floor beside [[quantStateKey]]'s listing
-    * (each probe plan pays one crash-heal + refresh + single-row agg
-    * JOB per table; a sharded fan-out pays it per shard). Same conf,
-    * same contract: with `graft.adc.quantKeyTtlMs` > 0 a cached epoch
-    * serves for that long, so a retrain's flip (or a foreign rebuild)
-    * is seen by a warm serving loop at the next expiry or explicit
-    * [[invalidateQuantKeyCache]] — never silently forever. Default 0
-    * keeps the per-plan fresh read; every MUTATOR keeps calling
-    * [[activeAdcEpoch]] directly (appends/retrains must never act on
-    * a cached epoch). */
-  private val epochCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
-  private def probeEpoch(spark: SparkSession, table: String): Long = {
-    val ttlMs = spark.conf.getOption("graft.adc.quantKeyTtlMs")
-      .map(_.toLong).getOrElse(0L)
-    val ck = spark.sparkContext.applicationId + ":" + table + ":"
-    if (ttlMs > 0L) {
-      val hit = epochCache.get(ck)
-      if (hit != null &&
-          System.nanoTime() - hit._1 < ttlMs * 1000000L) return hit._2
-    }
-    val e = activeAdcEpoch(spark, table)
-    if (ttlMs > 0L) epochCache.put(ck, (System.nanoTime(), e))
-    else epochCache.remove(ck)
-    e
-  }
-
-  /** The packed (cell, id, qc, scale) rows of one vector set against a
-    * frozen quantizer — shared by build, append and retrain so the
-    * write paths cannot code differently. The quantizer rides a
-    * BROADCAST like the probes' ([[adcQuantBc]]): assignment is a
-    * batch-cadence operation too (one plan per append/micro-batch),
-    * and a literal would re-ship the centroid arrays with every
-    * batch's task binary. */
-  private def packedRows(vecs: DataFrame, idCol: String, vecCol: String,
-      bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsBc.Quantizer]): DataFrame = {
-    val sc = VectorOps.maxAbs(col(vecCol))
-    vecs.select(
-      element_at(graft.functions.NearestCellsBc(col(vecCol), bc, 1), 1)
-        .as("cell"),
-      col(idCol).as("id"),
-      VectorOps.packQuant(col(vecCol), sc).as("qc"), sc.as("scale"))
-  }
-
-  /** The persisted quantizer of [[writeIvfAdcIndex]], read back in cell
-    * order — an nlist-row collect, the same bounded driver state
-    * [[trainCoarseQuantizer]] holds. Reads the ACTIVE epoch's rows: a
-    * crashed retrain's centroids sit inert under a never-activated
-    * epoch. */
-  def readIvfCentroids(spark: SparkSession, table: String)
-      : Array[Array[Double]] =
-    readIvfCentroidsAt(spark, table, activeAdcEpoch(spark, table))
-
-  private def readIvfCentroidsAt(spark: SparkSession, table: String,
-      epoch: Long): Array[Array[Double]] = {
-    // heal a compactor killed inside the centroid-GC swap window
-    MergeTables.recoverCompactCrash(spark, table + "_c")
-    spark.catalog.refreshTable(table + "_c")
-    spark.table(table + "_c").filter(col("epoch") === epoch)
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
-  }
-
-  /** Append a vector batch to a persisted IVF-ADC index (qc3): the
-    * archive-maintenance story for [[writeIvfAdcIndex]]'s write-once
-    * build, mirroring [[graft.pipeline.TextAnalysis.appendBm25Index]]
-    * on the dense tier. The coarse quantizer stays FROZEN — the batch
-    * is assigned to the STORED centroids (the production contract:
-    * retraining would re-assign the whole archive) — and the packed
-    * (cell, id, qc, scale) rows land as new files in the existing cell
-    * buckets, so probes keep bucket pruning and the stored side is
-    * never read, rewritten, or shuffled. Cost per batch: one map-side
-    * pass over the batch plus its bucketed-sink exchange.
-    *
-    * Frozen centroids DRIFT as the corpus grows — cells seeded from the
-    * build-time distribution slowly mismatch the appended mass, which
-    * degrades recall before it degrades anything visible. That is a
-    * monitored quantity, not a hope: [[recallAuditIndexed]] gates the
-    * stored index's recall against an exact scan (qc3), and a fallen
-    * floor is the retrain signal.
-    *
-    * CRASH SAFETY (r13): the same generation protocol as the lexical
-    * tier — the batch's rows land tagged with a fresh generation,
-    * INVISIBLE until a 1-row commit appends that generation to the
-    * `table_g` set (single task, single file, one rename). A crash
-    * anywhere (including a partially-committed row-append job) leaves
-    * probes on the exact pre-append state; a retry commits under a
-    * fresh generation, so orphans can never double-count; compaction
-    * reclaims them physically (spec-gated by killing the writer
-    * between steps). */
-  def appendIvfAdcIndex(newVecs: DataFrame, idCol: String, vecCol: String,
-      table: String, dim: Int = 64): Unit =
-      MergeTables.withTableLock(table) {
-    val spark = newVecs.sparkSession
-    MergeTables.recoverCmpSwapCrash(spark, table)
-    // a retrain killed inside its commit swap leaves table_g under the
-    // shadow name — finish that rename before existence checks
-    MergeTables.recoverCompactCrash(spark, table + "_g")
-    require(spark.catalog.tableExists(table + "_g"),
-      s"$table has no generation table — not an ADC index")
-    val gen = graft.sources.MapFiles.freshGen()
-    val epoch = appendAdcRowsOnly(newVecs, idCol, vecCol, table, gen)
-    commitAdcGen(spark, table, gen, epoch)
-  }
-
-  /** Step 1 of [[appendIvfAdcIndex]] — the row append WITHOUT the
-    * commit. Returns the active epoch the rows packed against, which
-    * the caller's [[commitAdcGen]] commits under (ONE epoch resolution
-    * per append, and the two steps cannot straddle a flip — both run
-    * under the caller's table lock). Package-visible for the
-    * atomicity spec. */
-  private[graft] def appendAdcRowsOnly(newVecs: DataFrame, idCol: String,
-      vecCol: String, table: String, gen: Long): Long = {
-    val spark = newVecs.sparkSession
-    VectorOps.ensureRegistered(spark)
-    // bucket count from the table's own metadata (the appendBm25Index
-    // convention) — a caller cannot desync the layout by re-threading a
-    // different count than the build used
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(s"$table is not a bucketed index"))
-    val epoch = activeAdcEpoch(spark, table)
-    val bc = adcQuantBc(spark, table, epoch)
-    require(bc.value.norms2.nonEmpty, s"$table has no stored centroids")
-    writePackedRows(newVecs, idCol, vecCol, table, bc, gen, epoch,
-      buckets)
-    epoch
-  }
-
-  /** The ONE bucketed packed-row append — shared by [[appendAdcRowsOnly]]
-    * and [[retrainIvfAdcIndex]]'s re-pack so the two write paths cannot
-    * silently diverge (options, layout, columns). */
-  private def writePackedRows(vecs: DataFrame, idCol: String,
-      vecCol: String, table: String,
-      bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsBc.Quantizer],
-      gen: Long, epoch: Long, buckets: Int): Unit =
-    packedRows(vecs, idCol, vecCol, bc)
-      .withColumn("gen", lit(gen)).withColumn("epoch", lit(epoch))
-      .write.mode("append")
-      .option("parquet.bloom.filter.enabled#cell", "true")
-      .bucketBy(buckets, "cell").sortBy("cell")
-      .saveAsTable(table)
-
-  /** Step 2 of [[appendIvfAdcIndex]] — the commit: one generation row
-    * appended to `table_g`. `batchKey` is the LOGICAL identity of the
-    * operation (−1 for plain batch appends): streaming appends commit
-    * under a deterministic per-micro-batch key so a REPLAYED micro-batch
-    * — foreachBatch's at-least-once window between a commit and the
-    * checkpoint offset write — is detected and skipped instead of
-    * double-appended ([[startStreamAppendIvfAdcIndex]]). The physical
-    * generation stays a fresh random id per ATTEMPT, so a partially
-    * written crashed attempt remains invisible forever even when its
-    * batch is retried under the same key. */
-  private[graft] def commitAdcGen(spark: SparkSession, table: String,
-      gen: Long, epoch: Long, batchKey: Long = -1L): Unit = {
-    import spark.implicits._
-    Seq((gen, batchKey, epoch))
-      .toDF("gen", "batch_key", "epoch").coalesce(1)
-      .write.mode("append").bucketBy(1, "gen").sortBy("gen")
-      .saveAsTable(table + "_g")
-  }
 
   /** Base of the deterministic streaming commit keys:
     * `base + lineage·2^28 + batchId` ([[MergeTables.streamKey]]).
@@ -909,379 +641,11 @@ object Similarity {
     * tier. */
   private[graft] val streamBatchKeyBase: Long = 1L << 40
 
-  /** The foreachBatch body of [[startStreamAppendIvfAdcIndex]], exposed
-    * for the replay spec: append `batch` under the deterministic key of
-    * (`lineage`, `batchId`) unless that key is already committed (the
-    * replayed-after-commit case → exact no-op). */
-  private[graft] def streamAppendAdcBatch(batch: DataFrame,
-      batchId: Long, idCol: String, vecCol: String, table: String,
-      lineage: Long = 0L): Unit = {
-    val spark = batch.sparkSession
-    val key = MergeTables.streamKey(lineage, batchId)
-    // live keys OR the compacted-away high-water marks — how replay
-    // exactness survives a mid-lineage compaction or retrain (r16;
-    // marks carried by compactIvfAdcIndex/retrainIvfAdcIndex). The
-    // table lock keeps a concurrent same-process query's compaction
-    // from swapping this landing generation away — and it covers the
-    // REPLAY PROBE too (ADVICE r16): probing outside it could observe
-    // (or worse, heal) a concurrent compactor's intentional
-    // DROP->RENAME window mid-swap.
-    MergeTables.withTableLock(table) {
-      if (!MergeTables.replayed(spark, table + "_g", key)) {
-        MergeTables.recoverCmpSwapCrash(spark, table)
-        val gen = graft.sources.MapFiles.freshGen()
-        val epoch = appendAdcRowsOnly(batch, idCol, vecCol, table, gen)
-        commitAdcGen(spark, table, gen, epoch, key)
-      }
-    }
-  }
-
-  /** [[appendIvfAdcIndex]] with the NEW VECTORS ARRIVING AS A STREAM —
-    * the dense tier's twin of
-    * [[graft.pipeline.TextAnalysis.streamAppendBm25Index]] (qd6),
-    * completing the streaming-maintenance matrix across the persisted
-    * indexes: qa6 streams queries AGAINST this index; this streams the
-    * corpus INTO it. Each micro-batch runs the gated batch append
-    * verbatim inside foreachBatch — assignment against the stored
-    * frozen centroids, packed rows into the existing cell buckets,
-    * one committed generation per micro-batch. Exactness needs no
-    * scalar arithmetic on this tier (no corpus scalars exist): batches
-    * are new vectors, so their packed rows concatenate, and the
-    * generation commit keeps a crashed micro-batch invisible until a
-    * restart re-appends it under a fresh generation — K streamed
-    * micro-batches == one one-shot append == a rebuild under the same
-    * quantizer, down to stored rows (two-micro-batch MemoryStream
-    * spec; qe1 gates the grown index's probe against the
-    * frozen-quantizer ADC oracle). foreachBatch is at-least-once: a
-    * crash AFTER a commit but BEFORE the checkpoint offset write
-    * replays the micro-batch, so commits carry a deterministic
-    * per-batch key ([[streamBatchKeyBase]] + batchId) and a replayed
-    * committed batch is detected and skipped — exactly-once index
-    * state under both crash windows WITHIN A LINEAGE, i.e. for the
-    * life of one started query ([[streamAppendAdcBatch]], replay
-    * spec-gated; the [[MergeTables.streamAppend]] scope note). A query
-    * killed and re-RUN from scratch is a fresh lineage re-reading its
-    * source — new vectors re-append under new keys; a caller needing
-    * crash-RESUME wires a checkpointLocation plus its persisted
-    * lineage id through the foreachBatch form, as on the MergeTables
-    * tiers. Centroid drift accrues exactly as in batch
-    * appends and stays monitored by the qc3 recall gate. */
-  def streamAppendIvfAdcIndex(vecStream: DataFrame, idCol: String,
-      vecCol: String, table: String, dim: Int = 64): Unit = {
-    val q = startStreamAppendIvfAdcIndex(vecStream, idCol, vecCol, table,
-      dim)
-    try q.processAllAvailable() finally q.stop()
-  }
-
-  /** The started-but-undrained form of [[streamAppendIvfAdcIndex]] —
-    * the caller owns the trigger cadence (StreamingSpec drives TWO
-    * micro-batches through it). */
-  def startStreamAppendIvfAdcIndex(vecStream: DataFrame, idCol: String,
-      vecCol: String, table: String, dim: Int = 64,
-      maxGen: Option[Int] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // deterministic fresh lineage per started query (allocated from
-    // the commit table's own keys — MergeTables.allocLineage doc): a
-    // second streaming writer's batchIds restart at 0 and must not
-    // collide with the first lineage's committed keys. dim rides the
-    // signature for API symmetry with writeIvfAdcIndex; the append
-    // derives the true dimension from the stored centroids.
-    val spark = vecStream.sparkSession
-    val lineage = MergeTables.allocLineage(spark, table + "_g")
-    MergeTables.startLeased(spark, Seq(table + "_g"))(
-      vecStream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          streamAppendAdcBatch(batch, batchId, idCol, vecCol, table,
-            lineage)
-          // the unattended policy (qfn): compaction is safe
-          // MID-LINEAGE since r16 — the rewrite carries the replay
-          // high-water marks
-          maxGen.foreach(mg =>
-            maybeCompactIvfAdcIndex(spark, table, mg))
-        }
-        .start())
-  }
-
-  /** [[compactIvfAdcIndex]] iff more than `maxGen` generations have
-    * committed — the auto-compaction policy on the dense index tier
-    * (committed operations = rows of the generation table). Safe
-    * inside a live streaming lineage since r16
-    * ([[compactIvfAdcIndex]] carries the replay marks). Returns true
-    * iff it compacted. */
-  def maybeCompactIvfAdcIndex(spark: SparkSession, table: String,
-      maxGen: Int = MergeTables.defaultMaxGen): Boolean =
-      MergeTables.withTableLock(table) {
-    require(maxGen >= 1, s"maxGen=$maxGen")
-    MergeTables.recoverCmpSwapCrash(spark, table)
-    MergeTables.recoverCompactCrash(spark, table + "_g")
-    spark.catalog.refreshTable(table + "_g")
-    if (spark.table(table + "_g").count() <= maxGen) false
-    else { compactIvfAdcIndex(spark, table); true }
-  }
-
-  /** RETRAIN a persisted IVF-ADC index — the consumer of the qc3 drift
-    * gate's signal, closing the maintenance loop the frozen-centroid
-    * appends leave open: when [[recallAuditIndexed]]'s floor falls, the
-    * answer is a retrain, and this is that operation. The coarse
-    * quantizer is retrained from scratch over the LIVE corpus (the
-    * caller's vector frame minus any tombstoned ids — deletion state
-    * lives in the index, so the retrain consults it), every surviving
-    * vector re-packs against the new centroids, and the fresh index
-    * swaps in via the shadow-table protocol, dropping tombstones and
-    * collapsing generations to one.
-    *
-    * The retrained PROBE state is BY CONSTRUCTION the one-shot
-    * [[writeIvfAdcIndex]] state over the live corpus — same training
-    * sample, same Lloyd loop, same packing functions — so qe3 gates it
-    * against the full-corpus ADC oracle VERBATIM (the q99 chain): a
-    * drifted 2×-grown index probes back bit-equal to a fresh build
-    * after the retrain. Cost: one training pass + one corpus re-pack +
-    * the bucketed write — the full-rebuild price, paid when the drift
-    * gate says so, never per probe or per append.
-    *
-    * ATOMICITY (r16 verdict item 2 — the pre-r17 retrain was a
-    * three-table swap a crash could leave unhealable): everything new
-    * lands INERT first — the new quantizer's centroids under a fresh
-    * EPOCH (allocated as max stored epoch + 1, so a crashed attempt's
-    * orphans can never be adopted by a retry), then every re-packed
-    * live row as (gen 0, new epoch) appends into the existing cell
-    * buckets, then the replay high-water marks carry — and the ONE
-    * commit point is `table_g`'s shadow-then-rename swap to the new
-    * epoch's generation set. Probes resolve centroids, rows and
-    * tombstones through the active epoch, so every pre-commit crash
-    * leaves the old index bit-exact and every post-commit crash the
-    * new one; the swap window itself heals on next writer touch like
-    * every compaction's ([[MergeTables.recoverCompactCrash]]). Old
-    * epochs' rows stay physically present but epoch-pruned at the scan
-    * (parquet row-group stats skip their files) until the next
-    * [[compactIvfAdcIndex]] reclaims them. The whole operation holds
-    * the table's mutation lock — INCLUDING the live-corpus read and
-    * re-pack (ADVICE r16: a same-process streamed batch committing
-    * between an unlocked re-pack and the swap would be dropped by the
-    * swap while its carried mark said committed — permanent silent
-    * loss); concurrent same-process appends block for the retrain's
-    * duration rather than lose data, and other PROCESSES stay excluded
-    * by the writer lease as everywhere on this tier. Returns the new
-    * quantizer. */
-  def retrainIvfAdcIndex(vecs: DataFrame, idCol: String, vecCol: String,
-      table: String, nlist: Int, dim: Int = 64): Array[Array[Double]] =
-      MergeTables.withTableLock(table) {
-    val spark = vecs.sparkSession
-    VectorOps.ensureRegistered(spark)
-    MergeTables.recoverCmpSwapCrash(spark, table)
-    MergeTables.recoverCompactCrash(spark, table + "_g")
-    require(spark.catalog.tableExists(table + "_g"),
-      s"$table has no generation table — not an ADC index")
-    val epoch = activeAdcEpoch(spark, table)
-    // the attempt's epoch comes from the CENTROID table's max (not the
-    // active epoch): a crashed attempt leaves its centroids behind, so
-    // the retry allocates PAST them and can never adopt the orphan's
-    // half-landed rows
-    spark.catalog.refreshTable(table + "_c")
-    val attempt = 1L + math.max(epoch,
-      spark.table(table + "_c").agg(max("epoch")).head().getLong(0))
-    val live =
-      if (!spark.catalog.tableExists(table + "_t")) vecs
-      else vecs.join(
-        broadcast(spark.table(table + "_t")
-          .filter(col("epoch") === epoch).select("id").distinct()
-          .withColumnRenamed("id", idCol)),
-        Seq(idCol), "left_anti")
-    val quantizer = trainCoarseQuantizer(
-      trainingSample(live, idCol, vecCol, trainingCap(nlist)),
-      vecCol, nlist, dim)
-    // inert land 1: the attempt's centroids FIRST — they are also the
-    // epoch allocation marker a retry must see
-    centroidRows(spark, quantizer, attempt)
-      .write.mode("append").bucketBy(1, "cell").sortBy("cell")
-      .saveAsTable(table + "_c")
-    // inert land 2: every live vector re-packed, as (gen 0, attempt)
-    // into the existing cell buckets — invisible while the active
-    // epoch is not `attempt`. gen 0 keeps the compaction invariant
-    // ("gen 0 of the active epoch is committed in every reachable
-    // state") across the flip.
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(s"$table is not a bucketed index"))
-    val packBc = spark.sparkContext.broadcast(
-      graft.functions.NearestCellsBc.quantizerOf(quantizer))
-    try writePackedRows(live, idCol, vecCol, table, packBc,
-      gen = 0L, epoch = attempt, buckets = buckets)
-    finally packBc.unpersist(false)
-    // the retrained rows INCLUDE every committed streamed batch (the
-    // live corpus is the input), so the old keys' high-water marks
-    // must survive the generation reset — a checkpoint-resumed lineage
-    // re-delivering a committed batch post-retrain would otherwise
-    // re-append rows the retrain already packed
-    MergeTables.carryHwms(spark, table + "_g")
-    // THE commit: one swap of the generation set to the new epoch
-    MergeTables.swapInKeyed(spark,
-      { import spark.implicits._
-        Seq((0L, -1L, attempt)).toDF("gen", "batch_key", "epoch") },
-      "gen", table + "_g")
-    // post-commit, inert either way: stale tombstones reference the
-    // RETIRED epoch (probes filter them out) and ids the new rows
-    // never contained
-    spark.sql(s"DROP TABLE IF EXISTS `${table}_t`")
-    spark.catalog.refreshTable(table)
-    // hygiene for TTL-cached serving loops in THIS process: the flip
-    // re-keys by epoch anyway, but dropping the retired entries now
-    // frees them and covers a same-epoch re-listing race exactly
-    invalidateQuantKeyCache(table)
-    quantizer
-  }
-
-  /** Delete vectors from a persisted IVF-ADC index — the takedown /
-    * dedup-verdict consumer on the dense tier (the r12 verdict's #4),
-    * mirroring [[graft.pipeline.TextAnalysis.deleteBm25Docs]]. This
-    * tier keeps NO corpus scalars (ADC ranking is per-candidate code
-    * arithmetic only), so logical deletion is just tombstone id rows
-    * in `table_t`: the single append IS the commit — present means
-    * deleted, absent means live, no multi-table window exists. Every
-    * probe anti-joins the (distinct) tombstones as a broadcast —
-    * delete-batch-sized — and [[compactIvfAdcIndex]] later removes
-    * the rows physically. Re-deleting or deleting absent ids is
-    * trivially idempotent (membership is a set test). */
-  def deleteIvfVecs(spark: SparkSession, table: String, ids: DataFrame,
-      idCol: String): Unit = MergeTables.withTableLock(table) {
-    require(spark.catalog.tableExists(table),
-      s"$table does not exist — not an ADC index")
-    graft.sources.MapFiles.clearStaleLocation(spark, table + "_t")
-    // epoch-stamped: a retrain consumes tombstones (its input is the
-    // post-delete live corpus), so rows surviving a crash between its
-    // commit and its tombstone drop must read as RETIRED, not re-apply
-    // to ids a later append legitimately re-adds
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .withColumn("epoch", lit(activeAdcEpoch(spark, table)))
-      .write.mode("append").saveAsTable(table + "_t")
-  }
-
-  /** The probe-visible rows of a persisted ADC index: the ACTIVE
-    * epoch's rows of COMMITTED generations (lazy broadcast semi-join
-    * against the tiny `table_g` set — no driver collect, orphans of
-    * crashed appends cost only their own read) minus the active
-    * epoch's tombstones (if any). Shared by every probe and by
-    * compaction so the two cannot disagree on liveness. Lockless
-    * reader note: a probe whose plan resolved the epoch immediately
-    * before a retrain's flip lands serves, for that one run, at worst
-    * the old epoch's gen-0 subset (gen 0 is the one generation id
-    * both epochs commit) — a consistent stale view, never a mix of
-    * quantizers. */
-  private[graft] def liveAdcRows(spark: SparkSession, table: String,
-      bucketedRead: Boolean = false, epoch: Option[Long] = None)
-      : DataFrame = {
-    // heal a compactor crash's DROP/RENAME window first (the
-    // committedIndex discipline — this read is the first touch of
-    // every probe and delete)
-    MergeTables.recoverCmpSwapCrash(spark, table)
-    val e = epoch.getOrElse(activeAdcEpoch(spark, table))
-    val stored = (
-      if (bucketedRead) graft.sources.MapFiles.readBucketed(spark, table)
-      else spark.table(table))
-      // active-epoch rows only: retired/orphan epochs' files are
-      // skipped at the scan from their row-group stats
-      .filter(col("epoch") === e)
-    // committed-generation restriction as a pushed In(gen) predicate
-    // (r22): `_g` is protocol-sized and already read driver-side for
-    // the epoch — the broadcast semi-join re-scanned it in-plan per
-    // probe. Same healed fresh listing; row-group stats prune on gen.
-    val gens = graft.sources.SidecarRead.rows(spark, table + "_g")
-      .map(_.getLong("gen")).distinct
-    val committed =
-      if (gens.isEmpty) stored.filter(lit(false))
-      else stored.filter(col("gen").isInCollection(gens))
-    if (!spark.catalog.tableExists(table + "_t")) committed
-    else committed.join(
-      broadcast(spark.table(table + "_t").filter(col("epoch") === e)
-        .select("id").distinct()),
-      Seq("id"), "left_anti")
-  }
-
-  /** Rewrite a persisted ADC index's file generations into ONE,
-    * physically removing tombstoned vectors — the dense-tier
-    * compaction beside [[graft.pipeline.TextAnalysis.compactBm25Index]]
-    * (reference analog: the MapFile sorted-single-file rewrite,
-    * io/MapFile.java:49). The quantizer stays frozen — re-clustering
-    * is a retrain decision, gated separately by the qc3 drift audit —
-    * but retired/orphan epochs' centroid rows (nlist per retrain
-    * attempt) are GC'd with the rewrite. Crash exposure: only the
-    * two-catalog-op DROP/RENAME swap window, as on the lexical tier,
-    * healed on next touch ([[MergeTables.recoverCmpSwapCrash]], r16).
-    * Gated: probe-after-compact == probe-before == an index built over
-    * the surviving vectors against the same frozen quantizer (spec +
-    * qd4's oracle row). */
-  def compactIvfAdcIndex(spark: SparkSession, table: String): Unit =
-      MergeTables.withTableLock(table) {
-    MergeTables.recoverCmpSwapCrash(spark, table)
-    // list fresh before the rewrite: an in-loop compaction runs in the
-    // MAIN session while the batches landed from micro-batch CLONE
-    // sessions — a stale relation cached here would silently compact
-    // away the just-streamed generations (the session relation-cache
-    // trap, MergeTables.freshView's argument)
-    for (s <- Seq("", "_g", "_t")
-         if spark.catalog.tableExists(table + s))
-      spark.catalog.refreshTable(table + s)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(s"$table is not a bucketed index"))
-    val epoch = activeAdcEpoch(spark, table)
-    // carry every streaming lineage's replay high-water mark into the
-    // table_g_hwm sidecar BEFORE the generation reset clears the keys
-    // — what makes this compaction safe inside a live lineage (r16)
-    MergeTables.carryHwms(spark, table + "_g")
-    // bucket-preserving read (one scan partition per bucket) -> the
-    // bucketed sink plans exchange-free: one compacted file per bucket.
-    // The rewrite also physically reclaims RETIRED/orphan epochs' rows
-    // (liveAdcRows keeps only the active epoch's committed rows).
-    val live = liveAdcRows(spark, table, bucketedRead = true,
-        epoch = Some(epoch))
-      .select("cell", "id", "qc", "scale")
-      .withColumn("gen", lit(0L)).withColumn("epoch", lit(epoch))
-      .repartition(buckets, col("cell"))
-    val shadow = table + "_cmp"
-    graft.sources.MapFiles.write(live, "cell", buckets, shadow)
-    spark.sql(s"DROP TABLE `$table`")
-    // tolerant: a probe's heal may have completed this rename already
-    MergeTables.renameInto(spark, shadow, table)
-    // the compacted rows are all (gen 0, active epoch), which is
-    // committed in every reachable state — stale extra generations are
-    // inert, so each remaining step is individually crash-safe; the
-    // rewrite also clears the streaming batch keys, which is what
-    // permits a FRESH streaming lineage after a compaction
-    // (streamBatchKeyBase doc). Swap-written (r17): a plain
-    // drop+recreate would open an unhealable no-generations window — a
-    // crash inside it stranded the index
-    import spark.implicits._
-    MergeTables.swapInKeyed(spark,
-      Seq((0L, -1L, epoch)).toDF("gen", "batch_key", "epoch"), "gen",
-      table + "_g")
-    spark.sql(s"DROP TABLE IF EXISTS `${table}_t`")
-    // centroid GC, last and optional (inert rows either way): retired
-    // or orphan epochs' centroids — nlist rows per retrain attempt —
-    // leave with the rewrite. Materialized first (the rewrite replaces
-    // the table it reads) and swapped through the healed shadow
-    // protocol: a plain drop+recreate would open an unhealable
-    // no-centroids window, the exact class the r17 retrain closed.
-    spark.catalog.refreshTable(table + "_c")
-    if (spark.table(table + "_c").select("epoch").distinct().count() > 1)
-      MergeTables.swapInKeyed(spark,
-        spark.table(table + "_c").filter(col("epoch") === epoch)
-          .localCheckpoint(),
-        "cell", table + "_c")
-    spark.catalog.refreshTable(table)
-    // the GC rewrote the centroid part files (content unchanged for
-    // the active epoch): drop any TTL-cached listings so the next
-    // probe re-keys instead of re-listing at expiry
-    invalidateQuantKeyCache(table)
-  }
-
   // ============ sharded ADC index (one-plan, one-table layout) ============
   // The 100 TB horizontal dial (r17 verdict item 3), re-laid in r20 as
   // ONE physical table so the probe is ONE Catalyst plan at any shard
   // count (r19 verdict item 1). The r17-r19 layout was one full
-  // writeIvfAdcIndex tier PER SHARD and the probe a per-shard plan
+  // single-table index PER SHARD and the probe a per-shard plan
   // fan-out; that paid a MEASURED ~0.1 s/shard of per-branch EXECUTION
   // floor (N bucketed scans, N broadcasts, N exchanges — task count
   // linear in the shard count; decomposed r20: construction ~0.25 s and
@@ -1312,13 +676,14 @@ object Similarity {
   //   <table>_sh             (nshards, rsgen) — THE routing sidecar
   //   <table>_serve          per-shard serving rows (dials/mode/depth)
   //
-  // Protocol inheritance: generation commits, epoch flips, tombstones,
-  // replay marks and crash heals are the single-table tier's protocol
-  // verbatim, with shard as a KEY COLUMN instead of a table-name
-  // suffix. One change is an improvement: an append/stream batch
-  // commits ALL shards' generation rows in ONE single-file append, so
-  // the old per-shard partial-commit crash window no longer exists
-  // (a batch is committed for every shard or for none).
+  // This is the ONLY persisted IVF-ADC tier: an unsharded index is the
+  // nShards = 1 layout (one reader in the set, as in the reference),
+  // and every probe, append, stream, delete, compaction, retrain, tune
+  // and serve below is the one implementation. Protocol: generation
+  // commits, epoch flips, tombstones, replay marks and crash heals,
+  // with shard as a KEY COLUMN. An append/stream batch commits ALL
+  // shards' generation rows in ONE single-file append (a batch is
+  // committed for every shard or for none).
 
   /** Shard routing: `pmod(id, nShards)` — for integer keys this IS the
     * reference partitioner's law (HashPartitioner of an IntWritable is
@@ -1401,9 +766,11 @@ object Similarity {
   /** (shard count, reshard generation) from the sidecar — every
     * sharded entry point resolves layout through this one read. A
     * sidecar written before the reshard operation existed has no
-    * `rsgen` column and reads as generation 0 (the original naming).
-    * Heals a reshard commit's crashed sidecar swap first, like every
-    * swap-written sidecar. */
+    * `rsgen` column and reads as generation 0 (the original naming);
+    * a sidecar that HAS the column but holds null there is corrupt and
+    * fails naming the table (resolving it to 0 would silently read
+    * another generation's tables). Heals a reshard commit's crashed
+    * sidecar swap first, like every swap-written sidecar. */
   private def readShardMeta(spark: SparkSession, table: String)
       : (Int, Long) = {
     val t = table + "_sh"
@@ -1412,9 +779,10 @@ object Similarity {
       s"$table has no shard sidecar — not a sharded ADC index")
     // driver-side sidecar read (r22): one-row layout table, was a
     // head() job per probe plan; same healed fresh listing.
-    val row = graft.sources.SidecarRead.rows(spark, t).head
+    val row = graft.sources.SidecarRead.rows(spark, t).headOption
+      .getOrElse(throw new IllegalStateException(s"$t has no rows"))
     (row.getInt("nshards"),
-      if (row.values.contains("rsgen")) row.getLong("rsgen") else 0L)
+      if (row.fields.contains("rsgen")) row.getLong("rsgen") else 0L)
   }
 
   private def readShardCount(spark: SparkSession, table: String): Int =
@@ -1452,15 +820,15 @@ object Similarity {
   /** One probe/mutation's resolved view of the sharded index:
     * generation layout plus the per-shard PROTOCOL state — active
     * epoch per shard and the committed (shard, gen, epoch) set — from
-    * ONE read of the `_g` table (the single-table tier paid one epoch
+    * ONE read of the `_g` table (the per-shard layout paid one epoch
     * job PER SHARD here). The `_g` row count is compaction-bounded, so
     * the collect is protocol-sized, never corpus-sized. */
   private[graft] final case class SvState(table: String, nShards: Int,
       rsgen: Long, dataT: String, epochs: Array[Long],
       committed: Array[(Int, Long, Long)])
 
-  /** TTL cache over [[svState]]'s protocol read — the sharded twin of
-    * [[epochCache]]/[[quantKeyCache]], same conf
+  /** TTL cache over [[svState]]'s protocol read — beside
+    * [[quantKeyCache]], same conf
     * (`graft.adc.quantKeyTtlMs`), same contract: a foreign process's
     * mutation inside a TTL window is seen at the next expiry or an
     * explicit [[invalidateQuantKeyCache]]; mutators always read fresh.
@@ -1508,19 +876,18 @@ object Similarity {
     * TTL entries, quantizer-listing TTL entries and the combined
     * broadcasts — after any layout/epoch mutation. */
   private def invalidateSvCaches(table: String, dataT: String): Unit = {
-    val it = svStateCache.keySet().iterator()
-    while (it.hasNext) if (it.next().contains(":" + table + ":"))
-      it.remove()
     Option(svQuantMemo.remove(dataT)).foreach(_._2.unpersist(false))
     Option(svHierMemo.remove(dataT)).foreach(_._2.unpersist(false))
-    invalidateQuantKeyCache(dataT)
+    invalidateQuantKeyCache(table)
   }
 
   /** The combined-broadcast memo key: per-shard active epochs PLUS the
     * centroid table's file snapshot — ONE listing for every shard
-    * (the per-shard layout paid one per shard), TTL-served like
-    * [[quantStateKey]]'s and scoped to this SparkContext for the same
-    * dead-handle reason. */
+    * (the per-shard layout paid one per shard), TTL-served from
+    * [[quantKeyCache]] and scoped to this SparkContext: a broadcast
+    * memoized under a stopped context is a dead handle, and a same-JVM
+    * session restart with unchanged table state would otherwise serve
+    * it. */
   private def svQuantKey(spark: SparkSession, st: SvState,
       fresh: Boolean = false): String = {
     val ttlMs =
@@ -1556,6 +923,26 @@ object Similarity {
       MergeTables.freshInputFiles(spark, st.dataT + "_c").mkString(",") +
       s"|n=${st.nShards}|g=${st.rsgen}"
 
+  /** [[svStateKey]] of the index's current, freshly read state. */
+  private[graft] def svStateNow(spark: SparkSession, table: String)
+      : String =
+    svStateKey(spark, svState(spark, table, fresh = true))
+
+  /** Fail LOUDLY if the index's quantizer state changed since `key0`
+    * — the multi-audit tuners' guard. Each audit resolves the state
+    * per plan, so a mid-tune retrain, reshard or rebuild would mix
+    * recalls measured against different quantizers and the returned
+    * dials would describe no actual index state; the lock cannot be
+    * held for a minutes-long tune (it would block every append), so
+    * the tuners verify instead. The key holds the centroid FILE
+    * snapshot, not the epoch numbers alone: a same-name rebuild
+    * restarts epochs at 0 (ADVICE r17). */
+  private[graft] def requireSvStable(spark: SparkSession, table: String,
+      key0: String): Unit =
+    require(svStateNow(spark, table) == key0,
+      s"$table was retrained, resharded or rebuilt mid-tune — the " +
+        "measured recalls mix quantizer states; rerun the tune")
+
   /** Every shard's centroids at its active epoch, read in ONE pass of
     * the shared `_c` table (nlist-bounded rows, the same driver state
     * the trainers hold). */
@@ -1579,7 +966,9 @@ object Similarity {
 
   /** Process-level memos of the COMBINED quantizer broadcasts — one
     * shipped ShardedQuant/ShardedHier per (data table, epochs,
-    * centroid snapshot), the sharded twins of [[quantBcMemo]]. */
+    * centroid snapshot). A retrain's epoch flip re-keys the entry and
+    * unpersists the old broadcast (non-blocking — in-flight plans
+    * holding the old handle just re-fetch). */
   private val svQuantMemo = new java.util.concurrent.ConcurrentHashMap[
     String, (String, org.apache.spark.broadcast.Broadcast[
       graft.functions.NearestCellsSharded.ShardedQuant])]()
@@ -1638,10 +1027,11 @@ object Similarity {
   private def svEpochMap(st: SvState): Column =
     typedLit(st.epochs.zipWithIndex.map { case (e, s) => s -> e }.toMap)
 
-  /** Train one shard's coarse quantizer over its routed subset — the
-    * single-table build's derivation verbatim (same sample, same Lloyd
-    * loop, same init), which is what keeps the qg oracles' per-shard
-    * CTE chains valid across the re-layout. */
+  /** Train one shard's coarse quantizer over its routed subset:
+    * occupancy-constant nlist from the shard's count, the bounded
+    * deterministic [[trainingSample]], [[trainCoarseQuantizer]] — the
+    * derivation the q99 and qg oracles unroll as CTE chains (at
+    * nShards = 1 the subset is the whole corpus). */
   private def svTrainShard(vecs: DataFrame, idCol: String,
       vecCol: String, nShards: Int, s: Int, n: Long,
       targetRecall: Double, dim: Int, init: String)
@@ -1668,13 +1058,14 @@ object Similarity {
   /** Land a complete one-table layout at `dataT` over `vecs` — the
     * shared body of [[writeIvfAdcIndexSharded]] (generation 0) and
     * [[reshardIvfAdcIndex]] (the inert next generation): per-shard
-    * training, ONE packed corpus pass through the combined broadcast
-    * (the per-shard layout re-scanned the corpus once per shard), the
-    * bucketed write, centroids and the gen-0 commit rows. */
+    * training (skipped when `cents` carries one pre-trained quantizer
+    * per shard), ONE packed corpus pass through the combined broadcast,
+    * the bucketed write, centroids and the gen-0 commit rows. Returns
+    * the per-shard quantizers. */
   private def svBuildLayout(vecs: DataFrame, idCol: String,
       vecCol: String, dataT: String, nShards: Int, counts: Array[Long],
-      dim: Int, targetRecall: Double, buckets: Int, init: String)
-      : Unit = {
+      dim: Int, targetRecall: Double, buckets: Int, init: String,
+      cents: Seq[Array[Array[Double]]]): Seq[Array[Array[Double]]] = {
     val spark = vecs.sparkSession
     VectorOps.ensureRegistered(spark)
     // a fresh layout has no committed batches, no tombstones, no stale
@@ -1682,9 +1073,12 @@ object Similarity {
     MergeTables.dropHwms(spark, dataT + "_g")
     spark.sql(s"DROP TABLE IF EXISTS `${dataT}_t`")
     graft.sources.MapFiles.clearStaleLocation(spark, dataT + "_t")
+    require(cents.isEmpty || cents.length == nShards,
+      s"${cents.length} pre-trained quantizers for $nShards shards")
     val quants = (0 until nShards).map(s =>
-      s -> svTrainShard(vecs, idCol, vecCol, nShards, s, counts(s),
-        targetRecall, dim, init))
+      s -> (if (cents.nonEmpty) cents(s)
+        else svTrainShard(vecs, idCol, vecCol, nShards, s, counts(s),
+          targetRecall, dim, init)))
     val bc = spark.sparkContext.broadcast(
       graft.functions.NearestCellsSharded.ShardedQuant(
         quants.map(q => graft.functions.NearestCellsBc.quantizerOf(q._2))
@@ -1701,21 +1095,31 @@ object Similarity {
       (0 until nShards).map(s => (s, 0L, -1L, 0L))
         .toDF("shard", "gen", "batch_key", "epoch"),
       "gen", 1, dataT + "_g")
+    quants.map(_._2)
   }
 
-  /** Build the SHARDED persisted ADC index: route by [[shardOf]],
-    * train one coarse quantizer PER SHARD on its own rows
-    * (occupancy-constant nlist from each shard's OWN count — the same
-    * derivation a single-table build uses on its whole corpus), pack
-    * the whole corpus in ONE pass against the combined broadcast into
-    * ONE bucketed table keyed by the global cell id, then commit the
-    * shard count as the `_sh` sidecar so probes and lifecycle ops are
-    * self-describing. Every shard must be non-empty (an empty shard
-    * has nothing to train a quantizer on — choose fewer shards). */
+  /** Build the persisted ADC index (q99; qg1 at nShards > 1) — the
+    * [[ivfAdcTopK]] corpus side written ONCE into the MapFile bucketed
+    * layout ([[graft.sources.MapFiles]]): route by [[shardOf]], train
+    * one coarse quantizer PER SHARD on its own rows (occupancy-constant
+    * nlist from each shard's OWN count), pack the whole corpus in ONE
+    * pass against the combined broadcast into ONE bucketed table keyed
+    * by the global cell id, then commit the shard count as the `_sh`
+    * sidecar so probes and lifecycle ops are self-describing. Every
+    * probe then reads 64-byte codes with NO shuffle on the stored side
+    * (plan-asserted). Every shard must be non-empty (an empty shard has
+    * nothing to train a quantizer on — choose fewer shards).
+    *
+    * `cents` (one quantizer per shard) skips training and codes the
+    * corpus against the given quantizers — how a caller rebuilds an
+    * index bit-comparable to a grown one. Returns the per-shard
+    * quantizers. Reference analog: `MapFileOutputFormat`'s
+    * build-then-`getEntry` contract (mapred/MapFileOutputFormat.java:39). */
   def writeIvfAdcIndexSharded(vecs: DataFrame, idCol: String,
-      vecCol: String, table: String, nShards: Int, dim: Int = 64,
+      vecCol: String, table: String, nShards: Int = 1, dim: Int = 64,
       targetRecall: Double = 0.8, buckets: Int = ivfIndexBuckets,
-      init: String = "first"): Unit = {
+      init: String = "first", cents: Seq[Array[Array[Double]]] = Nil)
+      : Seq[Array[Array[Double]]] = {
     require(nShards >= 1, s"nShards=$nShards")
     requireShardableName(table)
     val spark = vecs.sparkSession
@@ -1728,7 +1132,7 @@ object Similarity {
     // orphans. The sweep is CONDITIONAL on the `_sh` sidecar (ADVICE
     // r20 low): requireShardableName reserves the grammar only among
     // SHARDED names, so without the sidecar a grammar-matching table
-    // (`foo_sv`, …) may be an unrelated committed single-table index —
+    // (`foo_sv`, …) may belong to an unrelated table —
     // refuse loudly instead of silently destroying it. A crashed FIRST
     // build (half-built tables, sidecar never written) trips the same
     // refusal; its message lists the tables to drop to proceed.
@@ -1743,22 +1147,23 @@ object Similarity {
       require(colliding.isEmpty,
         s"building sharded index '$table' would sweep existing " +
           s"tables ${colliding.sorted.mkString(", ")} which no '" +
-          table + "_sh' sidecar claims — they may be an unrelated " +
-          "single-table index (or a crashed first build's residue): " +
+          table + "_sh' sidecar claims — they may belong to another " +
+          "index (or be a crashed first build's residue): " +
           "drop them explicitly or pick another name")
     }
     val dataT = svDataTable(table, 0L)
     invalidateSvCaches(table, dataT)
-    svBuildLayout(vecs, idCol, vecCol, dataT, nShards, counts, dim,
-      targetRecall, buckets, init)
+    val quants = svBuildLayout(vecs, idCol, vecCol, dataT, nShards,
+      counts, dim, targetRecall, buckets, init, cents)
     import spark.implicits._
     // a previous JVM's sidecar directory survives in the shared
     // warehouse while this session's catalog has no row for it —
     // overwrite-mode saveAsTable refuses the orphan location, so clear
     // it first (the MapFiles.write discipline)
     graft.sources.MapFiles.clearStaleLocation(spark, table + "_sh")
-    Seq((nShards, 0L)).toDF("nshards", "rsgen").write.mode("overwrite")
-      .saveAsTable(table + "_sh")
+    Seq((nShards, 0L)).toDF("nshards", "rsgen").write.format("parquet")
+      .mode("overwrite").saveAsTable(table + "_sh")
+    quants
   }
 
   /** The probe-visible rows of the sharded index: active-epoch rows of
@@ -1770,7 +1175,7 @@ object Similarity {
     * resolution costs the plan nothing beyond the broadcast; the epoch
     * In-filter reaches the scan and prunes retired/orphan epochs'
     * files from their row-group stats. */
-  private def svLiveRows(spark: SparkSession, st: SvState,
+  private[graft] def svLiveRows(spark: SparkSession, st: SvState,
       bucketedRead: Boolean = false): DataFrame = {
     import spark.implicits._
     val stored = (
@@ -1795,14 +1200,37 @@ object Similarity {
     }
   }
 
-  /** The ONE-PLAN sharded candidate stage — [[adcProbeCandidatesVia]]'s
-    * discipline (bounded query snapshot, gcell In-pushdown with the
-    * driver-side twin kernel, bucket co-partitioning, vector-free
-    * candidate rows) over the one-table layout. `cellsOf` is the
+  /** The ONE-PLAN candidate stage of every probe: probe rows joined
+    * against the stored bucketed table, pre-rank. `cellsOf` is the
     * plan-side combined-kernel column (flat or two-level, per-shard
     * dials baked into the expression), `localSel` its driver twin.
     * Candidates keep the `shard` column for the served path's
-    * per-shard re-rank branch. */
+    * per-shard re-rank branch.
+    *
+    * The query side repartitions on `gcell` to the index's OWN bucket
+    * count — one query-sized exchange that is both the materialization
+    * barrier keeping pack_quant out of the candidate stage
+    * ([[ivfAdcTopK]]'s 39.6 s collapse signature) and co-partitioning
+    * with the bucketed layout, so the stored side joins with NO
+    * shuffle (plan-asserted). Only int8 codes cross the join.
+    *
+    * CELL PUSHDOWN: the join alone never prunes the stored parquet. A
+    * BOUNDED snapshot of the query side (limit-probed, so a
+    * backfill-sized panel costs one truncated scan, never a driver
+    * OOM) becomes BOTH the probe source and the input to the
+    * driver-side cell derivation — one materialization, so a
+    * nondeterministic query source cannot diverge between the In set
+    * and the joined probes. Cells come from the SAME kernel the plan
+    * runs (float→double widening is exact; null elements read as 0.0
+    * like the unsafe-row getters). The In filter reaches the scan,
+    * where the gcell bloom filter and sorted min/max skip non-probed
+    * row groups. Batch plans only (a streaming probe side cannot be
+    * collected); skipped when the query side outgrows the snapshot cap
+    * or the set stops being selective. Result-identical by
+    * construction: a stored row whose cell no probe emits can never
+    * join. The snapshot collect is a Spark job at construction time; a
+    * plan-construction-only caller opts out with
+    * `graft.adc.pushdown=false` and keeps the join-only shape. */
   private def svProbeCandidates(queries: DataFrame, idCol: String,
       vecCol: String, st: SvState, buckets: Int,
       cellsOf: Column => Column,
@@ -1855,6 +1283,46 @@ object Similarity {
         col("scale"), col("qscale"), col("shard"))
   }
 
+  /** [[svProbeCandidates]] through the FLAT combined kernel at
+    * per-shard `nprobes` (0 skips a shard). */
+  private def svFlatCandidates(queries: DataFrame, idCol: String,
+      vecCol: String, st: SvState,
+      bc: org.apache.spark.broadcast.Broadcast[
+        graft.functions.NearestCellsSharded.ShardedQuant],
+      nprobes: Array[Int], buckets: Int): DataFrame =
+    svProbeCandidates(queries, idCol, vecCol, st, buckets,
+      v => graft.functions.NearestCellsSharded.flat(v, bc, nprobes),
+      v => graft.functions.NearestCellsSharded.nearestFlat(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
+        isFloat = false, bc.value, nprobes))
+
+  /** [[svProbeCandidates]] through the TWO-LEVEL combined kernel at
+    * per-shard (`nprobes`, `gprobes`) (nprobe 0 skips a shard). */
+  private def svHierCandidates(queries: DataFrame, idCol: String,
+      vecCol: String, st: SvState,
+      bc: org.apache.spark.broadcast.Broadcast[
+        graft.functions.NearestCellsSharded.ShardedHier],
+      nprobes: Array[Int], gprobes: Array[Int], buckets: Int): DataFrame =
+    svProbeCandidates(queries, idCol, vecCol, st, buckets,
+      v => graft.functions.NearestCellsSharded.hier(v, bc, gprobes,
+        nprobes),
+      v => graft.functions.NearestCellsSharded.nearestHier(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
+        isFloat = false, bc.value, gprobes, nprobes))
+
+  /** The fraction-law candidate stage of [[ivfAdcTopKIndexedSharded]],
+    * pre-rank — package-visible so the plan specs can assert the
+    * stored side's bucketed, vector-free join shape on it. */
+  private[graft] def svFracCandidates(queries: DataFrame, idCol: String,
+      vecCol: String, table: String, targetRecall: Double = 0.8,
+      buckets: Int = ivfIndexBuckets): DataFrame = {
+    val spark = queries.sparkSession
+    val st = svState(spark, table)
+    val bc = svQuantBc(spark, st)
+    svFlatCandidates(queries, idCol, vecCol, st, bc,
+      svFracNprobes(bc, targetRecall), buckets)
+  }
+
   /** Each shard's fraction-law nprobe from its OWN stored nlist — the
     * oracle-gated probe law, unchanged from the per-shard layout
     * (what keeps qg1–qg4's per-shard CTE chains valid). */
@@ -1870,35 +1338,29 @@ object Similarity {
     }
   }
 
-  /** Probe the sharded index: every query probes EVERY shard's own
-    * quantizer at that shard's fraction-law nprobe (derived from its
-    * STORED nlist — no corpus count at probe time), all shards'
+  /** Probe the persisted ADC index (q99, qg1): every query probes
+    * EVERY shard's own quantizer at that shard's fraction-law nprobe
+    * (derived from its STORED nlist — no corpus count at probe time;
+    * at nShards = 1 exactly [[ivfParams]]' nprobe), all shards'
     * candidates emerge from ONE join on the global cell id, and ONE
     * global rank merges them — exact by construction (shards partition
     * the corpus, so the union is the complete fraction-law candidate
     * set and a stored row appears from exactly one shard). Per-query
     * coarse work is sum(nprobe_s) with nprobe_s ~ frac·nlist_s and
-    * sum(nlist_s) = nlist — the fan-out costs what the single table
-    * cost, while write/maintenance parallelism and per-quantizer
+    * sum(nlist_s) = nlist — the fan-out costs what one shard costs,
+    * while write/maintenance parallelism and per-quantizer
     * training locality scale with the shard count. ONE Catalyst plan
     * at any shard count: scan, broadcasts, exchange and task count are
     * all shard-count-independent (r19 verdict item 1 — the retired
-    * per-shard plan fan-out paid ~0.1 s/shard of execution floor). */
+    * per-shard plan fan-out paid ~0.1 s/shard of execution floor).
+    * Output (q_id, nb_id, rank, idot) — [[ivfAdcTopK]]'s contract, so
+    * q99 shares q89's oracle: the stored index loses nothing. */
   def ivfAdcTopKIndexedSharded(queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, table: String, dim: Int = 64,
+      vecCol: String, k: Int, table: String,
       targetRecall: Double = 0.8, buckets: Int = ivfIndexBuckets)
-      : DataFrame = {
-    val spark = queries.sparkSession
-    val st = svState(spark, table)
-    val bc = svQuantBc(spark, st)
-    val nprobes = svFracNprobes(bc, targetRecall)
-    rankByScaledIdot(svProbeCandidates(queries, idCol, vecCol, st,
-      buckets,
-      v => graft.functions.NearestCellsSharded.flat(v, bc, nprobes),
-      v => graft.functions.NearestCellsSharded.nearestFlat(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
-        isFloat = false, bc.value, nprobes)), k)
-  }
+      : DataFrame =
+    rankByScaledIdot(svFracCandidates(queries, idCol, vecCol, table,
+      targetRecall, buckets), k)
 
   /** Per-shard serving dials of the TUNED sharded probe — what
     * [[tuneShardDials]] derives and [[ivfAdcTopKIndexedShardedTuned]]
@@ -1927,33 +1389,23 @@ object Similarity {
       vecCol: String, st: SvState, shard: Int, nprobe: Int,
       gprobe: Int, buckets: Int = ivfIndexBuckets): DataFrame = {
     val spark = queries.sparkSession
-    if (gprobe <= 0) {
-      val bc = svQuantBc(spark, st)
-      val nps = Array.tabulate(st.nShards)(s =>
-        if (s == shard) nprobe else 0)
-      svProbeCandidates(queries, idCol, vecCol, st, buckets,
-        v => graft.functions.NearestCellsSharded.flat(v, bc, nps),
-        v => graft.functions.NearestCellsSharded.nearestFlat(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
-          isFloat = false, bc.value, nps))
-    } else {
-      val bc = svHierBc(spark, st)
-      val nps = Array.tabulate(st.nShards)(s =>
-        if (s == shard) nprobe else 0)
-      val gps = Array.tabulate(st.nShards)(s =>
-        if (s == shard) gprobe else 0)
-      svProbeCandidates(queries, idCol, vecCol, st, buckets,
-        v => graft.functions.NearestCellsSharded.hier(v, bc, gps, nps),
-        v => graft.functions.NearestCellsSharded.nearestHier(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
-          isFloat = false, bc.value, gps, nps))
-    }
+    def only(dial: Int) =
+      Array.tabulate(st.nShards)(s => if (s == shard) dial else 0)
+    if (gprobe <= 0)
+      svFlatCandidates(queries, idCol, vecCol, st, svQuantBc(spark, st),
+        only(nprobe), buckets)
+    else
+      svHierCandidates(queries, idCol, vecCol, st, svHierBc(spark, st),
+        only(nprobe), only(gprobe), buckets)
   }
 
-  /** One shard's quantizer CEILING — [[adcFullTopK]]'s contract on the
-    * shard: every live stored row of the shard scored for every query
-    * (nprobe = the shard's full nlist), i.e. probing loss excluded,
-    * quantization loss kept. */
+  /** One shard's quantizer CEILING: every live stored row of the shard
+    * scored for every query (nprobe = the shard's full nlist), i.e.
+    * probing loss excluded, quantization loss kept — the reference the
+    * probe dials tune against. On corpora whose neighbor margins sit at
+    * the int8 noise floor, end-to-end recall is quantization-bounded no
+    * matter the probe dial, so tuning against float-exact MIPS would
+    * escalate the probe for loss it cannot fix. */
   private def svShardCeiling(queries: DataFrame, idCol: String,
       vecCol: String, k: Int, st: SvState, shard: Int, nlist: Int)
       : DataFrame =
@@ -1978,11 +1430,18 @@ object Similarity {
     finally pool.shutdown()
   }
 
-  /** Recall-gated ABSOLUTE dials for EVERY shard of a sharded ADC
-    * index — the serving dial composed onto the horizontal dial. Each
-    * shard tunes AGAINST ITS OWN AUDIT, exactly the single-table
-    * discipline ([[tuneNprobe]] / [[tuneGprobe]] at monitoring
-    * cadence), and BOTH dials gate against the shard's quantizer
+  /** Recall-gated ABSOLUTE dials for EVERY shard — the scale dial the
+    * second-decade growth measurement prescribes (BASELINE.md r17).
+    * [[ivfParams]]' fraction law probes `frac × nlist` cells because on
+    * CLUSTERLESS vectors recall tracks the probed fraction; on REAL
+    * clustered embeddings a FIXED nprobe already covers the top-k ball
+    * at every corpus size, so probed work per query = nprobe ×
+    * occupancy = CONSTANT. Each shard derives the smallest nprobe, then
+    * the smallest two-level gprobe at it, whose measured mean recall@k
+    * on the panel meets `targetRecall` ([[tuneDial]]: doubling, binary
+    * search, and a plateau cutoff — a dial that stops improving is not
+    * the bottleneck, and escalating it would only turn the audit
+    * corpus-sized). BOTH dials gate against the shard's quantizer
     * ceiling ([[svShardCeiling]] — probing loss, not quantization
     * loss): gating gprobe against the flat probe at nprobe instead
     * (the single-row diagnostic) lets the two gates COMPOUND — a
@@ -1995,7 +1454,7 @@ object Similarity {
     * quantizer-state guard spans the whole run. `queries` should be
     * the monitoring panel (~hundreds of rows), never the corpus. */
   def tuneShardDials(queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, table: String, targetRecall: Double, dim: Int = 64,
+      k: Int, table: String, targetRecall: Double,
       minGain: Double = 0.005): Seq[ShardDials] = {
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall=$targetRecall")
@@ -2022,16 +1481,13 @@ object Similarity {
         ShardDials(np, rec, gp, gRec)
       } finally dropCheckpoint(ceiling)
     }
-    require(svStateKey(spark, svState(spark, table, fresh = true)) ==
-      key0,
-      s"$table was retrained/resharded/rebuilt mid-tune — the measured " +
-        "recalls mix quantizer states; rerun the tune")
+    requireSvStable(spark, table, key0)
     res
   }
 
   /** One shard's exact-dot RE-RANK leg: the shard-pure flat candidates
     * at `nprobe` ranked to top-`depth`, then ONLY those survivors join
-    * the full float vectors for the exact dot — [[ivfAdcRerankIndexed]]'s
+    * the full float vectors for the exact dot — [[ivfAdcRerank]]'s
     * scale shape (corpus vectors never enter an exchange; the only
     * float payload moving is the query vectors riding a
     * candidate-scale broadcast). */
@@ -2053,8 +1509,8 @@ object Similarity {
     rankTopK(rescored, k).withColumnRenamed("cos", "score")
   }
 
-  /** THE PER-SHARD SERVING POLICY (r19 verdict item 2) —
-    * [[tuneServing]] composed onto the sharded tier: each shard tunes
+  /** THE SERVING POLICY (r17 verdict item 2, per shard since r19):
+    * each shard tunes
     * its probe dial against its OWN float-exact end-to-end reference
     * (deliberately not the quantizer ceiling: the policy exists to see
     * the quantization loss the ceiling excludes, because re-ranking
@@ -2070,7 +1526,7 @@ object Similarity {
     * float vectors). */
   def tuneShardServing(vecs: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, table: String,
-      targetRecall: Double, dim: Int = 64, minGain: Double = 0.005,
+      targetRecall: Double, minGain: Double = 0.005,
       maxDepthFactor: Int = 32): Seq[ShardServing] = {
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall=$targetRecall")
@@ -2106,7 +1562,7 @@ object Similarity {
           // tune gprobe against the shard CEILING at np (the
           // tuneShardDials gate), then re-measure the decided path
           // END-TO-END against the exact leg — the stored recall is
-          // always the decided path's, like tuneServing's
+          // always the decided path's
           val ceiling = svShardCeiling(queries, idCol, vecCol, k, st,
             s, nlists(s)).localCheckpoint()
           try {
@@ -2149,35 +1605,23 @@ object Similarity {
         } else escalate()
       } finally dropCheckpoint(exact)
     }
-    require(svStateKey(spark, svState(spark, table, fresh = true)) ==
-      key0,
-      s"$table was retrained/resharded/rebuilt mid-policy — rerun")
+    requireSvStable(spark, table, key0)
     res
   }
 
-  /** Persist per-shard SERVING rows — one row per shard in the
-    * swap-written `<table>_serve` sidecar, keyed by [[svStateKey]]
-    * (NO application id — stored dials must survive a driver restart)
-    * so ANY shard's retrain, a reshard, or a rebuild refuses the
-    * stored rows stale at read. The sidecar name is SHARED with the
-    * single-table tier's [[writeServingDecision]]; the schemas differ
-    * (per-shard rows carry `shard`), and each writer REFUSES to
-    * overwrite the other tier's rows (r19 verdict item 6 — in correct
-    * use a sharded logical name never names a single-table index, so
-    * the refusal only ever fires on misuse). */
+  /** Persist per-shard SERVING rows (r18 verdict item 3 — every
+    * serving session re-paid the exact leg while the decision lived only
+    * in the caller): one row per shard in the swap-written
+    * `<table>_serve` sidecar, keyed by [[svStateKey]] (NO application
+    * id — stored dials must survive a driver restart) so ANY shard's
+    * retrain, a reshard, or a rebuild refuses the stored rows stale at
+    * read. */
   def writeShardServing(spark: SparkSession, table: String,
       servings: Seq[ShardServing]): Unit = {
     import spark.implicits._
     val t = table + "_serve"
     MergeTables.recoverCompactCrash(spark, t)
-    if (spark.catalog.tableExists(t)) {
-      spark.catalog.refreshTable(t)
-      require(spark.table(t).schema.fieldNames.contains("shard"),
-        s"$t holds a SINGLE-TABLE serving decision — refusing the " +
-          "sharded write over it (is this name really a sharded index?)")
-    }
-    val key = svStateKey(spark,
-      svState(spark, table, fresh = true))
+    val key = svStateNow(spark, table)
     MergeTables.swapInKeyed(spark,
       servings.zipWithIndex.map { case (sv, s) =>
         (s, sv.mode, sv.dials.nprobe, sv.dials.probeRecall,
@@ -2209,14 +1653,12 @@ object Similarity {
     MergeTables.recoverCompactCrash(spark, t)
     if (!spark.catalog.tableExists(t)) return None
     // driver-side sidecar read (r22): per-shard decision rows, was a
-    // collect job per serving-stack plan; same healed fresh listing.
-    // The single-table tier's rows carry no `shard` field — same
-    // refusal as the old schema check, now from the file schema.
+    // collect job per serving-stack plan; same healed fresh listing
     val rows = graft.sources.SidecarRead.rows(spark, t)
-      .sortBy(r => if (r.fields.contains("shard")) r.getInt("shard") else -1)
-    if (rows.isEmpty || !rows.head.fields.contains("shard")) None
-    else if (rows.head.getString("state_key") !=
-        svStateKey(spark, svState(spark, table, fresh = true))) None
+      .sortBy(_.getInt("shard"))
+    if (rows.isEmpty) None
+    else if (rows.head.getString("state_key") != svStateNow(spark, table))
+      None
     else Some(rows.map(r => ShardServing(r.getString("mode"),
       ShardDials(r.getInt("nprobe"), r.getDouble("probe_recall"),
         r.getInt("gprobe"), r.getDouble("hier_recall")),
@@ -2236,9 +1678,9 @@ object Similarity {
     * loop of the probe-only sharded serving deployment. */
   def tuneShardDialsPersist(queries: DataFrame, idCol: String,
       vecCol: String, k: Int, table: String, targetRecall: Double,
-      dim: Int = 64, minGain: Double = 0.005): Seq[ShardDials] = {
+      minGain: Double = 0.005): Seq[ShardDials] = {
     val dials = tuneShardDials(queries, idCol, vecCol, k, table,
-      targetRecall, dim, minGain)
+      targetRecall, minGain)
     writeShardDials(queries.sparkSession, table, dials)
     dials
   }
@@ -2247,10 +1689,10 @@ object Similarity {
     * monitoring-cadence loop (r19 verdict item 2). */
   def tuneShardServingPersist(vecs: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, table: String,
-      targetRecall: Double, dim: Int = 64, minGain: Double = 0.005,
+      targetRecall: Double, minGain: Double = 0.005,
       maxDepthFactor: Int = 32): Seq[ShardServing] = {
     val servings = tuneShardServing(vecs, queries, idCol, vecCol, k,
-      table, targetRecall, dim, minGain, maxDepthFactor)
+      table, targetRecall, minGain, maxDepthFactor)
     writeShardServing(queries.sparkSession, table, servings)
     servings
   }
@@ -2278,28 +1720,28 @@ object Similarity {
     * fan-out adds shards' constants, and since r20 the PLAN adds
     * nothing per shard (the GrowthBench qshard rows gate both).
     *
-    * OPT-IN serving path like [[ivfAdcTopKIndexedHier]]: recall is a
-    * measured, gated quantity (the dials come from [[tuneShardDials]],
-    * and nShards=1 at its dials is bit-equal to the single-table hier
-    * probe — spec-gated); never substituted under an oracle-gated
-    * query. */
+    * The two-level kernel ([[graft.functions.NearestCellsHier]]) scans
+    * ceil(sqrt(nlist)) group centroids and only the `gprobe` nearest
+    * groups' member cells — O(sqrt(nlist)) coarse work per query
+    * instead of the flat scan's O(nlist), the term that turns linear in
+    * the corpus under the occupancy-constant law. With `gprobe` = the
+    * group count the cell set is the flat kernel's at the same nprobe
+    * (spec-gated bit-equal).
+    *
+    * OPT-IN serving path: recall is a measured, gated quantity (the
+    * dials come from [[tuneShardDials]]); never substituted under an
+    * oracle-gated query. */
   def ivfAdcTopKIndexedShardedTuned(queries: DataFrame, idCol: String,
       vecCol: String, k: Int, table: String, dials: Seq[ShardDials],
-      dim: Int = 64, buckets: Int = ivfIndexBuckets): DataFrame = {
+      buckets: Int = ivfIndexBuckets): DataFrame = {
     val spark = queries.sparkSession
     val st = svState(spark, table)
     require(dials.length == st.nShards,
       s"${dials.length} dials for ${st.nShards} shards — tune with " +
         "tuneShardDials against this index")
-    val bc = svHierBc(spark, st)
-    val nps = dials.map(_.nprobe).toArray
-    val gps = dials.map(_.gprobe).toArray
-    rankByScaledIdot(svProbeCandidates(queries, idCol, vecCol, st,
-      buckets,
-      v => graft.functions.NearestCellsSharded.hier(v, bc, gps, nps),
-      v => graft.functions.NearestCellsSharded.nearestHier(
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
-        isFloat = false, bc.value, gps, nps)), k)
+    rankByScaledIdot(svHierCandidates(queries, idCol, vecCol, st,
+      svHierBc(spark, st), dials.map(_.nprobe).toArray,
+      dials.map(_.gprobe).toArray, buckets), k)
   }
 
   /** Serve through the STORED per-shard serving rows with PER-SHARD
@@ -2355,25 +1797,20 @@ object Similarity {
           col("idot").cast("double") * col("scale") * col("qscale") /
             lit(127.0 * 127.0)
         else col("idot").cast("double") * col("scale")
-      parts += svProbeCandidates(queries, idCol, vecCol, st, buckets,
-          v => graft.functions.NearestCellsSharded.hier(v, bc, gps,
-            nps),
-          v => graft.functions.NearestCellsSharded.nearestHier(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
-            isFloat = false, bc.value, gps, nps))
+      parts += svHierCandidates(queries, idCol, vecCol, st, bc, nps, gps,
+          buckets)
         .select(col("q_id"), col("nb_id"), probeScore.as("score"))
     }
     if (servings.exists(_.mode == "rerank")) {
       val bc = svQuantBc(spark, st)
       val nps = servings.map(sv =>
         if (sv.mode == "rerank") sv.dials.nprobe else 0).toArray
-      val cands = svProbeCandidates(queries, idCol, vecCol, st, buckets,
-        v => graft.functions.NearestCellsSharded.flat(v, bc, nps),
-        v => graft.functions.NearestCellsSharded.nearestFlat(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
-          isFloat = false, bc.value, nps))
+      val cands = svFlatCandidates(queries, idCol, vecCol, st, bc, nps,
+        buckets)
+      // a depth tuned at a smaller k still re-ranks at least k
+      // survivors: fewer could never fill the caller's top-k
       val depths = typedLit(servings.zipWithIndex.collect {
-        case (sv, s) if sv.mode == "rerank" => s -> sv.depth
+        case (sv, s) if sv.mode == "rerank" => s -> math.max(sv.depth, k)
       }.toMap)
       val survivors = cands
         .withColumn("r", row_number().over(
@@ -2401,24 +1838,24 @@ object Similarity {
       .select(col("q_id"), col("nb_id"), col("rank"), col("score"))
   }
 
-  /** Streaming queries against the SHARDED index — [[streamAdcTopK]]'s
-    * serving shape (qa6) on the one-table layout: query vectors
-    * arriving as a stream probe every shard inside ONE stream-static
-    * join (the qa6 plan shape — since r20 there is no per-shard branch
-    * to construct or re-execute per micro-batch); the per-batch rank
-    * is EXACT for the same reason qa6's is — the static side emits a
-    * candidate row only for a probe row of the current batch, so a
-    * query's entire merged candidate set lives in the one micro-batch
-    * that carried it. Drains the stream and reads the sink back; the
-    * `start` form owns the trigger cadence. Gate: qg4 shares qg1's
-    * oracle verbatim (stream == batch == oracle at N shards — the
-    * q70s/qa6/qe1 discipline). */
+  /** Streaming ADC retrieval (qa6, qg4) — [[ivfAdcTopKIndexedSharded]]
+    * with the query vectors ARRIVING AS A STREAM, the online serving
+    * shape of the persisted index: query vectors probe every shard
+    * inside ONE stream-static join (the stored side keeps its bucketed
+    * layout, no archive-side shuffle per micro-batch — spec-asserted);
+    * the per-batch rank is EXACT, not an approximation — the static
+    * side emits a candidate row only for a probe row of the current
+    * batch, so a query's entire merged candidate set lives in the one
+    * micro-batch that carried it. Drains the stream and reads the sink
+    * back; the `start` form owns the trigger cadence. Gate: qa6 shares
+    * q99's oracle and qg4 qg1's verbatim (stream == batch == oracle —
+    * the q70s discipline). */
   def streamAdcTopKSharded(stream: DataFrame, idCol: String,
       vecCol: String, k: Int, table: String, sinkDir: String,
-      dim: Int = 64, targetRecall: Double = 0.8,
+      targetRecall: Double = 0.8,
       buckets: Int = ivfIndexBuckets): DataFrame = {
     val q = startStreamAdcTopKSharded(stream, idCol, vecCol, k, table,
-      sinkDir, dim, targetRecall, buckets)
+      sinkDir, targetRecall, buckets)
     try q.processAllAvailable() finally q.stop()
     stream.sparkSession.read.parquet(sinkDir)
   }
@@ -2429,7 +1866,7 @@ object Similarity {
     * micro-batch. */
   def startStreamAdcTopKSharded(stream: DataFrame, idCol: String,
       vecCol: String, k: Int, table: String, sinkDir: String,
-      dim: Int = 64, targetRecall: Double = 0.8,
+      targetRecall: Double = 0.8,
       buckets: Int = ivfIndexBuckets)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = stream.sparkSession
@@ -2437,11 +1874,7 @@ object Similarity {
     val bc = svQuantBc(spark, st)
     val nprobes = svFracNprobes(bc, targetRecall)
     def candsOf(src: DataFrame): DataFrame =
-      svProbeCandidates(src, idCol, vecCol, st, buckets,
-        v => graft.functions.NearestCellsSharded.flat(v, bc, nprobes),
-        v => graft.functions.NearestCellsSharded.nearestFlat(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
-          isFloat = false, bc.value, nprobes))
+      svFlatCandidates(src, idCol, vecCol, st, bc, nprobes, buckets)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       stream.schema)
@@ -2472,7 +1905,7 @@ object Similarity {
     val em = svEpochMap(st)
     svPackedRows(newVecs, idCol, vecCol, bc, st.nShards, gen,
         sh => element_at(em, sh))
-      .write.mode("append")
+      .write.format("parquet").mode("append")
       .option("parquet.bloom.filter.enabled#gcell", "true")
       .bucketBy(buckets, "gcell").sortBy("gcell")
       .saveAsTable(st.dataT)
@@ -2488,16 +1921,23 @@ object Similarity {
     import spark.implicits._
     (0 until st.nShards).map(s => (s, gen, batchKey, st.epochs(s)))
       .toDF("shard", "gen", "batch_key", "epoch").coalesce(1)
-      .write.mode("append").bucketBy(1, "gen").sortBy("gen")
+      .write.format("parquet").mode("append")
+      .bucketBy(1, "gen").sortBy("gen")
       .saveAsTable(st.dataT + "_g")
   }
 
-  /** Append to the sharded index: ONE routed assignment pass (each
-    * row against its own shard's frozen quantizer), one bucketed row
-    * append, one atomic commit — qe1's frozen-quantizer contract per
-    * shard, at one-table cost. */
+  /** Append a vector batch (qc3): ONE routed assignment pass, each
+    * row against its own shard's STORED quantizer (the production
+    * contract — retraining would re-assign the whole archive), one
+    * bucketed row append into the existing gcell buckets, one atomic
+    * commit. The stored side is never read, rewritten or shuffled.
+    * Frozen centroids DRIFT as the corpus grows; that is a monitored
+    * quantity ([[recallAuditIndexed]], qc3's gate), and a fallen floor
+    * is the retrain signal ([[retrainIvfAdcIndexSharded]]). A crash
+    * before the commit leaves probes on the exact pre-append state; a
+    * retry commits under a fresh generation (spec-gated). */
   def appendIvfAdcIndexSharded(newVecs: DataFrame, idCol: String,
-      vecCol: String, table: String, dim: Int = 64): Unit =
+      vecCol: String, table: String): Unit =
       MergeTables.withTableLock(table) {
     val spark = newVecs.sparkSession
     requireNonNegIds(newVecs, idCol, "appendIvfAdcIndexSharded")
@@ -2510,7 +1950,8 @@ object Similarity {
   /** Delete ids from the sharded index: tombstones carry their own
     * shard and that shard's active epoch (an id's rows live in exactly
     * one shard; a retrain retires the shard's tombstones by epoch).
-    * The single append IS the commit, as on the single-table tier. */
+    * The single append IS the commit: present means deleted, absent
+    * means live; re-deleting or deleting absent ids is idempotent. */
   def deleteIvfVecsSharded(spark: SparkSession, table: String,
       ids: DataFrame, idCol: String): Unit =
       MergeTables.withTableLock(table) {
@@ -2523,7 +1964,8 @@ object Similarity {
         .cast("int"))
       .withColumn("epoch", element_at(em, col("shard")))
       .select("shard", "id", "epoch")
-      .write.mode("append").saveAsTable(st.dataT + "_t")
+      .write.format("parquet").mode("append")
+      .saveAsTable(st.dataT + "_t")
   }
 
   /** The foreachBatch body of the SHARDED streaming append: each
@@ -2548,14 +1990,18 @@ object Similarity {
     }
   }
 
-  /** [[streamAppendIvfAdcIndex]] on the SHARDED tier — the corpus
-    * streaming INTO a sharded index. Drains the available stream and
-    * stops; the `start` form below owns the trigger cadence. */
+  /** [[appendIvfAdcIndexSharded]] with the NEW VECTORS ARRIVING AS A
+    * STREAM (qe1, qg2): each micro-batch runs the batch append inside
+    * foreachBatch under a deterministic per-batch commit key
+    * ([[streamBatchKeyBase]]), so a replayed committed micro-batch is
+    * skipped — K streamed micro-batches == one one-shot append == a
+    * rebuild under the same quantizers (spec-gated). Drains the
+    * available stream and stops; the `start` form below owns the
+    * trigger cadence. */
   def streamAppendIvfAdcIndexSharded(vecStream: DataFrame,
-      idCol: String, vecCol: String, table: String, dim: Int = 64)
-      : Unit = {
+      idCol: String, vecCol: String, table: String): Unit = {
     val q = startStreamAppendIvfAdcIndexSharded(vecStream, idCol,
-      vecCol, table, dim)
+      vecCol, table)
     try q.processAllAvailable() finally q.stop()
   }
 
@@ -2571,7 +2017,7 @@ object Similarity {
     * while the lease is live (stop the query, reshard, restart; the
     * carried marks make the restart replay-exact). */
   def startStreamAppendIvfAdcIndexSharded(vecStream: DataFrame,
-      idCol: String, vecCol: String, table: String, dim: Int = 64,
+      idCol: String, vecCol: String, table: String,
       maxGen: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = vecStream.sparkSession
@@ -2662,9 +2108,10 @@ object Similarity {
 
   /** RETRAIN ONE SHARD's quantizer — the per-shard maintenance unit
     * (a drift gate fires per shard; the whole-index loop below is just
-    * this over every shard). The single-table retrain protocol
-    * verbatim, keyed by shard: the attempt epoch allocates past the
-    * shard's centroid max (a crashed attempt's orphans are never
+    * this over every shard). ATOMICITY (r16 verdict item 2 — a
+    * multi-table swap a crash could leave unhealable): everything new
+    * lands INERT first, keyed by shard: the attempt epoch allocates
+    * past the shard's centroid max (a crashed attempt's orphans are never
     * adopted), the shard's live vectors re-pack against the new
     * quantizer as (gen 0, attempt) — INERT until the commit — and the
     * commit is one `_g` swap replacing ONLY this shard's generation
@@ -2704,7 +2151,8 @@ object Similarity {
     // inert land 1: the attempt's centroids FIRST — they are also the
     // epoch allocation marker a retry must see
     svCentroidRows(spark, Seq(shard -> quantizer), attempt)
-      .write.mode("append").bucketBy(1, "cell").sortBy("cell")
+      .write.format("parquet").mode("append")
+      .bucketBy(1, "cell").sortBy("cell")
       .saveAsTable(dataT + "_c")
     // inert land 2: the shard's live vectors re-packed under (gen 0,
     // attempt) into the existing gcell buckets
@@ -2729,7 +2177,7 @@ object Similarity {
           col("shard"), col("cell"), col("id"), col("qc"),
           col("scale"))
         .withColumn("gen", lit(0L)).withColumn("epoch", lit(attempt))
-        .write.mode("append")
+        .write.format("parquet").mode("append")
         .option("parquet.bloom.filter.enabled#gcell", "true")
         .bucketBy(buckets, "gcell").sortBy("gcell")
         .saveAsTable(dataT)
@@ -2755,9 +2203,14 @@ object Similarity {
     quantizer
   }
 
-  /** Retrain every shard's quantizer from its own live rows —
-    * occupancy-constant nlist from the shard's live count, each shard
-    * under its own epoch-flip commit ([[retrainIvfAdcShard]]). */
+  /** RETRAIN (qe3) — the consumer of qc3's drift signal: every
+    * shard's quantizer retrains from its own live rows
+    * (occupancy-constant nlist from the shard's live count, the
+    * caller's corpus minus the shard's tombstones), each shard under
+    * its own epoch-flip commit ([[retrainIvfAdcShard]]). The retrained
+    * probe state is BY CONSTRUCTION a fresh build over the live corpus
+    * — same sample, same Lloyd loop, same packing — so qe3 gates it
+    * against q99's oracle verbatim. */
   def retrainIvfAdcIndexSharded(vecs: DataFrame, idCol: String,
       vecCol: String, table: String, dim: Int = 64,
       targetRecall: Double = 0.8): Unit =
@@ -2828,7 +2281,7 @@ object Similarity {
       "reshardIvfAdcIndex")
     val dataT2 = svDataTable(table, g2)
     svBuildLayout(survivors, idCol, vecCol, dataT2, newShards, counts,
-      dim, targetRecall, buckets, init)
+      dim, targetRecall, buckets, init, cents = Nil)
     // inert land 2: carry the replay marks — the old generation's live
     // stream keys and prior marks, folded to max-per-lineage (floor
     // rows ride along as MaxValue maxes), into the new generation's
@@ -2867,8 +2320,9 @@ object Similarity {
   }
 
   /** Recall audit of a PERSISTED ADC index (qc3's drift gate): the
-    * stored-index probe ([[ivfAdcTopKIndexed]], frozen centroids and
-    * all) against the exact brute-force MIPS top-k over the same
+    * stored-index probe ([[ivfAdcTopKIndexedSharded]] at
+    * `targetRecall`'s fraction law, frozen centroids and all) against
+    * the exact brute-force MIPS top-k over the same
     * corpus — SAME objective on both legs (the ADC tier ranks by dot,
     * so a cosine exact leg would fold objective mismatch into the
     * number; here recall isolates quantization + cell approximation +
@@ -2876,14 +2330,15 @@ object Similarity {
     * (q_id, hits, recall) like [[recallAudit]]; overlay shape
     * identical — the approximate list broadcasts at sample × k rows. */
   def recallAuditIndexed(vecs: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int, table: String,
-      dim: Int = 64): DataFrame =
-    recallVsExact(exactMipsTopK(vecs, queries, idCol, vecCol, k),
-      queries, idCol, vecCol, k, nprobe, table, dim)
+      idCol: String, vecCol: String, k: Int, table: String,
+      targetRecall: Double = 0.8): DataFrame =
+    recallOfApprox(exactMipsTopK(vecs, queries, idCol, vecCol, k),
+      ivfAdcTopKIndexedSharded(queries, idCol, vecCol, k, table,
+        targetRecall), k)
 
   /** The audit's exact leg — brute-force MIPS top-k of `queries`
     * against the corpus, (q_id, nb_id) rows. One sampled-panel-sized
-    * corpus pass; split out so [[tuneNprobe]] pays it ONCE across its
+    * corpus pass; split out so [[tuneShardServing]] pays it ONCE across its
     * whole search instead of once per probed candidate. */
   private def exactMipsTopK(vecs: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
@@ -2900,15 +2355,6 @@ object Similarity {
       .select(col("q_id"), col("id").as("nb_id"))
   }
 
-  /** Per-query recall of the indexed probe at `nprobe` against a
-    * precomputed exact leg — the body [[recallAuditIndexed]] and
-    * [[tuneNprobe]] share. */
-  private def recallVsExact(exact: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int, table: String,
-      dim: Int): DataFrame =
-    recallOfApprox(exact,
-      ivfAdcTopKIndexed(queries, idCol, vecCol, k, nprobe, table, dim), k)
-
   /** Per-query recall of ANY approximate (q_id, nb_id) result against
     * a precomputed exact leg — shared by the flat and two-level
     * audits/tuners. */
@@ -2921,200 +2367,6 @@ object Similarity {
       .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"))
       .select(col("q_id"), col("hits"),
         (col("hits") / lit(k.toDouble)).as("recall"))
-  }
-
-  /** The ADC-EXHAUSTIVE top-k — every live stored row scored for every
-    * query, no cell restriction: what probing all `nlist` cells would
-    * return, i.e. the QUANTIZER'S CEILING. [[tuneNprobe]] takes it as
-    * the `reference` to dial PROBING loss in isolation: the two loss
-    * sources of an IVF-ADC index are separately dialed — cell
-    * selection by nprobe/gprobe, quantization by re-rank depth or a
-    * retrain ([[ivfAdcRerank]], [[maybeRetrainIvfAdcIndex]]) — and on
-    * corpora whose neighbor margins sit at the int8 noise floor,
-    * end-to-end recall is quantization-bounded no matter the probe
-    * dial, so tuning against float-exact MIPS would escalate the probe
-    * for loss it cannot fix. Same ordering as [[ivfAdcTopKIndexed]]
-    * (scaled idot descending, ties to the lower id; spec-gated equal
-    * at `nprobe = nlist`), but ranked through a WINDOW — sort-based,
-    * spilling — because the candidate volume is |panel| × corpus, the
-    * one shape the grouped-collect ranker must never see ([[rankTopK]]
-    * holds per-group arrays in memory: a 200-query panel over a 200k
-    * archive is 40M rows — fine through a sort, an OOM through a
-    * collect). Monitoring-cadence cost, like the audits. */
-  def adcFullTopK(queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, table: String): DataFrame = {
-    val spark = queries.sparkSession
-    VectorOps.ensureRegistered(spark)
-    val epoch = activeAdcEpoch(spark, table)
-    val probes = queries.select(col(idCol).as("q_id"),
-      VectorOps.packQuant(col(vecCol), VectorOps.maxAbs(col(vecCol)))
-        .as("q_qc"))
-      // a null vector packs to a null code and would rank FIRST under
-      // the ascending window (nulls-first) — the flat probe drops such
-      // queries entirely (null cells explode to nothing), and this
-      // reference must match it
-      .filter(col("q_qc").isNotNull)
-    probes.crossJoin(
-        liveAdcRows(spark, table, epoch = Some(epoch))
-          .select(col("id"), col("qc"), col("scale")))
-      .filter(col("q_id") =!= col("id"))
-      .select(col("q_id"), col("id").as("nb_id"),
-        (-VectorOps.i8Dot(col("q_qc"), col("qc")).cast("double") *
-          col("scale")).as("nk"))
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("q_id").orderBy(col("nk"), col("nb_id"))))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("nb_id"))
-  }
-
-  /** Recall-gated ABSOLUTE nprobe — the scale dial the second-decade
-    * growth measurement prescribes (BASELINE.md r17): [[ivfParams]]'
-    * fraction law probes `frac × nlist` cells because on CLUSTERLESS
-    * vectors recall tracks the probed fraction of the corpus — per-query
-    * candidates are then linear in corpus size (the measured 0.44
-    * exponent on the hash-random growth corpus, documented as the IVF
-    * recall contract, not a plan defect). On REAL clustered embeddings
-    * — low intrinsic dimension, neighbors inside the query's own
-    * cluster neighborhood — a FIXED nprobe already covers the top-k
-    * ball at every corpus size (occupancy-constant nlist shrinks cells
-    * at the same rate nearest-neighbor distances shrink), so the right
-    * production dial is an absolute nprobe tuned against a measured
-    * recall gate, probed work per query = nprobe × occupancy =
-    * CONSTANT. This derives that dial: the smallest nprobe (up to
-    * quantization-tie non-monotonicity) whose measured mean recall@k
-    * on the caller's query sample meets `targetRecall`, by doubling
-    * then binary search — ~2·log2(nlist) audits, each one
-    * sampled-panel-sized, with the exact brute-force leg paid ONCE for
-    * the whole search. The same monitoring-cadence machinery as the
-    * retrain gate ([[maybeRetrainIvfAdcIndex]]): run it when the drift
-    * audit runs, never per probe.
-    *
-    * Returns (nprobe, measured mean recall at it). If the recall stops
-    * IMPROVING while still under the target — a doubling that buys
-    * less than `minGain` — the search stops and returns the measured
-    * ceiling: the residual shortfall is quantization/assignment
-    * ranking error, which MORE PROBING CANNOT FIX (re-rank or retrain
-    * territory: [[ivfAdcRerank]], [[retrainIvfAdcIndex]]), and
-    * escalating toward an exhaustive probe would turn the audit
-    * corpus-sized for nothing (observed: a 100× tune OOMing the
-    * driver's rank on 400M candidate rows it could never need). The
-    * caller's contract is therefore: recall below target in the
-    * result = probing is not the bottleneck. */
-  def tuneNprobe(vecs: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, table: String, targetRecall: Double,
-      dim: Int = 64, minGain: Double = 0.005,
-      reference: DataFrame = null): (Int, Double) = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall=$targetRecall")
-    val spark = vecs.sparkSession
-    val nlist = readIvfCentroids(spark, table).length
-    require(nlist > 0, s"$table has no stored centroids")
-    // one exact pass for the whole search; sample × k rows, pinned so
-    // every audit reuses it instead of re-scanning the corpus. The
-    // default reference is the float-exact MIPS top-k (end-to-end
-    // recall); pass [[adcFullTopK]]'s result instead to tune PROBING
-    // loss against the quantizer's own ceiling — the right reference
-    // when neighbor margins sit at the int8 noise floor, where
-    // end-to-end recall is quantization-bounded no matter the dial.
-    // quantizer state captured BEFORE the reference materializes: the
-    // localCheckpoint can take minutes at monitoring panel sizes, and
-    // a flip inside it must fail the stability check, not slip past
-    // it (a CALLER-built reference should be constructed immediately
-    // before this call for the same reason)
-    val state0 = quantStateKey(spark, table,
-      activeAdcEpoch(spark, table), fresh = true)
-    val exact = (if (reference != null) reference
-      else exactMipsTopK(vecs, queries, idCol, vecCol, k))
-      .localCheckpoint()
-    try {
-      val res = tuneDial(nlist, targetRecall, minGain)(np =>
-        recallVsExact(exact, queries, idCol, vecCol, k, np, table, dim)
-          .agg(avg("recall")).head().getDouble(0))
-      requireQuantStable(spark, table, state0)
-      res
-    } finally dropCheckpoint(exact)
-  }
-
-  /** [[tuneNprobe]] for the TWO-LEVEL probe's group-coverage dial:
-    * the smallest `gprobe` whose [[ivfAdcTopKIndexedHier]] at the
-    * caller's (already tuned) `nprobe` meets `targetRecall` on the
-    * query sample. The natural `reference` is the FLAT probe's result
-    * at the same nprobe — then the measured quantity is exactly the
-    * loss the sqrt-scan level introduces, zero by construction at
-    * `gprobe` = group count; null falls back to float-exact MIPS like
-    * [[tuneNprobe]]. Same doubling + binary search + plateau cutoff. */
-  def tuneGprobe(vecs: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nprobe: Int, table: String,
-      targetRecall: Double, dim: Int = 64, minGain: Double = 0.005,
-      reference: DataFrame = null): (Int, Double) = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall=$targetRecall")
-    val spark = vecs.sparkSession
-    val nlist = readIvfCentroids(spark, table).length
-    require(nlist > 0, s"$table has no stored centroids")
-    val groups = math.max(1, math.ceil(math.sqrt(nlist.toDouble)).toInt)
-    val state0 = quantStateKey(spark, table, // before the checkpoint
-      activeAdcEpoch(spark, table), fresh = true)
-    val exact = (if (reference != null) reference
-      else exactMipsTopK(vecs, queries, idCol, vecCol, k))
-      .localCheckpoint()
-    try {
-      val res = tuneDial(groups, targetRecall, minGain)(gp =>
-        recallOfApprox(exact,
-            ivfAdcTopKIndexedHier(queries, idCol, vecCol, k, nprobe, gp,
-              table, dim), k)
-          .agg(avg("recall")).head().getDouble(0))
-      requireQuantStable(spark, table, state0)
-      res
-    } finally dropCheckpoint(exact)
-  }
-
-  /** Fail LOUDLY if a retrain flipped the index's epoch during a
-    * multi-audit tune: each audit's probe resolves the epoch per plan
-    * (the probe path's own discipline), so a mid-tune flip would mix
-    * recalls measured against different quantizers and the returned
-    * dial would describe no actual index state. The lock cannot be
-    * held for a minutes-long tune (it would block every append), so
-    * the tuners verify instead: stale result → loud error → rerun.
-    * The comparison is the full [[quantStateKey]] (centroid file
-    * snapshot), not the epoch number alone (ADVICE r17): a concurrent
-    * same-name rebuild by ANOTHER process restarts epochs at 0, so a
-    * mid-tune external rebuild can present a MATCHING epoch number
-    * over a different quantizer — the file snapshot cannot. */
-  /** The current quantizer state key, cache-bypassing — what the
-    * tuners capture at start and verify at end. Carries the
-    * application id (it shares [[quantStateKey]] with the broadcast
-    * memos) — fine within one tune, wrong for PERSISTED keys
-    * ([[persistedQuantState]]). */
-  private[graft] def quantStateNow(spark: SparkSession, table: String)
-      : String =
-    quantStateKey(spark, table, activeAdcEpoch(spark, table),
-      fresh = true)
-
-  /** The quantizer state key WITHOUT the application id — what the
-    * PERSISTED serving decision is keyed by (r20; the sharded tier's
-    * [[svStateKey]] discipline): a stored decision must survive a
-    * driver restart — that is the point of persisting it — while still
-    * refusing stale after any retrain/rebuild/GC (epoch + the centroid
-    * table's file snapshot both change). The pre-r20 key carried the
-    * app id, so every new process silently re-refused a perfectly
-    * fresh stored decision. */
-  private def persistedQuantState(spark: SparkSession, table: String)
-      : String = {
-    val epoch = activeAdcEpoch(spark, table)
-    epoch + ":" +
-      MergeTables.freshInputFiles(spark, table + "_c").mkString(",")
-  }
-
-  private[graft] def requireQuantStable(spark: SparkSession, table: String,
-      state0: String): Unit = {
-    val now = quantStateKey(spark, table, activeAdcEpoch(spark, table),
-      fresh = true)
-    require(now == state0,
-      s"$table was retrained or rebuilt mid-tune (quantizer state " +
-        s"changed: $state0 -> $now): the measured recalls mix " +
-        "quantizers — rerun the tune against the new index state")
   }
 
   /** Free a `localCheckpoint()`'d frame's cached blocks once its
@@ -3133,7 +2385,8 @@ object Similarity {
 
   /** Doubling + binary search for the smallest dial value in [1, max]
     * whose measured recall meets `target`, with the plateau cutoff —
-    * the shared machinery of [[tuneNprobe]] and [[tuneGprobe]]. */
+    * the shared machinery of [[tuneShardDials]] and
+    * [[tuneShardServing]]. */
   private def tuneDial(max: Int, target: Double, minGain: Double)(
       recallAt: Int => Double): (Int, Double) = {
     var lo = 1
@@ -3166,83 +2419,6 @@ object Similarity {
     (hi, rHi)
   }
 
-  /** The RETRAIN POLICY — the qc3 drift gate wired to its consumer
-    * (qe3's retrain), the dense tier's analog of the compaction
-    * policy ([[MergeTables.maybeCompact]]): audit the stored index's
-    * recall@k on the caller's query sample and retrain the quantizer
-    * from the live corpus iff the MEAN recall fell below `minRecall`.
-    * The audit's exact leg prices this as a MONITORING-cadence
-    * operation (one brute-force pass over the corpus for the sample),
-    * never per probe — exactly the deployment the r14 drift-curve
-    * measurement prescribed ("the gate watches real traffic"). Returns
-    * (measured mean recall, whether a retrain ran); on retrain the
-    * index is bit-equal to a fresh build over the live corpus (the
-    * gated qe3 claim). */
-  def maybeRetrainIvfAdcIndex(vecs: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, table: String, k: Int,
-      nprobe: Int, nlist: Int, minRecall: Double, dim: Int = 64)
-      : (Double, Boolean) = {
-    require(minRecall >= 0.0 && minRecall <= 1.0, s"minRecall=$minRecall")
-    val mean = recallAuditIndexed(vecs, queries, idCol, vecCol, k,
-        nprobe, table, dim)
-      .agg(avg("recall")).head().getDouble(0)
-    if (mean >= minRecall) (mean, false)
-    else {
-      retrainIvfAdcIndex(vecs, idCol, vecCol, table, nlist, dim)
-      (mean, true)
-    }
-  }
-
-  /** [[ivfAdcTopK]] probing the PERSISTED index instead of retraining
-    * the quantizer and re-packing every code per run — the production
-    * ADC retrieval shape (the r8 verdict's #1): centroids read back from
-    * `table_c` (nlist rows), the query side packs its codes map-side and
-    * repartitions on `cell` to the index's OWN bucket count — one
-    * query-sized exchange that is simultaneously (a) the documented
-    * materialization barrier keeping pack_quant out of the candidate
-    * stage (Similarity.ivfAdcTopK's 39.6 s collapse signature) and
-    * (b) co-partitioning with the bucketed layout, so the stored side
-    * joins with NO shuffle at any broadcast setting (plan-asserted).
-    * Identical output contract and ranking to [[ivfAdcTopK]] — q99
-    * shares q89's oracle, proving the stored index loses nothing. */
-  def ivfAdcTopKIndexed(queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nprobe: Int, table: String, dim: Int = 64,
-      buckets: Int = ivfIndexBuckets): DataFrame =
-    rankByScaledIdot(
-      adcProbeCandidates(queries, idCol, vecCol, nprobe, table, buckets), k)
-
-  /** Streaming ADC retrieval (qa6) — [[ivfAdcTopKIndexed]] with the
-    * query vectors ARRIVING AS A STREAM: the online serving shape of the
-    * persisted index (an ingest feed, a query service, a backfill
-    * replay). Candidate generation runs INSIDE the streaming query —
-    * the probe projection (pack codes + nearest cells) is a stateless
-    * map-side transform of each micro-batch, and the stream-static join
-    * consumes the stored table's bucketed layout with no archive-side
-    * shuffle per micro-batch (spec-asserted on the micro-batch plan).
-    * The top-k rank runs per micro-batch via foreachBatch — and that is
-    * EXACT, not an approximation: the static side emits a candidate row
-    * only for a probe row of the current batch, so a query's entire
-    * candidate set lives in the one micro-batch that carried the query,
-    * and per-batch ranking IS global ranking (spec-gated: a two-batch
-    * stream equals the one-shot [[ivfAdcTopKIndexed]] on the union).
-    * Batch and stream share [[adcProbeCandidates]] + the ADC ranking
-    * verbatim, and qa6 shares q99's DuckDB oracle — stream == batch ==
-    * oracle, the §2.8 gate shape q70s established.
-    *
-    * Results append to `sinkDir` (schema-initialized overwrite first, so
-    * an empty stream still returns an empty, well-typed frame); the
-    * returned DataFrame reads the sink back. At scale the sink is any
-    * append target — the per-batch work is probe-sized, the archive
-    * never recomputes. */
-  def streamAdcTopK(stream: DataFrame, idCol: String, vecCol: String,
-      k: Int, nprobe: Int, table: String, sinkDir: String, dim: Int = 64,
-      buckets: Int = ivfIndexBuckets): DataFrame = {
-    val q = startStreamAdcTopK(stream, idCol, vecCol, k, nprobe, table,
-      sinkDir, dim, buckets)
-    try q.processAllAvailable() finally q.stop()
-    stream.sparkSession.read.parquet(sinkDir)
-  }
-
   /** Initialize a streaming sink with a ZERO-ROW parquet of `probe`'s
     * schema WITHOUT executing its plan (r21): the previous inits ran
     * the full probe plan over empty input, but the init only exists to
@@ -3260,50 +2436,6 @@ object Similarity {
       .write.mode("overwrite").parquet(sinkDir)
   }
 
-  /** The started-but-undrained form of [[streamAdcTopK]] — the caller
-    * owns the trigger cadence (StreamingSpec drives TWO micro-batches
-    * through it to gate the per-batch-rank-is-exact claim). Overwrites
-    * `sinkDir` with a zero-row schema-typed init first, so reruns
-    * replace rather than accumulate and an empty stream still reads
-    * back as an empty, well-typed frame. */
-  def startStreamAdcTopK(stream: DataFrame, idCol: String, vecCol: String,
-      k: Int, nprobe: Int, table: String, sinkDir: String, dim: Int = 64,
-      buckets: Int = ivfIndexBuckets)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = stream.sparkSession
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stream.schema)
-    initEmptySink(rankByScaledIdot(
-      adcProbeCandidates(empty, idCol, vecCol, nprobe, table, buckets), k),
-      sinkDir)
-    adcProbeCandidates(stream, idCol, vecCol, nprobe, table, buckets)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        rankByScaledIdot(batch, k).write.mode("append").parquet(sinkDir)
-      }
-      .start()
-  }
-
-  /** The candidate stage of [[ivfAdcTopKIndexed]] — probe rows joined
-    * against the stored bucketed table, pre-rank. Package-visible so
-    * PlanQualitySpec can assert the stored side scans `Bucketed: true`
-    * with exactly one (probe-side) exchange. */
-  /** Process-level broadcast memos: ONE shipped quantizer (and, for
-    * the two-level path, one grouping) per (table, epoch). The probe
-    * expressions carry only the broadcast HANDLE, so a serving batch's
-    * plan is nlist-INDEPENDENT — the literal form serialized the
-    * centroid arrays into every stage's task binary of every probe
-    * plan (measured ~0.4 µs/cell/plan; ~0.5 GB per plan at a 10^6-cell
-    * shard). A retrain's epoch flip swaps the entry and unpersists the
-    * old broadcast (non-blocking — in-flight plans holding the old
-    * handle just re-fetch). */
-  private val quantBcMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.broadcast.Broadcast[
-      graft.functions.NearestCellsBc.Quantizer])]()
-  private val hierBcMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.broadcast.Broadcast[
-      graft.functions.NearestCellsHier.Grouping])]()
-
   private def memoBc[T: scala.reflect.ClassTag](
       memo: java.util.concurrent.ConcurrentHashMap[
         String, (String, org.apache.spark.broadcast.Broadcast[T])],
@@ -3316,60 +2448,20 @@ object Similarity {
         (key, spark.sparkContext.broadcast(make))
       })._2
 
-  private[graft] def adcProbeCandidates(queries: DataFrame, idCol: String,
-      vecCol: String, nprobe: Int, table: String,
-      buckets: Int = ivfIndexBuckets,
-      skipPushdown: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    adcProbeCandidatesVia(queries, idCol, vecCol, table, buckets,
-      skipPushdown) {
-      epoch =>
-        val bc = adcQuantBc(spark, table, epoch)
-        (vec => graft.functions.NearestCellsBc(vec, bc, nprobe),
-          v => {
-            val q = bc.value
-            graft.functions.NearestCells.nearest(
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
-              isFloat = false, q.flat, q.norms2, q.dim, nprobe)
-          })
-    }
-  }
-
-  /** The memoized per-(table, state) quantizer broadcast — shared by
-    * the probe paths AND the append's assignment, so every
-    * batch-cadence operation on the index is nlist-independent after
-    * the first touch of an epoch. */
-  private[graft] def adcQuantBc(spark: SparkSession, table: String,
-      epoch: Long): org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsBc.Quantizer] =
-    memoBc(quantBcMemo, spark, table, quantStateKey(spark, table, epoch))(
-      graft.functions.NearestCellsBc.quantizerOf(
-        readIvfCentroidsFresh(spark, table, epoch)))
-
-  /** [[adcQuantBc]] for the two-level grouping (its construction runs
-    * Lloyd over the centroids — paid only on the hier path's memo
-    * miss). */
-  private def adcHierBc(spark: SparkSession, table: String,
-      epoch: Long): org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsHier.Grouping] =
-    memoBc(hierBcMemo, spark, table, quantStateKey(spark, table, epoch))(
-      graft.functions.NearestCellsHier.group(
-        readIvfCentroidsFresh(spark, table, epoch)))
-
-  /** TTL cache over [[quantStateKey]]'s catalog listing, keyed by
-    * (application, table, epoch) → (listed-at nanos, key) — the
+  /** TTL cache over [[svQuantKey]]'s catalog listing, keyed by
+    * (application, data table, epochs) → (listed-at nanos, key) — the
     * serving metadata floor (r17 verdict item 5). The age test runs
     * against the CURRENT conf TTL at read time, so lowering (or
     * clearing) the TTL takes effect on the very next plan instead of
     * whenever old entries happen to expire. Bounded: one live entry
-    * per probed table — caching a key for one epoch EVICTS the same
-    * table's entries at other epochs (a superseded epoch's listing
+    * per probed table — caching a key for one epoch vector EVICTS the
+    * same table's entries at other epochs (a superseded epoch's listing
     * can never be asked for again by an in-process probe, and leaving
     * it would grow the map one entry per retrain forever).
     *
     * Staleness contract under the TTL (ADVICE r18): an IN-PROCESS
-    * retrain flips the epoch its mutators read fresh, so its first
-    * post-flip probe misses this cache and re-keys. A FOREIGN
+    * mutation invalidates both caches, so its first post-mutation
+    * probe re-reads and re-keys. A FOREIGN
     * process's retrain inside a TTL window is different — the cached
     * epoch keeps filtering the (already swapped) stored table, whose
     * rows now all carry the NEW epoch, so the probe returns EMPTY
@@ -3383,10 +2475,9 @@ object Similarity {
 
   /** Evict `cache` entries for `table` other than the live key `keep`
     * — the one-live-entry-per-table bound of [[quantKeyCache]] (its
-    * only call site; [[epochCache]] needs no eviction — its keys carry
-    * an EMPTY epoch suffix, so it is naturally one-entry-per-table —
-    * and wiring it here would be a behavior-free no-op, ADVICE r19).
-    * Key format is `appId:table:epochSuffix`. */
+    * only call site; [[svStateCache]] keys carry no epoch, so it is
+    * naturally one-entry-per-table). Key format is
+    * `appId:table:epochSuffix`. */
   private def evictOtherEpochs[V](
       cache: java.util.concurrent.ConcurrentHashMap[String, V],
       appId: String, table: String, keep: String): Unit = {
@@ -3398,167 +2489,16 @@ object Similarity {
     }
   }
 
-  /** Drop any cached [[quantStateKey]] listings for `table` — the
-    * explicit invalidation hook for a serving loop that learns of a
-    * FOREIGN rebuild out of band (its own mutators key by epoch and a
-    * retrain flips it, so they need no hook). The next probe re-lists
+  /** Drop the TTL-cached protocol state ([[svState]]) and centroid
+    * listings ([[svQuantKey]], every reshard generation) of index
+    * `table` — the explicit invalidation hook for a serving loop that
+    * learns of a FOREIGN rebuild out of band (in-process mutators call
+    * it themselves). The next probe re-reads the sidecars, re-lists
     * the centroid files and re-keys the quantizer broadcast. */
   def invalidateQuantKeyCache(table: String): Unit = {
-    val it = quantKeyCache.keySet().iterator()
-    while (it.hasNext) if (it.next().contains(":" + table + ":")) it.remove()
-    val it2 = epochCache.keySet().iterator()
-    while (it2.hasNext) if (it2.next().contains(":" + table + ":"))
-      it2.remove()
-  }
-
-  /** The broadcast-memo key: epoch PLUS the centroid table's file
-    * snapshot. Epoch alone is not unique across same-name REBUILDS —
-    * in-process ones invalidate the memo explicitly, but ANOTHER
-    * process's rebuild (the per-process-catalog topology) restarts
-    * epochs at 0 and would silently serve the old quantizer; any
-    * rewrite of the centroids changes their part files. Metadata-only
-    * and corpus-independent (the centroid table is nlist-row) — but
-    * still a catalog refresh + file listing PER PLAN, which at high
-    * serving QPS becomes the per-plan floor (r17 verdict). Setting
-    * `graft.adc.quantKeyTtlMs` > 0 serves the listing from a bounded
-    * cache for that long: a warm serving loop pays metadata once per
-    * TTL instead of once per plan, at the documented cost that a
-    * foreign same-epoch rebuild is detected at the NEXT expiry (or an
-    * explicit [[invalidateQuantKeyCache]]) instead of the next plan.
-    * Default 0 = list per plan, the exact pre-cache semantics — the
-    * oracle-gated rows keep it. `fresh = true` bypasses the cache
-    * (tune-time stability checks must see the actual state). */
-  private def quantStateKey(spark: SparkSession, table: String,
-      epoch: Long, fresh: Boolean = false): String = {
-    val ttlMs =
-      if (fresh) 0L
-      else spark.conf.getOption("graft.adc.quantKeyTtlMs")
-        .map(_.toLong).getOrElse(0L)
-    val ck = spark.sparkContext.applicationId + ":" + table + ":" + epoch
-    if (ttlMs > 0L) {
-      val hit = quantKeyCache.get(ck)
-      if (hit != null &&
-          System.nanoTime() - hit._1 < ttlMs * 1000000L) return hit._2
-    }
-    // the application id scopes the key to THIS SparkContext: a
-    // broadcast memoized under a stopped context is a dead handle, and
-    // a same-JVM session restart with unchanged table state would
-    // otherwise serve it to the first append/probe after recovery
-    val key = spark.sparkContext.applicationId + ":" + epoch + ":" +
-      MergeTables.freshInputFiles(spark, table + "_c").mkString(",")
-    if (ttlMs > 0L) {
-      quantKeyCache.put(ck, (System.nanoTime(), key))
-      evictOtherEpochs(quantKeyCache,
-        spark.sparkContext.applicationId, table, ck)
-    } else quantKeyCache.remove(ck)
-    key
-  }
-
-  /** [[readIvfCentroidsAt]] minus the heal + refresh — for the memo
-    * miss path, where [[quantStateKey]] just did both. */
-  private def readIvfCentroidsFresh(spark: SparkSession, table: String,
-      epoch: Long): Array[Array[Double]] =
-    spark.table(table + "_c").filter(col("epoch") === epoch)
-      .orderBy("cell").collect().map(_.getSeq[Double](1).toArray)
-
-  /** [[adcProbeCandidates]] with the cell selection pluggable — the
-    * shared body of the flat and two-level probe paths, so the join
-    * shape (epoch threading, bucket co-partitioning, vector-free
-    * candidate rows) cannot diverge between them. `probeFns` receives
-    * the resolved epoch and returns the pair (plan-side cell column
-    * factory, driver-side twin kernel for the pushdown's cell set) —
-    * both backed by the same memoized quantizer broadcast. */
-  private def adcProbeCandidatesVia(queries: DataFrame, idCol: String,
-      vecCol: String, table: String, buckets: Int,
-      skipPushdown: Boolean = false)(
-      probeFns: Long => (Column => Column, Array[Double] => Array[Int]))
-      : DataFrame = {
-    val spark = queries.sparkSession
-    VectorOps.ensureRegistered(spark)
-    // one epoch resolution per probe plan, threaded to centroids and
-    // rows so the two can never straddle a retrain's flip. probeFns
-    // resolves the memoized quantizer broadcast for it ONCE
-    // ([[adcQuantBc]] — a warm serving batch's plan never reads the
-    // centroid ROWS, only the key's metadata listing) and returns the
-    // plan-side cell column plus the driver-side twin kernel. Under
-    // the serving TTL conf the resolution itself is cached
-    // ([[probeEpoch]]).
-    val epoch = probeEpoch(spark, table)
-    val (cellsOf, localSel) = probeFns(epoch)
-    // CELL PUSHDOWN (the lexical tier's term-In discipline applied to
-    // the dense tier): the join alone never prunes the stored PARQUET —
-    // every probe batch was paying a corpus-sized scan of the codes
-    // (measured: the tuned-dial growth exponent stayed ~0.47 with
-    // CONSTANT candidates, all of it the stored side emerging from the
-    // floor). A BOUNDED snapshot of the query side (limit-probed, so a
-    // backfill-sized panel costs one truncated scan, never a driver
-    // OOM) becomes BOTH the probe source and the input to the
-    // driver-side cell derivation — one materialization, so a
-    // nondeterministic query source (a sample(), a growing table)
-    // cannot diverge between the In set and the joined probes. Cells
-    // are derived with the SAME kernel the plan runs (bit-identical:
-    // float→double widening is exact; null elements read as 0.0 like
-    // the unsafe-row getters) — deliberately NOT a second Spark job,
-    // which would re-pay the quantizer's plan-side costs. The In
-    // filter reaches the scan, where the bucketed layout's cell bloom
-    // filter + sorted min/max skip non-probed row groups — probe I/O
-    // becomes candidate-sized, not corpus-sized. Batch plans only (a
-    // streaming probe side cannot be collected), and skipped when the
-    // query side outgrows the snapshot cap or the set stops being
-    // selective (the fraction-law regime probes most cells — an In
-    // list that size prunes nothing). Result-identical by
-    // construction: a stored row whose cell no probe emits can never
-    // join.
-    // the snapshot collect runs a Spark job at DataFrame-CONSTRUCTION
-    // time (ADVICE r17) — bounded (≤ maxPushdownQueries+1 rows), but a
-    // plan-construction-only caller (a plan spec, a lazily composed
-    // pipeline that may never execute) can opt out via
-    // graft.adc.pushdown=false and keep the join-only shape,
-    // distributed end to end with zero eager work. `skipPushdown` is
-    // the SHARDED fan-out's signal (ADVICE r18): when its shared
-    // snapshot already found the panel oversize (or the conf opted
-    // out), each shard's probe must not re-run its own
-    // limit(cap+1).collect() — that re-pays per shard the Spark-job
-    // floor the shared snapshot exists to remove.
-    val snapped: Option[Array[org.apache.spark.sql.Row]] =
-      if (queries.isStreaming || skipPushdown ||
-          spark.conf.getOption("graft.adc.pushdown").contains("false"))
-        None
-      else {
-        val rows = queries.select(col(idCol), col(vecCol))
-          .limit(maxPushdownQueries + 1).collect()
-        if (rows.length > maxPushdownQueries) None else Some(rows)
-      }
-    val probeSrc = snapped match {
-      case Some(rows) => spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*),
-        queries.select(col(idCol), col(vecCol)).schema)
-      case None => queries
-    }
-    val probes = probeSrc.select(col(idCol).as("q_id"),
-        VectorOps.packQuant(col(vecCol), VectorOps.maxAbs(col(vecCol)))
-          .as("q_qc"),
-        explode(cellsOf(col(vecCol))).as("cell"))
-      .repartition(buckets, col("cell"))
-    val stored = liveAdcRows(spark, table, epoch = Some(epoch))
-    val prunable = snapped match {
-      case None => stored
-      case Some(rows) =>
-        val vecIdx = 1 // (idCol, vecCol) projection above
-        val cellSet = rows.iterator
-          .filterNot(_.isNullAt(vecIdx))
-          .flatMap(r => localSel(r.getSeq[Number](vecIdx)
-            .map(x => if (x == null) 0.0 else x.doubleValue()).toArray))
-          .toSet
-        if (cellSet.size > 4096) stored
-        else stored.filter(
-          col("cell").isin(cellSet.toSeq.sorted.map(Int.box): _*))
-    }
-    probes.join(prunable, Seq("cell"))
-      .filter(col("q_id") =!= col("id"))
-      .select(col("q_id"), col("id").as("nb_id"),
-        VectorOps.i8Dot(col("q_qc"), col("qc")).as("idot"),
-        col("scale"))
+    val dataT = s"${java.util.regex.Pattern.quote(table)}(_r\\d+)?_sv".r
+    svStateCache.keySet().removeIf(_.split(":", 3)(1) == table)
+    quantKeyCache.keySet().removeIf(k => dataT.matches(k.split(":", 3)(1)))
   }
 
   /** Snapshot cap for the probe-side cell pushdown: a query batch up
@@ -3567,50 +2507,6 @@ object Similarity {
     * larger batch keeps the join-only shape, distributed end to
     * end. */
   private val maxPushdownQueries = 65536
-
-  /** [[ivfAdcTopKIndexedHier]]'s candidate stage — package-visible for
-    * the plan spec, like [[adcProbeCandidates]]. */
-  private[graft] def adcProbeCandidatesHier(queries: DataFrame,
-      idCol: String, vecCol: String, nprobe: Int, gprobe: Int,
-      table: String, buckets: Int = ivfIndexBuckets,
-      skipPushdown: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    adcProbeCandidatesVia(queries, idCol, vecCol, table, buckets,
-      skipPushdown) {
-      epoch =>
-        val bc = adcHierBc(spark, table, epoch)
-        (vec => graft.functions.NearestCellsBc.hier(vec, bc, gprobe,
-            nprobe),
-          v => graft.functions.NearestCellsHier.nearest(
-            new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
-            isFloat = false, bc.value, gprobe, nprobe))
-    }
-  }
-
-  /** [[ivfAdcTopKIndexed]] with TWO-LEVEL cell selection
-    * ([[graft.functions.NearestCellsHier]]): the probe scans
-    * ceil(sqrt(nlist)) group centroids and only the `gprobe` nearest
-    * groups' member cells — O(sqrt(nlist)) coarse work per query
-    * instead of the flat scan's O(nlist), the term that turns linear
-    * in the corpus under the occupancy-constant law (nlist ~ n/32: at
-    * a 10^6-cell production shard the flat scan is 64M multiplies per
-    * query; two-level is ~128k). Everything after cell selection is
-    * [[adcProbeCandidates]]' shape verbatim (shared body): one
-    * query-sized exchange co-partitioned with the bucketed stored
-    * side, int8 codes through the join, never a vector.
-    *
-    * OPT-IN serving path: `gprobe` < group count changes WHICH cells
-    * are probed, so results can differ from the flat fraction law —
-    * recall is a measured, gated quantity here exactly like nprobe's
-    * ([[recallAuditIndexed]]; with `gprobe` = group count the output
-    * is bit-identical to [[ivfAdcTopKIndexed]], spec-gated). Never
-    * substituted under an oracle-gated query. */
-  def ivfAdcTopKIndexedHier(queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nprobe: Int, gprobe: Int, table: String,
-      dim: Int = 64, buckets: Int = ivfIndexBuckets): DataFrame =
-    rankByScaledIdot(
-      adcProbeCandidatesHier(queries, idCol, vecCol, nprobe, gprobe,
-        table, buckets), k)
 
   /** Two-stage quantized retrieval (qa1) — the composition
     * [[Quantize]]'s Scaladoc promises, closed: [[ivfAdcTopK]] generates
@@ -3652,202 +2548,6 @@ object Similarity {
       .select(col("q_id"), col("nb_id"),
         (dot(col("qv"), col("v")) / (col("qn") * col("nrm"))).as("cos"))
     rankTopK(rescored, k)
-  }
-
-  /** [[ivfAdcRerank]] against a PERSISTED index: [[ivfAdcTopKIndexed]]
-    * generates the per-query top-`depth` candidates over the stored
-    * int8 codes, then ONLY those survivors join the full float vectors
-    * for a FULL-PRECISION re-rank to top-`k` — the escalation target
-    * of [[tuneServing]]. The re-rank objective is the exact DOT, not
-    * cosine: the ADC tier IS a maximum-inner-product tier (its ranking
-    * key is the quantized dot), so its escalation must be the same
-    * objective at full precision — the loss it removes is exactly the
-    * int8 quantization error (qa1's cosine re-rank serves the
-    * [[bruteForceTopK]] composition instead). Same scale shape as
-    * qa1's: the corpus float vectors never enter an exchange (scored
-    * in their own scan); the only float payload that moves is the
-    * query vectors riding a candidate-scale broadcast (`n_queries ×
-    * depth` rows). Output: (q_id, nb_id, rank, score). */
-  def ivfAdcRerankIndexed(vecs: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, depth: Int, nprobe: Int,
-      table: String, dim: Int = 64): DataFrame = {
-    require(depth >= k, s"depth=$depth < k=$k")
-    val survivors = ivfAdcTopKIndexed(queries, idCol, vecCol, depth,
-      nprobe, table, dim).select(col("q_id"), col("nb_id"))
-    val qs = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
-    val withQ = qs.join(broadcast(survivors), Seq("q_id"))
-      .select(col("q_id"), col("nb_id"), col("qv"))
-    val rescored = vecs
-      .select(col(idCol).as("id"), col(vecCol).as("v"))
-      .join(broadcast(withQ), col("id") === col("nb_id"))
-      .select(col("q_id"), col("nb_id"),
-        dot(col("qv"), col("v")).as("cos"))
-    rankTopK(rescored, k)
-      .withColumnRenamed("cos", "score")
-  }
-
-  /** A tuned ANN serving decision — what [[tuneServing]] returns.
-    * `recall` is always the MEASURED mean recall@k of the decided
-    * path on the caller's query sample, against the float-exact
-    * end-to-end reference. */
-  sealed trait AnnServing { def nprobe: Int; def recall: Double }
-  /** Probe-only serving: the tuned nprobe met the recall gate. */
-  final case class ProbeServing(nprobe: Int, recall: Double)
-    extends AnnServing
-  /** Probe + exact re-rank serving: the probe dial PLATEAUED below the
-    * gate (loss probing cannot fix — quantization/assignment ranking
-    * error, the density regime), so the policy escalated to
-    * [[ivfAdcRerankIndexed]] at the tuned `depth`. A `recall` still
-    * below the gate here means even full-precision re-ranking of the
-    * probed candidates cannot reach it — cell coverage itself is the
-    * residual, which is retrain territory
-    * ([[maybeRetrainIvfAdcIndex]]). */
-  final case class RerankServing(nprobe: Int, depth: Int, recall: Double)
-    extends AnnServing
-
-  /** THE SERVING POLICY (r17 verdict item 2) — [[tuneNprobe]]'s
-    * plateau signal wired to its consumer, the way the qc3 drift gate
-    * is wired to qe3's retrain: tune the probe dial against the
-    * FLOAT-EXACT end-to-end reference (deliberately not the quantizer
-    * ceiling: the policy's whole point is to see the quantization loss
-    * the ceiling reference excludes, because re-ranking can fix it);
-    * if the dial meets `targetRecall`, serve probe-only. If the dial
-    * PLATEAUS below it — the regime the r17 growth measurement
-    * documented as "re-rank territory" in prose (density-growth: dial
-    * inflated to ~a cluster's cell count, recall stuck at 0.815) —
-    * escalate: tune a re-rank depth (doubling multiples of k through
-    * the same [[tuneDial]] machinery, each audit candidate-scale)
-    * for [[ivfAdcRerankIndexed]] at the plateaued nprobe, and return
-    * the priced escalation instead of the deficient dial.
-    *
-    * Monitoring-cadence like the tuners it composes: ONE exact
-    * brute-force leg for the whole search (panel-sized), run when the
-    * drift audit runs, never per probe. The quantizer-state guard
-    * spans the whole policy run (a mid-policy retrain fails loudly).
-    * `maxDepthFactor` bounds the escalation at `maxDepthFactor × k`
-    * candidates per query — re-rank cost is linear in it, so the cap
-    * is the caller's price ceiling. */
-  def tuneServing(vecs: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, table: String, targetRecall: Double,
-      dim: Int = 64, minGain: Double = 0.005, maxDepthFactor: Int = 32)
-      : AnnServing = {
-    require(maxDepthFactor >= 1, s"maxDepthFactor=$maxDepthFactor")
-    val spark = vecs.sparkSession
-    val state0 = quantStateNow(spark, table)
-    val exact = exactMipsTopK(vecs, queries, idCol, vecCol, k)
-      .localCheckpoint()
-    try {
-      val (np, probeRecall) = tuneNprobe(vecs, queries, idCol, vecCol,
-        k, table, targetRecall, dim, minGain, reference = exact)
-      val res =
-        if (probeRecall >= targetRecall) ProbeServing(np, probeRecall)
-        else {
-          // depth = k (re-ranking exactly k candidates) reorders but
-          // cannot change recall, so the dial is the MULTIPLIER over k,
-          // starting where the probe left off
-          val (mult, rerankRecall) =
-            tuneDial(maxDepthFactor, targetRecall, minGain)(m =>
-              recallOfApprox(exact,
-                  ivfAdcRerankIndexed(vecs, queries, idCol, vecCol, k,
-                    depth = m * k, nprobe = np, table, dim), k)
-                .agg(avg("recall")).head().getDouble(0))
-          RerankServing(np, mult * k, rerankRecall)
-        }
-      requireQuantStable(spark, table, state0)
-      res
-    } finally dropCheckpoint(exact)
-  }
-
-  /** Persist [[tuneServing]]'s decision (r18 verdict item 3): the
-    * policy's output previously lived only in the caller, so every
-    * serving session re-paid the exact brute-force leg — while qc2's
-    * derived depths live in a maintained table
-    * ([[graft.RelationalQueries]]'s qc2Depths discipline). The
-    * decision lands in `<table>_serve` (one row: mode, nprobe, gprobe,
-    * depth, recall, state_key) via the crash-safe shadow swap
-    * ([[MergeTables.swapInKeyed]]), KEYED BY THE QUANTIZER STATE
-    * ([[persistedQuantState]] — epoch + centroid file snapshot,
-    * application-independent since r20 so the store survives a
-    * driver restart): any
-    * retrain, rebuild or centroid GC changes the key, so the stored
-    * decision self-invalidates ([[readServingDecision]]'s stale
-    * refusal) instead of silently serving dials tuned against a
-    * quantizer that no longer exists. `gprobe` > 0 additionally
-    * records a separately tuned two-level dial ([[tuneGprobe]]) for
-    * stacks that serve through [[ivfAdcTopKIndexedHier]]; 0 = flat. */
-  def writeServingDecision(spark: SparkSession, table: String,
-      serving: AnnServing, gprobe: Int = 0): Unit = {
-    import spark.implicits._
-    // the `_serve` name is shared with the sharded tier's per-shard
-    // rows (schema carries `shard`) — refuse the cross-write loudly
-    // instead of silently replacing the other tier's store (r19
-    // verdict item 6; in correct use the two tiers never share a name)
-    locally {
-      val t = table + "_serve"
-      MergeTables.recoverCompactCrash(spark, t)
-      if (spark.catalog.tableExists(t)) {
-        spark.catalog.refreshTable(t)
-        require(!spark.table(t).schema.fieldNames.contains("shard"),
-          s"$t holds SHARDED per-shard serving rows — refusing the " +
-            "single-table write over it (is this name really a " +
-            "single-table index?)")
-      }
-    }
-    val (mode, depth) = serving match {
-      case ProbeServing(_, _)     => ("probe", 0)
-      case RerankServing(_, d, _) => ("rerank", d)
-    }
-    MergeTables.swapInKeyed(spark,
-      Seq((mode, serving.nprobe, gprobe, depth, serving.recall,
-        persistedQuantState(spark, table)))
-        .toDF("mode", "nprobe", "gprobe", "depth", "recall",
-          "state_key"),
-      "mode", table + "_serve")
-  }
-
-  /** Read the persisted serving decision, REFUSING a stale one: None
-    * when nothing is stored OR the stored state key no longer matches
-    * the index's live quantizer state (a retrain/rebuild happened
-    * since the tune — re-run [[tuneServingPersist]]). The read is one
-    * sidecar row plus the metadata-only state key: NO exact leg, NO
-    * corpus pass — by construction (no corpus argument exists), a
-    * serving session starts from the stored dials for free. */
-  def readServingDecision(spark: SparkSession, table: String)
-      : Option[(AnnServing, Int)] = {
-    val t = table + "_serve"
-    MergeTables.recoverCompactCrash(spark, t)
-    if (!spark.catalog.tableExists(t)) return None
-    // driver-side sidecar read (r22): the one-row decision store was a
-    // collect job per serving-stack plan; same healed fresh listing.
-    val rows = graft.sources.SidecarRead.rows(spark, t)
-    if (rows.isEmpty) return None
-    val r = rows.head
-    if (r.getString("state_key") !=
-        persistedQuantState(spark, table)) None
-    else {
-      val np = r.getInt("nprobe")
-      val rec = r.getDouble("recall")
-      val serving: AnnServing =
-        if (r.getString("mode") == "rerank")
-          RerankServing(np, r.getInt("depth"), rec)
-        else ProbeServing(np, rec)
-      Some((serving, r.getInt("gprobe")))
-    }
-  }
-
-  /** [[tuneServing]] + [[writeServingDecision]]: run the policy at
-    * monitoring cadence and store its decision for every subsequent
-    * serving session — the deployment loop the r18 verdict asked for.
-    * Pass `gprobe` from a caller-run [[tuneGprobe]] when the serving
-    * path is the two-level probe. */
-  def tuneServingPersist(vecs: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, table: String,
-      targetRecall: Double, dim: Int = 64, minGain: Double = 0.005,
-      maxDepthFactor: Int = 32, gprobe: Int = 0): AnnServing = {
-    val s = tuneServing(vecs, queries, idCol, vecCol, k, table,
-      targetRecall, dim, minGain, maxDepthFactor)
-    writeServingDecision(vecs.sparkSession, table, s, gprobe)
-    s
   }
 
   /** SemDeDup-style semantic deduplication: partition the corpus into
@@ -4107,7 +2807,7 @@ object Similarity {
     * holding BOTH representations (q_id, query text, query vector);
     * inside foreachBatch the batch probes the persisted postings index
     * ([[graft.pipeline.TextAnalysis.bm25TopKIndexed]]) and the
-    * persisted ADC index ([[ivfAdcTopKIndexed]]) — neither corpus is
+    * persisted ADC index ([[ivfAdcTopKIndexedSharded]]) — neither corpus is
     * re-scanned, both stored sides keep their gated bucketed-probe
     * shapes — and [[rrfFuse]] fuses the two rank lists. Per-batch
     * fusion is EXACT, not approximate: every ranking here (each leg's
@@ -4118,12 +2818,11 @@ object Similarity {
     * two-batch MemoryStream spec gates the equality. */
   def streamHybridTopK(queries: DataFrame, qIdCol: String,
       qTextCol: String, qVecCol: String, lexTable: String,
-      adcTable: String, lexDepth: Int, denseDepth: Int, nprobe: Int,
+      adcTable: String, lexDepth: Int, denseDepth: Int,
       k: Int, sinkDir: String, c: Int = 60, k1: Double = 1.2,
-      b: Double = 0.75, dim: Int = 64): DataFrame = {
+      b: Double = 0.75): DataFrame = {
     val q = startStreamHybridTopK(queries, qIdCol, qTextCol, qVecCol,
-      lexTable, adcTable, lexDepth, denseDepth, nprobe, k, sinkDir, c,
-      k1, b, dim)
+      lexTable, adcTable, lexDepth, denseDepth, k, sinkDir, c, k1, b)
     try q.processAllAvailable() finally q.stop()
     queries.sparkSession.read.parquet(sinkDir)
   }
@@ -4134,9 +2833,9 @@ object Similarity {
     * schema-typed init first, the qb4/qa6 sink convention. */
   def startStreamHybridTopK(queries: DataFrame, qIdCol: String,
       qTextCol: String, qVecCol: String, lexTable: String,
-      adcTable: String, lexDepth: Int, denseDepth: Int, nprobe: Int,
+      adcTable: String, lexDepth: Int, denseDepth: Int,
       k: Int, sinkDir: String, c: Int = 60, k1: Double = 1.2,
-      b: Double = 0.75, dim: Int = 64)
+      b: Double = 0.75)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = queries.sparkSession
     def fuse(batch: DataFrame): DataFrame = {
@@ -4149,10 +2848,10 @@ object Similarity {
       // embeddings, and an inner composition silently dropped every
       // lexical-only query — diverging from the batch tier (qb7),
       // whose legs are independent.
-      val dense = ivfAdcTopKIndexed(
+      val dense = ivfAdcTopKIndexedSharded(
           batch.filter(col(qVecCol).isNotNull)
             .select(col(qIdCol), col(qVecCol)), qIdCol, qVecCol,
-          k = denseDepth, nprobe = nprobe, table = adcTable, dim = dim)
+          k = denseDepth, table = adcTable)
         .withColumnRenamed("nb_id", "doc_id")
       rrfFuse(Seq(lex, dense), "q_id", "doc_id", "rank", k = k, c = c)
     }

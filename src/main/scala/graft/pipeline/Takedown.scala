@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * one derivation scan) and driven through each tier's own gated
   * delete: BM25 tombstones + scalar retraction
   * ([[TextAnalysis.deleteBm25Docs]]), ADC tombstones
-  * ([[Similarity.deleteIvfVecs]]), minhash tombstones
+  * ([[Similarity.deleteIvfVecsSharded]]), minhash tombstones
   * ([[Dedup.deleteMinhashDocs]]). Each delete is idempotent for
   * absent/already-deleted ids, so re-running a takedown (or taking
   * down a source with no vectors) is a no-op, and each tier's
@@ -31,7 +31,10 @@ object Takedown {
   /** Tombstone every id of `source` (per `docs`' `srcCol`/`idCol`)
     * in the three persisted indexes. Probes reflect the takedown
     * immediately (tombstone anti-joins); compaction makes it
-    * physical. */
+    * physical. The dense delete runs FIRST: it is the one tier that
+    * refuses ids (negative ids break its shard routing law), and a
+    * refusal there must leave all three indexes untouched rather than
+    * half taken down. */
   def takedownSource(spark: SparkSession, docs: DataFrame,
       srcCol: String, idCol: String, source: String,
       bm25Table: String, adcTable: String, minhashTable: String)
@@ -42,8 +45,8 @@ object Takedown {
     val ids = docs.filter(col(srcCol) === source)
       .select(col(idCol).cast("long").as("id")).distinct()
       .localCheckpoint()
+    Similarity.deleteIvfVecsSharded(spark, adcTable, ids, "id")
     TextAnalysis.deleteBm25Docs(spark, bm25Table, ids, "id")
-    Similarity.deleteIvfVecs(spark, adcTable, ids, "id")
     Dedup.deleteMinhashDocs(spark, minhashTable, ids, "id")
   }
 }

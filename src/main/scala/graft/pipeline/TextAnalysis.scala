@@ -457,8 +457,7 @@ object TextAnalysis {
     * pushdown, optional candidate semi-restrict, positions still
     * PACKED. Package-visible so PlanQualitySpec can assert the
     * scan-level claims (index-only file scans, pushed `In(term)`,
-    * broadcast candidate restriction) on the live plan (the
-    * adcProbeCandidates convention). */
+    * broadcast candidate restriction) on the live plan. */
   private[graft] def phrasePostIndexed(qp: DataFrame, table: String,
       candidates: DataFrame, candIdCol: String, n: Int,
       maxPushdownTerms: Int = 256): DataFrame = {
@@ -539,10 +538,13 @@ object TextAnalysis {
   /** The probe-visible state of a persisted BM25 index: postings of
     * COMMITTED generations minus committed tombstones, plus the exact
     * integer corpus scalars `(n_docs, sum_dl)` summed over committed
-    * deltas. Everything stays LAZY — the committed-generation
-    * restriction is a broadcast semi-join against the (tiny) scalar
-    * table rather than a driver collect, so a probe adds no blocking
-    * job; orphan files cost only their own read, never correctness. */
+    * deltas. The `_s` sidecar is read ONCE on the driver
+    * ([[graft.sources.SidecarRead]], no Spark job); the committed
+    * generation set reaches the postings and tombstone scans as a
+    * pushed `In(gen)` filter, and the scalars ride a one-row local
+    * relation. The returned frames stay lazy over the stored tables;
+    * orphan files of crashed appends are filtered out at the scan and
+    * cost only their own read, never correctness. */
   private[graft] def committedIndex(spark: SparkSession, table: String,
       bucketedRead: Boolean = false): (DataFrame, DataFrame) = {
     // heal a compactor crash's DROP/RENAME window first — with in-loop
@@ -688,7 +690,7 @@ object TextAnalysis {
     import spark.implicits._
     Seq((gen, nDocsDelta, sumDlDelta, batchKey))
       .toDF("gen", "n_docs", "sum_dl", "batch_key")
-      .coalesce(1).write.mode("append")
+      .coalesce(1).write.format("parquet").mode("append")
       .bucketBy(1, "gen").sortBy("gen")
       .saveAsTable(table + "_s")
   }
@@ -988,7 +990,7 @@ object TextAnalysis {
 
   /** [[bm25TopKIndexed]] with the QUERIES AS A STREAM — the online
     * lexical serving shape beside the dense tier's
-    * [[Similarity.streamAdcTopK]]. Each micro-batch's queries run the
+    * [[Similarity.streamAdcTopKSharded]]. Each micro-batch's queries run the
     * gated indexed probe VERBATIM inside foreachBatch: BM25 scoring is
     * per-batch aggregates (df, score sum, top-k) over candidates that
     * all live in the micro-batch that carried their query — per-batch

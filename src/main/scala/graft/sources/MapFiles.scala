@@ -23,7 +23,10 @@ import org.apache.spark.sql.functions._
 object MapFiles {
 
   /** Persist the MapFile layout: `buckets` hash buckets, each sorted by
-    * `keyCol` (MapFileOutputFormat.getRecordWriter's sorted writer). */
+    * `keyCol` (MapFileOutputFormat.getRecordWriter's sorted writer).
+    * Always parquet, whatever `spark.sql.sources.default` says: the
+    * key bloom filter and the driver-side sidecar reader
+    * ([[SidecarRead]]) both assume it. */
   def write(df: DataFrame, keyCol: String, buckets: Int,
       table: String): Unit = {
     require(!table.contains("."),
@@ -32,7 +35,7 @@ object MapFiles {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     clearStaleLocation(spark, table)
-    df.write.mode("overwrite")
+    df.write.format("parquet").mode("overwrite")
       .option("parquet.bloom.filter.enabled#" + keyCol, "true")
       .bucketBy(buckets, keyCol).sortBy(keyCol)
       .saveAsTable(table)
@@ -87,7 +90,7 @@ object MapFiles {
   /** A write-generation id no prior (possibly crashed) attempt can
     * have used — the retry-safety primitive of the persisted-index
     * maintenance protocol (BM25 `appendBm25Index`, ADC
-    * `appendIvfAdcIndex`): a failed append's orphan rows stay
+    * `appendIvfAdcIndexSharded`): a failed append's orphan rows stay
     * invisible forever because the retry commits under a FRESH id (a
     * deterministic sequence would re-collide with the orphan and
     * double-count the batch once committed). The value never reaches

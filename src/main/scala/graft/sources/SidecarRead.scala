@@ -30,24 +30,38 @@ object SidecarRead {
     * Double, String, Boolean); absent/null fields are absent from the
     * map. `fields` is the file-schema field-name set (presence checks —
     * the schema-evolution probes `contains("rsgen")` etc. need it even
-    * when the column is null on every row). */
-  final case class Row(values: Map[String, Any], fields: Set[String]) {
-    def getLong(f: String): Long = values(f) match {
+    * when the column is null on every row). `table` and `file` name the
+    * row's source, so a missing or mistyped field fails naming all
+    * three instead of as a bare map lookup. */
+  final case class Row(values: Map[String, Any], fields: Set[String],
+      table: String, file: String) {
+    private def value(f: String): Any = values.getOrElse(f,
+      throw new IllegalStateException(
+        if (fields.contains(f)) s"$table ($file): field '$f' is null"
+        else s"$table ($file): no field '$f' (fields: " +
+          fields.toSeq.sorted.mkString(", ") + ")"))
+    private def mistyped(f: String, want: String, x: Any) =
+      new IllegalStateException(s"$table ($file): field '$f' is " +
+        s"${x.getClass.getSimpleName} $x, expected $want")
+    def getLong(f: String): Long = value(f) match {
       case l: Long => l
       case i: Int  => i.toLong
-      case x       => throw new IllegalStateException(s"$f: $x")
+      case x       => throw mistyped(f, "long", x)
     }
-    def getInt(f: String): Int = values(f) match {
+    def getInt(f: String): Int = value(f) match {
       case i: Int  => i
       case l: Long => l.toInt
-      case x       => throw new IllegalStateException(s"$f: $x")
+      case x       => throw mistyped(f, "int", x)
     }
-    def getDouble(f: String): Double = values(f) match {
+    def getDouble(f: String): Double = value(f) match {
       case d: Double => d
       case f2: Float => f2.toDouble
-      case x         => throw new IllegalStateException(s"$f: $x")
+      case x         => throw mistyped(f, "double", x)
     }
-    def getString(f: String): String = values(f).asInstanceOf[String]
+    def getString(f: String): String = value(f) match {
+      case s: String => s
+      case x         => throw mistyped(f, "string", x)
+    }
   }
 
   /** All rows of `table`, crash-healed and freshly listed (the
@@ -58,9 +72,10 @@ object SidecarRead {
     * (max/find) or sort, exactly like the collect form's callers. */
   def rows(spark: SparkSession, table: String): Seq[Row] =
     graft.pipeline.MergeTables.freshInputFiles(spark, table)
-      .flatMap(readFile(spark, _))
+      .flatMap(readFile(spark, table, _))
 
-  private def readFile(spark: SparkSession, file: String): Seq[Row] = {
+  private def readFile(spark: SparkSession, table: String,
+      file: String): Seq[Row] = {
     val conf = spark.sessionState.newHadoopConf()
     val reader = org.apache.parquet.hadoop.ParquetReader
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
@@ -91,7 +106,7 @@ object SidecarRead {
             }
           }
         }.toMap
-        out += Row(vals, names)
+        out += Row(vals, names, table, file)
         g = reader.read()
       }
       out.toSeq

@@ -436,15 +436,13 @@ object GrowthBench {
           "transform(sequence(0, 63), i -> " +
           "cast(pmod(hash(vec_id, 77, i), 2000) / 1000.0d - 1.0d as float))"))
       for ((tag, d) <- Seq("1x" -> x1, "10x" -> x10)) {
-        val (nlist, _) = Similarity.ivfParams(
-          Tables.embeddings(spark, d).count())
-        Similarity.writeIvfAdcIndex(Tables.embeddings(spark, d), "vec_id",
-          "embedding", s"gadc_idx_$tag", nlist = nlist, dim = 64)
+        Similarity.writeIvfAdcIndexSharded(Tables.embeddings(spark, d),
+          "vec_id", "embedding", s"gadc_idx_$tag")
         if (tag == "1x") { // warm both append plan shapes off the clock
           graft.pipeline.TextAnalysis.appendBm25Index(appDocs.limit(50),
             "doc_id", "text", "gqb3_idx_1x")
-          Similarity.appendIvfAdcIndex(appVecs.limit(50), "vec_id",
-            "embedding", "gadc_idx_1x", dim = 64)
+          Similarity.appendIvfAdcIndexSharded(appVecs.limit(50), "vec_id",
+            "embedding", "gadc_idx_1x")
         }
         t(s"qc1_bm25_append_$tag") = timeU(s"qc1_bm25_append_$tag") {
           graft.pipeline.TextAnalysis.appendBm25Index(appDocs, "doc_id",
@@ -452,8 +450,8 @@ object GrowthBench {
           ""
         }
         t(s"qc3_adc_append_$tag") = timeU(s"qc3_adc_append_$tag") {
-          Similarity.appendIvfAdcIndex(appVecs, "vec_id", "embedding",
-            s"gadc_idx_$tag", dim = 64)
+          Similarity.appendIvfAdcIndexSharded(appVecs, "vec_id",
+            "embedding", s"gadc_idx_$tag")
           ""
         }
       }
@@ -476,37 +474,34 @@ object GrowthBench {
           ("10x", x10, true))) {
         val all = Tables.embeddings(spark, d)
         val base = all.filter(col("vec_id") < 1000000L)
-        val (nlist, nprobe) = Similarity.ivfParams(base.count())
         val itable = s"gdrift_idx_$tag"
-        Similarity.writeIvfAdcIndex(base, "vec_id", "embedding", itable,
-          nlist = nlist, dim = 64)
+        Similarity.writeIvfAdcIndexSharded(base, "vec_id", "embedding",
+          itable)
         if (grow)
-          Similarity.appendIvfAdcIndex(
+          Similarity.appendIvfAdcIndexSharded(
             all.filter(col("vec_id") >= 1000000L), "vec_id", "embedding",
-            itable, dim = 64)
+            itable)
         val panel = base.filter(col("vec_id") % 100 === 0)
         val rec = Similarity.recallAuditIndexed(all, panel, "vec_id",
-            "embedding", k = 3, nprobe = nprobe, table = itable, dim = 64)
+            "embedding", k = 3, table = itable)
           .agg(avg(col("recall"))).collect()(0).getDouble(0)
         t(s"qc3_recall3_frozen_$tag") = rec
         System.err.println(
           f"[growth] qc3_recall3_frozen_$tag%-22s $rec%6.3f (recall@3)")
         // the RETRAIN recovery point (r14): at the 10x drift sample —
-        // the retrain-threshold signal — run qe3's retrainIvfAdcIndex
+        // the retrain-threshold signal — run qe3's retrain
         // over the full grown corpus and re-audit on the SAME panel:
         // the recall delta is what the retrain buys, the wall time is
         // what it costs (the full-rebuild price, paid on the drift
         // gate's signal, never per append)
         if (tag == "10x") {
-          val (rNlist, rNprobe) = Similarity.ivfParams(all.count())
           t("qe3_retrain_10x") = timeU("qe3_retrain_10x") {
-            Similarity.retrainIvfAdcIndex(all, "vec_id", "embedding",
-              itable, nlist = rNlist, dim = 64)
+            Similarity.retrainIvfAdcIndexSharded(all, "vec_id",
+              "embedding", itable)
             ""
           }
           val rec2 = Similarity.recallAuditIndexed(all, panel, "vec_id",
-              "embedding", k = 3, nprobe = rNprobe, table = itable,
-              dim = 64)
+              "embedding", k = 3, table = itable)
             .agg(avg(col("recall"))).collect()(0).getDouble(0)
           t("qe3_recall3_retrained_10x") = rec2
           System.err.println(
@@ -572,7 +567,7 @@ object GrowthBench {
       val panel = emb.filter(col("vec_id") % 100 === 0)
       for (sh <- Seq(1, 8, 32)) {
         Similarity.writeIvfAdcIndexSharded(emb, "vec_id", "embedding",
-          s"gshard_idx_$sh", nShards = sh, dim = 64)
+          s"gshard_idx_$sh", nShards = sh)
         // EVERY variant gets an untimed warm probe before its timed
         // run (ADVICE r18): the build clears each shard's quantizer
         // memo, so an unwarmed timed run folds sh first-touch centroid
@@ -700,20 +695,18 @@ object GrowthBench {
       val panel = Tables.embeddings(spark, x1)
         .filter(col("vec_id") % 100 === 0)
       for ((tag, d) <- Seq("1x" -> x1, "100x" -> x100)) {
-        val emb = Tables.embeddings(spark, d)
-        val (nl, np) = Similarity.ivfParams(emb.count())
-        Similarity.writeIvfAdcIndex(emb, "vec_id", "embedding",
-          s"gadcp_idx_$tag", nlist = nl, dim = 64)
+        Similarity.writeIvfAdcIndexSharded(Tables.embeddings(spark, d),
+          "vec_id", "embedding", s"gadcp_idx_$tag")
         if (tag == "1x") // warm the probe plan shape off the clock
-          Similarity.ivfAdcTopKIndexed(panel, "vec_id", "embedding",
-            k = 3, nprobe = np, table = "gadcp_idx_1x", dim = 64).count()
+          Similarity.ivfAdcTopKIndexedSharded(panel, "vec_id", "embedding",
+            k = 3, table = "gadcp_idx_1x").count()
         t(s"qadc_probe_$tag") = time(s"qadc_probe_$tag",
-          Similarity.ivfAdcTopKIndexed(panel, "vec_id", "embedding",
-            k = 3, nprobe = np, table = s"gadcp_idx_$tag", dim = 64))
+          Similarity.ivfAdcTopKIndexedSharded(panel, "vec_id", "embedding",
+            k = 3, table = s"gadcp_idx_$tag"))
       }
       t("qc3_adc_append_100x") = timeU("qc3_adc_append_100x") {
-        Similarity.appendIvfAdcIndex(appVecs, "vec_id", "embedding",
-          "gadcp_idx_100x", dim = 64)
+        Similarity.appendIvfAdcIndexSharded(appVecs, "vec_id", "embedding",
+          "gadcp_idx_100x")
         ""
       }
       // bounded-state tiers at the next decade
@@ -757,7 +750,7 @@ object GrowthBench {
     // candidates per query are linear in the corpus — on hash-random
     // vectors no inverted file does better. REAL embeddings are
     // clustered with low intrinsic dimension; there the production dial
-    // is tuneNprobe's recall-gated ABSOLUTE nprobe and per-query probe
+    // is tuneShardDials' recall-gated ABSOLUTE nprobe and per-query probe
     // work is nprobe x occupancy = constant. This tier measures that
     // claim across the same two decades: clustered corpora at 1x and
     // 100x, the dial tuned by the recall gate at EACH scale, the FIXED
@@ -800,63 +793,51 @@ object GrowthBench {
           .parquet(s"${genClustered(k)}/embeddings.parquet")
         val cnt = emb.count()
         val (nl, fracNp) = Similarity.ivfParams(cnt)
+        val groups = math.ceil(math.sqrt(nl.toDouble)).toInt
         // strided init: on separated clusters the default lexicographic-
         // prefix seeds clump and leave multi-cluster cells that inflate
-        // the dial (trainCoarseQuantizer doc) — the clustered-corpus
-        // build contract is pre-trained spread seeds
-        val cents = Similarity.trainCoarseQuantizer(
-          Similarity.trainingSample(emb, "vec_id", "embedding",
-            Similarity.trainingCap(nl)),
-          "embedding", nl, 64, init = "strided")
-        Similarity.writeIvfAdcIndex(emb, "vec_id", "embedding",
-          s"gtuned_idx_$tag", nlist = nl, dim = 64, cents = cents)
+        // the dial (trainCoarseQuantizer doc)
+        Similarity.writeIvfAdcIndexSharded(emb, "vec_id", "embedding",
+          s"gtuned_idx_$tag", init = "strided")
         // tune on a BOUNDED sample (~200 queries at any scale) — the
         // monitoring-cadence shape; a corpus-proportional panel turns
-        // each audit's candidate set corpus-sized. The reference is
-        // the QUANTIZER CEILING (adcFullTopK): nprobe dials probing
+        // each audit's candidate set corpus-sized. Both dials gate
+        // against the QUANTIZER CEILING: nprobe and gprobe dial probing
         // loss; quantization loss is re-rank/retrain territory, and on
         // a dense synthetic whose neighbor margins sit at the int8
         // noise floor a float-exact target would escalate the probe
-        // for loss it cannot fix (Similarity.tuneNprobe doc)
+        // for loss it cannot fix (Similarity.tuneShardDials doc)
         val tunePanel = emb.filter(
           col("vec_id") % lit(math.max(100L, cnt / 200L)) === 0)
         val t0 = System.nanoTime()
-        val ref = Similarity.adcFullTopK(tunePanel, "vec_id",
-          "embedding", k = 3, s"gtuned_idx_$tag")
-        val (np, rec) = Similarity.tuneNprobe(emb, tunePanel, "vec_id",
-          "embedding", k = 3, s"gtuned_idx_$tag", targetRecall = target,
-          reference = ref)
+        val dials = Similarity.tuneShardDials(tunePanel, "vec_id",
+          "embedding", k = 3, s"gtuned_idx_$tag", targetRecall = target)
+        val Seq(dl) = dials
         System.err.println(f"[growth] qadc_tuned_dial_$tag%-14s " +
-          f"nprobe=$np of nlist=$nl (fraction law: $fracNp) " +
-          f"probe-recall=$rec%.3f tune=${(System.nanoTime() - t0) / 1e9}%.1f s")
-        t(s"qadc_tuned_np_$tag") = np.toDouble
-        t(s"qadc_tuned_recall_$tag") = rec
+          f"nprobe=${dl.nprobe} of nlist=$nl (fraction law: $fracNp) " +
+          f"probe-recall=${dl.probeRecall}%.3f " +
+          f"tune=${(System.nanoTime() - t0) / 1e9}%.1f s")
+        t(s"qadc_tuned_np_$tag") = dl.nprobe.toDouble
+        t(s"qadc_tuned_recall_$tag") = dl.probeRecall
+        // the flat probe at the tuned nprobe: the two-level kernel at
+        // full group coverage selects exactly the flat kernel's cells
+        val flatDials = Seq(dl.copy(gprobe = groups))
         if (tag == "1x") // warm the probe plan shape off the clock
-          Similarity.ivfAdcTopKIndexed(panel1x, "vec_id", "embedding",
-            k = 3, nprobe = np, table = "gtuned_idx_1x", dim = 64).count()
+          Similarity.ivfAdcTopKIndexedShardedTuned(panel1x, "vec_id",
+            "embedding", k = 3, "gtuned_idx_1x", flatDials).count()
         t(s"qadc_tuned_probe_$tag") = time(s"qadc_tuned_probe_$tag",
-          Similarity.ivfAdcTopKIndexed(panel1x, "vec_id", "embedding",
-            k = 3, nprobe = np, table = s"gtuned_idx_$tag", dim = 64))
-        // the TWO-LEVEL dial at the same gate: gprobe tuned against
-        // the flat probe at the tuned np (the measured quantity is
-        // exactly the sqrt-level's loss), then the FIXED panel timed
-        // through the hier path
-        val flatRef = Similarity.ivfAdcTopKIndexed(tunePanel, "vec_id",
-            "embedding", k = 3, nprobe = np,
-            table = s"gtuned_idx_$tag", dim = 64)
-          .select("q_id", "nb_id")
-        val (gp, gRec) = Similarity.tuneGprobe(emb, tunePanel, "vec_id",
-          "embedding", k = 3, nprobe = np, s"gtuned_idx_$tag",
-          targetRecall = target, reference = flatRef)
+          Similarity.ivfAdcTopKIndexedShardedTuned(panel1x, "vec_id",
+            "embedding", k = 3, s"gtuned_idx_$tag", flatDials))
+        // the TWO-LEVEL dial at the same gate, then the FIXED panel
+        // timed through the hier path
         System.err.println(f"[growth] qadc_hier_dial_$tag%-15s " +
-          f"gprobe=$gp of ~${math.ceil(math.sqrt(nl.toDouble)).toInt} " +
-          f"groups, recall-vs-flat=$gRec%.3f")
-        t(s"qadc_hier_gp_$tag") = gp.toDouble
-        t(s"qadc_hier_recall_$tag") = gRec
+          f"gprobe=${dl.gprobe} of ~$groups groups, " +
+          f"hier-recall=${dl.hierRecall}%.3f")
+        t(s"qadc_hier_gp_$tag") = dl.gprobe.toDouble
+        t(s"qadc_hier_recall_$tag") = dl.hierRecall
         t(s"qadc_hier_probe_$tag") = time(s"qadc_hier_probe_$tag",
-          Similarity.ivfAdcTopKIndexedHier(panel1x, "vec_id",
-            "embedding", k = 3, nprobe = np, gprobe = gp,
-            table = s"gtuned_idx_$tag", dim = 64))
+          Similarity.ivfAdcTopKIndexedShardedTuned(panel1x, "vec_id",
+            "embedding", k = 3, s"gtuned_idx_$tag", dials))
       }
 
       // ---- TUNED SERVING STACKS (r17 verdict item 1) ----
@@ -897,62 +878,49 @@ object GrowthBench {
         val d = genStack(k)
         val emb = Tables.embeddings(spark, d)
         val cnt = emb.count()
-        val (nl, fracNp) = Similarity.ivfParams(cnt)
-        val cents = Similarity.trainCoarseQuantizer(
-          Similarity.trainingSample(emb, "vec_id", "embedding",
-            Similarity.trainingCap(nl)),
-          "embedding", nl, 64, init = "strided")
-        Similarity.writeIvfAdcIndex(emb, "vec_id", "embedding",
-          s"gstk_idx_$tag", nlist = nl, dim = 64, cents = cents)
+        val (_, fracNp) = Similarity.ivfParams(cnt)
+        val tbl = s"gstk_idx_$tag"
+        Similarity.writeIvfAdcIndexSharded(emb, "vec_id", "embedding",
+          tbl, init = "strided")
         val tunePanel = emb.filter(
           col("vec_id") % lit(math.max(100L, cnt / 200L)) === 0)
-        val ceil0 = Similarity.adcFullTopK(tunePanel, "vec_id",
-          "embedding", k = 3, s"gstk_idx_$tag")
-        val (np, rec) = Similarity.tuneNprobe(emb, tunePanel, "vec_id",
-          "embedding", k = 3, s"gstk_idx_$tag", targetRecall = 0.8,
-          reference = ceil0)
-        val flatRef = Similarity.ivfAdcTopKIndexed(tunePanel, "vec_id",
-            "embedding", k = 3, nprobe = np, table = s"gstk_idx_$tag",
-            dim = 64).select("q_id", "nb_id")
-        val (gp, gRec) = Similarity.tuneGprobe(emb, tunePanel, "vec_id",
-          "embedding", k = 3, nprobe = np, s"gstk_idx_$tag",
-          targetRecall = 0.8, reference = flatRef)
-        System.err.println(f"[growth] stack dials $tag%-5s np=$np " +
-          f"gp=$gp probe-recall=$rec%.3f hier-recall=$gRec%.3f " +
+        val dials = Similarity.tuneShardDials(tunePanel, "vec_id",
+          "embedding", k = 3, tbl, targetRecall = 0.8)
+        System.err.println(f"[growth] stack dials $tag%-5s " +
+          f"np=${dials.head.nprobe} gp=${dials.head.gprobe} " +
+          f"probe-recall=${dials.head.probeRecall}%.3f " +
+          f"hier-recall=${dials.head.hierRecall}%.3f " +
           f"(fraction law np=$fracNp)")
         def frac(q: DataFrame, kk: Int): DataFrame =
-          Similarity.ivfAdcTopKIndexed(q, "vec_id", "embedding", kk,
-            fracNp, s"gstk_idx_$tag", dim = 64)
+          Similarity.ivfAdcTopKIndexedSharded(q, "vec_id", "embedding",
+            kk, tbl)
+        def tuned(q: DataFrame, kk: Int): DataFrame =
+          Similarity.ivfAdcTopKIndexedShardedTuned(q, "vec_id",
+            "embedding", kk, tbl, dials)
         // warm: the first call of each shape builds the lex index and
         // the qc2 count table (buildOnce, untimed) and compiles the
         // stack's plan
         graft.RelationalQueries.qb7Stack(spark, d, frac).count()
         t(s"qb7_stack_frac_$tag") = time(s"qb7_stack_frac_$tag",
           graft.RelationalQueries.qb7Stack(spark, d, frac))
-        graft.RelationalQueries.qb7Tuned(spark, d, s"gstk_idx_$tag",
-          np, gp).count()
+        graft.RelationalQueries.qb7Stack(spark, d, tuned).count()
         t(s"qb7_stack_tuned_$tag") = time(s"qb7_stack_tuned_$tag",
-          graft.RelationalQueries.qb7Tuned(spark, d, s"gstk_idx_$tag",
-            np, gp))
+          graft.RelationalQueries.qb7Stack(spark, d, tuned))
         graft.RelationalQueries.qc2Stack(spark, d, frac).count()
         t(s"qc2_stack_frac_$tag") = time(s"qc2_stack_frac_$tag",
           graft.RelationalQueries.qc2Stack(spark, d, frac))
-        graft.RelationalQueries.qc2Tuned(spark, d, s"gstk_idx_$tag",
-          np, gp).count()
+        graft.RelationalQueries.qc2Stack(spark, d, tuned).count()
         t(s"qc2_stack_tuned_$tag") = time(s"qc2_stack_tuned_$tag",
-          graft.RelationalQueries.qc2Tuned(spark, d, s"gstk_idx_$tag",
-            np, gp))
+          graft.RelationalQueries.qc2Stack(spark, d, tuned))
         def agree(a: DataFrame, b: DataFrame): Double =
           Similarity.retrievalAgreement(a, b, "q_id", "doc_id")
             .agg((sum("n_both") / sum("n_b")).cast("double"))
             .head().getDouble(0)
         t(s"qb7_stack_agree_$tag") = agree(
-          graft.RelationalQueries.qb7Tuned(spark, d, s"gstk_idx_$tag",
-            np, gp),
+          graft.RelationalQueries.qb7Stack(spark, d, tuned),
           graft.RelationalQueries.qb7Stack(spark, d, frac))
         t(s"qc2_stack_agree_$tag") = agree(
-          graft.RelationalQueries.qc2Tuned(spark, d, s"gstk_idx_$tag",
-            np, gp),
+          graft.RelationalQueries.qc2Stack(spark, d, tuned),
           graft.RelationalQueries.qc2Stack(spark, d, frac))
       }
 
@@ -960,7 +928,7 @@ object GrowthBench {
       // verdict item 1) ---- sharding is the horizontal 100 TB dial;
       // until r19 its fan-out re-inherited the fraction law's linear
       // per-shard candidates — the tuned/hier serving dials existed
-      // only on the single-table tier. This block gates the
+      // only on the unsharded tier. This block gates the
       // composition on the stack corpora: per-shard recall-gated
       // dials (tuneShardDials, each shard against its own quantizer
       // ceiling), the two-level broadcast probe per shard, the
@@ -974,8 +942,8 @@ object GrowthBench {
       // over the SAME sharded index. The tune line also records r19
       // item 3: tuneShardDials runs its shards CONCURRENTLY on a
       // bounded pool (was 26 s sequential at 1x/s8). s1/s32 at 100x
-      // are deliberately skipped: nShards=1 is a spec-pinned identity
-      // with the single-table tuned probe, and the 100x tier's cost
+      // are deliberately skipped: nShards=1 is the tuned tier above
+      // (the gtuned/gstk indexes), and the 100x tier's cost
       // budget is the s8 serving point, not a shard-count sweep.
       locally {
         val probePanel = Tables.embeddings(spark, genStack(1))
@@ -987,7 +955,7 @@ object GrowthBench {
           val cnt = emb.count()
           val tbl = s"gshtn_idx_${tag}_s$sh"
           Similarity.writeIvfAdcIndexSharded(emb, "vec_id",
-            "embedding", tbl, nShards = sh, dim = 64, init = "strided")
+            "embedding", tbl, nShards = sh, init = "strided")
           val tunePanel = emb.filter(
             col("vec_id") % lit(math.max(100L, cnt / 200L)) === 0)
           val t0 = System.nanoTime()

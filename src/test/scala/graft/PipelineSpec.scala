@@ -851,8 +851,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
   test("ragged centroid matrix fails loudly, not silently misaligned") {
     val ragged = Array(Array(1.0, 0.0, 0.0), Array(1.0))
     val ex = intercept[Throwable] {
-      vecs.select(graft.functions.NearestCells(
-        col("embedding"), ragged, 1)).collect()
+      graft.functions.NearestCellsBc.quantizerOf(ragged)
     }
     def chain(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: chain(e.getCause))
@@ -881,6 +880,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(out == Seq((1L, 12L, 1), (1L, 13L, 2)), out)
   }
 
+  // The single persisted IVF-ADC tier at its unsharded point
+  // (nShards = 1): the lifecycle specs below pin build, append, delete,
+  // compaction, retrain and the generation protocol on that layout.
+
   test("appendIvfAdcIndex: build+append equals writing the whole corpus against the same frozen quantizer") {
     // the qc3 contract, minus the drift question: appending against the
     // STORED centroids must leave the index row-identical to coding the
@@ -891,35 +894,25 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val n = corpus.count()
     val build = corpus.filter(col("vec_id") * 2 < n)
     val batch = corpus.filter(col("vec_id") * 2 >= n)
-    val (nlist, nprobe) = Similarity.ivfParams(build.count())
+    val queries = corpus.filter(col("vec_id") % 100 === 0)
     try {
-      val cents = Similarity.writeIvfAdcIndex(build, "vec_id",
-        "embedding", "adc_app_idx", nlist = nlist, dim = 64)
-      Similarity.appendIvfAdcIndex(batch, "vec_id", "embedding",
-        "adc_app_idx", dim = 64)
-      Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
-        "adc_full_idx", nlist = nlist, dim = 64, cents = cents)
-      def rows(t: String) = spark.table(t)
-        .select(col("cell"), col("id"), hex(col("qc")), col("scale"))
-        .as[(Int, Long, String, Double)].collect().sorted.toSeq
-      assert(rows("adc_app_idx").nonEmpty &&
-        rows("adc_app_idx") == rows("adc_full_idx"))
-      def probe(t: String) = Similarity.ivfAdcTopKIndexed(
-          corpus.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          k = 3, nprobe = nprobe, table = t, dim = 64)
-        .select("q_id", "nb_id", "rank")
-        .as[(Long, Long, Int)].collect().sorted.toSeq
-      assert(probe("adc_app_idx") == probe("adc_full_idx"))
+      val cents = Similarity.writeIvfAdcIndexSharded(build, "vec_id",
+        "embedding", "adc_app_idx")
+      Similarity.appendIvfAdcIndexSharded(batch, "vec_id", "embedding",
+        "adc_app_idx")
+      Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "adc_full_idx", cents = cents)
+      assert(AdcKit.storedRows("adc_app_idx").nonEmpty &&
+        AdcKit.storedRows("adc_app_idx") ==
+          AdcKit.storedRows("adc_full_idx"))
+      assert(AdcKit.probe(queries, "adc_app_idx") ==
+        AdcKit.probe(queries, "adc_full_idx"))
       // appending to a missing index fails loudly
       intercept[Exception] {
-        Similarity.appendIvfAdcIndex(batch, "vec_id", "embedding",
-          "adc_missing_idx", dim = 64)
+        Similarity.appendIvfAdcIndexSharded(batch, "vec_id", "embedding",
+          "adc_missing_idx")
       }
-    } finally {
-      for (t <- Seq("adc_app_idx", "adc_app_idx_c", "adc_app_idx_g",
-          "adc_full_idx", "adc_full_idx_c", "adc_full_idx_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally AdcKit.drop("adc_app_idx", "adc_full_idx")
   }
 
   test("appendIvfAdcIndex atomicity: a writer killed before the commit leaves probes on the exact pre-append state") {
@@ -931,45 +924,31 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val n = corpus.count()
     val build = corpus.filter(col("vec_id") * 2 < n)
     val batch = corpus.filter(col("vec_id") * 2 >= n)
-    val (nlist, nprobe) = Similarity.ivfParams(build.count())
     val queries = corpus.filter(col("vec_id") % 100 === 1)
-    def probe() = Similarity.ivfAdcTopKIndexed(
-        queries, "vec_id", "embedding",
-        k = 3, nprobe = nprobe, table = "adc_atom_idx", dim = 64)
-      .select("q_id", "nb_id", "rank")
-      .as[(Long, Long, Int)].collect().sorted.toSeq
+    def probe() = AdcKit.probe(queries, "adc_atom_idx")
     try {
-      val cents = Similarity.writeIvfAdcIndex(build, "vec_id",
-        "embedding", "adc_atom_idx", nlist = nlist, dim = 64)
+      val cents = Similarity.writeIvfAdcIndexSharded(build, "vec_id",
+        "embedding", "adc_atom_idx")
       val pre = probe()
       val orphanGen = 777L
-      Similarity.appendAdcRowsOnly(batch, "vec_id", "embedding",
-        "adc_atom_idx", orphanGen)
-      assert(spark.table("adc_atom_idx")
+      Similarity.svAppendRowsOnly(batch, "vec_id", "embedding",
+        Similarity.svState(spark, "adc_atom_idx", fresh = true), orphanGen)
+      assert(spark.table("adc_atom_idx_sv")
         .filter(col("gen") === orphanGen).count() > 0)
       assert(probe() == pre, "uncommitted append leaked into the probe")
       // retry: the full append under a fresh generation
-      Similarity.appendIvfAdcIndex(batch, "vec_id", "embedding",
-        "adc_atom_idx", dim = 64)
-      Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
-        "adc_atom_ref", nlist = nlist, dim = 64, cents = cents)
-      val ref = Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-          "embedding", k = 3, nprobe = nprobe, table = "adc_atom_ref",
-          dim = 64)
-        .select("q_id", "nb_id", "rank")
-        .as[(Long, Long, Int)].collect().sorted.toSeq
+      Similarity.appendIvfAdcIndexSharded(batch, "vec_id", "embedding",
+        "adc_atom_idx")
+      Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "adc_atom_ref", cents = cents)
+      val ref = AdcKit.probe(queries, "adc_atom_ref")
       assert(probe() == ref, "retried append diverged from rebuild")
-      Similarity.compactIvfAdcIndex(spark, "adc_atom_idx")
-      assert(spark.table("adc_atom_idx")
+      Similarity.compactIvfAdcIndexSharded(spark, "adc_atom_idx")
+      assert(spark.table("adc_atom_idx_sv")
         .filter(col("gen") === orphanGen).count() == 0,
         "compaction should reclaim the orphan generation")
       assert(probe() == ref)
-    } finally {
-      for (t <- Seq("adc_atom_idx", "adc_atom_idx_c", "adc_atom_idx_g",
-          "adc_atom_idx_t", "adc_atom_idx_cmp",
-          "adc_atom_ref", "adc_atom_ref_c", "adc_atom_ref_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally AdcKit.drop("adc_atom_idx", "adc_atom_ref")
   }
 
   test("deleteIvfVecs + compactIvfAdcIndex: tombstoned probe == compacted probe == frozen-quantizer index over survivors") {
@@ -979,194 +958,163 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // replayed deletes are idempotent; compaction drops the tombstone
     // table and the dead rows
     val corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val (nlist, nprobe) = Similarity.ivfParams(corpus.count())
     val survivors = corpus.filter(col("vec_id") % 5 =!= 0)
     val queries = survivors.filter(col("vec_id") % 100 === 1)
-    def probe(t: String) = Similarity.ivfAdcTopKIndexed(
-        queries, "vec_id", "embedding",
-        k = 3, nprobe = nprobe, table = t, dim = 64)
-      .select("q_id", "nb_id", "rank")
-      .as[(Long, Long, Int)].collect().sorted.toSeq
+    def probe(t: String) = AdcKit.probe(queries, t)
     try {
-      val cents = Similarity.writeIvfAdcIndex(corpus, "vec_id",
-        "embedding", "adc_del_idx", nlist = nlist, dim = 64)
-      Similarity.deleteIvfVecs(spark, "adc_del_idx",
+      val cents = Similarity.writeIvfAdcIndexSharded(corpus, "vec_id",
+        "embedding", "adc_del_idx")
+      Similarity.deleteIvfVecsSharded(spark, "adc_del_idx",
         corpus.filter(col("vec_id") % 5 === 0).select("vec_id"), "vec_id")
       // reference: the survivors coded one-shot with the same quantizer
-      Similarity.writeIvfAdcIndex(survivors, "vec_id", "embedding",
-        "adc_del_ref", nlist = nlist, dim = 64, cents = cents)
+      Similarity.writeIvfAdcIndexSharded(survivors, "vec_id", "embedding",
+        "adc_del_ref", cents = cents)
       val ref = probe("adc_del_ref")
       val tomb = probe("adc_del_idx")
       assert(ref.nonEmpty && tomb == ref, s"tomb=$tomb ref=$ref")
       // replayed / partially-absent delete: no change
-      Similarity.deleteIvfVecs(spark, "adc_del_idx",
+      Similarity.deleteIvfVecsSharded(spark, "adc_del_idx",
         Seq(0L, 5L, 999999L).toDF("vec_id"), "vec_id")
       assert(probe("adc_del_idx") == ref)
-      Similarity.compactIvfAdcIndex(spark, "adc_del_idx")
-      assert(!spark.catalog.tableExists("adc_del_idx_t"))
-      assert(spark.table("adc_del_idx")
+      Similarity.compactIvfAdcIndexSharded(spark, "adc_del_idx")
+      assert(!spark.catalog.tableExists("adc_del_idx_sv_t"))
+      assert(spark.table("adc_del_idx_sv")
         .filter(col("id") % 5 === 0).count() == 0,
         "compaction left dead rows")
       // compacted rows are EXACTLY the one-shot survivor index's
-      def rows(t: String) = spark.table(t)
-        .select(col("cell"), col("id"), hex(col("qc")), col("scale"))
-        .as[(Int, Long, String, Double)].collect().sorted.toSeq
-      assert(rows("adc_del_idx") == rows("adc_del_ref"))
+      assert(AdcKit.storedRows("adc_del_idx") ==
+        AdcKit.storedRows("adc_del_ref"))
       assert(probe("adc_del_idx") == ref)
-    } finally {
-      for (t <- Seq("adc_del_idx", "adc_del_idx_c", "adc_del_idx_t",
-          "adc_del_idx_g", "adc_del_idx_cmp",
-          "adc_del_ref", "adc_del_ref_c", "adc_del_ref_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally AdcKit.drop("adc_del_idx", "adc_del_ref")
   }
 
   test("retrainIvfAdcIndex: retrain == one-shot build over the live corpus, consuming tombstones and resetting generations") {
     // the qe3 contract plus the deletion face: a drifted
     // build+append+delete index retrains into EXACTLY the live state a
-    // fresh writeIvfAdcIndex over the survivors would produce — codes,
-    // centroids, generation set, and probe — the tombstone table is
-    // consumed by the epoch flip, and the next compaction physically
-    // reclaims the retired epoch's rows down to the fresh build's
+    // fresh build over the survivors would produce — codes, centroids,
+    // generation set, and probe — the tombstones retire with the epoch
+    // flip, and the next compaction physically reclaims the retired
+    // epoch's rows down to the fresh build's
     val corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val n = corpus.count()
     val build = corpus.filter(col("vec_id") * 2 < n)
-    val (bNlist, _) = Similarity.ivfParams(build.count())
     val survivors = corpus.filter(col("vec_id") % 7 =!= 0)
-    val (fNlist, fNprobe) = Similarity.ivfParams(survivors.count())
     val queries = survivors.filter(col("vec_id") % 100 === 1)
-    def probe(t: String) = Similarity.ivfAdcTopKIndexed(
-        queries, "vec_id", "embedding",
-        k = 3, nprobe = fNprobe, table = t, dim = 64)
-      .select("q_id", "nb_id", "rank")
-      .as[(Long, Long, Int)].collect().sorted.toSeq
+    def probe(t: String) = AdcKit.probe(queries, t)
     // the PROBE-VISIBLE rows: what retrain must land exactly (the
     // retired epoch's dead rows stay physical until compaction)
-    def liveRows(t: String) = Similarity.liveAdcRows(spark, t)
+    def liveRows(t: String) = AdcKit.liveRows(t)
       .select(col("cell"), col("id"), hex(col("qc")), col("scale"),
         col("gen"))
       .as[(Int, Long, String, Double, Long)].collect().sorted.toSeq
-    def rawRows(t: String) = spark.table(t)
+    def rawRows(t: String) = spark.table(t + "_sv")
       .select(col("cell"), col("id"), hex(col("qc")), col("scale"),
         col("gen"))
       .as[(Int, Long, String, Double, Long)].collect().sorted.toSeq
     try {
-      Similarity.writeIvfAdcIndex(build, "vec_id", "embedding",
-        "adc_rt_idx", nlist = bNlist, dim = 64)
-      Similarity.appendIvfAdcIndex(corpus.filter(col("vec_id") * 2 >= n),
-        "vec_id", "embedding", "adc_rt_idx", dim = 64)
-      Similarity.deleteIvfVecs(spark, "adc_rt_idx",
+      Similarity.writeIvfAdcIndexSharded(build, "vec_id", "embedding",
+        "adc_rt_idx")
+      Similarity.appendIvfAdcIndexSharded(
+        corpus.filter(col("vec_id") * 2 >= n), "vec_id", "embedding",
+        "adc_rt_idx")
+      Similarity.deleteIvfVecsSharded(spark, "adc_rt_idx",
         corpus.filter(col("vec_id") % 7 === 0).select("vec_id"), "vec_id")
-      Similarity.retrainIvfAdcIndex(corpus, "vec_id", "embedding",
-        "adc_rt_idx", nlist = fNlist, dim = 64)
-      Similarity.writeIvfAdcIndex(survivors, "vec_id", "embedding",
-        "adc_rt_ref", nlist = fNlist, dim = 64)
+      Similarity.retrainIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "adc_rt_idx")
+      Similarity.writeIvfAdcIndexSharded(survivors, "vec_id", "embedding",
+        "adc_rt_ref")
       assert(liveRows("adc_rt_idx").nonEmpty &&
         liveRows("adc_rt_idx") == liveRows("adc_rt_ref"))
-      def cents(t: String) = {
-        val e = Similarity.activeAdcEpoch(spark, t)
-        spark.table(t + "_c").filter(col("epoch") === e).orderBy("cell")
-          .select("cell", "cent")
-          .as[(Int, Seq[Double])].collect().toSeq
-      }
+      def cents(t: String) = spark.table(t + "_sv_c")
+        .filter(col("epoch") === AdcKit.epoch(t)).orderBy("cell")
+        .select("cell", "cent")
+        .as[(Int, Seq[Double])].collect().toSeq
       assert(cents("adc_rt_idx") == cents("adc_rt_ref"))
-      assert(!spark.catalog.tableExists("adc_rt_idx_t"),
-        "retrain should consume the tombstone table")
-      assert(spark.table("adc_rt_idx_g").select("gen").as[Long]
+      // the tombstones retire with the epoch flip: none is active
+      assert(spark.table("adc_rt_idx_sv_t")
+        .filter(col("epoch") === AdcKit.epoch("adc_rt_idx")).count() == 0,
+        "retrain should retire the tombstones")
+      assert(spark.table("adc_rt_idx_sv_g").select("gen").as[Long]
         .collect().toSeq == Seq(0L),
         "retrain should reset the generation set")
       val ref = probe("adc_rt_ref")
       assert(ref.nonEmpty && probe("adc_rt_idx") == ref)
       // the next compaction physically reclaims the retired epoch:
       // raw stored rows collapse to exactly the fresh build's
-      Similarity.compactIvfAdcIndex(spark, "adc_rt_idx")
+      Similarity.compactIvfAdcIndexSharded(spark, "adc_rt_idx")
       assert(rawRows("adc_rt_idx") == rawRows("adc_rt_ref"),
         "compaction did not reclaim the retired epoch's rows")
+      assert(!spark.catalog.tableExists("adc_rt_idx_sv_t"))
       assert(probe("adc_rt_idx") == ref)
-    } finally {
-      for (t <- Seq("adc_rt_idx", "adc_rt_ref");
-          sfx <- Seq("", "_c", "_g", "_t", "_cmp", "_g_compact_shadow"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally AdcKit.drop("adc_rt_idx", "adc_rt_ref")
   }
 
   test("retrain atomicity: a writer killed between any two lands leaves probes bit-identical pre-state; the flip window heals to post-state") {
-    // r16 verdict item 2: the pre-r17 retrain was a three-table swap a
-    // crash could leave unhealable (rows packed against centroids that
-    // never landed). Now everything lands INERT under a fresh epoch and
-    // table_g's one swap is THE commit: every pre-commit crash state
-    // probes bit-identical to the old index, the swap window itself
-    // heals on next writer touch, and a retried retrain lands the
-    // fresh-build state without adopting the orphan attempt.
+    // r16 verdict item 2: a multi-table retrain swap could leave the
+    // index unhealable (rows packed against centroids that never
+    // landed). Everything lands INERT under a fresh epoch and `_sv_g`'s
+    // one swap is THE commit: every pre-commit crash state probes
+    // bit-identical to the old index, the swap window itself heals on
+    // next writer touch, and a retried retrain lands the fresh-build
+    // state without adopting the orphan attempt.
     val corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .filter(col("vec_id") < 400)
     val build = corpus.filter(col("vec_id") < 300)
     val queries = corpus.filter(col("vec_id") % 50 === 1)
-    def probe() = Similarity.ivfAdcTopKIndexed(
-        queries, "vec_id", "embedding",
-        k = 3, nprobe = 2, table = "adc_cr_idx", dim = 64)
-      .select("q_id", "nb_id", "rank")
-      .as[(Long, Long, Int)].collect().sorted.toSeq
+    def probe() = AdcKit.probe(queries, "adc_cr_idx")
     try {
-      Similarity.writeIvfAdcIndex(build, "vec_id", "embedding",
-        "adc_cr_idx", nlist = 4, dim = 64)
-      Similarity.appendIvfAdcIndex(corpus.filter(col("vec_id") >= 300),
-        "vec_id", "embedding", "adc_cr_idx", dim = 64)
+      Similarity.writeIvfAdcIndexSharded(build, "vec_id", "embedding",
+        "adc_cr_idx")
+      Similarity.appendIvfAdcIndexSharded(
+        corpus.filter(col("vec_id") >= 300), "vec_id", "embedding",
+        "adc_cr_idx")
       val pre = probe()
       assert(pre.nonEmpty)
       // CRASH STATE A — killed after the centroid land: orphan epoch-1
       // centroids, nothing else. Probes stay on the old epoch.
-      Seq((0, Seq.fill(64)(9.9), 1L), (1, Seq.fill(64)(-9.9), 1L))
-        .toDF("cell", "cent", "epoch")
+      Seq((0, 0, Seq.fill(64)(9.9), 1L), (0, 1, Seq.fill(64)(-9.9), 1L))
+        .toDF("shard", "cell", "cent", "epoch")
         .write.mode("append").bucketBy(1, "cell").sortBy("cell")
-        .saveAsTable("adc_cr_idx_c")
+        .saveAsTable("adc_cr_idx_sv_c")
       assert(probe() == pre, "orphan centroids leaked into the probe")
       // CRASH STATE B — killed after the row land too: orphan epoch-1
       // rows (gen 0 of a NEVER-ACTIVATED epoch). Still invisible.
-      spark.table("adc_cr_idx").limit(50)
+      spark.table("adc_cr_idx_sv").limit(50)
         .withColumn("epoch", lit(1L)).localCheckpoint()
         .write.mode("append")
-        .bucketBy(Similarity.ivfIndexBuckets, "cell").sortBy("cell")
-        .saveAsTable("adc_cr_idx")
-      spark.catalog.refreshTable("adc_cr_idx")
+        .bucketBy(Similarity.ivfIndexBuckets, "gcell").sortBy("gcell")
+        .saveAsTable("adc_cr_idx_sv")
+      spark.catalog.refreshTable("adc_cr_idx_sv")
       assert(probe() == pre, "orphan epoch rows leaked into the probe")
       // the RETRY: allocates PAST the orphan epoch (cannot adopt its
       // half-landed state) and lands the fresh-build probe state
-      Similarity.retrainIvfAdcIndex(corpus, "vec_id", "embedding",
-        "adc_cr_idx", nlist = 4, dim = 64)
-      assert(Similarity.activeAdcEpoch(spark, "adc_cr_idx") == 2L,
+      Similarity.retrainIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "adc_cr_idx")
+      assert(AdcKit.epoch("adc_cr_idx") == 2L,
         "retry adopted the crashed attempt's epoch")
-      Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
-        "adc_cr_ref", nlist = 4, dim = 64)
-      val post = Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-          "embedding", k = 3, nprobe = 2, table = "adc_cr_ref", dim = 64)
-        .select("q_id", "nb_id", "rank")
-        .as[(Long, Long, Int)].collect().sorted.toSeq
+      Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "adc_cr_ref")
+      val post = AdcKit.probe(queries, "adc_cr_ref")
       assert(probe() == post, "retried retrain diverged from fresh build")
-      // CRASH STATE C — killed INSIDE the commit swap (table_g dropped,
+      // CRASH STATE C — killed INSIDE the commit swap (`_sv_g` dropped,
       // shadow complete): the next writer touch heals to POST-state
-      spark.sql("ALTER TABLE adc_cr_idx_g RENAME TO " +
-        "adc_cr_idx_g_compact_shadow")
-      Similarity.appendIvfAdcIndex(corpus.filter(col("vec_id") < 10),
-        "vec_id", "embedding", "adc_cr_idx", dim = 64)
-      assert(spark.catalog.tableExists("adc_cr_idx_g"),
+      spark.sql("ALTER TABLE adc_cr_idx_sv_g RENAME TO " +
+        "adc_cr_idx_sv_g_compact_shadow")
+      Similarity.appendIvfAdcIndexSharded(corpus.filter(col("vec_id") < 10),
+        "vec_id", "embedding", "adc_cr_idx")
+      assert(spark.catalog.tableExists("adc_cr_idx_sv_g"),
         "the flip window did not heal on writer touch")
-      assert(Similarity.activeAdcEpoch(spark, "adc_cr_idx") == 2L)
+      assert(AdcKit.epoch("adc_cr_idx") == 2L)
       // CRASH STATE D — a compactor killed inside the centroid-GC swap
-      // (table_c dropped, its shadow complete): heals on the next read
-      Similarity.compactIvfAdcIndex(spark, "adc_cr_idx")
-      spark.sql("ALTER TABLE adc_cr_idx_c RENAME TO " +
-        "adc_cr_idx_c_compact_shadow")
-      val cents2 = Similarity.readIvfCentroids(spark, "adc_cr_idx")
-      assert(cents2.length == 4 &&
-        spark.catalog.tableExists("adc_cr_idx_c"),
+      // (`_sv_c` dropped, its shadow complete): heals on the next read
+      Similarity.compactIvfAdcIndexSharded(spark, "adc_cr_idx")
+      val compacted = probe()
+      spark.sql("ALTER TABLE adc_cr_idx_sv_c RENAME TO " +
+        "adc_cr_idx_sv_c_compact_shadow")
+      assert(probe() == compacted &&
+        spark.catalog.tableExists("adc_cr_idx_sv_c"),
         "the centroid-GC swap window did not heal on read")
-    } finally {
-      for (t <- Seq("adc_cr_idx", "adc_cr_ref");
-          sfx <- Seq("", "_c", "_g", "_t", "_cmp", "_g_compact_shadow",
-            "_c_compact_shadow"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally AdcKit.drop("adc_cr_idx", "adc_cr_ref")
   }
 
   test("a fresh index build consumes leftover tombstones on all three tiers (a rebuild is never silently pre-deleted)") {
@@ -1182,16 +1130,16 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       .filter(col("doc_id") < 100)
     try {
       // dense tier: live rows must cover the whole corpus post-rebuild
-      val cents = Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "reb_adc", nlist = 4, dim = 64)
-      Similarity.deleteIvfVecs(spark, "reb_adc",
+      val cents = Similarity.writeIvfAdcIndexSharded(vecs, "vec_id",
+        "embedding", "reb_adc")
+      Similarity.deleteIvfVecsSharded(spark, "reb_adc",
         vecs.filter(col("vec_id") % 3 === 0).select("vec_id"), "vec_id")
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "reb_adc", nlist = 4, dim = 64, cents = cents)
-      assert(!spark.catalog.tableExists("reb_adc_t"),
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "reb_adc", cents = cents)
+      assert(!spark.catalog.tableExists("reb_adc_sv_t"),
         "ADC rebuild left the stale tombstone table")
-      assert(Similarity.liveAdcRows(spark, "reb_adc").count() ==
-        vecs.count(), "ADC rebuild silently pre-deleted ids")
+      assert(AdcKit.liveRows("reb_adc").count() == vecs.count(),
+        "ADC rebuild silently pre-deleted ids")
       // lexical tier
       TextAnalysis.writeBm25Index(docs, "doc_id", "text", "reb_bm")
       TextAnalysis.deleteBm25Docs(spark, "reb_bm",
@@ -1207,56 +1155,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       assert(!spark.catalog.tableExists("reb_mh_t"),
         "minhash rebuild left the stale tombstone table")
     } finally {
-      for (t <- Seq("reb_adc", "reb_bm", "reb_mh");
-          sfx <- Seq("", "_c", "_g", "_s", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
-  }
-
-  test("maybeRetrainIvfAdcIndex: the drift gate drives the retrain — no-op above the floor, fresh-build state below it") {
-    // the dense tier's policy analog of maybeCompact: the recall audit
-    // (qc3's gate) is the trigger, the qe3 retrain the consumer. Above
-    // the floor the index is untouched (drifted state and all); below
-    // it the retrain leaves exactly the fresh-build state.
-    val corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val n = corpus.count()
-    val build = corpus.filter(col("vec_id") * 2 < n)
-    val (bNlist, bNprobe) = Similarity.ivfParams(build.count())
-    val queries = corpus.filter(col("vec_id") % 100 === 1)
-    def stored() = spark.table("adc_pol_idx")
-      .select(col("cell"), col("id"), hex(col("qc")), col("gen"))
-      .as[(Int, Long, String, Long)].collect().sorted.toSeq
-    try {
-      Similarity.writeIvfAdcIndex(build, "vec_id", "embedding",
-        "adc_pol_idx", nlist = bNlist, dim = 64)
-      Similarity.appendIvfAdcIndex(
-        corpus.filter(col("vec_id") * 2 >= n), "vec_id", "embedding",
-        "adc_pol_idx", dim = 64)
-      val drifted = stored()
-      // a floor below the measured recall: policy must NOT touch it
-      val (r1, ran1) = Similarity.maybeRetrainIvfAdcIndex(corpus,
-        queries, "vec_id", "embedding", "adc_pol_idx", k = 3,
-        nprobe = bNprobe, nlist = bNlist, minRecall = 0.0)
-      assert(!ran1 && r1 >= 0.0 && r1 <= 1.0)
-      assert(stored() == drifted, "no-op policy changed the index")
-      // a floor above it: retrain fires and lands fresh-build state
-      val (fNlist, _) = Similarity.ivfParams(n)
-      val (r2, ran2) = Similarity.maybeRetrainIvfAdcIndex(corpus,
-        queries, "vec_id", "embedding", "adc_pol_idx", k = 3,
-        nprobe = bNprobe, nlist = fNlist, minRecall = 1.0)
-      assert(ran2 && r2 == r1,
-        "the audit's measurement changed between policy calls")
-      Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
-        "adc_pol_ref", nlist = fNlist, dim = 64)
-      def liveRows(t: String) = Similarity.liveAdcRows(spark, t)
-        .select(col("cell"), col("id"), hex(col("qc")), col("gen"))
-        .as[(Int, Long, String, Long)].collect().sorted.toSeq
-      assert(liveRows("adc_pol_idx").nonEmpty &&
-        liveRows("adc_pol_idx") == liveRows("adc_pol_ref"),
-        "policy retrain diverged from the fresh build")
-    } finally {
-      for (t <- Seq("adc_pol_idx", "adc_pol_ref");
-          sfx <- Seq("", "_c", "_g", "_t", "_g_compact_shadow"))
+      AdcKit.drop("reb_adc")
+      for (t <- Seq("reb_bm", "reb_mh"); sfx <- Seq("", "_s", "_t"))
         spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
     }
   }
@@ -1275,32 +1175,23 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val a = corpus.filter(col("vec_id") >= 100 && col("vec_id") < 200)
     val b = corpus.filter(col("vec_id") >= 200)
     val queries = corpus.filter(col("vec_id") % 50 === 0)
-    def probe(t: String) = Similarity.ivfAdcTopKIndexed(
-        queries, "vec_id", "embedding",
-        k = 3, nprobe = 2, table = t, dim = 64)
-      .select("q_id", "nb_id", "rank")
-      .as[(Long, Long, Int)].collect().sorted.toSeq
     try {
-      val cents = Similarity.writeIvfAdcIndex(build, "vec_id",
-        "embedding", "adc_ilv_idx", nlist = 4, dim = 64)
+      val cents = Similarity.writeIvfAdcIndexSharded(build, "vec_id",
+        "embedding", "adc_ilv_idx")
       val (genA, genB) = (7001L, 7002L)
       // writer A rows, writer B rows, B commits, then A commits
-      val epA = Similarity.appendAdcRowsOnly(a, "vec_id", "embedding",
-        "adc_ilv_idx", genA)
-      val epB = Similarity.appendAdcRowsOnly(b, "vec_id", "embedding",
-        "adc_ilv_idx", genB)
-      Similarity.commitAdcGen(spark, "adc_ilv_idx", genB, epB)
-      Similarity.commitAdcGen(spark, "adc_ilv_idx", genA, epA)
-      Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
-        "adc_ilv_ref", nlist = 4, dim = 64, cents = cents)
-      val ref = probe("adc_ilv_ref")
-      assert(ref.nonEmpty && probe("adc_ilv_idx") == ref,
+      val stA = Similarity.svState(spark, "adc_ilv_idx", fresh = true)
+      Similarity.svAppendRowsOnly(a, "vec_id", "embedding", stA, genA)
+      val stB = Similarity.svState(spark, "adc_ilv_idx", fresh = true)
+      Similarity.svAppendRowsOnly(b, "vec_id", "embedding", stB, genB)
+      Similarity.svCommitGen(spark, stB, genB)
+      Similarity.svCommitGen(spark, stA, genA)
+      Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "adc_ilv_ref", cents = cents)
+      val ref = AdcKit.probe(queries, "adc_ilv_ref")
+      assert(ref.nonEmpty && AdcKit.probe(queries, "adc_ilv_idx") == ref,
         "interleaved appends diverged from the one-shot build")
-    } finally {
-      for (t <- Seq("adc_ilv_idx", "adc_ilv_ref");
-          sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally AdcKit.drop("adc_ilv_idx", "adc_ilv_ref")
   }
 
   test("tuneNprobe: recall-gated absolute nprobe meets the target with fewer probed cells than the fraction law on clustered vectors") {
@@ -1319,63 +1210,50 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       " - 0.3d ELSE 0.0d END as float))").as("embedding"))
     val queries = vecs.filter(col("vec_id") % 40 === 0) // 20 queries
     val (nlist, fracNp) = Similarity.ivfParams(n.toLong)
+    val groups = math.ceil(math.sqrt(nlist.toDouble)).toInt
     val target = 0.8
     try {
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "adc_tune_idx", nlist = nlist, dim = 64)
-      val (np, recall) = Similarity.tuneNprobe(vecs, queries, "vec_id",
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "adc_tune_idx")
+      val Seq(dl) = Similarity.tuneShardDials(queries, "vec_id",
         "embedding", k = 3, "adc_tune_idx", targetRecall = target)
+      val (np, recall) = (dl.nprobe, dl.probeRecall)
       assert(recall >= target, s"tuned recall $recall below $target")
       assert(np < fracNp,
         s"tuned nprobe $np not below the fraction law's $fracNp " +
           s"(nlist=$nlist) — no clustered-data win")
+      // the reference is the quantizer CEILING: every cell probed
+      // (targetRecall 1.0 puts the fraction law at nprobe = nlist)
+      val ceiling = Similarity.ivfAdcTopKIndexedSharded(queries, "vec_id",
+        "embedding", k = 3, "adc_tune_idx", targetRecall = 1.0)
+      // the flat probe at a hand nprobe: the two-level kernel at full
+      // group coverage selects exactly the flat kernel's cells
+      def auditAt(p: Int): Double = AdcKit.recall(
+        Similarity.ivfAdcTopKIndexedShardedTuned(queries, "vec_id",
+          "embedding", k = 3, "adc_tune_idx",
+          Seq(Similarity.ShardDials(p, 0.0, groups, 0.0))),
+        ceiling)
       // the returned recall is the independent audit's number at np —
-      // the tuner reports measurements, not estimates
-      def auditAt(p: Int): Double = Similarity.recallAuditIndexed(
-          vecs, queries, "vec_id", "embedding", 3, p, "adc_tune_idx")
-        .agg(avg("recall")).head().getDouble(0)
-      // tolerance: the per-query recalls are bit-identical; only the
-      // MEAN's summation order differs (the tuner averages over a
-      // localCheckpointed exact leg with its own partitioning)
+      // the tuner reports measurements, not estimates (tolerance: the
+      // mean's summation order differs)
       assert(math.abs(auditAt(np) - recall) < 1e-9,
-        "tuneNprobe's recall disagrees with recallAuditIndexed at np")
+        "tuneShardDials' recall disagrees with the audit at np")
       // minimality up to the binary search's invariant: the cell count
       // one below the returned dial measured UNDER the target
       if (np > 1)
         assert(auditAt(np - 1) < target,
           s"np-1=${np - 1} already meets the target — not minimal")
-      // the quantizer-ceiling reference: adcFullTopK's window rank is
-      // bit-equal to the collect rank's pairs at nprobe = nlist (the
-      // spill-safe twin loses nothing)...
-      val full = Similarity.adcFullTopK(queries, "vec_id", "embedding",
-        k = 3, "adc_tune_idx")
-        .as[(Long, Long)].collect().toSet
-      val flat = Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-          "embedding", k = 3, nprobe = nlist, table = "adc_tune_idx",
-          dim = 64)
-        .select("q_id", "nb_id").as[(Long, Long)].collect().toSet
-      assert(full == flat,
-        "adcFullTopK diverged from the exhaustive flat probe")
-      // ...and tuning AGAINST it dials pure probing loss: recall 1.0
-      // is reachable by construction, and the tuned dial stays at or
-      // under the end-to-end one (same candidates, ceiling reference)
-      val (npRef, recRef) = Similarity.tuneNprobe(vecs, queries,
-        "vec_id", "embedding", k = 3, "adc_tune_idx",
-        targetRecall = target, reference = Similarity.adcFullTopK(
-          queries, "vec_id", "embedding", k = 3, "adc_tune_idx"))
-      assert(recRef >= target && npRef < fracNp,
-        s"ceiling-referenced tune (np=$npRef, recall=$recRef) did not " +
-          s"meet the gate under the fraction law's $fracNp")
-    } finally {
-      for (sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS adc_tune_idx$sfx")
-    }
+      // tuning against the ceiling dials pure probing loss: recall 1.0
+      // is reachable by construction at nprobe = nlist
+      assert(auditAt(nlist) == 1.0,
+        "the exhaustive flat probe diverged from the quantizer ceiling")
+    } finally AdcKit.drop("adc_tune_idx")
   }
 
   test("sharded ADC index: one shard equals the single table; append/delete/compact delegate per shard and lose nothing") {
     // r17 verdict item 3. Gates: (a) nShards=1 is bit-identical to the
-    // unsharded probe (the fan-out/merge adds nothing at the
-    // degenerate point); (b) appends route by the shard law and become
+    // live ADC tier over the same quantizer (the persisted index loses
+    // nothing — q99 shares q89's oracle); (b) appends route by the shard law and become
     // visible; (c) deletes route and disappear; (d) compaction leaves
     // the probe bit-identical while collapsing generations per shard.
     // The N>1 fan-out/merge itself is oracle-gated (qg1).
@@ -1391,17 +1269,18 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       .select("q_id", "nb_id", "rank").as[(Long, Long, Int)]
       .collect().sorted.toSeq
     try {
-      // (a) degenerate point: nShards = 1 == the plain indexed probe
-      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
-        "shrd1_idx", nShards = 1, dim = 64)
-      val (_, np) = Similarity.ivfParams(600L)
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "shrd_ref", nlist = Similarity.ivfParams(600L)._1, dim = 64)
+      // (a) degenerate point: nShards = 1 == the live ADC tier at the
+      // same quantizer, restricted to the query ids (per-query ranking
+      // is independent of the query set)
+      val Seq(cents) = Similarity.writeIvfAdcIndexSharded(vecs, "vec_id",
+        "embedding", "shrd1_idx", nShards = 1, dim = 64)
+      val (nlist, np) = Similarity.ivfParams(600L)
       assert(rows(Similarity.ivfAdcTopKIndexedSharded(queries, "vec_id",
           "embedding", k = 3, "shrd1_idx")) ==
-        rows(Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-          "embedding", k = 3, nprobe = np, table = "shrd_ref")),
-        "nShards=1 diverged from the single-table probe")
+        rows(Similarity.ivfAdcTopK(vecs, "vec_id", "embedding", k = 3,
+            nlist = nlist, nprobe = np, cents = cents)
+          .filter(col("q_id") % 30 === 0)),
+        "nShards=1 diverged from the live ADC tier")
       // (b) lifecycle at nShards = 3: build on the first 400, append
       // the rest — appended ids must be probe-visible in their shards
       Similarity.writeIvfAdcIndexSharded(first, "vec_id", "embedding",
@@ -1435,11 +1314,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
           .count() == 0L,
         "shrd3_idx_sv still physically holds deleted rows")
     } finally {
-      for (t <- Seq("shrd1_idx_sv", "shrd3_idx_sv", "shrd_ref");
-          sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-      spark.sql("DROP TABLE IF EXISTS shrd1_idx_sh")
-      spark.sql("DROP TABLE IF EXISTS shrd3_idx_sh")
+      AdcKit.drop("shrd1_idx", "shrd3_idx")
     }
   }
 
@@ -1685,10 +1560,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // r18 verdict item 1: sharding (the horizontal 100 TB dial) and
     // the tuned/hier probe (the serving dial) were mutually exclusive
     // — the fan-out re-inherited the fraction law's linear candidates.
-    // Gates: (a) tuneShardDials at nShards=1 returns the single-table
-    // tuners' own dials (same audit discipline, same index state);
-    // (b) the tuned sharded probe at nShards=1 is BIT-EQUAL to
-    // ivfAdcTopKIndexedHier on an identical single-table index;
+    // Gates: (a) tuneShardDials at nShards=1 meets its gate under the
+    // fraction law's dial; (b) the tuned probe at nShards=1 with full
+    // group coverage is BIT-EQUAL to the fraction-law flat probe at
+    // the same nprobe (the two-level kernel loses nothing);
     // (c) at N>1 shards the tuned fan-out's output agrees with the
     // oracle-shaped fraction-law fan-out on the gated clustered
     // geometry; (d) a dial/shard-count mismatch fails loudly.
@@ -1704,38 +1579,29 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       .select("q_id", "nb_id", "rank").as[(Long, Long, Int)]
       .collect().sorted.toSeq
     try {
-      // nShards=1 and the explicit single-table build share the
-      // quantizer by construction (same corpus, same ivfParams nlist,
-      // same deterministic training sample and init)
       Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
         "shtn1_idx", nShards = 1, dim = 64)
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "shtn_ref", nlist = Similarity.ivfParams(n.toLong)._1, dim = 64)
       val dials = Similarity.tuneShardDials(queries, "vec_id",
         "embedding", k = 3, "shtn1_idx", targetRecall = target)
       assert(dials.length == 1)
-      // (a) the same dials the single-table tuners derive under the
-      // per-shard tuner's discipline: BOTH dials end-to-end against
-      // the quantizer ceiling (flat-probe-referenced gprobe gates
-      // would compound, tuneShardDials doc)
-      val ceiling = Similarity.adcFullTopK(queries, "vec_id",
-        "embedding", k = 3, "shtn_ref")
-      val (np, _) = Similarity.tuneNprobe(queries, queries, "vec_id",
-        "embedding", k = 3, "shtn_ref", targetRecall = target,
-        reference = ceiling)
-      val (gp, _) = Similarity.tuneGprobe(queries, queries, "vec_id",
-        "embedding", k = 3, nprobe = np, "shtn_ref",
-        targetRecall = target, reference = ceiling)
-      assert(dials.head.nprobe == np && dials.head.gprobe == gp,
-        s"per-shard dials ${dials.head} diverged from the " +
-          s"single-table tuners' (np=$np, gp=$gp)")
-      // (b) degenerate fan-out is the single-table hier probe, bit-equal
+      // (a) both dials meet the gate against the quantizer ceiling
+      // (flat-probe-referenced gprobe gates would compound,
+      // tuneShardDials doc), under the fraction law's nprobe
+      val (nlist, fracNp) = Similarity.ivfParams(n.toLong)
+      val groups = math.ceil(math.sqrt(nlist.toDouble)).toInt
+      assert(dials.head.probeRecall >= target &&
+        dials.head.hierRecall >= target && dials.head.nprobe <= fracNp,
+        s"nShards=1 dials ${dials.head} missed the gate (fraction law " +
+          s"np=$fracNp)")
+      // (b) full group coverage at the fraction-law nprobe is the flat
+      // fraction-law probe, bit-equal
       assert(rows(Similarity.ivfAdcTopKIndexedShardedTuned(queries,
-          "vec_id", "embedding", k = 3, "shtn1_idx", dials)) ==
-        rows(Similarity.ivfAdcTopKIndexedHier(queries, "vec_id",
-          "embedding", k = 3, nprobe = np, gprobe = gp, "shtn_ref",
-          dim = 64)),
-        "nShards=1 tuned diverged from the single-table hier probe")
+          "vec_id", "embedding", k = 3, "shtn1_idx",
+          Seq(Similarity.ShardDials(fracNp, 0.0, groups, 0.0)))) ==
+        rows(Similarity.ivfAdcTopKIndexedSharded(queries, "vec_id",
+          "embedding", k = 3, "shtn1_idx")),
+        "nShards=1 two-level probe at full coverage diverged from the " +
+          "flat probe")
       // (c) N=4: every shard tunes against its own audit and the
       // merged tuned output tracks the fraction-law fan-out (the
       // qshard_tuned GrowthBench agreement gate, here at spec scale)
@@ -1789,12 +1655,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
           "embedding", k = 3, "shtn4_idx")
       }
     } finally {
-      for (t <- Seq("shtn1_idx_sv", "shtn4_idx_sv", "shtn_ref");
-          sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-      for (t <- Seq("shtn1_idx_sh", "shtn4_idx_sh", "shtn4_idx_serve",
-          "shtn4_idx_serve_compact_shadow"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
+      AdcKit.drop("shtn1_idx", "shtn4_idx")
     }
   }
 
@@ -1965,72 +1826,25 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // ADVICE r20 (low): writeIvfAdcIndexSharded swept every catalog
     // name matching `<table>(_r<g>)?_sv(...)` unconditionally, so
     // building a sharded index named `foo` silently DROPPED an
-    // unrelated single-table index legitimately named `foo_sv`
-    // (requireShardableName reserves the grammar only among SHARDED
-    // names). The sweep is now conditional on the `_sh` sidecar;
-    // without one the build refuses loudly and the collider survives.
+    // unrelated table legitimately named `foo_sv` (requireShardableName
+    // reserves the grammar only among index names). The sweep is now
+    // conditional on the `_sh` sidecar; without one the build refuses
+    // loudly and the collider survives.
     val vecs = spark.range(200).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
       "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d as float))")
       .as("embedding"))
     try {
-      val (nlist, nprobe) = Similarity.ivfParams(200)
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "swp_sv", nlist = nlist, dim = 64)
+      vecs.write.saveAsTable("swp_sv")
       val ex = intercept[IllegalArgumentException] {
         Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
           "swp", nShards = 2, dim = 64)
       }
       assert(ex.getMessage.contains("swp_sv"), ex.getMessage)
-      // the single-table index survived intact and still probes
-      assert(spark.catalog.tableExists("swp_sv"))
-      assert(Similarity.ivfAdcTopKIndexed(
-        vecs.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-        k = 3, nprobe = nprobe, table = "swp_sv", dim = 64)
-        .count() > 0)
-    } finally {
-      for (t <- Seq("swp_sv", "swp_sv_c", "swp_sv_g", "swp_sv_t",
-          "swp_sh"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
-  }
-
-  test("the _serve sidecar refuses cross-tier writes: single-table over sharded rows and sharded over a single-table decision both fail loudly") {
-    // r19 verdict item 6 (audit note 4): writeServingDecision and the
-    // sharded writeShardServing share the `<table>_serve` name with
-    // different schemas — in correct use they can never collide, but a
-    // misuse should refuse at the WRITER, not fail on column selection
-    // at some later read.
-    val vecs = spark.range(200).select(col("id").as("vec_id"), expr(
-      "transform(sequence(0, 63), i -> cast(" +
-      "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d as float))")
-      .as("embedding"))
-    try {
-      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
-        "xw_sh_idx", nShards = 2, dim = 64)
-      Similarity.writeShardDials(spark, "xw_sh_idx",
-        Seq(Similarity.ShardDials(1, 0.9, 1, 0.9),
-          Similarity.ShardDials(1, 0.9, 1, 0.9)))
-      intercept[IllegalArgumentException] {
-        Similarity.writeServingDecision(spark, "xw_sh_idx",
-          Similarity.ProbeServing(1, 0.9))
-      }
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "xw_st_idx", nlist = 4, dim = 64)
-      Similarity.writeServingDecision(spark, "xw_st_idx",
-        Similarity.ProbeServing(1, 0.9))
-      intercept[IllegalArgumentException] {
-        Similarity.writeShardServing(spark, "xw_st_idx",
-          Seq(Similarity.ShardServing("probe",
-            Similarity.ShardDials(1, 0.9, 1, 0.9), 0, 0.9)))
-      }
-    } finally {
-      for (t <- Seq("xw_sh_idx_sv", "xw_st_idx");
-          sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-      for (t <- Seq("xw_sh_idx_sh", "xw_sh_idx_serve", "xw_st_idx_serve"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+      // the unrelated table survived intact
+      assert(spark.catalog.tableExists("swp_sv") &&
+        spark.table("swp_sv").count() == 200L)
+    } finally AdcKit.drop("swp")
   }
 
   /** Float-exact MIPS top-k as a (q_id, nb_id)-shaped reference — the
@@ -2054,80 +1868,73 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
   }
 
   test("persisted serving decision: stored dials round-trip, a retrain refuses them stale, and the stacks serve from the store with no hand dials") {
-    // r18 verdict item 3: tuneServing's decision previously lived only
+    // r18 verdict item 3: the serving decision previously lived only
     // in the caller — every serving session re-paid the exact leg.
-    // Gates: (a) tuneServingPersist's decision reads back exactly;
-    // (b) qb7TunedStored == qb7Tuned at the stored dials (the stack
-    // takes NO hand dials and runs NO exact leg); (c) a retrain flips
-    // the quantizer state and the stored decision is refused stale —
-    // loudly at the stack; (d) a re-tune re-populates; (e) the rerank
-    // mode round-trips through the same store.
+    // Gates: (a) tuneShardServingPersist's decision reads back exactly;
+    // (b) qb7TunedStored == the qb7 stack with the tuned probe at the
+    // stored dials (the stack takes NO hand dials and runs NO exact
+    // leg); (c) a retrain flips the quantizer state and the stored
+    // decision is refused stale — loudly at the stack; (d) a re-tune
+    // re-populates; (e) the rerank mode round-trips through the same
+    // store.
     val clustered = spark.range(800).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
       "pmod(hash(pmod(id, 16), 17, i), 2000) / 1000.0d - 1.0d" +
       " + CASE WHEN i < 4 THEN pmod(hash(id, 23, i), 600) / 1000.0d" +
       " - 0.3d ELSE 0.0d END as float))").as("embedding"))
     val panel = clustered.filter(col("vec_id") % 40 === 0)
-    val (nlist, _) = Similarity.ivfParams(800L)
     val d = "/root/testdata/sf0.001"
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     try {
-      Similarity.writeIvfAdcIndex(clustered, "vec_id", "embedding",
-        "srvst_idx", nlist = nlist, dim = 64)
-      // (a) tune + persist, with a separately tuned two-level dial
-      val serving = Similarity.tuneServingPersist(clustered, panel,
+      Similarity.writeIvfAdcIndexSharded(clustered, "vec_id", "embedding",
+        "srvst_idx")
+      // (a) tune + persist
+      val serving = Similarity.tuneShardServingPersist(clustered, panel,
         "vec_id", "embedding", k = 3, "srvst_idx", targetRecall = 0.8)
-      assert(serving.isInstanceOf[Similarity.ProbeServing],
+      assert(serving.map(_.mode) == Seq("probe"),
         s"mode-growth geometry escalated unexpectedly: $serving")
-      val (gp, _) = Similarity.tuneGprobe(clustered, panel, "vec_id",
-        "embedding", k = 3, nprobe = serving.nprobe, "srvst_idx",
-        targetRecall = 0.8,
-        reference = Similarity.adcFullTopK(panel, "vec_id",
-          "embedding", k = 3, "srvst_idx"))
-      Similarity.writeServingDecision(spark, "srvst_idx", serving, gp)
-      val read = Similarity.readServingDecision(spark, "srvst_idx")
-      assert(read.contains((serving, gp)),
-        s"stored decision $read != tuned ($serving, $gp)")
+      val read = Similarity.readShardServing(spark, "srvst_idx")
+      assert(read.contains(serving),
+        s"stored decision $read != tuned $serving")
       // (b) the stack serves from the store — bit-identical to the
       // hand-dialed twin at the same dials
       assert(rows(graft.RelationalQueries.qb7TunedStored(spark, d,
           "srvst_idx")) ==
-        rows(graft.RelationalQueries.qb7Tuned(spark, d, "srvst_idx",
-          serving.nprobe, gp)),
+        rows(graft.RelationalQueries.qb7Stack(spark, d, (q, k) =>
+          Similarity.ivfAdcTopKIndexedShardedTuned(q, "vec_id",
+            "embedding", k, "srvst_idx", serving.map(_.dials)))),
         "stored-decision stack diverged from the hand-dialed twin")
       // (c) a retrain invalidates: state key changes, read refuses,
       // the stack fails loudly instead of serving stale dials
-      Similarity.retrainIvfAdcIndex(clustered, "vec_id", "embedding",
-        "srvst_idx", nlist = nlist, dim = 64)
-      assert(Similarity.readServingDecision(spark, "srvst_idx").isEmpty,
+      Similarity.retrainIvfAdcIndexSharded(clustered, "vec_id",
+        "embedding", "srvst_idx")
+      assert(Similarity.readShardServing(spark, "srvst_idx").isEmpty,
         "stale decision served after a retrain")
       intercept[IllegalStateException] {
         graft.RelationalQueries.qb7TunedStored(spark, d, "srvst_idx")
       }
       // (d) re-tune re-populates against the new quantizer state
-      Similarity.tuneServingPersist(clustered, panel, "vec_id",
+      Similarity.tuneShardServingPersist(clustered, panel, "vec_id",
         "embedding", k = 3, "srvst_idx", targetRecall = 0.8)
-      assert(Similarity.readServingDecision(spark, "srvst_idx").isDefined,
+      assert(Similarity.readShardServing(spark, "srvst_idx").isDefined,
         "re-tune did not re-populate the store")
       // (e) the escalated mode round-trips through the same store
-      val rr = Similarity.RerankServing(2, 9, 0.9)
-      Similarity.writeServingDecision(spark, "srvst_idx", rr)
-      assert(Similarity.readServingDecision(spark, "srvst_idx")
-        .contains((rr, 0)), "rerank mode did not round-trip")
-    } finally {
-      for (sfx <- Seq("", "_c", "_g", "_t", "_serve"))
-        spark.sql(s"DROP TABLE IF EXISTS srvst_idx$sfx")
-    }
+      val rr = Seq(Similarity.ShardServing("rerank",
+        Similarity.ShardDials(2, 0.5, 0, 0.0), depth = 9, recall = 0.9))
+      Similarity.writeShardServing(spark, "srvst_idx", rr)
+      assert(Similarity.readShardServing(spark, "srvst_idx").contains(rr),
+        "rerank mode did not round-trip")
+    } finally AdcKit.drop("srvst_idx")
   }
 
   test("tuneServing: probe-only on mode-growth clusters; the probe plateau escalates to a tuned re-rank in the density regime") {
-    // r17 verdict item 2: tuneNprobe's plateau cutoff DETECTED the
+    // r17 verdict item 2: the probe tuner's plateau cutoff DETECTED the
     // density regime (loss probing cannot fix) but the operator was
-    // told "re-rank territory" in prose. tuneServing is the policy:
-    // dial meets the gate -> ProbeServing; dial plateaus below it ->
-    // RerankServing whose measured recall reaches the gate, priced by
-    // its tuned depth.
+    // told "re-rank territory" in prose. The serving policy
+    // (tuneShardServing, here at nShards = 1): dial meets the gate ->
+    // probe mode; dial plateaus below it -> rerank mode whose measured
+    // recall reaches the gate, priced by its tuned depth.
     val target = 0.8
     // (a) the mode-growth geometry (the tuneNprobe spec's corpus):
     // within-cluster margins well above the int8 noise floor — probing
@@ -2148,50 +1955,53 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       " + pmod(hash(id, 29, i), 200) / 1000000.0d as float))")
       .as("embedding"))
     try {
-      Similarity.writeIvfAdcIndex(clustered, "vec_id", "embedding",
-        "srv_cl_idx", nlist = Similarity.ivfParams(800L)._1, dim = 64)
-      Similarity.tuneServing(clustered,
+      Similarity.writeIvfAdcIndexSharded(clustered, "vec_id", "embedding",
+        "srv_cl_idx")
+      Similarity.tuneShardServing(clustered,
           clustered.filter(col("vec_id") % 40 === 0), "vec_id",
           "embedding", k = 3, "srv_cl_idx", targetRecall = target) match {
-        case Similarity.ProbeServing(np, rec) =>
-          assert(rec >= target, s"probe-only recall $rec below $target")
-          assert(np >= 1 && np <= Similarity.ivfParams(800L)._1)
+        case Seq(sv) if sv.mode == "probe" =>
+          assert(sv.recall >= target,
+            s"probe-only recall ${sv.recall} below $target")
+          assert(sv.dials.nprobe >= 1 &&
+            sv.dials.nprobe <= Similarity.ivfParams(800L)._1)
         case other => fail(
           s"clustered corpus escalated needlessly: $other")
       }
-      Similarity.writeIvfAdcIndex(dense, "vec_id", "embedding",
-        "srv_dn_idx", nlist = Similarity.ivfParams(400L)._1, dim = 64)
-      Similarity.tuneServing(dense,
-          dense.filter(col("vec_id") % 20 === 0), "vec_id",
+      Similarity.writeIvfAdcIndexSharded(dense, "vec_id", "embedding",
+        "srv_dn_idx")
+      val dnPanel = dense.filter(col("vec_id") % 20 === 0)
+      Similarity.tuneShardServing(dense, dnPanel, "vec_id",
           "embedding", k = 3, "srv_dn_idx", targetRecall = target) match {
-        case Similarity.RerankServing(np, depth, rec) =>
+        case Seq(sv) if sv.mode == "rerank" =>
+          val (np, depth, rec) = (sv.dials.nprobe, sv.depth, sv.recall)
           assert(rec >= target,
             s"escalated path still below the gate: recall $rec at " +
               s"depth $depth (np=$np)")
           assert(depth > 3 && depth <= 32 * 3,
             s"depth $depth outside the tuned range")
-          // the decision is honest: the probe path alone really is
-          // deficient at the plateaued dial
-          val probeOnly = Similarity.recallAuditIndexed(dense,
-              dense.filter(col("vec_id") % 20 === 0), "vec_id",
-              "embedding", 3, np, "srv_dn_idx")
-            .agg(avg("recall")).head().getDouble(0)
+          // the decision is honest: the flat probe alone really is
+          // deficient at the plateaued dial (the two-level kernel at
+          // full group coverage is the flat kernel)
+          val groups = math.ceil(
+            math.sqrt(Similarity.ivfParams(400L)._1.toDouble)).toInt
+          val probeOnly = AdcKit.recall(
+            Similarity.ivfAdcTopKIndexedShardedTuned(dnPanel, "vec_id",
+              "embedding", k = 3, "srv_dn_idx",
+              Seq(Similarity.ShardDials(np, 0.0, groups, 0.0))),
+            exactMips(dense, dnPanel))
           assert(probeOnly < target,
             s"probe-only recall $probeOnly met the target — the " +
               "escalation was unnecessary and the corpus is vacuous")
         case other => fail(
           s"density corpus did not escalate: $other")
       }
-    } finally {
-      for (t <- Seq("srv_cl_idx", "srv_dn_idx");
-          sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally AdcKit.drop("srv_cl_idx", "srv_dn_idx")
   }
 
   test("a same-name index REBUILD invalidates the memoized quantizer broadcast — probes rank against the new quantizer") {
     // the probe expressions ride a broadcast memoized per (table,
-    // epoch); a rebuild restarts epochs at 0, so without explicit
+    // epochs); a rebuild restarts epochs at 0, so without explicit
     // invalidation a warm process would silently probe the OLD
     // quantizer. Two corpora with different cluster layouts at the
     // same table name must probe like their own fresh builds.
@@ -2206,43 +2016,31 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       " + pmod(hash(id, 43, i), 100) / 1000.0d - 0.05d as float))")
       .as("embedding"))
     val queries = b.filter(col("vec_id") % 30 === 0)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("q_id", "nb_id", "rank").as[(Long, Long, Int)]
-      .collect().sorted.toSeq
     try {
-      Similarity.writeIvfAdcIndex(a, "vec_id", "embedding",
-        "adc_rbld_idx", nlist = 10, dim = 64)
-      // warm the (table, epoch) memo on corpus A's quantizer
-      Similarity.ivfAdcTopKIndexed(queries, "vec_id", "embedding",
-        k = 3, nprobe = 2, table = "adc_rbld_idx", dim = 64).count()
+      Similarity.writeIvfAdcIndexSharded(a, "vec_id", "embedding",
+        "adc_rbld_idx")
+      // warm the memo on corpus A's quantizer
+      AdcKit.probe(queries, "adc_rbld_idx")
       // REBUILD at the same name over corpus B
-      Similarity.writeIvfAdcIndex(b, "vec_id", "embedding",
-        "adc_rbld_idx", nlist = 10, dim = 64)
-      Similarity.writeIvfAdcIndex(b, "vec_id", "embedding",
-        "adc_rbld_ref", nlist = 10, dim = 64)
-      val got = rows(Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-        "embedding", k = 3, nprobe = 2, table = "adc_rbld_idx",
-        dim = 64))
-      val ref = rows(Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-        "embedding", k = 3, nprobe = 2, table = "adc_rbld_ref",
-        dim = 64))
+      Similarity.writeIvfAdcIndexSharded(b, "vec_id", "embedding",
+        "adc_rbld_idx")
+      Similarity.writeIvfAdcIndexSharded(b, "vec_id", "embedding",
+        "adc_rbld_ref")
+      val got = AdcKit.probe(queries, "adc_rbld_idx")
+      val ref = AdcKit.probe(queries, "adc_rbld_ref")
       assert(ref.nonEmpty && got == ref,
         "rebuilt index probed against a stale memoized quantizer")
-    } finally {
-      for (t <- Seq("adc_rbld_idx", "adc_rbld_ref");
-          sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally AdcKit.drop("adc_rbld_idx", "adc_rbld_ref")
   }
 
   test("quantizer state-key TTL cache: a warm cache hides a rebuild only until the next invalidation point — hook or expiry") {
     // r17 verdict item 5: graft.adc.quantKeyTtlMs > 0 serves the
-    // centroid-file listing from a cache so a high-QPS serving loop
-    // stops paying a catalog refresh + listing per plan. The documented
-    // trade is that a foreign same-epoch rebuild is seen only at the
-    // next invalidation point; this pins BOTH halves — the staleness
-    // window exists (the cache is real), and both invalidation points
-    // (explicit hook, TTL expiry) end it.
+    // protocol state and the centroid-file listing from caches so a
+    // high-QPS serving loop stops paying sidecar reads + a listing per
+    // plan. The documented trade is that a foreign same-epoch rebuild
+    // is seen only at the next invalidation point; this pins BOTH
+    // halves — the staleness window exists (the cache is real), and
+    // both invalidation points (explicit hook, TTL expiry) end it.
     val a = spark.range(300).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
       "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d" +
@@ -2254,31 +2052,27 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       " + pmod(hash(id, 43, i), 100) / 1000.0d - 0.05d as float))")
       .as("embedding"))
     val queries = b.filter(col("vec_id") % 30 === 0)
-    def rows(table: String) = Similarity.ivfAdcTopKIndexed(queries,
-        "vec_id", "embedding", k = 3, nprobe = 2, table = table,
-        dim = 64)
-      .select("q_id", "nb_id", "rank").as[(Long, Long, Int)]
-      .collect().sorted.toSeq
+    def rows(table: String) = AdcKit.probe(queries, table)
     // a FOREIGN rebuild: another process drops and rebuilds the index
     // at the same name — our catalog sees new tables/files at the same
-    // epoch number, but OUR memos are untouched (writeIvfAdcIndex in
-    // this process clears them, which is why an in-process rebuild is
+    // epoch numbers, but OUR caches are untouched (a build in this
+    // process clears them, which is why an in-process rebuild is
     // always detected; the cache trade only exists for foreign ones).
-    // Simulated by swapping the three tables' contents through the
-    // catalog without the write path.
+    // Simulated by swapping the tables' contents through the catalog
+    // without the write path.
     def foreignSwapFrom(src: String): Unit =
-      for (sfx <- Seq("", "_c", "_g")) {
+      for (sfx <- Seq("_sv", "_sv_c", "_sv_g")) {
         val staged = spark.table(src + sfx).localCheckpoint()
         spark.sql(s"DROP TABLE IF EXISTS adc_ttl_idx$sfx")
         staged.write.saveAsTable("adc_ttl_idx" + sfx)
       }
     try {
-      Similarity.writeIvfAdcIndex(a, "vec_id", "embedding",
-        "adc_ttl_idx", nlist = 10, dim = 64)
+      Similarity.writeIvfAdcIndexSharded(a, "vec_id", "embedding",
+        "adc_ttl_idx")
       spark.conf.set("graft.adc.quantKeyTtlMs", "3600000")
-      rows("adc_ttl_idx") // warm the key cache + quantizer memo on A
-      Similarity.writeIvfAdcIndex(b, "vec_id", "embedding",
-        "adc_ttl_b", nlist = 10, dim = 64)
+      rows("adc_ttl_idx") // warm the caches + quantizer memo on A
+      Similarity.writeIvfAdcIndexSharded(b, "vec_id", "embedding",
+        "adc_ttl_b")
       foreignSwapFrom("adc_ttl_b")
       val ref = rows("adc_ttl_b")
       assert(rows("adc_ttl_idx") != ref,
@@ -2293,17 +2087,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       // re-key and rank like A's own fresh build
       spark.conf.set("graft.adc.quantKeyTtlMs", "100")
       rows("adc_ttl_idx") // re-warm the cache on B's state
-      Similarity.writeIvfAdcIndex(a, "vec_id", "embedding",
-        "adc_ttl_a2", nlist = 10, dim = 64)
+      Similarity.writeIvfAdcIndexSharded(a, "vec_id", "embedding",
+        "adc_ttl_a2")
       foreignSwapFrom("adc_ttl_a2")
       Thread.sleep(150)
       assert(rows("adc_ttl_idx") == rows("adc_ttl_a2"),
         "rebuild not detected after the TTL expired")
     } finally {
       spark.conf.unset("graft.adc.quantKeyTtlMs")
-      for (t <- Seq("adc_ttl_idx", "adc_ttl_b", "adc_ttl_a2");
-          sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
+      AdcKit.drop("adc_ttl_idx", "adc_ttl_b", "adc_ttl_a2")
     }
   }
 
@@ -2311,11 +2103,11 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // the TTL trade (a FOREIGN rebuild waits for expiry or the hook)
     // must not leak onto in-process mutators: retrain and compaction
     // call invalidateQuantKeyCache, which clears BOTH serving caches —
-    // the state-key listing AND the probe-epoch read — so a warm
-    // serving loop in the same process sees its own retrain's epoch
-    // flip on the very next plan, not at expiry. (Without the epoch
-    // half of the hook, a cached pre-retrain epoch would filter the
-    // stored side to retired rows and the probe would silently serve
+    // the centroid listing AND the protocol state — so a warm serving
+    // loop in the same process sees its own retrain's epoch flip on
+    // the very next plan, not at expiry. (Without the state half of
+    // the hook, a cached pre-retrain epoch would filter the stored
+    // side to retired rows and the probe would silently serve
     // nothing.)
     val a = spark.range(300).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
@@ -2328,59 +2120,51 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       " + pmod(hash(id, 43, i), 100) / 1000.0d - 0.05d as float))")
       .as("embedding"))
     val queries = b.filter(col("vec_id") % 30 === 0)
-    def rows(table: String) = Similarity.ivfAdcTopKIndexed(queries,
-        "vec_id", "embedding", k = 3, nprobe = 2, table = table,
-        dim = 64)
-      .select("q_id", "nb_id", "rank").as[(Long, Long, Int)]
-      .collect().sorted.toSeq
+    def rows(table: String) = AdcKit.probe(queries, table)
     try {
-      Similarity.writeIvfAdcIndex(a, "vec_id", "embedding",
-        "adc_rtl_idx", nlist = 10, dim = 64)
+      Similarity.writeIvfAdcIndexSharded(a, "vec_id", "embedding",
+        "adc_rtl_idx")
       spark.conf.set("graft.adc.quantKeyTtlMs", "3600000")
-      rows("adc_rtl_idx") // warm epoch + state-key caches + memo
-      Similarity.retrainIvfAdcIndex(b, "vec_id", "embedding",
-        "adc_rtl_idx", nlist = 10, dim = 64)
-      Similarity.writeIvfAdcIndex(b, "vec_id", "embedding",
-        "adc_rtl_ref", nlist = 10, dim = 64)
+      rows("adc_rtl_idx") // warm state + listing caches + memo
+      Similarity.retrainIvfAdcIndexSharded(b, "vec_id", "embedding",
+        "adc_rtl_idx")
+      Similarity.writeIvfAdcIndexSharded(b, "vec_id", "embedding",
+        "adc_rtl_ref")
       val got = rows("adc_rtl_idx")
       assert(got.nonEmpty && got == rows("adc_rtl_ref"),
         "in-process retrain hidden by the warm serving TTL cache")
     } finally {
       spark.conf.unset("graft.adc.quantKeyTtlMs")
-      for (t <- Seq("adc_rtl_idx", "adc_rtl_ref");
-          sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
+      AdcKit.drop("adc_rtl_idx", "adc_rtl_ref")
     }
   }
 
   test("requireQuantStable: a mid-tune same-name rebuild fails the tune even when the epoch NUMBER matches") {
-    // ADVICE r17: the stability guard compared only the epoch number,
-    // but a rebuild restarts epochs at 0 — a mid-tune external rebuild
-    // with a matching number passed the guard and the returned dial
-    // mixed recalls measured against different quantizers. The guard
-    // now compares the centroid FILE SNAPSHOT.
+    // ADVICE r17: a stability guard comparing only epoch numbers passes
+    // a mid-tune same-name rebuild (epochs restart at 0), and the
+    // returned dials would mix recalls measured against different
+    // quantizers. The tuners' guard (requireSvStable) compares the
+    // centroid FILE SNAPSHOT.
     val a = spark.range(200).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
       "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d as float))")
       .as("embedding"))
     try {
-      Similarity.writeIvfAdcIndex(a, "vec_id", "embedding",
-        "adc_stbl_idx", nlist = 8, dim = 64)
-      val s0 = Similarity.quantStateNow(spark, "adc_stbl_idx")
-      Similarity.requireQuantStable(spark, "adc_stbl_idx", s0) // no-op
+      Similarity.writeIvfAdcIndexSharded(a, "vec_id", "embedding",
+        "adc_stbl_idx")
+      val s0 = Similarity.svStateNow(spark, "adc_stbl_idx")
+      Similarity.requireSvStable(spark, "adc_stbl_idx", s0) // no-op
       // same-name rebuild: epoch numbers restart, files differ
-      Similarity.writeIvfAdcIndex(a, "vec_id", "embedding",
-        "adc_stbl_idx", nlist = 8, dim = 64)
+      Similarity.writeIvfAdcIndexSharded(a, "vec_id", "embedding",
+        "adc_stbl_idx")
+      assert(AdcKit.epoch("adc_stbl_idx") == 0L)
       val ex = intercept[IllegalArgumentException] {
-        Similarity.requireQuantStable(spark, "adc_stbl_idx", s0)
+        Similarity.requireSvStable(spark, "adc_stbl_idx", s0)
       }
       assert(ex.getMessage.contains("mix"),
         s"rebuild with matching epoch number passed the guard: " +
           ex.getMessage)
-    } finally {
-      for (sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS adc_stbl_idx$sfx")
-    }
+    } finally AdcKit.drop("adc_stbl_idx")
   }
 
   test("ivfAdcTopKIndexedHier: full group coverage is bit-identical to the flat probe; the sqrt-scan dial keeps measured recall") {
@@ -2398,55 +2182,37 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val queries = vecs.filter(col("vec_id") % 40 === 0)
     val (nlist, _) = Similarity.ivfParams(n.toLong)
     val g = math.ceil(math.sqrt(nlist.toDouble)).toInt
-    def pairs(df: org.apache.spark.sql.DataFrame) = df
-      .select("q_id", "nb_id").as[(Long, Long)].collect().toSet
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("q_id", "nb_id", "rank").as[(Long, Long, Int)]
-      .collect().sorted.toSeq
+    def hier(nprobe: Int, gprobe: Int) =
+      Similarity.ivfAdcTopKIndexedShardedTuned(queries, "vec_id",
+        "embedding", k = 3, "adc_hier_idx",
+        Seq(Similarity.ShardDials(nprobe, 0.0, gprobe, 0.0)))
     try {
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "adc_hier_idx", nlist = nlist, dim = 64)
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "adc_hier_idx")
       // exhaustive ADC reference: every cell probed on both paths
-      val flatFull = rows(Similarity.ivfAdcTopKIndexed(queries,
-        "vec_id", "embedding", k = 3, nprobe = nlist,
-        table = "adc_hier_idx", dim = 64))
-      val hierFull = rows(Similarity.ivfAdcTopKIndexedHier(queries,
-        "vec_id", "embedding", k = 3, nprobe = nlist, gprobe = g,
-        table = "adc_hier_idx", dim = 64))
-      assert(flatFull.nonEmpty && hierFull == flatFull,
+      // (targetRecall 1.0 puts the flat fraction law at nprobe = nlist)
+      val flatFull = Similarity.ivfAdcTopKIndexedSharded(queries,
+        "vec_id", "embedding", k = 3, "adc_hier_idx", targetRecall = 1.0)
+      assert(AdcKit.ranks(flatFull).nonEmpty &&
+        AdcKit.ranks(hier(nlist, g)) == AdcKit.ranks(flatFull),
         "full-coverage two-level probe diverged from the flat probe")
       // the sqrt dial: probe 2 of ceil(sqrt(nlist)) groups — measured
       // recall against the exhaustive ADC reference stays above the
       // gate on clustered vectors (neighbors live in the query's own
       // group neighborhood)
-      val hier = pairs(Similarity.ivfAdcTopKIndexedHier(queries,
-        "vec_id", "embedding", k = 3, nprobe = 8, gprobe = 2,
-        table = "adc_hier_idx", dim = 64))
-      val ref = pairs(Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-        "embedding", k = 3, nprobe = nlist, table = "adc_hier_idx",
-        dim = 64))
-      val recall = hier.intersect(ref).size.toDouble / ref.size
+      val recall = AdcKit.recall(hier(8, 2), flatFull)
       assert(recall >= 0.8,
         f"two-level recall $recall%.3f below 0.8 at gprobe=2 of $g")
-      // the group dial derives itself like nprobe does: smallest
-      // gprobe meeting the gate against the FLAT probe at the same
-      // nprobe — the measured quantity is exactly the loss the
-      // sqrt-scan level introduces, zero at full coverage by
-      // construction, so the search always terminates at or under g
-      val flatAtNp = Similarity.ivfAdcTopKIndexed(queries, "vec_id",
-          "embedding", k = 3, nprobe = 8, table = "adc_hier_idx",
-          dim = 64)
-        .select("q_id", "nb_id")
-      val (gp, gRec) = Similarity.tuneGprobe(vecs, queries, "vec_id",
-        "embedding", k = 3, nprobe = 8, "adc_hier_idx",
-        targetRecall = 0.9, reference = flatAtNp)
-      assert(gRec >= 0.9 && gp <= g,
-        f"tuned gprobe=$gp of $g at recall $gRec%.3f did not meet the " +
-          "0.9 gate vs the flat probe")
-    } finally {
-      for (sfx <- Seq("", "_c", "_g", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS adc_hier_idx$sfx")
-    }
+      // the group dial derives itself like nprobe does, and the tuner
+      // reports the measured recall of the dials it returns
+      val Seq(dl) = Similarity.tuneShardDials(queries, "vec_id",
+        "embedding", k = 3, "adc_hier_idx", targetRecall = 0.9)
+      assert(dl.gprobe >= 1 && dl.gprobe <= g,
+        s"tuned gprobe=${dl.gprobe} outside [1, $g]")
+      assert(math.abs(AdcKit.recall(hier(dl.nprobe, dl.gprobe),
+          flatFull) - dl.hierRecall) < 1e-9,
+        "tuneShardDials' hier recall disagrees with the audit")
+    } finally AdcKit.drop("adc_hier_idx")
   }
 }
 
@@ -4171,22 +3937,15 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .filter(col("vec_id") < 100)
     try {
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "hx_adc_idx", nlist = 4, dim = 64)
-      def probe() = Similarity.ivfAdcTopKIndexed(
-          vecs.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
-          k = 3, nprobe = 2, table = "hx_adc_idx", dim = 64)
-        .select("q_id", "nb_id", "rank")
-        .as[(Long, Long, Int)].collect().sorted.toSeq
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "hx_adc_idx")
+      def probe() = AdcKit.probe(vecs.filter(col("vec_id") % 25 === 0),
+        "hx_adc_idx")
       val before = probe()
       assert(before.nonEmpty)
-      spark.sql("ALTER TABLE hx_adc_idx RENAME TO hx_adc_idx_cmp")
+      spark.sql("ALTER TABLE hx_adc_idx_sv RENAME TO hx_adc_idx_sv_cmp")
       assert(probe() == before, "ADC heal lost or changed the index")
-    } finally {
-      for (t <- Seq("hx_adc_idx", "hx_adc_idx_cmp", "hx_adc_idx_c",
-          "hx_adc_idx_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally AdcKit.drop("hx_adc_idx")
     // minhash
     try {
       val (h, b) = Dedup.minhashParams(0.8, 0.95, maxHashes = 24)

@@ -428,25 +428,25 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     // second one re-shuffling the stored codes
     import graft.pipeline.Similarity
     val vecs = Tables.embeddings(spark, d)
-    val (nlist, nprobe) = Similarity.ivfParams(vecs.count())
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       // inside the try: a failed build must still hit the finally DROPs
       // or reruns in the same session trip over the leaked tables
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "q99_plan_idx", nlist = nlist)
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "q99_plan_idx")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val cands = Similarity.adcProbeCandidates(vecs, "vec_id",
-        "embedding", nprobe, "q99_plan_idx")
+      val cands = Similarity.svFracCandidates(vecs, "vec_id",
+        "embedding", "q99_plan_idx")
       cands.collect()
       val p = cands.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
       assert(p.contains("Bucketed: true"), p.take(4000))
       // the probed-cell In filter must reach the stored parquet scan
-      // (row-group pruning via the cell bloom filter + sorted min/max):
-      // without it every probe batch pays a corpus-sized codes scan
+      // (row-group pruning via the gcell bloom filter + sorted
+      // min/max): without it every probe batch pays a corpus-sized
+      // codes scan
       assert(p.linesIterator.exists(l =>
-          l.contains("PushedFilters") && l.contains("In(cell")),
+          l.contains("PushedFilters") && l.contains("In(gcell")),
         "probed-cell set not pushed into the stored scan:\n" + p.take(4000))
       val exchanges = p.linesIterator
         .count(_.contains("Exchange hashpartitioning"))
@@ -460,9 +460,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
         exLines)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS q99_plan_idx")
-      spark.sql("DROP TABLE IF EXISTS q99_plan_idx_c")
-      spark.sql("DROP TABLE IF EXISTS q99_plan_idx_g")
+      AdcKit.drop("q99_plan_idx")
     }
   }
 
@@ -470,60 +468,56 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     // ADVICE r17: the probe-side cell snapshot collects (bounded) query
     // rows at DataFrame-CONSTRUCTION time; a plan-construction-only
     // caller opts out via conf and must get (a) a stored scan WITHOUT
-    // the In(cell) filter (the distributed join-only shape — proving
+    // the In(gcell) filter (the distributed join-only shape — proving
     // the vector snapshot was never taken, since the In set is derived
     // only from it), and (b) the same rows when executed.
     import graft.pipeline.Similarity
     val vecs = Tables.embeddings(spark, d)
-    val (nlist, nprobe) = Similarity.ivfParams(vecs.count())
     try {
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "qpd_plan_idx", nlist = nlist)
-      val withPush = Similarity.ivfAdcTopKIndexed(vecs, "vec_id",
-          "embedding", k = 3, nprobe = nprobe, table = "qpd_plan_idx")
-        .select("q_id", "nb_id", "rank").collect().map(_.toString).sorted
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "qpd_plan_idx")
+      val withPush = AdcKit.probe(vecs, "qpd_plan_idx")
       spark.conf.set("graft.adc.pushdown", "false")
-      val cands = Similarity.adcProbeCandidates(vecs, "vec_id",
-        "embedding", nprobe, "qpd_plan_idx")
+      val cands = Similarity.svFracCandidates(vecs, "vec_id",
+        "embedding", "qpd_plan_idx")
       cands.collect()
       val p = cands.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
-      assert(!p.contains("In(cell"),
+      assert(!p.contains("In(gcell"),
         "pushdown=false still pushed a cell In set:\n" + p.take(4000))
-      val noPush = Similarity.ivfAdcTopKIndexed(vecs, "vec_id",
-          "embedding", k = 3, nprobe = nprobe, table = "qpd_plan_idx")
-        .select("q_id", "nb_id", "rank").collect().map(_.toString).sorted
-      assert(noPush.nonEmpty && (noPush.toSeq == withPush.toSeq),
+      val noPush = AdcKit.probe(vecs, "qpd_plan_idx")
+      assert(noPush.nonEmpty && noPush == withPush,
         "join-only shape diverged from the pushdown shape")
     } finally {
       spark.conf.unset("graft.adc.pushdown")
-      spark.sql("DROP TABLE IF EXISTS qpd_plan_idx")
-      spark.sql("DROP TABLE IF EXISTS qpd_plan_idx_c")
-      spark.sql("DROP TABLE IF EXISTS qpd_plan_idx_g")
+      AdcKit.drop("qpd_plan_idx")
     }
   }
 
   test("two-level ADC probe keeps the flat path's plan shape — bucketed stored side, one probe-side exchange, vector-free") {
-    // ivfAdcTopKIndexedHier shares adcProbeCandidates' body; this pins
-    // that the pluggable cell selection did not change the join shape
-    // (the scale contract is the SHAPE, not the cell list)
+    // the tuned probe shares the flat probe's candidate body
+    // (svProbeCandidates); this pins that the two-level cell selection
+    // did not change the join shape (the scale contract is the SHAPE,
+    // not the cell list). The ranked probe adds exactly one exchange of
+    // its own — the global rank's q_id window.
     import graft.pipeline.Similarity
     val vecs = Tables.embeddings(spark, d)
     val (nlist, nprobe) = Similarity.ivfParams(vecs.count())
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "qhier_plan_idx", nlist = nlist)
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "qhier_plan_idx")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val cands = Similarity.adcProbeCandidatesHier(vecs, "vec_id",
-        "embedding", nprobe, gprobe = 2, "qhier_plan_idx")
-      cands.collect()
-      val p = cands.queryExecution.executedPlan.toString
+      val probe = Similarity.ivfAdcTopKIndexedShardedTuned(vecs, "vec_id",
+        "embedding", k = 3, "qhier_plan_idx",
+        Seq(Similarity.ShardDials(nprobe, 0.0, 2, 0.0)))
+      probe.collect()
+      val p = probe.queryExecution.executedPlan.toString
         .split("== Initial Plan ==")(0)
       assert(p.contains("Bucketed: true"), p.take(4000))
       val exchanges = p.linesIterator
         .count(_.contains("Exchange hashpartitioning"))
-      assert(exchanges <= 1,
+      assert(exchanges <= 2,
         s"stored ADC index side re-shuffled ($exchanges exchanges):\n" +
           p.take(4000))
       val exLines = p.linesIterator.filter(_.contains("Exchange"))
@@ -532,9 +526,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
         exLines)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS qhier_plan_idx")
-      spark.sql("DROP TABLE IF EXISTS qhier_plan_idx_c")
-      spark.sql("DROP TABLE IF EXISTS qhier_plan_idx_g")
+      AdcKit.drop("qhier_plan_idx")
     }
   }
 
@@ -558,28 +550,30 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
   }
 
   test("ivfAdcRerankIndexed: the escalated serving path keeps qa1's scale shape — corpus vectors never enter an exchange") {
-    // tuneServing's escalation target (r18): persisted-index candidates
-    // to depth, full-precision-dot re-rank to k. Same typed-exchange
-    // contract as qa1's: shuffles carry no float array (int8 codes and
-    // scalars only at corpus scale); any float array in a broadcast is
-    // the survivor-derived query vector `qv` at candidate scale, never
-    // the corpus column.
+    // the serving policy's escalation target (r18): persisted-index
+    // candidates to depth, full-precision-dot re-rank to k, served from
+    // a stored rerank-mode decision. Same typed-exchange contract as
+    // qa1's: shuffles carry no float array (int8 codes and scalars only
+    // at corpus scale); any float array in a broadcast is the
+    // survivor-derived query vector `qv` at candidate scale, never the
+    // corpus column.
     import graft.pipeline.Similarity
     import org.apache.spark.sql.functions.col
     val vecs = Tables.embeddings(spark, d)
-    val (nlist, nprobe) = Similarity.ivfParams(vecs.count())
+    val (_, nprobe) = Similarity.ivfParams(vecs.count())
     try {
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "qri_plan_idx", nlist = nlist)
-      val df = Similarity.ivfAdcRerankIndexed(vecs,
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "qri_plan_idx")
+      Similarity.writeShardServing(spark, "qri_plan_idx",
+        Seq(Similarity.ShardServing("rerank",
+          Similarity.ShardDials(nprobe, 0.0, 0, 0.0), depth = 10,
+          recall = 1.0)))
+      val df = Similarity.ivfAdcTopKIndexedShardedServed(vecs,
         vecs.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-        k = 3, depth = 10, nprobe = nprobe, "qri_plan_idx")
+        k = 3, "qri_plan_idx")
       df.collect()
       assertVectorFreeExchanges(df, allowedBroadcast = Set("qv"))
-    } finally {
-      for (sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS qri_plan_idx$sfx")
-    }
+    } finally AdcKit.drop("qri_plan_idx")
   }
 
   test("qa3: the whitening apply is a pure map-side projection — zero exchanges") {
@@ -987,7 +981,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     val docs = Tables.documents(spark, d)
     // the probe's final frame hides behind its materialization barrier,
     // so assert on the package-visible scan stage (phrasePostIndexed,
-    // the adcProbeCandidates convention) with a hand-built phrase-word
+    // the svFracCandidates convention) with a hand-built phrase-word
     // frame (q_id, t0, t1) of real corpus terms
     val qp = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 100 === 0)
       .selectExpr("doc_id AS q_id",

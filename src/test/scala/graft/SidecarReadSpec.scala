@@ -8,46 +8,53 @@ import graft.sources.SidecarRead
 /** The driver-side sidecar reader (r22 metadata-floor optimization) must
   * decode EXACTLY the rows a Spark collect over the same table returns —
   * across the index lifecycle states that rewrite the sidecars (build,
-  * append, retrain, serving-decision persist, sharded layouts). */
+  * append, retrain, serving-decision persist, sharded layouts) — and
+  * fail naming table, file and field when a field is missing, null or
+  * mistyped. */
 class SidecarReadSpec extends AnyFunSuite with SparkTest {
   import spark.implicits._
 
-  private def sparkRows(t: String): Set[Map[String, Any]] =
-    spark.table(t).collect().map { r =>
+  /** A row multiset as a sorted sequence: a dropped or duplicated row
+    * changes it, where a `Set` would not notice. */
+  private def sorted(rows: Seq[Map[String, Any]]): Seq[Map[String, Any]] =
+    rows.sortBy(_.toSeq.sortBy(_._1).mkString(","))
+
+  private def sparkRows(t: String): Seq[Map[String, Any]] =
+    sorted(spark.table(t).collect().toSeq.map { r =>
       r.schema.fieldNames.zipWithIndex.flatMap { case (f, i) =>
         if (r.isNullAt(i)) None else Some(f -> r.get(i))
       }.toMap
-    }.toSet
+    })
 
-  private def sidecarRows(t: String): Set[Map[String, Any]] =
-    SidecarRead.rows(spark, t).map(_.values).toSet
+  private def sidecarRows(t: String): Seq[Map[String, Any]] =
+    sorted(SidecarRead.rows(spark, t).map(_.values))
 
   test("sidecar reader == Spark collect on the ADC protocol tables through build/append/retrain") {
     val corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val n = corpus.count()
-    val (nlist, _) = Similarity.ivfParams(n)
     try {
-      Similarity.writeIvfAdcIndex(corpus.filter(col("vec_id") * 2 < n),
-        "vec_id", "embedding", "screl_idx", nlist = nlist, dim = 64)
-      assert(sidecarRows("screl_idx_g") == sparkRows("screl_idx_g"))
-      Similarity.appendIvfAdcIndex(corpus.filter(col("vec_id") * 2 >= n),
-        "vec_id", "embedding", "screl_idx", dim = 64)
-      assert(sidecarRows("screl_idx_g") == sparkRows("screl_idx_g"))
+      Similarity.writeIvfAdcIndexSharded(
+        corpus.filter(col("vec_id") * 2 < n), "vec_id", "embedding",
+        "screl_idx")
+      assert(sidecarRows("screl_idx_sh") == sparkRows("screl_idx_sh"))
+      assert(sidecarRows("screl_idx_sv_g") == sparkRows("screl_idx_sv_g"))
+      Similarity.appendIvfAdcIndexSharded(
+        corpus.filter(col("vec_id") * 2 >= n), "vec_id", "embedding",
+        "screl_idx")
+      assert(sidecarRows("screl_idx_sv_g") == sparkRows("screl_idx_sv_g"))
+      assert(sidecarRows("screl_idx_sv_g").size == 2,
+        "build + append should hold two commit rows")
       // epoch resolution (the probe path's read) agrees with the agg job
-      val viaJob = spark.table("screl_idx_g").agg(max("epoch")).head()
+      def viaJob = spark.table("screl_idx_sv_g").agg(max("epoch")).head()
         .getLong(0)
-      val viaReader = SidecarRead.rows(spark, "screl_idx_g")
+      def viaReader = SidecarRead.rows(spark, "screl_idx_sv_g")
         .map(_.getLong("epoch")).max
       assert(viaReader == viaJob)
-      Similarity.retrainIvfAdcIndex(corpus, "vec_id", "embedding",
-        "screl_idx", nlist = nlist, dim = 64)
-      assert(sidecarRows("screl_idx_g") == sparkRows("screl_idx_g"))
-      assert(SidecarRead.rows(spark, "screl_idx_g")
-        .map(_.getLong("epoch")).max ==
-        spark.table("screl_idx_g").agg(max("epoch")).head().getLong(0))
-    } finally Seq("screl_idx", "screl_idx_c", "screl_idx_g",
-      "screl_idx_t").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Similarity.retrainIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "screl_idx")
+      assert(sidecarRows("screl_idx_sv_g") == sparkRows("screl_idx_sv_g"))
+      assert(viaReader == viaJob && viaReader == 1L)
+    } finally AdcKit.drop("screl_idx")
   }
 
   test("sidecar reader == Spark collect on the sharded layout + serving sidecars") {
@@ -61,33 +68,77 @@ class SidecarReadSpec extends AnyFunSuite with SparkTest {
       // fan-out probe still answers (exercises readShardMeta + svState)
       val got = Similarity.ivfAdcTopKIndexedSharded(
         corpus.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-        k = 3, table = "screl_sh", dim = 64).count()
+        k = 3, table = "screl_sh").count()
       assert(got > 0)
-    } finally {
-      Seq("screl_sh_sh", "screl_sh_sv", "screl_sh_sv_c", "screl_sh_sv_g",
-        "screl_sh_sv_t", "screl_sh_serve").foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    }
+      Similarity.writeShardDials(spark, "screl_sh",
+        Seq(Similarity.ShardDials(2, 0.9, 1, 0.85),
+          Similarity.ShardDials(3, 0.95, 2, 0.9)))
+      assert(sidecarRows("screl_sh_serve") == sparkRows("screl_sh_serve"))
+      assert(sidecarRows("screl_sh_serve").size == 2)
+    } finally AdcKit.drop("screl_sh")
   }
 
   test("serving-decision reads decode via the sidecar reader (single-table tier)") {
+    // the unsharded index (nShards = 1) with a stored serving decision
     val corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val (nlist, _) = Similarity.ivfParams(corpus.count())
+    val serving = Seq(Similarity.ShardServing("probe",
+      Similarity.ShardDials(3, 0.97, 2, 0.95), depth = 0, recall = 0.95))
     try {
-      Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
-        "screl_sv1", nlist = nlist, dim = 64)
-      Similarity.writeServingDecision(spark, "screl_sv1",
-        Similarity.ProbeServing(3, 0.97), gprobe = 2)
-      assert(sidecarRows("screl_sv1_serve") == sparkRows("screl_sv1_serve"))
-      val got = Similarity.readServingDecision(spark, "screl_sv1")
-      assert(got.contains((Similarity.ProbeServing(3, 0.97), 2)), got)
-      // a foreign-looking epoch flip refuses the stored row (staleness
-      // contract preserved through the reader swap)
-      Similarity.retrainIvfAdcIndex(corpus, "vec_id", "embedding",
-        "screl_sv1", nlist = nlist, dim = 64)
-      assert(Similarity.readServingDecision(spark, "screl_sv1").isEmpty)
-    } finally Seq("screl_sv1", "screl_sv1_c", "screl_sv1_g",
-      "screl_sv1_t", "screl_sv1_serve").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "screl_sv1")
+      Similarity.writeShardServing(spark, "screl_sv1", serving)
+      assert(sidecarRows("screl_sv1_serve") ==
+        sparkRows("screl_sv1_serve"))
+      val got = Similarity.readShardServing(spark, "screl_sv1")
+      assert(got.contains(serving), got)
+      // an epoch flip refuses the stored row (staleness contract
+      // preserved through the reader swap)
+      Similarity.retrainIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "screl_sv1")
+      assert(Similarity.readShardServing(spark, "screl_sv1").isEmpty)
+    } finally AdcKit.drop("screl_sv1")
+  }
+
+  test("a null rsgen in the _sh sidecar fails loudly, naming the table — never silently generation 0") {
+    val corpus = spark.range(200).select(col("id").as("vec_id"), expr(
+      "transform(sequence(0, 63), i -> cast(" +
+      "pmod(hash(id, 7, i), 2000) / 1000.0d - 1.0d as float))")
+      .as("embedding"))
+    try {
+      Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "screl_nul")
+      // a hand-written routing row: the column exists, its value is null
+      spark.sql("DROP TABLE screl_nul_sh")
+      spark.sql("SELECT 1 AS nshards, CAST(NULL AS BIGINT) AS rsgen")
+        .write.format("parquet").saveAsTable("screl_nul_sh")
+      val ex = intercept[IllegalStateException] {
+        Similarity.ivfAdcTopKIndexedSharded(
+          corpus.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
+          k = 3, "screl_nul")
+      }
+      assert(ex.getMessage.contains("screl_nul_sh") &&
+        ex.getMessage.contains("rsgen") && ex.getMessage.contains("null"),
+        ex.getMessage)
+    } finally AdcKit.drop("screl_nul")
+  }
+
+  test("SidecarRead.Row accessors name the table, file and field of a missing, null or mistyped field") {
+    try {
+      spark.sql("SELECT 7L AS n, 'x' AS s, CAST(NULL AS STRING) AS z")
+        .write.format("parquet").saveAsTable("screl_row")
+      val Seq(r) = SidecarRead.rows(spark, "screl_row")
+      assert(r.getLong("n") == 7L && r.getString("s") == "x")
+      def failure(read: => Any): String =
+        intercept[IllegalStateException](read).getMessage
+      for (msg <- Seq(failure(r.getLong("absent")),
+          failure(r.getString("z")), failure(r.getString("n")),
+          failure(r.getDouble("s"))))
+        assert(msg.contains("screl_row") && msg.contains(r.file), msg)
+      assert(failure(r.getLong("absent")).contains("no field 'absent'"))
+      assert(failure(r.getString("z")).contains("field 'z' is null"))
+      assert(failure(r.getString("n")).contains("field 'n'") &&
+        failure(r.getString("n")).contains("expected string"))
+      assert(failure(r.getDouble("s")).contains("expected double"))
+    } finally spark.sql("DROP TABLE IF EXISTS screl_row")
   }
 }

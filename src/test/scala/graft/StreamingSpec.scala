@@ -290,16 +290,12 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.functions.col
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .filter(col("vec_id") < 200)
-    Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding", table,
-      nlist = 4, dim = 64)
+    Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+      table)
     val rows = vecs.select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq
     try body(vecs, rows)
-    finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_c")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}_g")
-    }
+    finally AdcKit.drop(table)
   }
 
   test("streamBm25TopK: a two-micro-batch query stream equals the one-shot indexed batch retrieval") {
@@ -359,9 +355,9 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         "graft_qa6_spec_sink").getAbsolutePath
       val ms = MemoryStream[(Long, Array[Float])](spark)
       val (first, second) = rows.partition(_._1 % 2 == 0)
-      val q = Similarity.startStreamAdcTopK(
+      val q = Similarity.startStreamAdcTopKSharded(
         ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        k = 3, nprobe = 2, table = "qa6_eq_idx", sinkDir = sink)
+        k = 3, table = "qa6_eq_idx", sinkDir = sink)
       try {
         ms.addData(first)
         q.processAllAvailable() // micro-batch 1: even ids only
@@ -372,8 +368,8 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       } finally q.stop()
       val streamed = spark.read.parquet(sink)
         .as[(Long, Long, Int, Long)].collect().toSet
-      val batch = Similarity.ivfAdcTopKIndexed(vecs, "vec_id", "embedding",
-          k = 3, nprobe = 2, table = "qa6_eq_idx")
+      val batch = Similarity.ivfAdcTopKIndexedSharded(vecs, "vec_id",
+          "embedding", k = 3, table = "qa6_eq_idx")
         .as[(Long, Long, Int, Long)].collect().toSet
       assert(batch.nonEmpty, "vacuous gate: no batch results")
       assert(streamed == batch,
@@ -392,9 +388,9 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val ms = MemoryStream[(Long, Array[Float])](spark)
       ms.addData(rows)
-      val q = Similarity.adcProbeCandidates(
+      val q = Similarity.svFracCandidates(
           ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          nprobe = 2, table = "qa6_plan_idx")
+          table = "qa6_plan_idx")
         .writeStream.format("memory").queryName("qa6_plan_test")
         .outputMode(OutputMode.Append()).start()
       try {
@@ -426,8 +422,8 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     try {
       TextAnalysis.writeBm25Index(docs, "doc_id", "text", "qc4_eq_lidx")
-      Similarity.writeIvfAdcIndex(vecs, "vec_id", "embedding",
-        "qc4_eq_vidx", nlist = 4, dim = 64)
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "qc4_eq_vidx")
       // queries: every 10th doc's 4-token prefix + its vector, PLUS one
       // vector-less (lexical-only) query — the sf0.1 regression class
       // where documents outnumber embeddings: it must keep its lexical
@@ -450,7 +446,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       val q = Similarity.startStreamHybridTopK(
         ms.toDF().toDF("q_id", "qtext", "qvec"), "q_id", "qtext", "qvec",
         "qc4_eq_lidx", "qc4_eq_vidx", lexDepth = 5, denseDepth = 3,
-        nprobe = 2, k = 3, sinkDir = sink)
+        k = 3, sinkDir = sink)
       try {
         ms.addData(first)
         q.processAllAvailable()
@@ -465,10 +461,10 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       val lex = TextAnalysis.bm25TopKIndexed(
         qdf.select("q_id", "qtext"), "q_id", "qtext",
         "qc4_eq_lidx", k = 5)
-      val dense = Similarity.ivfAdcTopKIndexed(
+      val dense = Similarity.ivfAdcTopKIndexedSharded(
           qdf.filter(col("qvec").isNotNull)
             .select(col("q_id"), col("qvec")), "q_id", "qvec",
-          k = 3, nprobe = 2, table = "qc4_eq_vidx")
+          k = 3, table = "qc4_eq_vidx")
         .withColumnRenamed("nb_id", "doc_id")
       val batch = Similarity.rrfFuse(Seq(lex, dense), "q_id", "doc_id",
           "rank", k = 3)
@@ -480,9 +476,9 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       assert(streamed == batch,
         s"stream-only=${streamed -- batch} batch-only=${batch -- streamed}")
     } finally {
-      for (t <- Seq("qc4_eq_lidx", "qc4_eq_lidx_s", "qc4_eq_vidx",
-          "qc4_eq_vidx_c", "qc4_eq_vidx_g"))
+      for (t <- Seq("qc4_eq_lidx", "qc4_eq_lidx_s"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
+      AdcKit.drop("qc4_eq_vidx")
     }
   }
 
@@ -730,7 +726,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       val ms = MemoryStream[(Long, Array[Float])](spark)
       val q = Similarity.startStreamAppendIvfAdcIndexSharded(
         ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        "sstr_idx", dim = 64)
+        "sstr_idx")
       try {
         ms.addData(batchRows.take(batchRows.size / 2))
         q.processAllAvailable()
@@ -825,7 +821,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       val ms = MemoryStream[(Long, Array[Float])](spark)
       val q = Similarity.startStreamAppendIvfAdcIndexSharded(
         ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        "rlg_idx", dim = 64)
+        "rlg_idx")
       try {
         ms.addData(batchRows)
         q.processAllAvailable()
@@ -926,12 +922,12 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq
     try {
-      val cents = Similarity.writeIvfAdcIndex(build, "vec_id",
-        "embedding", "adc_str_idx", nlist = 4, dim = 64)
+      val cents = Similarity.writeIvfAdcIndexSharded(build, "vec_id",
+        "embedding", "adc_str_idx")
       val ms = MemoryStream[(Long, Array[Float])](spark)
-      val q = Similarity.startStreamAppendIvfAdcIndex(
+      val q = Similarity.startStreamAppendIvfAdcIndexSharded(
         ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        "adc_str_idx", dim = 64)
+        "adc_str_idx")
       try {
         ms.addData(batchRows.take(batchRows.size / 2))
         q.processAllAvailable()
@@ -941,33 +937,24 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
           "the gate needs >= 2 non-empty micro-batches")
       } finally q.stop()
       // one-shot comparators against the SAME frozen quantizer
-      Similarity.writeIvfAdcIndex(build, "vec_id", "embedding",
-        "adc_str_one", nlist = 4, dim = 64, cents = cents)
-      Similarity.appendIvfAdcIndex(batch, "vec_id", "embedding",
-        "adc_str_one", dim = 64)
-      Similarity.writeIvfAdcIndex(corpus, "vec_id", "embedding",
-        "adc_str_ref", nlist = 4, dim = 64, cents = cents)
-      def rows(t: String) = spark.table(t)
-        .select(col("cell"), col("id"), hex(col("qc")), col("scale"))
-        .as[(Int, Long, String, Double)].collect().sorted.toSeq
+      Similarity.writeIvfAdcIndexSharded(build, "vec_id", "embedding",
+        "adc_str_one", cents = cents)
+      Similarity.appendIvfAdcIndexSharded(batch, "vec_id", "embedding",
+        "adc_str_one")
+      Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "adc_str_ref", cents = cents)
+      val rows = AdcKit.storedRows _
       assert(rows("adc_str_idx").nonEmpty &&
         rows("adc_str_idx") == rows("adc_str_one") &&
         rows("adc_str_idx") == rows("adc_str_ref"))
       // the stream committed one generation PER micro-batch
-      assert(spark.table("adc_str_idx_g").count() >= 3,
+      assert(spark.table("adc_str_idx_sv_g").count() >= 3,
         "expected build + >=2 streamed generations")
-      def probe(t: String) = Similarity.ivfAdcTopKIndexed(
-          corpus.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-          k = 3, nprobe = 2, table = t, dim = 64)
-        .select("q_id", "nb_id", "rank")
-        .as[(Long, Long, Int)].collect().sorted.toSeq
+      def probe(t: String) =
+        AdcKit.probe(corpus.filter(col("vec_id") % 50 === 0), t)
       val streamed = probe("adc_str_idx")
       assert(streamed.nonEmpty && streamed == probe("adc_str_ref"))
-    } finally {
-      for (t <- Seq("adc_str_idx", "adc_str_one", "adc_str_ref");
-          sfx <- Seq("", "_c", "_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
-    }
+    } finally AdcKit.drop("adc_str_idx", "adc_str_one", "adc_str_ref")
   }
 
   test("streamAppendMinhashIndex: two streamed micro-batch appends equal the one-shot append, and a replayed batch changes no screen result") {
@@ -1081,34 +1068,27 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       .filter(col("vec_id") < 200)
     val vb = vecs.filter(col("vec_id") >= 100)
     try {
-      Similarity.writeIvfAdcIndex(vecs.filter(col("vec_id") < 100),
-        "vec_id", "embedding", "adc_rp_idx", nlist = 4, dim = 64)
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.writeIvfAdcIndexSharded(vecs.filter(col("vec_id") < 100),
+        "vec_id", "embedding", "adc_rp_idx")
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_rp_idx")
       def astate() = (
-        spark.table("adc_rp_idx").count(),
-        spark.table("adc_rp_idx_g").count(),
-        Similarity.ivfAdcTopKIndexed(
-            vecs.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-            k = 3, nprobe = 2, table = "adc_rp_idx", dim = 64)
-          .select("q_id", "nb_id", "rank")
-          .as[(Long, Long, Int)].collect().sorted.toSeq)
+        spark.table("adc_rp_idx_sv").count(),
+        spark.table("adc_rp_idx_sv_g").count(),
+        AdcKit.probe(vecs.filter(col("vec_id") % 50 === 0), "adc_rp_idx"))
       val afterFirst = astate()
       assert(afterFirst._3.nonEmpty)
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_rp_idx")
       assert(astate() == afterFirst,
         "a replayed committed micro-batch changed the ADC index")
-    } finally {
-      for (t <- Seq("adc_rp_idx", "adc_rp_idx_c", "adc_rp_idx_g"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally AdcKit.drop("adc_rp_idx")
   }
 
   test("index tiers: a MID-LINEAGE compaction carries replay marks — re-delivered committed batches are no-ops on BM25 and ADC") {
     // the qfh story on the generation-protocol tiers (r16): their
     // replay keys live in the scalar/generation commit tables that
-    // compaction collapses; compactBm25Index/compactIvfAdcIndex now
+    // compaction collapses; compactBm25Index/compactIvfAdcIndexSharded now
     // fold each lineage's high-water mark into the _hwm sidecar first,
     // so a committed batch re-delivered AFTER an in-lineage compaction
     // (the checkpoint-resume window) still skips exactly, a NEW
@@ -1166,48 +1146,39 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       .filter(col("vec_id") < 200)
     val vb = vecs.filter(col("vec_id") >= 100)
     try {
-      Similarity.writeIvfAdcIndex(vecs.filter(col("vec_id") < 100),
-        "vec_id", "embedding", "adc_oc_idx", nlist = 4, dim = 64)
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.writeIvfAdcIndexSharded(vecs.filter(col("vec_id") < 100),
+        "vec_id", "embedding", "adc_oc_idx")
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_oc_idx", lineage = 2L)
-      assert(Similarity.maybeCompactIvfAdcIndex(spark, "adc_oc_idx",
+      assert(Similarity.maybeCompactIvfAdcIndexSharded(spark, "adc_oc_idx",
         maxGen = 1))
-      assert(MergeTables.replayed(spark, "adc_oc_idx_g",
+      assert(MergeTables.replayed(spark, "adc_oc_idx_sv_g",
         MergeTables.streamKey(2L, 0L)), "ADC high-water mark lost")
       def astate() = (
-        Similarity.liveAdcRows(spark, "adc_oc_idx").count(),
-        spark.table("adc_oc_idx_g").count(),
-        Similarity.ivfAdcTopKIndexed(
-            vecs.filter(col("vec_id") % 50 === 0), "vec_id",
-            "embedding", k = 3, nprobe = 2, table = "adc_oc_idx",
-            dim = 64)
-          .select("q_id", "nb_id", "rank")
-          .as[(Long, Long, Int)].collect().sorted.toSeq)
+        AdcKit.liveRows("adc_oc_idx").count(),
+        spark.table("adc_oc_idx_sv_g").count(),
+        AdcKit.probe(vecs.filter(col("vec_id") % 50 === 0), "adc_oc_idx"))
       val afterCompact = astate()
       assert(afterCompact._3.nonEmpty)
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_oc_idx", lineage = 2L)
       assert(astate() == afterCompact,
         "a compacted-away committed batch re-appended on ADC")
-      MergeTables.forgetLineages("adc_oc_idx_g")
-      assert(MergeTables.allocLineage(spark, "adc_oc_idx_g") >= 3L)
+      MergeTables.forgetLineages("adc_oc_idx_sv_g")
+      assert(MergeTables.allocLineage(spark, "adc_oc_idx_sv_g") >= 3L)
       // RETRAIN has the same exposure (its generation reset clears
       // keys) and the same fix: the retrained rows include every
       // committed streamed batch, so the replay must stay a no-op
-      Similarity.retrainIvfAdcIndex(vecs, "vec_id", "embedding",
-        "adc_oc_idx", nlist = 4, dim = 64)
+      Similarity.retrainIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "adc_oc_idx")
       val afterRetrain = astate()
       assert(afterRetrain._1 == 200L,
         "retrain did not pack the full live corpus")
-      Similarity.streamAppendAdcBatch(vb, 0L, "vec_id", "embedding",
+      Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_oc_idx", lineage = 2L)
       assert(astate() == afterRetrain,
         "a committed batch re-appended after a retrain cleared its key")
-    } finally {
-      for (t <- Seq("adc_oc_idx", "adc_oc_idx_c", "adc_oc_idx_g",
-          "adc_oc_idx_g_hwm"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+    } finally AdcKit.drop("adc_oc_idx")
   }
 
   test("withBoundedStateShuffle: partitions derive from the state bound, scoped and restored, no-op at or below") {
