@@ -198,7 +198,7 @@ object RelationalQueries {
       graft.pipeline.MergeTables.write(
         cnts(emb.filter(col("vec_id") % 2 === 0)), "g", table)
       graft.pipeline.MergeTables.append(
-        cnts(emb.filter(col("vec_id") % 2 === 1)), "g", table)
+        cnts(emb.filter(col("vec_id") % 2 === 1)), table)
     }
     table
   }

@@ -134,8 +134,7 @@ object ValueAggregators {
     * [[writeHllTable]]. */
   def appendHllTable(df: DataFrame, key: Column, v: Column,
       table: String, m: Int = 256): Unit =
-    graft.pipeline.MergeTables.append(hllRegisters(df, key, v, m), "b",
-      table)
+    graft.pipeline.MergeTables.append(hllRegisters(df, key, v, m), table)
 
   /** The probe-time max-merged register table — bit-equal to
     * [[hllRegisters]] over the union of all written/appended batches. */
@@ -192,7 +191,7 @@ object ValueAggregators {
     graft.pipeline.MergeTables.maybeCompactWith(spark, table, maxGen)(
       compactHllTable(spark, table))
 
-  /** The per-micro-batch body of [[startStreamAppendHllTable]],
+  /** One micro-batch's register generation under its commit key,
     * exposed for the replay spec. On the MAX tier the batch key is
     * PURE storage hygiene: even an unkeyed replayed generation could
     * not change any probe (max is idempotent, spec-proven) — the key
@@ -200,22 +199,8 @@ object ValueAggregators {
   private[graft] def streamAppendHllBatch(batch: DataFrame,
       batchId: Long, key: Column, v: Column, table: String,
       m: Int = 256): Unit =
-    graft.pipeline.MergeTables.appendBatch(batch, batchId, "b", table,
+    graft.pipeline.MergeTables.appendBatch(batch, batchId, table,
       0L)(hllRegisters(_, key, v, m))
-
-  /** [[appendHllTable]] with the ROWS ARRIVING AS A STREAM — one
-    * register generation per micro-batch. Blocks until drained. */
-  def streamAppendHllTable(stream: DataFrame, key: Column, v: Column,
-      table: String, m: Int = 256): Unit =
-    graft.pipeline.MergeTables.streamAppendBlocking(stream, "b",
-      table)(hllRegisters(_, key, v, m))
-
-  /** The started-but-undrained form of [[streamAppendHllTable]]. */
-  def startStreamAppendHllTable(stream: DataFrame, key: Column,
-      v: Column, table: String, m: Int = 256)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    graft.pipeline.MergeTables.streamAppend(stream, "b", table)(
-      hllRegisters(_, key, v, m))
 
   /** The DuckDB twin of [[portableHllEstimate]] — the full sketch
     * (hash, registers, exact-integer harmonic sum, correction branch)

@@ -34,34 +34,25 @@ object DatasetCard {
     * (width, depth) must match the loop's — checked BEFORE the first
     * batch lands ([[TextAnalysis.requireCmParams]], ADVICE r15: a
     * mismatched maintenance loop would poison every future probe as a
-    * mixed-params failure discovered only at probe time). One lineage
-    * id serves all four tables — [[MergeTables.allocLineageAcross]]
-    * registers it on EVERY table so a concurrent loop sharing any one
-    * of them cannot draw the same id — and the writer lease is held on
-    * all four for the loop's lifetime. */
+    * mixed-params failure discovered only at probe time). The loop is
+    * [[MergeTables.startKeyedStream]] over all four tables as key
+    * tables: one lineage id serves all four — registered on EVERY table
+    * so a concurrent loop sharing any one of them cannot draw the same
+    * id — and the writer lease is held on all four for the loop's
+    * lifetime. */
   def startMaintain(docStream: DataFrame, lenTable: String,
       cmTable: String, hllTable: String, smpTable: String, k: Int,
       width: Int = 1024, depth: Int = 4,
       maxGen: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docStream.sparkSession
-    TextAnalysis.requireCmParams(spark, cmTable, width, depth)
-    val lineage = MergeTables.allocLineageAcross(spark,
-      Seq(lenTable, cmTable, hllTable, smpTable))
-    val committed =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    MergeTables.startLeased(spark,
-      Seq(lenTable, cmTable, hllTable, smpTable))(
-      docStream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (!committed.contains(batchId)) {
-            maintainBatch(batch, batchId, lenTable, cmTable, hllTable,
-              smpTable, k, width, depth, lineage, maxGen)
-            committed.add(batchId)
-            ()
-          }
-        }
-        .start())
+    TextAnalysis.requireCmParams(docStream.sparkSession, cmTable, width,
+      depth)
+    MergeTables.startKeyedStream(docStream,
+        Seq(lenTable, cmTable, hllTable, smpTable)) {
+      (batch, batchId, lineage) =>
+        maintainBatch(batch, batchId, lenTable, cmTable, hllTable,
+          smpTable, k, width, depth, lineage, maxGen)
+    }
   }
 
   /** One micro-batch into all four tables — exposed for the partial-
@@ -83,11 +74,11 @@ object DatasetCard {
       Sketches.streamAppendGroupedSketchBatch(
         b.filter(col("text").isNotNull), batchId,
         col("source"), length(col("text")), lenTable, lineage = lineage)
-      MergeTables.appendBatch(b, batchId, "b", cmTable, lineage)(
+      MergeTables.appendBatch(b, batchId, cmTable, lineage)(
         TextAnalysis.groupedCountMinCounters(_, "source", "text", width,
             depth)
           .withColumn("w", lit(width)).withColumn("dep", lit(depth)))
-      MergeTables.appendBatch(b, batchId, "b", hllTable, lineage)(
+      MergeTables.appendBatch(b, batchId, hllTable, lineage)(
         x => graft.agg.ValueAggregators.hllRegisters(
           x.select(col("source"), explode(
             expr("filter(split(text, ' '), x -> length(x) > 0)"))

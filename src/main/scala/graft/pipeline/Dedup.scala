@@ -429,16 +429,9 @@ object Dedup {
       textCol: String, table: String, n: Int, numHashes: Int = 24,
       bands: Int = 6): Unit = MergeTables.withTableLock(table) {
     val spark = newCorpus.sparkSession
-    MergeTables.recoverCmpSwapCrash(spark, table)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(s"$table is not a bucketed index"))
-    indexRows(newCorpus, idCol, textCol, n, numHashes, bands)
-      .write.mode("append")
-      .option("parquet.bloom.filter.enabled#bkey", "true")
-      .bucketBy(buckets, "bkey").sortBy("bkey")
-      .saveAsTable(table)
+    MergeTables.recoverCompactCrash(spark, table)
+    graft.sources.MapFiles.append(
+      indexRows(newCorpus, idCol, textCol, n, numHashes, bands), table)
   }
 
   /** [[appendMinhashIndex]] with the NEW DOCUMENTS ARRIVING AS A
@@ -490,29 +483,18 @@ object Dedup {
     * stored rows and probe results identical (spec + qd5). */
   def compactMinhashIndex(spark: SparkSession, table: String): Unit =
       MergeTables.withTableLock(table) {
-    // heal a prior crash's swap window, then rewrite under the table's
-    // mutation lock so a concurrent same-process append's band rows
-    // cannot land between the listing and the DROP (the
-    // MergeTables.compact discipline)
-    MergeTables.recoverCmpSwapCrash(spark, table)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(s"$table is not a bucketed index"))
+    // healed and locked: a same-process append's band rows cannot land
+    // between the listing and the swap's DROP
+    MergeTables.recoverCompactCrash(spark, table)
     // bucket-preserving read: the scan keeps one partition per bucket
-    // (readBucketed), which already satisfies the sink's distribution —
-    // the rewrite streams bucket i -> one file i with ZERO shuffle (the
-    // repartition is a no-op safety net the planner elides)
-    val live = liveMinhashRows(spark, table, bucketedRead = true)
-      .select("bkey", "id", "n")
-      .repartition(buckets, col("bkey"))
-    val shadow = table + "_cmp"
-    graft.sources.MapFiles.write(live, "bkey", buckets, shadow)
-    spark.sql(s"DROP TABLE `$table`")
-    // tolerant: a probe's heal may have completed this rename already
-    MergeTables.renameInto(spark, shadow, table)
+    // (readBucketed), which already satisfies the swap's per-bucket
+    // distribution — the rewrite streams bucket i -> one file i with
+    // ZERO shuffle (the swap's repartition is elided by the planner)
+    MergeTables.swapInKeyed(spark,
+      liveMinhashRows(spark, table, bucketedRead = true)
+        .select("bkey", "id", "n"),
+      "bkey", table)
     spark.sql(s"DROP TABLE IF EXISTS `${table}_t`")
-    spark.catalog.refreshTable(table)
   }
 
   /** Delete documents from a persisted minhash archive index — the
@@ -533,12 +515,12 @@ object Dedup {
   def deleteMinhashDocs(spark: SparkSession, table: String,
       ids: DataFrame, idCol: String): Unit =
       MergeTables.withTableLock(table) {
-    MergeTables.recoverCmpSwapCrash(spark, table)
+    MergeTables.recoverCompactCrash(spark, table)
     require(spark.catalog.tableExists(table),
       s"$table does not exist — not a minhash index")
     graft.sources.MapFiles.clearStaleLocation(spark, table + "_t")
     ids.select(col(idCol).cast("long").as("id")).distinct()
-      .write.mode("append").saveAsTable(table + "_t")
+      .write.format("parquet").mode("append").saveAsTable(table + "_t")
   }
 
   /** The probe-visible rows of a persisted minhash archive: stored
@@ -548,8 +530,8 @@ object Dedup {
       bucketedRead: Boolean = false): DataFrame = {
     // heal a compactor crash's DROP/RENAME window first (the
     // committedIndex discipline; this tier's compactor swaps through
-    // the same _cmp shadow)
-    MergeTables.recoverCmpSwapCrash(spark, table)
+    // the one MergeTables shadow)
+    MergeTables.recoverCompactCrash(spark, table)
     val stored =
       if (bucketedRead) graft.sources.MapFiles.readBucketed(spark, table)
       else spark.table(table)

@@ -3,44 +3,56 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The ONE persisted-table protocol shared by every MERGEABLE-STATE
-  * artifact in the approximate tier — quantile bucket counts
-  * ([[Sketches]]), count-min counters
-  * ([[TextAnalysis.writeCountMinTable]]), and HLL registers
-  * ([[graft.agg.ValueAggregators.writeHllTable]]). All three persist a
-  * bounded keyed-state table whose generations combine under an
-  * associative-commutative merge, so they share one physical story:
+/** The ONE generation protocol of every persisted tier — the
+  * mergeable-state tables (quantile buckets [[Sketches]], count-min
+  * counters [[TextAnalysis.writeCountMinTable]], HLL registers
+  * [[graft.agg.ValueAggregators.writeHllTable]], min-k samples
+  * [[Samples]]) AND the three index tiers (BM25 postings
+  * [[TextAnalysis.writeBm25Index]], the IVF-ADC layout
+  * [[Similarity.writeIvfAdcIndexSharded]], minhash band rows
+  * [[Dedup.writeMinhashIndex]]). Together with
+  * [[graft.sources.MapFiles]] this is the only code that knows how a
+  * persisted table is laid out, appended to, swapped, healed and
+  * streamed into; the reference tells the same story once for every
+  * job output (write under a temporary name, promote by rename —
+  * `mapred/FileOutputCommitter.java:34`).
   *
-  *  - a WRITE is `MapFiles.write` of generation 0;
-  *  - an APPEND lands one batch's state as one more single-file
-  *    generation (the stored side is never read, merged, or rewritten
-  *    — generations merge at PROBE time), so its crash safety is the
-  *    file-commit rename itself: a crashed append leaves the exact
-  *    pre-append state, no commit protocol needed
-  *    ([[TextAnalysis.commitBm25Gen]]'s argument);
-  *  - `batch_key` rides the generation's own rows (−1 for batch
-  *    operations, [[streamKey]] for streamed micro-batches), so replay
-  *    detection and the state it guards commit in the same rename —
-  *    unlike the BM25/ADC tiers, no separate commit table exists to
-  *    get out of sync;
-  *  - a COMPACTION rewrites all generations into one gen-0 file via
-  *    the probe's own merge (state-sized work, independent of the
-  *    corpus the state summarizes), through the shadow-then-rename
-  *    swap of the index tiers. Live batch keys are cleared with the
-  *    old generations, but each lineage's replay HIGH-WATER MARK (its
-  *    max committed batchId) is carried through the rewrite into the
-  *    sibling `table_hwm` table ([[hwmTable]]), so replay detection
-  *    SURVIVES compaction — which is what makes [[maybeCompact]] safe
-  *    to run INSIDE a live streaming lineage (r15 verdict item 1),
-  *    not only between lineages.
+  *  - LAND: `MapFiles.write` creates a table's bucketed parquet layout;
+  *    every later write is `MapFiles.append`, which reads bucket count,
+  *    bucket column and sort column back from the catalog. A landed
+  *    generation is new files only — the stored side is never read or
+  *    rewritten — so a crashed append leaves the exact pre-append
+  *    state (its orphan files carry an uncommitted generation or none).
+  *  - SWAP: a rewrite (compaction, a sidecar collapse, a retrain or
+  *    reshard commit) writes the new state under `table_compact_shadow`,
+  *    DROPs the live table and RENAMEs the shadow in ([[swapInKeyed]],
+  *    bucket count taken from the live table).
+  *  - HEAL: the swap's one crash window — after the DROP, before the
+  *    RENAME — leaves the complete state under the shadow name;
+  *    [[recoverCompactCrash]] finishes the rename on the next touch of
+  *    any entry point. A crash before the DROP leaves the old table
+  *    live and a stale shadow the next swap overwrites.
+  *  - STREAM: [[startKeyedStream]] is the one lease-holding streamed
+  *    append loop — it resolves the lineage ([[allocLineage]] or the
+  *    checkpoint's persisted id), holds the writer lease on its key
+  *    tables, skips batch ids this query already committed, and hands
+  *    each micro-batch its (lineage, batchId) commit key
+  *    ([[streamKey]]). Replay checks read live keys plus the
+  *    compaction-carried high-water marks ([[hwmTable]], [[replayed]]),
+  *    so compaction is safe inside a live lineage.
   *
-  * What DIFFERS per artifact is only the merge monoid, and with it the
-  * delete story: SUM-merged counts ([[mergedSum]]) support deletion by
-  * additive RETRACTION (negated counts cancel exactly; a negative
-  * merged count fails loudly) but double-count a replayed append —
-  * hence the batch keys; MAX-merged registers ([[mergedMax]]) are
-  * naturally replay-IDEMPOTENT (max(a,a) = a) but cannot retract (max
-  * is not invertible — deletion is a rebuild by contract).
+  * What stays per tier is DATA:
+  *  - where the commit key lives: in the state rows themselves here
+  *    (`batch_key`, −1 for batch operations); in the `table_s` rows
+  *    of BM25, with its `(n_docs, sum_dl)` integer deltas; in the
+  *    `table_sv_g` rows `(shard, gen, batch_key, epoch)` of ADC, whose
+  *    tombstones are scoped by epoch; nowhere for minhash, whose band
+  *    rows are replay-idempotent and which has no commit table;
+  *  - the merge monoid of the state tables: SUM-merged counts
+  *    ([[mergedSum]]) retract by negated counts but double-count a
+  *    replayed append — hence the keys; MAX-merged registers
+  *    ([[mergedMax]]) are replay-idempotent but cannot retract
+  *    (deletion is a rebuild).
   *
   * Reference contract: the write-once sorted-artifact story of
   * `io/MapFile.java:49` plus the aggregate framework's mergeable
@@ -85,26 +97,22 @@ private[graft] object MergeTables {
     tableLocks.computeIfAbsent(table, _ => new Object)
       .synchronized(body)
 
-  /** Land one batch's state as one single-file generation. The
-    * `batch_key` column gets a parquet bloom filter so the per-batch
-    * replay probe ([[replayed]]) skips non-matching row groups from
-    * the footer instead of reading every generation's rows. Recovers
-    * a crashed compaction first ([[recoverCompactCrash]]). Holds the
-    * table's mutation lock so a concurrent same-process compaction
-    * cannot swap this generation away mid-landing. */
-  def append(state: DataFrame, keyCol: String, table: String,
+  /** Land one batch's state as one single-file generation through
+    * [[graft.sources.MapFiles.append]] (whose `batch_key` bloom filter
+    * lets the per-batch replay probe, [[replayed]], skip non-matching
+    * row groups from the footer). Recovers a crashed compaction first
+    * ([[recoverCompactCrash]]). Holds the table's mutation lock so a
+    * concurrent same-process compaction cannot swap this generation
+    * away mid-landing. */
+  def append(state: DataFrame, table: String,
       batchKey: Long = -1L): Unit = withTableLock(table) {
     recoverCompactCrash(state.sparkSession, table)
     require(state.sparkSession.catalog.tableExists(table),
       s"$table does not exist — write it before appending")
-    state
+    graft.sources.MapFiles.append(state
       .withColumn("gen", lit(graft.sources.MapFiles.freshGen()))
       .withColumn("batch_key", lit(batchKey))
-      .coalesce(1)
-      .write.mode("append")
-      .option("parquet.bloom.filter.enabled#batch_key", "true")
-      .bucketBy(1, keyCol).sortBy(keyCol)
-      .saveAsTable(table)
+      .coalesce(1), table)
   }
 
   /** Idempotent BATCH append — the batch flavor of the streamed replay
@@ -120,12 +128,12 @@ private[graft] object MergeTables {
     * high-water-mark sidecar, and can never collide with a streaming
     * lineage (the id came from the same allocator). Returns true iff
     * the batch appended (false = already committed). */
-  def appendKeyed(state: DataFrame, keyCol: String, table: String,
+  def appendKeyed(state: DataFrame, table: String,
       lineage: Long, batchId: Long): Boolean = withTableLock(table) {
     registerLineage(table, lineage)
     val key = streamKey(lineage, batchId)
     if (replayed(state.sparkSession, table, key)) false
-    else { append(state, keyCol, table, key); true }
+    else { append(state, table, key); true }
   }
 
   /** Per-process registry of the highest lineage id handed out per key
@@ -191,54 +199,38 @@ private[graft] object MergeTables {
   }
 
   /** Allocate a fresh streaming LINEAGE id — one per `start()`ed
-    * streaming query. Spark's micro-batch ids restart at 0 for every
-    * fresh checkpoint lineage, so a key derived from the batchId alone
-    * would collide across two streaming queries against the same table
-    * and the second query's first batches would be silently skipped as
-    * "replays" — real data loss. Allocation is DETERMINISTIC, not
-    * random (the r14 random draw had a ~2^-20 per-pair silent-skip
-    * collision): the next id is max(highest lineage COMMITTED into
-    * `keyTable` — live keys or compacted-away marks, highest id handed
-    * out by this process) + 1 — committed state makes sequential runs
+    * streaming query, valid across every table in `keyTables` (one for
+    * a single-table tier, the four card tables of
+    * [[DatasetCard.startMaintain]]). Spark's micro-batch ids restart
+    * at 0 for every fresh checkpoint lineage, so a key derived from
+    * the batchId alone would collide across two streaming queries
+    * against the same table and the second query's first batches
+    * would be silently skipped as "replays" — real data loss.
+    * Allocation is DETERMINISTIC, not random (the r14 random draw had
+    * a ~2^-20 per-pair silent-skip collision): the next id is max over
+    * the tables of (highest lineage COMMITTED — live keys or
+    * compacted-away marks, highest id handed out by this process) + 1,
+    * REGISTERED on every table — committed state makes sequential runs
     * collision-free, the in-process registry makes concurrent queries
-    * in one driver collision-free. The committed read runs OUTSIDE the
-    * monitor (it is a Spark job); only the compare-and-update against
-    * the registry holds it, and the registry re-check inside the lock
-    * preserves the concurrent-allocation guarantee. `keyTable` is
-    * wherever the tier stores its `batch_key` column: the state table
-    * itself for [[MergeTables]] tiers, `table_s` / `table_sv_g` for the
-    * BM25 / ADC generation-protocol tiers.
+    * in one driver collision-free (a concurrent loop sharing any one of
+    * the tables sees the joint max). The committed reads run OUTSIDE
+    * the monitor ([[storedLineageMax]] runs Spark jobs); the joint max
+    * and the registration hold it once. A key table is wherever the
+    * tier stores its `batch_key` column: the state table itself for
+    * [[MergeTables]] tiers, `table_s` / `table_sv_g` for the BM25 /
+    * ADC tiers.
     *
     * SCOPE: two concurrent streaming writers in SEPARATE driver
     * processes against one table are outside the registry — the
     * [[acquireWriterLease]] lease turns that documented rule into an
     * enforced one. */
-  def allocLineage(spark: SparkSession, keyTable: String): Long = {
-    val stored = storedLineageMax(spark, keyTable)
-    synchronized {
-      val next = math.max(stored, liveLineages.getOrElse(keyTable, 0L)) + 1
-      liveLineages(keyTable) = next
-      next
-    }
-  }
-
-  /** Allocate ONE lineage id valid across SEVERAL tables (the
-    * multi-table maintenance loop, [[DatasetCard.startMaintain]]): the
-    * max of each table's next candidate, REGISTERED on every table —
-    * without that registration a concurrent loop sharing one of the
-    * tables could draw the same id (its own table's registry never saw
-    * the max) and its batches would be silently skipped as the other
-    * loop's replays. The committed reads run outside the monitor
-    * ([[storedLineageMax]]); the joint max + registration hold it
-    * once. */
-  def allocLineageAcross(spark: SparkSession, tables: Seq[String])
-      : Long = {
-    require(tables.nonEmpty, "no tables")
-    val stored = tables.map(storedLineageMax(spark, _))
+  def allocLineage(spark: SparkSession, keyTables: String*): Long = {
+    require(keyTables.nonEmpty, "no key tables")
+    val stored = keyTables.map(storedLineageMax(spark, _))
     synchronized {
       val next = (stored ++
-        tables.map(liveLineages.getOrElse(_, 0L))).max + 1
-      tables.foreach(t => liveLineages(t) = next)
+        keyTables.map(liveLineages.getOrElse(_, 0L))).max + 1
+      keyTables.foreach(t => liveLineages(t) = next)
       next
     }
   }
@@ -315,8 +307,9 @@ private[graft] object MergeTables {
   }
 
   /** The retirement FLOOR of `keyTable`'s replay marks: every lineage
-    * at/below it was retired at a compaction ([[retireHwms]]) — its
-    * exact marks are gone and [[replayed]]/[[streamAppend]] refuse it.
+    * at/below it was retired at a compaction ([[carryHwms]]) — its
+    * exact marks are gone and [[replayed]]/[[startKeyedStream]]
+    * refuse it.
     * −1 when nothing was ever retired. */
   private[graft] def hwmFloor(spark: SparkSession, keyTable: String)
       : Long = {
@@ -331,95 +324,115 @@ private[graft] object MergeTables {
     }
   }
 
-  /** The ONE streamed-append loop every MergeTables tier shares:
-    * per micro-batch, derive the tier's state via `stateOf` and land
-    * it under the deterministic (lineage, batchId) key unless that key
-    * already committed. A per-run memo of committed batchIds
-    * short-circuits the table probe when foreachBatch re-delivers
-    * within the run; the table check stays authoritative (it alone
-    * survives a driver restart). Returns the started query — callers
-    * own the trigger cadence.
-    *
-    * Replay exactness holds WITHIN a lineage (the only place
-    * foreachBatch can re-deliver a batchId through this API), and
-    * since r16 it survives mid-lineage compactions ([[hwmTable]]). A
-    * query that DIES and is re-run from scratch gets a fresh lineage
-    * and re-reads its source from offset 0 — on the additive tiers
-    * that double-counts, by design of the scope. A caller who needs
-    * crash-RESUME passes `checkpointLocation` ALONE: the lineage id is
-    * persisted UNDER the checkpoint at first start
-    * ([[lineageAt]]) and read back on resume, so Spark resumes
-    * offsets/batchIds and the resumed batchIds hit the committed keys
-    * of the original lineage and skip exactly — no separate id to
-    * persist, no mismatched-lineage double-count hole. An EXPLICIT
-    * `lineage` that contradicts the checkpoint's persisted id refuses
-    * loudly. The writer lease ([[acquireWriterLease]]) is held for the
-    * query's lifetime, enforcing the single-writer-process rule. */
-  def streamAppend(stream: DataFrame, keyCol: String, table: String,
+  /** The streamed append of the MergeTables tiers: per micro-batch,
+    * derive the tier's state via `stateOf` and land it under the
+    * batch's commit key unless that key already committed
+    * ([[appendBatch]]), through [[startKeyedStream]] with the state
+    * table as the one key table. Returns the started query — callers
+    * own the trigger cadence. */
+  def streamAppend(stream: DataFrame, table: String,
       checkpointLocation: Option[String] = None,
       lineage: Option[Long] = None)
       (stateOf: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startKeyedStream(stream, Seq(table), checkpointLocation, lineage) {
+      (batch, batchId, lin) =>
+        appendBatch(batch, batchId, table, lin)(stateOf)
+    }
+
+  /** The ONE lease-holding streamed-append loop every keyed tier shares
+    * (the MergeTables tiers, BM25 with key table `table_s`, ADC with
+    * `table_sv_g`, and the four-table [[DatasetCard.startMaintain]]):
+    * resolve the lineage, hold the writer lease on `keyTables` for the
+    * query's lifetime (enforcing the single-writer-process rule), skip
+    * batch ids this query already committed, and run `body(batch,
+    * batchId, lineage)` — (lineage, batchId) is the batch's commit key
+    * ([[streamKey]]), which the body's own replay check consults. The
+    * per-run memo of committed batchIds short-circuits the table probe
+    * when foreachBatch re-delivers within the run; the body's table
+    * check stays authoritative (it alone survives a driver restart).
+    *
+    * Replay exactness holds WITHIN a lineage (the only place
+    * foreachBatch can re-deliver a batchId), and since r16 it survives
+    * mid-lineage compactions ([[hwmTable]]). A query that DIES and is
+    * re-run from scratch gets a fresh lineage and re-reads its source
+    * from offset 0 — on the additive tiers that double-counts, by
+    * design of the scope. A caller who needs crash-RESUME passes
+    * `checkpointLocation` ALONE: the lineage id is persisted UNDER the
+    * checkpoint at first start ([[lineageAt]]) and read back on resume,
+    * so Spark resumes offsets/batchIds and the resumed batchIds hit the
+    * committed keys of the original lineage and skip exactly. An
+    * EXPLICIT `lineage` that contradicts the checkpoint's persisted id
+    * refuses loudly. */
+  private[graft] def startKeyedStream(stream: DataFrame,
+      keyTables: Seq[String], checkpointLocation: Option[String] = None,
+      lineage: Option[Long] = None)
+      (body: (DataFrame, Long, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = stream.sparkSession
-    val lin = resolveLineage(spark, table, checkpointLocation, lineage)
+    val lin = resolveLineage(spark, keyTables, checkpointLocation, lineage)
     val committed =
       java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
     val w = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!committed.contains(batchId)) {
-          appendBatch(batch, batchId, keyCol, table, lin)(stateOf)
+          body(batch, batchId, lin)
           committed.add(batchId)
           ()
         }
       }
     checkpointLocation.foreach(p => w.option("checkpointLocation", p))
-    startLeased(spark, Seq(table))(w.start())
+    startLeased(spark, keyTables)(w.start())
   }
 
-  /** The lineage a streamed append runs under. With a checkpoint, the
+  /** The lineage a keyed stream runs under. With a checkpoint, the
     * id lives BESIDE the checkpoint (`graft_lineage` under the
     * checkpoint dir) so resume-by-checkpoint-alone is the whole API:
     * first start allocates and persists, resume reads back; an
     * explicit id must match the persisted one (a silent mismatch
     * would re-append the original lineage's committed batches under
     * fresh keys — the exact double-count this file exists to
-    * prevent). Every path registers the id in the in-process registry
-    * ([[registerLineage]]). */
-  private def resolveLineage(spark: SparkSession, table: String,
+    * prevent). Every path registers the id on every key table in the
+    * in-process registry ([[registerLineage]]). */
+  private def resolveLineage(spark: SparkSession, keyTables: Seq[String],
       checkpointLocation: Option[String], explicit: Option[Long])
-      : Long = checkpointLocation match {
-    case None =>
-      explicit.map { l => registerLineage(table, l); l }
-        .getOrElse(allocLineage(spark, table))
-    case Some(cp) =>
-      lineageAt(spark, cp) match {
-        case Some(p) =>
-          require(explicit.forall(_ == p),
-            s"explicit lineage ${explicit.get} contradicts the id " +
-              s"persisted under checkpoint $cp (lineage $p) — resuming " +
-              "under a different lineage would re-append the original " +
-              "lineage's committed batches; pass the checkpoint alone")
-          // a lineage RETIRED at compaction (resume horizon) has no
-          // exact replay marks left — refuse the resume up front with
-          // the remedy, rather than throwing mid-batch
-          val f = hwmFloor(spark, table)
-          require(p > f,
-            s"checkpoint $cp resumes lineage $p, which was retired at " +
-              s"compaction (retirement floor $f, graft.hwm.keepLineages)" +
-              " — its replay marks are gone; delete the checkpoint and " +
-              "start a fresh lineage")
-          registerLineage(table, p)
-          p
-        case None =>
-          val l = explicit.map { e => registerLineage(table, e); e }
-            .getOrElse(allocLineage(spark, table))
-          persistLineage(spark, cp, l)
-          l
-      }
+      : Long = {
+    def registered(l: Long): Long = {
+      keyTables.foreach(registerLineage(_, l)); l
+    }
+    checkpointLocation match {
+      case None =>
+        explicit.map(registered)
+          .getOrElse(allocLineage(spark, keyTables: _*))
+      case Some(cp) =>
+        lineageAt(spark, cp) match {
+          case Some(p) =>
+            require(explicit.forall(_ == p),
+              s"explicit lineage ${explicit.get} contradicts the id " +
+                s"persisted under checkpoint $cp (lineage $p) — resuming " +
+                "under a different lineage would re-append the original " +
+                "lineage's committed batches; pass the checkpoint alone")
+            // a lineage RETIRED at compaction (resume horizon) has no
+            // exact replay marks left — refuse the resume up front with
+            // the remedy, rather than throwing mid-batch
+            val f = keyTables.map(hwmFloor(spark, _)).max
+            require(p > f,
+              s"checkpoint $cp resumes lineage $p, which was retired at " +
+                s"compaction (retirement floor $f, graft.hwm.keepLineages)" +
+                " — its replay marks are gone; delete the checkpoint and " +
+                "start a fresh lineage")
+            registered(p)
+          case None =>
+            val l = explicit.map(registered)
+              .getOrElse(allocLineage(spark, keyTables: _*))
+            persistLineage(spark, cp, l)
+            l
+        }
+    }
   }
 
   /** The lineage id persisted under `checkpointLocation` by a prior
-    * [[streamAppend]] start, if any. */
+    * [[startKeyedStream]] start, if any. */
   private[graft] def lineageAt(spark: SparkSession, cp: String)
       : Option[Long] = {
     val p = lineagePath(cp)
@@ -469,24 +482,34 @@ private[graft] object MergeTables {
     * `lineage` to 0 so replay specs can re-deliver a batchId
     * directly). */
   private[graft] def appendBatch(batch: DataFrame, batchId: Long,
-      keyCol: String, table: String, lineage: Long)
-      (stateOf: DataFrame => DataFrame): Unit = withTableLock(table) {
-    // the replay probe runs INSIDE the mutation lock (ADVICE r16): a
-    // concurrent same-process compactor's intentional DROP->RENAME
-    // window must not be visible here — the probe's own heal would
-    // race the compactor's RENAME (making it throw), or the live-key
-    // read could land inside the swap window and throw itself. The
-    // lock is reentrant, so the append's own hold nests.
+      table: String, lineage: Long)
+      (stateOf: DataFrame => DataFrame): Unit =
+    landOnce(batch.sparkSession, table, table, lineage, batchId)(
+      append(stateOf(batch), table, _))
+
+  /** The keyed skip of every streamed batch: under `table`'s mutation
+    * lock, run `land(key)` with the batch's commit key unless that key
+    * already committed into `keyTable` ([[replayed]]) — the state table
+    * itself here, `table_s` for BM25, `table_sv_g` for ADC (`keyTable`
+    * is by-name so a tier can resolve it under the lock). The replay
+    * probe runs INSIDE the lock (ADVICE r16): a concurrent same-process
+    * compactor's intentional DROP->RENAME window must not be visible
+    * here — the probe's own heal would race the compactor's RENAME
+    * (making it throw), or the live-key read could land inside the
+    * swap window and throw itself. The lock is reentrant, so the
+    * landing's own hold nests. */
+  private[graft] def landOnce(spark: SparkSession, table: String,
+      keyTable: => String, lineage: Long, batchId: Long)
+      (land: Long => Unit): Unit = withTableLock(table) {
     val key = streamKey(lineage, batchId)
-    if (!replayed(batch.sparkSession, table, key))
-      append(stateOf(batch), keyCol, table, key)
+    if (!replayed(spark, keyTable, key)) land(key)
   }
 
   /** [[streamAppend]] drained to completion — the blocking form the
     * tiers' `streamAppend*Table` wrappers share. */
-  def streamAppendBlocking(stream: DataFrame, keyCol: String,
-      table: String)(stateOf: DataFrame => DataFrame): Unit = {
-    val q = streamAppend(stream, keyCol, table)(stateOf)
+  def streamAppendBlocking(stream: DataFrame, table: String)
+      (stateOf: DataFrame => DataFrame): Unit = {
+    val q = streamAppend(stream, table)(stateOf)
     try q.processAllAvailable() finally q.stop()
   }
 
@@ -939,7 +962,7 @@ private[graft] object MergeTables {
     * its lifetime: acquire before start, release on the termination
     * event (or immediately if the start itself fails / the query is
     * already gone); a heartbeat renewal rides the same lifetime.
-    * Shared by [[streamAppend]] and [[DatasetCard.startMaintain]]. */
+    * The lease step of [[startKeyedStream]]. */
   private[graft] def startLeased(spark: SparkSession,
       tables: Seq[String])(
       start: => org.apache.spark.sql.streaming.StreamingQuery)
@@ -1103,14 +1126,19 @@ private[graft] object MergeTables {
     * 64 appends to noise. */
   val defaultMaxGen = 64
 
-  /** If a prior [[compact]] crashed between its DROP and RENAME —
-    * the one crash window the swap has — the data survives under the
-    * shadow name with no table at the live name. Finishing the rename
-    * IS the recovery (the shadow holds the complete merged state, by
-    * construction), so every write/probe entry point runs this first
-    * and the window heals on next touch instead of stranding the
-    * table. No-op unless exactly that state is found. Also applied to
-    * the [[hwmTable]] sidecar, which swap-writes the same way. */
+  /** The ONE heal: if a prior swap ([[swapInKeyed]] — a compaction, a
+    * sidecar collapse, a retrain or reshard commit, on any tier)
+    * crashed between its DROP and RENAME — the one crash window the
+    * swap has — the data survives under the shadow name with no table
+    * at the live name. Finishing the rename IS the recovery (the shadow
+    * holds the complete new state, by construction), so every
+    * write/probe entry point runs this first and the window heals on
+    * next touch instead of stranding the table. Sound for the index
+    * tiers' side tables too: a compacted index is generation 0 of the
+    * active epoch, committed in every reachable state of its commit
+    * table, and an un-dropped tombstone table is inert against rows
+    * the rewrite already excluded. No-op unless exactly that state is
+    * found. */
   private[graft] def recoverCompactCrash(spark: SparkSession,
       table: String): Unit = {
     val shadow = table + "_compact_shadow"
@@ -1120,13 +1148,12 @@ private[graft] object MergeTables {
   }
 
   /** Finish a shadow swap's RENAME, tolerating a concurrent finisher:
-    * a probe-path heal ([[recoverCompactCrash]]/[[recoverCmpSwapCrash]]
-    * — probes hold no lock) can land inside a swapper's DROP→RENAME
-    * window and complete the rename first, in which case the loser's
-    * rename throws while exactly the state it wanted already holds —
-    * re-check and accept instead of reporting a completed swap as a
-    * failure. Throws only when the live name is still missing (a real
-    * failure). */
+    * a probe-path heal ([[recoverCompactCrash]] — probes hold no lock)
+    * can land inside a swapper's DROP→RENAME window and complete the
+    * rename first, in which case the loser's rename throws while
+    * exactly the state it wanted already holds — re-check and accept
+    * instead of reporting a completed swap as a failure. Throws only
+    * when the live name is still missing (a real failure). */
   private[graft] def renameInto(spark: SparkSession, shadow: String,
       table: String): Unit = {
     try spark.sql(s"ALTER TABLE `$shadow` RENAME TO `$table`")
@@ -1137,35 +1164,8 @@ private[graft] object MergeTables {
     spark.catalog.refreshTable(table)
   }
 
-  /** Heal the INDEX tiers' compaction swap window (the
-    * [[recoverCompactCrash]] discipline with their `_cmp` shadow
-    * naming): a compactor crash between its DROP and RENAME leaves the
-    * complete rewrite under `table_cmp` with no table at the live name
-    * — finishing the rename IS the recovery. Sound because the side
-    * tables stay consistent either way: the compacted rows are all
-    * generation 0 of the active epoch, which is committed in every
-    * reachable state of the scalar/generation tables, and an
-    * un-dropped tombstone table is inert against rows the rewrite
-    * already excluded. (Since r17 the ADC RETRAIN needs no heal of its
-    * own: its only swap is `table_sv_g`'s — the single commit point —
-    * healed by [[recoverCompactCrash]] like every sidecar's; every
-    * other retrain land is inert until that flip.) No-op unless
-    * exactly the crash state is found. */
-  private[graft] def recoverCmpSwapCrash(spark: SparkSession,
-      table: String): Unit = {
-    val shadow = table + "_cmp"
-    if (!spark.catalog.tableExists(table) &&
-        spark.catalog.tableExists(shadow))
-      renameInto(spark, shadow, table)
-  }
-
-  /** Shadow-write `df` then swap it in at `table` — the crash-safe
-    * replace shared by [[compact]] (the state rewrite) and the
-    * high-water-mark sidecar rewrite: a crash before the DROP leaves
-    * the old table fully live (the shadow is invisible and overwritten
-    * by the next attempt); a crash BETWEEN the DROP and the RENAME
-    * leaves the complete state under the shadow name, healed on next
-    * touch ([[recoverCompactCrash]]). */
+  /** [[swapInKeyed]] of a protocol-column-free frame as generation 0 —
+    * [[compact]]'s state rewrite and the high-water-mark sidecar. */
   private def swapIn(spark: SparkSession, df: DataFrame,
       keyCol: String, table: String): Unit =
     swapInKeyed(spark,
@@ -1173,16 +1173,26 @@ private[graft] object MergeTables {
       keyCol, table)
 
   /** [[swapIn]] for a frame that already carries its own protocol
-    * columns — the shared shadow-then-rename replace, healed by
-    * [[recoverCompactCrash]]. Used directly by the ADC retrain's
-    * single-commit `table_sv_g` flip. */
+    * columns — THE swap of every tier: the index compactions (BM25
+    * postings, the ADC layout, minhash band rows), the `_s`/`_sv_g`
+    * commit-table collapses and flips, sidecars, and MergeTables state.
+    * The shadow keeps the live table's bucket count (from the catalog;
+    * 1 for a first creation), one writer task per bucket so each bucket
+    * lands as one file — a bucket-preserving read of the live table
+    * ([[graft.sources.MapFiles.readBucketed]]) already satisfies that
+    * distribution, so the rewrite plans exchange-free. Healed by
+    * [[recoverCompactCrash]]. */
   private[graft] def swapInKeyed(spark: SparkSession, df: DataFrame,
       keyCol: String, table: String): Unit = {
     val shadow = table + "_compact_shadow"
+    val buckets = graft.sources.MapFiles.bucketsOf(spark, table)
     // MapFiles.write DROPs + stale-cleans the shadow name itself, so a
     // stale shadow directory left by a process killed mid-swap under a
     // different metastore lifetime cannot refuse this write
-    graft.sources.MapFiles.write(df.coalesce(1), keyCol, 1, shadow)
+    graft.sources.MapFiles.write(
+      if (buckets == 1) df.coalesce(1)
+      else df.repartition(buckets, col(keyCol)),
+      keyCol, buckets, shadow)
     if (spark.catalog.tableExists(table))
       spark.sql(s"DROP TABLE `$table`")
     else
@@ -1222,15 +1232,16 @@ private[graft] object MergeTables {
   }
 
   /** Fold every lineage's max committed batchId — live keys of
-    * `keyTable` plus any prior marks — into the [[hwmTable]] sidecar.
-    * The step every key-clearing rewrite runs FIRST: [[compact]] on
-    * the MergeTables tiers, and the index tiers' compactions/retrain
-    * (their keys live in `table_s` / `table_sv_g`). Safe under every
-    * crash ordering because committed-ness is permanent: a crash after
-    * the mark write leaves the old keys live AND marked — both answers
-    * agree. */
-  private[graft] def carryHwms(spark: SparkSession, keyTable: String)
-      : Unit = {
+    * `keyTable` plus any prior marks — into the [[hwmTable]] sidecar
+    * (`into`: the key table's own, or a reshard's next-generation key
+    * table's). The step every key-clearing rewrite runs FIRST:
+    * [[compact]] on the MergeTables tiers, and the index tiers'
+    * compactions, retrain and reshard (their keys live in `table_s` /
+    * `table_sv_g`). Safe under every crash ordering because
+    * committed-ness is permanent: a crash after the mark write leaves
+    * the old keys live AND marked — both answers agree. */
+  private[graft] def carryHwms(spark: SparkSession, keyTable: String,
+      into: Option[String] = None): Unit = {
     val ht = hwmTable(keyTable)
     recoverCompactCrash(spark, ht)
     val base = Similarity.streamBatchKeyBase
@@ -1262,37 +1273,22 @@ private[graft] object MergeTables {
       case None => folded.localCheckpoint()
       case Some(k) => retiredMarks(spark, folded, k.toInt)
     }
-    if (!hwms.isEmpty) swapIn(spark, hwms, "lineage", ht)
+    if (!hwms.isEmpty)
+      swapIn(spark, hwms, "lineage", into.getOrElse(ht))
   }
 
-  /** Prune `keyTable`'s replay marks to the `keep` NEWEST lineages,
-    * folding everything older into one FLOOR row
-    * (`(maxRetiredLineage, Long.MaxValue)`): retained lineages keep
-    * exact replay detection; retired ones are REFUSED on resume
-    * ([[replayed]]/[[resolveLineage]]) instead of silently
+  /** `folded` (lineage, hwm) marks pruned to the `keep` NEWEST REAL
+    * lineages, everything older folded into one FLOOR row
+    * (`(maxRetiredLineage, Long.MaxValue)`) — the retirement
+    * [[carryHwms]] applies at every compaction when
+    * `graft.hwm.keepLineages` is declared on the session. Retained
+    * lineages keep exact replay detection; retired ones are REFUSED on
+    * resume ([[replayed]]/[[resolveLineage]]) instead of silently
     * double-counted, and [[allocLineage]] can never re-issue a retired
-    * id (the floor row keeps the max). The explicit form of the
-    * retirement [[carryHwms]] applies at every compaction when
-    * `graft.hwm.keepLineages` is declared on the session. Declare a
-    * horizon LARGER than the number of concurrently live lineages: an
-    * active lineage retired mid-stream fails its next batch loudly
-    * (the refusal above) — by design, but a correctly sized horizon
-    * never retires a live writer. */
-  def retireHwms(spark: SparkSession, keyTable: String, keep: Int)
-      : Unit = withTableLock(keyTable) {
-    val ht = hwmTable(keyTable)
-    recoverCompactCrash(spark, ht)
-    if (spark.catalog.tableExists(ht)) {
-      spark.catalog.refreshTable(ht)
-      val marks = retiredMarks(spark,
-        spark.table(ht).select("lineage", "hwm"), keep)
-      if (!marks.isEmpty) swapIn(spark, marks, "lineage", ht)
-    }
-  }
-
-  /** `folded` (lineage, hwm) marks with only the `keep` newest REAL
-    * lineages retained and the rest folded into the floor row. Runs on
-    * a driver-side collect — the mark set is lineage-count-bounded by
+    * id (the floor row keeps the max). Declare a horizon LARGER than
+    * the number of concurrently live lineages: an active lineage
+    * retired mid-stream fails its next batch loudly. Runs on a
+    * driver-side collect — the mark set is lineage-count-bounded by
     * contract (that bound is the reason retirement exists). */
   private def retiredMarks(spark: SparkSession, folded: DataFrame,
       keep: Int): DataFrame = {

@@ -61,8 +61,7 @@ object Samples {
   def appendSampleTable(df: DataFrame, idCol: String, k: Int,
       table: String): Unit =
     MergeTables.append(
-      hashSampleTopK(df, idCol, k).withColumn("kcap", lit(k.toLong)),
-      "hk", table)
+      hashSampleTopK(df, idCol, k).withColumn("kcap", lit(k.toLong)), table)
 
   /** The shallowest cut any stored generation was taken at — the
     * deepest rank the maintained sample can answer exactly. Reads via
@@ -102,14 +101,6 @@ object Samples {
       sampleFromTable(spark, table, k)
         .withColumn("kcap", lit(k.toLong)))
 
-  /** [[compactSampleTable]] iff more than `maxGen` generations
-    * accumulated — the maintenance-loop policy
-    * ([[MergeTables.maybeCompactWith]]). */
-  def maybeCompactSampleTable(spark: SparkSession, table: String,
-      k: Int, maxGen: Int = MergeTables.defaultMaxGen): Boolean =
-    MergeTables.maybeCompactWith(spark, table, maxGen)(
-      compactSampleTable(spark, table, k))
-
   /** STRATIFIED sample: per group, the k ids with the smallest seeded
     * hash — the per-source eval holdout (every source represented, the
     * q57 stratified-split shape as a BOUNDED maintained artifact). The
@@ -148,8 +139,7 @@ object Samples {
       idCol: String, k: Int, table: String): Unit =
     MergeTables.append(
       groupedHashSampleTopK(df, groupCol, idCol, k)
-        .withColumn("kcap", lit(k.toLong)),
-      "hk", table)
+        .withColumn("kcap", lit(k.toLong)), table)
 
   /** The maintained stratified sample: per-group min-k over every
     * stored generation, id-deduped first (the [[sampleFromTable]]
@@ -221,27 +211,20 @@ object Samples {
   private[graft] def streamAppendGroupedSampleBatch(batch: DataFrame,
       batchId: Long, groupCol: String, idCol: String, k: Int,
       table: String, lineage: Long = 0L): Unit =
-    MergeTables.appendBatch(batch, batchId, "hk", table, lineage)(
+    MergeTables.appendBatch(batch, batchId, table, lineage)(
       groupedCandidatesOf(groupCol, idCol, k))
 
   /** [[appendGroupedSampleTable]] with the DOCUMENTS ARRIVING AS A
     * STREAM — per-micro-batch per-group candidates; the probe's
     * id-dedup keeps even unkeyed replays exact (min-k algebra).
-    * Blocks until drained. */
-  def streamAppendGroupedSampleTable(docStream: DataFrame,
-      groupCol: String, idCol: String, k: Int, table: String): Unit =
-    MergeTables.streamAppendBlocking(docStream, "hk", table)(
-      groupedCandidatesOf(groupCol, idCol, k))
-
-  /** The started-but-undrained form of
-    * [[streamAppendGroupedSampleTable]]. */
+    * Returns the started query; the caller owns the trigger cadence. */
   def startStreamAppendGroupedSampleTable(docStream: DataFrame,
       groupCol: String, idCol: String, k: Int, table: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    MergeTables.streamAppend(docStream, "hk", table)(
+    MergeTables.streamAppend(docStream, table)(
       groupedCandidatesOf(groupCol, idCol, k))
 
-  /** The per-micro-batch body of [[startStreamAppendSampleTable]],
+  /** The per-micro-batch body of [[streamAppendSampleTable]],
     * exposed for the replay spec. The batch key is storage hygiene
     * here (a skipped replay writes no duplicate file); correctness
     * never depended on it — the probe's id-dedup makes min-k
@@ -252,7 +235,7 @@ object Samples {
 
   private[graft] def streamAppendSampleBatch(batch: DataFrame,
       batchId: Long, idCol: String, k: Int, table: String): Unit =
-    MergeTables.appendBatch(batch, batchId, "hk", table, 0L)(
+    MergeTables.appendBatch(batch, batchId, table, 0L)(
       candidatesOf(idCol, k))
 
   /** [[appendSampleTable]] with the DOCUMENTS ARRIVING AS A STREAM:
@@ -260,13 +243,6 @@ object Samples {
     * drained. */
   def streamAppendSampleTable(docStream: DataFrame, idCol: String,
       k: Int, table: String): Unit =
-    MergeTables.streamAppendBlocking(docStream, "hk", table)(
-      candidatesOf(idCol, k))
-
-  /** The started-but-undrained form of [[streamAppendSampleTable]]. */
-  def startStreamAppendSampleTable(docStream: DataFrame, idCol: String,
-      k: Int, table: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MergeTables.streamAppend(docStream, "hk", table)(
+    MergeTables.streamAppendBlocking(docStream, table)(
       candidatesOf(idCol, k))
 }

@@ -28,13 +28,6 @@ object Similarity {
     * per-pair allocation). */
   def dot(a: Column, b: Column): Column = VectorOps.vecDot(a, b)
 
-  /** The declarative reference form, kept for spec cross-validation. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(transform(a, _.cast("double")), transform(b, _.cast("double")),
-        _ * _),
-      lit(0.0), _ + _)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Vectors annotated with their L2 norm (computed once, pre-join). */
@@ -802,15 +795,16 @@ object Similarity {
   private def dropStaleShardGens(spark: SparkSession, table: String,
       liveGen: Long): Unit = {
     val q = java.util.regex.Pattern.quote(table)
-    val gen0 = s"^${q}_sv(_c|_g|_g_hwm|_t|_cmp)?$$".r
-    val genR = s"^${q}_r(\\d+)_sv(_c|_g|_g_hwm|_t|_cmp)?$$".r
+    val tail = "(_c|_g|_g_hwm|_t)?(_compact_shadow)?$"
+    val gen0 = s"^${q}_sv$tail".r
+    val genR = s"^${q}_r(\\d+)_sv$tail".r
     spark.sessionState.catalog
       .listTables(spark.catalog.currentDatabase).map(_.table)
       .foreach { t =>
         val gen: Option[Long] = t match {
-          case genR(g, _) => Some(g.toLong)
-          case gen0(_)    => Some(0L)
-          case _          => None
+          case genR(g, _, _) => Some(g.toLong)
+          case gen0(_, _)    => Some(0L)
+          case _             => None
         }
         if (gen.exists(_ != liveGen))
           spark.sql(s"DROP TABLE IF EXISTS `$t`")
@@ -851,7 +845,7 @@ object Similarity {
     val (nShards, rsgen) = readShardMeta(spark, table)
     val dataT = svDataTable(table, rsgen)
     val gt = dataT + "_g"
-    MergeTables.recoverCmpSwapCrash(spark, dataT)
+    MergeTables.recoverCompactCrash(spark, dataT)
     MergeTables.recoverCompactCrash(spark, gt)
     require(spark.catalog.tableExists(gt),
       s"$table has no generation table at $gt — not a sharded ADC index")
@@ -1140,7 +1134,8 @@ object Similarity {
       dropStaleShardGens(spark, table, liveGen = -1L)
     else {
       val q = java.util.regex.Pattern.quote(table)
-      val grammar = s"^${q}(_r\\d+)?_sv(_c|_g|_g_hwm|_t|_cmp)?$$"
+      val grammar =
+        s"^${q}(_r\\d+)?_sv(_c|_g|_g_hwm|_t)?(_compact_shadow)?$$"
       val colliding = spark.sessionState.catalog
         .listTables(spark.catalog.currentDatabase).map(_.table)
         .filter(_.matches(grammar))
@@ -1224,13 +1219,12 @@ object Similarity {
     * runs (float→double widening is exact; null elements read as 0.0
     * like the unsafe-row getters). The In filter reaches the scan,
     * where the gcell bloom filter and sorted min/max skip non-probed
-    * row groups. Batch plans only (a streaming probe side cannot be
-    * collected); skipped when the query side outgrows the snapshot cap
-    * or the set stops being selective. Result-identical by
+    * row groups. Batch plans only: a streaming probe side cannot be
+    * collected, so it keeps the join-only shape, as does a query side
+    * that outgrows the snapshot cap; the In filter is also skipped when
+    * the cell set stops being selective. Result-identical by
     * construction: a stored row whose cell no probe emits can never
-    * join. The snapshot collect is a Spark job at construction time; a
-    * plan-construction-only caller opts out with
-    * `graft.adc.pushdown=false` and keeps the join-only shape. */
+    * join. The snapshot collect is a Spark job at construction time. */
   private def svProbeCandidates(queries: DataFrame, idCol: String,
       vecCol: String, st: SvState, buckets: Int,
       cellsOf: Column => Column,
@@ -1238,9 +1232,7 @@ object Similarity {
     val spark = queries.sparkSession
     VectorOps.ensureRegistered(spark)
     val snapped: Option[Array[org.apache.spark.sql.Row]] =
-      if (queries.isStreaming ||
-          spark.conf.getOption("graft.adc.pushdown").contains("false"))
-        None
+      if (queries.isStreaming) None
       else {
         val rows = queries.select(col(idCol), col(vecCol))
           .limit(maxPushdownQueries + 1).collect()
@@ -1896,19 +1888,11 @@ object Similarity {
       vecCol: String, st: SvState, gen: Long): Unit = {
     val spark = newVecs.sparkSession
     VectorOps.ensureRegistered(spark)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(st.dataT))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(
-          s"${st.dataT} is not a bucketed index"))
-    val bc = svQuantBc(spark, st)
     val em = svEpochMap(st)
-    svPackedRows(newVecs, idCol, vecCol, bc, st.nShards, gen,
-        sh => element_at(em, sh))
-      .write.format("parquet").mode("append")
-      .option("parquet.bloom.filter.enabled#gcell", "true")
-      .bucketBy(buckets, "gcell").sortBy("gcell")
-      .saveAsTable(st.dataT)
+    graft.sources.MapFiles.append(
+      svPackedRows(newVecs, idCol, vecCol, svQuantBc(spark, st),
+        st.nShards, gen, sh => element_at(em, sh)),
+      st.dataT)
   }
 
   /** Step 2 — the commit: ONE single-file append of every shard's
@@ -1919,11 +1903,10 @@ object Similarity {
   private[graft] def svCommitGen(spark: SparkSession, st: SvState,
       gen: Long, batchKey: Long = -1L): Unit = {
     import spark.implicits._
-    (0 until st.nShards).map(s => (s, gen, batchKey, st.epochs(s)))
-      .toDF("shard", "gen", "batch_key", "epoch").coalesce(1)
-      .write.format("parquet").mode("append")
-      .bucketBy(1, "gen").sortBy("gen")
-      .saveAsTable(st.dataT + "_g")
+    graft.sources.MapFiles.append(
+      (0 until st.nShards).map(s => (s, gen, batchKey, st.epochs(s)))
+        .toDF("shard", "gen", "batch_key", "epoch").coalesce(1),
+      st.dataT + "_g")
   }
 
   /** Append a vector batch (qc3): ONE routed assignment pass, each
@@ -1968,35 +1951,29 @@ object Similarity {
       .saveAsTable(st.dataT + "_t")
   }
 
-  /** The foreachBatch body of the SHARDED streaming append: each
-    * micro-batch appends under the deterministic key of (`lineage`,
-    * `batchId`) unless that key is already committed — and since the
-    * commit is ONE file covering every shard, replay detection is
-    * whole-batch (the per-shard layout's shard-by-shard replay
-    * recovery is no longer needed: there is no state in which some
-    * shards committed a batch and others did not). */
+  /** The per-batch body of the streaming append, exposed for the
+    * replay spec: the batch append under its commit key unless
+    * `table_sv_g` already holds it ([[MergeTables.landOnce]]). The
+    * commit is ONE file covering every shard, so replay detection is
+    * whole-batch. */
   private[graft] def streamAppendAdcBatchSharded(batch: DataFrame,
       batchId: Long, idCol: String, vecCol: String, table: String,
       lineage: Long = 0L): Unit = {
     val spark = batch.sparkSession
-    val key = MergeTables.streamKey(lineage, batchId)
-    MergeTables.withTableLock(table) {
-      val st = svState(spark, table, fresh = true)
-      if (!MergeTables.replayed(spark, st.dataT + "_g", key)) {
-        val gen = graft.sources.MapFiles.freshGen()
-        svAppendRowsOnly(batch, idCol, vecCol, st, gen)
-        svCommitGen(spark, st, gen, key)
-      }
+    // resolved at its first use, the key-table read under the lock
+    lazy val st = svState(spark, table, fresh = true)
+    MergeTables.landOnce(spark, table, st.dataT + "_g", lineage,
+        batchId) { key =>
+      val gen = graft.sources.MapFiles.freshGen()
+      svAppendRowsOnly(batch, idCol, vecCol, st, gen)
+      svCommitGen(spark, st, gen, key)
     }
   }
 
   /** [[appendIvfAdcIndexSharded]] with the NEW VECTORS ARRIVING AS A
-    * STREAM (qe1, qg2): each micro-batch runs the batch append inside
-    * foreachBatch under a deterministic per-batch commit key
-    * ([[streamBatchKeyBase]]), so a replayed committed micro-batch is
-    * skipped — K streamed micro-batches == one one-shot append == a
-    * rebuild under the same quantizers (spec-gated). Drains the
-    * available stream and stops; the `start` form below owns the
+    * STREAM (qe1, qg2): K streamed micro-batches == one one-shot
+    * append == a rebuild under the same quantizers (spec-gated). Drains
+    * the available stream and stops; the `start` form below owns the
     * trigger cadence. */
   def streamAppendIvfAdcIndexSharded(vecStream: DataFrame,
       idCol: String, vecCol: String, table: String): Unit = {
@@ -2006,32 +1983,25 @@ object Similarity {
   }
 
   /** The started-but-undrained form of
-    * [[streamAppendIvfAdcIndexSharded]]. One lineage per started
-    * query, allocated from the ONE key table (the per-shard layout
-    * needed a cross-table allocation), and a reshard folds the marks
-    * into the new generation's mark table ([[reshardIvfAdcIndex]]) so
-    * the committed-lineage read survives the layout change. `maxGen`
-    * wires the unattended in-loop compaction (qfn's discipline —
-    * replay marks carried). The writer lease covers the key table for
-    * the life of the query, and since r20 a reshard REFUSES IN CODE
-    * while the lease is live (stop the query, reshard, restart; the
-    * carried marks make the restart replay-exact). */
+    * [[streamAppendIvfAdcIndexSharded]]: the one keyed-stream loop
+    * ([[MergeTables.startKeyedStream]]) with `table_sv_g` as its key
+    * table. A reshard folds the marks into the new generation's mark
+    * table and REFUSES IN CODE while the loop's lease is live (stop the
+    * query, reshard, restart; the carried marks make the restart
+    * replay-exact). `maxGen` wires the unattended in-loop compaction
+    * (qfn's discipline — replay marks carried). */
   def startStreamAppendIvfAdcIndexSharded(vecStream: DataFrame,
       idCol: String, vecCol: String, table: String,
       maxGen: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = vecStream.sparkSession
     val st = svState(spark, table, fresh = true)
-    val lineage = MergeTables.allocLineage(spark, st.dataT + "_g")
-    MergeTables.startLeased(spark, Seq(st.dataT + "_g"))(
-      vecStream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          streamAppendAdcBatchSharded(batch, batchId, idCol, vecCol,
-            table, lineage)
-          maxGen.foreach(mg =>
-            maybeCompactIvfAdcIndexSharded(spark, table, mg))
-        }
-        .start())
+    MergeTables.startKeyedStream(vecStream, Seq(st.dataT + "_g")) {
+      (batch, batchId, lineage) =>
+        streamAppendAdcBatchSharded(batch, batchId, idCol, vecCol, table,
+          lineage)
+        maxGen.foreach(mg => maybeCompactIvfAdcIndexSharded(spark, table, mg))
+    }
   }
 
   /** [[compactIvfAdcIndexSharded]] iff more than `maxGen` generations
@@ -2064,26 +2034,16 @@ object Similarity {
     for (s <- Seq("", "_g", "_t", "_c")
          if spark.catalog.tableExists(dataT + s))
       spark.catalog.refreshTable(dataT + s)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(dataT))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(
-          s"$dataT is not a bucketed index"))
-    // carry every streaming lineage's replay high-water mark BEFORE
-    // the generation reset clears the keys — what makes this
-    // compaction safe inside a live lineage (the r16 discipline)
+    // replay marks carried BEFORE the generation reset clears the keys
     MergeTables.carryHwms(spark, dataT + "_g")
     val em = svEpochMap(st)
-    // bucket-preserving read -> the bucketed sink plans exchange-free
-    val live = svLiveRows(spark, st, bucketedRead = true)
-      .select("gcell", "shard", "cell", "id", "qc", "scale")
-      .withColumn("gen", lit(0L))
-      .withColumn("epoch", element_at(em, col("shard")))
-      .repartition(buckets, col("gcell"))
-    val shadow = dataT + "_cmp"
-    graft.sources.MapFiles.write(live, "gcell", buckets, shadow)
-    spark.sql(s"DROP TABLE `$dataT`")
-    MergeTables.renameInto(spark, shadow, dataT)
+    // bucket-preserving read -> the bucketed swap plans exchange-free
+    MergeTables.swapInKeyed(spark,
+      svLiveRows(spark, st, bucketedRead = true)
+        .select("gcell", "shard", "cell", "id", "qc", "scale")
+        .withColumn("gen", lit(0L))
+        .withColumn("epoch", element_at(em, col("shard"))),
+      "gcell", dataT)
     import spark.implicits._
     MergeTables.swapInKeyed(spark,
       (0 until st.nShards).map(s => (s, 0L, -1L, st.epochs(s)))
@@ -2102,7 +2062,6 @@ object Similarity {
           .join(broadcast(actives), Seq("shard", "epoch"), "left_semi")
           .localCheckpoint(),
         "cell", dataT + "_c")
-    spark.catalog.refreshTable(dataT)
     invalidateSvCaches(table, dataT)
   }
 
@@ -2150,37 +2109,29 @@ object Similarity {
       vecCol, nlist, dim)
     // inert land 1: the attempt's centroids FIRST — they are also the
     // epoch allocation marker a retry must see
-    svCentroidRows(spark, Seq(shard -> quantizer), attempt)
-      .write.format("parquet").mode("append")
-      .bucketBy(1, "cell").sortBy("cell")
-      .saveAsTable(dataT + "_c")
+    graft.sources.MapFiles.append(
+      svCentroidRows(spark, Seq(shard -> quantizer), attempt),
+      dataT + "_c")
     // inert land 2: the shard's live vectors re-packed under (gen 0,
     // attempt) into the existing gcell buckets
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(dataT))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(
-          s"$dataT is not a bucketed index"))
     val bcQ = spark.sparkContext.broadcast(
       graft.functions.NearestCellsBc.quantizerOf(quantizer))
     try {
       val sc = VectorOps.maxAbs(col(vecCol))
-      live.select(
-          lit(shard).as("shard"),
-          element_at(graft.functions.NearestCellsBc(col(vecCol), bcQ,
-            1), 1).as("cell"),
-          col(idCol).as("id"),
-          VectorOps.packQuant(col(vecCol), sc).as("qc"), sc.as("scale"))
-        .select(
-          (col("shard").cast("long") * lit(4294967296L) +
-            col("cell").cast("long")).as("gcell"),
-          col("shard"), col("cell"), col("id"), col("qc"),
-          col("scale"))
-        .withColumn("gen", lit(0L)).withColumn("epoch", lit(attempt))
-        .write.format("parquet").mode("append")
-        .option("parquet.bloom.filter.enabled#gcell", "true")
-        .bucketBy(buckets, "gcell").sortBy("gcell")
-        .saveAsTable(dataT)
+      graft.sources.MapFiles.append(
+        live.select(
+            lit(shard).as("shard"),
+            element_at(graft.functions.NearestCellsBc(col(vecCol), bcQ,
+              1), 1).as("cell"),
+            col(idCol).as("id"),
+            VectorOps.packQuant(col(vecCol), sc).as("qc"), sc.as("scale"))
+          .select(
+            (col("shard").cast("long") * lit(4294967296L) +
+              col("cell").cast("long")).as("gcell"),
+            col("shard"), col("cell"), col("id"), col("qc"),
+            col("scale"))
+          .withColumn("gen", lit(0L)).withColumn("epoch", lit(attempt)),
+        dataT)
     } finally bcQ.unpersist(false)
     // committed streamed keys appear on EVERY shard's rows, so this
     // shard's reset alone cannot lose replay detection — but fold the
@@ -2283,40 +2234,18 @@ object Similarity {
     svBuildLayout(survivors, idCol, vecCol, dataT2, newShards, counts,
       dim, targetRecall, buckets, init, cents = Nil)
     // inert land 2: carry the replay marks — the old generation's live
-    // stream keys and prior marks, folded to max-per-lineage (floor
-    // rows ride along as MaxValue maxes), into the new generation's
-    // mark table
-    val base = streamBatchKeyBase
-    val kt = st.dataT + "_g"
-    val liveKeys = MergeTables.freshView(spark, kt)
-      .filter(col("batch_key") >= base)
-      .select(expr(s"shiftright(batch_key - ${base}L, 28)")
-          .as("lineage"),
-        expr(s"(batch_key - ${base}L) & ${(1L << 28) - 1}L").as("hwm"))
-    val ht = MergeTables.hwmTable(kt)
-    MergeTables.recoverCompactCrash(spark, ht)
-    val withPrior =
-      if (!spark.catalog.tableExists(ht)) liveKeys
-      else {
-        spark.catalog.refreshTable(ht)
-        liveKeys.unionByName(spark.table(ht).select("lineage", "hwm"))
-      }
-    val folded = withPrior
-      .groupBy("lineage").agg(max("hwm").as("hwm"))
-      .localCheckpoint()
-    try {
-      if (!folded.isEmpty)
-        MergeTables.swapInKeyed(spark, folded, "lineage",
-          MergeTables.hwmTable(dataT2 + "_g"))
-      // THE commit: one sidecar swap to (newShards, g2)
-      MergeTables.swapInKeyed(spark,
-        Seq((newShards, g2)).toDF("nshards", "rsgen"),
-        "nshards", table + "_sh")
-    } finally dropCheckpoint(folded)
+    // stream keys and prior marks, folded per lineage (floor rows ride
+    // along), into the new generation's mark table
+    MergeTables.carryHwms(spark, st.dataT + "_g",
+      into = Some(MergeTables.hwmTable(dataT2 + "_g")))
+    // THE commit: one sidecar swap to (newShards, g2)
+    MergeTables.swapInKeyed(spark,
+      Seq((newShards, g2)).toDF("nshards", "rsgen"), "nshards",
+      table + "_sh")
     invalidateSvCaches(table, st.dataT)
-    // post-commit GC, inert either way
-    for (sfx <- Seq("", "_c", "_g", "_g_hwm", "_t"))
-      spark.sql(s"DROP TABLE IF EXISTS `${st.dataT}$sfx`")
+    // post-commit GC, inert either way: the retired generation's tables
+    // and any swap shadows they left
+    dropStaleShardGens(spark, table, liveGen = g2)
   }
 
   /** Recall audit of a PERSISTED ADC index (qc3's drift gate): the

@@ -219,8 +219,7 @@ object Sketches {
     * ([[MergeTables.append]]). */
   def appendSketchTable(rows: DataFrame, valCol: Column, table: String,
       subBits: Int = defaultSubBits): Unit =
-    MergeTables.append(logBucketCounts(rows, valCol, subBits), "b_low",
-      table)
+    MergeTables.append(logBucketCounts(rows, valCol, subBits), table)
 
   /** [[appendSketchTable]] under a caller-supplied idempotence key
     * ([[MergeTables.appendKeyed]]): allocate a lineage once
@@ -233,7 +232,7 @@ object Sketches {
       table: String, lineage: Long, batchId: Long,
       subBits: Int = defaultSubBits): Boolean =
     MergeTables.appendKeyed(logBucketCounts(rows, valCol, subBits),
-      "b_low", table, lineage, batchId)
+      table, lineage, batchId)
 
   /** DELETE from a persisted sketch by additive retraction — the
     * approximate tier's member of the delete matrix (qd3/qd4/qd7),
@@ -254,8 +253,7 @@ object Sketches {
       subBits: Int = defaultSubBits): Unit =
     MergeTables.append(
       logBucketCounts(rows, valCol, subBits)
-        .withColumn("cnt", -col("cnt")),
-      "b_low", table)
+        .withColumn("cnt", -col("cnt")), table)
 
   /** Probe-time generation merge, shared by the probe and the
     * compactor ([[MergeTables.mergedSum]]: exact long sums per bucket,
@@ -331,8 +329,7 @@ object Sketches {
       valCol: Column, table: String,
       subBits: Int = defaultSubBits): Unit =
     MergeTables.append(
-      bucketCounts(rows, Seq((groupCol, "g")), valCol, subBits),
-      "b_low", table)
+      bucketCounts(rows, Seq((groupCol, "g")), valCol, subBits), table)
 
   /** Retract rows from a grouped sketch — [[retractSketchTable]]'s
     * contract per group. */
@@ -341,8 +338,7 @@ object Sketches {
       subBits: Int = defaultSubBits): Unit =
     MergeTables.append(
       bucketCounts(rows, Seq((groupCol, "g")), valCol, subBits)
-        .withColumn("cnt", -col("cnt")),
-      "b_low", table)
+        .withColumn("cnt", -col("cnt")), table)
 
   private def mergedGroupedBuckets(spark: SparkSession, table: String)
       : DataFrame =
@@ -386,7 +382,7 @@ object Sketches {
       .withColumn("cnt", -col("cnt"))
       .localCheckpoint()
     if (!expired.isEmpty)
-      MergeTables.append(expired, "b_low", table)
+      MergeTables.append(expired, table)
   }
 
   /** Per-group quantiles from a persisted grouped sketch — the shared
@@ -409,7 +405,7 @@ object Sketches {
   private[graft] def streamAppendGroupedSketchBatch(batch: DataFrame,
       batchId: Long, groupCol: Column, valCol: Column, table: String,
       subBits: Int = defaultSubBits, lineage: Long = 0L): Unit =
-    MergeTables.appendBatch(batch, batchId, "b_low", table, lineage)(
+    MergeTables.appendBatch(batch, batchId, table, lineage)(
       bucketCounts(_, Seq((groupCol, "g")), valCol, subBits))
 
   /** [[appendGroupedSketchTable]] with the rows ARRIVING AS A STREAM —
@@ -417,21 +413,13 @@ object Sketches {
     * per-lineage commit keys (replay no-op; the qf1 contract per
     * group). For the event-time windowed profile (qfa) this is the
     * watermark-free late-data path: a late event's batch lands one
-    * more exact +1 in its hour's bucket, whenever it arrives. Blocks
-    * until drained. */
-  def streamAppendGroupedSketchTable(stream: DataFrame,
-      groupCol: Column, valCol: Column, table: String,
-      subBits: Int = defaultSubBits): Unit =
-    MergeTables.streamAppendBlocking(stream, "b_low", table)(
-      bucketCounts(_, Seq((groupCol, "g")), valCol, subBits))
-
-  /** The started-but-undrained form of
-    * [[streamAppendGroupedSketchTable]]. */
+    * more exact +1 in its hour's bucket, whenever it arrives. Returns
+    * the started query; the caller owns the trigger cadence. */
   def startStreamAppendGroupedSketchTable(stream: DataFrame,
       groupCol: Column, valCol: Column, table: String,
       subBits: Int = defaultSubBits)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    MergeTables.streamAppend(stream, "b_low", table)(
+    MergeTables.streamAppend(stream, table)(
       bucketCounts(_, Seq((groupCol, "g")), valCol, subBits))
 
   /** The foreachBatch body of [[startStreamAppendSketchTable]], exposed
@@ -446,7 +434,7 @@ object Sketches {
   private[graft] def streamAppendSketchBatch(batch: DataFrame,
       batchId: Long, valCol: Column, table: String,
       subBits: Int = defaultSubBits, lineage: Long = 0L): Unit =
-    MergeTables.appendBatch(batch, batchId, "b_low", table, lineage)(
+    MergeTables.appendBatch(batch, batchId, table, lineage)(
       logBucketCounts(_, valCol, subBits))
 
   /** [[appendSketchTable]] with the VALUES ARRIVING AS A STREAM — the
@@ -460,7 +448,7 @@ object Sketches {
     * spec-gated). Blocks until the stream drains. */
   def streamAppendSketchTable(stream: DataFrame, valCol: Column,
       table: String, subBits: Int = defaultSubBits): Unit =
-    MergeTables.streamAppendBlocking(stream, "b_low", table)(
+    MergeTables.streamAppendBlocking(stream, table)(
       logBucketCounts(_, valCol, subBits))
 
   /** The started-but-undrained form of [[streamAppendSketchTable]] —
@@ -468,7 +456,7 @@ object Sketches {
   def startStreamAppendSketchTable(stream: DataFrame, valCol: Column,
       table: String, subBits: Int = defaultSubBits)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    MergeTables.streamAppend(stream, "b_low", table)(
+    MergeTables.streamAppend(stream, table)(
       logBucketCounts(_, valCol, subBits))
 
   /** [[logBucketQuantiles]] with the VALUES ARRIVING AS A STREAM — the

@@ -531,10 +531,6 @@ object TextAnalysis {
       "gen", 1, table + "_s")
   }
 
-  /** See [[graft.sources.MapFiles.freshGen]] — shared by both
-    * generation-committed index tiers. */
-  private def freshGen(): Long = graft.sources.MapFiles.freshGen()
-
   /** The probe-visible state of a persisted BM25 index: postings of
     * COMMITTED generations minus committed tombstones, plus the exact
     * integer corpus scalars `(n_docs, sum_dl)` summed over committed
@@ -551,7 +547,7 @@ object TextAnalysis {
     // compaction (qfm) the window is hit proportionally more often,
     // and this read is the first touch of every probe/append/delete.
     // The scalar table's own collapse swap (r17) heals the same way.
-    MergeTables.recoverCmpSwapCrash(spark, table)
+    MergeTables.recoverCompactCrash(spark, table)
     // Driver-side commit-set read (r22): `_s` is protocol-sized (one
     // delta row per committed operation, collapsed by compaction), and
     // resolving it IN-PLAN re-scanned the tiny sidecar once per
@@ -644,18 +640,35 @@ object TextAnalysis {
     * probe time, so no stored statistic can go stale. */
   def appendBm25Index(newDocs: DataFrame, idCol: String, textCol: String,
       table: String): Unit = MergeTables.withTableLock(table) {
-    val spark = newDocs.sparkSession
-    MergeTables.recoverCmpSwapCrash(spark, table)
-    require(spark.catalog.tableExists(table + "_s"),
-      s"$table has no scalar side table — not a BM25 index")
+    requireBm25(newDocs.sparkSession, table)
+    landBm25Gen(newDocs, idCol, textCol, table, batchKey = -1L)
+  }
+
+  /** Steps 2 and 3 of [[appendBm25Index]] under the operation's commit
+    * key: the batch's postings under a fresh generation, then the
+    * scalar-delta commit row. */
+  private def landBm25Gen(docs: DataFrame, idCol: String,
+      textCol: String, table: String, batchKey: Long): Unit = {
     // an all-filtered batch aggregates to (0, null sum) — coalesce
     // keeps the no-op append a no-op instead of an NPE
-    val add = corpusStats(newDocs, textCol)
+    val add = corpusStats(docs, textCol)
       .select(col("n_docs"), coalesce(col("sum_dl"), lit(0L)))
       .collect()(0)
-    val gen = freshGen()
-    appendPostingsOnly(newDocs, idCol, textCol, table, gen)
-    commitBm25Gen(spark, table, gen, add.getLong(0), add.getLong(1))
+    val gen = graft.sources.MapFiles.freshGen()
+    appendPostingsOnly(docs, idCol, textCol, table, gen)
+    commitBm25Gen(docs.sparkSession, table, gen, add.getLong(0),
+      add.getLong(1), batchKey)
+  }
+
+  /** The first step of every BM25 mutator: heal a crashed swap of
+    * either swapped table (postings, and the `_s` commit table the
+    * compaction collapses), then refuse a table that is not a BM25
+    * index. */
+  private def requireBm25(spark: SparkSession, table: String): Unit = {
+    MergeTables.recoverCompactCrash(spark, table)
+    MergeTables.recoverCompactCrash(spark, table + "_s")
+    require(spark.catalog.tableExists(table + "_s"),
+      s"$table has no scalar side table — not a BM25 index")
   }
 
   /** Step 2 of [[appendBm25Index]] — the postings-file append WITHOUT
@@ -663,18 +676,9 @@ object TextAnalysis {
     * protocol between steps and assert probes still see the exact
     * pre-append state. */
   private[graft] def appendPostingsOnly(newDocs: DataFrame, idCol: String,
-      textCol: String, table: String, gen: Long): Unit = {
-    val spark = newDocs.sparkSession
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(s"$table is not a bucketed index"))
-    postings(newDocs, idCol, textCol).withColumn("gen", lit(gen))
-      .write.mode("append")
-      .option("parquet.bloom.filter.enabled#term", "true")
-      .bucketBy(buckets, "term").sortBy("term")
-      .saveAsTable(table)
-  }
+      textCol: String, table: String, gen: Long): Unit =
+    graft.sources.MapFiles.append(
+      postings(newDocs, idCol, textCol).withColumn("gen", lit(gen)), table)
 
   /** Step 3 of [[appendBm25Index]] / [[deleteBm25Docs]] — the commit:
     * one scalar-delta row appended to `table_s` (single task, single
@@ -688,45 +692,24 @@ object TextAnalysis {
       gen: Long, nDocsDelta: Long, sumDlDelta: Long,
       batchKey: Long = -1L): Unit = {
     import spark.implicits._
-    Seq((gen, nDocsDelta, sumDlDelta, batchKey))
-      .toDF("gen", "n_docs", "sum_dl", "batch_key")
-      .coalesce(1).write.format("parquet").mode("append")
-      .bucketBy(1, "gen").sortBy("gen")
-      .saveAsTable(table + "_s")
+    graft.sources.MapFiles.append(
+      Seq((gen, nDocsDelta, sumDlDelta, batchKey))
+        .toDF("gen", "n_docs", "sum_dl", "batch_key").coalesce(1),
+      table + "_s")
   }
 
-  /** The foreachBatch body of [[startStreamAppendBm25Index]], exposed
-    * for the replay spec: run the gated batch append under the
-    * deterministic key of `batchId` unless that key is already
-    * committed (a replayed micro-batch — foreachBatch's at-least-once
-    * window between a commit and the checkpoint offset write — becomes
-    * an exact no-op; a crashed UNCOMMITTED attempt stays invisible and
-    * the retry lands under a fresh physical generation, the existing
-    * argument). */
+  /** The per-batch body of [[startStreamAppendBm25Index]], exposed
+    * for the replay spec: the gated batch append under the batch's
+    * commit key unless `table_s` already holds it
+    * ([[MergeTables.landOnce]]); a crashed UNCOMMITTED attempt stays
+    * invisible and the retry lands under a fresh generation. */
   private[graft] def streamAppendBm25Batch(batch: DataFrame,
       batchId: Long, idCol: String, textCol: String, table: String,
       lineage: Long = 0L): Unit = {
-    val spark = batch.sparkSession
-    val key = MergeTables.streamKey(lineage, batchId)
-    // live keys OR the compacted-away high-water marks — how replay
-    // exactness survives a mid-lineage compaction (r16, the qfh story
-    // on this tier; marks carried by compactBm25Index). The table lock
-    // keeps a concurrent same-process query's compaction from swapping
-    // this landing generation away (MergeTables.withTableLock) — and
-    // it covers the REPLAY PROBE too (ADVICE r16): probing outside it
-    // could observe (or heal) a concurrent compactor's intentional
-    // DROP->RENAME window mid-swap.
-    MergeTables.withTableLock(table) {
-      if (!MergeTables.replayed(spark, table + "_s", key)) {
-        MergeTables.recoverCmpSwapCrash(spark, table)
-        val add = corpusStats(batch, textCol)
-          .select(col("n_docs"), coalesce(col("sum_dl"), lit(0L)))
-          .collect()(0)
-        val gen = freshGen()
-        appendPostingsOnly(batch, idCol, textCol, table, gen)
-        commitBm25Gen(spark, table, gen, add.getLong(0),
-          add.getLong(1), key)
-      }
+    MergeTables.landOnce(batch.sparkSession, table, table + "_s",
+        lineage, batchId) { key =>
+      requireBm25(batch.sparkSession, table)
+      landBm25Gen(batch, idCol, textCol, table, key)
     }
   }
 
@@ -734,27 +717,15 @@ object TextAnalysis {
     * index MAINTENANCE as an online process (r12 verdict #6), closing
     * the loop the serving twins opened: qb4/qa6/qc4 stream the
     * QUERIES against static indexes; this streams the CORPUS INTO the
-    * index. Each micro-batch runs the gated batch append verbatim
-    * inside foreachBatch, committing its own generation. The
-    * generation protocol is what makes per-batch commits exact:
-    * scalar deltas are integer-additive in any order, batch postings
-    * concatenate (new documents never collide on (term, doc_id)), and
-    * a crashed micro-batch leaves an invisible orphan a restart
-    * re-appends under a fresh generation — so K streamed micro-batch
-    * appends == one one-shot append == a full rebuild, probe-exact
-    * (two-micro-batch MemoryStream spec; qd6 gates the grown index's
-    * probe against qb1's oracle verbatim). foreachBatch's OTHER crash
-    * window — replay of an already-committed batch when the crash
-    * lands between the commit and the checkpoint offset write — is
-    * closed by the deterministic per-batch commit key
-    * ([[streamAppendBm25Batch]], replay spec-gated): the replayed
-    * batch sees its key committed and no-ops. As on every tier, that
-    * exactness is scoped WITHIN A LINEAGE (one started query's life);
-    * a query re-RUN from scratch is a fresh lineage re-reading its
-    * source, and crash-RESUME callers wire a checkpointLocation plus
-    * their persisted lineage id through the foreachBatch form
-    * ([[MergeTables.streamAppend]]'s scope note, resume spec-gated on
-    * the MergeTables tier). */
+    * index. Each micro-batch runs the gated batch append under its
+    * commit key through the one keyed-stream loop
+    * ([[MergeTables.startKeyedStream]]; replay and lineage scope as
+    * documented there). Scalar deltas are integer-additive in any
+    * order and batch postings concatenate (new documents never collide
+    * on (term, doc_id)), so K streamed micro-batch appends == one
+    * one-shot append == a full rebuild, probe-exact (two-micro-batch
+    * MemoryStream spec; qd6 gates the grown index's probe against
+    * qb1's oracle verbatim). */
   def streamAppendBm25Index(docStream: DataFrame, idCol: String,
       textCol: String, table: String): Unit = {
     val q = startStreamAppendBm25Index(docStream, idCol, textCol, table)
@@ -767,26 +738,16 @@ object TextAnalysis {
   def startStreamAppendBm25Index(docStream: DataFrame, idCol: String,
       textCol: String, table: String, maxGen: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // a deterministic fresh lineage per started query (allocated from
-    // the commit table's own keys — MergeTables.allocLineage): batchIds
-    // restart at 0 for a new checkpoint lineage, so without this a
-    // SECOND streaming writer against the same index would see the
-    // first lineage's keys and silently skip its own early batches.
-    // The writer lease on the commit table enforces the
-    // single-writer-process rule for the index's whole tier.
+    // `table_s` is the key table; its lease covers the whole tier
     val spark = docStream.sparkSession
-    val lineage = MergeTables.allocLineage(spark, table + "_s")
-    MergeTables.startLeased(spark, Seq(table + "_s"))(
-      docStream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          streamAppendBm25Batch(batch, batchId, idCol, textCol, table,
-            lineage)
-          // the unattended policy (qfm): compaction is safe
-          // MID-LINEAGE since r16 — the rewrite carries the replay
-          // high-water marks
-          maxGen.foreach(mg => maybeCompactBm25Index(spark, table, mg))
-        }
-        .start())
+    MergeTables.startKeyedStream(docStream, Seq(table + "_s")) {
+      (batch, batchId, lineage) =>
+        streamAppendBm25Batch(batch, batchId, idCol, textCol, table,
+          lineage)
+        // the unattended policy (qfm): compaction is safe MID-LINEAGE
+        // since r16 — the rewrite carries the replay high-water marks
+        maxGen.foreach(mg => maybeCompactBm25Index(spark, table, mg))
+    }
   }
 
   /** [[compactBm25Index]] iff more than `maxGen` generations have
@@ -798,15 +759,10 @@ object TextAnalysis {
   def maybeCompactBm25Index(spark: SparkSession, table: String,
       maxGen: Int = MergeTables.defaultMaxGen): Boolean =
       MergeTables.withTableLock(table) {
-    // lock + heal BOTH swap windows before the threshold read, like the
-    // ADC sibling: the scalar table now swap-writes through its own
-    // shadow (a compactor crash between its DROP and RENAME would make
-    // the refresh/count throw instead of healing), and an unlocked
-    // threshold probe could race a concurrent same-process compactor's
-    // intentional DROP->RENAME window mid-swap
+    // locked and healed before the threshold read: an unlocked probe
+    // could race a same-process compactor's DROP->RENAME window
     require(maxGen >= 1, s"maxGen=$maxGen")
-    MergeTables.recoverCmpSwapCrash(spark, table)
-    MergeTables.recoverCompactCrash(spark, table + "_s")
+    requireBm25(spark, table)
     spark.catalog.refreshTable(table + "_s")
     if (spark.table(table + "_s").count() <= maxGen) false
     else { compactBm25Index(spark, table); true }
@@ -832,8 +788,7 @@ object TextAnalysis {
     * probe. */
   def deleteBm25Docs(spark: SparkSession, table: String, ids: DataFrame,
       idCol: String): Unit = MergeTables.withTableLock(table) {
-    require(spark.catalog.tableExists(table + "_s"),
-      s"$table has no scalar side table — not a BM25 index")
+    requireBm25(spark, table)
     val (live, _) = committedIndex(spark, table)
     val del = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
     // dl rides every posting row of a doc; distinct gives one (doc, dl)
@@ -843,12 +798,12 @@ object TextAnalysis {
     val agg = eff.agg(count(lit(1)).as("n"),
       coalesce(sum(col("dl").cast("long")), lit(0L)).as("s")).collect()(0)
     if (agg.getLong(0) == 0L) return // nothing live to delete
-    val gen = freshGen()
+    val gen = graft.sources.MapFiles.freshGen()
     // first delete in a fresh process: a stale tombstone dir from a
     // previous catalog's life would block the create-on-append
     graft.sources.MapFiles.clearStaleLocation(spark, table + "_t")
     eff.select(lit(gen).as("gen"), col("doc_id"))
-      .write.mode("append").saveAsTable(table + "_t")
+      .write.format("parquet").mode("append").saveAsTable(table + "_t")
     commitBm25Gen(spark, table, gen, -agg.getLong(0), -agg.getLong(1))
   }
 
@@ -860,22 +815,16 @@ object TextAnalysis {
     * generations, minus committed tombstones, minus any orphan rows of
     * crashed attempts) rewrites into a shadow table as generation 0,
     * the shadow swaps in, the scalar table collapses to one summed
-    * row, and the tombstones drop.
-    *
-    * Crash ordering (single maintenance writer): every window is safe
-    * EXCEPT between the DROP and the RENAME of the swap, where the
-    * index is briefly absent from the catalog — the one non-atomic
-    * exposure, two catalog ops wide; run compaction in a maintenance
-    * window. After the swap, stale scalar generations are harmless
-    * (the compacted rows are generation 0, which is always committed,
-    * and the deltas still sum to the same totals) and stale tombstones
-    * are inert (their generations are no longer committed once the
-    * scalar rewrite lands, and their docs are already gone). Gated:
+    * row, and the tombstones drop — two swaps of the one protocol
+    * ([[MergeTables.swapInKeyed]], each crash window healed on next
+    * touch). Between them, stale scalar generations are harmless (the
+    * compacted rows are generation 0, always committed, and the deltas
+    * sum to the same totals) and stale tombstones are inert. Gated:
     * compacted == appended == one-shot rebuild, stored rows and probe
     * results identical (spec + qd2's oracle row). */
   def compactBm25Index(spark: SparkSession, table: String): Unit =
       MergeTables.withTableLock(table) {
-    MergeTables.recoverCmpSwapCrash(spark, table)
+    requireBm25(spark, table)
     // list fresh before the rewrite: an in-loop compaction runs in the
     // MAIN session while the batches landed from micro-batch CLONE
     // sessions — a stale relation cached here would silently compact
@@ -884,44 +833,22 @@ object TextAnalysis {
     for (s <- Seq("", "_s", "_t")
          if spark.catalog.tableExists(table + s))
       spark.catalog.refreshTable(table + s)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(
-        throw new IllegalStateException(s"$table is not a bucketed index"))
     val (live, _) = committedIndex(spark, table, bucketedRead = true)
-    // carry every streaming lineage's replay high-water mark into the
-    // table_s_hwm sidecar BEFORE the scalar collapse clears the keys —
-    // what makes this compaction safe inside a live lineage (r16; the
-    // replay check consults marks as well as live keys)
+    // replay marks carried BEFORE the scalar collapse clears the keys
     MergeTables.carryHwms(spark, table + "_s")
     val totals = spark.table(table + "_s")
       .agg(coalesce(sum("n_docs"), lit(0L)),
         coalesce(sum("sum_dl"), lit(0L))).collect()(0)
-    val shadow = table + "_cmp"
-    graft.sources.MapFiles.write(
+    MergeTables.swapInKeyed(spark,
       live.select("term", "doc_id", "dl", "tf", "positions")
-        .withColumn("gen", lit(0L))
-        // one writer task per bucket -> one compacted file per bucket
-        .repartition(buckets, col("term")),
-      "term", buckets, shadow)
-    spark.sql(s"DROP TABLE `$table`")
-    // tolerant: a probe's heal may have completed this rename already
-    MergeTables.renameInto(spark, shadow, table)
+        .withColumn("gen", lit(0L)),
+      "term", table)
     import spark.implicits._
-    // the scalar collapse clears the live streaming batch keys — their
-    // high-water marks were carried above, so replay detection (and a
-    // fresh lineage's allocation) survive the rewrite (see
-    // Similarity.streamBatchKeyBase). Swap-written (r17): a plain
-    // drop+recreate would open an unhealable no-scalars window — a
-    // crash inside it stranded the index (committedIndex requires _s)
     MergeTables.swapInKeyed(spark,
       Seq((0L, totals.getLong(0), totals.getLong(1), -1L))
         .toDF("gen", "n_docs", "sum_dl", "batch_key"),
       "gen", table + "_s")
     spark.sql(s"DROP TABLE IF EXISTS `${table}_t`")
-    // the swap changed the files behind the table's name — drop any
-    // stale relation-cache entry so the next probe relists
-    spark.catalog.refreshTable(table)
   }
 
   /** [[bm25TopK]] probing the PERSISTED index instead of re-exploding
@@ -1430,8 +1357,7 @@ object TextAnalysis {
     requireCmParams(docs.sparkSession, table, width, depth)
     MergeTables.append(
       countMinCounters(docs, textCol, width, depth)
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)),
-      "b", table)
+        .withColumn("w", lit(width)).withColumn("dep", lit(depth)), table)
   }
 
   /** DELETE documents from a persisted count-min table by additive
@@ -1446,8 +1372,7 @@ object TextAnalysis {
     MergeTables.append(
       countMinCounters(docs, textCol, width, depth)
         .withColumn("c", -col("c"))
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)),
-      "b", table)
+        .withColumn("w", lit(width)).withColumn("dep", lit(depth)), table)
   }
 
   /** The probe-time merged counter table — bit-equal to
@@ -1529,8 +1454,7 @@ object TextAnalysis {
     requireCmParams(docs.sparkSession, table, width, depth)
     MergeTables.append(
       groupedCountMinCounters(docs, groupCol, textCol, width, depth)
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)),
-      "b", table)
+        .withColumn("w", lit(width)).withColumn("dep", lit(depth)), table)
   }
 
   /** Retract documents from the grouped counters — additive, per
@@ -1543,8 +1467,7 @@ object TextAnalysis {
     MergeTables.append(
       groupedCountMinCounters(docs, groupCol, textCol, width, depth)
         .withColumn("c", -col("c"))
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)),
-      "b", table)
+        .withColumn("w", lit(width)).withColumn("dep", lit(depth)), table)
   }
 
   /** The probe-time merged grouped counters — bit-equal to
@@ -1585,7 +1508,7 @@ object TextAnalysis {
       .withColumn("w", lit(w)).withColumn("dep", lit(d))
       .localCheckpoint()
     if (!expired.isEmpty)
-      MergeTables.append(expired, "b", table)
+      MergeTables.append(expired, table)
   }
 
   /** [[compactGroupedCountMinTable]] under the generation-count
@@ -1676,7 +1599,7 @@ object TextAnalysis {
       width: Int = 1024, depth: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     requireCmParams(docStream.sparkSession, table, width, depth)
-    MergeTables.streamAppend(docStream, "b", table)(
+    MergeTables.streamAppend(docStream, table)(
       groupedCountMinCounters(_, groupCol, textCol, width, depth)
         .withColumn("w", lit(width)).withColumn("dep", lit(depth)))
   }
@@ -1688,7 +1611,7 @@ object TextAnalysis {
   private[graft] def streamAppendCountMinBatch(batch: DataFrame,
       batchId: Long, textCol: String, table: String, width: Int,
       depth: Int, lineage: Long = 0L): Unit =
-    MergeTables.appendBatch(batch, batchId, "b", table, lineage)(
+    MergeTables.appendBatch(batch, batchId, table, lineage)(
       countMinCounters(_, textCol, width, depth)
         .withColumn("w", lit(width)).withColumn("dep", lit(depth)))
 
@@ -1709,7 +1632,7 @@ object TextAnalysis {
       textCol: String, table: String, width: Int = 1024, depth: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     requireCmParams(docStream.sparkSession, table, width, depth)
-    MergeTables.streamAppend(docStream, "b", table)(
+    MergeTables.streamAppend(docStream, table)(
       countMinCounters(_, textCol, width, depth)
         .withColumn("w", lit(width)).withColumn("dep", lit(depth)))
   }

@@ -41,6 +41,44 @@ object MapFiles {
       .saveAsTable(table)
   }
 
+  /** The bucket layout [[write]] gave `table`, from the catalog — None
+    * when the table is absent or not bucketed. */
+  private def layoutOf(spark: SparkSession, table: String)
+      : Option[org.apache.spark.sql.catalyst.catalog.BucketSpec] =
+    if (!spark.catalog.tableExists(table)) None
+    else spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).bucketSpec
+
+  /** `table`'s bucket count — 1 when it is absent or unbucketed (a
+    * first sidecar creation). */
+  private[graft] def bucketsOf(spark: SparkSession, table: String): Int =
+    layoutOf(spark, table).map(_.numBuckets).getOrElse(1)
+
+  /** Land `df` as new files in the layout [[write]] gave `table` — the
+    * one append of every persisted tier: bucket count, bucket column
+    * and sort column come from the catalog, so rows hash into the
+    * existing buckets and probes keep bucket pruning across write
+    * generations. Always parquet (like [[write]]), with a bloom filter
+    * on the bucket column, and on `batch_key` when the frame carries
+    * it (the replay probe's footer-level skip). The stored side is
+    * never read; one file rename per written file is the commit. */
+  private[graft] def append(df: DataFrame, table: String): Unit = {
+    val spec = layoutOf(df.sparkSession, table).getOrElse(
+      throw new IllegalStateException(
+        s"$table is not a bucketed MapFiles table"))
+    val key = spec.bucketColumnNames.head
+    val w = df.write.format("parquet").mode("append")
+      .option("parquet.bloom.filter.enabled#" + key, "true")
+    if (df.columns.contains("batch_key"))
+      w.option("parquet.bloom.filter.enabled#batch_key", "true")
+    val bucketed = w.bucketBy(spec.numBuckets, key,
+      spec.bucketColumnNames.tail.toSeq: _*)
+    (spec.sortColumnNames.toList match {
+      case s :: rest => bucketed.sortBy(s, rest: _*)
+      case Nil => bucketed
+    }).saveAsTable(table)
+  }
+
   /** Point-probe queries only prune buckets when the scan stays bucketed:
     * Spark's DisableUnnecessaryBucketedScan rule trades the bucketed
     * layout for plain codegen scans when it sees no join/agg downstream —

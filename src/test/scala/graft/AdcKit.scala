@@ -14,7 +14,7 @@ object AdcKit {
     * interrupted swaps included. */
   def drop(names: String*): Unit =
     for (t <- names; sfx <- Seq("_sh", "_serve", "_sv", "_sv_c", "_sv_g",
-        "_sv_t", "_sv_cmp", "_sv_g_hwm");
+        "_sv_t", "_sv_g_hwm");
         shadow <- Seq("", "_compact_shadow"))
       spark.sql(s"DROP TABLE IF EXISTS `$t$sfx$shadow`")
 

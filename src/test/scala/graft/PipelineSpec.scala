@@ -52,7 +52,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
         "compaction left the deleted doc's band rows")
       assert(screen() == Set((0L, 9L)))
     } finally {
-      for (t <- Seq("mh_del_idx", "mh_del_idx_t", "mh_del_idx_cmp"))
+      for (t <- Seq("mh_del_idx", "mh_del_idx_t", "mh_del_idx_compact_shadow"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
     }
   }
@@ -114,7 +114,7 @@ class DedupSpec extends AnyFunSuite with SparkTest {
           "mh_missing_idx", n = 3, numHashes = h, bands = b)
       }
     } finally {
-      for (t <- Seq("mh_app_idx", "mh_app_idx_cmp", "mh_ref_idx"))
+      for (t <- Seq("mh_app_idx", "mh_app_idx_compact_shadow", "mh_ref_idx"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
     }
   }
@@ -1532,14 +1532,23 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
           "vec_id", "embedding", k = 3, "rsh_idx")).nonEmpty,
         "rebuild over the resharded index does not probe")
       // (f) the generation sweep heals crash residue: a stale
-      // generation's table (a crashed GC's orphan) goes at the next
-      // reshard's entry, and a fresh build at a SMALLER shard count
-      // leaves no other generation's tables behind
-      spark.range(1).toDF("x").write.saveAsTable("rsh_idx_r7_sv")
+      // generation's tables (a crashed GC's orphans, swap shadows
+      // included) go at the next reshard's entry, the retired
+      // generation's swap shadows (swaps that crashed before their
+      // DROP, live tables still in place) go with it, and a fresh build
+      // at a SMALLER shard count leaves no other generation's tables
+      // behind
+      val residue = Seq("rsh_idx_r7_sv", "rsh_idx_r7_sv_g_compact_shadow",
+        "rsh_idx_r7_sv_c_compact_shadow",
+        "rsh_idx_r7_sv_g_hwm_compact_shadow",
+        "rsh_idx_sv_compact_shadow", "rsh_idx_sv_g_compact_shadow",
+        "rsh_idx_sv_c_compact_shadow")
+      residue.foreach(t =>
+        spark.range(1).toDF("x").write.format("parquet").saveAsTable(t))
       Similarity.reshardIvfAdcIndex(survivors, "vec_id", "embedding",
         "rsh_idx", newShards = 2, dim = 64)
-      assert(!spark.catalog.tableExists("rsh_idx_r7_sv"),
-        "stale-generation orphan survived the reshard entry sweep")
+      residue.foreach(t => assert(!spark.catalog.tableExists(t),
+        s"$t survived the reshard's generation sweep"))
       Similarity.writeIvfAdcIndexSharded(survivors, "vec_id",
         "embedding", "rsh_idx", nShards = 1, dim = 64)
       assert(!spark.catalog.tableExists("rsh_idx_r1_sv"),
@@ -1548,9 +1557,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
           "vec_id", "embedding", k = 3, "rsh_idx")).nonEmpty)
     } finally {
       for (t <- Seq("rsh_idx_sv", "rsh_idx_r1_sv", "rsh_idx_r2_sv",
-          "rsh_ref_sv");
-          sfx <- Seq("", "_c", "_g", "_g_hwm", "_t"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sfx")
+          "rsh_idx_r7_sv", "rsh_ref_sv");
+          sfx <- Seq("", "_c", "_g", "_g_hwm", "_t");
+          shadow <- Seq("", "_compact_shadow"))
+        spark.sql(s"DROP TABLE IF EXISTS $t$sfx$shadow")
       spark.sql("DROP TABLE IF EXISTS rsh_idx_sh")
       spark.sql("DROP TABLE IF EXISTS rsh_ref_sh")
     }
@@ -2869,7 +2879,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
       spark.sql("DROP TABLE IF EXISTS bm25_atom_idx")
       spark.sql("DROP TABLE IF EXISTS bm25_atom_idx_s")
       spark.sql("DROP TABLE IF EXISTS bm25_atom_idx_t")
-      spark.sql("DROP TABLE IF EXISTS bm25_atom_idx_cmp")
+      spark.sql("DROP TABLE IF EXISTS bm25_atom_idx_compact_shadow")
     }
   }
 
@@ -2928,7 +2938,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
       spark.sql("DROP TABLE IF EXISTS bm25_del_idx")
       spark.sql("DROP TABLE IF EXISTS bm25_del_idx_s")
       spark.sql("DROP TABLE IF EXISTS bm25_del_idx_t")
-      spark.sql("DROP TABLE IF EXISTS bm25_del_idx_cmp")
+      spark.sql("DROP TABLE IF EXISTS bm25_del_idx_compact_shadow")
     }
   }
 
@@ -3000,7 +3010,7 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
       spark.sql("DROP TABLE IF EXISTS bm25_cmp_idx")
       spark.sql("DROP TABLE IF EXISTS bm25_cmp_idx_s")
       spark.sql("DROP TABLE IF EXISTS bm25_cmp_idx_t")
-      spark.sql("DROP TABLE IF EXISTS bm25_cmp_idx_cmp")
+      spark.sql("DROP TABLE IF EXISTS bm25_cmp_idx_compact_shadow")
       spark.sql("DROP TABLE IF EXISTS bm25_cmp_idx_s_compact_shadow")
       spark.sql("DROP TABLE IF EXISTS bm25_cmp_ref")
       spark.sql("DROP TABLE IF EXISTS bm25_cmp_ref_s")
@@ -3119,6 +3129,68 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
       (1L, 20L, 1, u(1.0 / 62 + 1.0 / 61)),
       (1L, 10L, 2, u(1.0 / 61)),
       (1L, 40L, 3, u(1.0 / 62))), out.toSeq)
+  }
+
+  test("under spark.sql.sources.default=orc every land stays parquet: BM25 and minhash append, delete and compact, and a sketch append, probe as under parquet") {
+    // the persisted tiers create parquet tables (MapFiles.write); an
+    // append or tombstone write that names no format takes the
+    // session default, which Spark refuses against a parquet table (or
+    // silently creates an ORC tombstone table)
+    import graft.pipeline.{Dedup, Sketches}
+    val docs = Seq((1L, "apple banana apple"), (2L, "apple cherry"),
+      (3L, "banana durian"), (4L, "durian apple"))
+      .toDF("doc_id", "text")
+    val more = Seq((5L, "cherry apple banana"), (6L, "apple banana"))
+      .toDF("doc_id", "text")
+    val gone = Seq(2L).toDF("doc_id")
+    val (h, b) = Dedup.minhashParams(0.8, 0.95, maxHashes = 24)
+    val vs = (1L to 600L).map(i => i * 7919L % 1000L + 1L)
+    def provider(t: String) = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t)).provider
+    def run(sfx: String): Seq[Seq[String]] = {
+      val (bm, mh, sk) = (s"orc_bm_$sfx", s"orc_mh_$sfx", s"orc_sk_$sfx")
+      def bmProbe() = TextAnalysis.bm25TopKIndexed(
+          Seq((9L, "apple banana")).toDF("q_id", "qtext"), "q_id", "qtext",
+          bm, k = 4)
+        .toJSON.collect().sorted.toSeq
+      def mhProbe() = Dedup.incrementalMinhashPairsIndexed(
+          docs.unionByName(more),
+          Seq((9L, "apple banana apple")).toDF("doc_id", "text"),
+          "doc_id", "text", mh, n = 2, threshold = 0.3, numHashes = h,
+          bands = b)
+        .toJSON.collect().sorted.toSeq
+      TextAnalysis.writeBm25Index(docs, "doc_id", "text", bm)
+      TextAnalysis.appendBm25Index(more, "doc_id", "text", bm)
+      TextAnalysis.deleteBm25Docs(spark, bm, gone, "doc_id")
+      assert(provider(bm + "_t") == Some("parquet"))
+      val bmDeleted = bmProbe()
+      TextAnalysis.compactBm25Index(spark, bm)
+      Dedup.writeMinhashIndex(docs, "doc_id", "text", mh, n = 2,
+        numHashes = h, bands = b)
+      Dedup.appendMinhashIndex(more, "doc_id", "text", mh, n = 2,
+        numHashes = h, bands = b)
+      Dedup.deleteMinhashDocs(spark, mh, gone, "doc_id")
+      assert(provider(mh + "_t") == Some("parquet"))
+      val mhDeleted = mhProbe()
+      Dedup.compactMinhashIndex(spark, mh)
+      val (va, vb) = vs.splitAt(300)
+      Sketches.writeSketchTable(va.toDF("v"), col("v"), sk)
+      Sketches.appendSketchTable(vb.toDF("v"), col("v"), sk)
+      Seq(bmDeleted, bmProbe(), mhDeleted, mhProbe(),
+        Sketches.quantilesFromSketchTable(spark, sk, Seq(50, 90, 99))
+          .toJSON.collect().sorted.toSeq)
+    }
+    try {
+      val parquet = run("pq")
+      assert(parquet.forall(_.nonEmpty), "vacuous gate: an empty probe")
+      spark.conf.set("spark.sql.sources.default", "orc")
+      try assert(run("orc") == parquet,
+        "a probe under the orc default diverged from the parquet one")
+      finally spark.conf.unset("spark.sql.sources.default")
+    } finally
+      for (x <- Seq("pq", "orc"); t <- Seq("orc_bm_", "orc_mh_", "orc_sk_");
+          sfx <- Seq("", "_s", "_t", "_s_hwm", "_hwm"))
+        spark.sql(s"DROP TABLE IF EXISTS `$t$x$sfx`")
   }
 }
 
@@ -3760,46 +3832,6 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("a crash between compact's DROP and RENAME heals on the next probe or append") {
-    // compact's one crash window: shadow written, live table dropped,
-    // rename never ran. The shadow holds the COMPLETE merged state by
-    // construction, so recovery = finishing the rename — every entry
-    // point (probe, append, compact, generationCount) does it on next
-    // touch instead of stranding the table under the shadow name.
-    import graft.pipeline.MergeTables
-    val (a, b) = vals.splitAt(1000)
-    try {
-      Sketches.writeSketchTable(a.toDF("v"), col("v"), "sk_crash_t")
-      Sketches.appendSketchTable(b.toDF("v"), col("v"), "sk_crash_t")
-      val preProbe = Sketches.quantilesFromSketchTable(
-          spark, "sk_crash_t", Seq(50, 90, 99))
-        .as[(Int, Long, Long, Long)].collect().sorted.toSeq
-      // simulate the crash window by hand: the shadow write and the
-      // DROP are compact()'s own first two steps, verbatim
-      MergeTables.write(
-        MergeTables.mergedSum(spark, "sk_crash_t",
-          Seq("b_low", "b_high"), "cnt"),
-        "b_low", "sk_crash_t_compact_shadow")
-      spark.sql("DROP TABLE `sk_crash_t`")
-      assert(!spark.catalog.tableExists("sk_crash_t"))
-      // next probe heals the window and answers from the merged state
-      val postProbe = Sketches.quantilesFromSketchTable(
-          spark, "sk_crash_t", Seq(50, 90, 99))
-        .as[(Int, Long, Long, Long)].collect().sorted.toSeq
-      assert(postProbe.nonEmpty && postProbe == preProbe,
-        "recovered probe diverged from the pre-crash state")
-      assert(spark.catalog.tableExists("sk_crash_t") &&
-        !spark.catalog.tableExists("sk_crash_t_compact_shadow"))
-      // and the healed table accepts appends again
-      Sketches.appendSketchTable(vals.take(50).toDF("v"), col("v"),
-        "sk_crash_t")
-      assert(MergeTables.generationCount(spark, "sk_crash_t") == 2L)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS sk_crash_t")
-      spark.sql("DROP TABLE IF EXISTS sk_crash_t_compact_shadow")
-    }
-  }
-
   test("retireGroupsBefore: retained profile == one-shot over the surviving window; expired groups physically gone after compaction") {
     // the qfa retention story (r14 verdict item 3): hour-keyed state
     // cannot grow one group per hour forever. Retirement retracts the
@@ -3900,70 +3932,138 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("index-tier compactor crash window heals on next touch: table absent + _cmp shadow present finishes the rename on all three tiers") {
-    // the MergeTables recoverCompactCrash discipline extended to the
-    // index tiers' _cmp shadow (r16): with in-loop compaction the
-    // DROP/RENAME window is hit proportionally more often, and the
-    // first probe/append/delete after the crash must finish the rename
-    // instead of stranding the index. The crash state is simulated by
-    // renaming the live table to its shadow name — exactly what a
-    // crash between the compactor's DROP and RENAME leaves (the shadow
-    // holds the complete rewrite).
+  /** One table swapped by the one generation protocol
+    * (MergeTables.swapInKeyed, healed by recoverCompactCrash): `tier`
+    * names it in the test title, `table` is the swapped table; `build` writes its tier and appends once, so
+    * compaction has generations to fold; `probe` is the tier's read
+    * (the crash heal's first touch), as sorted strings; `grow` appends
+    * one more batch (the heal's other touch); `compact` runs the
+    * tier's compactor, which swaps `table`. */
+  private case class SwapCase(tier: String, table: String,
+      build: () => Unit,
+      probe: () => Seq[String], grow: () => Unit, compact: () => Unit,
+      drop: () => Unit)
+
+  // every frame is built inside the closures, at test time
+  private val swapCases: Seq[SwapCase] = {
     import graft.pipeline.{Dedup, Similarity, TextAnalysis}
-    val docs = Seq((1L, "apple banana apple"), (2L, "apple cherry"),
+    def docs = Seq((1L, "apple banana apple"), (2L, "apple cherry"),
       (3L, "banana durian"), (4L, "durian apple"))
       .toDF("doc_id", "text")
-    val qs = Seq((9L, "apple banana")).toDF("q_id", "qtext")
-    // BM25
-    try {
-      TextAnalysis.writeBm25Index(docs, "doc_id", "text", "hx_bm_idx")
-      val before = TextAnalysis.bm25TopKIndexed(qs, "q_id", "qtext",
-          "hx_bm_idx", k = 3)
-        .as[(Long, Long, Int, Long)].collect().sortBy(_._3).toSeq
-      assert(before.nonEmpty)
-      spark.sql("ALTER TABLE hx_bm_idx RENAME TO hx_bm_idx_cmp")
-      val after = TextAnalysis.bm25TopKIndexed(qs, "q_id", "qtext",
-          "hx_bm_idx", k = 3)
-        .as[(Long, Long, Int, Long)].collect().sortBy(_._3).toSeq
-      assert(after == before, "BM25 heal lost or changed the index")
-      assert(spark.catalog.tableExists("hx_bm_idx") &&
-        !spark.catalog.tableExists("hx_bm_idx_cmp"))
-    } finally {
-      for (t <- Seq("hx_bm_idx", "hx_bm_idx_cmp", "hx_bm_idx_s"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
-    // ADC
-    val vecs = spark.read
+    def moreDocs = Seq((5L, "cherry apple banana"),
+      (6L, "durian durian")).toDF("doc_id", "text")
+    val grown = new java.util.concurrent.atomic.AtomicLong(100L)
+    def nextDoc() = Seq((grown.incrementAndGet(), "apple fig"))
+      .toDF("doc_id", "text")
+    def drop(ts: String*): Unit =
+      for (t <- ts; shadow <- Seq("", "_compact_shadow"))
+        spark.sql(s"DROP TABLE IF EXISTS `$t$shadow`")
+    def bm25(tier: String, table: String) = SwapCase(tier, table,
+      build = () => {
+        TextAnalysis.writeBm25Index(docs, "doc_id", "text", "sw_bm")
+        TextAnalysis.appendBm25Index(moreDocs, "doc_id", "text", "sw_bm")
+      },
+      probe = () => TextAnalysis.bm25TopKIndexed(
+          Seq((9L, "apple banana")).toDF("q_id", "qtext"), "q_id",
+          "qtext", "sw_bm", k = 3)
+        .toJSON.collect().sorted.toSeq,
+      grow = () =>
+        TextAnalysis.appendBm25Index(nextDoc(), "doc_id", "text", "sw_bm"),
+      compact = () => TextAnalysis.compactBm25Index(spark, "sw_bm"),
+      drop = () => drop("sw_bm", "sw_bm_s", "sw_bm_t", "sw_bm_s_hwm"))
+    def vecs = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .filter(col("vec_id") < 100)
-    try {
-      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
-        "hx_adc_idx")
-      def probe() = AdcKit.probe(vecs.filter(col("vec_id") % 25 === 0),
-        "hx_adc_idx")
-      val before = probe()
-      assert(before.nonEmpty)
-      spark.sql("ALTER TABLE hx_adc_idx_sv RENAME TO hx_adc_idx_sv_cmp")
-      assert(probe() == before, "ADC heal lost or changed the index")
-    } finally AdcKit.drop("hx_adc_idx")
-    // minhash
-    try {
-      val (h, b) = Dedup.minhashParams(0.8, 0.95, maxHashes = 24)
-      Dedup.writeMinhashIndex(docs, "doc_id", "text", "hx_mh_idx",
-        n = 2, numHashes = h, bands = b)
-      val batch = Seq((9L, "apple banana apple")).toDF("doc_id", "text")
-      def screen() = Dedup.incrementalMinhashPairsIndexed(docs, batch,
-          "doc_id", "text", "hx_mh_idx", n = 2, threshold = 0.5,
+    def adc(tier: String, table: String) = SwapCase(tier, table,
+      build = () => {
+        Similarity.writeIvfAdcIndexSharded(
+          vecs.filter(col("vec_id") < 60), "vec_id", "embedding", "sw_adc")
+        Similarity.appendIvfAdcIndexSharded(
+          vecs.filter(col("vec_id") >= 60), "vec_id", "embedding", "sw_adc")
+      },
+      probe = () => AdcKit.probe(vecs.filter(col("vec_id") % 25 === 0),
+        "sw_adc").map(_.toString),
+      grow = () => Similarity.appendIvfAdcIndexSharded(
+        vecs.filter(col("vec_id") === 7)
+          .withColumn("vec_id", lit(grown.incrementAndGet())),
+        "vec_id", "embedding", "sw_adc"),
+      compact = () => Similarity.compactIvfAdcIndexSharded(spark, "sw_adc"),
+      drop = () => AdcKit.drop("sw_adc"))
+    val (h, b) = Dedup.minhashParams(0.8, 0.95, maxHashes = 24)
+    val minhash = SwapCase("minhash band rows", "sw_mh",
+      build = () => {
+        Dedup.writeMinhashIndex(docs, "doc_id", "text", "sw_mh", n = 2,
           numHashes = h, bands = b)
-        .as[(Long, Long, Double)].collect().sorted.toSeq
-      val before = screen()
-      spark.sql("ALTER TABLE hx_mh_idx RENAME TO hx_mh_idx_cmp")
-      assert(screen() == before, "minhash heal lost or changed the index")
-    } finally {
-      for (t <- Seq("hx_mh_idx", "hx_mh_idx_cmp"))
-        spark.sql(s"DROP TABLE IF EXISTS $t")
-    }
+        Dedup.appendMinhashIndex(moreDocs, "doc_id", "text", "sw_mh",
+          n = 2, numHashes = h, bands = b)
+      },
+      probe = () => Dedup.incrementalMinhashPairsIndexed(
+          docs.unionByName(moreDocs),
+          Seq((9L, "apple banana apple")).toDF("doc_id", "text"),
+          "doc_id", "text", "sw_mh", n = 2, threshold = 0.5,
+          numHashes = h, bands = b)
+        .toJSON.collect().sorted.toSeq,
+      grow = () => Dedup.appendMinhashIndex(nextDoc(), "doc_id", "text",
+        "sw_mh", n = 2, numHashes = h, bands = b),
+      compact = () => Dedup.compactMinhashIndex(spark, "sw_mh"),
+      drop = () => drop("sw_mh", "sw_mh_t"))
+    val (va, vb) = vals.splitAt(1000)
+    val sketch = SwapCase("MergeTables state", "sw_sk",
+      build = () => {
+        Sketches.writeSketchTable(va.toDF("v"), col("v"), "sw_sk")
+        Sketches.appendSketchTable(vb.toDF("v"), col("v"), "sw_sk")
+      },
+      probe = () => Sketches.quantilesFromSketchTable(spark, "sw_sk",
+        Seq(50, 90, 99)).toJSON.collect().sorted.toSeq,
+      grow = () => Sketches.appendSketchTable(vals.take(50).toDF("v"),
+        col("v"), "sw_sk"),
+      compact = () => Sketches.compactSketchTable(spark, "sw_sk"),
+      drop = () => drop("sw_sk", "sw_sk_hwm"))
+    Seq(bm25("BM25 postings", "sw_bm"), bm25("BM25 _s", "sw_bm_s"),
+      adc("ADC _sv", "sw_adc_sv"), adc("ADC _sv_g", "sw_adc_sv_g"),
+      minhash, sketch)
   }
+
+  for (sc <- swapCases)
+    test(s"one swap, one heal — ${sc.tier}: a crash after the shadow write " +
+        "keeps the live rows; a crash between DROP and RENAME heals to " +
+        "the compacted rows") {
+      val t = sc.table
+      val shadow = t + "_compact_shadow"
+      def stored() = spark.table(t).toJSON.collect().sorted.toSeq
+      try {
+        sc.build()
+        val pre = sc.probe()
+        assert(pre.nonEmpty, "vacuous gate: the probe returned nothing")
+        // crash 1: the shadow is written, the live table untouched — a
+        // one-row shadow, so a heal that wrongly adopted it would show
+        graft.sources.MapFiles.clearStaleLocation(spark, shadow)
+        spark.table(t).limit(1).write.format("parquet").saveAsTable(shadow)
+        assert(sc.probe() == pre, "a stale shadow changed the probe")
+        sc.compact()
+        assert(!spark.catalog.tableExists(shadow),
+          s"the next compaction left $shadow behind")
+        val post = sc.probe()
+        assert(post == pre, "compaction changed the probe")
+        val compacted = stored()
+        // crash 2: the live table is dropped and the shadow holds the
+        // complete compacted state — the next probe finishes the rename
+        spark.sql(s"ALTER TABLE `$t` RENAME TO `$shadow`")
+        assert(!spark.catalog.tableExists(t))
+        assert(sc.probe() == post, "the healed probe diverged")
+        assert(spark.catalog.tableExists(t) &&
+          !spark.catalog.tableExists(shadow), s"$t was not healed")
+        assert(stored() == compacted,
+          "the healed table does not hold the compacted rows")
+        // the same window healed by the tier's append instead
+        spark.sql(s"ALTER TABLE `$t` RENAME TO `$shadow`")
+        sc.grow()
+        assert(spark.catalog.tableExists(t) &&
+          !spark.catalog.tableExists(shadow),
+          s"$t was not healed by an append")
+        assert(sc.probe().nonEmpty)
+      } finally sc.drop()
+    }
 
   test("filtered-compaction takedown preserves NULL-keyed groups (the unnamed stratum is not the retired one)") {
     // !isin(null) evaluates to NULL, which a plain filter drops — the

@@ -464,34 +464,52 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("graft.adc.pushdown=false keeps the join-only probe shape — no eager snapshot job, identical results") {
-    // ADVICE r17: the probe-side cell snapshot collects (bounded) query
-    // rows at DataFrame-CONSTRUCTION time; a plan-construction-only
-    // caller opts out via conf and must get (a) a stored scan WITHOUT
-    // the In(gcell) filter (the distributed join-only shape — proving
-    // the vector snapshot was never taken, since the In set is derived
-    // only from it), and (b) the same rows when executed.
+  test("a streaming ADC probe keeps the join-only probe shape — no snapshot In(gcell) filter, the batch probe's candidates") {
+    // the probe-side cell snapshot collects (bounded) query rows at
+    // DataFrame-CONSTRUCTION time, which a streaming query side cannot
+    // do: its micro-batch plan must scan the stored side WITHOUT the
+    // In(gcell) filter (the distributed join-only shape — the In set is
+    // derived only from the snapshot), and still emit exactly the batch
+    // probe's candidate pairs
     import graft.pipeline.Similarity
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.{
+      MemoryStream, StreamingQueryWrapper}
+    import spark.implicits._
     val vecs = Tables.embeddings(spark, d)
     try {
       Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
         "qpd_plan_idx")
-      val withPush = AdcKit.probe(vecs, "qpd_plan_idx")
-      spark.conf.set("graft.adc.pushdown", "false")
-      val cands = Similarity.svFracCandidates(vecs, "vec_id",
+      val pairs = (df: DataFrame) =>
+        df.select("q_id", "nb_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      val batch = Similarity.svFracCandidates(vecs, "vec_id",
         "embedding", "qpd_plan_idx")
-      cands.collect()
-      val p = cands.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      assert(!p.contains("In(gcell"),
-        "pushdown=false still pushed a cell In set:\n" + p.take(4000))
-      val noPush = AdcKit.probe(vecs, "qpd_plan_idx")
-      assert(noPush.nonEmpty && noPush == withPush,
-        "join-only shape diverged from the pushdown shape")
-    } finally {
-      spark.conf.unset("graft.adc.pushdown")
-      AdcKit.drop("qpd_plan_idx")
-    }
+      val bp = batch.queryExecution.executedPlan.toString
+      assert(bp.contains("In(gcell"),
+        "vacuous gate: the batch probe pushed no cell In set:\n" +
+          bp.take(4000))
+      val ms = MemoryStream[(Long, Array[Float])](spark)
+      ms.addData(vecs.select($"vec_id".cast("long"),
+          $"embedding".cast("array<float>"))
+        .as[(Long, Array[Float])].collect().toSeq)
+      val q = Similarity.svFracCandidates(
+          ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
+          "qpd_plan_idx")
+        .select("q_id", "nb_id")
+        .writeStream.format("memory").queryName("qpd_plan_test").start()
+      try {
+        q.processAllAvailable()
+        val p = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        assert(!p.contains("In(gcell"),
+          "the streaming probe pushed a cell In set:\n" + p.take(4000))
+        val streamed = pairs(spark.table("qpd_plan_test"))
+        assert(streamed.nonEmpty && streamed == pairs(batch),
+          "join-only streaming candidates diverged from the batch probe")
+      } finally q.stop()
+    } finally AdcKit.drop("qpd_plan_idx")
   }
 
   test("two-level ADC probe keeps the flat path's plan shape — bucketed stored side, one probe-side exchange, vector-free") {
@@ -1216,7 +1234,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     // ratio collapses toward 1, which must move both depths
     val x = 10L * total
     try {
-      MergeTables.append(Seq((1L, x)).toDF("g", "cnt"), "g", table)
+      MergeTables.append(Seq((1L, x)).toDF("g", "cnt"), table)
       val after = RelationalQueries.qc2Depths(spark, d)
       val (t2, p2) = (total + x, pass + x)
       assert(after == (
@@ -1228,7 +1246,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     } finally {
       // additive RETRACTION restores the stored counts exactly; the
       // generation count moves again, so the memo re-derives
-      MergeTables.append(Seq((1L, -x)).toDF("g", "cnt"), "g", table)
+      MergeTables.append(Seq((1L, -x)).toDF("g", "cnt"), table)
     }
     assert(RelationalQueries.qc2Depths(spark, d) == before,
       "retraction did not restore the original depths")
@@ -1253,7 +1271,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     val vecs = Tables.embeddings(spark, d)
     val x = 10L * vecs.count()
     try {
-      MergeTables.append(Seq((1L, x)).toDF("g", "cnt"), "g", table)
+      MergeTables.append(Seq((1L, x)).toDF("g", "cnt"), table)
       val grown = RelationalQueries.qc2Depths(spark, d)
       assert(grown != before, "growth was supposed to move the depths")
       compactNow() // back to ONE generation — the colliding key
@@ -1261,7 +1279,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
         "memo served stale pre-append depths after the generation " +
           "count collapsed back to a previously-memoized value")
     } finally {
-      MergeTables.append(Seq((1L, -x)).toDF("g", "cnt"), "g", table)
+      MergeTables.append(Seq((1L, -x)).toDF("g", "cnt"), table)
     }
     assert(RelationalQueries.qc2Depths(spark, d) == before,
       "retraction did not restore the original depths")

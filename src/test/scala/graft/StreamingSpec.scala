@@ -1460,13 +1460,13 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     try {
       Sketches.writeSketchTable(base.toDF("v"), col("v"), "sk_rs_t")
       val ms = MemoryStream[Long](spark)
-      val q1 = MergeTables.streamAppend(ms.toDF().toDF("v"), "b_low",
+      val q1 = MergeTables.streamAppend(ms.toDF().toDF("v"),
         "sk_rs_t", checkpointLocation = Some(cp),
         lineage = Some(lineage))(stateOf)
       try { ms.addData(b1); q1.processAllAvailable() } finally q1.stop()
       // the "crash": q1 is gone; a NEW query resumes from the same
       // checkpoint with the same persisted lineage id
-      val q2 = MergeTables.streamAppend(ms.toDF().toDF("v"), "b_low",
+      val q2 = MergeTables.streamAppend(ms.toDF().toDF("v"),
         "sk_rs_t", checkpointLocation = Some(cp),
         lineage = Some(lineage))(stateOf)
       try { ms.addData(b2); q2.processAllAvailable() } finally q2.stop()
@@ -1523,7 +1523,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       // lineage 9, then the "driver dies"
       Sketches.streamAppendGroupedSketchBatch(batch, 0L, col("source"),
         length(col("text")), ts(0), lineage = 9L)
-      MergeTables.appendBatch(batch, 0L, "b", ts(1), 9L)(
+      MergeTables.appendBatch(batch, 0L, ts(1), 9L)(
         TextAnalysis.groupedCountMinCounters(_, "source", "text", 64, 3)
           .withColumn("w", lit(64)).withColumn("dep", lit(3)))
       assert(gens(ts(0)) == 2 && gens(ts(1)) == 2 &&
@@ -1752,7 +1752,7 @@ class ValueAggregatorsSpec extends AnyFunSuite with SparkTest {
     try {
       Sketches.writeSketchTable(base.toDF("v"), col("v"), "sk_oc_t")
       val ms = MemoryStream[Long](spark)
-      val q1 = MergeTables.streamAppend(ms.toDF().toDF("v"), "b_low",
+      val q1 = MergeTables.streamAppend(ms.toDF().toDF("v"),
         "sk_oc_t", checkpointLocation = Some(cp))(stateOf)
       try { ms.addData(b1); q1.processAllAvailable() } finally q1.stop()
       // the persisted lineage id landed beside the checkpoint
@@ -1780,7 +1780,7 @@ class ValueAggregatorsSpec extends AnyFunSuite with SparkTest {
         "a compacted-away committed batch was re-appended")
       // (b) RESUME from the checkpoint ALONE — no lineage argument;
       // the persisted id is read back, resumed batchIds continue
-      val q2 = MergeTables.streamAppend(ms.toDF().toDF("v"), "b_low",
+      val q2 = MergeTables.streamAppend(ms.toDF().toDF("v"),
         "sk_oc_t", checkpointLocation = Some(cp))(stateOf)
       try { ms.addData(b2); q2.processAllAvailable() } finally q2.stop()
       val probed = Sketches.quantilesFromSketchTable(
@@ -1794,7 +1794,7 @@ class ValueAggregatorsSpec extends AnyFunSuite with SparkTest {
       // a mismatched EXPLICIT lineage with an existing checkpoint
       // refuses loudly instead of silently double-counting
       val ex = intercept[IllegalArgumentException] {
-        MergeTables.streamAppend(ms.toDF().toDF("v"), "b_low",
+        MergeTables.streamAppend(ms.toDF().toDF("v"),
           "sk_oc_t", checkpointLocation = Some(cp),
           lineage = Some(99L))(stateOf)
       }
