@@ -3,10 +3,13 @@ package graft.functions
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** The `nprobe` nearest coarse-quantizer cells of an embedding — the
-  * IVF index's assignment/probe primitive, as a scalar kernel. The
-  * plan-side expressions ([[NearestCellsBcExpr]] and the sharded
-  * [[NearestCellsShardedBcExpr]]) carry the centroid matrix in a
-  * broadcast and call [[NearestCells.nearest]] from generated code: a
+  * IVF index's assignment/probe primitive, as a scalar kernel. It is
+  * one of two scalar kernels, with the two-level [[NearestCellsHier]];
+  * both sit behind the one sharded expression family
+  * ([[NearestCellsShardedBcExpr]], [[NearestCellsShardedHierBcExpr]],
+  * [[AssignShardedCellExpr]]), which carries the centroid matrix in a
+  * broadcast and calls [[NearestCells.nearest]] from generated code —
+  * the live tiers at one shard, the persisted tier at any count. A
   * declarative `array_sort` over nlist × dim literal dot products
   * builds a ~4k-node tree at nlist=64, dim=64 whose planning and
   * codegen dwarf the arithmetic, while this is one static call into a

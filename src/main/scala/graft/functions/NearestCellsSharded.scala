@@ -6,7 +6,29 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.classic.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.types._
+
+/** One shard's coarse quantizer, as the sharded kernels read it. */
+object NearestCellsBc {
+
+  /** The executor-shared quantizer state of one shard: flat centroid
+    * matrix, per-cell squared norms, dimension. */
+  final case class Quantizer(flat: Array[Double], norms2: Array[Double],
+      dim: Int) extends Serializable
+
+  def quantizerOf(cents: Array[Array[Double]]): Quantizer = {
+    // the kernel reads the matrix as flat c*dim offsets — a ragged row
+    // would silently misalign every distance, so fail loudly instead
+    if (cents.nonEmpty)
+      cents.find(_.length != cents(0).length).foreach(r =>
+        throw new IllegalArgumentException(
+          s"quantizerOf: ragged centroid matrix (row of length " +
+            s"${r.length} vs ${cents(0).length})"))
+    Quantizer(cents.flatten, cents.map(_.map(x => x * x).sum),
+      if (cents.isEmpty) 0 else cents(0).length)
+  }
+}
 
 /** The SHARDED coarse-quantizer probe as ONE expression over ONE
   * broadcast — what makes the sharded ADC probe a single Catalyst plan
@@ -34,7 +56,17 @@ import org.apache.spark.sql.types._
   * to the retired plan-per-shard fan-out's (what keeps the qg1–qg4
   * oracles valid across the re-layout). A shard dialed to nprobe 0 is
   * SKIPPED (emits no cells) — the shard-pure legs the per-shard tuner
-  * builds. */
+  * builds.
+  *
+  * The live tiers (ivfTopK, ivfAdcTopK, semDedup, outlierAudit) and a
+  * shard retrain's re-pack run the same expressions over a ONE-entry
+  * [[ShardedQuant]]: at shard 0 a gcell equals its cell id, so one
+  * kernel family serves every cell selection in the program. The
+  * quantizer rides a broadcast, not a plan literal: a folded centroid
+  * matrix serializes into the task binary of every stage of every
+  * plan (~0.4 µs per cell per plan measured on the growth corpus,
+  * ~0.5 GB per plan at nlist = 10^6); a broadcast ships once per
+  * executor and a plan carries only the handle. */
 object NearestCellsSharded {
 
   /** All shards' flat quantizers, one broadcast. */
@@ -132,29 +164,21 @@ object NearestCellsSharded {
   /** Column API: probed gcells of every shard, flat kernel. */
   def flat(vec: Column, bc: Broadcast[ShardedQuant],
       nprobes: Array[Int]): Column =
-    org.apache.spark.sql.classic.GraftColumnBridge.column(
-      NearestCellsShardedBcExpr(
-        org.apache.spark.sql.classic.GraftColumnBridge.expression(vec),
-        bc, nprobes))
+    column(NearestCellsShardedBcExpr(expression(vec), bc, nprobes))
 
   /** Column API: probed gcells of every shard, two-level kernel. */
   def hier(vec: Column, bc: Broadcast[ShardedHier],
       gprobes: Array[Int], nprobes: Array[Int]): Column =
-    org.apache.spark.sql.classic.GraftColumnBridge.column(
-      NearestCellsShardedHierBcExpr(
-        org.apache.spark.sql.classic.GraftColumnBridge.expression(vec),
-        bc, gprobes, nprobes))
+    column(NearestCellsShardedHierBcExpr(expression(vec), bc, gprobes,
+      nprobes))
 
   /** Column API: the assigned cell (int, shard-local) of a vector in
     * shard `shard` — the write paths pair it with the shard column to
-    * derive `gcell` in plain arithmetic. */
+    * derive `gcell` in plain arithmetic; the live tiers pass `lit(0)`
+    * against a one-entry [[ShardedQuant]]. */
   def assign(vec: Column, shard: Column,
       bc: Broadcast[ShardedQuant]): Column =
-    org.apache.spark.sql.classic.GraftColumnBridge.column(
-      AssignShardedCellExpr(
-        org.apache.spark.sql.classic.GraftColumnBridge.expression(vec),
-        org.apache.spark.sql.classic.GraftColumnBridge.expression(shard),
-        bc))
+    column(AssignShardedCellExpr(expression(vec), expression(shard), bc))
 }
 
 /** Flat sharded probe: array<float|double> → array<long> of gcells. */

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit, typedLit}
+import org.apache.spark.sql.classic.GraftColumnBridge.{column, expression}
+import org.apache.spark.sql.functions.{lit, typedLit}
 import org.apache.spark.sql.types._
 
 /** All OR-amplification sign-LSH bucket keys of an embedding in ONE call:
@@ -100,11 +101,11 @@ case class SignBucketsExpr(first: Expression, second: Expression,
 object SignBuckets {
 
   /** Column API: packed (table << 48 | bucket) keys for every table.
-    * `hps(t)(p)` is table t's plane p. Requires
-    * [[VectorOps.ensureRegistered]]. */
+    * `hps(t)(p)` is table t's plane p. */
   def apply(vec: Column, hps: Array[Array[Array[Double]]]): Column =
-    call_function("sign_buckets", vec,
-      typedLit(hps.flatten.map(_.toSeq).toSeq), lit(hps(0).length))
+    column(SignBucketsExpr(expression(vec),
+      expression(typedLit(hps.flatten.map(_.toSeq).toSeq)),
+      expression(lit(hps(0).length))))
 
   /** Tight-loop kernel shared by eval and generated code. */
   def buckets(a: ArrayData, isFloat: Boolean, flat: Array[Double],

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Native dot product over `array<float>` / `array<double>` columns.
@@ -87,10 +87,13 @@ case class VecDot(left: Expression, right: Expression)
 }
 
 object VectorOps {
-  /** Register `vec_dot` in the session's function registry.
-    * createOrReplaceTempFunction is already idempotent and cheap, so no
-    * registration guard: a guard keyed on anything weaker than session
-    * identity risks skipping a session that still needs the function. */
+  /** Bind graft's eight kernels to their SQL names in the session's
+    * function registry: `vec_dot`, `hash60`, `sign_buckets`, `pack_i8`,
+    * `i8_dot`, `max_abs`, `pack_quant` and `minhash_sigs`. Only callers
+    * that look a kernel up BY NAME (`call_function`, SQL text, the
+    * registry) need it; the Column APIs build their expressions
+    * directly and work on any session. Each call replaces the eight
+    * bindings, so call it once per session, not per query. */
   def ensureRegistered(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
@@ -127,19 +130,21 @@ object VectorOps {
       "built-in")
   }
 
-  /** Column API for the native dot product (register first). */
-  def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  /** Column API for the native dot product. */
+  def vecDot(a: Column, b: Column): Column =
+    column(VecDot(expression(a), expression(b)))
 
-  /** Column API for int8-code packing (register first). */
-  def packI8(codes: Column): Column = call_function("pack_i8", codes)
+  /** Column API for int8-code packing. */
+  def packI8(codes: Column): Column = column(PackI8Expr(expression(codes)))
 
-  /** Column API for the exact int8-code dot product (register first). */
-  def i8Dot(a: Column, b: Column): Column = call_function("i8_dot", a, b)
+  /** Column API for the exact int8-code dot product. */
+  def i8Dot(a: Column, b: Column): Column =
+    column(I8DotExpr(expression(a), expression(b)))
 
-  /** Column API for the native quantization scale (register first). */
-  def maxAbs(v: Column): Column = call_function("max_abs", v)
+  /** Column API for the native quantization scale. */
+  def maxAbs(v: Column): Column = column(MaxAbsExpr(expression(v)))
 
-  /** Column API for single-pass quantize+pack (register first). */
+  /** Column API for single-pass quantize+pack. */
   def packQuant(v: Column, scale: Column): Column =
-    call_function("pack_quant", v, scale)
+    column(PackQuantExpr(expression(v), expression(scale)))
 }

@@ -123,7 +123,6 @@ object Curation {
     */
   def contamination(corpus: DataFrame, eval: DataFrame, idCol: String,
       textCol: String, n: Int = 3, minShared: Long = 1L): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(corpus.sparkSession)
     val corpusGrams = corpus.select(col(idCol).as("id"),
         explode(Dedup.shingles(col(textCol), n)).as("s"))
       .select(col("id"), Portable.hash60Fast(col("s")).as("sh"))
@@ -164,7 +163,6 @@ object Curation {
       idCol: String, textCol: String, n: Int = 4,
       fpp: Option[Double] = None): DataFrame = {
     val spark = corpus.sparkSession
-    graft.functions.VectorOps.ensureRegistered(spark)
     val anyHit = fpp match {
       case None => evalGramHit(evalSet, idCol, textCol, n)
       case Some(p) =>
@@ -341,7 +339,6 @@ object Curation {
   def epochShuffle(docs: DataFrame, idCol: String, nShards: Int,
       seed: String): DataFrame = {
     require(nShards > 0, s"nShards=$nShards")
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     val h = Portable.hash60Fast(
       concat(lit(seed), lit(":"), col(idCol).cast("string")))
     docs.select(col(idCol).as("doc_id"), h.as("h"))
@@ -429,7 +426,6 @@ object Curation {
     import org.apache.spark.sql.expressions.Window
     require(pctTrain > 0 && pctVal >= 0 && pctTrain + pctVal <= 100,
       s"pctTrain=$pctTrain pctVal=$pctVal")
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     val keyed = docs.select(col(idCol).as("doc_id"),
       md5(col(textCol)).as("fp"))
     val rep = min(col("doc_id")).over(Window.partitionBy("fp"))
@@ -565,7 +561,6 @@ object Curation {
   def cleanCorpusStream(stream: DataFrame, corpus: DataFrame,
       evalSet: DataFrame, idCol: String, textCol: String, srcCol: String,
       qualityFloor: Double = 0.5, contaminationN: Int = 4): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(stream.sparkSession)
     val t = col(textCol)
     val hit = evalGramHit(evalSet, idCol, textCol, contaminationN)
     val grams = transform(Dedup.shingles(t, contaminationN),

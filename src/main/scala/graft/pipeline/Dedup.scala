@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.functions._
 
 /** Document deduplication for large-scale training-data pipelines.
@@ -51,7 +52,6 @@ object Dedup {
   /** (id, sh) distinct 60-bit shingle-hash postings for a corpus. */
   def shinglePostings(docs: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol).as("id"),
         explode(shingles(col(textCol), n)).as("s"))
       .select(col("id"), Portable.hash60Fast(col("s")).as("sh"))
@@ -98,7 +98,6 @@ object Dedup {
     * costs n× the exchange width for audit-grade output; not worth it. */
   def groupOverlap(docs: DataFrame, groupCol: String, textCol: String,
       n: Int): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     val gs = docs.select(col(groupCol).as("g"),
         explode(shingles(col(textCol), n)).as("s"))
       .select(col("g"), Portable.hash60Fast(col("s")).as("sh"))
@@ -200,9 +199,9 @@ object Dedup {
     * fewer than n words yield null = no shingles and drop out. */
   private[graft] def mapSideSignatures(docs: DataFrame, idCol: String,
       textCol: String, n: Int, numHashes: Int): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol).as("id"),
-        call_function("minhash_sigs", col(textCol), lit(n), lit(numHashes))
+        GraftColumnBridge.column(graft.functions.MinhashSigsExpr(
+          GraftColumnBridge.expression(col(textCol)), n, numHashes))
           .as("sig"))
       .filter(col("sig").isNotNull)
       .select(col("id") +:
@@ -663,7 +662,6 @@ object Dedup {
     * requires. */
   private def coveredPositions(docs: DataFrame, idCol: String,
       textCol: String, l: Int): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     val grams = docs.select(col(idCol).as("doc_id"),
         posexplode(shingles(col(textCol), l)).as(Seq("pos", "s")))
       .select(col("doc_id"), col("pos"),
@@ -807,7 +805,6 @@ object Dedup {
     * One explode + two hash aggregations; integer-exact across engines. */
   def simhash(docs: DataFrame, idCol: String, textCol: String,
       bits: Int = 60): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     val toks = docs.select(col(idCol).as("id"),
         explode(filter(split(col(textCol), " "), t => length(t) > 0)).as("w"))
       .groupBy("id", "w").agg(count(lit(1)).as("cnt"))

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.classic.GraftColumnBridge
 import org.apache.spark.sql.functions._
 
 /** Engine-portable deterministic hashing.
@@ -26,10 +27,10 @@ object Portable {
   /** The same value via the native [[graft.functions.Hash60Expr]] — no
     * intermediate hex/substring/base-10 strings (3 allocations saved per
     * value, which dominates shingle-scale hashing). Bit-equality with
-    * [[hash60]] is property-tested. Requires
-    * [[graft.functions.VectorOps.ensureRegistered]] on the session. */
+    * [[hash60]] is property-tested. */
   def hash60Fast(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("hash60", c)
+    GraftColumnBridge.column(
+      graft.functions.Hash60Expr(GraftColumnBridge.expression(c)))
 
   /** The same value DuckDB-side, for oracle builders. */
   def hash60Sql(sqlExpr: String): String =

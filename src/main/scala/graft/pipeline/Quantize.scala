@@ -57,7 +57,6 @@ object Quantize {
   def codesOf(v: Column, scale: Column): Column = codes(v, scale)
 
   def int8(vecs: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(vecs.sparkSession)
     val v = transform(col(vecCol), _.cast("double"))
     val scale = scaleOf(col(vecCol))
     vecs.select(col(idCol).as("id"), scale.as("scale"),
@@ -71,7 +70,6 @@ object Quantize {
     * one map-side projection, zero exchanges. */
   def packedInt8(vecs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(vecs.sparkSession)
     val scale = scaleOf(col(vecCol))
     vecs.select(col(idCol).as("id"), scale.as("scale"),
       graft.functions.VectorOps.packQuant(col(vecCol), scale).as("qc"))
@@ -91,7 +89,6 @@ object Quantize {
     * compact code checksum. Output: (id, scale, q_sum, max_err). */
   def int8Audit(vecs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(vecs.sparkSession)
     // stacked projections, not a join back to the source — Catalyst
     // collapses them into ONE map-side project, so the audit of a
     // 100 TB corpus is a single scan with zero exchanges

@@ -34,7 +34,6 @@ object Samples {
     * exchange). */
   def hashSampleTopK(df: DataFrame, idCol: String, k: Int): DataFrame = {
     require(k > 0, s"k=$k")
-    graft.functions.VectorOps.ensureRegistered(df.sparkSession)
     df.select(col(idCol).as("id"),
         Portable.hash60Fast(concat(lit("smp:"),
           col(idCol).cast("string"))).as("hk"))
@@ -111,7 +110,6 @@ object Samples {
   def groupedHashSampleTopK(df: DataFrame, groupCol: String,
       idCol: String, k: Int): DataFrame = {
     require(k > 0, s"k=$k")
-    graft.functions.VectorOps.ensureRegistered(df.sparkSession)
     import org.apache.spark.sql.expressions.Window
     df.select(col(groupCol).as("g"), col(idCol).as("id"),
         Portable.hash60Fast(concat(lit("smp:"),

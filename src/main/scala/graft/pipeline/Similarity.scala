@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps
+import graft.functions.{NearestCellsBc, NearestCellsSharded, VectorOps}
+import graft.functions.NearestCellsSharded.{ShardedHier, ShardedQuant}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -33,7 +35,6 @@ object Similarity {
   /** Vectors annotated with their L2 norm (computed once, pre-join). */
   private def withNorm(vecs: DataFrame, idCol: String, vecCol: String)
       : DataFrame = {
-    VectorOps.ensureRegistered(vecs.sparkSession)
     vecs.select(col(idCol).as("id"), col(vecCol).as("v"),
       norm(col(vecCol)).as("nrm"))
   }
@@ -329,7 +330,6 @@ object Similarity {
     * only cap rows per partition cross the wire — never a full sort. */
   def trainingSample(vecs: DataFrame, idCol: String, vecCol: String,
       cap: Int): DataFrame = {
-    VectorOps.ensureRegistered(vecs.sparkSession)
     vecs.select(Portable.hash60Fast(col(idCol).cast("string")).as("h"),
         col(idCol).as("i"), col(vecCol))
       .orderBy(col("h"), col("i"))
@@ -337,28 +337,17 @@ object Similarity {
       .select(col(vecCol))
   }
 
-  /** The scan-path operators' quantizer, shipped as a BROADCAST handle
-    * instead of a plan literal (r22, the r21 verdict's q35c item): the
-    * literal form folds the centroid matrix into every stage's task
-    * binary of every plan — at sf0.1 the q35c/q89 plan TEXT alone was
-    * ~258 KB (q88 427 KB), re-planned per run, and at a production
-    * nlist the per-plan payload is ~0.5 GB (the measured ~0.4 µs/cell/
-    * plan tax that motivated [[svQuantBc]] on the indexed path).
-    * The kernel is [[graft.functions.NearestCells.nearest]], shared
-    * with every other cell-selection path; the broadcast is
-    * per-operator-call and reclaimed by the ContextCleaner like any
-    * broadcast join's. */
-  private def broadcastQuantizer(spark: SparkSession,
-      cents: Array[Array[Double]]): org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsBc.Quantizer] =
+  /** The live tiers' quantizer as a one-entry [[ShardedQuant]]
+    * broadcast, not a plan literal (the r21 verdict's q35c item; why,
+    * in [[graft.functions.NearestCellsSharded]]): assign with
+    * `NearestCellsSharded.assign(v, lit(0), bc)`, probe with
+    * `NearestCellsSharded.flat(v, bc, Array(nprobe))` — at shard 0 a
+    * gcell equals its cell id. Per-operator-call, reclaimed by the
+    * ContextCleaner like any broadcast join's. */
+  private def oneShardQuant(spark: SparkSession,
+      cents: Array[Array[Double]]): Broadcast[ShardedQuant] =
     spark.sparkContext.broadcast(
-      graft.functions.NearestCellsBc.quantizerOf(cents))
-
-  private def nearestCells(vec: Column,
-      bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsBc.Quantizer],
-      nprobe: Int): Column =
-    graft.functions.NearestCellsBc(vec, bc, nprobe)
+      ShardedQuant(Array(NearestCellsBc.quantizerOf(cents))))
 
   /** Train a coarse quantizer on a driver-resident sample: one collect,
     * then local Lloyd iterations (nlist × dim doubles of state — the
@@ -462,13 +451,16 @@ object Similarity {
       else trainCoarseQuantizer(
         trainingSample(vecs, idCol, vecCol, trainingCap(nlist)),
         vecCol, nlist, dim)
-    val qbc = broadcastQuantizer(vecs.sparkSession, quantizer)
+    val qbc = oneShardQuant(vecs.sparkSession, quantizer)
     val base = withNorm(vecs, idCol, vecCol)
+    // the probes emit gcells (long; equal to the cell at shard 0), so
+    // the assigned side widens to long: one key type in the cell join
     val corpus = base.withColumn("cell",
-      element_at(nearestCells(col("v"), qbc, 1), 1))
+      NearestCellsSharded.assign(col("v"), lit(0), qbc).cast("long"))
     val probes = (if (queries == null) base
       else withNorm(queries, idCol, vecCol))
-      .withColumn("cell", explode(nearestCells(col("v"), qbc, nprobe)))
+      .withColumn("cell",
+        explode(NearestCellsSharded.flat(col("v"), qbc, Array(nprobe))))
       .select(col("id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("cell"))
     val candidates = probes.join(corpus, Seq("cell"))
@@ -551,7 +543,6 @@ object Similarity {
       else trainCoarseQuantizer(
         trainingSample(vecs, idCol, vecCol, trainingCap(nlist)),
         vecCol, nlist, dim)
-    VectorOps.ensureRegistered(vecs.sparkSession)
     // all three per-row kernels are native + codegen'd (max_abs,
     // pack_quant, nearest_cells — float arrays consumed directly, no
     // cast-transform wrapper): the declarative HOF quantize was
@@ -573,12 +564,14 @@ object Similarity {
     // build at bench scale, cell-keyed shuffle at corpus scale) — forcing
     // a corpus repartition here measured 2× slower at growth-10x by
     // denying the planner the broadcast.
-    val qbc = broadcastQuantizer(vecs.sparkSession, quantizer)
+    val qbc = oneShardQuant(vecs.sparkSession, quantizer)
     val corpus = vecs.select(
-      element_at(nearestCells(col(vecCol), qbc, 1), 1).as("cell"),
+      NearestCellsSharded.assign(col(vecCol), lit(0), qbc).cast("long")
+        .as("cell"),
       col(idCol).as("id"), qc.as("qc"), sc.as("scale"))
     val probes = vecs.select(col(idCol).as("q_id"), qc.as("q_qc"),
-      explode(nearestCells(col(vecCol), qbc, nprobe)).as("cell"))
+      explode(NearestCellsSharded.flat(col(vecCol), qbc, Array(nprobe)))
+        .as("cell"))
       .repartition(col("cell"))
     val candidates = probes.join(corpus, Seq("cell"))
       .filter(col("q_id") =!= col("id"))
@@ -964,27 +957,21 @@ object Similarity {
     * unpersists the old broadcast (non-blocking — in-flight plans
     * holding the old handle just re-fetch). */
   private val svQuantMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.broadcast.Broadcast[
-      graft.functions.NearestCellsSharded.ShardedQuant])]()
+    String, (String, Broadcast[ShardedQuant])]()
   private val svHierMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.broadcast.Broadcast[
-      graft.functions.NearestCellsSharded.ShardedHier])]()
+    String, (String, Broadcast[ShardedHier])]()
 
   private def svQuantBc(spark: SparkSession, st: SvState)
-      : org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsSharded.ShardedQuant] =
+      : Broadcast[ShardedQuant] =
     memoBc(svQuantMemo, spark, st.dataT, svQuantKey(spark, st))(
-      graft.functions.NearestCellsSharded.ShardedQuant(
-        readSvCentroids(spark, st)
-          .map(graft.functions.NearestCellsBc.quantizerOf)))
+      ShardedQuant(readSvCentroids(spark, st)
+        .map(NearestCellsBc.quantizerOf)))
 
   private def svHierBc(spark: SparkSession, st: SvState)
-      : org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsSharded.ShardedHier] =
+      : Broadcast[ShardedHier] =
     memoBc(svHierMemo, spark, st.dataT, svQuantKey(spark, st))(
-      graft.functions.NearestCellsSharded.ShardedHier(
-        readSvCentroids(spark, st)
-          .map(graft.functions.NearestCellsHier.group)))
+      ShardedHier(readSvCentroids(spark, st)
+        .map(graft.functions.NearestCellsHier.group)))
 
   /** The packed (gcell, shard, cell, id, qc, scale) rows of a
     * mixed-shard vector frame in ONE pass: each row routes by
@@ -993,18 +980,16 @@ object Similarity {
     * assign kernel — the single-shard kernel on that shard's slice, so
     * assignment is bit-identical to the retired per-shard pass).
     * `epochOf(shardCol)` stamps each row with its shard's target epoch
-    * (a map literal at the callers — shards retrain independently). */
+    * (a map literal at the appends — shards retrain independently; a
+    * constant at a build and at one shard's retrain re-pack). */
   private def svPackedRows(vecs: DataFrame, idCol: String,
-      vecCol: String,
-      bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsSharded.ShardedQuant],
+      vecCol: String, bc: Broadcast[ShardedQuant],
       nShards: Int, gen: Long, epochOf: Column => Column): DataFrame = {
     val sc = VectorOps.maxAbs(col(vecCol))
     val shardC = shardOf(idCol, nShards).cast("int")
     vecs.select(
         shardC.as("shard"),
-        graft.functions.NearestCellsSharded.assign(col(vecCol), shardC,
-          bc).as("cell"),
+        NearestCellsSharded.assign(col(vecCol), shardC, bc).as("cell"),
         col(idCol).as("id"),
         VectorOps.packQuant(col(vecCol), sc).as("qc"), sc.as("scale"))
       .select(
@@ -1061,7 +1046,6 @@ object Similarity {
       dim: Int, targetRecall: Double, buckets: Int, init: String,
       cents: Seq[Array[Array[Double]]]): Seq[Array[Array[Double]]] = {
     val spark = vecs.sparkSession
-    VectorOps.ensureRegistered(spark)
     // a fresh layout has no committed batches, no tombstones, no stale
     // replay marks and no stale broadcasts
     MergeTables.dropHwms(spark, dataT + "_g")
@@ -1073,10 +1057,8 @@ object Similarity {
       s -> (if (cents.nonEmpty) cents(s)
         else svTrainShard(vecs, idCol, vecCol, nShards, s, counts(s),
           targetRecall, dim, init)))
-    val bc = spark.sparkContext.broadcast(
-      graft.functions.NearestCellsSharded.ShardedQuant(
-        quants.map(q => graft.functions.NearestCellsBc.quantizerOf(q._2))
-          .toArray))
+    val bc = spark.sparkContext.broadcast(ShardedQuant(
+      quants.map(q => NearestCellsBc.quantizerOf(q._2)).toArray))
     try graft.sources.MapFiles.write(
       svPackedRows(vecs, idCol, vecCol, bc, nShards, gen = 0L,
         _ => lit(0L)),
@@ -1230,7 +1212,6 @@ object Similarity {
       cellsOf: Column => Column,
       localSel: Array[Double] => Array[Long]): DataFrame = {
     val spark = queries.sparkSession
-    VectorOps.ensureRegistered(spark)
     val snapped: Option[Array[org.apache.spark.sql.Row]] =
       if (queries.isStreaming) None
       else {
@@ -1278,27 +1259,22 @@ object Similarity {
   /** [[svProbeCandidates]] through the FLAT combined kernel at
     * per-shard `nprobes` (0 skips a shard). */
   private def svFlatCandidates(queries: DataFrame, idCol: String,
-      vecCol: String, st: SvState,
-      bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsSharded.ShardedQuant],
+      vecCol: String, st: SvState, bc: Broadcast[ShardedQuant],
       nprobes: Array[Int], buckets: Int): DataFrame =
     svProbeCandidates(queries, idCol, vecCol, st, buckets,
-      v => graft.functions.NearestCellsSharded.flat(v, bc, nprobes),
-      v => graft.functions.NearestCellsSharded.nearestFlat(
+      v => NearestCellsSharded.flat(v, bc, nprobes),
+      v => NearestCellsSharded.nearestFlat(
         new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
         isFloat = false, bc.value, nprobes))
 
   /** [[svProbeCandidates]] through the TWO-LEVEL combined kernel at
     * per-shard (`nprobes`, `gprobes`) (nprobe 0 skips a shard). */
   private def svHierCandidates(queries: DataFrame, idCol: String,
-      vecCol: String, st: SvState,
-      bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsSharded.ShardedHier],
+      vecCol: String, st: SvState, bc: Broadcast[ShardedHier],
       nprobes: Array[Int], gprobes: Array[Int], buckets: Int): DataFrame =
     svProbeCandidates(queries, idCol, vecCol, st, buckets,
-      v => graft.functions.NearestCellsSharded.hier(v, bc, gprobes,
-        nprobes),
-      v => graft.functions.NearestCellsSharded.nearestHier(
+      v => NearestCellsSharded.hier(v, bc, gprobes, nprobes),
+      v => NearestCellsSharded.nearestHier(
         new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
         isFloat = false, bc.value, gprobes, nprobes))
 
@@ -1318,9 +1294,7 @@ object Similarity {
   /** Each shard's fraction-law nprobe from its OWN stored nlist — the
     * oracle-gated probe law, unchanged from the per-shard layout
     * (what keeps qg1–qg4's per-shard CTE chains valid). */
-  private def svFracNprobes(
-      bc: org.apache.spark.broadcast.Broadcast[
-        graft.functions.NearestCellsSharded.ShardedQuant],
+  private def svFracNprobes(bc: Broadcast[ShardedQuant],
       targetRecall: Double): Array[Int] = {
     val frac = probeFracEighths(targetRecall) / 8.0
     bc.value.quants.map { q =>
@@ -1887,7 +1861,6 @@ object Similarity {
   private[graft] def svAppendRowsOnly(newVecs: DataFrame, idCol: String,
       vecCol: String, st: SvState, gen: Long): Unit = {
     val spark = newVecs.sparkSession
-    VectorOps.ensureRegistered(spark)
     val em = svEpochMap(st)
     graft.sources.MapFiles.append(
       svPackedRows(newVecs, idCol, vecCol, svQuantBc(spark, st),
@@ -2083,7 +2056,6 @@ object Similarity {
       targetRecall: Double = 0.8): Array[Array[Double]] =
       MergeTables.withTableLock(table) {
     val spark = vecs.sparkSession
-    VectorOps.ensureRegistered(spark)
     requireNonNegIds(vecs, idCol, "retrainIvfAdcShard")
     val st = svState(spark, table, fresh = true)
     require(shard >= 0 && shard < st.nShards,
@@ -2113,26 +2085,17 @@ object Similarity {
       svCentroidRows(spark, Seq(shard -> quantizer), attempt),
       dataT + "_c")
     // inert land 2: the shard's live vectors re-packed under (gen 0,
-    // attempt) into the existing gcell buckets
-    val bcQ = spark.sparkContext.broadcast(
-      graft.functions.NearestCellsBc.quantizerOf(quantizer))
-    try {
-      val sc = VectorOps.maxAbs(col(vecCol))
-      graft.sources.MapFiles.append(
-        live.select(
-            lit(shard).as("shard"),
-            element_at(graft.functions.NearestCellsBc(col(vecCol), bcQ,
-              1), 1).as("cell"),
-            col(idCol).as("id"),
-            VectorOps.packQuant(col(vecCol), sc).as("qc"), sc.as("scale"))
-          .select(
-            (col("shard").cast("long") * lit(4294967296L) +
-              col("cell").cast("long")).as("gcell"),
-            col("shard"), col("cell"), col("id"), col("qc"),
-            col("scale"))
-          .withColumn("gen", lit(0L)).withColumn("epoch", lit(attempt)),
-        dataT)
-    } finally bcQ.unpersist(false)
+    // attempt) into the existing gcell buckets; only this shard's rows
+    // reach the kernel, so every slot of the broadcast holds the new
+    // quantizer
+    val q = NearestCellsBc.quantizerOf(quantizer)
+    val bcQ =
+      spark.sparkContext.broadcast(ShardedQuant(Array.fill(st.nShards)(q)))
+    try graft.sources.MapFiles.append(
+      svPackedRows(live, idCol, vecCol, bcQ, st.nShards, gen = 0L,
+        _ => lit(attempt)),
+      dataT)
+    finally bcQ.unpersist(false)
     // committed streamed keys appear on EVERY shard's rows, so this
     // shard's reset alone cannot lose replay detection — but fold the
     // marks anyway (belt and braces, and the nShards=1 case needs it)
@@ -2367,9 +2330,9 @@ object Similarity {
 
   private def memoBc[T: scala.reflect.ClassTag](
       memo: java.util.concurrent.ConcurrentHashMap[
-        String, (String, org.apache.spark.broadcast.Broadcast[T])],
+        String, (String, Broadcast[T])],
       spark: SparkSession, table: String, key: String)(make: => T)
-      : org.apache.spark.broadcast.Broadcast[T] =
+      : Broadcast[T] =
     memo.compute(table, (_, prev) =>
       if (prev != null && prev._1 == key) prev
       else {
@@ -2506,8 +2469,8 @@ object Similarity {
       trainingSample(vecs, idCol, vecCol, trainingCap(nlist)),
       vecCol, nlist, dim, iters)
     val assigned = withNorm(vecs, idCol, vecCol).withColumn("cell",
-      element_at(nearestCells(col("v"),
-        broadcastQuantizer(vecs.sparkSession, cents), 1), 1))
+      NearestCellsSharded.assign(col("v"), lit(0),
+        oneShardQuant(vecs.sparkSession, cents)))
     val dropped = assigned.as("a").join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
       .filter(dot(col("a.v"), col("b.v")) /
@@ -2547,7 +2510,6 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     require(pctNum >= 0 && pctNum <= 100, s"pctNum=$pctNum")
     val spark = vecs.sparkSession
-    VectorOps.ensureRegistered(spark)
     val (nlist, _) = ivfParams(vecs.count(), targetOccupancy = targetOccupancy)
     val cents = trainCoarseQuantizer(
       trainingSample(vecs, idCol, vecCol, trainingCap(nlist)),
@@ -2558,8 +2520,8 @@ object Similarity {
     val centDf = spark.createDataFrame(centRows).toDF("cell", "cent")
     val assigned = vecs.select(col(idCol).as("vec_id"),
       col(vecCol).as("e"),
-      element_at(nearestCells(col(vecCol),
-        broadcastQuantizer(spark, cents), 1), 1).as("cell"))
+      NearestCellsSharded.assign(col(vecCol), lit(0),
+        oneShardQuant(spark, cents)).as("cell"))
     val d2 = assigned.join(broadcast(centDf), Seq("cell"))
       .select(col("vec_id"), col("cell"),
         (dot(col("e"), col("e")) - lit(2) * dot(col("e"), col("cent"))

@@ -1249,7 +1249,6 @@ object TextAnalysis {
   def countMinCounters(docs: DataFrame, textCol: String,
       width: Int = 1024, depth: Int = 4): DataFrame = {
     require(width > 0 && depth > 0, s"w=$width d=$depth")
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     docs.select(explode(words(col(textCol))).as("tok"))
       .select(explode(cmCoords(width, depth)).as("x"))
       .groupBy(col("x.h").as("h"), col("x.b").as("b"))
@@ -1271,7 +1270,6 @@ object TextAnalysis {
   private def cmTopKFromCounters(vocabDocs: DataFrame,
       counters: DataFrame, textCol: String, k: Int, width: Int,
       depth: Int): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(vocabDocs.sparkSession)
     val cs = counters
       .select(col("h").as("ch"), col("b").as("cb"), col("c"))
     vocabDocs.select(explode(words(col(textCol))).as("tok")).distinct()
@@ -1427,7 +1425,6 @@ object TextAnalysis {
   def groupedCountMinCounters(docs: DataFrame, groupCol: String,
       textCol: String, width: Int = 1024, depth: Int = 4): DataFrame = {
     require(width > 0 && depth > 0, s"w=$width d=$depth")
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     docs.select(col(groupCol).as("g"),
         explode(words(col(textCol))).as("tok"))
       .select(col("g"), explode(cmCoords(width, depth)).as("x"))
@@ -1530,7 +1527,6 @@ object TextAnalysis {
       width: Int = 1024, depth: Int = 4): DataFrame = {
     require(k > 0, s"k=$k")
     requireCmParams(vocabDocs.sparkSession, table, width, depth)
-    graft.functions.VectorOps.ensureRegistered(vocabDocs.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val cs = groupedCountMinFromTable(vocabDocs.sparkSession, table)
       .select(col("g").as("cg"), col("h").as("ch"), col("b").as("cb"),
@@ -1563,7 +1559,6 @@ object TextAnalysis {
       : DataFrame = {
     require(tokens.nonEmpty, "no audit tokens")
     requireCmParams(spark, table, width, depth)
-    graft.functions.VectorOps.ensureRegistered(spark)
     import spark.implicits._
     val cs = groupedCountMinFromTable(spark, table)
       .select(col("g").as("cg"), col("h").as("ch"), col("b").as("cb"),
@@ -1686,7 +1681,6 @@ object TextAnalysis {
     * keep decision never compares drifted floats. */
   def classifierFilter(docs: DataFrame, idCol: String, textCol: String,
       buckets: Int = 1 << 20, threshold: Long = 0L): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     val ws = words(col(textCol))
     val bi = transform(slice(ws, lit(1), greatest(size(ws) - 1, lit(0))),
       (w, i) => concat(w, lit("_"), element_at(ws, i + 2)))
@@ -1708,7 +1702,6 @@ object TextAnalysis {
     * chosen so no intermediate exceeds a signed 64-bit long. Distinguishes
     * permuted documents, unlike bag-of-words hashing. */
   def fingerprint(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorOps.ensureRegistered(docs.sparkSession)
     val ws = words(col(textCol))
     val weighted = transform(ws,
       (w, i) => (i.cast("long") + 1L) * (Portable.hash60Fast(w) % 1000003L))

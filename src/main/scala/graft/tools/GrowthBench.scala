@@ -51,7 +51,6 @@ object GrowthBench {
   private def lshHistogram(spark: SparkSession, dir: String, label: String,
       planes: Int, tables: Int): Unit = {
     val vecs = Tables.embeddings(spark, dir)
-    graft.functions.VectorOps.ensureRegistered(spark)
     val hps = Array.tabulate(tables)(t =>
       Similarity.hyperplanes(planes, 64, seed = s"table${t}_plane"))
     val buckets = vecs.select(col("vec_id"), explode(array(

@@ -4,13 +4,15 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Minimal `private[sql]` bridge: build a [[Column]] from a raw
-  * Catalyst [[Expression]] (and back). Needed by expressions whose
-  * state cannot ride the function registry's literal arguments — the
-  * broadcast-backed quantizer probes
-  * ([[graft.functions.NearestCellsBcExpr]]) carry a `Broadcast`
-  * handle, which `call_function` cannot express. The standard Spark
-  * extension-library pattern: one object in the sql namespace
-  * delegating to [[ExpressionUtils]], nothing else. */
+  * Catalyst [[Expression]] (and back). It is the one way a graft kernel
+  * becomes a Column: every Column API in `graft.functions` (and the
+  * minhash and hash60 call sites in `graft.pipeline`) wraps its
+  * expression here, so a kernel needs no function-registry entry and
+  * works on any session. Some kernels could not ride the registry at
+  * all: the quantizer probes ([[graft.functions.NearestCellsSharded]])
+  * carry a `Broadcast` handle, which a SQL-function literal cannot
+  * express. The standard Spark extension-library pattern: one object in
+  * the sql namespace delegating to [[ExpressionUtils]], nothing else. */
 object GraftColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

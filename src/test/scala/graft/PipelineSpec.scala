@@ -343,6 +343,46 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     assert(all.forall(_._3), all.mkString(","))
   }
 
+  test("graft Column APIs need no function registry: a fresh session's results equal the registered session's") {
+    // newSession() starts from Spark's built-in registry, none of
+    // graft's SQL names; the Column APIs must resolve there unchanged
+    import graft.functions.{SignBuckets, VectorOps}
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.functions.call_function
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("vec_dot"))
+    val rows = Seq(
+      (1L, Array(0.5f, -1f, 2f, 0f), "the quick brown fox jumps"),
+      (2L, Array(0f, 0f, 0f, 0f), "one two"),
+      (3L, Array(Float.NaN, 1f, -3f, 0.25f), "a b c a b c a b"))
+    val hps = Array.tabulate(2)(t =>
+      Similarity.hyperplanes(3, 4, seed = s"registry$t"))
+    def kernels(s: SparkSession): DataFrame = {
+      val df = s.createDataFrame(rows).toDF("id", "v", "text")
+      val qc = VectorOps.packQuant(col("v"), VectorOps.maxAbs(col("v")))
+      df.select(col("id"), VectorOps.vecDot(col("v"), col("v")).as("dot"),
+        qc.as("qc"), VectorOps.i8Dot(qc, qc).as("idot"),
+        VectorOps.packI8(array(lit(1), lit(-2), lit(127))).as("p8"),
+        SignBuckets(col("v"), hps).as("sb"),
+        Portable.hash60Fast(col("text")).as("h"))
+    }
+    def sigs(s: SparkSession): DataFrame = Dedup.mapSideSignatures(
+      s.createDataFrame(rows).toDF("id", "v", "text"), "id", "text", 2, 8)
+    graft.functions.VectorOps.ensureRegistered(spark)
+    for (f <- Seq(kernels _, sigs _)) {
+      val want = f(spark).orderBy("id").collect().toSeq
+      assert(want.nonEmpty)
+      assert(f(fresh).orderBy("id").collect().toSeq == want)
+    }
+    // an unaliased Column API keeps the output name of the by-name call
+    val df = spark.createDataFrame(rows).toDF("id", "v", "text")
+    val direct = df.select(VectorOps.vecDot(col("v"), col("v")),
+      VectorOps.maxAbs(col("v")), Portable.hash60Fast(col("text")))
+    val byName = df.select(call_function("vec_dot", col("v"), col("v")),
+      call_function("max_abs", col("v")), call_function("hash60", col("text")))
+    assert(direct.schema == byName.schema)
+  }
+
   test("native max_abs/pack_quant equal the declarative fold + codes, hostile rows included") {
     // value parity of the codegen'd quantize kernels vs the declarative
     // HOF form the q84 oracle mirrors — real corpus plus the NaN / +Inf
@@ -357,7 +397,6 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     ).toDF("vec_id", "embedding")
     val corpus = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select("vec_id", "embedding").unionByName(hostile)
-    graft.functions.VectorOps.ensureRegistered(spark)
     val v = transform(col("embedding"), _.cast("double"))
     val declScale = aggregate(v, lit(0.0), (a, x) => greatest(a, abs(x)))
     val declBlob =

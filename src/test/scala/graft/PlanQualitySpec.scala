@@ -718,7 +718,6 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     // the document body appearing in any exchange is the scale regression
     import graft.pipeline.{Dedup, Portable}
     import org.apache.spark.sql.functions.{col, count, explode, lit}
-    graft.functions.VectorOps.ensureRegistered(spark)
     val docs = spark.read.parquet(s"$d/documents.parquet")
     val gs = docs.select(col("source").as("g"),
         explode(Dedup.shingles(col("text"), 4)).as("s"))

@@ -47,9 +47,15 @@ def compare_frames(a: pd.DataFrame, b: pd.DataFrame, atol=1e-6):
         # sorting each column independently would discard cross-column row
         # association and accept genuinely mismatched results.
         # rows of a and b are aligned by the non-float sort above, so one
-        # group mask applies to both sides
-        gkey = (a[non_float].astype(str).agg("\x00".join, axis=1)
-                if non_float else pd.Series([""] * len(a)))
+        # group's row positions apply to both sides. Groups are keyed on
+        # the row tuples themselves in a Python dict: pandas' object
+        # hashing (unique, factorize, groupby) stops at an embedded NUL
+        # and would merge keys that differ only after one.
+        groups = {}
+        rows = (a[non_float].astype(str).itertuples(index=False, name=None)
+                if non_float else [()] * len(a))
+        for i, key in enumerate(rows):
+            groups.setdefault(key, []).append(i)
         fa = np.column_stack([pd.to_numeric(a[c]).to_numpy(dtype=float)
                               for c in floats])
         fb = np.column_stack([pd.to_numeric(b[c]).to_numpy(dtype=float)
@@ -78,9 +84,8 @@ def compare_frames(a: pd.DataFrame, b: pd.DataFrame, atol=1e-6):
             return True, (f"6dp-format mismatch (driver-hash risk): "
                           f"spark={sa[i][j]} oracle={sb[i][j]}")
 
-        for g in gkey.unique():
-            mask = (gkey == g).to_numpy()
-            va, vb = fa[mask], fb[mask]
+        for g, idx in groups.items():
+            va, vb = fa[idx], fb[idx]
             if len(va) != len(vb):
                 return False, f"float group {g!r}: row count mismatch"
             # Pair rows across sides by sorting each on its float tuple.
