@@ -7,6 +7,7 @@ import graft.ops.{FieldSelection, Joins, KeyFieldSort, Sampling, SecondarySort, 
 import graft.agg.ValueAggregators
 import graft.apps.{KMeans, KMeansLocal, MatMul, Pi}
 import graft.pipeline.{Curation, DatasetCard, Dedup, Multimodal, Quantize, Samples, Similarity, Sketches, TextAnalysis}
+import graft.streaming.EventStreams.drain
 
 /** The SURVEY §2.11 acceptance suite: each entry re-expresses one reference
   * capability (hadoop-gpu operator/example) over the driver's TPC-H-ish
@@ -815,9 +816,10 @@ object RelationalQueries {
       val stream = Tables.streamOf(s, d, "embeddings")
       val sink = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_qa6_${s.sparkContext.applicationId}").getAbsolutePath
-      Similarity.streamAdcTopKSharded(stream, "vec_id", "embedding",
-        k = 3, table = table, sinkDir = sink,
-        targetRecall = q35cTargetRecall)
+      drain(Similarity.startStreamAdcTopKSharded(stream, "vec_id",
+        "embedding", k = 3, table = table, sinkDir = sink,
+        targetRecall = q35cTargetRecall))
+      s.read.parquet(sink)
     }),
 
     // QA1 — two-stage retrieval: q89's quantized candidate generation to
@@ -1781,8 +1783,9 @@ object RelationalQueries {
       val stream = Tables.streamOf(s, d, "documents")
       val sink = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_qb4_${s.sparkContext.applicationId}").getAbsolutePath
-      TextAnalysis.streamBm25TopK(qb1Queries(stream), "q_id", "qtext",
-        table, k = qb1K, sinkDir = sink, k1 = qb1K1, b = qb1B)
+      drain(TextAnalysis.startStreamBm25TopK(qb1Queries(stream), "q_id",
+        "qtext", table, k = qb1K, sinkDir = sink, k1 = qb1K1, b = qb1B))
+      s.read.parquet(sink)
     }),
 
     // Q86 — q73's screen against a PERSISTED archive index: the corpus
@@ -1987,9 +1990,10 @@ object RelationalQueries {
             col("embedding").as("qvec"))), Seq("q_id"), "left")
       val sink = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_qc4_${s.sparkContext.applicationId}").getAbsolutePath
-      Similarity.streamHybridTopK(stream, "q_id", "qtext", "qvec",
-        ltable, vtable, lexDepth = qb1K, denseDepth = 3,
-        k = qb2K, sinkDir = sink, c = qb2C, k1 = qb1K1, b = qb1B)
+      drain(Similarity.startStreamHybridTopK(stream, "q_id", "qtext",
+        "qvec", ltable, vtable, lexDepth = qb1K, denseDepth = 3,
+        k = qb2K, sinkDir = sink, c = qb2C, k1 = qb1K1, b = qb1B))
+      s.read.parquet(sink)
     }),
 
     // QD1 — phrase search at n=3 over the PERSISTED positions index
@@ -2062,10 +2066,10 @@ object RelationalQueries {
       buildOnce(table) {
         TextAnalysis.writeBm25Index(docs.filter(col("doc_id") < 400),
           "doc_id", "text", table)
-        TextAnalysis.streamAppendBm25Index(
+        drain(TextAnalysis.startStreamAppendBm25Index(
           Tables.streamOf(s, d, "documents")
             .filter(col("doc_id") >= 400),
-          "doc_id", "text", table)
+          "doc_id", "text", table))
       }
       TextAnalysis.bm25TopKIndexed(qb1Queries(docs), "q_id", "qtext",
         table, k = qb1K, k1 = qb1K1, b = qb1B)
@@ -2174,10 +2178,10 @@ object RelationalQueries {
       buildOnce(table) {
         Similarity.writeIvfAdcIndexSharded(build, "vec_id", "embedding",
           table, targetRecall = q35cTargetRecall)
-        Similarity.streamAppendIvfAdcIndexSharded(
+        drain(Similarity.startStreamAppendIvfAdcIndexSharded(
           Tables.streamOf(s, d, "embeddings")
             .filter(col("vec_id") * 2 >= n),
-          "vec_id", "embedding", table)
+          "vec_id", "embedding", table))
       }
       denseProbe(vecs, 3, table)
     }),
@@ -2200,10 +2204,10 @@ object RelationalQueries {
       buildOnce(table) {
         Dedup.writeMinhashIndex(docs.filter(col("doc_id") < 300),
           "doc_id", "text", table, n = 3, numHashes = h, bands = b)
-        Dedup.streamAppendMinhashIndex(
+        drain(Dedup.startStreamAppendMinhashIndex(
           Tables.streamOf(s, d, "documents")
             .filter(col("doc_id") >= 300 && col("doc_id") < 400),
-          "doc_id", "text", table, n = 3, numHashes = h, bands = b)
+          "doc_id", "text", table, n = 3, numHashes = h, bands = b))
       }
       Dedup.incrementalMinhashPairsIndexed(
         docs.filter(col("doc_id") < 400),
@@ -2268,9 +2272,17 @@ object RelationalQueries {
       val sink = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_qe5_${s.sparkContext.applicationId}_${dirTag(d)}")
         .getAbsolutePath
-      Sketches.streamLogBucketQuantiles(
-        Tables.streamOf(s, d, "events").filter(col("value").isNotNull),
-        floor(col("value") * 100 + 0.5).cast("long"), qe4Pcts, sink)
+      // the complete-mode state is the bounded bucket table: ≤62
+      // widths × 2^subBits sub-buckets — derive the state-store
+      // partition count from that bound, not the session's
+      // corpus-scale default
+      graft.streaming.EventStreams.withBoundedStateShuffle(s,
+          62L * (1L << Sketches.defaultSubBits)) {
+        drain(Sketches.startStreamLogBucketQuantiles(
+          Tables.streamOf(s, d, "events").filter(col("value").isNotNull),
+          floor(col("value") * 100 + 0.5).cast("long"), qe4Pcts, sink))
+      }
+      s.read.parquet(sink)
     }),
 
     // QE6 — CONJUNCTIVE (boolean-AND) retrieval over the persisted
@@ -2342,11 +2354,11 @@ object RelationalQueries {
         val n = ev.count()
         Sketches.writeSketchTable(
           ev.filter(col("event_id") * 2 < n), cv, table)
-        Sketches.streamAppendSketchTable(
+        drain(Sketches.startStreamAppendSketchTable(
           Tables.streamOf(s, d, "events")
             .filter(col("value").isNotNull &&
               col("event_id") * 2 >= n),
-          floor(col("value") * 100 + 0.5).cast("long"), table)
+          floor(col("value") * 100 + 0.5).cast("long"), table))
       }
       Sketches.quantilesFromSketchTable(s, table, qe4Pcts)
     }),
@@ -2503,10 +2515,10 @@ object RelationalQueries {
         val docs = Tables.documents(s, d)
         Samples.writeSampleTable(
           docs.filter(col("doc_id") < 400), "doc_id", qf8K, table)
-        Samples.streamAppendSampleTable(
+        drain(Samples.startStreamAppendSampleTable(
           Tables.streamOf(s, d, "documents")
             .filter(col("doc_id") >= 400),
-          "doc_id", qf8K, table)
+          "doc_id", qf8K, table))
         Samples.compactSampleTable(s, table, qf8K)
       }
       Samples.sampleFromTable(s, table, qf8K)
@@ -2620,18 +2632,15 @@ object RelationalQueries {
           .getLong(0) + qfcRetainAfterHours
         Sketches.writeGroupedSketchTable(
           ev.filter(col("event_id") % 4 === 0), g, cv, table)
-        val lineage = graft.pipeline.MergeTables.allocLineage(s, table)
-        val q = Tables.streamOf(s, d, "events")
-          .filter(col("value").isNotNull && col("ts").isNotNull &&
-            col("event_id") % 4 =!= 0)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        drain(graft.pipeline.MergeTables.startKeyedStream(
+            Tables.streamOf(s, d, "events")
+              .filter(col("value").isNotNull && col("ts").isNotNull &&
+                col("event_id") % 4 =!= 0), Seq(table)) {
+          (batch, batchId, lineage) =>
             Sketches.streamAppendGroupedSketchBatch(batch, batchId, g,
               cv, table, lineage = lineage)
             Sketches.retireGroupsBefore(s, table, cutoff)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        })
         Sketches.compactGroupedSketchTable(s, table)
       }
       Sketches.groupedQuantilesFromSketchTable(s, table, qe4Pcts)
@@ -2722,11 +2731,11 @@ object RelationalQueries {
           col("source"), col("tok"), hllT)
         Samples.writeGroupedSampleTable(seed, "source", "doc_id",
           qf9K, smpT)
-        DatasetCard.maintainBlocking(
+        drain(DatasetCard.startMaintain(
           Tables.streamOf(s, d, "documents")
             .filter(col("doc_id") >= 200),
           lenT, cmT, hllT, smpT, qf9K, width = qa8Width,
-          depth = qa8Depth)
+          depth = qa8Depth))
         Sketches.compactGroupedSketchTable(s, lenT)
         TextAnalysis.compactGroupedCountMinTable(s, cmT)
         ValueAggregators.compactHllTable(s, hllT)
@@ -2796,23 +2805,18 @@ object RelationalQueries {
           ev.filter(col("event_id") % 4 === 0), g, cv, table)
         Sketches.appendGroupedSketchTable(
           ev.filter(col("event_id") % 4 === 1), g, cv, table)
-        def streamSlice(res: Int): Unit = {
-          val lineage =
-            graft.pipeline.MergeTables.allocLineage(s, table)
-          val q = Tables.streamOf(s, d, "events")
-            .filter(col("value").isNotNull && col("ts").isNotNull &&
-              col("event_id") % 4 === res)
-            .writeStream
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        def streamSlice(res: Int): Unit =
+          drain(graft.pipeline.MergeTables.startKeyedStream(
+              Tables.streamOf(s, d, "events")
+                .filter(col("value").isNotNull && col("ts").isNotNull &&
+                  col("event_id") % 4 === res), Seq(table)) {
+            (batch, batchId, lineage) =>
               Sketches.streamAppendGroupedSketchBatch(batch, batchId,
                 g, cv, table, lineage = lineage)
               Sketches.maybeCompactGroupedSketchTable(s, table,
                 maxGen = 2)
               ()
-            }
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        }
+          })
         streamSlice(2)
         streamSlice(3)
       }
@@ -2940,21 +2944,18 @@ object RelationalQueries {
           ev.filter(col("event_id") % 4 === 0), g, cv, table)
         Sketches.appendGroupedSketchTable(
           ev.filter(col("event_id") % 4 === 1), g, cv, table)
-        val lineage = graft.pipeline.MergeTables.allocLineage(s, table)
-        val q = Tables.streamOf(s, d, "events")
-          .filter(col("value").isNotNull && col("ts").isNotNull &&
-            col("event_id") % 4 >= 2)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        drain(graft.pipeline.MergeTables.startKeyedStream(
+            Tables.streamOf(s, d, "events")
+              .filter(col("value").isNotNull && col("ts").isNotNull &&
+                col("event_id") % 4 >= 2), Seq(table)) {
+          (batch, batchId, lineage) =>
             Sketches.streamAppendGroupedSketchBatch(batch, batchId, g,
               cv, table, lineage = lineage)
             Sketches.retireGroupsBefore(s, table, cutoff)
             Sketches.maybeCompactGroupedSketchTable(s, table,
               maxGen = 2)
             ()
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        })
       }
       Sketches.groupedQuantilesFromSketchTable(s, table, qe4Pcts)
     }),
@@ -3000,11 +3001,11 @@ object RelationalQueries {
           qf9K, smpT)
         // the stream lands batch generations on 2-generation tables,
         // so the in-loop policy compacts every tier mid-lineage
-        DatasetCard.maintainBlocking(
+        drain(DatasetCard.startMaintain(
           Tables.streamOf(s, d, "documents")
             .filter(col("doc_id") >= 400),
           lenT, cmT, hllT, smpT, qf9K, width = qa8Width,
-          depth = qa8Depth, maxGen = Some(2))
+          depth = qa8Depth, maxGen = Some(2)))
       }
       DatasetCard.card(s, lenT, cmT, hllT, smpT, qfdAuditToks, qf9K,
         qe4Pcts, width = qa8Width, depth = qa8Depth)
@@ -3030,11 +3031,10 @@ object RelationalQueries {
         TextAnalysis.appendBm25Index(
           docs.filter(col("doc_id") >= 200 && col("doc_id") < 400),
           "doc_id", "text", table)
-        val q = TextAnalysis.startStreamAppendBm25Index(
+        drain(TextAnalysis.startStreamAppendBm25Index(
           Tables.streamOf(s, d, "documents")
             .filter(col("doc_id") >= 400),
-          "doc_id", "text", table, maxGen = Some(2))
-        try q.processAllAvailable() finally q.stop()
+          "doc_id", "text", table, maxGen = Some(2)))
       }
       TextAnalysis.bm25TopKIndexed(qb1Queries(docs), "q_id", "qtext",
         table, k = qb1K, k1 = qb1K1, b = qb1B)
@@ -3061,11 +3061,10 @@ object RelationalQueries {
           vecs.filter(col("vec_id") * 2 >= n &&
             col("vec_id") * 4 < 3 * n),
           "vec_id", "embedding", table)
-        val q = Similarity.startStreamAppendIvfAdcIndexSharded(
+        drain(Similarity.startStreamAppendIvfAdcIndexSharded(
           Tables.streamOf(s, d, "embeddings")
             .filter(col("vec_id") * 4 >= 3 * n),
-          "vec_id", "embedding", table, maxGen = Some(2))
-        try q.processAllAvailable() finally q.stop()
+          "vec_id", "embedding", table, maxGen = Some(2)))
       }
       denseProbe(vecs, 3, table)
     }),
@@ -3118,10 +3117,10 @@ object RelationalQueries {
           vecs.filter(col("vec_id") * 2 < n), "vec_id", "embedding",
           table, nShards = qg1Shards, dim = 64,
           targetRecall = q35cTargetRecall)
-        Similarity.streamAppendIvfAdcIndexSharded(
+        drain(Similarity.startStreamAppendIvfAdcIndexSharded(
           Tables.streamOf(s, d, "embeddings")
             .filter(col("vec_id") * 2 >= n),
-          "vec_id", "embedding", table)
+          "vec_id", "embedding", table))
       }
       Similarity.ivfAdcTopKIndexedSharded(vecs, "vec_id", "embedding",
         k = 3, table = table, targetRecall = q35cTargetRecall)
@@ -3175,10 +3174,11 @@ object RelationalQueries {
       }
       val sink = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_qg4_${s.sparkContext.applicationId}").getAbsolutePath
-      Similarity.streamAdcTopKSharded(
+      drain(Similarity.startStreamAdcTopKSharded(
         Tables.streamOf(s, d, "embeddings"), "vec_id", "embedding",
         k = 3, table = table, sinkDir = sink,
-        targetRecall = q35cTargetRecall)
+        targetRecall = q35cTargetRecall))
+      s.read.parquet(sink)
     })
   )
 
@@ -3214,10 +3214,10 @@ object RelationalQueries {
       TextAnalysis.writeGroupedCountMinTable(
         docs.filter(col("doc_id") < 400), "source", "text", table,
         width = qa8Width, depth = qa8Depth)
-      TextAnalysis.streamAppendGroupedCountMinTable(
+      drain(TextAnalysis.startStreamAppendGroupedCountMinTable(
         Tables.streamOf(s, d, "documents")
           .filter(col("doc_id") >= 400),
-        "source", "text", table, width = qa8Width, depth = qa8Depth)
+        "source", "text", table, width = qa8Width, depth = qa8Depth))
       TextAnalysis.retractGroupedCountMinDocs(
         docs.filter(col("doc_id") % qd3DelMod === qd3DelRes),
         "source", "text", table, width = qa8Width, depth = qa8Depth)
@@ -3259,10 +3259,10 @@ object RelationalQueries {
       TextAnalysis.writeCountMinTable(
         docs.filter(col("doc_id") < 400), "text", table,
         width = qa8Width, depth = qa8Depth)
-      TextAnalysis.streamAppendCountMinTable(
+      drain(TextAnalysis.startStreamAppendCountMinTable(
         Tables.streamOf(s, d, "documents")
           .filter(col("doc_id") >= 400),
-        "text", table, width = qa8Width, depth = qa8Depth)
+        "text", table, width = qa8Width, depth = qa8Depth))
       TextAnalysis.retractCountMinDocs(
         docs.filter(col("doc_id") % qd3DelMod === qd3DelRes), "text",
         table, width = qa8Width, depth = qa8Depth)

@@ -39,7 +39,8 @@ object DatasetCard {
     * tables: one lineage id serves all four — registered on EVERY table
     * so a concurrent loop sharing any one of them cannot draw the same
     * id — and the writer lease is held on all four for the loop's
-    * lifetime. */
+    * lifetime. Returns the started query; the caller owns the trigger
+    * cadence. */
   def startMaintain(docStream: DataFrame, lenTable: String,
       cmTable: String, hllTable: String, smpTable: String, k: Int,
       width: Int = 1024, depth: Int = 4,
@@ -105,16 +106,6 @@ object DatasetCard {
       Samples.maybeCompactGroupedSampleTable(spark, smpTable, k, mg)
       ()
     }
-  }
-
-  /** [[startMaintain]] drained to completion. */
-  def maintainBlocking(docStream: DataFrame, lenTable: String,
-      cmTable: String, hllTable: String, smpTable: String, k: Int,
-      width: Int = 1024, depth: Int = 4,
-      maxGen: Option[Int] = None): Unit = {
-    val q = startMaintain(docStream, lenTable, cmTable, hllTable,
-      smpTable, k, width, depth, maxGen)
-    try q.processAllAvailable() finally q.stop()
   }
 
   /** TAKEDOWN one source from the WHOLE card, end to end from stored

@@ -435,9 +435,9 @@ object Dedup {
 
   /** [[appendMinhashIndex]] with the NEW DOCUMENTS ARRIVING AS A
     * STREAM — the signature tier's twin of
-    * [[graft.pipeline.TextAnalysis.streamAppendBm25Index]] (qd6) and
-    * [[graft.pipeline.Similarity.streamAppendIvfAdcIndexSharded]] (qe1),
-    * completing streaming maintenance across all three persisted
+    * [[graft.pipeline.TextAnalysis.startStreamAppendBm25Index]] (qd6)
+    * and [[graft.pipeline.Similarity.startStreamAppendIvfAdcIndexSharded]]
+    * (qe1), completing streaming maintenance across all three persisted
     * indexes: [[streamIncrementalDedup]] streams batches AGAINST the
     * archive; this streams the corpus INTO it. Each micro-batch runs
     * the gated batch append verbatim inside foreachBatch — map-side
@@ -450,27 +450,22 @@ object Dedup {
     * streamed micro-batches == one one-shot append == a rebuild over
     * the union, row-identical (two-micro-batch MemoryStream spec; qe2
     * gates the grown archive's screen against q86's oracle
-    * verbatim). */
-  def streamAppendMinhashIndex(docStream: DataFrame, idCol: String,
-      textCol: String, table: String, n: Int, numHashes: Int = 24,
-      bands: Int = 6): Unit = {
-    val q = startStreamAppendMinhashIndex(docStream, idCol, textCol,
-      table, n, numHashes, bands)
-    try q.processAllAvailable() finally q.stop()
-  }
-
-  /** The started-but-undrained form of [[streamAppendMinhashIndex]] —
-    * the caller owns the trigger cadence (StreamingSpec drives TWO
-    * micro-batches through it). */
+    * verbatim). With no `batch_key` there is no commit key for the
+    * keyed loop to hand out, but the stream still holds the table's
+    * writer lease for its lifetime ([[MergeTables.startLeased]]), so a
+    * second writer process is refused like on every other tier.
+    * Returns the started query; the caller owns the trigger cadence. */
   def startStreamAppendMinhashIndex(docStream: DataFrame, idCol: String,
       textCol: String, table: String, n: Int, numHashes: Int = 24,
       bands: Int = 6): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        appendMinhashIndex(batch, idCol, textCol, table, n, numHashes,
-          bands)
-      }
-      .start()
+    MergeTables.startLeased(docStream.sparkSession, Seq(table)) {
+      docStream.writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          appendMinhashIndex(batch, idCol, textCol, table, n, numHashes,
+            bands)
+        }
+        .start()
+    }
 
   /** Rewrite a persisted minhash archive's file generations into ONE
     * (the MapFile sorted-single-file contract, io/MapFile.java:49) —

@@ -32,14 +32,19 @@ import org.apache.spark.sql.functions._
   *    [[recoverCompactCrash]] finishes the rename on the next touch of
   *    any entry point. A crash before the DROP leaves the old table
   *    live and a stale shadow the next swap overwrites.
-  *  - STREAM: [[startKeyedStream]] is the one lease-holding streamed
+  *  - STREAM: every streamed writer into a persisted table holds the
+  *    writer lease. [[startKeyedStream]] is the one keyed streamed
   *    append loop — it resolves the lineage ([[allocLineage]] or the
-  *    checkpoint's persisted id), holds the writer lease on its key
-  *    tables, skips batch ids this query already committed, and hands
-  *    each micro-batch its (lineage, batchId) commit key
-  *    ([[streamKey]]). Replay checks read live keys plus the
-  *    compaction-carried high-water marks ([[hwmTable]], [[replayed]]),
-  *    so compaction is safe inside a live lineage.
+  *    checkpoint's persisted id), holds the lease on its key tables,
+  *    skips batch ids this query already committed, and hands each
+  *    micro-batch its (lineage, batchId) commit key ([[streamKey]]);
+  *    in-loop retention and compaction ride its body. Replay checks
+  *    read live keys plus the compaction-carried high-water marks
+  *    ([[hwmTable]], [[replayed]]), so compaction is safe inside a
+  *    live lineage. The one keyless writer, the minhash stream (no
+  *    `batch_key`), holds the lease through [[startLeased]] directly.
+  *    Every start form returns its query undrained; the blocking form
+  *    is `EventStreams.drain(start…)`.
   *
   * What stays per tier is DATA:
   *  - where the commit key lives: in the state rows themselves here
@@ -342,7 +347,8 @@ private[graft] object MergeTables {
 
   /** The ONE lease-holding streamed-append loop every keyed tier shares
     * (the MergeTables tiers, BM25 with key table `table_s`, ADC with
-    * `table_sv_g`, and the four-table [[DatasetCard.startMaintain]]):
+    * `table_sv_g`, the four-table [[DatasetCard.startMaintain]], and
+    * the online retention/compaction rows qfg, qfh and qfk):
     * resolve the lineage, hold the writer lease on `keyTables` for the
     * query's lifetime (enforcing the single-writer-process rule), skip
     * batch ids this query already committed, and run `body(batch,
@@ -503,14 +509,6 @@ private[graft] object MergeTables {
       (land: Long => Unit): Unit = withTableLock(table) {
     val key = streamKey(lineage, batchId)
     if (!replayed(spark, keyTable, key)) land(key)
-  }
-
-  /** [[streamAppend]] drained to completion — the blocking form the
-    * tiers' `streamAppend*Table` wrappers share. */
-  def streamAppendBlocking(stream: DataFrame, table: String)
-      (stateOf: DataFrame => DataFrame): Unit = {
-    val q = streamAppend(stream, table)(stateOf)
-    try q.processAllAvailable() finally q.stop()
   }
 
   // ---- single-writer-process lease -------------------------------------
@@ -962,7 +960,8 @@ private[graft] object MergeTables {
     * its lifetime: acquire before start, release on the termination
     * event (or immediately if the start itself fails / the query is
     * already gone); a heartbeat renewal rides the same lifetime.
-    * The lease step of [[startKeyedStream]]. */
+    * The lease step of [[startKeyedStream]] and of the keyless minhash
+    * stream ([[Dedup.startStreamAppendMinhashIndex]]). */
   private[graft] def startLeased(spark: SparkSession,
       tables: Seq[String])(
       start: => org.apache.spark.sql.streaming.StreamingQuery)

@@ -222,7 +222,7 @@ object Samples {
     MergeTables.streamAppend(docStream, table)(
       groupedCandidatesOf(groupCol, idCol, k))
 
-  /** The per-micro-batch body of [[streamAppendSampleTable]],
+  /** The per-micro-batch body of [[startStreamAppendSampleTable]],
     * exposed for the replay spec. The batch key is storage hygiene
     * here (a skipped replay writes no duplicate file); correctness
     * never depended on it — the probe's id-dedup makes min-k
@@ -237,10 +237,10 @@ object Samples {
       candidatesOf(idCol, k))
 
   /** [[appendSampleTable]] with the DOCUMENTS ARRIVING AS A STREAM:
-    * one min-k candidate generation per micro-batch. Blocks until
-    * drained. */
-  def streamAppendSampleTable(docStream: DataFrame, idCol: String,
-      k: Int, table: String): Unit =
-    MergeTables.streamAppendBlocking(docStream, table)(
-      candidatesOf(idCol, k))
+    * one min-k candidate generation per micro-batch. Returns the
+    * started query; the caller owns the trigger cadence. */
+  def startStreamAppendSampleTable(docStream: DataFrame, idCol: String,
+      k: Int, table: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    MergeTables.streamAppend(docStream, table)(candidatesOf(idCol, k))
 }

@@ -1812,45 +1812,22 @@ object Similarity {
     * the per-batch rank is EXACT, not an approximation — the static
     * side emits a candidate row only for a probe row of the current
     * batch, so a query's entire merged candidate set lives in the one
-    * micro-batch that carried it. Drains the stream and reads the sink
-    * back; the `start` form owns the trigger cadence. Gate: qa6 shares
-    * q99's oracle and qg4 qg1's verbatim (stream == batch == oracle —
-    * the q70s discipline). */
-  def streamAdcTopKSharded(stream: DataFrame, idCol: String,
-      vecCol: String, k: Int, table: String, sinkDir: String,
-      targetRecall: Double = 0.8,
-      buckets: Int = ivfIndexBuckets): DataFrame = {
-    val q = startStreamAdcTopKSharded(stream, idCol, vecCol, k, table,
-      sinkDir, targetRecall, buckets)
-    try q.processAllAvailable() finally q.stop()
-    stream.sparkSession.read.parquet(sinkDir)
-  }
-
-  /** The started-but-undrained form of [[streamAdcTopKSharded]] —
-    * schema-initialized overwrite first (reruns replace; an empty
-    * stream reads back empty and well-typed), one appended rank per
-    * micro-batch. */
+    * micro-batch that carried it. The stream-static candidate frame is
+    * the stream of the shared sink loop ([[startProbeSink]]), which
+    * ranks each batch into `sinkDir`. Returns the started query; the
+    * caller drains it and reads the sink back. Gate: qa6 shares q99's
+    * oracle and qg4 qg1's verbatim (stream == batch == oracle — the
+    * q70s discipline). */
   def startStreamAdcTopKSharded(stream: DataFrame, idCol: String,
       vecCol: String, k: Int, table: String, sinkDir: String,
       targetRecall: Double = 0.8,
       buckets: Int = ivfIndexBuckets)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = stream.sparkSession
-    val st = svState(spark, table)
-    val bc = svQuantBc(spark, st)
-    val nprobes = svFracNprobes(bc, targetRecall)
-    def candsOf(src: DataFrame): DataFrame =
-      svFlatCandidates(src, idCol, vecCol, st, bc, nprobes, buckets)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      stream.schema)
-    initEmptySink(rankByScaledIdot(candsOf(empty), k), sinkDir)
-    candsOf(stream)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        rankByScaledIdot(batch, k).write.mode("append").parquet(sinkDir)
-      }
-      .start()
+    val st = svState(stream.sparkSession, table)
+    val bc = svQuantBc(stream.sparkSession, st)
+    startProbeSink(svFlatCandidates(stream, idCol, vecCol, st, bc,
+      svFracNprobes(bc, targetRecall), buckets), sinkDir)(
+      rankByScaledIdot(_, k))
   }
 
   /** Step 1 of a sharded append — the packed-row write WITHOUT the
@@ -1945,24 +1922,15 @@ object Similarity {
 
   /** [[appendIvfAdcIndexSharded]] with the NEW VECTORS ARRIVING AS A
     * STREAM (qe1, qg2): K streamed micro-batches == one one-shot
-    * append == a rebuild under the same quantizers (spec-gated). Drains
-    * the available stream and stops; the `start` form below owns the
-    * trigger cadence. */
-  def streamAppendIvfAdcIndexSharded(vecStream: DataFrame,
-      idCol: String, vecCol: String, table: String): Unit = {
-    val q = startStreamAppendIvfAdcIndexSharded(vecStream, idCol,
-      vecCol, table)
-    try q.processAllAvailable() finally q.stop()
-  }
-
-  /** The started-but-undrained form of
-    * [[streamAppendIvfAdcIndexSharded]]: the one keyed-stream loop
-    * ([[MergeTables.startKeyedStream]]) with `table_sv_g` as its key
-    * table. A reshard folds the marks into the new generation's mark
-    * table and REFUSES IN CODE while the loop's lease is live (stop the
-    * query, reshard, restart; the carried marks make the restart
-    * replay-exact). `maxGen` wires the unattended in-loop compaction
-    * (qfn's discipline — replay marks carried). */
+    * append == a rebuild under the same quantizers (spec-gated). The
+    * one keyed-stream loop ([[MergeTables.startKeyedStream]]) with
+    * `table_sv_g` as its key table; returns the started query, the
+    * caller owns the trigger cadence. A reshard folds the marks into
+    * the new generation's mark table and REFUSES IN CODE while the
+    * loop's lease is live (stop the query, reshard, restart; the
+    * carried marks make the restart replay-exact). `maxGen` wires the
+    * unattended in-loop compaction (qfn's discipline — replay marks
+    * carried). */
   def startStreamAppendIvfAdcIndexSharded(vecStream: DataFrame,
       idCol: String, vecCol: String, table: String,
       maxGen: Option[Int] = None)
@@ -2311,21 +2279,29 @@ object Similarity {
     (hi, rHi)
   }
 
-  /** Initialize a streaming sink with a ZERO-ROW parquet of `probe`'s
-    * schema WITHOUT executing its plan (r21): the previous inits ran
-    * the full probe plan over empty input, but the init only exists to
-    * make reruns replace and an empty stream read back well-typed —
-    * analysis (`.schema`) delivers that; executing paid optimizer +
-    * codegen + a real scan/broadcast job + commit per run (~0.3 s on
-    * the qb4 shape). The written footer schema is the analyzed
-    * schema, identical to what executing the empty plan wrote. */
-  private[pipeline] def initEmptySink(probe: DataFrame,
-      sinkDir: String): Unit = {
-    val spark = probe.sparkSession
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        probe.schema)
+  /** The ONE served-probe sink loop (BM25 qb4, ADC qa6/qg4, hybrid
+    * qc4): initialize `sinkDir` with a ZERO-ROW parquet of the probe's
+    * schema, then append `probe(batch)` per micro-batch. The init makes
+    * reruns replace rather than accumulate and an empty stream read
+    * back well-typed; it is schema-only (r21) — analysis of the probe
+    * over an empty frame of the stream's schema delivers the schema
+    * without executing the plan (executing it paid optimizer + codegen
+    * + a real scan/broadcast job + commit per run, ~0.3 s on the qb4
+    * shape). Returns the started query. */
+  private[pipeline] def startProbeSink(stream: DataFrame, sinkDir: String)
+      (probe: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val spark = stream.sparkSession
+    def emptyOf(schema: org.apache.spark.sql.types.StructType) =
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    emptyOf(probe(emptyOf(stream.schema)).schema)
       .write.mode("overwrite").parquet(sinkDir)
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        probe(batch).write.mode("append").parquet(sinkDir)
+      }
+      .start()
   }
 
   private def memoBc[T: scala.reflect.ClassTag](
@@ -2696,7 +2672,8 @@ object Similarity {
   /** Hybrid serving (qb7) with the QUERIES AS A STREAM (qc4) — the
     * full online retrieval twin: each micro-batch carries query rows
     * holding BOTH representations (q_id, query text, query vector);
-    * inside foreachBatch the batch probes the persisted postings index
+    * the shared sink loop ([[startProbeSink]]) probes each batch
+    * against the persisted postings index
     * ([[graft.pipeline.TextAnalysis.bm25TopKIndexed]]) and the
     * persisted ADC index ([[ivfAdcTopKIndexedSharded]]) — neither corpus is
     * re-scanned, both stored sides keep their gated bucketed-probe
@@ -2706,30 +2683,15 @@ object Similarity {
     * candidate set lives in the micro-batch that carried it — so
     * stream == batch by construction, and qc4 shares qb7's oracle
     * verbatim (the q70s gate shape on the full hybrid stack). A
-    * two-batch MemoryStream spec gates the equality. */
-  def streamHybridTopK(queries: DataFrame, qIdCol: String,
-      qTextCol: String, qVecCol: String, lexTable: String,
-      adcTable: String, lexDepth: Int, denseDepth: Int,
-      k: Int, sinkDir: String, c: Int = 60, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val q = startStreamHybridTopK(queries, qIdCol, qTextCol, qVecCol,
-      lexTable, adcTable, lexDepth, denseDepth, k, sinkDir, c, k1, b)
-    try q.processAllAvailable() finally q.stop()
-    queries.sparkSession.read.parquet(sinkDir)
-  }
-
-  /** The started-but-undrained form of [[streamHybridTopK]] — the
-    * caller owns the trigger cadence (StreamingSpec drives TWO
-    * micro-batches through it). Overwrites `sinkDir` with a zero-row
-    * schema-typed init first, the qb4/qa6 sink convention. */
+    * two-batch MemoryStream spec gates the equality. Returns the
+    * started query; the caller drains it and reads the sink back. */
   def startStreamHybridTopK(queries: DataFrame, qIdCol: String,
       qTextCol: String, qVecCol: String, lexTable: String,
       adcTable: String, lexDepth: Int, denseDepth: Int,
       k: Int, sinkDir: String, c: Int = 60, k1: Double = 1.2,
       b: Double = 0.75)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = queries.sparkSession
-    def fuse(batch: DataFrame): DataFrame = {
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startProbeSink(queries, sinkDir) { batch =>
       val lex = graft.pipeline.TextAnalysis.bm25TopKIndexed(
         batch.select(col(qIdCol), col(qTextCol)), qIdCol, qTextCol,
         lexTable, k = lexDepth, k1 = k1, b = b)
@@ -2746,16 +2708,6 @@ object Similarity {
         .withColumnRenamed("nb_id", "doc_id")
       rrfFuse(Seq(lex, dense), "q_id", "doc_id", "rank", k = k, c = c)
     }
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      queries.schema)
-    initEmptySink(fuse(empty), sinkDir)
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        fuse(batch).write.mode("append").parquet(sinkDir)
-      }
-      .start()
-  }
 
   def rrfFuse(legs: Seq[DataFrame], qCol: String, idCol: String,
       rankCol: String, k: Int, c: Int = 60): DataFrame = {

@@ -202,7 +202,7 @@ object Sketches {
     * riding the data rows themselves — so unlike the BM25/ADC tiers no
     * separate commit table is needed: the single-file rename lands
     * counts and key atomically. STREAMED appends key their
-    * micro-batches automatically ([[streamAppendSketchTable]]); a
+    * micro-batches automatically ([[startStreamAppendSketchTable]]); a
     * BATCH caller who may retry keys its appends the same way through
     * [[appendSketchTableKeyed]] (r16 verdict item 5 — the unkeyed
     * [[appendSketchTable]] remains for callers whose delivery is
@@ -445,14 +445,8 @@ object Sketches {
     * one-shot append == a rebuild over the union (probe-exact, the
     * additive merge law), and a replayed committed batch is skipped
     * instead of double-counted ([[streamAppendSketchBatch]], replay
-    * spec-gated). Blocks until the stream drains. */
-  def streamAppendSketchTable(stream: DataFrame, valCol: Column,
-      table: String, subBits: Int = defaultSubBits): Unit =
-    MergeTables.streamAppendBlocking(stream, table)(
-      logBucketCounts(_, valCol, subBits))
-
-  /** The started-but-undrained form of [[streamAppendSketchTable]] —
-    * the caller owns the trigger cadence. */
+    * spec-gated). Returns the started query; the caller owns the
+    * trigger cadence (`EventStreams.drain` for the blocking form). */
   def startStreamAppendSketchTable(stream: DataFrame, valCol: Column,
       table: String, subBits: Int = defaultSubBits)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -465,29 +459,17 @@ object Sketches {
     * the bounded bucket table (no watermark, no replay — counts are
     * additive across micro-batches by the merge law), and each batch's
     * foreachBatch re-derives the quantile report from the full state,
-    * overwriting the sink so the final read-back is the
+    * overwriting `sinkDir` so the final read-back is the
     * latest-complete-state report. Stream == batch == oracle: the
     * complete-mode state after K micro-batches is bit-equal to the
     * batch sketch over their union, so qe5 shares qe4's oracle
     * verbatim (two-micro-batch MemoryStream spec gates the equality).
-    * Returns the read-back report. */
-  def streamLogBucketQuantiles(stream: DataFrame, valCol: Column,
-      percents: Seq[Int], sinkDir: String,
-      subBits: Int = defaultSubBits): DataFrame =
-    // the complete-mode state is the bounded bucket table: ≤62 widths
-    // × 2^subBits sub-buckets — derive the state-store partition count
-    // from that bound, not the session's corpus-scale default
-    graft.streaming.EventStreams.withBoundedStateShuffle(
-        stream.sparkSession, 62L * (1L << subBits)) {
-      val q = startStreamLogBucketQuantiles(stream, valCol, percents,
-        sinkDir, subBits)
-      try q.processAllAvailable() finally q.stop()
-      stream.sparkSession.read.parquet(sinkDir)
-    }
-
-  /** The started-but-undrained form of [[streamLogBucketQuantiles]] —
-    * the caller owns the trigger cadence. Initializes the sink with a
-    * zero-row typed frame so an empty stream reads back well-typed. */
+    * Initializes the sink with a zero-row typed frame so an empty
+    * stream reads back well-typed. Returns the started query; the
+    * caller owns the trigger cadence and reads the sink back. The
+    * state is ≤62 widths × 2^subBits sub-buckets — a caller that drains
+    * it scopes the state-store partition count to that bound
+    * (`EventStreams.withBoundedStateShuffle`, qe5). */
   def startStreamLogBucketQuantiles(stream: DataFrame, valCol: Column,
       percents: Seq[Int], sinkDir: String,
       subBits: Int = defaultSubBits)

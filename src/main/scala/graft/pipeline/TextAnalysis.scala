@@ -725,16 +725,8 @@ object TextAnalysis {
     * on (term, doc_id)), so K streamed micro-batch appends == one
     * one-shot append == a full rebuild, probe-exact (two-micro-batch
     * MemoryStream spec; qd6 gates the grown index's probe against
-    * qb1's oracle verbatim). */
-  def streamAppendBm25Index(docStream: DataFrame, idCol: String,
-      textCol: String, table: String): Unit = {
-    val q = startStreamAppendBm25Index(docStream, idCol, textCol, table)
-    try q.processAllAvailable() finally q.stop()
-  }
-
-  /** The started-but-undrained form of [[streamAppendBm25Index]] —
-    * the caller owns the trigger cadence (StreamingSpec drives TWO
-    * micro-batches through it). */
+    * qb1's oracle verbatim). Returns the started query; the caller
+    * owns the trigger cadence. */
   def startStreamAppendBm25Index(docStream: DataFrame, idCol: String,
       textCol: String, table: String, maxGen: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
@@ -917,48 +909,23 @@ object TextAnalysis {
 
   /** [[bm25TopKIndexed]] with the QUERIES AS A STREAM — the online
     * lexical serving shape beside the dense tier's
-    * [[Similarity.streamAdcTopKSharded]]. Each micro-batch's queries run the
-    * gated indexed probe VERBATIM inside foreachBatch: BM25 scoring is
+    * [[Similarity.startStreamAdcTopKSharded]]. Each micro-batch's
+    * queries run the gated indexed probe VERBATIM through the shared
+    * sink loop ([[Similarity.startProbeSink]]): BM25 scoring is
     * per-batch aggregates (df, score sum, top-k) over candidates that
     * all live in the micro-batch that carried their query — per-batch
     * rank is therefore EXACT and stream == batch by construction (qb4
     * shares qb1's oracle; the two-batch == one-shot spec gates it). The
     * stored side keeps [[bm25TopKIndexed]]'s plan-asserted properties
     * (bucketed scan, no postings-payload shuffle) — the probe code path
-    * is the same call. */
-  def streamBm25TopK(queries: DataFrame, qIdCol: String, qTextCol: String,
-      table: String, k: Int, sinkDir: String, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
-    val q = startStreamBm25TopK(queries, qIdCol, qTextCol, table, k,
-      sinkDir, k1, b)
-    try q.processAllAvailable() finally q.stop()
-    queries.sparkSession.read.parquet(sinkDir)
-  }
-
-  /** The started-but-undrained form of [[streamBm25TopK]] — the caller
-    * owns the trigger cadence (StreamingSpec drives TWO micro-batches
-    * through it). Overwrites `sinkDir` with a zero-row schema-typed
-    * init first, so reruns replace rather than accumulate and an empty
-    * stream still reads back as an empty, well-typed frame. */
+    * is the same call. Returns the started query; the caller drains it
+    * and reads the sink back. */
   def startStreamBm25TopK(queries: DataFrame, qIdCol: String,
       qTextCol: String, table: String, k: Int, sinkDir: String,
       k1: Double = 1.2, b: Double = 0.75)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = queries.sparkSession
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], queries.schema)
-    // schema-only init (Similarity.initEmptySink's rationale): the
-    // probe plan's ANALYSIS delivers the typed zero-row sink; executing
-    // it over empty input paid optimizer + codegen + a job per run
-    graft.pipeline.Similarity.initEmptySink(
-      bm25TopKIndexed(empty, qIdCol, qTextCol, table, k, k1, b), sinkDir)
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        bm25TopKIndexed(batch, qIdCol, qTextCol, table, k, k1, b)
-          .write.mode("append").parquet(sinkDir)
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    Similarity.startProbeSink(queries, sinkDir)(
+      bm25TopKIndexed(_, qIdCol, qTextCol, table, k, k1, b))
 
   /** Vocabulary building + integer encoding — the final step before
     * training: token ids are assigned by corpus frequency rank (count
@@ -1291,7 +1258,7 @@ object TextAnalysis {
     * compaction through the probe's own merge
     * ([[compactCountMinTable]]), and streamed appends under
     * deterministic per-batch commit keys
-    * ([[streamAppendCountMinTable]] — the additive monoid is where a
+    * ([[startStreamAppendCountMinTable]] — the additive monoid is where a
     * replayed micro-batch double-counts, so the key must ride the
     * generation's rows). The persisted artifact is depth × width rows
     * REGARDLESS of corpus size — the cheapest of the persisted tiers
@@ -1576,19 +1543,9 @@ object TextAnalysis {
 
   /** [[appendGroupedCountMinTable]] with the DOCUMENTS ARRIVING AS A
     * STREAM — the shared keyed loop ([[MergeTables.streamAppend]]),
-    * one grouped counter generation per micro-batch. Blocks until
-    * drained. */
-  def streamAppendGroupedCountMinTable(docStream: DataFrame,
-      groupCol: String, textCol: String, table: String,
-      width: Int = 1024, depth: Int = 4): Unit = {
-    val q = startStreamAppendGroupedCountMinTable(docStream, groupCol,
-      textCol, table, width, depth)
-    try q.processAllAvailable() finally q.stop()
-  }
-
-  /** The started-but-undrained form of
-    * [[streamAppendGroupedCountMinTable]]; mismatched params refused
-    * at start, before any batch lands. */
+    * one grouped counter generation per micro-batch; mismatched params
+    * refused at start, before any batch lands. Returns the started
+    * query; the caller owns the trigger cadence. */
   def startStreamAppendGroupedCountMinTable(docStream: DataFrame,
       groupCol: String, textCol: String, table: String,
       width: Int = 1024, depth: Int = 4)
@@ -1612,17 +1569,9 @@ object TextAnalysis {
 
   /** [[appendCountMinTable]] with the DOCUMENTS ARRIVING AS A STREAM:
     * one counter generation per micro-batch under a deterministic
-    * per-lineage commit key (replay no-op spec-gated). Blocks until
-    * drained. */
-  def streamAppendCountMinTable(docStream: DataFrame, textCol: String,
-      table: String, width: Int = 1024, depth: Int = 4): Unit = {
-    val q = startStreamAppendCountMinTable(docStream, textCol, table,
-      width, depth)
-    try q.processAllAvailable() finally q.stop()
-  }
-
-  /** The started-but-undrained form of [[streamAppendCountMinTable]];
-    * mismatched params refused at start, before any batch lands. */
+    * per-lineage commit key (replay no-op spec-gated); mismatched
+    * params refused at start, before any batch lands. Returns the
+    * started query; the caller owns the trigger cadence. */
   def startStreamAppendCountMinTable(docStream: DataFrame,
       textCol: String, table: String, width: Int = 1024, depth: Int = 4)
       : org.apache.spark.sql.streaming.StreamingQuery = {

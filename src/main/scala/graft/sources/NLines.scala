@@ -4,7 +4,6 @@ import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.mapred.TextInputFormat
 import org.apache.spark.Partitioner
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** `NLineInputFormat` — exactly-N-lines-per-split parallelism control
@@ -28,12 +27,11 @@ import org.apache.spark.sql.functions._
   * Scale: control files are SMALL BY CONTRACT — the data a sweep
   * processes arrives via the job's real inputs, not the control file —
   * and the reference itself scans the whole file single-threaded on
-  * the client (getSplits' LineReader loop). [[splits]] matches that
-  * honestly: the line read is a distributed TextInputFormat scan, but
-  * the split assignment runs through ONE ordered window task (global
-  * row numbering), the same serial coordination the reference pays.
-  * Do not point this at a data file; the gate's point is the split
-  * arithmetic, exact at control-file sizes.
+  * the client (getSplits' LineReader loop). Both faces number the
+  * lines the same way ([[numbered]]): a distributed TextInputFormat
+  * scan, a range-partitioned sort by offset and `zipWithIndex` — no
+  * single-partition window anywhere (spec-asserted). The gate's point
+  * is the split arithmetic, exact at control-file sizes.
   */
 object NLines {
 
@@ -53,17 +51,21 @@ object NLines {
       }
   }
 
+  /** [[lines]] in offset order, each with its 0-based global line
+    * index — the one numbering both [[splits]] and [[read]] derive the
+    * split id (index / N) from. */
+  private def numbered(spark: SparkSession, file: String) =
+    lines(spark, file).sortBy(_._1).zipWithIndex()
+
   /** The reference's getSplits as data: (split_id, begin_off,
     * length_bytes, n_lines) — FileSplit's (begin, length) in bytes, n
     * lines per split, remainder in the last. */
   def splits(spark: SparkSession, file: String, n: Int): DataFrame = {
     require(n > 0, s"linespermap must be positive, got $n")
     import spark.implicits._
-    val l = lines(spark, file).map { case (off, _, nb) => (off, nb + 1L) }
-      .toDF("offset", "nb")
-    val idx = row_number().over(Window.orderBy(col("offset"))) - 1
-    l.select(col("offset"), col("nb"), (idx.cast("long") / n).cast("long")
-        .as("split_id"))
+    numbered(spark, file)
+      .map { case ((off, _, nb), i) => (i / n, off, nb + 1L) }
+      .toDF("split_id", "offset", "nb")
       .groupBy("split_id")
       .agg(min(col("offset")).as("begin_off"),
         sum(col("nb")).as("length_bytes"),
@@ -77,11 +79,8 @@ object NLines {
   def read(spark: SparkSession, file: String, n: Int): DataFrame = {
     require(n > 0, s"linespermap must be positive, got $n")
     import spark.implicits._
-    val keyed = lines(spark, file)
-      .map { case (off, line, _) => (off, line) }
-      .sortBy(_._1)
-      .zipWithIndex()
-      .map { case ((off, line), i) => ((i / n, off), line) }
+    val keyed = numbered(spark, file)
+      .map { case ((off, line, _), i) => ((i / n, off), line) }
     val numSplits = math.max(1,
       ((keyed.count() + n - 1) / n).toInt)
     keyed

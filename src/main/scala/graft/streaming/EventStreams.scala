@@ -208,12 +208,20 @@ object EventStreams {
     }
   }
 
+  /** The ONE blocking runner of every graft stream (the reference's
+    * `JobClient.runJob` beside `submitJob`, mapred/JobClient.java:1247):
+    * process all available input of the started query `q`, then stop
+    * it — also when processing throws. Every `start*` entry point
+    * returns its query undrained; a caller that wants the blocking form
+    * writes `drain(start…(…))`. */
+  def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
+
   /** Convenience: run a streaming query over a memory sink until all
     * available input is processed, return the sink contents. */
   def runToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    try q.processAllAvailable() finally q.stop()
+    drain(df.writeStream.format("memory").queryName(name)
+      .outputMode(mode).start())
     df.sparkSession.table(name)
   }
 }

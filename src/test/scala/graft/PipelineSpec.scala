@@ -923,7 +923,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
   // (nShards = 1): the lifecycle specs below pin build, append, delete,
   // compaction, retrain and the generation protocol on that layout.
 
-  test("appendIvfAdcIndex: build+append equals writing the whole corpus against the same frozen quantizer") {
+  test("appendIvfAdcIndexSharded: build+append equals writing the whole corpus against the same frozen quantizer") {
     // the qc3 contract, minus the drift question: appending against the
     // STORED centroids must leave the index row-identical to coding the
     // union in one shot with those centroids, and the probe identical —
@@ -990,7 +990,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     } finally AdcKit.drop("adc_atom_idx", "adc_atom_ref")
   }
 
-  test("deleteIvfVecs + compactIvfAdcIndex: tombstoned probe == compacted probe == frozen-quantizer index over survivors") {
+  test("deleteIvfVecsSharded + compactIvfAdcIndexSharded: tombstoned probe == compacted probe == frozen-quantizer index over survivors") {
     // the qd4 contract: logical deletion (tombstone anti-join) and
     // physical deletion (compaction) must both equal an index coded
     // over the surviving vectors against the SAME frozen quantizer;
@@ -1027,7 +1027,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     } finally AdcKit.drop("adc_del_idx", "adc_del_ref")
   }
 
-  test("retrainIvfAdcIndex: retrain == one-shot build over the live corpus, consuming tombstones and resetting generations") {
+  test("retrainIvfAdcIndexSharded: retrain == one-shot build over the live corpus, consuming tombstones and resetting generations") {
     // the qe3 contract plus the deletion face: a drifted
     // build+append+delete index retrains into EXACTLY the live state a
     // fresh build over the survivors would produce — codes, centroids,
@@ -1233,7 +1233,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     } finally AdcKit.drop("adc_ilv_idx", "adc_ilv_ref")
   }
 
-  test("tuneNprobe: recall-gated absolute nprobe meets the target with fewer probed cells than the fraction law on clustered vectors") {
+  test("tuneShardDials: recall-gated absolute nprobe meets the target with fewer probed cells than the fraction law on clustered vectors") {
     // clustered corpus, LOW INTRINSIC DIMENSION (cluster centers vary
     // in all 64 dims; within-cluster noise lives in the first 4) — the
     // real-embedding geometry where a FIXED nprobe covers the top-k
@@ -2216,7 +2216,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     } finally AdcKit.drop("adc_stbl_idx")
   }
 
-  test("ivfAdcTopKIndexedHier: full group coverage is bit-identical to the flat probe; the sqrt-scan dial keeps measured recall") {
+  test("ivfAdcTopKIndexedShardedTuned: full group coverage is bit-identical to the flat probe; the sqrt-scan dial keeps measured recall") {
     // the two-level probe replaces the flat O(nlist) coarse scan with
     // O(sqrt(nlist)) — at full gprobe it must lose NOTHING (bit-equal
     // results), and at a partial gprobe its recall is a measured dial

@@ -442,6 +442,19 @@ class NLinesSpec extends AnyFunSuite with SparkTest {
       r.getLong(2) == 9L && r.getLong(3) == 2L)
   }
 
+  test("splits: the plan has no single-partition window") {
+    // the line numbering is the range-partitioned sort + zipWithIndex
+    // that read uses; an unpartitioned Window.orderBy would move every
+    // line offset of the file into one task
+    import org.apache.spark.sql.execution.window.WindowExec
+    val file = writeLines("nline_plan", (0 until 20).map(i => s"p$i"))
+    val plan = NLines.splits(spark, file, n = 3).queryExecution.sparkPlan
+    val global = plan.collect {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
+    assert(global.isEmpty, s"single-partition WindowExec in:\n$plan")
+  }
+
   test("read: partition i IS split i, lines in offset order within") {
     val lines = (0 until 10).map(i => s"param set $i")
     val file = writeLines("nline_read", lines)

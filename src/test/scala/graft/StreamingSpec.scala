@@ -298,7 +298,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     finally AdcKit.drop(table)
   }
 
-  test("streamBm25TopK: a two-micro-batch query stream equals the one-shot indexed batch retrieval") {
+  test("startStreamBm25TopK: a two-micro-batch query stream equals the one-shot indexed batch retrieval") {
     // the lexical twin of the qa6 gate: per-batch rank is exact because
     // a query's whole candidate set lives in the micro-batch that
     // carried it — split the query set across two batches and compare
@@ -345,7 +345,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("streamAdcTopK: a two-micro-batch query stream equals the one-shot indexed batch retrieval") {
+  test("startStreamAdcTopKSharded: a two-micro-batch query stream equals the one-shot indexed batch retrieval") {
     // the per-batch rank is EXACT because a query's candidates live in
     // the micro-batch that carried the query — gated here by splitting
     // the query set across two batches and comparing to the batch tier
@@ -377,7 +377,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("streamAdcTopK: the stored ADC index joins bucketed with no shuffle in the micro-batch plan") {
+  test("startStreamAdcTopKSharded: the stored ADC index joins bucketed with no shuffle in the micro-batch plan") {
     // q99's stored-side property on the STREAMING plan: with broadcast
     // off, only the probe side's co-partitioning repartition may
     // exchange (<=1), and the archive scans its bucketed layout
@@ -411,7 +411,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("streamHybridTopK: a two-micro-batch query stream equals the one-shot hybrid fusion over both persisted indexes") {
+  test("startStreamHybridTopK: a two-micro-batch query stream equals the one-shot hybrid fusion over both persisted indexes") {
     // the qc4 gate shape: queries carrying BOTH representations split
     // across two batches; per-batch probe-both-indexes + RRF must equal
     // the one-shot composition because every ranking is per-query
@@ -482,7 +482,62 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("streamAppendBm25Index: two streamed micro-batch appends equal the one-shot append and the rebuild") {
+  test("served-probe sink loop: an empty query stream reads back zero rows with the one-shot probe's schema on BM25, ADC and hybrid") {
+    // the sink loop initializes its sink from the probe's analyzed
+    // schema, so a stream that never delivers a row must still read
+    // back an empty frame typed like the batch probe it is gated against
+    import graft.pipeline.{Similarity, TextAnalysis}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.streaming.StreamingQuery
+    def fields(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    def drained(tag: String)(start: String => StreamingQuery): DataFrame = {
+      val sink = tmpDir(tag)
+      EventStreams.drain(start(sink))
+      spark.read.parquet(sink)
+    }
+    withAdcIndex("sink_empty_vidx") { (vecs, _) =>
+      try {
+        TextAnalysis.writeBm25Index(Seq((1L, "apple banana"),
+            (2L, "cherry apple")).toDF("doc_id", "text"), "doc_id", "text",
+          "sink_empty_lidx")
+        val qs = vecs.select(col("vec_id").as("q_id"),
+          lit("apple").as("qtext"), col("embedding").as("qvec"))
+        val lexBatch = TextAnalysis.bm25TopKIndexed(qs, "q_id", "qtext",
+          "sink_empty_lidx", k = 3)
+        val adcBatch = Similarity.ivfAdcTopKIndexedSharded(vecs, "vec_id",
+          "embedding", k = 3, table = "sink_empty_vidx")
+        val hybridBatch = Similarity.rrfFuse(Seq(lexBatch,
+            Similarity.ivfAdcTopKIndexedSharded(qs, "q_id", "qvec", k = 3,
+              table = "sink_empty_vidx").withColumnRenamed("nb_id", "doc_id")),
+          "q_id", "doc_id", "rank", k = 3)
+        val lex = drained("sink_empty_lex")(TextAnalysis.startStreamBm25TopK(
+          MemoryStream[(Long, String)](spark).toDF().toDF("q_id", "qtext"),
+          "q_id", "qtext", "sink_empty_lidx", k = 3, _))
+        val adc = drained("sink_empty_adc")(Similarity.startStreamAdcTopKSharded(
+          MemoryStream[(Long, Array[Float])](spark).toDF()
+            .toDF("vec_id", "embedding"), "vec_id", "embedding", k = 3,
+          table = "sink_empty_vidx", _))
+        val hybrid = drained("sink_empty_hyb")(Similarity.startStreamHybridTopK(
+          MemoryStream[(Long, String, Array[Float])](spark).toDF()
+            .toDF("q_id", "qtext", "qvec"), "q_id", "qtext", "qvec",
+          "sink_empty_lidx", "sink_empty_vidx", lexDepth = 3,
+          denseDepth = 3, k = 3, _))
+        for ((name, streamed, batch) <- Seq(("bm25", lex, lexBatch),
+            ("adc", adc, adcBatch), ("hybrid", hybrid, hybridBatch))) {
+          assert(streamed.collect().isEmpty, s"$name: rows from no queries")
+          assert(batch.collect().nonEmpty, s"$name: vacuous batch probe")
+          assert(fields(streamed) == fields(batch),
+            s"$name: sink ${streamed.schema} vs batch ${batch.schema}")
+        }
+      } finally {
+        for (t <- Seq("sink_empty_lidx", "sink_empty_lidx_s"))
+          spark.sql(s"DROP TABLE IF EXISTS $t")
+      }
+    }
+  }
+
+  test("startStreamAppendBm25Index: two streamed micro-batch appends equal the one-shot append and the rebuild") {
     // the qd6 contract: each micro-batch commits its own generation;
     // integer-additive scalar deltas and non-colliding postings make
     // batch count and order irrelevant, so the stream-grown index
@@ -905,7 +960,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("streamAppendIvfAdcIndex: two streamed micro-batch appends equal the one-shot append and the frozen-quantizer rebuild") {
+  test("startStreamAppendIvfAdcIndexSharded: two streamed micro-batch appends equal the one-shot append and the frozen-quantizer rebuild") {
     // the qe1 contract (qd6's shape on the dense tier): each
     // micro-batch commits its own generation against the STORED frozen
     // centroids, so the stream-grown index must match a one-shot
@@ -957,7 +1012,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     } finally AdcKit.drop("adc_str_idx", "adc_str_one", "adc_str_ref")
   }
 
-  test("streamAppendMinhashIndex: two streamed micro-batch appends equal the one-shot append, and a replayed batch changes no screen result") {
+  test("startStreamAppendMinhashIndex: two streamed micro-batch appends equal the one-shot append, and a replayed batch changes no screen result") {
     // the qe2 contract: band rows are pure functions of the documents,
     // so the stream-grown archive is row-identical to a one-shot
     // append; and because this tier's probes dedup candidates and read
@@ -1015,6 +1070,31 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     } finally {
       for (t <- Seq("mh_str_idx", "mh_str_one"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
+
+  test("startStreamAppendMinhashIndex holds the writer lease: a foreign holder refuses the start, naming the holder and the steal remedy") {
+    // the minhash stream has no batch_key, so it cannot run the keyed
+    // loop — but it is a streamed writer into a persisted table and
+    // must hold the single-writer-process lease like every other one
+    import graft.pipeline.{Dedup, MergeTables}
+    withMinhashIndex("mh_lease_idx") { (_, _, h, b) =>
+      def start() = Dedup.startStreamAppendMinhashIndex(
+        MemoryStream[(Long, String)](spark).toDF().toDF("doc_id", "text"),
+        "doc_id", "text", "mh_lease_idx", n = 3, numHashes = h, bands = b)
+      try {
+        Seq("someone-elses-process").toDF("tok").write
+          .saveAsTable("mh_lease_idx_wlease")
+        val ex = intercept[IllegalArgumentException](start().stop())
+        assert(ex.getMessage.contains("someone-elses-process") &&
+          ex.getMessage.contains("stealWriterLease"), ex.getMessage)
+        // the operator override clears it; the start then holds its own
+        MergeTables.stealWriterLease(spark, "mh_lease_idx")
+        val q = start()
+        try assert(MergeTables.leaseTokensAt(spark, "mh_lease_idx_wlease")
+          .size == 1, "the started stream holds no lease")
+        finally q.stop()
+      } finally spark.sql("DROP TABLE IF EXISTS mh_lease_idx_wlease")
     }
   }
 
@@ -1225,7 +1305,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     } finally spark.conf.set(key, orig)
   }
 
-  test("streamLogBucketQuantiles: the complete-mode state after two micro-batches equals the batch sketch report") {
+  test("startStreamLogBucketQuantiles: the complete-mode state after two micro-batches equals the batch sketch report") {
     // the qe5 contract (qa9's discipline on the quantile tier): the
     // streaming aggregation's state is the bounded bucket table, counts
     // add across micro-batches, and the final report equals the batch
