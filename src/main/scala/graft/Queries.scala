@@ -2306,11 +2306,11 @@ object RelationalQueries {
     // partial-agg'd corpus pass). Same all-integer chain per group, so
     // the grouped estimates are oracle-gated bit for bit.
     "qe7" -> ((s, d) =>
-      Sketches.groupedLogBucketQuantiles(
+      Sketches.logBucketQuantiles(
         Tables.events(s, d)
           .filter(col("value").isNotNull && col("event_type").isNotNull),
-        col("event_type"), floor(col("value") * 100 + 0.5).cast("long"),
-        qe4Pcts)),
+        floor(col("value") * 100 + 0.5).cast("long"), qe4Pcts,
+        group = Some(col("event_type")))),
 
     // QE8 — PERSISTED sketch with additive appends (r14): the
     // approximate tier gets the write-once + append + probe story of
@@ -2486,16 +2486,16 @@ object RelationalQueries {
         val cv = floor(col("value") * 100 + 0.5).cast("long")
         val g = col("event_type")
         val n = ev.count()
-        Sketches.writeGroupedSketchTable(
-          ev.filter(col("event_id") * 2 < n), g, cv, table)
-        Sketches.appendGroupedSketchTable(
-          ev.filter(col("event_id") * 2 >= n), g, cv, table)
-        Sketches.retractGroupedSketchTable(
-          ev.filter(col("event_id") % qd3DelMod === qd3DelRes), g, cv,
-          table)
-        Sketches.compactGroupedSketchTable(s, table)
+        Sketches.writeSketchTable(
+          ev.filter(col("event_id") * 2 < n), cv, table, group = Some(g))
+        Sketches.appendSketchTable(
+          ev.filter(col("event_id") * 2 >= n), cv, table, group = Some(g))
+        Sketches.retractSketchTable(
+          ev.filter(col("event_id") % qd3DelMod === qd3DelRes), cv, table,
+          group = Some(g))
+        Sketches.compactSketchTable(s, table)
       }
-      Sketches.groupedQuantilesFromSketchTable(s, table, qe4Pcts)
+      Sketches.quantilesFromSketchTable(s, table, qe4Pcts)
     }),
 
     // QF8 — deterministic hash-ranked sample, MAINTAINED (r14): the
@@ -2532,7 +2532,7 @@ object RelationalQueries {
     // equal the one-shot per-group ranking over the full corpus,
     // hash values included.
     "qf9" -> ((s, d) =>
-      Samples.groupedSampleFromTable(s, gsmpTable(s, d), qf9K)),
+      Samples.sampleFromTable(s, gsmpTable(s, d), qf9K)),
 
     // QFA — EVENT-TIME windowed maintained profile: the grouped sketch
     // with the hour bucket as the group key — per-hour value quantiles
@@ -2553,13 +2553,13 @@ object RelationalQueries {
           .filter(col("value").isNotNull && col("ts").isNotNull)
         val cv = floor(col("value") * 100 + 0.5).cast("long")
         val g = expr("unix_timestamp(ts) div 3600")
-        Sketches.writeGroupedSketchTable(
-          ev.filter(col("event_id") % 2 === 0), g, cv, table)
-        Sketches.appendGroupedSketchTable(
-          ev.filter(col("event_id") % 2 === 1), g, cv, table)
-        Sketches.compactGroupedSketchTable(s, table)
+        Sketches.writeSketchTable(
+          ev.filter(col("event_id") % 2 === 0), cv, table, group = Some(g))
+        Sketches.appendSketchTable(
+          ev.filter(col("event_id") % 2 === 1), cv, table, group = Some(g))
+        Sketches.compactSketchTable(s, table)
       }
-      Sketches.groupedQuantilesFromSketchTable(s, table, qe4Pcts)
+      Sketches.quantilesFromSketchTable(s, table, qe4Pcts)
     }),
 
     // QFB — PER-SOURCE heavy hitters from maintained GROUPED counters:
@@ -2572,11 +2572,11 @@ object RelationalQueries {
     // keying every CTE, over the survivors: per-group collisions and
     // estimates must reproduce bit for bit.
     "qfb" -> ((s, d) =>
-      TextAnalysis.groupedCountMinTopKIndexed(
+      TextAnalysis.countMinTopKIndexed(
         Tables.documents(s, d)
-          .filter(col("doc_id") % qd3DelMod =!= qd3DelRes),
-        "source", "text", gcmTable(s, d), k = qfbK, width = qa8Width,
-        depth = qa8Depth)),
+          .filter(col("doc_id") % qd3DelMod =!= qd3DelRes), "text",
+        gcmTable(s, d), k = qfbK, width = qa8Width, depth = qa8Depth,
+        group = Some("source"))),
 
     // QFC — qfa WITH RETENTION (r15): the per-hour maintained profile
     // over an unbounded-time stream cannot keep one group per hour
@@ -2596,17 +2596,17 @@ object RelationalQueries {
           .filter(col("value").isNotNull && col("ts").isNotNull)
         val cv = floor(col("value") * 100 + 0.5).cast("long")
         val g = expr("unix_timestamp(ts) div 3600")
-        Sketches.writeGroupedSketchTable(
-          ev.filter(col("event_id") % 2 === 0), g, cv, table)
-        Sketches.appendGroupedSketchTable(
-          ev.filter(col("event_id") % 2 === 1), g, cv, table)
+        Sketches.writeSketchTable(
+          ev.filter(col("event_id") % 2 === 0), cv, table, group = Some(g))
+        Sketches.appendSketchTable(
+          ev.filter(col("event_id") % 2 === 1), cv, table, group = Some(g))
         val cutoff = ev
           .agg(min(expr("unix_timestamp(ts) div 3600"))).head()
           .getLong(0) + qfcRetainAfterHours
         Sketches.retireGroupsBefore(s, table, cutoff)
-        Sketches.compactGroupedSketchTable(s, table)
+        Sketches.compactSketchTable(s, table)
       }
-      Sketches.groupedQuantilesFromSketchTable(s, table, qe4Pcts)
+      Sketches.quantilesFromSketchTable(s, table, qe4Pcts)
     }),
 
     // QFG — retention operating ONLINE: the qfc policy applied inside
@@ -2630,20 +2630,20 @@ object RelationalQueries {
         val cutoff = ev
           .agg(min(expr("unix_timestamp(ts) div 3600"))).head()
           .getLong(0) + qfcRetainAfterHours
-        Sketches.writeGroupedSketchTable(
-          ev.filter(col("event_id") % 4 === 0), g, cv, table)
+        Sketches.writeSketchTable(
+          ev.filter(col("event_id") % 4 === 0), cv, table, group = Some(g))
         drain(graft.pipeline.MergeTables.startKeyedStream(
             Tables.streamOf(s, d, "events")
               .filter(col("value").isNotNull && col("ts").isNotNull &&
                 col("event_id") % 4 =!= 0), Seq(table)) {
           (batch, batchId, lineage) =>
-            Sketches.streamAppendGroupedSketchBatch(batch, batchId, g,
-              cv, table, lineage = lineage)
+            Sketches.streamAppendSketchBatch(batch, batchId, cv, table,
+              lineage = lineage, group = Some(g))
             Sketches.retireGroupsBefore(s, table, cutoff)
         })
-        Sketches.compactGroupedSketchTable(s, table)
+        Sketches.compactSketchTable(s, table)
       }
-      Sketches.groupedQuantilesFromSketchTable(s, table, qe4Pcts)
+      Sketches.quantilesFromSketchTable(s, table, qe4Pcts)
     }),
 
     // QFD — the DATASET-CARD capstone (r15, the r14 verdict's item 6):
@@ -2669,14 +2669,14 @@ object RelationalQueries {
           .filter(col("text").isNotNull)
         val g = col("source")
         val v = length(col("text"))
-        Sketches.writeGroupedSketchTable(
-          docs.filter(col("doc_id") < 400), g, v, lenT)
-        Sketches.appendGroupedSketchTable(
-          docs.filter(col("doc_id") >= 400), g, v, lenT)
-        Sketches.retractGroupedSketchTable(
-          docs.filter(col("doc_id") % qd3DelMod === qd3DelRes), g, v,
-          lenT)
-        Sketches.compactGroupedSketchTable(s, lenT)
+        Sketches.writeSketchTable(
+          docs.filter(col("doc_id") < 400), v, lenT, group = Some(g))
+        Sketches.appendSketchTable(
+          docs.filter(col("doc_id") >= 400), v, lenT, group = Some(g))
+        Sketches.retractSketchTable(
+          docs.filter(col("doc_id") % qd3DelMod === qd3DelRes), v, lenT,
+          group = Some(g))
+        Sketches.compactSketchTable(s, lenT)
       }
       val hllT = "qfd_hll_" + dirTag(d)
       buildOnce(hllT) {
@@ -2719,27 +2719,27 @@ object RelationalQueries {
         val seed = docs.filter(col("doc_id") < 200)
         // len leg skips null text (the oracle's baseWhere; the other
         // legs are null-transparent on both sides)
-        Sketches.writeGroupedSketchTable(
-          seed.filter(col("text").isNotNull), col("source"),
-          length(col("text")), lenT)
-        TextAnalysis.writeGroupedCountMinTable(seed, "source", "text",
-          cmT, width = qa8Width, depth = qa8Depth)
+        Sketches.writeSketchTable(
+          seed.filter(col("text").isNotNull), length(col("text")), lenT,
+          group = Some(col("source")))
+        TextAnalysis.writeCountMinTable(seed, "text", cmT, width = qa8Width,
+          depth = qa8Depth, group = Some("source"))
         ValueAggregators.writeHllTable(
           seed.select(col("source"), explode(
             expr("filter(split(text, ' '), x -> length(x) > 0)"))
             .as("tok")),
           col("source"), col("tok"), hllT)
-        Samples.writeGroupedSampleTable(seed, "source", "doc_id",
-          qf9K, smpT)
+        Samples.writeSampleTable(seed, "doc_id", qf9K, smpT,
+          group = Some("source"))
         drain(DatasetCard.startMaintain(
           Tables.streamOf(s, d, "documents")
             .filter(col("doc_id") >= 200),
           lenT, cmT, hllT, smpT, qf9K, width = qa8Width,
           depth = qa8Depth))
-        Sketches.compactGroupedSketchTable(s, lenT)
-        TextAnalysis.compactGroupedCountMinTable(s, cmT)
+        Sketches.compactSketchTable(s, lenT)
+        TextAnalysis.compactCountMinTable(s, cmT)
         ValueAggregators.compactHllTable(s, hllT)
-        Samples.compactGroupedSampleTable(s, smpT, qf9K)
+        Samples.compactSampleTable(s, smpT, qf9K)
       }
       DatasetCard.card(s, lenT, cmT, hllT, smpT, qfdAuditToks, qf9K,
         qe4Pcts, width = qa8Width, depth = qa8Depth)
@@ -2760,19 +2760,19 @@ object RelationalQueries {
       val table = "qfe_gcm_" + dirTag(d)
       buildOnce(table) {
         val docs = Tables.documents(s, d)
-        TextAnalysis.writeGroupedCountMinTable(
-          docs.filter(col("doc_id") < 400), "source", "text", table,
-          width = qa8Width, depth = qa8Depth)
-        TextAnalysis.appendGroupedCountMinTable(
-          docs.filter(col("doc_id") >= 400), "source", "text", table,
-          width = qa8Width, depth = qa8Depth)
+        TextAnalysis.writeCountMinTable(
+          docs.filter(col("doc_id") < 400), "text", table, width = qa8Width,
+          depth = qa8Depth, group = Some("source"))
+        TextAnalysis.appendCountMinTable(
+          docs.filter(col("doc_id") >= 400), "text", table, width = qa8Width,
+          depth = qa8Depth, group = Some("source"))
         TextAnalysis.retireCountMinGroups(s, table,
           Seq(qfeRetiredSource))
-        TextAnalysis.compactGroupedCountMinTable(s, table)
+        TextAnalysis.compactCountMinTable(s, table)
       }
-      TextAnalysis.groupedCountMinTopKIndexed(
-        Tables.documents(s, d), "source", "text", table, k = qfbK,
-        width = qa8Width, depth = qa8Depth)
+      TextAnalysis.countMinTopKIndexed(
+        Tables.documents(s, d), "text", table, k = qfbK, width = qa8Width,
+        depth = qa8Depth, group = Some("source"))
     }),
 
     // QFH — ONLINE auto-compaction (r16, r15 verdict item 1): the one
@@ -2801,26 +2801,25 @@ object RelationalQueries {
           .filter(col("value").isNotNull && col("ts").isNotNull)
         val cv = floor(col("value") * 100 + 0.5).cast("long")
         val g = expr("unix_timestamp(ts) div 3600")
-        Sketches.writeGroupedSketchTable(
-          ev.filter(col("event_id") % 4 === 0), g, cv, table)
-        Sketches.appendGroupedSketchTable(
-          ev.filter(col("event_id") % 4 === 1), g, cv, table)
+        Sketches.writeSketchTable(
+          ev.filter(col("event_id") % 4 === 0), cv, table, group = Some(g))
+        Sketches.appendSketchTable(
+          ev.filter(col("event_id") % 4 === 1), cv, table, group = Some(g))
         def streamSlice(res: Int): Unit =
           drain(graft.pipeline.MergeTables.startKeyedStream(
               Tables.streamOf(s, d, "events")
                 .filter(col("value").isNotNull && col("ts").isNotNull &&
                   col("event_id") % 4 === res), Seq(table)) {
             (batch, batchId, lineage) =>
-              Sketches.streamAppendGroupedSketchBatch(batch, batchId,
-                g, cv, table, lineage = lineage)
-              Sketches.maybeCompactGroupedSketchTable(s, table,
-                maxGen = 2)
+              Sketches.streamAppendSketchBatch(batch, batchId, cv, table,
+                lineage = lineage, group = Some(g))
+              Sketches.maybeCompactSketchTable(s, table, maxGen = 2)
               ()
           })
         streamSlice(2)
         streamSlice(3)
       }
-      Sketches.groupedQuantilesFromSketchTable(s, table, qe4Pcts)
+      Sketches.quantilesFromSketchTable(s, table, qe4Pcts)
     }),
 
     // QFI — TAKEDOWN AT CARD LEVEL (r16, r15 verdict item 2): qfe
@@ -2843,16 +2842,16 @@ object RelationalQueries {
         val docs = Tables.documents(s, d)
         val lo = docs.filter(col("doc_id") < 400)
         val hi = docs.filter(col("doc_id") >= 400)
-        Sketches.writeGroupedSketchTable(
-          lo.filter(col("text").isNotNull), col("source"),
-          length(col("text")), lenT)
-        Sketches.appendGroupedSketchTable(
-          hi.filter(col("text").isNotNull), col("source"),
-          length(col("text")), lenT)
-        TextAnalysis.writeGroupedCountMinTable(lo, "source", "text",
-          cmT, width = qa8Width, depth = qa8Depth)
-        TextAnalysis.appendGroupedCountMinTable(hi, "source", "text",
-          cmT, width = qa8Width, depth = qa8Depth)
+        Sketches.writeSketchTable(
+          lo.filter(col("text").isNotNull), length(col("text")), lenT,
+          group = Some(col("source")))
+        Sketches.appendSketchTable(
+          hi.filter(col("text").isNotNull), length(col("text")), lenT,
+          group = Some(col("source")))
+        TextAnalysis.writeCountMinTable(lo, "text", cmT, width = qa8Width,
+          depth = qa8Depth, group = Some("source"))
+        TextAnalysis.appendCountMinTable(hi, "text", cmT, width = qa8Width,
+          depth = qa8Depth, group = Some("source"))
         def toks(df: DataFrame) = df.select(col("source"), explode(
           expr("filter(split(text, ' '), x -> length(x) > 0)"))
           .as("tok"))
@@ -2860,10 +2859,10 @@ object RelationalQueries {
           col("tok"), hllT)
         ValueAggregators.appendHllTable(toks(hi), col("source"),
           col("tok"), hllT)
-        Samples.writeGroupedSampleTable(lo, "source", "doc_id", qf9K,
-          smpT)
-        Samples.appendGroupedSampleTable(hi, "source", "doc_id", qf9K,
-          smpT)
+        Samples.writeSampleTable(lo, "doc_id", qf9K, smpT,
+          group = Some("source"))
+        Samples.appendSampleTable(hi, "doc_id", qf9K, smpT,
+          group = Some("source"))
         DatasetCard.retireSource(s, lenT, cmT, hllT, smpT,
           qfeRetiredSource)
       }
@@ -2940,24 +2939,23 @@ object RelationalQueries {
         val cutoff = ev
           .agg(min(expr("unix_timestamp(ts) div 3600"))).head()
           .getLong(0) + qfcRetainAfterHours
-        Sketches.writeGroupedSketchTable(
-          ev.filter(col("event_id") % 4 === 0), g, cv, table)
-        Sketches.appendGroupedSketchTable(
-          ev.filter(col("event_id") % 4 === 1), g, cv, table)
+        Sketches.writeSketchTable(
+          ev.filter(col("event_id") % 4 === 0), cv, table, group = Some(g))
+        Sketches.appendSketchTable(
+          ev.filter(col("event_id") % 4 === 1), cv, table, group = Some(g))
         drain(graft.pipeline.MergeTables.startKeyedStream(
             Tables.streamOf(s, d, "events")
               .filter(col("value").isNotNull && col("ts").isNotNull &&
                 col("event_id") % 4 >= 2), Seq(table)) {
           (batch, batchId, lineage) =>
-            Sketches.streamAppendGroupedSketchBatch(batch, batchId, g,
-              cv, table, lineage = lineage)
+            Sketches.streamAppendSketchBatch(batch, batchId, cv, table,
+              lineage = lineage, group = Some(g))
             Sketches.retireGroupsBefore(s, table, cutoff)
-            Sketches.maybeCompactGroupedSketchTable(s, table,
-              maxGen = 2)
+            Sketches.maybeCompactSketchTable(s, table, maxGen = 2)
             ()
         })
       }
-      Sketches.groupedQuantilesFromSketchTable(s, table, qe4Pcts)
+      Sketches.quantilesFromSketchTable(s, table, qe4Pcts)
     }),
 
     // QFL — the SELF-MAINTAINING card running UNATTENDED: qff's
@@ -2981,24 +2979,24 @@ object RelationalQueries {
         def toks(df: DataFrame) = df.select(col("source"), explode(
           expr("filter(split(text, ' '), x -> length(x) > 0)"))
           .as("tok"))
-        Sketches.writeGroupedSketchTable(
-          seed.filter(col("text").isNotNull), col("source"),
-          length(col("text")), lenT)
-        Sketches.appendGroupedSketchTable(
-          grow.filter(col("text").isNotNull), col("source"),
-          length(col("text")), lenT)
-        TextAnalysis.writeGroupedCountMinTable(seed, "source", "text",
-          cmT, width = qa8Width, depth = qa8Depth)
-        TextAnalysis.appendGroupedCountMinTable(grow, "source", "text",
-          cmT, width = qa8Width, depth = qa8Depth)
+        Sketches.writeSketchTable(
+          seed.filter(col("text").isNotNull), length(col("text")), lenT,
+          group = Some(col("source")))
+        Sketches.appendSketchTable(
+          grow.filter(col("text").isNotNull), length(col("text")), lenT,
+          group = Some(col("source")))
+        TextAnalysis.writeCountMinTable(seed, "text", cmT, width = qa8Width,
+          depth = qa8Depth, group = Some("source"))
+        TextAnalysis.appendCountMinTable(grow, "text", cmT, width = qa8Width,
+          depth = qa8Depth, group = Some("source"))
         ValueAggregators.writeHllTable(toks(seed), col("source"),
           col("tok"), hllT)
         ValueAggregators.appendHllTable(toks(grow), col("source"),
           col("tok"), hllT)
-        Samples.writeGroupedSampleTable(seed, "source", "doc_id",
-          qf9K, smpT)
-        Samples.appendGroupedSampleTable(grow, "source", "doc_id",
-          qf9K, smpT)
+        Samples.writeSampleTable(seed, "doc_id", qf9K, smpT,
+          group = Some("source"))
+        Samples.appendSampleTable(grow, "doc_id", qf9K, smpT,
+          group = Some("source"))
         // the stream lands batch generations on 2-generation tables,
         // so the in-loop policy compacts every tier mid-lineage
         drain(DatasetCard.startMaintain(
@@ -3211,17 +3209,17 @@ object RelationalQueries {
     val table = "qfb_gcm_" + dirTag(d)
     buildOnce(table) {
       val docs = Tables.documents(s, d)
-      TextAnalysis.writeGroupedCountMinTable(
-        docs.filter(col("doc_id") < 400), "source", "text", table,
-        width = qa8Width, depth = qa8Depth)
-      drain(TextAnalysis.startStreamAppendGroupedCountMinTable(
+      TextAnalysis.writeCountMinTable(
+        docs.filter(col("doc_id") < 400), "text", table, width = qa8Width,
+        depth = qa8Depth, group = Some("source"))
+      drain(TextAnalysis.startStreamAppendCountMinTable(
         Tables.streamOf(s, d, "documents")
-          .filter(col("doc_id") >= 400),
-        "source", "text", table, width = qa8Width, depth = qa8Depth))
-      TextAnalysis.retractGroupedCountMinDocs(
-        docs.filter(col("doc_id") % qd3DelMod === qd3DelRes),
-        "source", "text", table, width = qa8Width, depth = qa8Depth)
-      TextAnalysis.compactGroupedCountMinTable(s, table)
+          .filter(col("doc_id") >= 400), "text", table, width = qa8Width,
+        depth = qa8Depth, group = Some("source")))
+      TextAnalysis.retractCountMinDocs(
+        docs.filter(col("doc_id") % qd3DelMod === qd3DelRes), "text", table,
+        width = qa8Width, depth = qa8Depth, group = Some("source"))
+      TextAnalysis.compactCountMinTable(s, table)
     }
     table
   }
@@ -3232,13 +3230,13 @@ object RelationalQueries {
     val table = "qf9_gsmp_" + dirTag(d)
     buildOnce(table) {
       val docs = Tables.documents(s, d)
-      Samples.writeGroupedSampleTable(
-        docs.filter(col("doc_id") < 400), "source", "doc_id", qf9K,
-        table)
-      Samples.appendGroupedSampleTable(
-        docs.filter(col("doc_id") >= 400), "source", "doc_id", qf9K,
-        table)
-      Samples.compactGroupedSampleTable(s, table, qf9K)
+      Samples.writeSampleTable(
+        docs.filter(col("doc_id") < 400), "doc_id", qf9K, table,
+        group = Some("source"))
+      Samples.appendSampleTable(
+        docs.filter(col("doc_id") >= 400), "doc_id", qf9K, table,
+        group = Some("source"))
+      Samples.compactSampleTable(s, table, qf9K)
     }
     table
   }
@@ -3793,7 +3791,8 @@ object RelationalQueries {
   /** DuckDB twin of the log-bucket quantile sketch over events.value
     * centi-units — ONE builder for the ungrouped (qe4/qe5/qe8) and
     * grouped (qe7) chains, the same single-sourcing the Spark side
-    * enforces via its shared bucketCounts/quantWalk core: the whole
+    * enforces via its one logBucketCounts/quantilesFromBuckets core
+    * (ungrouped = zero group keys): the whole
     * sketch is integer arithmetic both engines repeat bit for bit —
     * `length(printf('%b', v))` is Spark's `length(bin(v))` (bit
     * length, no float log2), the bucket width is a guarded shift,

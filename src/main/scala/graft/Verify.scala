@@ -6,8 +6,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional extra args: run only these query names (local iteration)
+    // optional extra args: run only these query names (local iteration);
+    // an unknown name fails the run instead of selecting nothing
     val only = args.drop(2).toSet
+    val unknown = (only -- SparkEntry.queries.keySet).toSeq.sorted
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[verify] unknown query name(s): ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -30,10 +30,11 @@ object DatasetCard {
 
   /** Start the maintenance loop. The four tables must exist (write
     * their generation 0 from the initial batch corpus first — the
-    * tiers' append contract), and the count-min table's stored
-    * (width, depth) must match the loop's — checked BEFORE the first
-    * batch lands ([[TextAnalysis.requireCmParams]], ADVICE r15: a
-    * mismatched maintenance loop would poison every future probe as a
+    * tiers' append contract), the three `g`-keyed tables must be
+    * grouped, and the count-min table's stored (width, depth) must
+    * match the loop's — checked BEFORE the first batch lands
+    * ([[TextAnalysis.requireCmTable]], ADVICE r15: a mismatched
+    * maintenance loop would poison every future probe as a
     * mixed-params failure discovered only at probe time). The loop is
     * [[MergeTables.startKeyedStream]] over all four tables as key
     * tables: one lineage id serves all four — registered on EVERY table
@@ -46,8 +47,11 @@ object DatasetCard {
       width: Int = 1024, depth: Int = 4,
       maxGen: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    TextAnalysis.requireCmParams(docStream.sparkSession, cmTable, width,
-      depth)
+    val spark = docStream.sparkSession
+    TextAnalysis.requireCmTable(spark, cmTable, width, depth,
+      grouped = true)
+    Seq(lenTable, smpTable).foreach(
+      MergeTables.requireGrouping(spark, _, grouped = true))
     MergeTables.startKeyedStream(docStream,
         Seq(lenTable, cmTable, hllTable, smpTable)) {
       (batch, batchId, lineage) =>
@@ -72,21 +76,19 @@ object DatasetCard {
     try {
       // len leg skips null text (the card oracle's baseWhere; the other
       // legs are null-transparent — split/explode skip null text rows)
-      Sketches.streamAppendGroupedSketchBatch(
-        b.filter(col("text").isNotNull), batchId,
-        col("source"), length(col("text")), lenTable, lineage = lineage)
-      MergeTables.appendBatch(b, batchId, cmTable, lineage)(
-        TextAnalysis.groupedCountMinCounters(_, "source", "text", width,
-            depth)
-          .withColumn("w", lit(width)).withColumn("dep", lit(depth)))
+      Sketches.streamAppendSketchBatch(b.filter(col("text").isNotNull),
+        batchId, length(col("text")), lenTable, lineage = lineage,
+        group = Some(col("source")))
+      TextAnalysis.streamAppendCountMinBatch(b, batchId, "text", cmTable,
+        width, depth, lineage, group = Some("source"))
       MergeTables.appendBatch(b, batchId, hllTable, lineage)(
         x => graft.agg.ValueAggregators.hllRegisters(
           x.select(col("source"), explode(
             expr("filter(split(text, ' '), x -> length(x) > 0)"))
             .as("tok")),
           col("source"), col("tok")))
-      Samples.streamAppendGroupedSampleBatch(b, batchId, "source",
-        "doc_id", k, smpTable, lineage)
+      Samples.streamAppendSampleBatch(b, batchId, "doc_id", k, smpTable,
+        lineage, group = Some("source"))
     } finally {
       b.unpersist()
       ()
@@ -99,11 +101,11 @@ object DatasetCard {
     // for maintenance, ever
     maxGen.foreach { mg =>
       val spark = batch.sparkSession
-      Sketches.maybeCompactGroupedSketchTable(spark, lenTable, mg)
-      TextAnalysis.maybeCompactGroupedCountMinTable(spark, cmTable, mg)
+      Sketches.maybeCompactSketchTable(spark, lenTable, mg)
+      TextAnalysis.maybeCompactCountMinTable(spark, cmTable, mg)
       graft.agg.ValueAggregators.maybeCompactHllTable(spark, hllTable,
         mg)
-      Samples.maybeCompactGroupedSampleTable(spark, smpTable, k, mg)
+      Samples.maybeCompactSampleTable(spark, smpTable, k, mg)
       ()
     }
   }
@@ -125,9 +127,9 @@ object DatasetCard {
       cmTable: String, hllTable: String, smpTable: String,
       source: String): Unit = {
     Sketches.retireGroups(spark, lenTable, Seq(source))
-    Sketches.compactGroupedSketchTable(spark, lenTable)
+    Sketches.compactSketchTable(spark, lenTable)
     TextAnalysis.retireCountMinGroups(spark, cmTable, Seq(source))
-    TextAnalysis.compactGroupedCountMinTable(spark, cmTable)
+    TextAnalysis.compactCountMinTable(spark, cmTable)
     graft.agg.ValueAggregators.retireHllGroups(spark, hllTable,
       Seq(source))
     Samples.retireSampleGroups(spark, smpTable, Seq(source))
@@ -150,8 +152,7 @@ object DatasetCard {
       hllTable: String, smpTable: String, auditToks: Seq[String],
       k: Int, pcts: Seq[Int], width: Int = 1024, depth: Int = 4)
       : DataFrame = {
-    val lens = Sketches.groupedQuantilesFromSketchTable(spark,
-        lenTable, pcts)
+    val lens = Sketches.quantilesFromSketchTable(spark, lenTable, pcts)
       .groupBy("g").agg(
         max(when(col("pct") === 50, col("est_low"))).as("len_p50_lo"),
         max(when(col("pct") === 50, col("est_high"))).as("len_p50_hi"),
@@ -165,7 +166,7 @@ object DatasetCard {
     val dt = graft.agg.ValueAggregators.hllEstimateFromTable(spark,
         hllTable)
       .select(col("key").as("g"), col("est").as("distinct_tokens"))
-    val sm = Samples.groupedSampleFromTable(spark, smpTable, k)
+    val sm = Samples.sampleFromTable(spark, smpTable, k)
       .groupBy("g").agg(concat_ws(",",
         transform(
           array_sort(collect_list(struct(col("hk"), col("id")))),

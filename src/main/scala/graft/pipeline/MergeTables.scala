@@ -59,6 +59,14 @@ import org.apache.spark.sql.functions._
   *    ([[mergedMax]]) are replay-idempotent but cannot retract
   *    (deletion is a rebuild).
   *
+  * Grouping is data too: a state table is GROUPED when it stores a
+  * `g` key column ([[groupKeys]]), and the sketch, count-min and
+  * sample tiers run one lifecycle for both shapes — ungrouped state is
+  * the zero-key case. Row-taking calls say which shape they land,
+  * table-reading calls read it from the catalog schema, and a call
+  * whose shape disagrees with the stored table is refused by name
+  * before anything lands ([[requireGrouping]]).
+  *
   * Reference contract: the write-once sorted-artifact story of
   * `io/MapFile.java:49` plus the aggregate framework's mergeable
   * partial states (`mapred/lib/aggregate/ValueAggregator.java`). */
@@ -1061,6 +1069,43 @@ private[graft] object MergeTables {
   private[graft] def freshInputFiles(spark: SparkSession, table: String)
       : Seq[String] =
     freshView(spark, table).inputFiles.toSeq.sorted
+
+  /** The group key of mergeable state: `Seq("g")` when the frame
+    * carries a `g` column (grouped state — one bounded state per key),
+    * empty otherwise. The sketch, count-min and sample tiers run ONE
+    * code path per lifecycle step over this key list, so ungrouped
+    * state is the zero-key case of grouped state. */
+  private[graft] def groupKeys(state: DataFrame): Seq[String] =
+    state.columns.toSeq.filter(_ == "g")
+
+  /** [[groupKeys]] of a stored table, read from its catalog schema
+    * after the heal — metadata only, no Spark job. */
+  private[graft] def groupKeys(spark: SparkSession, table: String)
+      : Seq[String] = {
+    recoverCompactCrash(spark, table)
+    require(spark.catalog.tableExists(table),
+      s"$table does not exist — write it first")
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .schema.fieldNames.toSeq.filter(_ == "g")
+  }
+
+  /** Refuse a call whose grouping disagrees with `table`'s stored
+    * state — the check every row-taking append, retraction and stream
+    * start of the grouped-capable tiers runs first, and every
+    * grouped-only operation (retirement, literal-token estimates).
+    * Without it a grouped append into an ungrouped table dies inside
+    * the land with Spark's raw column-count error, and a grouped-only
+    * operation with an unresolved `g`. */
+  private[graft] def requireGrouping(spark: SparkSession, table: String,
+      grouped: Boolean): Unit = {
+    val stored = groupKeys(spark, table).nonEmpty
+    require(stored == grouped,
+      if (stored) s"$table is a GROUPED table (stored `g` column): " +
+        "an ungrouped call cannot touch it — pass its group column"
+      else s"$table is an UNGROUPED table (no stored `g` column): " +
+        "a grouped call cannot touch it — write a grouped table first")
+  }
 
   def mergedSum(spark: SparkSession, table: String,
       keyCols: Seq[String], cntCol: String): DataFrame = {

@@ -66,11 +66,19 @@ object Sketches {
       coalesce(v.cast("string"), lit("NULL")))))
   }
 
-  /** The shared bucket-mapping + counting core — ONE definition for the
-    * ungrouped (qe4), grouped (qe7), and persisted (qe8) tiers, so the
-    * mapping cannot drift between them. `g` is the (already-aliased
-    * input column, output name) list of group keys; empty for the
-    * ungrouped sketch.
+
+  /** The sketch itself: `(b_low, b_high, cnt)` bucket counts of a
+    * long-valued column in the enforced `[0, 2^62)` domain
+    * ([[guardedV]]) — ONE definition for the ungrouped (qe4), grouped
+    * (qe7) and persisted (qe8, qf7) tiers, so the mapping cannot drift
+    * between them. One map-side projection plus a bounded aggregation:
+    * the shuffle after partial aggregation carries at most the
+    * bucket-table rows per task, regardless of input size.
+    *
+    * With `group`, one bucket table per key: `(g, b_low, b_high, cnt)`
+    * — the dataset-card shape (q96's per-source percentile profile) at
+    * `groups × buckets` state, bounded as long as the group domain is
+    * (event types, sources, languages; NOT user ids).
     *
     * Bucket mapping, all integer (no float log2 anywhere): values below
     * `2^(subBits+1)` are their own bucket (width 1, exact); above, the
@@ -80,11 +88,12 @@ object Sketches {
     * `greatest`-guarded so the small-value branch never evaluates a
     * negative shift — DuckDB's `<<` rejects those, and the twins must
     * compute the same expression). */
-  private def bucketCounts(rows: DataFrame, g: Seq[(Column, String)],
-      valCol: Column, subBits: Int): DataFrame = {
-    val names = g.map(_._2)
-    rows.select(g.map { case (c, n) => c.as(n) } :+
-        guardedV(valCol).as("v"): _*)
+  def logBucketCounts(rows: DataFrame, valCol: Column,
+      subBits: Int = defaultSubBits, group: Option[Column] = None)
+      : DataFrame = {
+    val g = group.map(_.as("g")).toSeq
+    val names = group.map(_ => "g").toSeq
+    rows.select(g :+ guardedV(valCol).as("v"): _*)
       .withColumn("nb", length(bin(col("v"))))
       .withColumn("p", expr(
         s"shiftleft(cast(1 as bigint), greatest(nb - 1 - $subBits, 0))"))
@@ -97,19 +106,25 @@ object Sketches {
       .agg(count(lit(1)).as("cnt"))
   }
 
-  /** The shared rank walk — ONE definition for the ungrouped and
-    * grouped extractions: per group (global when `g` is empty), the
-    * target rank is `ceil(p·N/100)` and the estimate is the first
-    * bucket, in value order, whose cumulative count reaches it. All
-    * work here is over the BUCKET TABLE — bounded rows by construction
-    * — so the windows/joins are sketch-sized (the qa8 TakeOrdered
-    * class), including the single-partition window of the ungrouped
-    * case. */
-  private def quantWalk(buckets: DataFrame, percents: Seq[Int],
-      g: Seq[String]): DataFrame = {
+  /** Quantile extraction from a bucket table — the rank walk, per group
+    * when the table carries `g` ([[MergeTables.groupKeys]]), global
+    * otherwise: the target rank is `ceil(p·N/100)` and the estimate is
+    * the first bucket, in value order, whose cumulative count reaches
+    * it. The true p-th-percentile order statistic provably lies inside
+    * the returned `[est_low, est_high]` (the walk over value-ordered
+    * buckets is the same walk sorted data would take), so the
+    * bracketing claim is structural, not statistical. Returns
+    * `([g,] pct, target_rank, est_low, est_high)`; groups with no rows
+    * vanish. All work here is over the BUCKET TABLE — bounded rows by
+    * construction — so the windows/joins are sketch-sized (the qa8
+    * TakeOrdered class), including the single-partition window of the
+    * ungrouped case; the grouped window partitions by group. */
+  def quantilesFromBuckets(buckets: DataFrame, percents: Seq[Int])
+      : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = buckets.sparkSession
     import spark.implicits._
+    val g = MergeTables.groupKeys(buckets)
     val cum = buckets.withColumn("cum",
       sum("cnt").over(Window.partitionBy(g.map(col): _*).orderBy("b_low")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -141,85 +156,52 @@ object Sketches {
         .map(col): _*)
   }
 
-  /** The sketch itself: `(b_low, b_high, cnt)` bucket counts of a
-    * long-valued column in the enforced `[0, 2^62)` domain
-    * ([[guardedV]]). One map-side projection plus a bounded
-    * aggregation: the shuffle after partial aggregation carries at most
-    * the bucket-table rows per task, regardless of input size. */
-  def logBucketCounts(rows: DataFrame, valCol: Column,
-      subBits: Int = defaultSubBits): DataFrame =
-    bucketCounts(rows, Seq.empty, valCol, subBits)
-
-  /** Quantile extraction from a bucket table ([[quantWalk]], ungrouped):
-    * the true p-th-percentile order statistic provably lies inside the
-    * returned `[est_low, est_high]` (the rank walk over value-ordered
-    * buckets is the same walk sorted data would take), so the
-    * bracketing claim is structural, not statistical. Returns
-    * `(pct, target_rank, est_low, est_high)`. */
-  def quantilesFromBuckets(buckets: DataFrame, percents: Seq[Int])
-      : DataFrame = quantWalk(buckets, percents, Seq.empty)
-
   /** [[logBucketCounts]] + [[quantilesFromBuckets]] composed — the qe4
-    * row's shape: quantile estimates of a positive long column with
-    * sketch-bounded state end to end. */
+    * row's shape (qe7's with `group`): quantile estimates of a positive
+    * long column with sketch-bounded state end to end. */
   def logBucketQuantiles(rows: DataFrame, valCol: Column,
-      percents: Seq[Int], subBits: Int = defaultSubBits): DataFrame =
-    quantilesFromBuckets(logBucketCounts(rows, valCol, subBits), percents)
+      percents: Seq[Int], subBits: Int = defaultSubBits,
+      group: Option[Column] = None): DataFrame =
+    quantilesFromBuckets(logBucketCounts(rows, valCol, subBits, group),
+      percents)
 
-  /** PER-GROUP quantile sketches (qe7) — the dataset-card shape (q96's
-    * per-source percentile profile) at sketch-bounded state: one bucket
-    * table per group key, quantiles extracted per group, via the SAME
-    * [[bucketCounts]] mapping and [[quantWalk]] rank walk as the
-    * ungrouped tier (single-sourced — the two cannot drift, and the
-    * spec pins their equality within each key). State is
-    * `groups × buckets` — bounded as long as the group domain is (event
-    * types, sources, languages; NOT user ids); the post-sketch window
-    * partitions by group, so no corpus-sized partition exists. Returns
-    * `(g, pct, target_rank, est_low, est_high)`; groups with no rows
-    * vanish (no row, not a null estimate). */
-  def groupedLogBucketQuantiles(rows: DataFrame, groupCol: Column,
-      valCol: Column, percents: Seq[Int],
-      subBits: Int = defaultSubBits): DataFrame =
-    quantWalk(
-      bucketCounts(rows, Seq((groupCol, "g")), valCol, subBits),
-      percents, Seq("g"))
-
-  /** Persist a sketch as a table (qe8) — the approximate tier joining
-    * the write-once-probe-many contract of the three index tiers, at a
-    * fraction of their machinery because the sketch is INTEGER-ADDITIVE:
-    * the stored artifact is just `(b_low, b_high, cnt, gen, batch_key)`
-    * bucket rows, an append lands a new batch's bucket counts as one
-    * more file generation (the stored side is never read, merged, or
-    * rewritten — counts merge AT PROBE TIME by an exact long sum,
-    * order-independent by construction), and the probe's merged table
-    * is bit-equal to a sketch over the union. Crash safety needs no
-    * commit protocol: each append is ONE coalesced single-file write,
-    * whose visibility is one rename
-    * ([[graft.pipeline.TextAnalysis.commitBm25Gen]]'s argument) — a
-    * crashed append leaves the exact pre-append state. Replay
-    * idempotence (counts are additive, so a re-delivered batch would
-    * otherwise double-count) comes from the deterministic `batch_key`
-    * riding the data rows themselves — so unlike the BM25/ADC tiers no
-    * separate commit table is needed: the single-file rename lands
-    * counts and key atomically. STREAMED appends key their
-    * micro-batches automatically ([[startStreamAppendSketchTable]]); a
-    * BATCH caller who may retry keys its appends the same way through
-    * [[appendSketchTableKeyed]] (r16 verdict item 5 — the unkeyed
-    * [[appendSketchTable]] remains for callers whose delivery is
-    * already exactly-once). Deletion is [[retractSketchTable]]
-    * (additive retraction, no tombstones to store);
-    * [[compactSketchTable]] collapses generations. */
+  /** Persist a sketch as a table (qe8; qf7 with `group`) — the
+    * approximate tier joining the write-once-probe-many contract of the
+    * three index tiers, at a fraction of their machinery because the
+    * sketch is INTEGER-ADDITIVE: the stored artifact is just
+    * `([g,] b_low, b_high, cnt, gen, batch_key)` bucket rows, an append
+    * lands a new batch's bucket counts as one more file generation (the
+    * stored side is never read, merged, or rewritten — counts merge AT
+    * PROBE TIME by an exact long sum, order-independent by
+    * construction), and the probe's merged table is bit-equal to a
+    * sketch over the union. Crash safety needs no commit protocol: each
+    * append is ONE coalesced single-file write, whose visibility is one
+    * rename — a crashed append leaves the exact pre-append state.
+    * Replay idempotence (counts are additive, so a re-delivered batch
+    * would otherwise double-count) comes from the deterministic
+    * `batch_key` riding the data rows themselves. STREAMED appends key
+    * their micro-batches automatically ([[startStreamAppendSketchTable]]);
+    * a BATCH caller who may retry keys its appends the same way through
+    * [[appendSketchTableKeyed]] (the unkeyed [[appendSketchTable]]
+    * remains for callers whose delivery is already exactly-once).
+    * Deletion is [[retractSketchTable]] (additive retraction, no
+    * tombstones to store); [[compactSketchTable]] collapses
+    * generations. Every later call's grouping must match the table's
+    * ([[MergeTables.requireGrouping]]). */
   def writeSketchTable(rows: DataFrame, valCol: Column, table: String,
-      subBits: Int = defaultSubBits): Unit =
-    MergeTables.write(logBucketCounts(rows, valCol, subBits), "b_low",
-      table)
+      subBits: Int = defaultSubBits, group: Option[Column] = None): Unit =
+    MergeTables.write(logBucketCounts(rows, valCol, subBits, group),
+      "b_low", table)
 
   /** Append a batch's bucket counts to a persisted sketch — one
     * sketch-sized single-file write, archive-independent cost
     * ([[MergeTables.append]]). */
   def appendSketchTable(rows: DataFrame, valCol: Column, table: String,
-      subBits: Int = defaultSubBits): Unit =
-    MergeTables.append(logBucketCounts(rows, valCol, subBits), table)
+      subBits: Int = defaultSubBits, group: Option[Column] = None): Unit = {
+    MergeTables.requireGrouping(rows.sparkSession, table, group.isDefined)
+    MergeTables.append(logBucketCounts(rows, valCol, subBits, group),
+      table)
+  }
 
   /** [[appendSketchTable]] under a caller-supplied idempotence key
     * ([[MergeTables.appendKeyed]]): allocate a lineage once
@@ -230,42 +212,46 @@ object Sketches {
     * sidecar). Returns true iff the batch appended. */
   def appendSketchTableKeyed(rows: DataFrame, valCol: Column,
       table: String, lineage: Long, batchId: Long,
-      subBits: Int = defaultSubBits): Boolean =
+      subBits: Int = defaultSubBits): Boolean = {
+    MergeTables.requireGrouping(rows.sparkSession, table, grouped = false)
     MergeTables.appendKeyed(logBucketCounts(rows, valCol, subBits),
       table, lineage, batchId)
+  }
 
   /** DELETE from a persisted sketch by additive retraction — the
     * approximate tier's member of the delete matrix (qd3/qd4/qd7),
     * cheaper than all of them because the sketch's own algebra does
     * the work: the retracted rows' bucket counts land NEGATED as one
     * more generation (same single-file atomic append as
-    * [[appendSketchTable]], archive-independent cost, stored side
-    * never read), and the probe-time sum cancels them exactly — the
-    * probe of a build+retract table is bit-equal to a one-shot sketch
-    * over the corpus minus the retracted rows. CONTRACT: `rows` must
-    * be (a sub-multiset of) rows previously added — retracting rows
-    * never added drives some bucket's merged count negative, which the
-    * probe and compactor refuse loudly ([[mergedBuckets]]) rather than
-    * emit a corrupt estimate. Fully-cancelled buckets vanish from the
-    * probe (filtered at merge) and from disk at the next compaction —
-    * the physical-removal analog of qd4's tombstone collapse. */
+    * [[appendSketchTable]], stored side never read), and the probe-time
+    * sum cancels them exactly — the probe of a build+retract table is
+    * bit-equal to a one-shot sketch over the corpus minus the retracted
+    * rows (per group with `group`). CONTRACT: `rows` must be (a
+    * sub-multiset of) rows previously added — retracting rows never
+    * added drives some bucket's merged count negative, which the probe
+    * and compactor refuse loudly ([[MergeTables.mergedSum]]) rather
+    * than emit a corrupt estimate. Fully-cancelled buckets vanish from
+    * the probe and from disk at the next compaction. */
   def retractSketchTable(rows: DataFrame, valCol: Column, table: String,
-      subBits: Int = defaultSubBits): Unit =
-    MergeTables.append(
-      logBucketCounts(rows, valCol, subBits)
-        .withColumn("cnt", -col("cnt")), table)
+      subBits: Int = defaultSubBits, group: Option[Column] = None): Unit = {
+    MergeTables.requireGrouping(rows.sparkSession, table, group.isDefined)
+    MergeTables.append(logBucketCounts(rows, valCol, subBits, group)
+      .withColumn("cnt", -col("cnt")), table)
+  }
 
-  /** Probe-time generation merge, shared by the probe and the
-    * compactor ([[MergeTables.mergedSum]]: exact long sums per bucket,
-    * fully-cancelled buckets dropped, negative merged counts fail
-    * loudly). */
+  /** Probe-time generation merge, shared by the probe, the compactor
+    * and retirement ([[MergeTables.mergedSum]]: exact long sums per
+    * `([g,] b_low, b_high)`, fully-cancelled buckets dropped, negative
+    * merged counts fail loudly). */
   private def mergedBuckets(spark: SparkSession, table: String)
       : DataFrame =
-    MergeTables.mergedSum(spark, table, Seq("b_low", "b_high"), "cnt")
+    MergeTables.mergedSum(spark, table,
+      MergeTables.groupKeys(spark, table) :+ "b_low" :+ "b_high", "cnt")
 
-  /** Quantiles from a persisted sketch: generations merge by exact long
-    * sums (sketch-sized work), then the shared rank walk. The probe of
-    * a build+append table is bit-equal to [[logBucketQuantiles]] over
+  /** Quantiles from a persisted sketch — per group when the table is
+    * grouped (read from its stored schema): generations merge by exact
+    * long sums (sketch-sized work), then the rank walk. The probe of a
+    * build+append table is bit-equal to [[logBucketQuantiles]] over
     * the union corpus — qe8 shares qe4's oracle on that strength — and
     * of a build+retract table to the sketch over the surviving rows
     * (qf2's gate). */
@@ -278,75 +264,28 @@ object Sketches {
     * member of the compaction matrix (qd2/qd4/qd5). The rewrite is the
     * probe's own merge ([[mergedBuckets]], sketch-sized), so compacted
     * == appended == rebuilt is definitional; fully-cancelled buckets
-    * are physically dropped. The swap is the shadow-then-rename
-    * protocol of the other tiers, and the rewrite resets `batch_key`
-    * to −1, which is what permits a FRESH streaming lineage after a
-    * compaction ([[graft.pipeline.Similarity.streamBatchKeyBase]]). */
+    * are physically dropped. The rewrite resets `batch_key` to −1,
+    * which is what permits a FRESH streaming lineage after a
+    * compaction. */
   def compactSketchTable(spark: SparkSession, table: String): Unit =
     MergeTables.compact(spark, table, "b_low",
       mergedBuckets(spark, table))
 
   /** [[compactSketchTable]] iff more than `maxGen` generations have
     * accumulated — the auto-compaction policy a maintenance loop calls
-    * after its appends, INCLUDING inside a live streaming lineage
-    * (since r16 the rewrite carries the lineage's replay high-water
-    * marks — [[MergeTables.maybeCompact]]; qfh gates the composition):
-    * probe-time merge fan-in and the per-append replay probe both
-    * scale with the generation count (measured curve in BASELINE.md),
-    * so the loop bounds them at ~maxGen without a human deciding when.
-    * Returns true iff it compacted. */
+    * after its appends, INCLUDING inside a live streaming lineage (the
+    * rewrite carries the lineage's replay high-water marks —
+    * [[MergeTables.maybeCompact]]; qfh gates the composition): probe
+    * fan-in and the per-append replay probe both scale with the
+    * generation count, so the loop bounds them at ~maxGen without a
+    * human deciding when. Returns true iff it compacted. */
   def maybeCompactSketchTable(spark: SparkSession, table: String,
       maxGen: Int = MergeTables.defaultMaxGen): Boolean =
     MergeTables.maybeCompact(spark, table, "b_low", maxGen)(
       mergedBuckets(spark, table))
 
-  /** [[maybeCompactSketchTable]] for the grouped tier. */
-  def maybeCompactGroupedSketchTable(spark: SparkSession, table: String,
-      maxGen: Int = MergeTables.defaultMaxGen): Boolean =
-    MergeTables.maybeCompactWith(spark, table, maxGen)(
-      compactGroupedSketchTable(spark, table))
-
-  /** PER-GROUP persisted sketch (qf7) — qe7's grouped sketch under the
-    * same [[MergeTables]] lifecycle as the ungrouped table: the stored
-    * state is `(g, b_low, b_high, cnt)` rows (groups × buckets, bounded
-    * for bounded group domains), appends/retractions land whole
-    * grouped-bucket generations, and the probe merges per
-    * `(g, b_low, b_high)` before the shared grouped rank walk — so the
-    * per-source dataset-card profile (q96's shape) is MAINTAINED
-    * incrementally instead of recomputed per run. Probe-equals-one-shot
-    * rides the same additive law as qe8 (spec-gated; qf7 gates the
-    * grouped estimates over the survivor set). */
-  def writeGroupedSketchTable(rows: DataFrame, groupCol: Column,
-      valCol: Column, table: String,
-      subBits: Int = defaultSubBits): Unit =
-    MergeTables.write(
-      bucketCounts(rows, Seq((groupCol, "g")), valCol, subBits),
-      "b_low", table)
-
-  /** Append a batch's grouped bucket counts — see
-    * [[writeGroupedSketchTable]]. */
-  def appendGroupedSketchTable(rows: DataFrame, groupCol: Column,
-      valCol: Column, table: String,
-      subBits: Int = defaultSubBits): Unit =
-    MergeTables.append(
-      bucketCounts(rows, Seq((groupCol, "g")), valCol, subBits), table)
-
-  /** Retract rows from a grouped sketch — [[retractSketchTable]]'s
-    * contract per group. */
-  def retractGroupedSketchTable(rows: DataFrame, groupCol: Column,
-      valCol: Column, table: String,
-      subBits: Int = defaultSubBits): Unit =
-    MergeTables.append(
-      bucketCounts(rows, Seq((groupCol, "g")), valCol, subBits)
-        .withColumn("cnt", -col("cnt")), table)
-
-  private def mergedGroupedBuckets(spark: SparkSession, table: String)
-      : DataFrame =
-    MergeTables.mergedSum(spark, table, Seq("g", "b_low", "b_high"),
-      "cnt")
-
-  /** RETENTION for time-keyed maintained profiles (the qfa shape,
-    * r14 verdict item 3): retract every group whose key sorts below
+  /** RETENTION for time-keyed maintained profiles (the qfa shape):
+    * retract every group of a grouped sketch whose key sorts below
     * `cutoff` — "drop hours older than T" — bounding the state of an
     * unbounded-time stream's profile by the retention window. The
     * machinery is the grouped retraction the tier already has, fed
@@ -377,7 +316,8 @@ object Sketches {
 
   private def retireGroupsMatching(spark: SparkSession, table: String,
       pred: Column): Unit = {
-    val expired = mergedGroupedBuckets(spark, table)
+    MergeTables.requireGrouping(spark, table, grouped = true)
+    val expired = mergedBuckets(spark, table)
       .filter(pred)
       .withColumn("cnt", -col("cnt"))
       .localCheckpoint()
@@ -385,73 +325,45 @@ object Sketches {
       MergeTables.append(expired, table)
   }
 
-  /** Per-group quantiles from a persisted grouped sketch — the shared
-    * grouped rank walk over the merged generations. */
-  def groupedQuantilesFromSketchTable(spark: SparkSession,
-      table: String, percents: Seq[Int]): DataFrame =
-    quantWalk(mergedGroupedBuckets(spark, table), percents, Seq("g"))
-
-  /** Collapse a grouped sketch's generations — see
-    * [[compactSketchTable]]. */
-  def compactGroupedSketchTable(spark: SparkSession, table: String)
-      : Unit =
-    MergeTables.compact(spark, table, "b_low",
-      mergedGroupedBuckets(spark, table))
-
-  /** The per-micro-batch body of
-    * [[startStreamAppendGroupedSketchTable]], exposed for the replay
-    * spec — [[streamAppendSketchBatch]]'s discipline on the grouped
-    * tier. */
-  private[graft] def streamAppendGroupedSketchBatch(batch: DataFrame,
-      batchId: Long, groupCol: Column, valCol: Column, table: String,
-      subBits: Int = defaultSubBits, lineage: Long = 0L): Unit =
-    MergeTables.appendBatch(batch, batchId, table, lineage)(
-      bucketCounts(_, Seq((groupCol, "g")), valCol, subBits))
-
-  /** [[appendGroupedSketchTable]] with the rows ARRIVING AS A STREAM —
-    * one grouped-bucket generation per micro-batch under deterministic
-    * per-lineage commit keys (replay no-op; the qf1 contract per
-    * group). For the event-time windowed profile (qfa) this is the
-    * watermark-free late-data path: a late event's batch lands one
-    * more exact +1 in its hour's bucket, whenever it arrives. Returns
-    * the started query; the caller owns the trigger cadence. */
-  def startStreamAppendGroupedSketchTable(stream: DataFrame,
-      groupCol: Column, valCol: Column, table: String,
-      subBits: Int = defaultSubBits)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    MergeTables.streamAppend(stream, table)(
-      bucketCounts(_, Seq((groupCol, "g")), valCol, subBits))
-
   /** The foreachBatch body of [[startStreamAppendSketchTable]], exposed
-    * for the replay spec: append `batch`'s bucket counts under the
-    * deterministic key of `batchId` unless that key already appears in
-    * the stored rows — a replayed committed micro-batch (foreachBatch's
-    * at-least-once window between a commit and the checkpoint offset
-    * write) is detected and becomes an exact no-op, closing the
-    * double-count hazard the additive merge would otherwise have. The
-    * key rides the generation's own rows, so detection and the
-    * counts it guards commit in the same single-file rename. */
+    * for the replay spec and the hand-rolled maintenance loops (qfg,
+    * qfh, qfk, [[DatasetCard.maintainBatch]]): append `batch`'s bucket
+    * counts under the deterministic key of `batchId` unless that key
+    * already appears in the stored rows — a replayed committed
+    * micro-batch (foreachBatch's at-least-once window between a commit
+    * and the checkpoint offset write) is detected and becomes an exact
+    * no-op, closing the double-count hazard the additive merge would
+    * otherwise have. The key rides the generation's own rows, so
+    * detection and the counts it guards commit in the same single-file
+    * rename. */
   private[graft] def streamAppendSketchBatch(batch: DataFrame,
       batchId: Long, valCol: Column, table: String,
-      subBits: Int = defaultSubBits, lineage: Long = 0L): Unit =
+      subBits: Int = defaultSubBits, lineage: Long = 0L,
+      group: Option[Column] = None): Unit =
     MergeTables.appendBatch(batch, batchId, table, lineage)(
-      logBucketCounts(_, valCol, subBits))
+      logBucketCounts(_, valCol, subBits, group))
 
-  /** [[appendSketchTable]] with the VALUES ARRIVING AS A STREAM — the
-    * approximate tier's twin of qd6/qe1/qe2, completing streaming
-    * appends across all four persisted tiers: each micro-batch lands
-    * its bucket counts as one generation under a deterministic
-    * per-lineage commit key, so K streamed micro-batches == one
-    * one-shot append == a rebuild over the union (probe-exact, the
-    * additive merge law), and a replayed committed batch is skipped
-    * instead of double-counted ([[streamAppendSketchBatch]], replay
-    * spec-gated). Returns the started query; the caller owns the
-    * trigger cadence (`EventStreams.drain` for the blocking form). */
+  /** [[appendSketchTable]] with the VALUES ARRIVING AS A STREAM — each
+    * micro-batch lands its bucket counts as one generation under a
+    * deterministic per-lineage commit key, so K streamed micro-batches
+    * == one one-shot append == a rebuild over the union (probe-exact,
+    * the additive merge law), and a replayed committed batch is
+    * skipped instead of double-counted ([[streamAppendSketchBatch]],
+    * replay spec-gated). For the event-time windowed profile (qfa,
+    * `group` = the hour) this is the watermark-free late-data path: a
+    * late event's batch lands one more exact +1 in its hour's bucket,
+    * whenever it arrives. A mismatched grouping is refused at start.
+    * Returns the started query; the caller owns the trigger cadence
+    * (`EventStreams.drain` for the blocking form). */
   def startStreamAppendSketchTable(stream: DataFrame, valCol: Column,
-      table: String, subBits: Int = defaultSubBits)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      table: String, subBits: Int = defaultSubBits,
+      group: Option[Column] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    MergeTables.requireGrouping(stream.sparkSession, table,
+      group.isDefined)
     MergeTables.streamAppend(stream, table)(
-      logBucketCounts(_, valCol, subBits))
+      logBucketCounts(_, valCol, subBits, group))
+  }
 
   /** [[logBucketQuantiles]] with the VALUES ARRIVING AS A STREAM — the
     * quantile analog of qa9's streaming count-min: the bucket build

@@ -1212,63 +1212,94 @@ object TextAnalysis {
     * state is the bounded counter table itself — the sketch maintains
     * incrementally per micro-batch with no replay (spec-gated
     * stream == batch; the qa9 oracle rebuilds the same counters in SQL).
-    */
+    *
+    * With `group` (a column of `docs`), one counter table per key:
+    * `(g, h, b, c)` — the per-source token-frequency profile of a
+    * dataset card, at `groups × depth × width` state regardless of
+    * corpus size (bounded group domains, the qe7 discipline). */
   def countMinCounters(docs: DataFrame, textCol: String,
-      width: Int = 1024, depth: Int = 4): DataFrame = {
+      width: Int = 1024, depth: Int = 4, group: Option[String] = None)
+      : DataFrame = {
     require(width > 0 && depth > 0, s"w=$width d=$depth")
-    docs.select(explode(words(col(textCol))).as("tok"))
-      .select(explode(cmCoords(width, depth)).as("x"))
-      .groupBy(col("x.h").as("h"), col("x.b").as("b"))
+    val g = group.map(_ => col("g")).toSeq
+    docs.select(group.map(col(_).as("g")).toSeq :+
+        explode(words(col(textCol))).as("tok"): _*)
+      .select(g :+ explode(cmCoords(width, depth)).as("x"): _*)
+      .groupBy(g :+ col("x.h").as("h") :+ col("x.b").as("b"): _*)
       .agg(count(lit(1)).as("c"))
   }
 
   def countMinTopK(docs: DataFrame, idCol: String, textCol: String,
       k: Int, width: Int = 1024, depth: Int = 4): DataFrame = {
     require(k > 0 && width > 0 && depth > 0, s"k=$k w=$width d=$depth")
-    cmTopKFromCounters(docs, countMinCounters(docs, textCol, width,
+    cmTopKFromCounters(docs, None, countMinCounters(docs, textCol, width,
       depth), textCol, k, width, depth)
   }
 
   /** The estimate leg shared by the scan-per-run top-k ([[countMinTopK]])
     * and the persisted-table probe ([[countMinTopKIndexed]]): distinct
-    * tokens of `vocabDocs` → seeded coordinates → min over the
-    * broadcast counter table. One definition, so the serving tier
-    * cannot hash or cut differently from the audit tier. */
+    * (group, token)s of `vocabDocs` → seeded coordinates → min over the
+    * broadcast counter table of the same group. One definition, so the
+    * serving tier cannot hash or cut differently from the audit tier.
+    * With zero keys the cut is qa8's TakeOrdered; with a group it is a
+    * row_number window partitioned by the group (bounded rows per
+    * partition: the group's vocabulary). */
   private def cmTopKFromCounters(vocabDocs: DataFrame,
-      counters: DataFrame, textCol: String, k: Int, width: Int,
-      depth: Int): DataFrame = {
-    val cs = counters
-      .select(col("h").as("ch"), col("b").as("cb"), col("c"))
-    vocabDocs.select(explode(words(col(textCol))).as("tok")).distinct()
-      .select(col("tok"), explode(cmCoords(width, depth)).as("x"))
-      .join(broadcast(cs),
-        col("x.h") === col("ch") && col("x.b") === col("cb"))
-      .groupBy("tok").agg(min("c").as("est"))
-      .orderBy(col("est").desc, col("tok")).limit(k)
+      group: Option[String], counters: DataFrame, textCol: String,
+      k: Int, width: Int, depth: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val g = group.map(_ => "g").toSeq
+    val cs = counters.select(g.map(n => col(n).as("c" + n)) :+
+      col("h").as("ch") :+ col("b").as("cb") :+ col("c"): _*)
+    val est = vocabDocs.select(group.map(col(_).as("g")).toSeq :+
+        explode(words(col(textCol))).as("tok"): _*).distinct()
+      .select(g.map(col) :+ col("tok") :+
+        explode(cmCoords(width, depth)).as("x"): _*)
+      .join(broadcast(cs), g.map(n => col(n) === col("c" + n))
+        .foldLeft(col("x.h") === col("ch") && col("x.b") === col("cb"))(
+          _ && _))
+      .groupBy((g :+ "tok").map(col): _*).agg(min("c").as("est"))
+    if (g.isEmpty) est.orderBy(col("est").desc, col("tok")).limit(k)
+    else est.withColumn("rn", row_number().over(
+        Window.partitionBy("g").orderBy(col("est").desc, col("tok"))))
+      .filter(col("rn") <= k).drop("rn")
   }
 
-  /** PERSIST the count-min counter table (qf4) — the heavy-hitter
-    * sketch joining the persisted tier under the shared
-    * [[MergeTables]] protocol. Counts are SUM-monoid state, so the
-    * tier gets the FULL maintenance lifecycle of the quantile sketch:
-    * single-file generation appends whose cost is independent of both
-    * corpus and archive size ([[appendCountMinTable]]), deletion by
-    * additive retraction ([[retractCountMinDocs]] — negated counts
-    * cancel at the probe-time sum; over-retraction fails loudly),
-    * compaction through the probe's own merge
-    * ([[compactCountMinTable]]), and streamed appends under
+  /** A batch's stored count-min state: its counters stamped with the
+    * (width, depth) they were hashed at — the columns
+    * [[requireCmParams]] reads back. */
+  private def cmState(docs: DataFrame, textCol: String, width: Int,
+      depth: Int, group: Option[String]): DataFrame =
+    withCmParams(countMinCounters(docs, textCol, width, depth, group),
+      width, depth)
+
+  private def withCmParams(state: DataFrame, width: Int, depth: Int)
+      : DataFrame =
+    state.withColumn("w", lit(width)).withColumn("dep", lit(depth))
+
+  /** PERSIST the count-min counter table (qf4; the per-source qfb
+    * counters with `group`) — the heavy-hitter sketch joining the
+    * persisted tier under the shared [[MergeTables]] protocol. Counts
+    * are SUM-monoid state, so the tier gets the FULL maintenance
+    * lifecycle of the quantile sketch: single-file generation appends
+    * whose cost is independent of both corpus and archive size
+    * ([[appendCountMinTable]]), deletion by additive retraction
+    * ([[retractCountMinDocs]] — negated counts cancel at the probe-time
+    * sum; over-retraction fails loudly), compaction through the probe's
+    * own merge ([[compactCountMinTable]]), and streamed appends under
     * deterministic per-batch commit keys
-    * ([[startStreamAppendCountMinTable]] — the additive monoid is where a
-    * replayed micro-batch double-counts, so the key must ride the
-    * generation's rows). The persisted artifact is depth × width rows
-    * REGARDLESS of corpus size — the cheapest of the persisted tiers
-    * by far. */
+    * ([[startStreamAppendCountMinTable]] — the additive monoid is where
+    * a replayed micro-batch double-counts, so the key must ride the
+    * generation's rows). Every later call's params and grouping must
+    * match the table's ([[requireCmParams]],
+    * [[MergeTables.requireGrouping]]). The persisted artifact is
+    * depth × width rows per group REGARDLESS of corpus size — the
+    * cheapest of the persisted tiers by far. */
   def writeCountMinTable(docs: DataFrame, textCol: String,
-      table: String, width: Int = 1024, depth: Int = 4): Unit =
-    MergeTables.write(
-      countMinCounters(docs, textCol, width, depth)
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)),
-      "b", table)
+      table: String, width: Int = 1024, depth: Int = 4,
+      group: Option[String] = None): Unit =
+    MergeTables.write(cmState(docs, textCol, width, depth, group), "b",
+      table)
 
   /** The (width, depth) every stored generation was hashed with —
     * exactly one pair by the [[requireCmParams]] discipline; mixed
@@ -1304,7 +1335,7 @@ object TextAnalysis {
     * this tier: a mismatched probe would hash tokens into coordinates
     * the counters never counted and return silently-wrong estimates;
     * a mismatched append would poison every future probe. */
-  private[graft] def requireCmParams(spark: SparkSession, table: String,
+  private def requireCmParams(spark: SparkSession, table: String,
       width: Int, depth: Int): Unit = {
     val (w, d) = cmParamsOf(spark, table)
     require(w == width && d == depth,
@@ -1314,38 +1345,46 @@ object TextAnalysis {
         "counted; use the stored params or rebuild")
   }
 
+  /** The params and grouping guards every row-taking count-min call
+    * runs before it lands or probes anything. */
+  private[graft] def requireCmTable(spark: SparkSession, table: String,
+      width: Int, depth: Int, grouped: Boolean): Unit = {
+    MergeTables.requireGrouping(spark, table, grouped)
+    requireCmParams(spark, table, width, depth)
+  }
+
   /** Append a batch's counters as one more generation — see
-    * [[writeCountMinTable]]. Refuses params that differ from the
-    * stored generations' ([[requireCmParams]]). */
+    * [[writeCountMinTable]]. */
   def appendCountMinTable(docs: DataFrame, textCol: String,
-      table: String, width: Int = 1024, depth: Int = 4): Unit = {
-    requireCmParams(docs.sparkSession, table, width, depth)
-    MergeTables.append(
-      countMinCounters(docs, textCol, width, depth)
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)), table)
+      table: String, width: Int = 1024, depth: Int = 4,
+      group: Option[String] = None): Unit = {
+    requireCmTable(docs.sparkSession, table, width, depth,
+      group.isDefined)
+    MergeTables.append(cmState(docs, textCol, width, depth, group), table)
   }
 
   /** DELETE documents from a persisted count-min table by additive
     * retraction: their token counts land negated and cancel exactly at
     * the probe-time sum — see [[writeCountMinTable]]. CONTRACT: `docs`
     * must have been added (the [[MergeTables.mergedSum]] negative
-    * guard fails loudly otherwise), and the params must match the
-    * stored generations' ([[requireCmParams]]). */
+    * guard fails loudly otherwise). */
   def retractCountMinDocs(docs: DataFrame, textCol: String,
-      table: String, width: Int = 1024, depth: Int = 4): Unit = {
-    requireCmParams(docs.sparkSession, table, width, depth)
-    MergeTables.append(
-      countMinCounters(docs, textCol, width, depth)
-        .withColumn("c", -col("c"))
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)), table)
+      table: String, width: Int = 1024, depth: Int = 4,
+      group: Option[String] = None): Unit = {
+    requireCmTable(docs.sparkSession, table, width, depth,
+      group.isDefined)
+    MergeTables.append(cmState(docs, textCol, width, depth, group)
+      .withColumn("c", -col("c")), table)
   }
 
-  /** The probe-time merged counter table — bit-equal to
-    * [[countMinCounters]] over the surviving corpus (qf4's gate).
-    * Param columns merge out here (the guard lives in the
+  /** The probe-time merged counter table — `([g,] h, b, c)`, per group
+    * when the table is grouped (read from its stored schema) —
+    * bit-equal to [[countMinCounters]] over the surviving corpus (qf4's
+    * gate). Param columns merge out here (the guard lives in the
     * param-taking probes and maintenance ops). */
   def countMinFromTable(spark: SparkSession, table: String): DataFrame =
-    MergeTables.mergedSum(spark, table, Seq("h", "b"), "c")
+    MergeTables.mergedSum(spark, table,
+      MergeTables.groupKeys(spark, table) :+ "h" :+ "b", "c")
 
   /** Collapse all generations into one gen-0 file — see
     * [[writeCountMinTable]] and [[MergeTables.compact]]. The stored
@@ -1354,8 +1393,7 @@ object TextAnalysis {
   def compactCountMinTable(spark: SparkSession, table: String): Unit = {
     val (w, d) = cmParamsOf(spark, table)
     MergeTables.compact(spark, table, "b",
-      countMinFromTable(spark, table)
-        .withColumn("w", lit(w)).withColumn("dep", lit(d)))
+      withCmParams(countMinFromTable(spark, table), w, d))
   }
 
   /** [[compactCountMinTable]] iff more than `maxGen` generations
@@ -1367,88 +1405,24 @@ object TextAnalysis {
     MergeTables.maybeCompactWith(spark, table, maxGen)(
       compactCountMinTable(spark, table))
 
-  /** Heavy-hitter top-k SERVED FROM the persisted counter table (qf5)
-    * — [[countMinTopK]]'s estimate leg over [[countMinFromTable]]'s
-    * merged counters instead of a fresh corpus scan: the sketch is
-    * maintained incrementally (appends/retractions/streams) and probes
-    * pay only the vocabulary pass of the probe-side docs plus a
-    * broadcast of the bounded counter table. */
+  /** Heavy-hitter top-k SERVED FROM the persisted counter table (qf5;
+    * per group, qfb) — [[countMinTopK]]'s estimate leg over
+    * [[countMinFromTable]]'s merged counters instead of a fresh corpus
+    * scan: the sketch is maintained incrementally
+    * (appends/retractions/streams) and probes pay only the vocabulary
+    * pass of the probe-side docs plus a broadcast of the bounded
+    * counter table. A grouped table is probed per group: `group` names
+    * the probe-side docs' group column, and the cut is per group by
+    * the deterministic (est desc, tok) order, returning
+    * `(g, tok, est)`. */
   def countMinTopKIndexed(vocabDocs: DataFrame, textCol: String,
-      table: String, k: Int, width: Int = 1024, depth: Int = 4)
-      : DataFrame = {
+      table: String, k: Int, width: Int = 1024, depth: Int = 4,
+      group: Option[String] = None): DataFrame = {
     require(k > 0, s"k=$k")
-    requireCmParams(vocabDocs.sparkSession, table, width, depth)
-    cmTopKFromCounters(vocabDocs,
-      countMinFromTable(vocabDocs.sparkSession, table), textCol, k,
-      width, depth)
-  }
-
-  /** PER-GROUP count-min counters — one bounded `depth × width`
-    * counter table per group key (sources, languages; bounded domains,
-    * the qe7 discipline): the per-source token-frequency profile of a
-    * dataset card, at `groups × depth × width` state regardless of
-    * corpus size. Same seeded [[cmCoords]] as the ungrouped sketch, so
-    * the two cannot hash differently. */
-  def groupedCountMinCounters(docs: DataFrame, groupCol: String,
-      textCol: String, width: Int = 1024, depth: Int = 4): DataFrame = {
-    require(width > 0 && depth > 0, s"w=$width d=$depth")
-    docs.select(col(groupCol).as("g"),
-        explode(words(col(textCol))).as("tok"))
-      .select(col("g"), explode(cmCoords(width, depth)).as("x"))
-      .groupBy(col("g"), col("x.h").as("h"), col("x.b").as("b"))
-      .agg(count(lit(1)).as("c"))
-  }
-
-  /** PERSIST the grouped counters (qfb) — [[writeCountMinTable]]'s
-    * lifecycle per group under the shared [[MergeTables]] protocol,
-    * including the stored-params guard. */
-  def writeGroupedCountMinTable(docs: DataFrame, groupCol: String,
-      textCol: String, table: String, width: Int = 1024,
-      depth: Int = 4): Unit =
-    MergeTables.write(
-      groupedCountMinCounters(docs, groupCol, textCol, width, depth)
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)),
-      "b", table)
-
-  /** Append a batch's grouped counters — see
-    * [[writeGroupedCountMinTable]]; mismatched params refused. */
-  def appendGroupedCountMinTable(docs: DataFrame, groupCol: String,
-      textCol: String, table: String, width: Int = 1024,
-      depth: Int = 4): Unit = {
-    requireCmParams(docs.sparkSession, table, width, depth)
-    MergeTables.append(
-      groupedCountMinCounters(docs, groupCol, textCol, width, depth)
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)), table)
-  }
-
-  /** Retract documents from the grouped counters — additive, per
-    * group; over-retraction fails loudly ([[MergeTables.mergedSum]]),
-    * mismatched params refused. */
-  def retractGroupedCountMinDocs(docs: DataFrame, groupCol: String,
-      textCol: String, table: String, width: Int = 1024,
-      depth: Int = 4): Unit = {
-    requireCmParams(docs.sparkSession, table, width, depth)
-    MergeTables.append(
-      groupedCountMinCounters(docs, groupCol, textCol, width, depth)
-        .withColumn("c", -col("c"))
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)), table)
-  }
-
-  /** The probe-time merged grouped counters — bit-equal to
-    * [[groupedCountMinCounters]] over the surviving corpus. */
-  def groupedCountMinFromTable(spark: SparkSession, table: String)
-      : DataFrame =
-    MergeTables.mergedSum(spark, table, Seq("g", "h", "b"), "c")
-
-  /** Collapse the grouped counter generations — see
-    * [[MergeTables.compact]]; the stored params ride through the
-    * rewrite. */
-  def compactGroupedCountMinTable(spark: SparkSession, table: String)
-      : Unit = {
-    val (w, d) = cmParamsOf(spark, table)
-    MergeTables.compact(spark, table, "b",
-      groupedCountMinFromTable(spark, table)
-        .withColumn("w", lit(w)).withColumn("dep", lit(d)))
+    val spark = vocabDocs.sparkSession
+    requireCmTable(spark, table, width, depth, group.isDefined)
+    cmTopKFromCounters(vocabDocs, group, countMinFromTable(spark, table),
+      textCol, k, width, depth)
   }
 
   /** TAKEDOWN whole groups from the maintained grouped counters using
@@ -1465,50 +1439,14 @@ object TextAnalysis {
   def retireCountMinGroups(spark: SparkSession, table: String,
       groups: Seq[String]): Unit = {
     require(groups.nonEmpty, "no groups to retire")
+    MergeTables.requireGrouping(spark, table, grouped = true)
     val (w, d) = cmParamsOf(spark, table)
-    val expired = groupedCountMinFromTable(spark, table)
-      .filter(col("g").isin(groups: _*))
-      .withColumn("c", -col("c"))
-      .withColumn("w", lit(w)).withColumn("dep", lit(d))
+    val expired = withCmParams(countMinFromTable(spark, table)
+        .filter(col("g").isin(groups: _*))
+        .withColumn("c", -col("c")), w, d)
       .localCheckpoint()
     if (!expired.isEmpty)
       MergeTables.append(expired, table)
-  }
-
-  /** [[compactGroupedCountMinTable]] under the generation-count
-    * policy. */
-  def maybeCompactGroupedCountMinTable(spark: SparkSession,
-      table: String, maxGen: Int = MergeTables.defaultMaxGen): Boolean =
-    MergeTables.maybeCompactWith(spark, table, maxGen)(
-      compactGroupedCountMinTable(spark, table))
-
-  /** PER-GROUP heavy-hitter top-k SERVED from the maintained grouped
-    * counters (qfb): per group, the k tokens with the largest
-    * min-over-counters estimates, cut by the deterministic
-    * (est desc, tok) order — the per-source frequency profile of a
-    * dataset card, maintained incrementally instead of recomputed per
-    * run. The per-group cut is a row_number window partitioned by the
-    * group (bounded rows per partition: the group's vocabulary). */
-  def groupedCountMinTopKIndexed(vocabDocs: DataFrame,
-      groupCol: String, textCol: String, table: String, k: Int,
-      width: Int = 1024, depth: Int = 4): DataFrame = {
-    require(k > 0, s"k=$k")
-    requireCmParams(vocabDocs.sparkSession, table, width, depth)
-    import org.apache.spark.sql.expressions.Window
-    val cs = groupedCountMinFromTable(vocabDocs.sparkSession, table)
-      .select(col("g").as("cg"), col("h").as("ch"), col("b").as("cb"),
-        col("c"))
-    vocabDocs.select(col(groupCol).as("g"),
-        explode(words(col(textCol))).as("tok")).distinct()
-      .select(col("g"), col("tok"),
-        explode(cmCoords(width, depth)).as("x"))
-      .join(broadcast(cs),
-        col("g") === col("cg") && col("x.h") === col("ch") &&
-          col("x.b") === col("cb"))
-      .groupBy("g", "tok").agg(min("c").as("est"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("g").orderBy(col("est").desc, col("tok"))))
-      .filter(col("rn") <= k).drop("rn")
   }
 
   /** Per-group estimates for a FIXED, literal token list, served from
@@ -1525,9 +1463,9 @@ object TextAnalysis {
       tokens: Seq[String], width: Int = 1024, depth: Int = 4)
       : DataFrame = {
     require(tokens.nonEmpty, "no audit tokens")
-    requireCmParams(spark, table, width, depth)
+    requireCmTable(spark, table, width, depth, grouped = true)
     import spark.implicits._
-    val cs = groupedCountMinFromTable(spark, table)
+    val cs = countMinFromTable(spark, table)
       .select(col("g").as("cg"), col("h").as("ch"), col("b").as("cb"),
         col("c"))
     val coords = tokens.toDF("tok")
@@ -1541,44 +1479,31 @@ object TextAnalysis {
       .groupBy("g", "tok").agg(min(coalesce(col("c"), lit(0L))).as("est"))
   }
 
-  /** [[appendGroupedCountMinTable]] with the DOCUMENTS ARRIVING AS A
-    * STREAM — the shared keyed loop ([[MergeTables.streamAppend]]),
-    * one grouped counter generation per micro-batch; mismatched params
-    * refused at start, before any batch lands. Returns the started
-    * query; the caller owns the trigger cadence. */
-  def startStreamAppendGroupedCountMinTable(docStream: DataFrame,
-      groupCol: String, textCol: String, table: String,
-      width: Int = 1024, depth: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    requireCmParams(docStream.sparkSession, table, width, depth)
-    MergeTables.streamAppend(docStream, table)(
-      groupedCountMinCounters(_, groupCol, textCol, width, depth)
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)))
-  }
-
   /** The per-micro-batch body of [[startStreamAppendCountMinTable]],
-    * exposed for the replay spec — the sketch-tier discipline
+    * exposed for the replay spec and [[DatasetCard.maintainBatch]] —
+    * the sketch-tier discipline
     * ([[graft.pipeline.Sketches.streamAppendSketchBatch]]): skip a
     * micro-batch whose deterministic key already committed. */
   private[graft] def streamAppendCountMinBatch(batch: DataFrame,
       batchId: Long, textCol: String, table: String, width: Int,
-      depth: Int, lineage: Long = 0L): Unit =
+      depth: Int, lineage: Long = 0L, group: Option[String] = None)
+      : Unit =
     MergeTables.appendBatch(batch, batchId, table, lineage)(
-      countMinCounters(_, textCol, width, depth)
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)))
+      cmState(_, textCol, width, depth, group))
 
   /** [[appendCountMinTable]] with the DOCUMENTS ARRIVING AS A STREAM:
     * one counter generation per micro-batch under a deterministic
     * per-lineage commit key (replay no-op spec-gated); mismatched
-    * params refused at start, before any batch lands. Returns the
-    * started query; the caller owns the trigger cadence. */
+    * params or grouping refused at start, before any batch lands.
+    * Returns the started query; the caller owns the trigger cadence. */
   def startStreamAppendCountMinTable(docStream: DataFrame,
-      textCol: String, table: String, width: Int = 1024, depth: Int = 4)
+      textCol: String, table: String, width: Int = 1024, depth: Int = 4,
+      group: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    requireCmParams(docStream.sparkSession, table, width, depth)
+    requireCmTable(docStream.sparkSession, table, width, depth,
+      group.isDefined)
     MergeTables.streamAppend(docStream, table)(
-      countMinCounters(_, textCol, width, depth)
-        .withColumn("w", lit(width)).withColumn("dep", lit(depth)))
+      cmState(_, textCol, width, depth, group))
   }
 
   /** Per-source token-length distribution audit (q96) — the dataset-card

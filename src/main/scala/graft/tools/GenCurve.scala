@@ -149,8 +149,8 @@ object GenCurve {
           (expr("unix_timestamp(ts) div 3600") +
             col("rep") * 1000000L).as("g"),
           floor(col("value") * 100 + 0.5).cast("long").as("v"))
-      graft.pipeline.Sketches.writeGroupedSketchTable(
-        evh, col("g"), col("v"), tbl)
+      graft.pipeline.Sketches.writeSketchTable(
+        evh, col("v"), tbl, group = Some(col("g")))
       val groups = spark.table(tbl).select("g").distinct().count()
       val cutoff = spark.table(tbl).agg(min("g")).head().getLong(0) +
         240L
@@ -187,14 +187,14 @@ object GenCurve {
       val tbl = s"gc_ol_$mg"
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}_hwm")
-      graft.pipeline.Sketches.writeGroupedSketchTable(
-        batches(0), col("g"), col("v"), tbl)
+      graft.pipeline.Sketches.writeSketchTable(
+        batches(0), col("v"), tbl, group = Some(col("g")))
       val t0 = System.nanoTime()
       for ((b, i) <- batches.zipWithIndex.drop(1)) {
-        graft.pipeline.Sketches.streamAppendGroupedSketchBatch(
-          b, i.toLong, col("g"), col("v"), tbl, lineage = 1L)
+        graft.pipeline.Sketches.streamAppendSketchBatch(
+          b, i.toLong, col("v"), tbl, lineage = 1L, group = Some(col("g")))
         if (mg > 0)
-          graft.pipeline.Sketches.maybeCompactGroupedSketchTable(
+          graft.pipeline.Sketches.maybeCompactSketchTable(
             spark, tbl, mg)
       }
       val perBatch = (System.nanoTime() - t0) / 1e9 / 39

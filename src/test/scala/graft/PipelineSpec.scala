@@ -2410,11 +2410,11 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
       // the grouped tier shares the guard
       val gdocs = Seq(("s1", 0L, "a a b")).toDF("source", "doc_id",
         "text")
-      TextAnalysis.writeGroupedCountMinTable(gdocs, "source", "text",
-        "gcm_pg_t", width = 64, depth = 3)
+      TextAnalysis.writeCountMinTable(gdocs, "text", "gcm_pg_t", width = 64,
+        depth = 3, group = Some("source"))
       val eg = intercept[IllegalArgumentException] {
-        TextAnalysis.groupedCountMinTopKIndexed(gdocs, "source",
-          "text", "gcm_pg_t", k = 3, width = 128, depth = 3)
+        TextAnalysis.countMinTopKIndexed(gdocs, "text", "gcm_pg_t", k = 3,
+          width = 128, depth = 3, group = Some("source"))
       }
       assert(eg.getMessage.contains("do not match"))
       // the auto-compaction policy on this tier preserves the guard:
@@ -2451,25 +2451,24 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
       ("s1", 0L, "a a a b c"), ("s1", 2L, "a b b"),
       ("s2", 3L, "x z z z")).toDF("source", "doc_id", "text")
     try {
-      TextAnalysis.writeGroupedCountMinTable(base, "source", "text",
-        "gcm_lc_t", width = 64, depth = 3)
-      TextAnalysis.appendGroupedCountMinTable(extra, "source", "text",
-        "gcm_lc_t", width = 64, depth = 3)
-      TextAnalysis.retractGroupedCountMinDocs(gone, "source", "text",
-        "gcm_lc_t", width = 64, depth = 3)
-      TextAnalysis.compactGroupedCountMinTable(spark, "gcm_lc_t")
-      val merged = TextAnalysis.groupedCountMinFromTable(spark,
-          "gcm_lc_t")
+      TextAnalysis.writeCountMinTable(base, "text", "gcm_lc_t", width = 64,
+        depth = 3, group = Some("source"))
+      TextAnalysis.appendCountMinTable(extra, "text", "gcm_lc_t", width = 64,
+        depth = 3, group = Some("source"))
+      TextAnalysis.retractCountMinDocs(gone, "text", "gcm_lc_t", width = 64,
+        depth = 3, group = Some("source"))
+      TextAnalysis.compactCountMinTable(spark, "gcm_lc_t")
+      val merged = TextAnalysis.countMinFromTable(spark, "gcm_lc_t")
         .as[(String, Long, Long, Long)].collect().sorted.toSeq
-      val direct = TextAnalysis.groupedCountMinCounters(survivors,
-          "source", "text", width = 64, depth = 3)
+      val direct = TextAnalysis.countMinCounters(survivors, "text",
+        width = 64, depth = 3, group = Some("source"))
         .as[(String, Long, Long, Long)].collect().sorted.toSeq
       assert(direct.nonEmpty && merged == direct,
         "maintained grouped counters diverged from the one-shot")
       // per-group top-2 at a collision-free width: exact counts, and
       // the (est desc, tok) cut per group
-      val top = TextAnalysis.groupedCountMinTopKIndexed(survivors,
-          "source", "text", "gcm_lc_t", k = 2, width = 64, depth = 3)
+      val top = TextAnalysis.countMinTopKIndexed(survivors, "text",
+        "gcm_lc_t", k = 2, width = 64, depth = 3, group = Some("source"))
         .as[(String, String, Long)].collect().sorted.toSeq
       assert(top == Seq(
         ("s1", "a", 4L), ("s1", "b", 3L),
@@ -3534,17 +3533,18 @@ class SamplesSpec extends AnyFunSuite with SparkTest {
     }
     val (a, b) = rows.splitAt(300)
     try {
-      Samples.writeGroupedSampleTable(
-        a.toDF("source", "doc_id", "text"), "source", "doc_id", 5,
-        "gsmp_lc_t")
-      Samples.appendGroupedSampleTable(
-        b.toDF("source", "doc_id", "text"), "source", "doc_id", 5,
-        "gsmp_lc_t")
-      Samples.compactGroupedSampleTable(spark, "gsmp_lc_t", 5)
-      val probed = Samples.groupedSampleFromTable(spark, "gsmp_lc_t", 5)
+      Samples.writeSampleTable(
+        a.toDF("source", "doc_id", "text"), "doc_id", 5, "gsmp_lc_t",
+        group = Some("source"))
+      Samples.appendSampleTable(
+        b.toDF("source", "doc_id", "text"), "doc_id", 5, "gsmp_lc_t",
+        group = Some("source"))
+      Samples.compactSampleTable(spark, "gsmp_lc_t", 5)
+      val probed = Samples.sampleFromTable(spark, "gsmp_lc_t", 5)
         .as[(String, Long, Long)].collect().sorted.toSeq
-      val oneShot = Samples.groupedHashSampleTopK(
-          rows.toDF("source", "doc_id", "text"), "source", "doc_id", 5)
+      val oneShot = Samples.hashSampleTopK(
+        rows.toDF("source", "doc_id", "text"), "doc_id", 5,
+        group = Some("source"))
         .as[(String, Long, Long)].collect().sorted.toSeq
       assert(probed == oneShot)
       assert(probed.map(_._1).distinct.size == 4, "a source vanished")
@@ -3639,15 +3639,15 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("groupedLogBucketQuantiles: per-group estimates bracket each group's exact order statistic") {
+  test("logBucketQuantiles with a group: per-group estimates bracket each group's exact order statistic") {
     // qe7's law: the grouped sketch is the ungrouped sketch applied
     // within each key — estimates bracket each group's own exact
     // percentile, and a group never sees another group's values
     val rows = vals.zipWithIndex.map { case (v, i) =>
       (if (i % 3 == 0) "a" else if (i % 3 == 1) "b" else "c", v)
     }
-    val est = graft.pipeline.Sketches.groupedLogBucketQuantiles(
-        rows.toDF("g", "v"), col("g"), col("v"), Seq(50, 99))
+    val est = graft.pipeline.Sketches.logBucketQuantiles(
+      rows.toDF("g", "v"), col("v"), Seq(50, 99), group = Some(col("g")))
       .as[(String, Int, Long, Long, Long)].collect()
     assert(est.map(_._1).toSet == Set("a", "b", "c"))
     val byGroup = rows.groupBy(_._1).map { case (g, vs) =>
@@ -3809,18 +3809,18 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
     val retract = rows.filter(_._2 % 5 == 2)
     val survive = rows.filterNot(_._2 % 5 == 2)
     try {
-      Sketches.writeGroupedSketchTable(
-        x.toDF("g", "v"), col("g"), col("v"), "gsk_lc_t")
-      Sketches.appendGroupedSketchTable(
-        y.toDF("g", "v"), col("g"), col("v"), "gsk_lc_t")
-      Sketches.retractGroupedSketchTable(
-        retract.toDF("g", "v"), col("g"), col("v"), "gsk_lc_t")
-      Sketches.compactGroupedSketchTable(spark, "gsk_lc_t")
-      val probed = Sketches.groupedQuantilesFromSketchTable(
-          spark, "gsk_lc_t", Seq(50, 99))
+      Sketches.writeSketchTable(
+        x.toDF("g", "v"), col("v"), "gsk_lc_t", group = Some(col("g")))
+      Sketches.appendSketchTable(
+        y.toDF("g", "v"), col("v"), "gsk_lc_t", group = Some(col("g")))
+      Sketches.retractSketchTable(
+        retract.toDF("g", "v"), col("v"), "gsk_lc_t", group = Some(col("g")))
+      Sketches.compactSketchTable(spark, "gsk_lc_t")
+      val probed = Sketches.quantilesFromSketchTable(
+        spark, "gsk_lc_t", Seq(50, 99))
         .as[(String, Int, Long, Long, Long)].collect().sorted.toSeq
-      val oneShot = Sketches.groupedLogBucketQuantiles(
-          survive.toDF("g", "v"), col("g"), col("v"), Seq(50, 99))
+      val oneShot = Sketches.logBucketQuantiles(
+        survive.toDF("g", "v"), col("v"), Seq(50, 99), group = Some(col("g")))
         .as[(String, Int, Long, Long, Long)].collect().sorted.toSeq
       assert(oneShot.map(_._1).toSet == Set("a", "b", "c"))
       assert(probed == oneShot,
@@ -3881,17 +3881,17 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
       (i.toLong % 10, (i.toLong * 2654435761L) % 100000L + 1L))
     val (a, b) = rows.splitAt(600)
     try {
-      Sketches.writeGroupedSketchTable(a.toDF("g", "v"), col("g"),
-        col("v"), "gsk_ret_t")
-      Sketches.appendGroupedSketchTable(b.toDF("g", "v"), col("g"),
-        col("v"), "gsk_ret_t")
+      Sketches.writeSketchTable(a.toDF("g", "v"), col("v"), "gsk_ret_t",
+        group = Some(col("g")))
+      Sketches.appendSketchTable(b.toDF("g", "v"), col("v"), "gsk_ret_t",
+        group = Some(col("g")))
       Sketches.retireGroupsBefore(spark, "gsk_ret_t", 4L)
-      def probe() = Sketches.groupedQuantilesFromSketchTable(
+      def probe() = Sketches.quantilesFromSketchTable(
           spark, "gsk_ret_t", Seq(50, 99))
         .as[(Long, Int, Long, Long, Long)].collect().sorted.toSeq
-      val oneShot = Sketches.groupedLogBucketQuantiles(
-          rows.filter(_._1 >= 4L).toDF("g", "v"), col("g"), col("v"),
-          Seq(50, 99))
+      val oneShot = Sketches.logBucketQuantiles(
+        rows.filter(_._1 >= 4L).toDF("g", "v"), col("v"), Seq(50, 99),
+        group = Some(col("g")))
         .as[(Long, Int, Long, Long, Long)].collect().sorted.toSeq
       assert(oneShot.map(_._1).distinct.sorted == (4L to 9L))
       assert(probe() == oneShot,
@@ -3900,7 +3900,7 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
       Sketches.retireGroupsBefore(spark, "gsk_ret_t", 4L)
       assert(probe() == oneShot)
       // compaction removes the expired groups PHYSICALLY
-      Sketches.compactGroupedSketchTable(spark, "gsk_ret_t")
+      Sketches.compactSketchTable(spark, "gsk_ret_t")
       assert(spark.table("gsk_ret_t").filter(col("g") < 4L).count() == 0,
         "expired groups still on disk after compaction")
       assert(probe() == oneShot)
@@ -3910,14 +3910,14 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
       // — retention is re-applied by the maintenance loop, exactly
       // like compaction
       val late = Seq((2L, 42L), (2L, 77L))
-      Sketches.appendGroupedSketchTable(late.toDF("g", "v"), col("g"),
-        col("v"), "gsk_ret_t")
-      val lateProbe = Sketches.groupedQuantilesFromSketchTable(
-          spark, "gsk_ret_t", Seq(50, 99))
+      Sketches.appendSketchTable(late.toDF("g", "v"), col("v"), "gsk_ret_t",
+        group = Some(col("g")))
+      val lateProbe = Sketches.quantilesFromSketchTable(
+        spark, "gsk_ret_t", Seq(50, 99))
         .as[(Long, Int, Long, Long, Long)].collect().sorted.toSeq
-      val lateOneShot = Sketches.groupedLogBucketQuantiles(
-          (rows.filter(_._1 >= 4L) ++ late).toDF("g", "v"), col("g"),
-          col("v"), Seq(50, 99))
+      val lateOneShot = Sketches.logBucketQuantiles(
+        (rows.filter(_._1 >= 4L) ++ late).toDF("g", "v"), col("v"),
+        Seq(50, 99), group = Some(col("g")))
         .as[(Long, Int, Long, Long, Long)].collect().sorted.toSeq
       assert(lateProbe == lateOneShot,
         "late arrival into a retired group did not land exactly")
@@ -3928,9 +3928,9 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
       // the profile equals the one-shot without it (takedown on this
       // tier, the qfe story)
       Sketches.retireGroups(spark, "gsk_ret_t", Seq(7L))
-      val without7 = Sketches.groupedLogBucketQuantiles(
-          rows.filter(r => r._1 >= 4L && r._1 != 7L).toDF("g", "v"),
-          col("g"), col("v"), Seq(50, 99))
+      val without7 = Sketches.logBucketQuantiles(
+        rows.filter(r => r._1 >= 4L && r._1 != 7L).toDF("g", "v"), col("v"),
+        Seq(50, 99), group = Some(col("g")))
         .as[(Long, Int, Long, Long, Long)].collect().sorted.toSeq
       assert(probe() == without7,
         "named-group takedown diverged from the one-shot without it")
@@ -4123,13 +4123,13 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
     try {
       ValueAggregators.writeHllTable(toks(df), col("source"),
         col("tok"), "nt_hll_t")
-      Samples.writeGroupedSampleTable(df, "source", "doc_id", 2,
-        "nt_smp_t")
+      Samples.writeSampleTable(df, "doc_id", 2, "nt_smp_t",
+        group = Some("source"))
       val hllBefore = ValueAggregators
         .hllEstimateFromTable(spark, "nt_hll_t")
         .filter(col("key").isNull).as[(String, Long)].collect().toSeq
       val smpBefore = Samples
-        .groupedSampleFromTable(spark, "nt_smp_t", 2)
+        .sampleFromTable(spark, "nt_smp_t", 2)
         .filter(col("g").isNull)
         .as[(String, Long, Long)].collect().sortBy(_._2).toSeq
       assert(hllBefore.nonEmpty && smpBefore.nonEmpty,
@@ -4140,7 +4140,7 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
         .hllEstimateFromTable(spark, "nt_hll_t")
         .filter(col("key").isNull).as[(String, Long)].collect().toSeq
       val smpAfter = Samples
-        .groupedSampleFromTable(spark, "nt_smp_t", 2)
+        .sampleFromTable(spark, "nt_smp_t", 2)
         .filter(col("g").isNull)
         .as[(String, Long, Long)].collect().sortBy(_._2).toSeq
       assert(hllAfter == hllBefore,
@@ -4183,31 +4183,32 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
     def probes(): (Seq[(String, Int, Long, Long, Long)],
         Seq[(String, Long, Long, Long)], Seq[(String, Long)],
         Seq[(String, Long, Long)]) = (
-      Sketches.groupedQuantilesFromSketchTable(spark, ts(0), Seq(50, 99))
+      Sketches.quantilesFromSketchTable(spark, ts(0), Seq(50, 99))
         .as[(String, Int, Long, Long, Long)].collect().sorted.toSeq,
       MergeTables.mergedSum(spark, ts(1), Seq("g", "h", "b"), "c")
         .as[(String, Long, Long, Long)].collect().sorted.toSeq,
       ValueAggregators.hllEstimateFromTable(spark, ts(2))
         .as[(String, Long)].collect().sorted.toSeq,
-      Samples.groupedSampleFromTable(spark, ts(3), 3)
+      Samples.sampleFromTable(spark, ts(3), 3)
         .as[(String, Long, Long)].collect().sorted.toSeq)
     try {
       val (lo, hi) = (all.filter(col("doc_id") < 30),
         all.filter(col("doc_id") >= 30))
-      Sketches.writeGroupedSketchTable(lo, col("source"),
-        length(col("text")), ts(0))
-      Sketches.appendGroupedSketchTable(hi, col("source"),
-        length(col("text")), ts(0))
-      graft.pipeline.TextAnalysis.writeGroupedCountMinTable(lo,
-        "source", "text", ts(1), width = 64, depth = 3)
-      graft.pipeline.TextAnalysis.appendGroupedCountMinTable(hi,
-        "source", "text", ts(1), width = 64, depth = 3)
+      Sketches.writeSketchTable(lo, length(col("text")), ts(0),
+        group = Some(col("source")))
+      Sketches.appendSketchTable(hi, length(col("text")), ts(0),
+        group = Some(col("source")))
+      graft.pipeline.TextAnalysis.writeCountMinTable(lo, "text", ts(1),
+        width = 64, depth = 3, group = Some("source"))
+      graft.pipeline.TextAnalysis.appendCountMinTable(hi, "text", ts(1),
+        width = 64, depth = 3, group = Some("source"))
       ValueAggregators.writeHllTable(toks(lo), col("source"),
         col("tok"), ts(2))
       ValueAggregators.appendHllTable(toks(hi), col("source"),
         col("tok"), ts(2))
-      Samples.writeGroupedSampleTable(lo, "source", "doc_id", 3, ts(3))
-      Samples.appendGroupedSampleTable(hi, "source", "doc_id", 3, ts(3))
+      Samples.writeSampleTable(lo, "doc_id", 3, ts(3), group = Some("source"))
+      Samples.appendSampleTable(hi, "doc_id", 3, ts(3),
+        group = Some("source"))
       DatasetCard.retireSource(spark, ts(0), ts(1), ts(2), ts(3),
         "src1")
       // (1) physically absent from the STORED rows of every table
@@ -4217,20 +4218,20 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
       assert(storedGroups(ts(3), "g") == Set("src0", "src2"))
       // (2) survivors equal the one-shot over the corpus minus src1
       val (len1, cm1, hll1, smp1) = probes()
-      val lenOne = Sketches.groupedLogBucketQuantiles(kept,
-          col("source"), length(col("text")), Seq(50, 99))
+      val lenOne = Sketches.logBucketQuantiles(kept, length(col("text")),
+        Seq(50, 99), group = Some(col("source")))
         .as[(String, Int, Long, Long, Long)].collect().sorted.toSeq
       assert(lenOne.nonEmpty && len1 == lenOne)
-      val cmOne = graft.pipeline.TextAnalysis.groupedCountMinCounters(
-          kept, "source", "text", 64, 3)
+      val cmOne = graft.pipeline.TextAnalysis.countMinCounters(
+        kept, "text", 64, 3, group = Some("source"))
         .as[(String, Long, Long, Long)].collect().sorted.toSeq
       assert(cmOne.nonEmpty && cm1 == cmOne)
       val hllOne = ValueAggregators.portableHllEstimate(toks(kept),
           col("source"), col("tok"))
         .as[(String, Long)].collect().sorted.toSeq
       assert(hllOne.nonEmpty && hll1 == hllOne)
-      val smpOne = Samples.groupedHashSampleTopK(kept, "source",
-          "doc_id", 3)
+      val smpOne = Samples.hashSampleTopK(kept, "doc_id", 3,
+        group = Some("source"))
         .as[(String, Long, Long)].collect().sorted.toSeq
       assert(smpOne.nonEmpty && smp1 == smpOne)
       // (3) idempotent: nothing left of src1 to remove
@@ -4243,6 +4244,187 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
         Seq("alpha"), 3, Seq(50, 99), width = 64, depth = 3)
       assert(card.select("source").as[String].collect().sorted.toSeq ==
         Seq("src0", "src2"))
+    } finally {
+      ts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
+  test("one entry point per lifecycle step: a one-constant-group table probes to the ungrouped table's rows plus g on the sketch, count-min and sample tiers, after write, append, retract and compact") {
+    // the ungrouped tier is the zero-key case of the grouped one: with
+    // every row in ONE group, the grouped table's probe through the
+    // SAME function names must be the ungrouped probe's rows with the
+    // group value prepended, at every lifecycle step
+    import graft.pipeline.{Samples, TextAnalysis}
+    import org.apache.spark.sql.DataFrame
+    val docs = (0L until 120L).map(i =>
+      (i, "k", s"w${i % 7} w${i % 3} tok${i % 11}", (i * 7919L) % 5000L))
+    val all = docs.toDF("doc_id", "src", "text", "v")
+    val (a, b) = (all.filter(col("doc_id") < 70),
+      all.filter(col("doc_id") >= 70))
+    val gone = all.filter(col("doc_id") < 70 && col("doc_id") % 5 === 0)
+    val ts = Seq("uni_sk_u", "uni_sk_g", "uni_cm_u", "uni_cm_g",
+      "uni_smp_u", "uni_smp_g")
+    def rows(df: DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def same(u: DataFrame, g: DataFrame, what: String): Unit = {
+      assert(g.columns.toSeq == "g" +: u.columns.toSeq, what)
+      val ur = rows(u)
+      assert(ur.nonEmpty && rows(g) == ur.map("k|" + _), what)
+    }
+    val (sk, cm, smp) = (Some(col("src")), Some("src"), Some("src"))
+    def probeAll(step: String): Unit = {
+      same(Sketches.quantilesFromSketchTable(spark, ts(0), Seq(50, 99)),
+        Sketches.quantilesFromSketchTable(spark, ts(1), Seq(50, 99)),
+        s"sketch probe after $step")
+      same(TextAnalysis.countMinFromTable(spark, ts(2)),
+        TextAnalysis.countMinFromTable(spark, ts(3)),
+        s"count-min counters after $step")
+      same(TextAnalysis.countMinTopKIndexed(all, "text", ts(2), k = 4,
+          width = 64, depth = 3),
+        TextAnalysis.countMinTopKIndexed(all, "text", ts(3), k = 4,
+          width = 64, depth = 3, group = cm),
+        s"count-min top-k after $step")
+      same(Samples.sampleFromTable(spark, ts(4), 6),
+        Samples.sampleFromTable(spark, ts(5), 6),
+        s"sample after $step")
+    }
+    try {
+      // the one-shot builders first: same law, no table
+      same(Sketches.logBucketQuantiles(all, col("v"), Seq(50, 99)),
+        Sketches.logBucketQuantiles(all, col("v"), Seq(50, 99),
+          group = sk), "one-shot sketch")
+      same(TextAnalysis.countMinCounters(all, "text", 64, 3),
+        TextAnalysis.countMinCounters(all, "text", 64, 3, group = cm),
+        "one-shot counters")
+      same(Samples.hashSampleTopK(all, "doc_id", 6),
+        Samples.hashSampleTopK(all, "doc_id", 6, group = smp),
+        "one-shot sample")
+      Sketches.writeSketchTable(a, col("v"), ts(0))
+      Sketches.writeSketchTable(a, col("v"), ts(1), group = sk)
+      TextAnalysis.writeCountMinTable(a, "text", ts(2), 64, 3)
+      TextAnalysis.writeCountMinTable(a, "text", ts(3), 64, 3, group = cm)
+      Samples.writeSampleTable(a, "doc_id", 6, ts(4))
+      Samples.writeSampleTable(a, "doc_id", 6, ts(5), group = smp)
+      probeAll("write")
+      Sketches.appendSketchTable(b, col("v"), ts(0))
+      Sketches.appendSketchTable(b, col("v"), ts(1), group = sk)
+      TextAnalysis.appendCountMinTable(b, "text", ts(2), 64, 3)
+      TextAnalysis.appendCountMinTable(b, "text", ts(3), 64, 3, group = cm)
+      Samples.appendSampleTable(b, "doc_id", 6, ts(4))
+      Samples.appendSampleTable(b, "doc_id", 6, ts(5), group = smp)
+      probeAll("append")
+      // min-k has no inverse, so the sample tier has no retraction
+      Sketches.retractSketchTable(gone, col("v"), ts(0))
+      Sketches.retractSketchTable(gone, col("v"), ts(1), group = sk)
+      TextAnalysis.retractCountMinDocs(gone, "text", ts(2), 64, 3)
+      TextAnalysis.retractCountMinDocs(gone, "text", ts(3), 64, 3,
+        group = cm)
+      probeAll("retract")
+      Sketches.compactSketchTable(spark, ts(0))
+      Sketches.compactSketchTable(spark, ts(1))
+      TextAnalysis.compactCountMinTable(spark, ts(2))
+      TextAnalysis.compactCountMinTable(spark, ts(3))
+      Samples.compactSampleTable(spark, ts(4), 6)
+      Samples.compactSampleTable(spark, ts(5), 6)
+      probeAll("compact")
+      // the stored schemas stay as they were: an ungrouped table has no g
+      ts.grouped(2).foreach { case Seq(u, g) =>
+        assert(spark.table(g).columns.toSeq ==
+          "g" +: spark.table(u).columns.toSeq, s"$u vs $g schema")
+      }
+    } finally {
+      ts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      ts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t}_hwm"))
+    }
+  }
+
+  test("a call whose grouping disagrees with the stored table is refused before anything lands, naming the table and its grouping") {
+    // without the guard a grouped append into an ungrouped table died
+    // inside saveAsTable with Spark's raw column-count error, and a
+    // grouped-only operation on an ungrouped table with an unresolved
+    // column
+    import graft.pipeline.{DatasetCard, MergeTables, Samples, TextAnalysis}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val docs = Seq((0L, "k", "a b a", 5L), (1L, "j", "b c", 9L))
+      .toDF("doc_id", "src", "text", "v")
+    val stream = MemoryStream[(Long, String, String, Long)](spark)
+      .toDF().toDF("doc_id", "src", "text", "v")
+    val ts = Seq("mm_sk_u", "mm_sk_g", "mm_cm_u", "mm_cm_g", "mm_smp_u",
+      "mm_smp_g")
+    def refused(table: String, grouped: Boolean)(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      val said = if (grouped) "is a GROUPED table" else
+        "is an UNGROUPED table"
+      assert(e.getMessage.contains(s"$table $said"), e.getMessage)
+    }
+    val (sk, cm) = (Some(col("src")), Some("src"))
+    try {
+      Sketches.writeSketchTable(docs, col("v"), ts(0))
+      Sketches.writeSketchTable(docs, col("v"), ts(1), group = sk)
+      TextAnalysis.writeCountMinTable(docs, "text", ts(2), 64, 3)
+      TextAnalysis.writeCountMinTable(docs, "text", ts(3), 64, 3,
+        group = cm)
+      Samples.writeSampleTable(docs, "doc_id", 2, ts(4))
+      Samples.writeSampleTable(docs, "doc_id", 2, ts(5), group = cm)
+      // grouped calls into ungrouped tables
+      refused(ts(0), grouped = false)(
+        Sketches.appendSketchTable(docs, col("v"), ts(0), group = sk))
+      refused(ts(0), grouped = false)(
+        Sketches.retractSketchTable(docs, col("v"), ts(0), group = sk))
+      refused(ts(0), grouped = false)(Sketches.startStreamAppendSketchTable(
+        stream, col("v"), ts(0), group = sk))
+      refused(ts(0), grouped = false)(
+        Sketches.retireGroupsBefore(spark, ts(0), 1L))
+      refused(ts(0), grouped = false)(
+        Sketches.retireGroups(spark, ts(0), Seq("k")))
+      refused(ts(2), grouped = false)(TextAnalysis.appendCountMinTable(
+        docs, "text", ts(2), 64, 3, group = cm))
+      refused(ts(2), grouped = false)(TextAnalysis.retractCountMinDocs(
+        docs, "text", ts(2), 64, 3, group = cm))
+      refused(ts(2), grouped = false)(
+        TextAnalysis.startStreamAppendCountMinTable(stream, "text", ts(2),
+          64, 3, group = cm))
+      refused(ts(2), grouped = false)(TextAnalysis.countMinTopKIndexed(
+        docs, "text", ts(2), k = 2, width = 64, depth = 3, group = cm))
+      refused(ts(2), grouped = false)(
+        TextAnalysis.retireCountMinGroups(spark, ts(2), Seq("k")))
+      refused(ts(2), grouped = false)(
+        TextAnalysis.groupedCountMinTokenEstimates(spark, ts(2), Seq("a"),
+          64, 3))
+      refused(ts(4), grouped = false)(
+        Samples.appendSampleTable(docs, "doc_id", 2, ts(4), group = cm))
+      refused(ts(4), grouped = false)(Samples.startStreamAppendSampleTable(
+        stream, "doc_id", 2, ts(4), group = cm))
+      refused(ts(4), grouped = false)(
+        Samples.retireSampleGroups(spark, ts(4), Seq("k")))
+      refused(ts(0), grouped = false)(DatasetCard.startMaintain(stream,
+        ts(0), ts(3), "mm_hll_unused", ts(5), 2, width = 64, depth = 3))
+      // ungrouped calls into grouped tables
+      refused(ts(1), grouped = true)(
+        Sketches.appendSketchTable(docs, col("v"), ts(1)))
+      refused(ts(1), grouped = true)(Sketches.appendSketchTableKeyed(
+        docs, col("v"), ts(1), lineage = 1L, batchId = 0L))
+      refused(ts(1), grouped = true)(
+        Sketches.retractSketchTable(docs, col("v"), ts(1)))
+      refused(ts(1), grouped = true)(
+        Sketches.startStreamAppendSketchTable(stream, col("v"), ts(1)))
+      refused(ts(3), grouped = true)(
+        TextAnalysis.appendCountMinTable(docs, "text", ts(3), 64, 3))
+      refused(ts(3), grouped = true)(
+        TextAnalysis.retractCountMinDocs(docs, "text", ts(3), 64, 3))
+      refused(ts(3), grouped = true)(
+        TextAnalysis.startStreamAppendCountMinTable(stream, "text", ts(3),
+          64, 3))
+      refused(ts(3), grouped = true)(TextAnalysis.countMinTopKIndexed(
+        docs, "text", ts(3), k = 2, width = 64, depth = 3))
+      refused(ts(5), grouped = true)(
+        Samples.appendSampleTable(docs, "doc_id", 2, ts(5)))
+      refused(ts(5), grouped = true)(Samples.startStreamAppendSampleTable(
+        stream, "doc_id", 2, ts(5)))
+      // nothing landed and no query was left running
+      ts.foreach(t =>
+        assert(MergeTables.generationCount(spark, t) == 1L, t))
+      assert(spark.streams.active.isEmpty)
     } finally {
       ts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }

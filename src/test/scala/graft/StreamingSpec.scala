@@ -751,7 +751,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     assert(sunk.toSeq == (1L to 200L), s"got ${sunk.length} rows")
   }
 
-  test("streamAppendIvfAdcIndexSharded: micro-batches route per shard with one generation per (shard, batch); replay marks carry across a reshard") {
+  test("startStreamAppendIvfAdcIndexSharded: micro-batches route per shard with one generation per (shard, batch); replay marks carry across a reshard") {
     // r18 verdict item 5 (+ item 4's mark carry): a corpus streaming
     // into a SHARDED index is the 100 TB default. Gates: (a) two
     // streamed micro-batches through the real query equal the one-shot
@@ -913,7 +913,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("streamAdcTopKSharded: two micro-batches of streamed queries equal the one-shot sharded probe on their union") {
+  test("startStreamAdcTopKSharded: two micro-batches of streamed queries equal the one-shot sharded probe on their union") {
     // qa6's per-batch-rank-is-exact argument on the FAN-OUT tier: each
     // shard's stream-static join emits candidates only for the current
     // batch's probe rows, and the union across shards stays within the
@@ -1589,22 +1589,24 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     def gens(t: String) = spark.table(t).select("gen").distinct().count()
     try {
       val sdf = seed.toDF("doc_id", "source", "text")
-      Sketches.writeGroupedSketchTable(sdf, col("source"),
-        length(col("text")), ts(0))
-      TextAnalysis.writeGroupedCountMinTable(sdf, "source", "text",
-        ts(1), width = 64, depth = 3)
+      Sketches.writeSketchTable(sdf, length(col("text")), ts(0),
+        group = Some(col("source")))
+      TextAnalysis.writeCountMinTable(sdf, "text", ts(1), width = 64,
+        depth = 3, group = Some("source"))
       graft.agg.ValueAggregators.writeHllTable(
         sdf.select(col("source"), explode(
           expr("filter(split(text, ' '), x -> length(x) > 0)"))
           .as("tok")), col("source"), col("tok"), ts(2))
-      Samples.writeGroupedSampleTable(sdf, "source", "doc_id", 3, ts(3))
+      Samples.writeSampleTable(sdf, "doc_id", 3, ts(3),
+        group = Some("source"))
       val batch = streamed.toDF("doc_id", "source", "text")
       // the partial crash: sketch and count-min commit batchId 0 under
       // lineage 9, then the "driver dies"
-      Sketches.streamAppendGroupedSketchBatch(batch, 0L, col("source"),
-        length(col("text")), ts(0), lineage = 9L)
+      Sketches.streamAppendSketchBatch(batch, 0L, length(col("text")), ts(0),
+        lineage = 9L, group = Some(col("source")))
       MergeTables.appendBatch(batch, 0L, ts(1), 9L)(
-        TextAnalysis.groupedCountMinCounters(_, "source", "text", 64, 3)
+        TextAnalysis.countMinCounters(_, "text", 64, 3,
+          group = Some("source"))
           .withColumn("w", lit(64)).withColumn("dep", lit(3)))
       assert(gens(ts(0)) == 2 && gens(ts(1)) == 2 &&
         gens(ts(2)) == 1 && gens(ts(3)) == 1)
@@ -1615,18 +1617,18 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         "partial-crash replay double-landed or skipped a table")
       // value-level: the healed card equals the no-crash one-shot card
       val all = docs.toDF("doc_id", "source", "text")
-      val lenProbe = Sketches.groupedQuantilesFromSketchTable(
-          spark, ts(0), Seq(50, 99))
+      val lenProbe = Sketches.quantilesFromSketchTable(
+        spark, ts(0), Seq(50, 99))
         .as[(String, Int, Long, Long, Long)].collect().sorted.toSeq
-      val lenOne = Sketches.groupedLogBucketQuantiles(all,
-          col("source"), length(col("text")), Seq(50, 99))
+      val lenOne = Sketches.logBucketQuantiles(all, length(col("text")),
+        Seq(50, 99), group = Some(col("source")))
         .as[(String, Int, Long, Long, Long)].collect().sorted.toSeq
       assert(lenOne.nonEmpty && lenProbe == lenOne)
       val cmGrouped = MergeTables.mergedSum(spark, ts(1),
           Seq("g", "h", "b"), "c")
         .as[(String, Long, Long, Long)].collect().sorted.toSeq
-      val cmOne = TextAnalysis.groupedCountMinCounters(all, "source",
-          "text", 64, 3)
+      val cmOne = TextAnalysis.countMinCounters(all, "text", 64, 3,
+        group = Some("source"))
         .as[(String, Long, Long, Long)].collect().sorted.toSeq
       assert(cmOne.nonEmpty && cmGrouped == cmOne)
       val hllProbe = graft.agg.ValueAggregators
@@ -1638,10 +1640,10 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
             .as("tok")), col("source"), col("tok"))
         .as[(String, Long)].collect().sorted.toSeq
       assert(hllOne.nonEmpty && hllProbe == hllOne)
-      val smpProbe = Samples.groupedSampleFromTable(spark, ts(3), 3)
+      val smpProbe = Samples.sampleFromTable(spark, ts(3), 3)
         .as[(String, Long, Long)].collect().sorted.toSeq
-      val smpOne = Samples.groupedHashSampleTopK(all, "source",
-          "doc_id", 3)
+      val smpOne = Samples.hashSampleTopK(all, "doc_id", 3,
+        group = Some("source"))
         .as[(String, Long, Long)].collect().sorted.toSeq
       assert(smpOne.nonEmpty && smpProbe == smpOne)
     } finally {
@@ -1662,20 +1664,22 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     val (b1, b2) = rest.splitAt(200)
     try {
       // grouped sketch
-      Sketches.writeGroupedSketchTable(base.toDF("g", "id", "v"),
-        col("g"), col("v"), "gsk_str_t")
+      Sketches.writeSketchTable(base.toDF("g", "id", "v"), col("v"),
+        "gsk_str_t", group = Some(col("g")))
       val ms = MemoryStream[(String, Long, Long)](spark)
-      val q = Sketches.startStreamAppendGroupedSketchTable(
-        ms.toDF().toDF("g", "id", "v"), col("g"), col("v"), "gsk_str_t")
+      val q = Sketches.startStreamAppendSketchTable(
+        ms.toDF().toDF("g", "id", "v"), col("v"), "gsk_str_t",
+        group = Some(col("g")))
       try {
         ms.addData(b1); q.processAllAvailable()
         ms.addData(b2); q.processAllAvailable()
       } finally q.stop()
-      def probe() = Sketches.groupedQuantilesFromSketchTable(
+      def probe() = Sketches.quantilesFromSketchTable(
           spark, "gsk_str_t", Seq(50, 99))
         .as[(String, Int, Long, Long, Long)].collect().sorted.toSeq
-      val oneShot = Sketches.groupedLogBucketQuantiles(
-          rows.toDF("g", "id", "v"), col("g"), col("v"), Seq(50, 99))
+      val oneShot = Sketches.logBucketQuantiles(
+        rows.toDF("g", "id", "v"), col("v"), Seq(50, 99),
+        group = Some(col("g")))
         .as[(String, Int, Long, Long, Long)].collect().sorted.toSeq
       assert(oneShot.nonEmpty && probe() == oneShot)
       // replay under the run's own lineage, recovered from stored keys
@@ -1684,34 +1688,33 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         .head().getLong(0) -
         graft.pipeline.Similarity.streamBatchKeyBase) >> 28
       val stored = spark.table("gsk_str_t").count()
-      Sketches.streamAppendGroupedSketchBatch(b2.toDF("g", "id", "v"),
-        1L, col("g"), col("v"), "gsk_str_t",
-        lineage = linOf("gsk_str_t"))
+      Sketches.streamAppendSketchBatch(b2.toDF("g", "id", "v"), 1L, col("v"),
+        "gsk_str_t", lineage = linOf("gsk_str_t"), group = Some(col("g")))
       assert(spark.table("gsk_str_t").count() == stored
         && probe() == oneShot,
         "a replayed committed micro-batch changed the grouped sketch")
       // stratified sample
-      Samples.writeGroupedSampleTable(base.toDF("g", "doc_id", "v"),
-        "g", "doc_id", 5, "gsmp_str_t")
+      Samples.writeSampleTable(base.toDF("g", "doc_id", "v"), "doc_id", 5,
+        "gsmp_str_t", group = Some("g"))
       val ms2 = MemoryStream[(String, Long, Long)](spark)
-      val q2 = Samples.startStreamAppendGroupedSampleTable(
-        ms2.toDF().toDF("g", "doc_id", "v"), "g", "doc_id", 5,
-        "gsmp_str_t")
+      val q2 = Samples.startStreamAppendSampleTable(
+        ms2.toDF().toDF("g", "doc_id", "v"), "doc_id", 5, "gsmp_str_t",
+        group = Some("g"))
       try {
         ms2.addData(b1); q2.processAllAvailable()
         ms2.addData(b2); q2.processAllAvailable()
       } finally q2.stop()
-      def sprobe() = Samples.groupedSampleFromTable(spark,
+      def sprobe() = Samples.sampleFromTable(spark,
           "gsmp_str_t", 5)
         .as[(String, Long, Long)].collect().sorted.toSeq
-      val sOneShot = Samples.groupedHashSampleTopK(
-          rows.toDF("g", "doc_id", "v"), "g", "doc_id", 5)
+      val sOneShot = Samples.hashSampleTopK(
+        rows.toDF("g", "doc_id", "v"), "doc_id", 5, group = Some("g"))
         .as[(String, Long, Long)].collect().sorted.toSeq
       assert(sOneShot.nonEmpty && sprobe() == sOneShot)
       val sstored = spark.table("gsmp_str_t").count()
-      Samples.streamAppendGroupedSampleBatch(b2.toDF("g", "doc_id", "v"),
-        1L, "g", "doc_id", 5, "gsmp_str_t",
-        lineage = linOf("gsmp_str_t"))
+      Samples.streamAppendSampleBatch(b2.toDF("g", "doc_id", "v"), 1L,
+        "doc_id", 5, "gsmp_str_t", lineage = linOf("gsmp_str_t"),
+        group = Some("g"))
       assert(spark.table("gsmp_str_t").count() == sstored
         && sprobe() == sOneShot,
         "a replayed committed micro-batch changed the stratified sample")
@@ -2307,16 +2310,16 @@ class ValueAggregatorsSpec extends AnyFunSuite with SparkTest {
     val ts = Seq("cb_len_t", "cb_cm_t", "cb_hll_t", "cb_smp_t")
     try {
       val sdf = docs.toDF("doc_id", "source", "text")
-      Sketches.writeGroupedSketchTable(sdf, col("source"),
-        length(col("text")), ts(0))
-      TextAnalysis.writeGroupedCountMinTable(sdf,
-        "source", "text", ts(1), width = 64, depth = 3)
+      Sketches.writeSketchTable(sdf, length(col("text")), ts(0),
+        group = Some(col("source")))
+      TextAnalysis.writeCountMinTable(sdf, "text", ts(1), width = 64,
+        depth = 3, group = Some("source"))
       ValueAggregators.writeHllTable(
         sdf.select(col("source"), explode(
           expr("filter(split(text, ' '), x -> length(x) > 0)"))
           .as("tok")), col("source"), col("tok"), ts(2))
-      Samples.writeGroupedSampleTable(sdf, "source",
-        "doc_id", 3, ts(3))
+      Samples.writeSampleTable(sdf, "doc_id", 3, ts(3),
+        group = Some("source"))
       val batch = sdf.withColumn("doc_id", counted(col("doc_id")))
       DatasetCard.maintainBatch(batch, 0L, ts(0), ts(1), ts(2), ts(3),
         k = 3, width = 64, depth = 3, lineage = 5L)

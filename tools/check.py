@@ -125,7 +125,11 @@ def main():
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    n_bad = 0
+    # a named row with no oracle is a failure, not an empty selection
+    unknown = sorted(only - set(oracles))
+    for name in unknown:
+        print(f"{name}: UNKNOWN row (no oracle SQL in oracle_sql.json)")
+    n_bad = len(unknown)
     for name in sorted(oracles):
         if only and name not in only:
             continue
