@@ -14,4 +14,20 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = RelationalQueries.oracles
+
+  /** The local session of every graft main: `local[cpus]` with one
+    * shuffle partition per core, UTC, no UI, WARN logging. `conf` adds
+    * a main's own settings. */
+  private[graft] def localSession(cpus: String, conf: (String, String)*)
+      : SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(conf.toMap)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

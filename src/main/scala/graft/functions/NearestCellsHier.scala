@@ -23,7 +23,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
   * [[NearestCells.nearest]] exactly (NaN-free; property-gated). Smaller
   * `gprobe` trades recall for the sqrt scan — a RECALL dial like
   * nprobe, tuned and gated the same way
-  * ([[graft.pipeline.Similarity.tuneShardDials]]); it changes WHICH
+  * ([[graft.pipeline.Similarity.tuneShardServing]]); it changes WHICH
   * cells are probed, so it is an opt-in serving path, never silently
   * swapped under an oracle-gated query. The grouping is computed once
   * per (index, epochs) on the driver and ships in the sharded probe's

@@ -370,7 +370,7 @@ object Similarity {
     * prefix clumps into whichever cluster sorts lowest, and Lloyd
     * iterations cannot migrate centroids across separated clusters —
     * the surviving giant multi-cluster cells inflate the probe dial
-    * ([[tuneShardDials]]) with useless candidates. `"strided"` takes every
+    * ([[tuneShardServing]]) with useless candidates. `"strided"` takes every
     * (len/nlist)-th sorted point instead — still fully deterministic,
     * but spread across the value range so each cluster attracts seeds
     * proportional to its mass. Clustered-corpus builds pass
@@ -809,19 +809,57 @@ object Similarity {
     * epoch per shard and the committed (shard, gen, epoch) set — from
     * ONE read of the `_g` table (the per-shard layout paid one epoch
     * job PER SHARD here). The `_g` row count is compaction-bounded, so
-    * the collect is protocol-sized, never corpus-sized. */
+    * the collect is protocol-sized, never corpus-sized.
+    *
+    * The snapshot also carries the `_c` centroid-file listing, taken
+    * at most once per snapshot and only when a key is asked for: the
+    * PERSISTED serving-state key ([[key]]) and the broadcast memo key
+    * ([[memoKey]]) are pure functions of the snapshot, so one serve
+    * call that checks its stored decision and then probes lists the
+    * centroid files once. */
   private[graft] final case class SvState(table: String, nShards: Int,
       rsgen: Long, dataT: String, epochs: Array[Long],
-      committed: Array[(Int, Long, Long)])
+      committed: Array[(Int, Long, Long)])(
+      @transient private val spark: SparkSession) {
+    lazy val centroidFiles: Seq[String] =
+      MergeTables.freshInputFiles(spark, dataT + "_c")
 
-  /** TTL cache over [[svState]]'s protocol read — beside
-    * [[quantKeyCache]], same conf
-    * (`graft.adc.quantKeyTtlMs`), same contract: a foreign process's
-    * mutation inside a TTL window is seen at the next expiry or an
-    * explicit [[invalidateQuantKeyCache]]; mutators always read fresh.
-    * Default 0 = fresh per plan (the oracle-gated rows keep it). */
-  private val svStateCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, SvState)]()
+    /** The PERSISTED serving-state key: per-shard epochs + the centroid
+      * file snapshot + layout meta, WITHOUT the application id — stored
+      * dials must survive a driver restart. Any shard's retrain, a
+      * reshard, a rebuild or a centroid GC changes it; the file
+      * snapshot (not the epoch numbers alone) catches a same-name
+      * rebuild, whose epochs restart at 0. */
+    lazy val key: String = epochs.mkString(",") + "|" +
+      centroidFiles.mkString(",") + s"|n=$nShards|g=$rsgen"
+
+    /** The combined-broadcast memo key: [[key]] scoped to this
+      * SparkContext — a broadcast memoized under a stopped context is a
+      * dead handle, and a same-JVM session restart with unchanged table
+      * state would otherwise serve it. */
+    def memoKey: String = spark.sparkContext.applicationId + ":" + key
+  }
+
+  /** The ONE serving TTL cache (`graft.adc.quantKeyTtlMs`): (application,
+    * index) → (read-at nanos, snapshot). A snapshot carries its centroid
+    * listing, so a cache hit serves the protocol rows AND the broadcast
+    * memo key with no sidecar read and no listing. The age test runs
+    * against the CURRENT conf TTL at read time, so lowering (or
+    * clearing) the TTL takes effect on the very next plan. One entry
+    * per index.
+    *
+    * Staleness contract: mutators and the stored-decision serve read
+    * fresh (`fresh = true`), which also drops the entry, and every
+    * in-process mutation invalidates it, so an in-process change is
+    * seen by the next plan. A FOREIGN process's retrain, rebuild or
+    * append inside a TTL window is seen by the fraction-law and
+    * explicit-dial probes only at expiry or an explicit
+    * [[invalidateQuantKeyCache]]; meanwhile the cached epochs keep
+    * filtering the (already swapped) stored table, so a foreign
+    * retrain yields EMPTY results, not stale neighbors. Default 0 =
+    * fresh per plan (the oracle-gated rows keep it). */
+  private val svStateCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (Long, SvState)]()
 
   private[graft] def svState(spark: SparkSession, table: String,
       fresh: Boolean = false): SvState = {
@@ -829,7 +867,7 @@ object Similarity {
       if (fresh) 0L
       else spark.conf.getOption("graft.adc.quantKeyTtlMs")
         .map(_.toLong).getOrElse(0L)
-    val ck = spark.sparkContext.applicationId + ":" + table + ":"
+    val ck = (spark.sparkContext.applicationId, table)
     if (ttlMs > 0L) {
       val hit = svStateCache.get(ck)
       if (hit != null &&
@@ -853,75 +891,33 @@ object Similarity {
       s"$table: shard $s has no committed generations — corrupt index"))
     val committed = rows.iterator
       .filter { case (s, _, e) => e == epochs(s) }.toArray
-    val st = SvState(table, nShards, rsgen, dataT, epochs, committed)
+    val st = SvState(table, nShards, rsgen, dataT, epochs, committed)(spark)
     if (ttlMs > 0L) svStateCache.put(ck, (System.nanoTime(), st))
     else svStateCache.remove(ck)
     st
   }
 
-  /** Drop every in-process cached handle on a sharded index — state
-    * TTL entries, quantizer-listing TTL entries and the combined
-    * broadcasts — after any layout/epoch mutation. */
+  /** Drop every in-process cached handle on a sharded index — the TTL
+    * snapshot and the combined broadcasts — after any layout/epoch
+    * mutation. */
   private def invalidateSvCaches(table: String, dataT: String): Unit = {
     Option(svQuantMemo.remove(dataT)).foreach(_._2.unpersist(false))
     Option(svHierMemo.remove(dataT)).foreach(_._2.unpersist(false))
     invalidateQuantKeyCache(table)
   }
 
-  /** The combined-broadcast memo key: per-shard active epochs PLUS the
-    * centroid table's file snapshot — ONE listing for every shard
-    * (the per-shard layout paid one per shard), TTL-served from
-    * [[quantKeyCache]] and scoped to this SparkContext: a broadcast
-    * memoized under a stopped context is a dead handle, and a same-JVM
-    * session restart with unchanged table state would otherwise serve
-    * it. */
-  private def svQuantKey(spark: SparkSession, st: SvState,
-      fresh: Boolean = false): String = {
-    val ttlMs =
-      if (fresh) 0L
-      else spark.conf.getOption("graft.adc.quantKeyTtlMs")
-        .map(_.toLong).getOrElse(0L)
-    val ck = spark.sparkContext.applicationId + ":" + st.dataT + ":" +
-      st.epochs.mkString(",")
-    if (ttlMs > 0L) {
-      val hit = quantKeyCache.get(ck)
-      if (hit != null &&
-          System.nanoTime() - hit._1 < ttlMs * 1000000L) return hit._2
-    }
-    val key = spark.sparkContext.applicationId + ":" +
-      st.epochs.mkString(",") + ":" +
-      MergeTables.freshInputFiles(spark, st.dataT + "_c").mkString(",")
-    if (ttlMs > 0L) {
-      quantKeyCache.put(ck, (System.nanoTime(), key))
-      evictOtherEpochs(quantKeyCache,
-        spark.sparkContext.applicationId, st.dataT, ck)
-    } else quantKeyCache.remove(ck)
-    key
-  }
-
-  /** The PERSISTED serving-state key of a sharded index: per-shard
-    * epochs + the centroid file snapshot + layout meta, WITHOUT the
-    * application id — stored dials must survive a driver restart (the
-    * whole point of persisting them), while the broadcast MEMO keys
-    * keep the app id for dead-handle scoping. Any shard's retrain, a
-    * reshard, a rebuild or a centroid GC changes it. */
-  private def svStateKey(spark: SparkSession, st: SvState): String =
-    st.epochs.mkString(",") + "|" +
-      MergeTables.freshInputFiles(spark, st.dataT + "_c").mkString(",") +
-      s"|n=${st.nShards}|g=${st.rsgen}"
-
-  /** [[svStateKey]] of the index's current, freshly read state. */
+  /** [[SvState.key]] of the index's current, freshly read state. */
   private[graft] def svStateNow(spark: SparkSession, table: String)
       : String =
-    svStateKey(spark, svState(spark, table, fresh = true))
+    svState(spark, table, fresh = true).key
 
   /** Fail LOUDLY if the index's quantizer state changed since `key0`
-    * — the multi-audit tuners' guard. Each audit resolves the state
+    * — the multi-audit tuner's guard. Each audit resolves the state
     * per plan, so a mid-tune retrain, reshard or rebuild would mix
     * recalls measured against different quantizers and the returned
     * dials would describe no actual index state; the lock cannot be
     * held for a minutes-long tune (it would block every append), so
-    * the tuners verify instead. The key holds the centroid FILE
+    * the tuner verifies instead. The key holds the centroid FILE
     * snapshot, not the epoch numbers alone: a same-name rebuild
     * restarts epochs at 0 (ADVICE r17). */
   private[graft] def requireSvStable(spark: SparkSession, table: String,
@@ -963,13 +959,13 @@ object Similarity {
 
   private def svQuantBc(spark: SparkSession, st: SvState)
       : Broadcast[ShardedQuant] =
-    memoBc(svQuantMemo, spark, st.dataT, svQuantKey(spark, st))(
+    memoBc(svQuantMemo, spark, st.dataT, st.memoKey)(
       ShardedQuant(readSvCentroids(spark, st)
         .map(NearestCellsBc.quantizerOf)))
 
   private def svHierBc(spark: SparkSession, st: SvState)
       : Broadcast[ShardedHier] =
-    memoBc(svHierMemo, spark, st.dataT, svQuantKey(spark, st))(
+    memoBc(svHierMemo, spark, st.dataT, st.memoKey)(
       ShardedHier(readSvCentroids(spark, st)
         .map(graft.functions.NearestCellsHier.group)))
 
@@ -1329,28 +1325,29 @@ object Similarity {
       targetRecall, buckets), k)
 
   /** Per-shard serving dials of the TUNED sharded probe — what
-    * [[tuneShardDials]] derives and [[ivfAdcTopKIndexedShardedTuned]]
+    * [[tuneShardServing]] derives and [[ivfAdcTopKIndexedShardedTuned]]
     * consumes. `probeRecall`/`hierRecall` are the measured gates the
-    * dials were accepted at (nprobe vs the shard's quantizer ceiling,
-    * gprobe vs the same ceiling at that nprobe). */
+    * dials were accepted at (nprobe vs the shard's tuning reference,
+    * gprobe vs the shard's quantizer ceiling at that nprobe). */
   final case class ShardDials(nprobe: Int, probeRecall: Double,
       gprobe: Int, hierRecall: Double)
 
   /** One shard's SERVING decision (r19 verdict item 2 — the
     * plateau→re-rank escalation composed onto the sharded tier):
-    * `mode` is "probe" (the tuned two-level probe met the end-to-end
-    * gate) or "rerank" (the probe dial PLATEAUED below it — loss
-    * probing cannot fix, the density regime — so the shard escalates
-    * to an exact-dot re-rank of its top-`depth` candidates).
-    * `recall` is the measured end-to-end mean recall@k of the decided
-    * path against the shard's float-exact reference. */
+    * `mode` is "probe" (the tuned two-level probe met the gate) or
+    * "rerank" (the probe dial PLATEAUED below it — loss probing cannot
+    * fix, the density regime — so the shard escalates to an exact-dot
+    * re-rank of its top-`depth` candidates). `recall` is the measured
+    * mean recall@k of the decided path against the tune's reference:
+    * the shard's float-exact top-k when the tune had the float
+    * vectors, its quantizer ceiling otherwise. */
   final case class ShardServing(mode: String, dials: ShardDials,
       depth: Int, recall: Double)
 
   /** The shard-pure candidate leg: the ONE-PLAN probe with every other
     * shard dialed to 0 (the combined kernel skips them) — what the
-    * per-shard tuner and the served path's re-rank branch rank
-    * against. `gprobe` <= 0 selects the flat kernel. */
+    * per-shard tuner ranks against. `gprobe` <= 0 selects the flat
+    * kernel. */
   private def svShardCandidates(queries: DataFrame, idCol: String,
       vecCol: String, st: SvState, shard: Int, nprobe: Int,
       gprobe: Int, buckets: Int = ivfIndexBuckets): DataFrame = {
@@ -1368,10 +1365,12 @@ object Similarity {
   /** One shard's quantizer CEILING: every live stored row of the shard
     * scored for every query (nprobe = the shard's full nlist), i.e.
     * probing loss excluded, quantization loss kept — the reference the
-    * probe dials tune against. On corpora whose neighbor margins sit at
-    * the int8 noise floor, end-to-end recall is quantization-bounded no
-    * matter the probe dial, so tuning against float-exact MIPS would
-    * escalate the probe for loss it cannot fix. */
+    * gprobe dial always tunes against, and the nprobe dial too when
+    * the tune has no float vectors. On corpora whose neighbor margins
+    * sit at the int8 noise floor, end-to-end recall is
+    * quantization-bounded no matter the probe dial, so tuning a probe
+    * dial against float-exact MIPS would escalate it for loss it cannot
+    * fix. */
   private def svShardCeiling(queries: DataFrame, idCol: String,
       vecCol: String, k: Int, st: SvState, shard: Int, nlist: Int)
       : DataFrame =
@@ -1396,56 +1395,105 @@ object Similarity {
     finally pool.shutdown()
   }
 
-  /** Recall-gated ABSOLUTE dials for EVERY shard — the scale dial the
-    * second-decade growth measurement prescribes (BASELINE.md r17).
-    * [[ivfParams]]' fraction law probes `frac × nlist` cells because on
-    * CLUSTERLESS vectors recall tracks the probed fraction; on REAL
-    * clustered embeddings a FIXED nprobe already covers the top-k ball
-    * at every corpus size, so probed work per query = nprobe ×
-    * occupancy = CONSTANT. Each shard derives the smallest nprobe, then
-    * the smallest two-level gprobe at it, whose measured mean recall@k
-    * on the panel meets `targetRecall` ([[tuneDial]]: doubling, binary
-    * search, and a plateau cutoff — a dial that stops improving is not
-    * the bottleneck, and escalating it would only turn the audit
-    * corpus-sized). BOTH dials gate against the shard's quantizer
-    * ceiling ([[svShardCeiling]] — probing loss, not quantization
-    * loss): gating gprobe against the flat probe at nprobe instead
-    * (the single-row diagnostic) lets the two gates COMPOUND — a
-    * 0.8-vs-flat hier on a 0.8-vs-ceiling flat is ~0.64 end-to-end,
-    * measured exactly that in the spec — while one end-to-end gate per
-    * shard composes across shards: shards partition the corpus, a
-    * global top-k member lives in exactly one shard and ranks at least
-    * as high in that shard's local top-k as globally. Shards tune
-    * CONCURRENTLY on a bounded pool (r19 verdict item 3); the
-    * quantizer-state guard spans the whole run. `queries` should be
-    * the monitoring panel (~hundreds of rows), never the corpus. */
-  def tuneShardDials(queries: DataFrame, idCol: String, vecCol: String,
+  /** THE SERVING POLICY of the sharded index (r17 verdict item 2, per
+    * shard since r19), one body for both references. Each shard
+    * derives recall-gated ABSOLUTE dials — [[ivfParams]]' fraction law
+    * probes `frac × nlist` cells because on CLUSTERLESS vectors recall
+    * tracks the probed fraction, but on REAL clustered embeddings a
+    * FIXED nprobe already covers the top-k ball at every corpus size
+    * (BASELINE.md r17). The smallest nprobe whose measured mean
+    * recall@k on the panel meets `targetRecall` comes first, then the
+    * smallest two-level gprobe at it ([[tuneDial]]: doubling, binary
+    * search, and a plateau cutoff). gprobe always gates against the
+    * shard's quantizer ceiling ([[svShardCeiling]]): gating it against
+    * the flat probe at nprobe would let the two gates COMPOUND — a
+    * 0.8-vs-flat hier on a 0.8-vs-ceiling flat is ~0.64 end-to-end.
+    * One gate per shard composes across shards: shards partition the
+    * corpus, so a global top-k member lives in exactly one shard and
+    * ranks at least as high in that shard's local top-k as globally.
+    *
+    * The reference follows the inputs:
+    *   - `vecs = None`: the shard's quantizer ceiling. Every shard
+    *     serves probe mode with `recall = hierRecall` (probe-only
+    *     serving: no exact leg, no escalation).
+    *   - `vecs = Some(live corpus)`: the shard's float-exact top-k —
+    *     deliberately not the ceiling, because the policy exists to see
+    *     the quantization loss re-ranking can fix. A shard whose nprobe
+    *     meets the gate serves probe mode, its hier path re-measured
+    *     end to end against the exact leg; a shard whose dial PLATEAUS
+    *     below it (the density regime) escalates to the exact-dot
+    *     re-rank at a tuned depth ([[svShardRerank]]).
+    *
+    * Monitoring-cadence: shards tune CONCURRENTLY on a bounded pool
+    * (r19 verdict item 3) and the quantizer-state guard spans the
+    * whole run. `queries` should be the monitoring panel (~hundreds of
+    * rows), never the corpus. */
+  def tuneShardServing(queries: DataFrame, idCol: String, vecCol: String,
       k: Int, table: String, targetRecall: Double,
-      minGain: Double = 0.005): Seq[ShardDials] = {
+      minGain: Double = 0.005, vecs: Option[DataFrame] = None,
+      maxDepthFactor: Int = 32): Seq[ShardServing] = {
     require(targetRecall > 0.0 && targetRecall <= 1.0,
       s"targetRecall=$targetRecall")
+    require(maxDepthFactor >= 1, s"maxDepthFactor=$maxDepthFactor")
     val spark = queries.sparkSession
     val st = svState(spark, table, fresh = true)
-    val key0 = svStateKey(spark, st)
+    val key0 = st.key
     val nlists = svQuantBc(spark, st).value.quants.map(_.norms2.length)
     val res = svPerShard(st.nShards) { s =>
-      val ceiling = svShardCeiling(queries, idCol, vecCol, k, st, s,
-        nlists(s)).localCheckpoint()
+      val groups = math.max(1,
+        math.ceil(math.sqrt(nlists(s).toDouble)).toInt)
+      def ceilingLeg() = svShardCeiling(queries, idCol, vecCol, k, st,
+        s, nlists(s)).localCheckpoint()
+      def recallVs(ref: DataFrame, ranked: DataFrame): Double =
+        recallOfApprox(ref, ranked, k).agg(avg("recall")).head()
+          .getDouble(0)
+      def probeAt(np: Int, gp: Int) = rankByScaledIdot(
+        svShardCandidates(queries, idCol, vecCol, st, s, np, gp), k)
+      val ref = vecs.fold(ceilingLeg())(v => exactMipsTopK(
+        v.filter(shardOf(idCol, st.nShards) === s), queries, idCol,
+        vecCol, k).localCheckpoint())
       try {
-        val (np, rec) = tuneDial(nlists(s), targetRecall, minGain)(np =>
-          recallOfApprox(ceiling,
-              rankByScaledIdot(svShardCandidates(queries, idCol, vecCol,
-                st, s, np, gprobe = 0), k), k)
-            .agg(avg("recall")).head().getDouble(0))
-        val groups = math.max(1,
-          math.ceil(math.sqrt(nlists(s).toDouble)).toInt)
-        val (gp, gRec) = tuneDial(groups, targetRecall, minGain)(gp =>
-          recallOfApprox(ceiling,
-              rankByScaledIdot(svShardCandidates(queries, idCol, vecCol,
-                st, s, np, gprobe = gp), k), k)
-            .agg(avg("recall")).head().getDouble(0))
-        ShardDials(np, rec, gp, gRec)
-      } finally dropCheckpoint(ceiling)
+        val (np, npRec) = tuneDial(nlists(s), targetRecall, minGain)(
+          np => recallVs(ref, probeAt(np, 0)))
+        // density regime / last resort: no probe dial meets the gate —
+        // escalate to the exact-dot re-rank, depth as a multiplier
+        // over k (depth = k reorders but cannot change recall)
+        def escalate(v: DataFrame): ShardServing = {
+          val (mult, rrRec) = tuneDial(maxDepthFactor, targetRecall,
+            minGain)(m => recallVs(ref, svShardRerank(v, queries, idCol,
+              vecCol, k, depth = m * k, nprobe = np, st, s)))
+          ShardServing("rerank", ShardDials(np, npRec, 0, 0.0),
+            depth = mult * k, recall = rrRec)
+        }
+        def probeMode(gp: Int, gRec: Double, recall: Double) =
+          ShardServing("probe", ShardDials(np, npRec, gp, gRec),
+            depth = 0, recall = recall)
+        vecs match {
+          case Some(v) if npRec < targetRecall => escalate(v)
+          case _ =>
+            val ceiling = if (vecs.isEmpty) ref else ceilingLeg()
+            try {
+              val (gp, gRec) = tuneDial(groups, targetRecall, minGain)(
+                gp => recallVs(ceiling, probeAt(np, gp)))
+              vecs.fold(probeMode(gp, gRec, gRec)) { v =>
+                // the decided hier path re-measured END-TO-END against
+                // the exact leg; when it misses the gate although the
+                // flat dial met it (the compounding-gates seam, ADVICE
+                // r20 medium) fall back to gprobe = the full group
+                // count (the flat-equivalent clamp), and if even that
+                // misses, escalate — a below-gate probe decision is
+                // never returned
+                val e2e = recallVs(ref, probeAt(np, gp))
+                lazy val e2eFlat = recallVs(ref, probeAt(np, groups))
+                if (e2e >= targetRecall) probeMode(gp, gRec, e2e)
+                else if (e2eFlat >= targetRecall)
+                  probeMode(groups, recallVs(ceiling, probeAt(np, groups)),
+                    e2eFlat)
+                else escalate(v)
+              }
+            } finally if (vecs.isDefined) dropCheckpoint(ceiling)
+        }
+      } finally dropCheckpoint(ref)
     }
     requireSvStable(spark, table, key0)
     res
@@ -1475,110 +1523,10 @@ object Similarity {
     rankTopK(rescored, k).withColumnRenamed("cos", "score")
   }
 
-  /** THE SERVING POLICY (r17 verdict item 2, per shard since r19):
-    * each shard tunes
-    * its probe dial against its OWN float-exact end-to-end reference
-    * (deliberately not the quantizer ceiling: the policy exists to see
-    * the quantization loss the ceiling excludes, because re-ranking
-    * can fix it). A shard whose dial meets `targetRecall` serves
-    * probe-mode through the two-level kernel (gprobe tuned against the
-    * shard ceiling, then the end-to-end recall of the hier path
-    * re-measured against the exact leg); a shard whose dial PLATEAUS
-    * below it — the density regime — escalates to the exact-dot
-    * re-rank at a tuned depth ([[svShardRerank]]), per shard, inside
-    * the same fan-out. Monitoring-cadence; shards run concurrently;
-    * the state guard spans the whole policy run. `vecs` is the live
-    * corpus frame (the exact legs and the re-rank audits need the
-    * float vectors). */
-  def tuneShardServing(vecs: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, table: String,
-      targetRecall: Double, minGain: Double = 0.005,
-      maxDepthFactor: Int = 32): Seq[ShardServing] = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall=$targetRecall")
-    require(maxDepthFactor >= 1, s"maxDepthFactor=$maxDepthFactor")
-    val spark = queries.sparkSession
-    val st = svState(spark, table, fresh = true)
-    val key0 = svStateKey(spark, st)
-    val nlists = svQuantBc(spark, st).value.quants.map(_.norms2.length)
-    val res = svPerShard(st.nShards) { s =>
-      val exact = exactMipsTopK(
-        vecs.filter(shardOf(idCol, st.nShards) === s), queries, idCol,
-        vecCol, k).localCheckpoint()
-      try {
-        val (np, npRec) = tuneDial(nlists(s), targetRecall, minGain)(
-          np => recallOfApprox(exact,
-              rankByScaledIdot(svShardCandidates(queries, idCol, vecCol,
-                st, s, np, gprobe = 0), k), k)
-            .agg(avg("recall")).head().getDouble(0))
-        // density regime / last resort: no probe dial meets the gate —
-        // escalate to the exact-dot re-rank, depth as a multiplier
-        // over k (depth = k reorders but cannot change recall)
-        def escalate(): ShardServing = {
-          val (mult, rrRec) = tuneDial(maxDepthFactor, targetRecall,
-            minGain)(m => recallOfApprox(exact,
-                svShardRerank(vecs, queries, idCol, vecCol, k,
-                  depth = m * k, nprobe = np, st, s), k)
-              .agg(avg("recall")).head().getDouble(0))
-          ShardServing("rerank", ShardDials(np, npRec, 0, 0.0),
-            depth = mult * k, recall = rrRec)
-        }
-        if (npRec >= targetRecall) {
-          // probe mode: the serving path is the two-level kernel, so
-          // tune gprobe against the shard CEILING at np (the
-          // tuneShardDials gate), then re-measure the decided path
-          // END-TO-END against the exact leg — the stored recall is
-          // always the decided path's
-          val ceiling = svShardCeiling(queries, idCol, vecCol, k, st,
-            s, nlists(s)).localCheckpoint()
-          try {
-            val groups = math.max(1,
-              math.ceil(math.sqrt(nlists(s).toDouble)).toInt)
-            val (gp, gRec) = tuneDial(groups, targetRecall, minGain)(
-              gp => recallOfApprox(ceiling,
-                  rankByScaledIdot(svShardCandidates(queries, idCol,
-                    vecCol, st, s, np, gprobe = gp), k), k)
-                .agg(avg("recall")).head().getDouble(0))
-            def e2eAt(g: Int): Double = recallOfApprox(exact,
-                rankByScaledIdot(svShardCandidates(queries, idCol,
-                  vecCol, st, s, np, gprobe = g), k), k)
-              .agg(avg("recall")).head().getDouble(0)
-            val e2e = e2eAt(gp)
-            if (e2e >= targetRecall)
-              ShardServing("probe", ShardDials(np, npRec, gp, gRec),
-                depth = 0, recall = e2e)
-            else {
-              // the decided hier path's END-TO-END recall missed the
-              // gate even though the flat dial met it — the compounding
-              // -gates seam (ADVICE r20 medium): never persist a
-              // below-gate probe decision. Fall back to gprobe = the
-              // full group count (the hier kernel's flat-equivalent
-              // clamp) and re-measure; if even that misses — a panel
-              // shift between the two measurements — escalate to the
-              // re-rank leg, which tunes until the gate clears.
-              val e2eFlat = e2eAt(groups)
-              if (e2eFlat >= targetRecall) {
-                val gRecFlat = recallOfApprox(ceiling,
-                    rankByScaledIdot(svShardCandidates(queries, idCol,
-                      vecCol, st, s, np, gprobe = groups), k), k)
-                  .agg(avg("recall")).head().getDouble(0)
-                ShardServing("probe",
-                  ShardDials(np, npRec, groups, gRecFlat),
-                  depth = 0, recall = e2eFlat)
-              } else escalate()
-            }
-          } finally dropCheckpoint(ceiling)
-        } else escalate()
-      } finally dropCheckpoint(exact)
-    }
-    requireSvStable(spark, table, key0)
-    res
-  }
-
   /** Persist per-shard SERVING rows (r18 verdict item 3 — every
     * serving session re-paid the exact leg while the decision lived only
     * in the caller): one row per shard in the swap-written
-    * `<table>_serve` sidecar, keyed by [[svStateKey]] (NO application
+    * `<table>_serve` sidecar, keyed by [[SvState.key]] (NO application
     * id — stored dials must survive a driver restart) so ANY shard's
     * retrain, a reshard, or a rebuild refuses the stored rows stale at
     * read. */
@@ -1598,181 +1546,142 @@ object Similarity {
       "shard", t)
   }
 
-  /** Persist [[tuneShardDials]]' probe-only dials — [[writeShardServing]]
-    * with every shard in probe mode (the dial-only loop has no
-    * escalation leg; its hier recall doubles as the recorded serving
-    * recall). */
-  def writeShardDials(spark: SparkSession, table: String,
-      dials: Seq[ShardDials]): Unit =
-    writeShardServing(spark, table,
-      dials.map(d => ShardServing("probe", d, depth = 0,
-        recall = d.hierRecall)))
-
-  /** Read the persisted per-shard serving rows, REFUSING them stale:
-    * None when nothing is stored or any shard's quantizer state
-    * changed since the tune (a retrain, reshard, rebuild or centroid
-    * GC — [[svStateKey]]). Metadata + one sidecar read; no ceiling or
-    * exact leg. */
+  /** Read the persisted per-shard serving rows against a FRESH
+    * snapshot, REFUSING them stale: None when nothing is stored or any
+    * shard's quantizer state changed since the tune (a retrain,
+    * reshard, rebuild or centroid GC — [[SvState.key]]). */
   def readShardServing(spark: SparkSession, table: String)
+      : Option[Seq[ShardServing]] =
+    servingRows(spark, svState(spark, table, fresh = true))
+
+  /** The stored serving rows of `st`'s index when they were tuned
+    * against exactly `st` — metadata + one sidecar read; no ceiling or
+    * exact leg. */
+  private def servingRows(spark: SparkSession, st: SvState)
       : Option[Seq[ShardServing]] = {
-    val t = table + "_serve"
+    val t = st.table + "_serve"
     MergeTables.recoverCompactCrash(spark, t)
     if (!spark.catalog.tableExists(t)) return None
     // driver-side sidecar read (r22): per-shard decision rows, was a
     // collect job per serving-stack plan; same healed fresh listing
     val rows = graft.sources.SidecarRead.rows(spark, t)
       .sortBy(_.getInt("shard"))
-    if (rows.isEmpty) None
-    else if (rows.head.getString("state_key") != svStateNow(spark, table))
-      None
+    if (rows.isEmpty || rows.head.getString("state_key") != st.key) None
     else Some(rows.map(r => ShardServing(r.getString("mode"),
       ShardDials(r.getInt("nprobe"), r.getDouble("probe_recall"),
         r.getInt("gprobe"), r.getDouble("hier_recall")),
       r.getInt("depth"), r.getDouble("recall"))).toSeq)
   }
 
-  /** Read the persisted rows as probe-only DIALS — None when stale,
-    * absent, OR any shard is escalated (serving an escalated shard
-    * through the probe-only path would silently serve below its gate:
-    * use [[ivfAdcTopKIndexedShardedServed]] instead). */
-  def readShardDials(spark: SparkSession, table: String)
-      : Option[Seq[ShardDials]] =
-    readShardServing(spark, table).filter(_.forall(_.mode == "probe"))
-      .map(_.map(_.dials))
-
-  /** [[tuneShardDials]] + [[writeShardDials]] — the monitoring-cadence
-    * loop of the probe-only sharded serving deployment. */
-  def tuneShardDialsPersist(queries: DataFrame, idCol: String,
+  /** [[tuneShardServing]] + [[writeShardServing]] — the
+    * monitoring-cadence loop of the sharded serving deployment. */
+  def tuneShardServingPersist(queries: DataFrame, idCol: String,
       vecCol: String, k: Int, table: String, targetRecall: Double,
-      minGain: Double = 0.005): Seq[ShardDials] = {
-    val dials = tuneShardDials(queries, idCol, vecCol, k, table,
-      targetRecall, minGain)
-    writeShardDials(queries.sparkSession, table, dials)
-    dials
-  }
-
-  /** [[tuneShardServing]] + [[writeShardServing]] — the escalating
-    * monitoring-cadence loop (r19 verdict item 2). */
-  def tuneShardServingPersist(vecs: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, table: String,
-      targetRecall: Double, minGain: Double = 0.005,
+      minGain: Double = 0.005, vecs: Option[DataFrame] = None,
       maxDepthFactor: Int = 32): Seq[ShardServing] = {
-    val servings = tuneShardServing(vecs, queries, idCol, vecCol, k,
-      table, targetRecall, minGain, maxDepthFactor)
+    val servings = tuneShardServing(queries, idCol, vecCol, k, table,
+      targetRecall, minGain, vecs, maxDepthFactor)
     writeShardServing(queries.sparkSession, table, servings)
     servings
   }
 
-  /** [[ivfAdcTopKIndexedShardedTuned]] serving from the STORED
-    * per-shard dials — refusing stale ones loudly, like the stacks'
-    * stored-decision path. */
-  def ivfAdcTopKIndexedShardedTuned(queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, table: String): DataFrame =
-    ivfAdcTopKIndexedShardedTuned(queries, idCol, vecCol, k, table,
-      readShardDials(queries.sparkSession, table).getOrElse(
-        throw new IllegalStateException(
-          s"$table has no fresh probe-only per-shard dials — a shard " +
-            "was retrained, the index was resharded/rebuilt, it was " +
-            "never tuned, or a shard is ESCALATED (rerank mode: serve " +
-            "through ivfAdcTopKIndexedShardedServed): run " +
-            "tuneShardDialsPersist at monitoring cadence, then serve")))
+  /** The probe-only [[tuneShardServingPersist]] returning the dials —
+    * kept as the entry point the serving benchmark calls. */
+  def tuneShardDialsPersist(queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, table: String, targetRecall: Double,
+      minGain: Double = 0.005): Seq[ShardDials] =
+    tuneShardServingPersist(queries, idCol, vecCol, k, table,
+      targetRecall, minGain).map(_.dials)
 
-  /** TUNED serving probe of the SHARDED index: ONE plan — the shared
-    * bounded query snapshot, one scan, one join, one global
-    * [[rankByScaledIdot]] merge — with each shard selected through the
-    * TWO-LEVEL combined kernel at its own recall-gated absolute dials
-    * instead of the fraction law. Per-query work per shard is
-    * nprobe_s × occupancy = CONSTANT in the shard's corpus, the
-    * fan-out adds shards' constants, and since r20 the PLAN adds
-    * nothing per shard (the GrowthBench qshard rows gate both).
-    *
-    * The two-level kernel ([[graft.functions.NearestCellsHier]]) scans
-    * ceil(sqrt(nlist)) group centroids and only the `gprobe` nearest
-    * groups' member cells — O(sqrt(nlist)) coarse work per query
-    * instead of the flat scan's O(nlist), the term that turns linear in
-    * the corpus under the occupancy-constant law. With `gprobe` = the
-    * group count the cell set is the flat kernel's at the same nprobe
-    * (spec-gated bit-equal).
-    *
-    * OPT-IN serving path: recall is a measured, gated quantity (the
-    * dials come from [[tuneShardDials]]); never substituted under an
-    * oracle-gated query. */
+  /** Serve through the STORED per-shard decision, read against ONE
+    * fresh snapshot that both checks the decision for staleness and
+    * drives the probe (a retrain between the two cannot split them).
+    * Refuses stale or missing rows loudly. Probe-mode shards serve
+    * their tuned two-level probe; rerank-mode shards need the live
+    * corpus as `vecs` (the exact-dot re-rank joins the float vectors),
+    * and without it the call refuses an escalated store, naming the
+    * shards. Output: (q_id, nb_id, rank, score) — [[svServedRank]]. */
   def ivfAdcTopKIndexedShardedTuned(queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, table: String, dials: Seq[ShardDials],
-      buckets: Int = ivfIndexBuckets): DataFrame = {
+      vecCol: String, k: Int, table: String,
+      vecs: Option[DataFrame] = None): DataFrame = {
     val spark = queries.sparkSession
-    val st = svState(spark, table)
-    require(dials.length == st.nShards,
-      s"${dials.length} dials for ${st.nShards} shards — tune with " +
-        "tuneShardDials against this index")
-    rankByScaledIdot(svHierCandidates(queries, idCol, vecCol, st,
-      svHierBc(spark, st), dials.map(_.nprobe).toArray,
-      dials.map(_.gprobe).toArray, buckets), k)
-  }
-
-  /** Serve through the STORED per-shard serving rows with PER-SHARD
-    * MODES (r19 verdict item 2): probe-mode shards contribute their
-    * two-level tuned candidates scored by the quantized dot estimate
-    * (idot × scale — [[rankByScaledIdot]]'s key); rerank-mode shards
-    * contribute their top-`depth` flat candidates RE-SCORED by the
-    * exact float dot ([[svShardRerank]]'s join shape, all rerank
-    * shards in ONE branch); one global rank merges on the shared
-    * dot-estimate key (exact where it matters — the density shards
-    * whose quantized margins are noise — and quantized where the gate
-    * said quantized is enough). Still O(1) plan branches in the shard
-    * count: one probe branch + one rerank branch. With every shard in
-    * probe mode the output ranks are [[ivfAdcTopKIndexedShardedTuned]]'s
-    * (same key, same tiebreak; spec-gated). `vecs` is the live corpus
-    * frame (the rerank branch joins full vectors); refuses stale or
-    * missing serving rows loudly. Output: (q_id, nb_id, rank, score).
-    */
-  def ivfAdcTopKIndexedShardedServed(vecs: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, table: String,
-      buckets: Int = ivfIndexBuckets): DataFrame = {
-    val spark = queries.sparkSession
-    val servings = readShardServing(spark, table).getOrElse(
+    val st = svState(spark, table, fresh = true)
+    val servings = servingRows(spark, st).getOrElse(
       throw new IllegalStateException(
         s"$table has no fresh per-shard serving rows — a shard was " +
-          "retrained, the index was resharded/rebuilt, or it was " +
-          "never tuned: run tuneShardServingPersist at monitoring " +
-          "cadence, then serve"))
-    val st = svState(spark, table)
+          "retrained, the index was resharded/rebuilt, or it was never " +
+          "tuned: run tuneShardServingPersist at monitoring cadence, " +
+          "then serve"))
+    svServedRank(queries, idCol, vecCol, k, st, servings, vecs)
+  }
+
+  /** The tuned probe at EXPLICIT per-shard dials — the dial-sweep
+    * primitive (every shard in probe mode, the index state TTL-served
+    * like the fraction-law probe). OPT-IN serving path: recall is a
+    * measured, gated quantity; never substituted under an oracle-gated
+    * query. */
+  def ivfAdcTopKIndexedShardedTuned(queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, table: String, dials: Seq[ShardDials])
+      : DataFrame =
+    svServedRank(queries, idCol, vecCol, k,
+      svState(queries.sparkSession, table),
+      dials.map(d => ShardServing("probe", d, depth = 0,
+        recall = d.hierRecall)), vecs = None)
+
+  /** THE served rank of the sharded index: ONE plan, one global rank
+    * over at most two candidate branches, O(1) in the shard count.
+    *
+    * Probe-mode shards contribute their TWO-LEVEL tuned candidates
+    * ([[graft.functions.NearestCellsHier]]: ceil(sqrt(nlist)) group
+    * centroids scanned, then only the `gprobe` nearest groups' member
+    * cells — O(sqrt(nlist)) coarse work per query instead of the flat
+    * scan's O(nlist); at `gprobe` = the group count the cell set is
+    * the flat kernel's, spec-gated bit-equal). Per-query work per shard
+    * is nprobe_s × occupancy = CONSTANT in the shard's corpus.
+    * Rerank-mode shards contribute their top-`depth` flat candidates
+    * RE-SCORED by the exact float dot ([[svShardRerank]]'s join shape,
+    * all rerank shards in ONE branch); without `vecs` the call is
+    * refused, naming them — served probe-only they would serve below
+    * their gate.
+    *
+    * One global rank merges on a shared dot-estimate key, ties by
+    * nb_id. With one mode present the probe key is [[rankByScaledIdot]]'s
+    * raw idot × scale, so an all-probe store ranks exactly like the
+    * fraction-law probe's key. In a MIXED store (ADVICE r20 high) the
+    * probe rows merge with exact float dots and move onto the exact-dot
+    * scale — idot × (scale/127) × (qscale/127), the dequantized
+    * estimate; the raw key is ~127²/qscale times the true dot and would
+    * starve every rerank shard's true top-k out of the merge. */
+  private def svServedRank(queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, st: SvState, servings: Seq[ShardServing],
+      vecs: Option[DataFrame]): DataFrame = {
+    val spark = queries.sparkSession
     require(servings.length == st.nShards,
-      s"${servings.length} serving rows for ${st.nShards} shards")
-    val parts = scala.collection.mutable.ListBuffer[DataFrame]()
-    val mixedModes = servings.exists(_.mode == "probe") &&
-      servings.exists(_.mode == "rerank")
-    if (servings.exists(_.mode == "probe")) {
-      val bc = svHierBc(spark, st)
-      val nps = servings.map(sv =>
-        if (sv.mode == "probe") sv.dials.nprobe else 0).toArray
-      val gps = servings.map(_.dials.gprobe).toArray
-      // Scoring (ADVICE r20 high): in a MIXED-MODE index the probe
-      // branch's rows merge into one global rank with the rerank
-      // branch's EXACT float dots, so they must be on the exact-dot
-      // scale — idot × (scale/127) × (qscale/127), the dequantized dot
-      // estimate (error ≤ the int8 reconstruction bound, which is what
-      // the tuned recall gate measures). The raw idot × scale key is
-      // ~127²/qscale times the true dot: positive probe scores would
-      // starve every rerank shard's true top-k out of the merge. With
-      // ONE mode present the branches never meet, and the all-probe
-      // key stays the raw idot × scale — bit-identical ranks to
-      // ivfAdcTopKIndexedShardedTuned (the spec-gated contract).
-      val probeScore =
-        if (mixedModes)
-          col("idot").cast("double") * col("scale") * col("qscale") /
-            lit(127.0 * 127.0)
-        else col("idot").cast("double") * col("scale")
-      parts += svHierCandidates(queries, idCol, vecCol, st, bc, nps, gps,
-          buckets)
-        .select(col("q_id"), col("nb_id"), probeScore.as("score"))
+      s"${servings.length} serving dials for ${st.nShards} shards — " +
+        "tune with tuneShardServing against this index")
+    val modes = servings.map(_.mode).toSet
+    if (vecs.isEmpty && modes("rerank"))
+      throw new IllegalStateException(s"${st.table} has ESCALATED " +
+        "shards (" + servings.indices.filter(servings(_).mode == "rerank")
+          .mkString(", ") + " in rerank mode): serving them probe-only " +
+        "would serve below their gate — pass the live corpus as vecs")
+    def dialsIn(mode: String)(dial: ShardServing => Int) =
+      servings.map(sv => if (sv.mode == mode) dial(sv) else 0).toArray
+    val probe = Option.when(modes("probe")) {
+      val idot = col("idot").cast("double") * col("scale")
+      val score =
+        if (modes("rerank"))
+          idot * col("qscale") / lit(127.0 * 127.0)
+        else idot
+      svHierCandidates(queries, idCol, vecCol, st, svHierBc(spark, st),
+          dialsIn("probe")(_.dials.nprobe),
+          dialsIn("probe")(_.dials.gprobe), ivfIndexBuckets)
+        .select(col("q_id"), col("nb_id"), score.as("score"))
     }
-    if (servings.exists(_.mode == "rerank")) {
-      val bc = svQuantBc(spark, st)
-      val nps = servings.map(sv =>
-        if (sv.mode == "rerank") sv.dials.nprobe else 0).toArray
-      val cands = svFlatCandidates(queries, idCol, vecCol, st, bc, nps,
-        buckets)
+    val rerank = vecs.filter(_ => modes("rerank")).map { corpus =>
+      val cands = svFlatCandidates(queries, idCol, vecCol, st,
+        svQuantBc(spark, st), dialsIn("rerank")(_.dials.nprobe),
+        ivfIndexBuckets)
       // a depth tuned at a smaller k still re-ranks at least k
       // survivors: fewer could never fill the caller's top-k
       val depths = typedLit(servings.zipWithIndex.collect {
@@ -1790,13 +1699,13 @@ object Similarity {
         col(vecCol).as("qv"))
       val withQ = qs.join(broadcast(survivors), Seq("q_id"))
         .select(col("q_id"), col("nb_id"), col("qv"))
-      parts += vecs
+      corpus
         .select(col(idCol).as("id"), col(vecCol).as("v"))
         .join(broadcast(withQ), col("id") === col("nb_id"))
         .select(col("q_id"), col("nb_id"),
           dot(col("qv"), col("v")).as("score"))
     }
-    parts.reduce(_ unionByName _)
+    (probe ++ rerank).reduce(_ unionByName _)
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("q_id")
           .orderBy((-col("score")).asc, col("nb_id").asc)))
@@ -2245,8 +2154,8 @@ object Similarity {
 
   /** Doubling + binary search for the smallest dial value in [1, max]
     * whose measured recall meets `target`, with the plateau cutoff —
-    * the shared machinery of [[tuneShardDials]] and
-    * [[tuneShardServing]]. */
+    * every dial of [[tuneShardServing]] (nprobe, gprobe, re-rank
+    * depth). */
   private def tuneDial(max: Int, target: Double, minGain: Double)(
       recallAt: Int => Double): (Int, Double) = {
     var lo = 1
@@ -2316,58 +2225,14 @@ object Similarity {
         (key, spark.sparkContext.broadcast(make))
       })._2
 
-  /** TTL cache over [[svQuantKey]]'s catalog listing, keyed by
-    * (application, data table, epochs) → (listed-at nanos, key) — the
-    * serving metadata floor (r17 verdict item 5). The age test runs
-    * against the CURRENT conf TTL at read time, so lowering (or
-    * clearing) the TTL takes effect on the very next plan instead of
-    * whenever old entries happen to expire. Bounded: one live entry
-    * per probed table — caching a key for one epoch vector EVICTS the
-    * same table's entries at other epochs (a superseded epoch's listing
-    * can never be asked for again by an in-process probe, and leaving
-    * it would grow the map one entry per retrain forever).
-    *
-    * Staleness contract under the TTL (ADVICE r18): an IN-PROCESS
-    * mutation invalidates both caches, so its first post-mutation
-    * probe re-reads and re-keys. A FOREIGN
-    * process's retrain inside a TTL window is different — the cached
-    * epoch keeps filtering the (already swapped) stored table, whose
-    * rows now all carry the NEW epoch, so the probe returns EMPTY
-    * results (not stale ones) until the TTL expires or the serving
-    * loop calls [[invalidateQuantKeyCache]]. Empty-not-stale is the
-    * safer failure (no silently wrong neighbors), and the window is
-    * the TTL the operator chose; loops that coordinate retrains out
-    * of band must invalidate explicitly. */
-  private val quantKeyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
-
-  /** Evict `cache` entries for `table` other than the live key `keep`
-    * — the one-live-entry-per-table bound of [[quantKeyCache]] (its
-    * only call site; [[svStateCache]] keys carry no epoch, so it is
-    * naturally one-entry-per-table). Key format is
-    * `appId:table:epochSuffix`. */
-  private def evictOtherEpochs[V](
-      cache: java.util.concurrent.ConcurrentHashMap[String, V],
-      appId: String, table: String, keep: String): Unit = {
-    val prefix = appId + ":" + table + ":"
-    val it = cache.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if (k != keep && k.startsWith(prefix)) it.remove()
-    }
-  }
-
-  /** Drop the TTL-cached protocol state ([[svState]]) and centroid
-    * listings ([[svQuantKey]], every reshard generation) of index
-    * `table` — the explicit invalidation hook for a serving loop that
-    * learns of a FOREIGN rebuild out of band (in-process mutators call
-    * it themselves). The next probe re-reads the sidecars, re-lists
-    * the centroid files and re-keys the quantizer broadcast. */
-  def invalidateQuantKeyCache(table: String): Unit = {
-    val dataT = s"${java.util.regex.Pattern.quote(table)}(_r\\d+)?_sv".r
-    svStateCache.keySet().removeIf(_.split(":", 3)(1) == table)
-    quantKeyCache.keySet().removeIf(k => dataT.matches(k.split(":", 3)(1)))
-  }
+  /** Drop the TTL-cached snapshot ([[svState]]: protocol rows and
+    * centroid listing) of index `table` — the explicit invalidation
+    * hook for a serving loop that learns of a FOREIGN mutation out of
+    * band (in-process mutators call it themselves). The next probe
+    * re-reads the sidecars, re-lists the centroid files and re-keys
+    * the quantizer broadcast. */
+  def invalidateQuantKeyCache(table: String): Unit =
+    svStateCache.keySet().removeIf(_._2 == table)
 
   /** Snapshot cap for the probe-side cell pushdown: a query batch up
     * to this many rows is collected once (≤ ~16 MB of 64-float

@@ -858,7 +858,15 @@ object TextAnalysis {
     * from the candidate rows either way, and the scoring tail is
     * [[bm25Rank]] verbatim — identical output contract and ranking, so
     * qb3 shares qb1's oracle, proving the stored index loses nothing
-    * (both candidate paths are spec-gated indexed == direct). */
+    * (both candidate paths are spec-gated indexed == direct).
+    *
+    * `conjunctive = true` (qe6) ranks only documents containing EVERY
+    * distinct query term — the search-engine `+term1 +term2` contract
+    * between bag-of-words BM25 and the phrase tier (qb6/qd1). The
+    * survivors' scores are [[bm25Rank]]'s shared Column tree verbatim;
+    * the only addition is an integer matched-term count compared
+    * against the query's own term count on candidate aggregates that
+    * are already query-restricted, so it adds no scan or shuffle. */
   def bm25TopKIndexed(queries: DataFrame, qIdCol: String, qTextCol: String,
       table: String, k: Int, k1: Double = 1.2, b: Double = 0.75,
       maxPushdownTerms: Int = 256, conjunctive: Boolean = false)
@@ -886,26 +894,6 @@ object TextAnalysis {
       else tf.join(broadcast(termSet), "term")
     bm25Rank(cand, qterms, stats, k, k1, b, conjunctive)
   }
-
-  /** [[bm25TopKIndexed]] under CONJUNCTIVE (boolean-AND) semantics —
-    * only documents containing EVERY distinct query term are ranked,
-    * the search-engine `+term1 +term2` contract bag-of-words BM25
-    * relaxes and the phrase tier (qb6/qd1) over-tightens: conjunction
-    * sits between them (all terms present, any positions). Scoring and
-    * ranking of the surviving docs are [[bm25Rank]]'s shared Column
-    * tree VERBATIM — the only addition is an integer matched-term
-    * count compared against the query's own term count, both
-    * query-scale (qe6 gates it against the qb1 CTE chain with the same
-    * HAVING clause). Scale shape unchanged from [[bm25TopKIndexed]]:
-    * the filter runs on candidate aggregates that are already
-    * query-restricted, so it adds no scan or shuffle — a conjunctive
-    * probe is never slower than its disjunctive twin, only its
-    * postings-intersection cheaper. */
-  def bm25TopKIndexedConjunctive(queries: DataFrame, qIdCol: String,
-      qTextCol: String, table: String, k: Int, k1: Double = 1.2,
-      b: Double = 0.75, maxPushdownTerms: Int = 256): DataFrame =
-    bm25TopKIndexed(queries, qIdCol, qTextCol, table, k, k1, b,
-      maxPushdownTerms, conjunctive = true)
 
   /** [[bm25TopKIndexed]] with the QUERIES AS A STREAM — the online
     * lexical serving shape beside the dense tier's

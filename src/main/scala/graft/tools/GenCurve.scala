@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.pipeline.{MergeTables, Sketches, Similarity, TextAnalysis}
@@ -39,15 +39,9 @@ object GenCurve {
   def main(args: Array[String]): Unit = {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/gencurve_wh_" + System.nanoTime())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(cpus,
+      "spark.sql.warehouse.dir" ->
+        (sys.props("java.io.tmpdir") + "/gencurve_wh_" + System.nanoTime()))
     import spark.implicits._
     val t = scala.collection.mutable.LinkedHashMap[String, Double]()
 

@@ -70,13 +70,7 @@ object GrowthBench {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val base = if (args.length > 1) args(1) else "/tmp/graft_growth"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(cpus)
 
     /** Materialize the k-times corpus once; reruns reuse it. */
     def gen(k: Int): String = {
@@ -749,7 +743,7 @@ object GrowthBench {
     // candidates per query are linear in the corpus — on hash-random
     // vectors no inverted file does better. REAL embeddings are
     // clustered with low intrinsic dimension; there the production dial
-    // is tuneShardDials' recall-gated ABSOLUTE nprobe and per-query probe
+    // is tuneShardServing's recall-gated ABSOLUTE nprobe and per-query probe
     // work is nprobe x occupancy = constant. This tier measures that
     // claim across the same two decades: clustered corpora at 1x and
     // 100x, the dial tuned by the recall gate at EACH scale, the FIXED
@@ -805,12 +799,13 @@ object GrowthBench {
         // loss; quantization loss is re-rank/retrain territory, and on
         // a dense synthetic whose neighbor margins sit at the int8
         // noise floor a float-exact target would escalate the probe
-        // for loss it cannot fix (Similarity.tuneShardDials doc)
+        // for loss it cannot fix (Similarity.svShardCeiling doc)
         val tunePanel = emb.filter(
           col("vec_id") % lit(math.max(100L, cnt / 200L)) === 0)
         val t0 = System.nanoTime()
-        val dials = Similarity.tuneShardDials(tunePanel, "vec_id",
+        val dials = Similarity.tuneShardServing(tunePanel, "vec_id",
           "embedding", k = 3, s"gtuned_idx_$tag", targetRecall = target)
+          .map(_.dials)
         val Seq(dl) = dials
         System.err.println(f"[growth] qadc_tuned_dial_$tag%-14s " +
           f"nprobe=${dl.nprobe} of nlist=$nl (fraction law: $fracNp) " +
@@ -883,8 +878,8 @@ object GrowthBench {
           tbl, init = "strided")
         val tunePanel = emb.filter(
           col("vec_id") % lit(math.max(100L, cnt / 200L)) === 0)
-        val dials = Similarity.tuneShardDials(tunePanel, "vec_id",
-          "embedding", k = 3, tbl, targetRecall = 0.8)
+        val dials = Similarity.tuneShardServing(tunePanel, "vec_id",
+          "embedding", k = 3, tbl, targetRecall = 0.8).map(_.dials)
         System.err.println(f"[growth] stack dials $tag%-5s " +
           f"np=${dials.head.nprobe} gp=${dials.head.gprobe} " +
           f"probe-recall=${dials.head.probeRecall}%.3f " +
@@ -929,7 +924,7 @@ object GrowthBench {
       // per-shard candidates — the tuned/hier serving dials existed
       // only on the unsharded tier. This block gates the
       // composition on the stack corpora: per-shard recall-gated
-      // dials (tuneShardDials, each shard against its own quantizer
+      // dials (tuneShardServing, each shard against its own quantizer
       // ceiling), the two-level broadcast probe per shard, the
       // serving TTL on every per-shard metadata read. Expected FLAT
       // in both corpus scale (s8: 1x -> 100x) and shard count (1x:
@@ -939,7 +934,7 @@ object GrowthBench {
       // one scan + one join at any shard count), with the FUSED qb7
       // stack output agreeing >= 0.94 with the fraction-law fan-out
       // over the SAME sharded index. The tune line also records r19
-      // item 3: tuneShardDials runs its shards CONCURRENTLY on a
+      // item 3: tuneShardServing runs its shards CONCURRENTLY on a
       // bounded pool (was 26 s sequential at 1x/s8). s1/s32 at 100x
       // are deliberately skipped: nShards=1 is the tuned tier above
       // (the gtuned/gstk indexes), and the 100x tier's cost
@@ -958,8 +953,8 @@ object GrowthBench {
           val tunePanel = emb.filter(
             col("vec_id") % lit(math.max(100L, cnt / 200L)) === 0)
           val t0 = System.nanoTime()
-          val dials = Similarity.tuneShardDials(tunePanel, "vec_id",
-            "embedding", k = 3, tbl, targetRecall = 0.8)
+          val dials = Similarity.tuneShardServing(tunePanel, "vec_id",
+            "embedding", k = 3, tbl, targetRecall = 0.8).map(_.dials)
           System.err.println(f"[growth] qshard_tuned_dials_${tag}_s$sh " +
             dials.map(dd => s"np=${dd.nprobe}/gp=${dd.gprobe}")
               .mkString(",") +

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
   * the plan evidence the optimization rounds commit under plans/<tag>/.
   * Usage:
@@ -17,13 +15,7 @@ object Plans {
     }
     val Array(sfDir, outDir, suffix, names) = args.take(4)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(cpus)
     new java.io.File(outDir).mkdirs()
     // optional 5th arg "exec": compute the frame through the noop sink
     // first (guide §1.4), so with AQE the dump is the FINAL plan —

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc stage profiler: runs one named SparkEntry query with stage-level
   * timing printed to stderr. Usage:
   *   sbt "runMain graft.tools.Profile <sfDir> <queryName> [explain]"
@@ -11,13 +9,7 @@ object Profile {
     val sfDir = args(0)
     val name = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(cpus)
     val fn = graft.SparkEntry.queries(name)
     // warm
     val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Generate an sf1-equivalent test corpus by scaling the sf0.1 tables
@@ -29,13 +29,7 @@ object Sf1Gen {
     val k = 10
     val stride = 10000000L
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(cpus)
     val ok = new java.io.File(s"$out/_OK")
     if (ok.exists()) { System.err.println(s"[sf1gen] $out ready"); return }
 

@@ -1233,7 +1233,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     } finally AdcKit.drop("adc_ilv_idx", "adc_ilv_ref")
   }
 
-  test("tuneShardDials: recall-gated absolute nprobe meets the target with fewer probed cells than the fraction law on clustered vectors") {
+  test("tuneShardServing without vecs: recall-gated absolute nprobe meets the target with fewer probed cells than the fraction law on clustered vectors") {
     // clustered corpus, LOW INTRINSIC DIMENSION (cluster centers vary
     // in all 64 dims; within-cluster noise lives in the first 4) — the
     // real-embedding geometry where a FIXED nprobe covers the top-k
@@ -1254,8 +1254,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
         "adc_tune_idx")
-      val Seq(dl) = Similarity.tuneShardDials(queries, "vec_id",
+      val Seq(dl) = Similarity.tuneShardServing(queries, "vec_id",
         "embedding", k = 3, "adc_tune_idx", targetRecall = target)
+        .map(_.dials)
       val (np, recall) = (dl.nprobe, dl.probeRecall)
       assert(recall >= target, s"tuned recall $recall below $target")
       assert(np < fracNp,
@@ -1276,7 +1277,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       // the tuner reports measurements, not estimates (tolerance: the
       // mean's summation order differs)
       assert(math.abs(auditAt(np) - recall) < 1e-9,
-        "tuneShardDials' recall disagrees with the audit at np")
+        "tuneShardServing's recall disagrees with the audit at np")
       // minimality up to the binary search's invariant: the cell count
       // one below the returned dial measured UNDER the target
       if (np > 1)
@@ -1609,7 +1610,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     // r18 verdict item 1: sharding (the horizontal 100 TB dial) and
     // the tuned/hier probe (the serving dial) were mutually exclusive
     // — the fan-out re-inherited the fraction law's linear candidates.
-    // Gates: (a) tuneShardDials at nShards=1 meets its gate under the
+    // Gates: (a) tuneShardServing at nShards=1 meets its gate under the
     // fraction law's dial; (b) the tuned probe at nShards=1 with full
     // group coverage is BIT-EQUAL to the fraction-law flat probe at
     // the same nprobe (the two-level kernel loses nothing);
@@ -1630,12 +1631,13 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
         "shtn1_idx", nShards = 1, dim = 64)
-      val dials = Similarity.tuneShardDials(queries, "vec_id",
+      val dials = Similarity.tuneShardServing(queries, "vec_id",
         "embedding", k = 3, "shtn1_idx", targetRecall = target)
+        .map(_.dials)
       assert(dials.length == 1)
       // (a) both dials meet the gate against the quantizer ceiling
       // (flat-probe-referenced gprobe gates would compound,
-      // tuneShardDials doc), under the fraction law's nprobe
+      // tuneShardServing doc), under the fraction law's nprobe
       val (nlist, fracNp) = Similarity.ivfParams(n.toLong)
       val groups = math.ceil(math.sqrt(nlist.toDouble)).toInt
       assert(dials.head.probeRecall >= target &&
@@ -1656,8 +1658,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       // qshard_tuned GrowthBench agreement gate, here at spec scale)
       Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
         "shtn4_idx", nShards = 4, dim = 64)
-      val dials4 = Similarity.tuneShardDials(queries, "vec_id",
+      val dials4 = Similarity.tuneShardServing(queries, "vec_id",
         "embedding", k = 3, "shtn4_idx", targetRecall = target)
+        .map(_.dials)
       assert(dials4.length == 4)
       assert(dials4.forall(_.probeRecall >= target),
         s"a shard's tuned probe recall missed the gate: $dials4")
@@ -1689,15 +1692,18 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       // (e) persisted per-shard dials (items 1+3 composed): round-trip,
       // stored-dials serving identical to explicit dials, and ANY
       // shard's retrain refuses the stored dials stale
-      Similarity.writeShardDials(spark, "shtn4_idx", dials4)
-      assert(Similarity.readShardDials(spark, "shtn4_idx")
-        .contains(dials4), "per-shard dials did not round-trip")
+      Similarity.writeShardServing(spark, "shtn4_idx",
+        dials4.map(dl => Similarity.ShardServing("probe", dl, depth = 0,
+          recall = dl.hierRecall)))
+      assert(Similarity.readShardServing(spark, "shtn4_idx")
+          .map(_.map(_.dials)).contains(dials4),
+        "per-shard dials did not round-trip")
       assert(rows(Similarity.ivfAdcTopKIndexedShardedTuned(queries,
           "vec_id", "embedding", k = 3, "shtn4_idx")) == rows(tuned),
         "stored-dials serving diverged from explicit dials")
       Similarity.retrainIvfAdcShard(vecs, "vec_id", "embedding",
         "shtn4_idx", shard = 1, dim = 64)
-      assert(Similarity.readShardDials(spark, "shtn4_idx").isEmpty,
+      assert(Similarity.readShardServing(spark, "shtn4_idx").isEmpty,
         "stale per-shard dials served after one shard's retrain")
       intercept[IllegalStateException] {
         Similarity.ivfAdcTopKIndexedShardedTuned(queries, "vec_id",
@@ -1740,16 +1746,16 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       // tuned down to (q_id, nb_id, rank)
       Similarity.writeIvfAdcIndexSharded(clustered, "vec_id",
         "embedding", "esc_cl_idx", nShards = 2, dim = 64)
-      val clServe = Similarity.tuneShardServingPersist(clustered,
-        clPanel, "vec_id", "embedding", k = 3, "esc_cl_idx",
-        targetRecall = target)
+      val clServe = Similarity.tuneShardServingPersist(clPanel, "vec_id",
+        "embedding", k = 3, "esc_cl_idx", targetRecall = target,
+        vecs = Some(clustered))
       assert(clServe.forall(_.mode == "probe"),
         s"mode-growth shards escalated needlessly: $clServe")
       assert(clServe.forall(_.recall >= target),
         s"a probe-mode shard's end-to-end recall missed the gate: " +
           s"$clServe")
-      val served = Similarity.ivfAdcTopKIndexedShardedServed(clustered,
-        clPanel, "vec_id", "embedding", k = 3, "esc_cl_idx")
+      val served = Similarity.ivfAdcTopKIndexedShardedTuned(clPanel,
+        "vec_id", "embedding", k = 3, "esc_cl_idx", vecs = Some(clustered))
       val tuned = Similarity.ivfAdcTopKIndexedShardedTuned(clPanel,
         "vec_id", "embedding", k = 3, "esc_cl_idx",
         clServe.map(_.dials))
@@ -1760,9 +1766,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       // step — survives per shard): escalation, honesty, gate
       Similarity.writeIvfAdcIndexSharded(dense, "vec_id", "embedding",
         "esc_dn_idx", nShards = 2, dim = 64)
-      val dnServe = Similarity.tuneShardServingPersist(dense, dnPanel,
-        "vec_id", "embedding", k = 3, "esc_dn_idx",
-        targetRecall = target)
+      val dnServe = Similarity.tuneShardServingPersist(dnPanel, "vec_id",
+        "embedding", k = 3, "esc_dn_idx", targetRecall = target,
+        vecs = Some(dense))
       assert(dnServe.forall(_.mode == "rerank"),
         s"density shards did not escalate: $dnServe")
       assert(dnServe.forall(sv => sv.recall >= target),
@@ -1788,29 +1794,29 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
           "escalation was unnecessary and the corpus is vacuous")
       // ...and the served fan-out (exact-dot re-rank per escalated
       // shard) clears the composed gate
-      val dnServed = Similarity.ivfAdcTopKIndexedShardedServed(dense,
-        dnPanel, "vec_id", "embedding", k = 3, "esc_dn_idx")
+      val dnServed = Similarity.ivfAdcTopKIndexedShardedTuned(dnPanel,
+        "vec_id", "embedding", k = 3, "esc_dn_idx", vecs = Some(dense))
       val servedRec = Similarity.retrievalAgreement(dnServed,
           exactMips(dense, dnPanel), "q_id", "nb_id")
         .agg((sum("n_both") / sum("n_b")).cast("double"))
         .head().getDouble(0)
       assert(servedRec >= target - 0.05,
         f"served fan-out recall $servedRec%.3f below the gate")
-      // (c) escalated store refuses the probe-only entry
-      assert(Similarity.readShardDials(spark, "esc_dn_idx").isEmpty,
-        "an escalated store served probe-only dials")
-      intercept[IllegalStateException] {
+      // (c) escalated store refuses the probe-only entry, by name
+      val esc = intercept[IllegalStateException] {
         Similarity.ivfAdcTopKIndexedShardedTuned(dnPanel, "vec_id",
           "embedding", k = 3, "esc_dn_idx")
       }
+      assert(esc.getMessage.contains("esc_dn_idx has ESCALATED shards"),
+        s"an escalated store served probe-only dials: ${esc.getMessage}")
       // (d) stale refusal after one shard's retrain
       Similarity.retrainIvfAdcShard(dense, "vec_id", "embedding",
         "esc_dn_idx", shard = 0, dim = 64)
       assert(Similarity.readShardServing(spark, "esc_dn_idx").isEmpty,
         "stale serving rows survived a shard's retrain")
       intercept[IllegalStateException] {
-        Similarity.ivfAdcTopKIndexedShardedServed(dense, dnPanel,
-          "vec_id", "embedding", k = 3, "esc_dn_idx")
+        Similarity.ivfAdcTopKIndexedShardedTuned(dnPanel, "vec_id",
+          "embedding", k = 3, "esc_dn_idx", vecs = Some(dense))
       }
     } finally {
       for (t <- Seq("esc_cl_idx_sv", "esc_dn_idx_sv");
@@ -1850,12 +1856,13 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndexSharded(mixed, "vec_id", "embedding",
         "mx_idx", nShards = 2, dim = 64)
-      val serve = Similarity.tuneShardServingPersist(mixed, panel,
-        "vec_id", "embedding", k = 3, "mx_idx", targetRecall = target)
+      val serve = Similarity.tuneShardServingPersist(panel, "vec_id",
+        "embedding", k = 3, "mx_idx", targetRecall = target,
+        vecs = Some(mixed))
       assert(serve.map(_.mode).toSet == Set("probe", "rerank"),
         s"corpus did not tune into mixed modes (vacuous gate): $serve")
-      val served = Similarity.ivfAdcTopKIndexedShardedServed(mixed,
-        panel, "vec_id", "embedding", k = 3, "mx_idx")
+      val served = Similarity.ivfAdcTopKIndexedShardedTuned(panel,
+        "vec_id", "embedding", k = 3, "mx_idx", vecs = Some(mixed))
       val rec = Similarity.retrievalAgreement(served,
           exactMips(mixed, panel), "q_id", "nb_id")
         .agg((sum("n_both") / sum("n_b")).cast("double"))
@@ -1939,8 +1946,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       Similarity.writeIvfAdcIndexSharded(clustered, "vec_id", "embedding",
         "srvst_idx")
       // (a) tune + persist
-      val serving = Similarity.tuneShardServingPersist(clustered, panel,
-        "vec_id", "embedding", k = 3, "srvst_idx", targetRecall = 0.8)
+      val serving = Similarity.tuneShardServingPersist(panel, "vec_id",
+        "embedding", k = 3, "srvst_idx", targetRecall = 0.8,
+        vecs = Some(clustered))
       assert(serving.map(_.mode) == Seq("probe"),
         s"mode-growth geometry escalated unexpectedly: $serving")
       val read = Similarity.readShardServing(spark, "srvst_idx")
@@ -1964,8 +1972,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         graft.RelationalQueries.qb7TunedStored(spark, d, "srvst_idx")
       }
       // (d) re-tune re-populates against the new quantizer state
-      Similarity.tuneShardServingPersist(clustered, panel, "vec_id",
-        "embedding", k = 3, "srvst_idx", targetRecall = 0.8)
+      Similarity.tuneShardServingPersist(panel, "vec_id", "embedding",
+        k = 3, "srvst_idx", targetRecall = 0.8, vecs = Some(clustered))
       assert(Similarity.readShardServing(spark, "srvst_idx").isDefined,
         "re-tune did not re-populate the store")
       // (e) the escalated mode round-trips through the same store
@@ -2006,9 +2014,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndexSharded(clustered, "vec_id", "embedding",
         "srv_cl_idx")
-      Similarity.tuneShardServing(clustered,
+      Similarity.tuneShardServing(
           clustered.filter(col("vec_id") % 40 === 0), "vec_id",
-          "embedding", k = 3, "srv_cl_idx", targetRecall = target) match {
+          "embedding", k = 3, "srv_cl_idx", targetRecall = target,
+          vecs = Some(clustered)) match {
         case Seq(sv) if sv.mode == "probe" =>
           assert(sv.recall >= target,
             s"probe-only recall ${sv.recall} below $target")
@@ -2020,8 +2029,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       Similarity.writeIvfAdcIndexSharded(dense, "vec_id", "embedding",
         "srv_dn_idx")
       val dnPanel = dense.filter(col("vec_id") % 20 === 0)
-      Similarity.tuneShardServing(dense, dnPanel, "vec_id",
-          "embedding", k = 3, "srv_dn_idx", targetRecall = target) match {
+      Similarity.tuneShardServing(dnPanel, "vec_id", "embedding",
+          k = 3, "srv_dn_idx", targetRecall = target,
+          vecs = Some(dense)) match {
         case Seq(sv) if sv.mode == "rerank" =>
           val (np, depth, rec) = (sv.dials.nprobe, sv.depth, sv.recall)
           assert(rec >= target,
@@ -2084,9 +2094,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
 
   test("quantizer state-key TTL cache: a warm cache hides a rebuild only until the next invalidation point — hook or expiry") {
     // r17 verdict item 5: graft.adc.quantKeyTtlMs > 0 serves the
-    // protocol state and the centroid-file listing from caches so a
-    // high-QPS serving loop stops paying sidecar reads + a listing per
-    // plan. The documented trade is that a foreign same-epoch rebuild
+    // protocol state and the centroid-file listing from one cached
+    // snapshot so a high-QPS serving loop stops paying sidecar reads +
+    // a listing per plan. The documented trade is that a foreign same-epoch rebuild
     // is seen only at the next invalidation point; this pins BOTH
     // halves — the staleness window exists (the cache is real), and
     // both invalidation points (explicit hook, TTL expiry) end it.
@@ -2151,13 +2161,12 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
   test("an in-process retrain is probe-visible immediately even under the serving TTL cache") {
     // the TTL trade (a FOREIGN rebuild waits for expiry or the hook)
     // must not leak onto in-process mutators: retrain and compaction
-    // call invalidateQuantKeyCache, which clears BOTH serving caches —
-    // the centroid listing AND the protocol state — so a warm serving
+    // call invalidateQuantKeyCache, which drops the cached snapshot —
+    // protocol state and centroid listing together — so a warm serving
     // loop in the same process sees its own retrain's epoch flip on
-    // the very next plan, not at expiry. (Without the state half of
-    // the hook, a cached pre-retrain epoch would filter the stored
-    // side to retired rows and the probe would silently serve
-    // nothing.)
+    // the very next plan, not at expiry. (A cached pre-retrain epoch
+    // would filter the stored side to retired rows and the probe would
+    // silently serve nothing.)
     val a = spark.range(300).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
       "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d" +
@@ -2254,13 +2263,14 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         f"two-level recall $recall%.3f below 0.8 at gprobe=2 of $g")
       // the group dial derives itself like nprobe does, and the tuner
       // reports the measured recall of the dials it returns
-      val Seq(dl) = Similarity.tuneShardDials(queries, "vec_id",
+      val Seq(dl) = Similarity.tuneShardServing(queries, "vec_id",
         "embedding", k = 3, "adc_hier_idx", targetRecall = 0.9)
+        .map(_.dials)
       assert(dl.gprobe >= 1 && dl.gprobe <= g,
         s"tuned gprobe=${dl.gprobe} outside [1, $g]")
       assert(math.abs(AdcKit.recall(hier(dl.nprobe, dl.gprobe),
           flatFull) - dl.hierRecall) < 1e-9,
-        "tuneShardDials' hier recall disagrees with the audit")
+        "tuneShardServing's hier recall disagrees with the audit")
     } finally AdcKit.drop("adc_hier_idx")
   }
 }
@@ -2750,15 +2760,15 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
       assert(conj.forall(r => disjScores(r._2) == r._4),
         "conjunction changed a surviving doc's score")
       TextAnalysis.writeBm25Index(docs, "doc_id", "text", "bm25_conj_idx")
-      val indexed = TextAnalysis.bm25TopKIndexedConjunctive(qs, "q_id",
-          "qtext", "bm25_conj_idx", k = 10)
+      val indexed = TextAnalysis.bm25TopKIndexed(qs, "q_id",
+          "qtext", "bm25_conj_idx", k = 10, conjunctive = true)
         .as[(Long, Long, Int, Long)].collect().sortBy(r => (r._1, r._3))
       assert(indexed.toSeq == conj.toSeq,
         s"indexed=${indexed.toSeq} direct=${conj.toSeq}")
       // a query with an absent term matches nothing conjunctively
-      val none = TextAnalysis.bm25TopKIndexedConjunctive(
+      val none = TextAnalysis.bm25TopKIndexed(
           Seq((8L, "apple zzz")).toDF("q_id", "qtext"), "q_id", "qtext",
-          "bm25_conj_idx", k = 10)
+          "bm25_conj_idx", k = 10, conjunctive = true)
         .as[(Long, Long, Int, Long)].collect()
       assert(none.isEmpty,
         s"absent-term conjunction should be empty, got ${none.toSeq}")

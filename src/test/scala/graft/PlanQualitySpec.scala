@@ -586,9 +586,9 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
         Seq(Similarity.ShardServing("rerank",
           Similarity.ShardDials(nprobe, 0.0, 0, 0.0), depth = 10,
           recall = 1.0)))
-      val df = Similarity.ivfAdcTopKIndexedShardedServed(vecs,
+      val df = Similarity.ivfAdcTopKIndexedShardedTuned(
         vecs.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-        k = 3, "qri_plan_idx")
+        k = 3, "qri_plan_idx", vecs = Some(vecs))
       df.collect()
       assertVectorFreeExchanges(df, allowedBroadcast = Set("qv"))
     } finally AdcKit.drop("qri_plan_idx")

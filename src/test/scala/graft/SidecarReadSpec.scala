@@ -70,9 +70,11 @@ class SidecarReadSpec extends AnyFunSuite with SparkTest {
         corpus.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
         k = 3, table = "screl_sh").count()
       assert(got > 0)
-      Similarity.writeShardDials(spark, "screl_sh",
+      Similarity.writeShardServing(spark, "screl_sh",
         Seq(Similarity.ShardDials(2, 0.9, 1, 0.85),
-          Similarity.ShardDials(3, 0.95, 2, 0.9)))
+            Similarity.ShardDials(3, 0.95, 2, 0.9))
+          .map(dl => Similarity.ShardServing("probe", dl, depth = 0,
+            recall = dl.hierRecall)))
       assert(sidecarRows("screl_sh_serve") == sparkRows("screl_sh_serve"))
       assert(sidecarRows("screl_sh_serve").size == 2)
     } finally AdcKit.drop("screl_sh")

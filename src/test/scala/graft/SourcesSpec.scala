@@ -201,6 +201,35 @@ class MultipleInputsSpec extends AnyFunSuite with SparkTest {
   }
 }
 
+class TmpSinksSpec extends AnyFunSuite with SparkTest {
+  private val d = "/root/testdata/sf0.001"
+
+  // q63 and qe5 key their tmp sinks by source dir too; the cleanup
+  // sweep must find them like every other sink of the application, and
+  // q63's write-once fixture guard must not outlive the fixture
+  test("cleanupTmpSinks removes every tmp sink of the application, q63 and qe5 included; q63 rewrites its fixture afterwards") {
+    val appId = spark.sparkContext.applicationId
+    def leftovers: Seq[String] =
+      Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles())
+        .getOrElse(Array.empty).map(_.getName).filter(_.contains(appId))
+        .toSeq.sorted
+    def run(q: String): Seq[String] =
+      RelationalQueries.queries(q)(spark, d).collect().map(_.toString)
+        .sorted.toSeq
+    val q63 = run("q63_hetero_inputs")
+    assert(q63.nonEmpty)
+    assert(run("qe5").nonEmpty)
+    assert(Seq("graft_q63_", "graft_qe5_")
+      .forall(p => leftovers.exists(_.startsWith(p))), leftovers)
+    RelationalQueries.cleanupTmpSinks(spark)
+    assert(leftovers.isEmpty, s"tmp entries left behind: $leftovers")
+    assert(run("q63_hetero_inputs") == q63,
+      "q63 after the cleanup returned different rows")
+    RelationalQueries.cleanupTmpSinks(spark)
+    assert(leftovers.isEmpty, s"tmp entries left behind: $leftovers")
+  }
+}
+
 class JdbcRoundTripSpec extends AnyFunSuite with SparkTest {
   import spark.implicits._
 
