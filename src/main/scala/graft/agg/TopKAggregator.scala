@@ -1,7 +1,8 @@
 package graft.agg
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{col, posexplode, udaf}
 
 /** Custom typed Aggregator — the reference's
   * `UserDefinedValueAggregatorDescriptor` extension point
@@ -63,4 +64,22 @@ class TopKAggregator(k: Int)
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   override def outputEncoder: Encoder[Seq[(Double, Long)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
+}
+
+object TopKAggregator {
+
+  /** The per-`key` top-`k` cut of every caller (q45, the dense and
+    * lexical rankers, reciprocal-rank fusion): one [[TopKAggregator]]
+    * over `(value, id)` per key, exploded back to one row per kept pair.
+    * `out` receives the 1-based int rank, the value and the id columns
+    * and returns the rest of the output row, after `key`. */
+  def topKPerKey(df: DataFrame, key: String, k: Int, value: Column,
+      id: Column)(out: (Column, Column, Column) => Seq[Column])
+      : DataFrame = {
+    val topk = udaf(new TopKAggregator(k), Encoders.product[(Double, Long)])
+    df.groupBy(key).agg(topk(value, id).as("top"))
+      .select(col(key), posexplode(col("top")).as(Seq("pos", "v")))
+      .select(col(key) +: out((col("pos") + 1).cast("int").as("rank"),
+        col("v._1"), col("v._2")): _*)
+  }
 }

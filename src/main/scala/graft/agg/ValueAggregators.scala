@@ -153,11 +153,14 @@ object ValueAggregators {
     hllEstimateFromRegisters(hllRegistersFromTable(spark, table), m)
 
   /** Collapse all register generations into one gen-0 file — see
-    * [[writeHllTable]] and [[graft.pipeline.MergeTables.compact]]. */
+    * [[writeHllTable]] and [[graft.pipeline.MergeTables.compact]].
+    * `maxGen > 0` compacts only above that many generations
+    * ([[graft.pipeline.MergeTables.compactIfOver]]); returns true iff
+    * it compacted. */
   def compactHllTable(spark: org.apache.spark.sql.SparkSession,
-      table: String): Unit =
+      table: String, maxGen: Int = 0): Boolean =
     graft.pipeline.MergeTables.compact(spark, table, "b",
-      hllRegistersFromTable(spark, table))
+      hllRegistersFromTable(spark, table), maxGen)
 
   /** TAKEDOWN whole keys from a persisted register table (r15 verdict
     * item 2): MAX-monoid registers have no inverse — a retraction
@@ -181,15 +184,6 @@ object ValueAggregators {
       hllRegistersFromTable(spark, table)
         .filter(key.isNull || !key.isin(groups: _*)))
   }
-
-  /** [[compactHllTable]] iff more than `maxGen` generations
-    * accumulated — the maintenance-loop policy
-    * ([[graft.pipeline.MergeTables.maybeCompactWith]]). */
-  def maybeCompactHllTable(spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      maxGen: Int = graft.pipeline.MergeTables.defaultMaxGen): Boolean =
-    graft.pipeline.MergeTables.maybeCompactWith(spark, table, maxGen)(
-      compactHllTable(spark, table))
 
   /** One micro-batch's register generation under its commit key,
     * exposed for the replay spec. On the MAX tier the batch key is

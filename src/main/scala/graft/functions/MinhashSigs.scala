@@ -95,17 +95,17 @@ object MinhashSigs {
       out
     })
 
-  /** Null when the doc has fewer than n words (no shingles). The walk is
-    * allocation-light on purpose — this runs once per document in the
-    * scan projection: primitive offset arrays, an open-addressed
-    * primitive long set for the distinct filter, and the shared
-    * ThreadLocal digest via [[Hash60.hash60]]. */
   /** Whitespace byte in the Java-regex `\s` sense: [ \t\n\x0B\f\r] —
     * exactly the separators the `\S+` regex twin tokenizes on (all six
     * are < 0x80, so UTF-8 multibyte sequences can never collide). */
   @inline private def isSep(b: Byte): Boolean =
     b == ' ' || (b >= 0x09 && b <= 0x0d)
 
+  /** Null when the doc has fewer than n words (no shingles). The walk is
+    * allocation-light on purpose — this runs once per document in the
+    * scan projection: primitive offset arrays, an open-addressed
+    * primitive long set for the distinct filter, and the shared
+    * ThreadLocal digest via [[Hash60.hash60]]. */
   def eval(text: UTF8String, n: Int, numHashes: Int): Array[Long] = {
     val bytes = text.getBytes
     // word start/end offsets (\S+ runs, like the regex twin); a doc of

@@ -89,9 +89,6 @@ object NearestCellsSharded {
   def gcell(shard: Int, cell: Int): Long =
     (shard.toLong << 32) | (cell.toLong & 0xffffffffL)
 
-  def shardOfGcell(g: Long): Int = (g >>> 32).toInt
-  def cellOfGcell(g: Long): Int = (g & 0xffffffffL).toInt
-
   /** Driver/executor kernel of the FLAT sharded probe: for each shard
     * with nprobes(s) > 0, that shard's nprobe nearest cells (the
     * single-shard kernel verbatim), emitted as gcells in shard order. */

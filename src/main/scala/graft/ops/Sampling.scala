@@ -5,30 +5,20 @@ import org.apache.spark.sql.functions._
 
 /** Deterministic source-side sampling/filter predicates — the reference's
   * `SequenceFileInputFilter` family (hadoop-gpu-0.20.1/src/mapred/org/apache/
-  * hadoop/mapred/SequenceFileInputFilter.java:103 RegexFilter, :146
-  * PercentFilter, :195 MD5Filter). Expressed as pushdown-friendly Catalyst
+  * hadoop/mapred/SequenceFileInputFilter.java:146 PercentFilter; its :103
+  * RegexFilter is Spark's own `rlike`, and q19_md5_filter writes its :195
+  * MD5Filter rule inline). Expressed as pushdown-friendly Catalyst
   * predicates: a `filter` this shape lands in the parquet scan's
   * PushedFilters / is evaluated inside codegen right after the scan, so at
   * 100 TB the rejected rows never leave the scan stage.
   */
 object Sampling {
 
-  /** RegexFilter: keep records whose key matches the pattern. */
-  def regexFilter(key: Column, pattern: String): Column =
-    key.rlike(pattern)
-
   /** PercentFilter: keep records where key.hashCode % f == 0. For the
     * integer keys the reference uses, `IntWritable.hashCode` IS the value
     * (io/IntWritable.java), so the faithful translation is `key % f == 0`. */
   def percentFilter(key: Column, frequency: Int): Column =
     pmod(key, lit(frequency)) === 0
-
-  /** MD5Filter: keep records where MD5(key) % f == 0. We take the low 31
-    * bits of the digest's first 8 hex chars — deterministic, engine-agnostic
-    * (the same expression is reproducible in any SQL dialect with md5()). */
-  def md5Filter(key: Column, frequency: Int): Column =
-    pmod(conv(substring(md5(key.cast("string")), 1, 8), 16, 10).cast("long"),
-      lit(frequency)) === 0
 
   /** The id's position in [0, 1) under the portable content hash —
     * the basis of stratified sampling and train/test splits. Unlike

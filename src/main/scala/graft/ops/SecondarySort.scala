@@ -18,11 +18,4 @@ object SecondarySort {
   def ranked(df: DataFrame, groupCol: Column, orderCols: Column*): DataFrame =
     df.withColumn("rn",
       row_number().over(Window.partitionBy(groupCol).orderBy(orderCols: _*)))
-
-  /** Values collapsed to an ordered list per group — the grouping-comparator
-    * view (one reduce call per first-field, values sorted by second field).
-    * `sort_array(collect_list(...))` keeps it a single hash aggregate. */
-  def groupedSorted(df: DataFrame, groupCol: Column, valueCol: Column): DataFrame =
-    df.groupBy(groupCol)
-      .agg(sort_array(collect_list(valueCol)).as("values"))
 }

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * the dataset card maintains itself from the stream and is served
   * without ever scanning the corpus.
   *
-  * Compaction note: since r16 the tier compactors' `maybeCompact`
-  * policies may run INSIDE this loop too — compaction carries each
-  * lineage's replay high-water mark through the rewrite
+  * Compaction note: since r16 the tier compactors, called with a
+  * `maxGen` threshold, may run INSIDE this loop too — compaction
+  * carries each lineage's replay high-water mark through the rewrite
   * ([[MergeTables.hwmTable]]), so a checkpoint-resumed lineage still
   * skips its committed batches exactly. */
 object DatasetCard {
@@ -101,11 +101,10 @@ object DatasetCard {
     // for maintenance, ever
     maxGen.foreach { mg =>
       val spark = batch.sparkSession
-      Sketches.maybeCompactSketchTable(spark, lenTable, mg)
-      TextAnalysis.maybeCompactCountMinTable(spark, cmTable, mg)
-      graft.agg.ValueAggregators.maybeCompactHllTable(spark, hllTable,
-        mg)
-      Samples.maybeCompactSampleTable(spark, smpTable, k, mg)
+      Sketches.compactSketchTable(spark, lenTable, mg)
+      TextAnalysis.compactCountMinTable(spark, cmTable, mg)
+      graft.agg.ValueAggregators.compactHllTable(spark, hllTable, mg)
+      Samples.compactSampleTable(spark, smpTable, k, mg)
       ()
     }
   }

@@ -374,12 +374,7 @@ object Dedup {
   def writeMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
       table: String, n: Int, numHashes: Int = 24, bands: Int = 6,
       buckets: Int = 16): Unit = {
-    // a fresh index has no deletions — a stale tombstone table from a
-    // previous build at this name would silently delete the fresh
-    // build's signatures at matching ids
-    corpus.sparkSession.sql(s"DROP TABLE IF EXISTS `${table}_t`")
-    graft.sources.MapFiles.clearStaleLocation(corpus.sparkSession,
-      table + "_t")
+    MergeTables.dropTombstones(corpus.sparkSession, table)
     graft.sources.MapFiles.write(
       indexRows(corpus, idCol, textCol, n, numHashes, bands),
       "bkey", buckets, table)
@@ -471,10 +466,13 @@ object Dedup {
     * (the MapFile sorted-single-file contract, io/MapFile.java:49) —
     * after K batch appends a probe otherwise reads K generations of
     * small files per bucket. Pure rewrite: this tier has no scalars
-    * and no tombstones, so compaction is shadow-write + catalog swap;
-    * crash exposure is the two-catalog-op swap window only (run in a
-    * maintenance window). Gated: compacted == appended == rebuilt,
-    * stored rows and probe results identical (spec + qd5). */
+    * and no commit table, so compaction is the live rows (tombstoned
+    * docs excluded) shadow-written + catalog-swapped, then the
+    * tombstones drop; crash exposure is the two-catalog-op swap window
+    * only (run in a maintenance window). It takes no `maxGen`: band
+    * rows carry no generations to count. Gated: compacted == appended
+    * == rebuilt, stored rows and probe results identical (spec +
+    * qd5). */
   def compactMinhashIndex(spark: SparkSession, table: String): Unit =
       MergeTables.withTableLock(table) {
     // healed and locked: a same-process append's band rows cannot land
@@ -488,7 +486,7 @@ object Dedup {
       liveMinhashRows(spark, table, bucketedRead = true)
         .select("bkey", "id", "n"),
       "bkey", table)
-    spark.sql(s"DROP TABLE IF EXISTS `${table}_t`")
+    MergeTables.dropTombstones(spark, table)
   }
 
   /** Delete documents from a persisted minhash archive index — the
@@ -512,9 +510,8 @@ object Dedup {
     MergeTables.recoverCompactCrash(spark, table)
     require(spark.catalog.tableExists(table),
       s"$table does not exist — not a minhash index")
-    graft.sources.MapFiles.clearStaleLocation(spark, table + "_t")
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .write.format("parquet").mode("append").saveAsTable(table + "_t")
+    MergeTables.landTombstones(
+      ids.select(col(idCol).cast("long").as("id")).distinct(), table)
   }
 
   /** The probe-visible rows of a persisted minhash archive: stored
@@ -529,10 +526,8 @@ object Dedup {
     val stored =
       if (bucketedRead) graft.sources.MapFiles.readBucketed(spark, table)
       else spark.table(table)
-    if (!spark.catalog.tableExists(table + "_t")) stored
-    else stored.join(
-      broadcast(spark.table(table + "_t").select("id").distinct()),
-      Seq("id"), "left_anti")
+    MergeTables.withoutTombstones(spark, table, stored, "id", "id")(
+      identity)
   }
 
   /** [[incrementalMinhashPairs]] probing a PERSISTED archive index
@@ -632,21 +627,6 @@ object Dedup {
       .select(col("x.id").as("id_a"), col("y.id_b").as("id_b"))
   }
 
-  /** Exact-substring duplication coverage (the Lee et al. 2021
-    * "Deduplicating Training Data" shape, token-granular): for every doc,
-    * how many of its token positions sit inside an `l`-token span that
-    * also appears verbatim in ANOTHER document. Returns
-    * `(doc_id, n_tokens, dup_span_tokens, dup_span_frac)` for docs with
-    * any coverage — the per-doc signal a span-removal pass keys on.
-    *
-    * Plan shape at scale: positional `l`-gram postings (8-byte hash +
-    * position) feed one count-distinct-docs aggregation — the classic
-    * inverted-index shuffle, map-side partial, bodies never move; the
-    * position-coverage explode runs only on rows whose gram is globally
-    * duplicated (rare), then dedups (doc, idx) pairs. Cross-doc only:
-    * within-doc repetition is [[graft.pipeline.Curation.repetitionMetrics]]'s
-    * job.
-    */
   /** (doc_id, idx) token positions covered by a cross-doc-duplicated
     * `l`-gram — the shared core of [[substringDupCoverage]] and
     * [[removeDuplicatedSpans]], so the coverage signal and the removal
@@ -671,6 +651,21 @@ object Dedup {
     materializeThenRelease(covered, grams)
   }
 
+  /** Exact-substring duplication coverage (the Lee et al. 2021
+    * "Deduplicating Training Data" shape, token-granular): for every doc,
+    * how many of its token positions sit inside an `l`-token span that
+    * also appears verbatim in ANOTHER document. Returns
+    * `(doc_id, n_tokens, dup_span_tokens, dup_span_frac)` for docs with
+    * any coverage — the per-doc signal a span-removal pass keys on.
+    *
+    * Plan shape at scale: positional `l`-gram postings (8-byte hash +
+    * position) feed one count-distinct-docs aggregation — the classic
+    * inverted-index shuffle, map-side partial, bodies never move; the
+    * position-coverage explode runs only on rows whose gram is globally
+    * duplicated (rare), then dedups (doc, idx) pairs. Cross-doc only:
+    * within-doc repetition is [[graft.pipeline.Curation.repetitionMetrics]]'s
+    * job.
+    */
   def substringDupCoverage(docs: DataFrame, idCol: String, textCol: String,
       l: Int): DataFrame = {
     val covered = coveredPositions(docs, idCol, textCol, l)

@@ -45,14 +45,25 @@ import org.apache.spark.sql.functions._
   *    `batch_key`), holds the lease through [[startLeased]] directly.
   *    Every start form returns its query undrained; the blocking form
   *    is `EventStreams.drain(start…)`.
+  *  - COMPACT: [[compactIfOver]] is the one trigger — under the table's
+  *    lock it counts the tier's committed generations and runs the
+  *    tier's rewrite only above `maxGen` (0 = now).
+  *  - DELETE: an index tier's deletions are rows of its one tombstone
+  *    table `table_t`, landed by [[landTombstones]], anti-joined by
+  *    [[withoutTombstones]], dropped by [[dropTombstones]] at every
+  *    fresh build and compaction.
   *
   * What stays per tier is DATA:
-  *  - where the commit key lives: in the state rows themselves here
-  *    (`batch_key`, −1 for batch operations); in the `table_s` rows
-  *    of BM25, with its `(n_docs, sum_dl)` integer deltas; in the
-  *    `table_sv_g` rows `(shard, gen, batch_key, epoch)` of ADC, whose
-  *    tombstones are scoped by epoch; nowhere for minhash, whose band
-  *    rows are replay-idempotent and which has no commit table;
+  *  - the COMMIT TABLE, where the commit key lives and the trigger
+  *    counts: the state rows themselves on the sketch, count-min,
+  *    sample and HLL tiers (`batch_key`, −1 for batch operations);
+  *    `table_s` on BM25, with its `(n_docs, sum_dl)` integer deltas;
+  *    `table_sv_g` `(shard, gen, batch_key, epoch)` on ADC; none on
+  *    minhash, whose band rows are replay-idempotent and carry no
+  *    generations (its compaction takes no `maxGen`);
+  *  - the TOMBSTONE SCOPE: tombstones of committed generations on
+  *    BM25, of each shard's active epoch on ADC (one shard's in a
+  *    retrain), all of them on minhash;
   *  - the merge monoid of the state tables: SUM-merged counts
   *    ([[mergedSum]]) retract by negated counts but double-count a
   *    replayed append — hence the keys; MAX-merged registers
@@ -1036,11 +1047,6 @@ private[graft] object MergeTables {
     q
   }
 
-  /** Probe-time merge for SUM-monoid state (counts): exact long sums
-    * per key, fully-cancelled keys dropped (retraction leaves no
-    * zero-count residue in any estimate), and a NEGATIVE merged count
-    * — only possible by retracting state never added — fails loudly
-    * instead of probing a corrupt table. */
   /** The table, crash-recovered and FRESHLY LISTED: probes interleave
     * with appends from other sessions (streaming micro-batch clones,
     * a maintenance loop's driver session), and a relation cached by an
@@ -1107,6 +1113,11 @@ private[graft] object MergeTables {
         "a grouped call cannot touch it — write a grouped table first")
   }
 
+  /** Probe-time merge for SUM-monoid state (counts): exact long sums
+    * per key, fully-cancelled keys dropped (retraction leaves no
+    * zero-count residue in any estimate), and a NEGATIVE merged count
+    * — only possible by retracting state never added — fails loudly
+    * instead of probing a corrupt table. */
   def mergedSum(spark: SparkSession, table: String,
       keyCols: Seq[String], cntCol: String): DataFrame = {
     freshView(spark, table).groupBy(keyCols.map(col): _*)
@@ -1128,47 +1139,75 @@ private[graft] object MergeTables {
     freshView(spark, table).groupBy(keyCols.map(col): _*)
       .agg(max(valCol).as(valCol))
 
-  /** Number of stored generations — the input to the compaction
-    * policy ([[maybeCompact]]) and the quantity every probe's
-    * footer-level replay check scales with. */
+  /** Number of distinct generations stored in `table` — the quantity
+    * the compaction trigger ([[compactIfOver]]) compares with `maxGen`,
+    * and the one every probe's footer-level replay check scales with. */
   def generationCount(spark: SparkSession, table: String): Long =
     freshView(spark, table).select("gen").distinct().count()
 
-  /** Compact iff the stored generation count exceeds `maxGen` — the
-    * auto-compaction trigger the manual compactors lacked (r14 verdict
-    * item 4). Since r16 this is safe to run INSIDE a live streaming
-    * lineage (call it in the maintenance loop after the batch's
-    * append, the way qfg calls retention): the rewrite carries every
-    * lineage's replay high-water mark into [[hwmTable]], so a
-    * checkpoint-RESUMED query still skips its committed batches
-    * exactly (spec-gated). In-loop calls are serialized with the
-    * loop's own appends by foreachBatch; OTHER writer processes remain
-    * excluded by the writer lease, as everywhere on this tier. Returns
-    * true iff it compacted. `merged` is call-by-name: the probe's
-    * merged view is only constructed (and only reads the table) when
-    * the threshold trips. */
-  def maybeCompact(spark: SparkSession, table: String, keyCol: String,
-      maxGen: Int)(merged: => DataFrame): Boolean =
-    maybeCompactWith(spark, table, maxGen)(
-      compact(spark, table, keyCol, merged))
-
-  /** The threshold check alone, for tiers whose compactor is not a
-    * plain [[compact]] call (param-preserving count-min, k-recording
-    * samples): runs `doCompact` iff more than `maxGen` generations
-    * accumulated. */
-  def maybeCompactWith(spark: SparkSession, table: String, maxGen: Int)
-      (doCompact: => Unit): Boolean = {
-    require(maxGen >= 1, s"maxGen=$maxGen")
-    if (generationCount(spark, table) <= maxGen) false
-    else { doCompact; true }
+  /** THE compaction trigger of every generation-keyed tier: under
+    * `table`'s lock, run the tier's `rewrite` iff its `commitTable`
+    * holds more than `maxGen` generations ([[generationCount]], which
+    * heals first); returns true iff it compacted. `maxGen = 0` compacts
+    * now and counts nothing — every table holds at least one
+    * generation. Safe inside a live streaming lineage (call it after
+    * the batch's append): every rewrite carries the lineages' replay
+    * high-water marks first ([[carryHwms]]), and other writer
+    * processes stay excluded by the writer lease. */
+  private[graft] def compactIfOver(spark: SparkSession, table: String,
+      commitTable: String, maxGen: Int)(rewrite: => Unit): Boolean =
+      withTableLock(table) {
+    require(maxGen >= 0, s"maxGen=$maxGen")
+    if (maxGen > 0 && generationCount(spark, commitTable) <= maxGen) false
+    else { rewrite; true }
   }
 
-  /** The default compaction threshold: the measured
-    * probe-cost-vs-generation-count curve (BASELINE.md r15) is flat to
-    * ~16 generations, 1.5× at 256, 9× at 4096 — 64 is indistinguishable
-    * from the floor on every tier while amortizing one compaction per
-    * 64 appends to noise. */
-  val defaultMaxGen = 64
+  /** The tombstone table of an index tier's data table: one row per
+    * deleted id — `(gen, doc_id)` on BM25, `(shard, id, epoch)` on ADC,
+    * `(id)` on minhash. The suffix is public to name grammars that must
+    * recognize it (the sharded ADC layout's generation sweep). */
+  private[graft] val tombstoneSuffix = "_t"
+  private[graft] def tombstoneTable(table: String): String =
+    table + tombstoneSuffix
+
+  /** Land tombstone `rows` for `table`: one parquet append that creates
+    * the tombstone table on first use. A previous process's tombstone
+    * directory may survive a metastore the current catalog never saw —
+    * cleared first, or the create-on-append refuses the location. */
+  private[graft] def landTombstones(rows: DataFrame, table: String)
+      : Unit = {
+    graft.sources.MapFiles.clearStaleLocation(rows.sparkSession,
+      tombstoneTable(table))
+    rows.write.format("parquet").mode("append")
+      .saveAsTable(tombstoneTable(table))
+  }
+
+  /** `rows` minus the ids `table`'s tombstones delete — the one liveness
+    * anti-join of every index probe, compaction, retrain and reshard:
+    * the distinct `tombId`s of the tombstones in force (`scope`)
+    * broadcast against the rows' `rowId`. A table never deleted from
+    * costs one catalog check and no plan node. */
+  private[graft] def withoutTombstones(spark: SparkSession, table: String,
+      rows: DataFrame, rowId: String, tombId: String)
+      (scope: DataFrame => DataFrame): DataFrame = {
+    val tt = tombstoneTable(table)
+    if (!spark.catalog.tableExists(tt)) rows
+    else {
+      val ids = scope(spark.table(tt)).select(tombId).distinct()
+      rows.join(broadcast(
+          if (rowId == tombId) ids else ids.withColumnRenamed(tombId, rowId)),
+        Seq(rowId), "left_anti")
+    }
+  }
+
+  /** Drop `table`'s tombstones, stale directory included — at every
+    * fresh build (leftover tombstones would silently delete its rows at
+    * matching ids) and every compaction (the rewrite excluded them). */
+  private[graft] def dropTombstones(spark: SparkSession, table: String)
+      : Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS `${tombstoneTable(table)}`")
+    graft.sources.MapFiles.clearStaleLocation(spark, tombstoneTable(table))
+  }
 
   /** The ONE heal: if a prior swap ([[swapInKeyed]] — a compaction, a
     * sidecar collapse, a retrain or reshard commit, on any tier)
@@ -1257,10 +1296,13 @@ private[graft] object MergeTables {
     * survives: committed-ness is permanent, which is why writing the
     * marks before the state swap is safe under every crash ordering
     * (a crash after the mark write leaves the old keys live AND
-    * marked — both answers agree). This is what licenses
-    * [[maybeCompact]] inside a live streaming lineage. */
+    * marked — both answers agree). This is what licenses compaction
+    * inside a live streaming lineage. Runs through the one trigger
+    * ([[compactIfOver]]) with the state table as its own commit table:
+    * `maxGen = 0` rewrites now; returns true iff it compacted. */
   def compact(spark: SparkSession, table: String, keyCol: String,
-      merged: => DataFrame): Unit = withTableLock(table) {
+      merged: => DataFrame, maxGen: Int = 0): Boolean =
+      compactIfOver(spark, table, table, maxGen) {
     recoverCompactCrash(spark, table)
     require(spark.catalog.tableExists(table),
       s"$table does not exist — nothing to compact")

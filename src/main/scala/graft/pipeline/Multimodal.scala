@@ -58,34 +58,6 @@ object Multimodal {
         length(encode(col(textCol), "UTF-8")).cast("long").as("nBytes"))
         .as("meta"))
 
-  /** REAL image-header decode through the JDK's public ImageIO registry
-    * (PNG/JPEG/GIF/BMP readers ship with Java SE and run headless):
-    * (width, height, channels), with the dimensions read from the format
-    * header — `ImageReader.getWidth/getHeight` never decode pixel data,
-    * so the per-row cost is a few hundred bytes of parsing regardless of
-    * payload size, exactly what a 100 TB metadata-extraction pass wants.
-    * Returns None when no installed reader recognizes the payload (then
-    * the deterministic stub stands in for the non-image modalities this
-    * container has no codecs for). */
-  /** Shared reader boilerplate for the single-image decoders: a
-    * memory-backed stream, NOT ImageIO.createImageInputStream — the
-    * default SPI honors ImageIO.getUseCache() and spools a temp FILE per
-    * call (a disk write per row on the hot path, and an IOException
-    * where a bad payload should just mean None). Any decode exception
-    * maps to None.
-    *
-    * Reader resolution deliberately does NOT go through
-    * `ImageIO.getImageReaders` per row: that walks the JVM-GLOBAL SPI
-    * registry (an AppContext lookup + category iteration under shared
-    * state) and constructs+disposes a fresh `ImageReader` per payload,
-    * which serializes 32 decode threads on the registry at scale —
-    * measured as q40b's 18.8x sf0.1->sf1 knee in BASELINE §r18. Instead
-    * the SPI list is snapshotted once per JVM ([[readerSpis]], same
-    * registry ordering `getImageReaders` iterates) and reader INSTANCES
-    * are cached thread-local per SPI ([[localReaders]]) — selection
-    * semantics are identical (first SPI whose `canDecodeInput` accepts
-    * the stream wins), but the steady-state per-row cost is one
-    * `canDecodeInput` sniff + `setInput`/`reset`, no global state. */
   private lazy val readerSpis: Array[javax.imageio.spi.ImageReaderSpi] = {
     val it = javax.imageio.spi.IIORegistry.getDefaultInstance
       .getServiceProviders(classOf[javax.imageio.spi.ImageReaderSpi], true)
@@ -105,6 +77,25 @@ object Multimodal {
         new java.util.HashMap[javax.imageio.spi.ImageReaderSpi, javax.imageio.ImageReader]()
     }
 
+  /** Shared reader boilerplate for the single-image decoders: a
+    * memory-backed stream, NOT ImageIO.createImageInputStream — the
+    * default SPI honors ImageIO.getUseCache() and spools a temp FILE per
+    * call (a disk write per row on the hot path, and an IOException
+    * where a bad payload should just mean None). Any decode exception
+    * maps to None.
+    *
+    * Reader resolution deliberately does NOT go through
+    * `ImageIO.getImageReaders` per row: that walks the JVM-GLOBAL SPI
+    * registry (an AppContext lookup + category iteration under shared
+    * state) and constructs+disposes a fresh `ImageReader` per payload,
+    * which serializes 32 decode threads on the registry at scale —
+    * measured as q40b's 18.8x sf0.1->sf1 knee in BASELINE §r18. Instead
+    * the SPI list is snapshotted once per JVM ([[readerSpis]], same
+    * registry ordering `getImageReaders` iterates) and reader INSTANCES
+    * are cached thread-local per SPI ([[localReaders]]) — selection
+    * semantics are identical (first SPI whose `canDecodeInput` accepts
+    * the stream wins), but the steady-state per-row cost is one
+    * `canDecodeInput` sniff + `setInput`/`reset`, no global state. */
   private def withReader[T](payload: Array[Byte])(
       f: javax.imageio.ImageReader => Option[T]): Option[T] = {
     var iis: javax.imageio.stream.ImageInputStream = null
@@ -143,6 +134,15 @@ object Multimodal {
     (w, h, channels)
   }
 
+  /** REAL image-header decode through the JDK's public ImageIO registry
+    * (PNG/JPEG/GIF/BMP readers ship with Java SE and run headless):
+    * (width, height, channels), with the dimensions read from the format
+    * header — `ImageReader.getWidth/getHeight` never decode pixel data,
+    * so the per-row cost is a few hundred bytes of parsing regardless of
+    * payload size, exactly what a 100 TB metadata-extraction pass wants.
+    * Returns None when no installed reader recognizes the payload (then
+    * the deterministic stub stands in for the non-image modalities this
+    * container has no codecs for). */
   def decodeImageHeader(payload: Array[Byte]): Option[(Int, Int, Int)] =
     withReader(payload)(r => Some(headerOf(r)))
 

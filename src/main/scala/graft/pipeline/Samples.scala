@@ -123,18 +123,13 @@ object Samples {
     * compaction the table IS the sample, one file, k rows per group
     * (and the new cut: compacting at a smaller k than maintenance
     * deliberately truncates, and `kcap` records it for future
-    * probes). */
-  def compactSampleTable(spark: SparkSession, table: String, k: Int)
-      : Unit =
+    * probes). `maxGen > 0` compacts only above that many generations
+    * ([[MergeTables.compactIfOver]]); returns true iff it compacted. */
+  def compactSampleTable(spark: SparkSession, table: String, k: Int,
+      maxGen: Int = 0): Boolean =
     MergeTables.compact(spark, table, "hk",
       sampleFromTable(spark, table, k)
-        .withColumn("kcap", lit(k.toLong)))
-
-  /** [[compactSampleTable]] under the generation-count policy. */
-  def maybeCompactSampleTable(spark: SparkSession, table: String, k: Int,
-      maxGen: Int = MergeTables.defaultMaxGen): Boolean =
-    MergeTables.maybeCompactWith(spark, table, maxGen)(
-      compactSampleTable(spark, table, k))
+        .withColumn("kcap", lit(k.toLong)), maxGen)
 
   /** TAKEDOWN whole groups from a stratified sample table: min-k is not
     * invertible — a removed id cannot be backfilled from bounded state

@@ -61,13 +61,8 @@ object Similarity {
     // comparison is the same NaN-largest / -0.0==0.0 total order the
     // window's `cos DESC, id` sort used (see TopKAggregator), so ties
     // and degenerate zero-norm rows order bit-identically.
-    val topk = udaf(new graft.agg.TopKAggregator(k),
-      org.apache.spark.sql.Encoders.product[(Double, Long)])
-    scored.groupBy("q_id")
-      .agg(topk(col("cos"), col("id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "v")))
-      .select(col("q_id"), col("v._2").as("nb_id"),
-        (col("pos") + 1).cast("int").as("rank"), col("v._1").as("cos"))
+    graft.agg.TopKAggregator.topKPerKey(scored, "q_id", k, col("cos"),
+        col("id"))((rank, v, id) => Seq(id.as("nb_id"), rank, v.as("cos")))
   }
 
   /** All pairs (id_a < id_b) with cosine >= threshold — embedding-space
@@ -774,6 +769,12 @@ object Similarity {
   private def readShardCount(spark: SparkSession, table: String): Int =
     readShardMeta(spark, table)._1
 
+  /** The name grammar's tail after `_sv`: the layout's own side tables
+    * (centroids, commits, replay marks, tombstones), each optionally
+    * under its swap shadow. */
+  private val svTail = "(_c|_g|_g_hwm|" + MergeTables.tombstoneSuffix +
+    ")?(_compact_shadow)?$"
+
   /** Sweep the one-table layouts of every reshard generation OTHER
     * than `liveGen` — the heal for a reshard's one non-atomic residue:
     * its post-commit GC. A crash between the sidecar commit and the GC
@@ -788,9 +789,8 @@ object Similarity {
   private def dropStaleShardGens(spark: SparkSession, table: String,
       liveGen: Long): Unit = {
     val q = java.util.regex.Pattern.quote(table)
-    val tail = "(_c|_g|_g_hwm|_t)?(_compact_shadow)?$"
-    val gen0 = s"^${q}_sv$tail".r
-    val genR = s"^${q}_r(\\d+)_sv$tail".r
+    val gen0 = s"^${q}_sv$svTail".r
+    val genR = s"^${q}_r(\\d+)_sv$svTail".r
     spark.sessionState.catalog
       .listTables(spark.catalog.currentDatabase).map(_.table)
       .foreach { t =>
@@ -1045,8 +1045,7 @@ object Similarity {
     // a fresh layout has no committed batches, no tombstones, no stale
     // replay marks and no stale broadcasts
     MergeTables.dropHwms(spark, dataT + "_g")
-    spark.sql(s"DROP TABLE IF EXISTS `${dataT}_t`")
-    graft.sources.MapFiles.clearStaleLocation(spark, dataT + "_t")
+    MergeTables.dropTombstones(spark, dataT)
     require(cents.isEmpty || cents.length == nShards,
       s"${cents.length} pre-trained quantizers for $nShards shards")
     val quants = (0 until nShards).map(s =>
@@ -1112,8 +1111,7 @@ object Similarity {
       dropStaleShardGens(spark, table, liveGen = -1L)
     else {
       val q = java.util.regex.Pattern.quote(table)
-      val grammar =
-        s"^${q}(_r\\d+)?_sv(_c|_g|_g_hwm|_t)?(_compact_shadow)?$$"
+      val grammar = s"^${q}(_r\\d+)?_sv$svTail"
       val colliding = spark.sessionState.catalog
         .listTables(spark.catalog.currentDatabase).map(_.table)
         .filter(_.matches(grammar))
@@ -1160,17 +1158,18 @@ object Similarity {
     val commits = st.committed.toSeq.toDF("shard", "gen", "epoch")
     val committed = stored.join(broadcast(commits),
       Seq("shard", "gen", "epoch"), "left_semi")
-    val tt = st.dataT + "_t"
-    if (!spark.catalog.tableExists(tt)) committed
-    else {
-      val actives = st.epochs.zipWithIndex
-        .map { case (e, s) => (s, e) }.toSeq.toDF("shard", "epoch")
-      committed.join(
-        broadcast(spark.table(tt)
-          .join(broadcast(actives), Seq("shard", "epoch"), "left_semi")
-          .select("id").distinct()),
-        Seq("id"), "left_anti")
-    }
+    MergeTables.withoutTombstones(spark, st.dataT, committed, "id", "id")(
+      atActiveEpochs(st))
+  }
+
+  /** The `(shard, epoch)`-keyed rows of `df` at each shard's ACTIVE
+    * epoch — the sharded index's tombstone scope (a retrain retires the
+    * older tombstones) and the centroid GC's keep set. */
+  private def atActiveEpochs(st: SvState)(df: DataFrame): DataFrame = {
+    import df.sparkSession.implicits._
+    val actives = st.epochs.zipWithIndex
+      .map { case (e, s) => (s, e) }.toSeq.toDF("shard", "epoch")
+    df.join(broadcast(actives), Seq("shard", "epoch"), "left_semi")
   }
 
   /** The ONE-PLAN candidate stage of every probe: probe rows joined
@@ -1799,15 +1798,14 @@ object Similarity {
       MergeTables.withTableLock(table) {
     requireNonNegIds(ids, idCol, "deleteIvfVecsSharded")
     val st = svState(spark, table, fresh = true)
-    graft.sources.MapFiles.clearStaleLocation(spark, st.dataT + "_t")
     val em = svEpochMap(st)
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .withColumn("shard", pmod(col("id"), lit(st.nShards.toLong))
-        .cast("int"))
-      .withColumn("epoch", element_at(em, col("shard")))
-      .select("shard", "id", "epoch")
-      .write.format("parquet").mode("append")
-      .saveAsTable(st.dataT + "_t")
+    MergeTables.landTombstones(
+      ids.select(col(idCol).cast("long").as("id")).distinct()
+        .withColumn("shard", pmod(col("id"), lit(st.nShards.toLong))
+          .cast("int"))
+        .withColumn("epoch", element_at(em, col("shard")))
+        .select("shard", "id", "epoch"),
+      st.dataT)
   }
 
   /** The per-batch body of the streaming append, exposed for the
@@ -1850,23 +1848,8 @@ object Similarity {
       (batch, batchId, lineage) =>
         streamAppendAdcBatchSharded(batch, batchId, idCol, vecCol, table,
           lineage)
-        maxGen.foreach(mg => maybeCompactIvfAdcIndexSharded(spark, table, mg))
+        maxGen.foreach(mg => compactIvfAdcIndexSharded(spark, table, mg))
     }
-  }
-
-  /** [[compactIvfAdcIndexSharded]] iff more than `maxGen` generations
-    * have committed PER SHARD (the `_g` table holds one row per shard
-    * per commit) — the auto-compaction policy on the sharded tier.
-    * Returns true iff it compacted. */
-  def maybeCompactIvfAdcIndexSharded(spark: SparkSession, table: String,
-      maxGen: Int = MergeTables.defaultMaxGen): Boolean =
-      MergeTables.withTableLock(table) {
-    require(maxGen >= 1, s"maxGen=$maxGen")
-    val st = svState(spark, table, fresh = true)
-    spark.catalog.refreshTable(st.dataT + "_g")
-    if (spark.table(st.dataT + "_g").count() <=
-        maxGen.toLong * st.nShards) false
-    else { compactIvfAdcIndexSharded(spark, table); true }
   }
 
   /** Rewrite the sharded index's file generations into ONE, physically
@@ -1876,43 +1859,48 @@ object Similarity {
     * active epoch (gen 0, which is committed in every reachable
     * state). One whole-layout rewrite replaces the per-shard layout's
     * N table rewrites. Replay marks carried first; crash exposure is
-    * the same two-catalog-op DROP/RENAME window, healed on next touch. */
-  def compactIvfAdcIndexSharded(spark: SparkSession, table: String)
-      : Unit = MergeTables.withTableLock(table) {
+    * the same two-catalog-op DROP/RENAME window, healed on next touch.
+    *
+    * With `maxGen > 0` it compacts only once more than `maxGen`
+    * generations have committed (distinct `gen` of `table_sv_g`) — the
+    * auto-compaction policy of the sharded tier, safe inside a live
+    * streaming lineage ([[MergeTables.compactIfOver]]). Returns true iff
+    * it compacted. */
+  def compactIvfAdcIndexSharded(spark: SparkSession, table: String,
+      maxGen: Int = 0): Boolean = MergeTables.withTableLock(table) {
     val st = svState(spark, table, fresh = true)
     val dataT = st.dataT
-    for (s <- Seq("", "_g", "_t", "_c")
-         if spark.catalog.tableExists(dataT + s))
-      spark.catalog.refreshTable(dataT + s)
-    // replay marks carried BEFORE the generation reset clears the keys
-    MergeTables.carryHwms(spark, dataT + "_g")
-    val em = svEpochMap(st)
-    // bucket-preserving read -> the bucketed swap plans exchange-free
-    MergeTables.swapInKeyed(spark,
-      svLiveRows(spark, st, bucketedRead = true)
-        .select("gcell", "shard", "cell", "id", "qc", "scale")
-        .withColumn("gen", lit(0L))
-        .withColumn("epoch", element_at(em, col("shard"))),
-      "gcell", dataT)
-    import spark.implicits._
-    MergeTables.swapInKeyed(spark,
-      (0 until st.nShards).map(s => (s, 0L, -1L, st.epochs(s)))
-        .toDF("shard", "gen", "batch_key", "epoch"),
-      "gen", dataT + "_g")
-    spark.sql(s"DROP TABLE IF EXISTS `${dataT}_t`")
-    // centroid GC: retired or orphan epochs' centroids leave with the
-    // rewrite — swap-written through the healed shadow protocol
-    spark.catalog.refreshTable(dataT + "_c")
-    val actives = st.epochs.zipWithIndex
-      .map { case (e, s) => (s, e) }.toSeq.toDF("shard", "epoch")
-    if (spark.table(dataT + "_c").select("shard", "epoch").distinct()
-        .count() > st.nShards)
+    MergeTables.compactIfOver(spark, table, dataT + "_g", maxGen) {
+      for (t <- Seq(dataT, dataT + "_g", MergeTables.tombstoneTable(dataT),
+             dataT + "_c")
+           if spark.catalog.tableExists(t))
+        spark.catalog.refreshTable(t)
+      // replay marks carried BEFORE the generation reset clears the keys
+      MergeTables.carryHwms(spark, dataT + "_g")
+      val em = svEpochMap(st)
+      // bucket-preserving read -> the bucketed swap plans exchange-free
       MergeTables.swapInKeyed(spark,
-        spark.table(dataT + "_c")
-          .join(broadcast(actives), Seq("shard", "epoch"), "left_semi")
-          .localCheckpoint(),
-        "cell", dataT + "_c")
-    invalidateSvCaches(table, dataT)
+        svLiveRows(spark, st, bucketedRead = true)
+          .select("gcell", "shard", "cell", "id", "qc", "scale")
+          .withColumn("gen", lit(0L))
+          .withColumn("epoch", element_at(em, col("shard"))),
+        "gcell", dataT)
+      import spark.implicits._
+      MergeTables.swapInKeyed(spark,
+        (0 until st.nShards).map(s => (s, 0L, -1L, st.epochs(s)))
+          .toDF("shard", "gen", "batch_key", "epoch"),
+        "gen", dataT + "_g")
+      MergeTables.dropTombstones(spark, dataT)
+      // centroid GC: retired or orphan epochs' centroids leave with the
+      // rewrite — swap-written through the healed shadow protocol
+      spark.catalog.refreshTable(dataT + "_c")
+      if (spark.table(dataT + "_c").select("shard", "epoch").distinct()
+          .count() > st.nShards)
+        MergeTables.swapInKeyed(spark,
+          atActiveEpochs(st)(spark.table(dataT + "_c")).localCheckpoint(),
+          "cell", dataT + "_c")
+      invalidateSvCaches(table, dataT)
+    }
   }
 
   /** RETRAIN ONE SHARD's quantizer — the per-shard maintenance unit
@@ -1944,14 +1932,9 @@ object Similarity {
     val attempt = 1L + math.max(st.epochs(shard),
       if (cMax.isNullAt(0)) -1L else cMax.getLong(0))
     val sub = vecs.filter(shardOf(idCol, st.nShards) === shard)
-    val live =
-      if (!spark.catalog.tableExists(dataT + "_t")) sub
-      else sub.join(
-        broadcast(spark.table(dataT + "_t")
-          .filter(col("shard") === shard &&
-            col("epoch") === st.epochs(shard))
-          .select("id").distinct().withColumnRenamed("id", idCol)),
-        Seq(idCol), "left_anti")
+    val live = MergeTables.withoutTombstones(spark, dataT, sub, idCol,
+      "id")(_.filter(col("shard") === shard &&
+        col("epoch") === st.epochs(shard)))
     val (nlist, _) = ivfParams(math.max(1L, live.count()), targetRecall)
     val quantizer = trainCoarseQuantizer(
       trainingSample(live, idCol, vecCol, trainingCap(nlist)),
@@ -2053,19 +2036,8 @@ object Similarity {
     // survivors: the live corpus minus every shard's tombstones at
     // that shard's ACTIVE epoch (an id lives in exactly one shard, so
     // the union is the global delete set)
-    import spark.implicits._
-    val survivors =
-      if (!spark.catalog.tableExists(st.dataT + "_t")) vecs
-      else {
-        val actives = st.epochs.zipWithIndex
-          .map { case (e, s) => (s, e) }.toSeq.toDF("shard", "epoch")
-        vecs.join(
-          broadcast(spark.table(st.dataT + "_t")
-            .join(broadcast(actives), Seq("shard", "epoch"),
-              "left_semi")
-            .select("id").distinct().withColumnRenamed("id", idCol)),
-          Seq(idCol), "left_anti")
-      }
+    val survivors = MergeTables.withoutTombstones(spark, st.dataT, vecs,
+      idCol, "id")(atActiveEpochs(st))
     // inert land 1: the fresh one-table layout at the NEXT generation's
     // names — invisible to every reader until the sidecar flips
     val counts = shardCountsChecked(survivors, idCol, newShards,
@@ -2079,6 +2051,7 @@ object Similarity {
     MergeTables.carryHwms(spark, st.dataT + "_g",
       into = Some(MergeTables.hwmTable(dataT2 + "_g")))
     // THE commit: one sidecar swap to (newShards, g2)
+    import spark.implicits._
     MergeTables.swapInKeyed(spark,
       Seq((newShards, g2)).toDF("nshards", "rsgen"), "nshards",
       table + "_sh")
@@ -2418,27 +2391,6 @@ object Similarity {
     rankTopK(candidates, k)
   }
 
-  /** Reciprocal-rank fusion — the standard hybrid-retrieval combiner
-    * (Cormack/Clarke/Buettcher, SIGIR'09): each leg (a ranked list per
-    * query, e.g. the BM25 lexical leg and a dense ANN leg) contributes
-    * 1/(c + rank) per hit; candidates re-rank by the summed score. Rank-
-    * based, so legs with incomparable score scales fuse without
-    * normalization.
-    *
-    * Each leg must carry (qCol, idCol, rankCol). Returns
-    * (q_id, doc_id, rank, rrf_u) with rank <= k, where
-    * `rrf_u = floor(Σ 1/(c+rank) · 1e9)` — nano-units on the same
-    * quantize-before-rank contract as [[TextAnalysis.bm25TopK]]. With
-    * IEEE doubles the sum is bit-identical across engines for ≤2 legs
-    * (two-term addition is exactly commutative), so for the common
-    * lexical+dense pair the quantization is belt-and-braces, not load-
-    * bearing.
-    *
-    * Scale shape: inputs are already top-k lists — queries × k rows per
-    * leg, orders of magnitude below any corpus — so the union + grouped
-    * sum shuffle is rank-list-sized, carries two longs and a double per
-    * row, and never touches text or vectors; the per-query cut reuses
-    * the bounded-state [[graft.agg.TopKAggregator]] partial-agg path. */
   /** Cross-tier retrieval agreement — the audit overlay for hybrid
     * search (qa4's sibling: qa4 audits the dense tier's approximation
     * quality; this audits how much the lexical and dense legs AGREE,
@@ -2574,6 +2526,27 @@ object Similarity {
       rrfFuse(Seq(lex, dense), "q_id", "doc_id", "rank", k = k, c = c)
     }
 
+  /** Reciprocal-rank fusion — the standard hybrid-retrieval combiner
+    * (Cormack/Clarke/Buettcher, SIGIR'09): each leg (a ranked list per
+    * query, e.g. the BM25 lexical leg and a dense ANN leg) contributes
+    * 1/(c + rank) per hit; candidates re-rank by the summed score. Rank-
+    * based, so legs with incomparable score scales fuse without
+    * normalization.
+    *
+    * Each leg must carry (qCol, idCol, rankCol). Returns
+    * (q_id, doc_id, rank, rrf_u) with rank <= k, where
+    * `rrf_u = floor(Σ 1/(c+rank) · 1e9)` — nano-units on the same
+    * quantize-before-rank contract as [[TextAnalysis.bm25TopK]]. With
+    * IEEE doubles the sum is bit-identical across engines for ≤2 legs
+    * (two-term addition is exactly commutative), so for the common
+    * lexical+dense pair the quantization is belt-and-braces, not load-
+    * bearing.
+    *
+    * Scale shape: inputs are already top-k lists — queries × k rows per
+    * leg, orders of magnitude below any corpus — so the union + grouped
+    * sum shuffle is rank-list-sized, carries two longs and a double per
+    * row, and never touches text or vectors; the per-query cut reuses
+    * the bounded-state [[graft.agg.TopKAggregator]] partial-agg path. */
   def rrfFuse(legs: Seq[DataFrame], qCol: String, idCol: String,
       rankCol: String, k: Int, c: Int = 60): DataFrame = {
     require(legs.nonEmpty, "rrfFuse: no legs")
@@ -2603,13 +2576,8 @@ object Similarity {
         (lit(1.0) / (lit(c.toDouble) + col("rank_d"))).as("contrib"))
       .groupBy("q_id", "doc_id").agg(sum("contrib").as("rrf"))
       .withColumn("rrf_u", floor(col("rrf") * 1e9).cast("long"))
-    val topk = udaf(new graft.agg.TopKAggregator(k),
-      org.apache.spark.sql.Encoders.product[(Double, Long)])
-    su.groupBy("q_id")
-      .agg(topk(col("rrf_u").cast("double"), col("doc_id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "v")))
-      .select(col("q_id"), col("v._2").as("doc_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("v._1").cast("long").as("rrf_u"))
+    graft.agg.TopKAggregator.topKPerKey(su, "q_id", k,
+        col("rrf_u").cast("double"), col("doc_id"))((rank, v, id) =>
+      Seq(id.as("doc_id"), rank, v.cast("long").as("rrf_u")))
   }
 }

@@ -266,23 +266,15 @@ object Sketches {
     * == appended == rebuilt is definitional; fully-cancelled buckets
     * are physically dropped. The rewrite resets `batch_key` to −1,
     * which is what permits a FRESH streaming lineage after a
-    * compaction. */
-  def compactSketchTable(spark: SparkSession, table: String): Unit =
+    * compaction. With `maxGen > 0` it compacts only once more than
+    * `maxGen` generations have accumulated — the auto-compaction policy
+    * a maintenance loop calls after its appends, INCLUDING inside a
+    * live streaming lineage ([[MergeTables.compactIfOver]]; qfh gates
+    * the composition). Returns true iff it compacted. */
+  def compactSketchTable(spark: SparkSession, table: String,
+      maxGen: Int = 0): Boolean =
     MergeTables.compact(spark, table, "b_low",
-      mergedBuckets(spark, table))
-
-  /** [[compactSketchTable]] iff more than `maxGen` generations have
-    * accumulated — the auto-compaction policy a maintenance loop calls
-    * after its appends, INCLUDING inside a live streaming lineage (the
-    * rewrite carries the lineage's replay high-water marks —
-    * [[MergeTables.maybeCompact]]; qfh gates the composition): probe
-    * fan-in and the per-append replay probe both scale with the
-    * generation count, so the loop bounds them at ~maxGen without a
-    * human deciding when. Returns true iff it compacted. */
-  def maybeCompactSketchTable(spark: SparkSession, table: String,
-      maxGen: Int = MergeTables.defaultMaxGen): Boolean =
-    MergeTables.maybeCompact(spark, table, "b_low", maxGen)(
-      mergedBuckets(spark, table))
+      mergedBuckets(spark, table), maxGen)
 
   /** RETENTION for time-keyed maintained profiles (the qfa shape):
     * retract every group of a grouped sketch whose key sorts below

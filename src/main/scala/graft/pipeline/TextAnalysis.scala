@@ -301,14 +301,9 @@ object TextAnalysis {
           count(lit(1)).as("nmatch"), max("nq").as("nq"))
         .filter(col("nmatch") === col("nq")))
       .withColumn("score_u", floor(col("score") * 1e6).cast("long"))
-    val topk = udaf(new graft.agg.TopKAggregator(k),
-      org.apache.spark.sql.Encoders.product[(Double, Long)])
-    su.groupBy("q_id")
-      .agg(topk(col("score_u").cast("double"), col("doc_id")).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "v")))
-      .select(col("q_id"), col("v._2").as("doc_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("v._1").cast("long").as("score_u"))
+    graft.agg.TopKAggregator.topKPerKey(su, "q_id", k,
+        col("score_u").cast("double"), col("doc_id"))((rank, v, id) =>
+      Seq(id.as("doc_id"), rank, v.cast("long").as("score_u")))
   }
 
   /** Positional phrase search — the capability bag-of-words BM25 cannot
@@ -518,9 +513,7 @@ object TextAnalysis {
     // must not outlive it (leftover tombstones would silently delete
     // the fresh build's postings at matching ids)
     MergeTables.dropHwms(docs.sparkSession, table + "_s")
-    docs.sparkSession.sql(s"DROP TABLE IF EXISTS `${table}_t`")
-    graft.sources.MapFiles.clearStaleLocation(docs.sparkSession,
-      table + "_t")
+    MergeTables.dropTombstones(docs.sparkSession, table)
     graft.sources.MapFiles.write(
       postings(docs, idCol, textCol).withColumn("gen", lit(0L)), "term",
       buckets, table)
@@ -579,13 +572,8 @@ object TextAnalysis {
     val stored =
       if (bucketedRead) graft.sources.MapFiles.readBucketed(spark, table)
       else spark.table(table)
-    val committed = committedOnly(stored)
-    val live =
-      if (!spark.catalog.tableExists(table + "_t")) committed
-      else committed.join(broadcast(
-          committedOnly(spark.table(table + "_t"))
-          .select("doc_id").distinct()),
-        Seq("doc_id"), "left_anti")
+    val live = MergeTables.withoutTombstones(spark, table,
+      committedOnly(stored), "doc_id", "doc_id")(committedOnly)
     (live, stats)
   }
 
@@ -738,26 +726,8 @@ object TextAnalysis {
           lineage)
         // the unattended policy (qfm): compaction is safe MID-LINEAGE
         // since r16 — the rewrite carries the replay high-water marks
-        maxGen.foreach(mg => maybeCompactBm25Index(spark, table, mg))
+        maxGen.foreach(mg => compactBm25Index(spark, table, mg))
     }
-  }
-
-  /** [[compactBm25Index]] iff more than `maxGen` generations have
-    * committed — the auto-compaction policy on the lexical index tier
-    * (committed operations = rows of the scalar table: the build, each
-    * append/streamed batch, each delete). Safe inside a live streaming
-    * lineage since r16 ([[compactBm25Index]] carries the replay
-    * marks). Returns true iff it compacted. */
-  def maybeCompactBm25Index(spark: SparkSession, table: String,
-      maxGen: Int = MergeTables.defaultMaxGen): Boolean =
-      MergeTables.withTableLock(table) {
-    // locked and healed before the threshold read: an unlocked probe
-    // could race a same-process compactor's DROP->RENAME window
-    require(maxGen >= 1, s"maxGen=$maxGen")
-    requireBm25(spark, table)
-    spark.catalog.refreshTable(table + "_s")
-    if (spark.table(table + "_s").count() <= maxGen) false
-    else { compactBm25Index(spark, table); true }
   }
 
   /** Delete documents from a persisted BM25 index — the takedown /
@@ -791,11 +761,8 @@ object TextAnalysis {
       coalesce(sum(col("dl").cast("long")), lit(0L)).as("s")).collect()(0)
     if (agg.getLong(0) == 0L) return // nothing live to delete
     val gen = graft.sources.MapFiles.freshGen()
-    // first delete in a fresh process: a stale tombstone dir from a
-    // previous catalog's life would block the create-on-append
-    graft.sources.MapFiles.clearStaleLocation(spark, table + "_t")
-    eff.select(lit(gen).as("gen"), col("doc_id"))
-      .write.format("parquet").mode("append").saveAsTable(table + "_t")
+    MergeTables.landTombstones(eff.select(lit(gen).as("gen"), col("doc_id")),
+      table)
     commitBm25Gen(spark, table, gen, -agg.getLong(0), -agg.getLong(1))
   }
 
@@ -813,34 +780,45 @@ object TextAnalysis {
     * compacted rows are generation 0, always committed, and the deltas
     * sum to the same totals) and stale tombstones are inert. Gated:
     * compacted == appended == one-shot rebuild, stored rows and probe
-    * results identical (spec + qd2's oracle row). */
-  def compactBm25Index(spark: SparkSession, table: String): Unit =
-      MergeTables.withTableLock(table) {
+    * results identical (spec + qd2's oracle row).
+    *
+    * With `maxGen > 0` it compacts only once more than `maxGen`
+    * generations have committed (one `table_s` row each: the build,
+    * every append or streamed batch, every delete) — the
+    * auto-compaction policy of the lexical tier, safe inside a live
+    * streaming lineage ([[MergeTables.compactIfOver]]). Returns true iff
+    * it compacted. */
+  def compactBm25Index(spark: SparkSession, table: String,
+      maxGen: Int = 0): Boolean = MergeTables.withTableLock(table) {
+    // locked and healed before the threshold read: an unlocked probe
+    // could race a same-process compactor's DROP->RENAME window
     requireBm25(spark, table)
-    // list fresh before the rewrite: an in-loop compaction runs in the
-    // MAIN session while the batches landed from micro-batch CLONE
-    // sessions — a stale relation cached here would silently compact
-    // away the just-streamed generations (the session relation-cache
-    // trap, MergeTables.freshView's argument)
-    for (s <- Seq("", "_s", "_t")
-         if spark.catalog.tableExists(table + s))
-      spark.catalog.refreshTable(table + s)
-    val (live, _) = committedIndex(spark, table, bucketedRead = true)
-    // replay marks carried BEFORE the scalar collapse clears the keys
-    MergeTables.carryHwms(spark, table + "_s")
-    val totals = spark.table(table + "_s")
-      .agg(coalesce(sum("n_docs"), lit(0L)),
-        coalesce(sum("sum_dl"), lit(0L))).collect()(0)
-    MergeTables.swapInKeyed(spark,
-      live.select("term", "doc_id", "dl", "tf", "positions")
-        .withColumn("gen", lit(0L)),
-      "term", table)
-    import spark.implicits._
-    MergeTables.swapInKeyed(spark,
-      Seq((0L, totals.getLong(0), totals.getLong(1), -1L))
-        .toDF("gen", "n_docs", "sum_dl", "batch_key"),
-      "gen", table + "_s")
-    spark.sql(s"DROP TABLE IF EXISTS `${table}_t`")
+    MergeTables.compactIfOver(spark, table, table + "_s", maxGen) {
+      // list fresh before the rewrite: an in-loop compaction runs in the
+      // MAIN session while the batches landed from micro-batch CLONE
+      // sessions — a stale relation cached here would silently compact
+      // away the just-streamed generations (the session relation-cache
+      // trap, MergeTables.freshView's argument)
+      for (t <- Seq(table, table + "_s", MergeTables.tombstoneTable(table))
+           if spark.catalog.tableExists(t))
+        spark.catalog.refreshTable(t)
+      val (live, _) = committedIndex(spark, table, bucketedRead = true)
+      // replay marks carried BEFORE the scalar collapse clears the keys
+      MergeTables.carryHwms(spark, table + "_s")
+      val totals = spark.table(table + "_s")
+        .agg(coalesce(sum("n_docs"), lit(0L)),
+          coalesce(sum("sum_dl"), lit(0L))).collect()(0)
+      MergeTables.swapInKeyed(spark,
+        live.select("term", "doc_id", "dl", "tf", "positions")
+          .withColumn("gen", lit(0L)),
+        "term", table)
+      import spark.implicits._
+      MergeTables.swapInKeyed(spark,
+        Seq((0L, totals.getLong(0), totals.getLong(1), -1L))
+          .toDF("gen", "n_docs", "sum_dl", "batch_key"),
+        "gen", table + "_s")
+      MergeTables.dropTombstones(spark, table)
+    }
   }
 
   /** [[bm25TopK]] probing the PERSISTED index instead of re-exploding
@@ -1160,31 +1138,6 @@ object TextAnalysis {
         .as("bpe_tokens"),
       length(col(textCol)).as("n_chars"))
 
-  /** Count-min heavy hitters (qa8) — the top-`k` most frequent tokens
-    * estimated from a BOUNDED `depth × width` counter table, the sketch
-    * a 100 TB frequency audit actually maintains (an exact per-token
-    * count table is vocabulary-sized; the sketch is ~4 KB here at ANY
-    * corpus size). Each occurrence increments `depth` counters chosen by
-    * seeded portable hashes; a token's estimate is the MIN of its
-    * counters — classic count-min, so the error is ONE-SIDED
-    * (`est >= true count`, spec-asserted, with overestimation bounded by
-    * bucket collisions and gone at large `width`, also spec-asserted).
-    * The seeds are fixed strings through [[Portable.hash60Fast]], so the
-    * whole sketch — collisions included — is a pure function of the
-    * data and the DuckDB oracle reproduces it bit-for-bit: unlike the
-    * q07b HLL row (engine-internal sketch, declared no-oracle), this
-    * sketch tier is ORACLE-GATED.
-    *
-    * Returns the top-`k` rows `(tok, est)` by (est desc, tok) — a
-    * deterministic total order, so the cut is engine-stable.
-    *
-    * Scale shape: the counter build is one explode(depth) + hash
-    * aggregate whose OUTPUT is depth×width rows regardless of corpus
-    * size (map-side partials absorb the explode); the only
-    * corpus-dependent exchange carries distinct tokens (vocabulary-
-    * sized); estimates join the counters as a broadcast (4096 rows
-    * here); the final cut is a TakeOrdered (per-partition top-k, no
-    * single-partition sort funnel — plan-asserted). */
   /** The seeded (h, b) counter coordinates of one token — shared by the
     * batch sketch, the streaming sketch, and the estimate join, so the
     * three cannot hash differently. */
@@ -1217,6 +1170,31 @@ object TextAnalysis {
       .agg(count(lit(1)).as("c"))
   }
 
+  /** Count-min heavy hitters (qa8) — the top-`k` most frequent tokens
+    * estimated from a BOUNDED `depth × width` counter table, the sketch
+    * a 100 TB frequency audit actually maintains (an exact per-token
+    * count table is vocabulary-sized; the sketch is ~4 KB here at ANY
+    * corpus size). Each occurrence increments `depth` counters chosen by
+    * seeded portable hashes; a token's estimate is the MIN of its
+    * counters — classic count-min, so the error is ONE-SIDED
+    * (`est >= true count`, spec-asserted, with overestimation bounded by
+    * bucket collisions and gone at large `width`, also spec-asserted).
+    * The seeds are fixed strings through [[Portable.hash60Fast]], so the
+    * whole sketch — collisions included — is a pure function of the
+    * data and the DuckDB oracle reproduces it bit-for-bit: unlike the
+    * q07b HLL row (engine-internal sketch, declared no-oracle), this
+    * sketch tier is ORACLE-GATED.
+    *
+    * Returns the top-`k` rows `(tok, est)` by (est desc, tok) — a
+    * deterministic total order, so the cut is engine-stable.
+    *
+    * Scale shape: the counter build is one explode(depth) + hash
+    * aggregate whose OUTPUT is depth×width rows regardless of corpus
+    * size (map-side partials absorb the explode); the only
+    * corpus-dependent exchange carries distinct tokens (vocabulary-
+    * sized); estimates join the counters as a broadcast (4096 rows
+    * here); the final cut is a TakeOrdered (per-partition top-k, no
+    * single-partition sort funnel — plan-asserted). */
   def countMinTopK(docs: DataFrame, idCol: String, textCol: String,
       k: Int, width: Int = 1024, depth: Int = 4): DataFrame = {
     require(k > 0 && width > 0 && depth > 0, s"k=$k w=$width d=$depth")
@@ -1377,21 +1355,15 @@ object TextAnalysis {
   /** Collapse all generations into one gen-0 file — see
     * [[writeCountMinTable]] and [[MergeTables.compact]]. The stored
     * params ride through the rewrite, so the guard survives
-    * compaction. */
-  def compactCountMinTable(spark: SparkSession, table: String): Unit = {
-    val (w, d) = cmParamsOf(spark, table)
-    MergeTables.compact(spark, table, "b",
-      withCmParams(countMinFromTable(spark, table), w, d))
-  }
-
-  /** [[compactCountMinTable]] iff more than `maxGen` generations
-    * accumulated — the maintenance-loop policy
-    * ([[MergeTables.maybeCompactWith]]; threshold from BASELINE.md's
-    * measured curve). */
-  def maybeCompactCountMinTable(spark: SparkSession, table: String,
-      maxGen: Int = MergeTables.defaultMaxGen): Boolean =
-    MergeTables.maybeCompactWith(spark, table, maxGen)(
-      compactCountMinTable(spark, table))
+    * compaction. `maxGen > 0` compacts only above that many
+    * generations ([[MergeTables.compactIfOver]]); returns true iff it
+    * compacted. */
+  def compactCountMinTable(spark: SparkSession, table: String,
+      maxGen: Int = 0): Boolean =
+    MergeTables.compact(spark, table, "b", {
+      val (w, d) = cmParamsOf(spark, table)
+      withCmParams(countMinFromTable(spark, table), w, d)
+    }, maxGen)
 
   /** Heavy-hitter top-k SERVED FROM the persisted counter table (qf5;
     * per group, qfb) — [[countMinTopK]]'s estimate leg over

@@ -6,11 +6,12 @@ import graft.Tables
 import graft.pipeline.{MergeTables, Sketches, Similarity, TextAnalysis}
 
 /** Probe-cost vs generation-count curve — the measurement behind the
-  * auto-compaction threshold ([[MergeTables.maybeCompact]], r14 verdict
-  * item 4): how much does an uncompacted table's generation count cost
-  * a probe (merge fan-in over more files) and an append (the per-batch
-  * replay check's footer probes)? Run at sf0.1; results recorded in
-  * BASELINE.md, from which the default maxGen is chosen.
+  * auto-compaction threshold (`maxGen` of the tier compactors,
+  * [[MergeTables.compactIfOver]], r14 verdict item 4): how much does
+  * an uncompacted table's generation count cost a probe (merge fan-in
+  * over more files) and an append (the per-batch replay check's footer
+  * probes)? Run at sf0.1; results recorded in
+  * BASELINE.md, from which RUNBOOK's recommended maxGen is chosen.
   *
   * The sketch tier's generations are FABRICATED in two write jobs (the
   * probe cost depends on files × rows, not on how the files got there;
@@ -160,14 +161,14 @@ object GenCurve {
 
     if (run("online")) {
     // ---- in-loop auto-compaction: amortized per-batch cost ----
-    // The unattended loops (qfh/qfk/qfl, r16) run maybeCompact after
-    // every micro-batch. Per batch that costs (a) the generation-count
-    // probe always and (b) one state-sized rewrite every ~maxGen
-    // batches. Measured here: 40 micro-batches streamed into the
+    // The unattended loops (qfh/qfk/qfl, r16) run a maxGen compaction
+    // after every micro-batch. Per batch that costs (a) the
+    // generation-count probe always and (b) one state-sized rewrite
+    // every ~maxGen batches. Measured here: 40 micro-batches streamed into the
     // qfa-shaped hour-keyed grouped sketch under no policy vs
-    // maxGen 64 (the default — never trips at this depth, so it prices
-    // the pure threshold probe) vs 8 and 2 (aggressive, pricing the
-    // amortized rewrites).
+    // maxGen 64 (the recommended one — never trips at this depth, so it
+    // prices the pure threshold probe) vs 8 and 2 (aggressive, pricing
+    // the amortized rewrites).
     val evb = Tables.events(spark, src)
       .filter(col("value").isNotNull && col("ts").isNotNull)
       .select(expr("unix_timestamp(ts) div 3600").as("g"),
@@ -188,8 +189,7 @@ object GenCurve {
         graft.pipeline.Sketches.streamAppendSketchBatch(
           b, i.toLong, col("v"), tbl, lineage = 1L, group = Some(col("g")))
         if (mg > 0)
-          graft.pipeline.Sketches.maybeCompactSketchTable(
-            spark, tbl, mg)
+          graft.pipeline.Sketches.compactSketchTable(spark, tbl, mg)
       }
       val perBatch = (System.nanoTime() - t0) / 1e9 / 39
       val gens = MergeTables.generationCount(spark, tbl)

@@ -2434,9 +2434,9 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
       TextAnalysis.appendCountMinTable(docs, "text", "cm_pg_t",
         width = 64, depth = 3)
       val gens = MergeTables.generationCount(spark, "cm_pg_t")
-      assert(!TextAnalysis.maybeCompactCountMinTable(spark, "cm_pg_t",
+      assert(!TextAnalysis.compactCountMinTable(spark, "cm_pg_t",
         maxGen = gens.toInt))
-      assert(TextAnalysis.maybeCompactCountMinTable(spark, "cm_pg_t",
+      assert(TextAnalysis.compactCountMinTable(spark, "cm_pg_t",
         maxGen = gens.toInt - 1))
       assert(MergeTables.generationCount(spark, "cm_pg_t") == 1L)
       denied(TextAnalysis.countMinTopKIndexed(docs, "text", "cm_pg_t",
@@ -3049,11 +3049,11 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
       // lock+heal discipline)
       spark.sql("ALTER TABLE bm25_cmp_idx_s RENAME TO " +
         "bm25_cmp_idx_s_compact_shadow")
-      assert(!TextAnalysis.maybeCompactBm25Index(spark, "bm25_cmp_idx",
+      assert(!TextAnalysis.compactBm25Index(spark, "bm25_cmp_idx",
           maxGen = 64),
         "one compacted generation should not re-trip the threshold")
       assert(spark.catalog.tableExists("bm25_cmp_idx_s"),
-        "maybeCompactBm25Index did not heal the scalar swap window")
+        "compactBm25Index(maxGen) did not heal the scalar swap window")
     } finally {
       spark.sql("DROP TABLE IF EXISTS bm25_cmp_idx")
       spark.sql("DROP TABLE IF EXISTS bm25_cmp_idx_s")
@@ -3950,7 +3950,7 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("maybeCompactSketchTable: no-op at or below maxGen, compacts above, probe unchanged") {
+  test("compactSketchTable(maxGen): no-op at or below maxGen, compacts above, probe unchanged") {
     import graft.pipeline.MergeTables
     val parts = vals.grouped(500).toSeq // 4 batches
     try {
@@ -3963,10 +3963,10 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
           spark, "sk_auto_t", Seq(50, 90, 99))
         .as[(Int, Long, Long, Long)].collect().sorted.toSeq
       // at the threshold: a no-op (generations untouched)
-      assert(!Sketches.maybeCompactSketchTable(spark, "sk_auto_t", 4))
+      assert(!Sketches.compactSketchTable(spark, "sk_auto_t", 4))
       assert(MergeTables.generationCount(spark, "sk_auto_t") == 4L)
       // above it: compacts to one generation, probe bit-identical
-      assert(Sketches.maybeCompactSketchTable(spark, "sk_auto_t", 3))
+      assert(Sketches.compactSketchTable(spark, "sk_auto_t", 3))
       assert(MergeTables.generationCount(spark, "sk_auto_t") == 1L)
       val postProbe = Sketches.quantilesFromSketchTable(
           spark, "sk_auto_t", Seq(50, 90, 99))
@@ -3974,7 +3974,7 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
       assert(postProbe == preProbe)
       // idempotent from here: the compacted table sits below any sane
       // threshold, so a maintenance loop's repeated calls do nothing
-      assert(!Sketches.maybeCompactSketchTable(spark, "sk_auto_t", 3))
+      assert(!Sketches.compactSketchTable(spark, "sk_auto_t", 3))
     } finally {
       spark.sql("DROP TABLE IF EXISTS sk_auto_t")
       spark.sql("DROP TABLE IF EXISTS sk_auto_t_compact_shadow")
@@ -4438,5 +4438,171 @@ class SketchesSpec extends AnyFunSuite with SparkTest {
     } finally {
       ts.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
+  }
+}
+
+/** The one compaction trigger ([[graft.pipeline.MergeTables.compactIfOver]])
+  * over every generation-keyed tier: with g committed generations in the
+  * tier's commit table, `compact…(maxGen = g)` is a no-op that leaves
+  * the stored rows unchanged, `maxGen = g - 1` compacts to one
+  * generation with the probe rows kept, and the default (`maxGen = 0`)
+  * compacts whatever it finds. */
+class CompactionTriggerSpec extends AnyFunSuite with SparkTest {
+  import graft.pipeline.{MergeTables, Samples, Sketches}
+  import graft.agg.ValueAggregators
+
+  private val d = "/root/testdata/sf0.001"
+
+  /** One tier's data: its commit table, how to land generation i (0 is
+    * the build), its compactor, and what a probe reads. */
+  private case class Tier(name: String, tables: Seq[String],
+      commitTable: String, land: Int => Unit,
+      compact: Option[Int] => Boolean, probe: () => Seq[String])
+
+  /** Sorted rows as text, binary fields (ADC codes) as hex. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString
+      case x => String.valueOf(x)
+    }.mkString(",")).sorted.toSeq
+
+  private def stored(t: Tier): Seq[Seq[String]] =
+    t.tables.map(n => rows(MergeTables.freshView(spark, n)))
+
+  private def gens(t: Tier): Long =
+    MergeTables.generationCount(spark, t.commitTable)
+
+  private lazy val docs = Tables.documents(spark, d)
+    .filter(col("doc_id") < 90).select("doc_id", "text").cache()
+  private lazy val vecs = spark.read.parquet(s"$d/embeddings.parquet")
+    .filter(col("vec_id") < 300).cache()
+  /** Generation i's rows: a quarter of the ids, both parities (so both
+    * ADC shards), generations 0-2 landed up front and 3 later. */
+  private def slice(df: org.apache.spark.sql.DataFrame, idCol: String,
+      i: Int) = df.filter(floor(col(idCol) / 2) % 4 === i)
+
+  private def adcTier(t: String): Tier = Tier("adc", Seq(t + "_sv",
+      t + "_sv_g"), t + "_sv_g",
+    i => if (i == 0) Similarity.writeIvfAdcIndexSharded(
+        slice(vecs, "vec_id", 0), "vec_id", "embedding", t, nShards = 2)
+      else Similarity.appendIvfAdcIndexSharded(slice(vecs, "vec_id", i),
+        "vec_id", "embedding", t),
+    {
+      case None => Similarity.compactIvfAdcIndexSharded(spark, t)
+      case Some(m) => Similarity.compactIvfAdcIndexSharded(spark, t, m)
+    },
+    () => AdcKit.probe(vecs.filter(col("vec_id") % 25 === 0), t)
+      .map(_.toString))
+
+  private val tiers: Seq[Tier] = Seq(
+    adcTier("ct_adc"),
+    Tier("bm25", Seq("ct_bm25", "ct_bm25_s"), "ct_bm25_s",
+      i => if (i == 0) TextAnalysis.writeBm25Index(slice(docs, "doc_id", 0),
+          "doc_id", "text", "ct_bm25")
+        else TextAnalysis.appendBm25Index(slice(docs, "doc_id", i),
+          "doc_id", "text", "ct_bm25"),
+      {
+        case None => TextAnalysis.compactBm25Index(spark, "ct_bm25")
+        case Some(m) => TextAnalysis.compactBm25Index(spark, "ct_bm25", m)
+      },
+      () => rows(TextAnalysis.bm25TopKIndexed(
+        docs.filter(col("doc_id") % 10 === 0)
+          .select(col("doc_id").as("q_id"), col("text").as("qtext")),
+        "q_id", "qtext", "ct_bm25", k = 3))),
+    Tier("sketch", Seq("ct_sk"), "ct_sk",
+      i => {
+        val v = slice(vecs, "vec_id", i).select(col("vec_id").as("v"))
+        if (i == 0) Sketches.writeSketchTable(v, col("v"), "ct_sk")
+        else Sketches.appendSketchTable(v, col("v"), "ct_sk")
+      },
+      {
+        case None => Sketches.compactSketchTable(spark, "ct_sk")
+        case Some(m) => Sketches.compactSketchTable(spark, "ct_sk", m)
+      },
+      () => rows(Sketches.quantilesFromSketchTable(spark, "ct_sk",
+        Seq(50, 90, 99)))),
+    Tier("count-min", Seq("ct_cm"), "ct_cm",
+      i => if (i == 0) TextAnalysis.writeCountMinTable(
+          slice(docs, "doc_id", 0), "text", "ct_cm", width = 64, depth = 3)
+        else TextAnalysis.appendCountMinTable(slice(docs, "doc_id", i),
+          "text", "ct_cm", width = 64, depth = 3),
+      {
+        case None => TextAnalysis.compactCountMinTable(spark, "ct_cm")
+        case Some(m) => TextAnalysis.compactCountMinTable(spark, "ct_cm", m)
+      },
+      () => rows(TextAnalysis.countMinFromTable(spark, "ct_cm"))),
+    Tier("sample", Seq("ct_smp"), "ct_smp",
+      i => if (i == 0) Samples.writeSampleTable(slice(docs, "doc_id", 0),
+          "doc_id", 5, "ct_smp")
+        else Samples.appendSampleTable(slice(docs, "doc_id", i), "doc_id",
+          5, "ct_smp"),
+      {
+        case None => Samples.compactSampleTable(spark, "ct_smp", 5)
+        case Some(m) => Samples.compactSampleTable(spark, "ct_smp", 5, m)
+      },
+      () => rows(Samples.sampleFromTable(spark, "ct_smp", 5))),
+    Tier("hll", Seq("ct_hll"), "ct_hll",
+      i => {
+        val b = slice(docs, "doc_id", i)
+        val key = col("doc_id") % 4
+        val v = col("text")
+        if (i == 0) ValueAggregators.writeHllTable(b, key, v, "ct_hll")
+        else ValueAggregators.appendHllTable(b, key, v, "ct_hll")
+      },
+      {
+        case None => ValueAggregators.compactHllTable(spark, "ct_hll")
+        case Some(m) => ValueAggregators.compactHllTable(spark, "ct_hll", m)
+      },
+      () => rows(ValueAggregators.hllEstimateFromTable(spark, "ct_hll"))))
+
+  private def dropAll(t: Tier): Unit =
+    if (t.name == "adc") AdcKit.drop(t.tables.head.stripSuffix("_sv"))
+    else for (n <- t.tables; sfx <- Seq("", "_hwm", "_t", "_compact_shadow"))
+      spark.sql(s"DROP TABLE IF EXISTS `$n$sfx`")
+
+  /** The trigger law on `t` once its g generations have landed. */
+  private def checkTrigger(t: Tier): Unit = {
+    val g = gens(t)
+    assert(g >= 2L, s"${t.name}: $g generations")
+    val before = stored(t)
+    val probe = t.probe()
+    assert(probe.nonEmpty, t.name)
+    assert(!t.compact(Some(g.toInt)), s"${t.name}: maxGen = g compacted")
+    assert(stored(t) == before, s"${t.name}: a no-op changed stored rows")
+    assert(t.compact(Some(g.toInt - 1)), s"${t.name}: maxGen = g-1 held")
+    assert(gens(t) == 1L, s"${t.name}: ${gens(t)} generations left")
+    assert(t.probe() == probe, s"${t.name}: compaction changed the probe")
+    t.land(3)
+    assert(gens(t) == 2L, t.name)
+    assert(t.compact(None), s"${t.name}: the default did not compact")
+    assert(gens(t) == 1L, s"${t.name}: the default left ${gens(t)}")
+  }
+
+  test("one compaction trigger: maxGen = g is a no-op, g - 1 compacts, the default compacts — every generation-keyed tier") {
+    for (t <- tiers) {
+      dropAll(t)
+      try {
+        (0 to 2).foreach(t.land)
+        checkTrigger(t)
+      } finally dropAll(t)
+    }
+  }
+
+  // a single-shard retrain collapses that shard's commit rows to one,
+  // so the retired rows-per-shard rule and the distinct-generation
+  // count disagree there: the count still sees every generation the
+  // other shard committed
+  test("one compaction trigger on ADC after a single-shard retrain counts distinct generations") {
+    val t = adcTier("ct_adc_rt")
+    AdcKit.drop("ct_adc_rt")
+    try {
+      (0 to 2).foreach(t.land)
+      Similarity.retrainIvfAdcShard(
+        vecs.filter(floor(col("vec_id") / 2) % 4 < 3), "vec_id",
+        "embedding", "ct_adc_rt", shard = 0)
+      assert(spark.table("ct_adc_rt_sv_g").count() == 4L)
+      assert(gens(t) == 3L)
+      checkTrigger(t)
+    } finally AdcKit.drop("ct_adc_rt")
   }
 }

@@ -228,6 +228,32 @@ class TmpSinksSpec extends AnyFunSuite with SparkTest {
     RelationalQueries.cleanupTmpSinks(spark)
     assert(leftovers.isEmpty, s"tmp entries left behind: $leftovers")
   }
+
+  // a failed fixture write must not leave the fixture marked written:
+  // the next q63 of the session rewrites it and answers the oracle
+  test("q63 after a failed fixture write rewrites its fixture and returns the oracle's rows") {
+    val fixture = new java.io.File(sys.props("java.io.tmpdir"),
+      "graft_q63_" + d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
+        spark.sparkContext.applicationId)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    Tables.orders(spark, d).createOrReplaceTempView("orders")
+    val oracle = rows(spark.sql(SparkEntry.oracleSql("q63_hetero_inputs")))
+    RelationalQueries.cleanupTmpSinks(spark)
+    // a plain file where the fixture dir goes: every sink write fails
+    assert(fixture.createNewFile(), fixture)
+    try {
+      intercept[Exception](
+        RelationalQueries.queries("q63_hetero_inputs")(spark, d).collect())
+      assert(fixture.delete())
+      assert(rows(RelationalQueries.queries("q63_hetero_inputs")(spark, d))
+        == oracle, "q63 after a failed fixture write diverged from its oracle")
+    } finally {
+      fixture.delete()
+      RelationalQueries.cleanupTmpSinks(spark)
+      spark.catalog.dropTempView("orders")
+    }
+  }
 }
 
 class JdbcRoundTripSpec extends AnyFunSuite with SparkTest {

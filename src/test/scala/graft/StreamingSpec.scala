@@ -1187,7 +1187,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       TextAnalysis.streamAppendBm25Batch(batch, 0L, "doc_id", "text",
         "bm25_oc_idx", lineage = 3L)
       // 2 committed generations > maxGen=1 -> compacts mid-lineage
-      assert(TextAnalysis.maybeCompactBm25Index(spark, "bm25_oc_idx",
+      assert(TextAnalysis.compactBm25Index(spark, "bm25_oc_idx",
         maxGen = 1))
       // live keys are gone; the mark answers for the committed batch
       assert(MergeTables.replayed(spark, "bm25_oc_idx_s",
@@ -1230,7 +1230,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         "vec_id", "embedding", "adc_oc_idx")
       Similarity.streamAppendAdcBatchSharded(vb, 0L, "vec_id", "embedding",
         "adc_oc_idx", lineage = 2L)
-      assert(Similarity.maybeCompactIvfAdcIndexSharded(spark, "adc_oc_idx",
+      assert(Similarity.compactIvfAdcIndexSharded(spark, "adc_oc_idx",
         maxGen = 1))
       assert(MergeTables.replayed(spark, "adc_oc_idx_sv_g",
         MergeTables.streamKey(2L, 0L)), "ADC high-water mark lost")
@@ -1814,9 +1814,9 @@ class ValueAggregatorsSpec extends AnyFunSuite with SparkTest {
     assert(exact == 10L && math.abs(approx - 10L) <= 1)
   }
 
-  test("ONLINE compaction: mid-lineage maybeCompact carries replay keys as high-water marks; checkpoint-alone resume skips committed batches exactly") {
+  test("ONLINE compaction: mid-lineage compaction carries replay keys as high-water marks; checkpoint-alone resume skips committed batches exactly") {
     // r15 verdict item 1: compaction used to clear a live lineage's
-    // committed replay keys, so maybeCompact was between-lineages
+    // committed replay keys, so compaction was between-lineages
     // only. Now the rewrite folds each lineage's max committed batchId
     // into the table_hwm sidecar, and `replayed` answers from marks as
     // well as live keys — so (a) a compaction between two of a
@@ -1841,7 +1841,7 @@ class ValueAggregatorsSpec extends AnyFunSuite with SparkTest {
       // the persisted lineage id landed beside the checkpoint
       assert(MergeTables.lineageAt(spark, cp).contains(1L))
       // MID-LINEAGE compaction (2 generations > maxGen=1 -> trips)
-      assert(Sketches.maybeCompactSketchTable(spark, "sk_oc_t",
+      assert(Sketches.compactSketchTable(spark, "sk_oc_t",
         maxGen = 1))
       // live stream keys are gone...
       val liveKeys = spark.table("sk_oc_t").select("batch_key")
@@ -2251,7 +2251,7 @@ class ValueAggregatorsSpec extends AnyFunSuite with SparkTest {
             batchId: Long) =>
           Sketches.streamAppendSketchBatch(batch, batchId, col("v"),
             "sk_rc_t", lineage = linA)
-          Sketches.maybeCompactSketchTable(spark, "sk_rc_t", maxGen = 1)
+          Sketches.compactSketchTable(spark, "sk_rc_t", maxGen = 1)
           ()
         }.start()
       // B: plain streamed appends on the same table
