@@ -1074,7 +1074,24 @@ private[graft] object MergeTables {
     * under the compaction contract. */
   private[graft] def freshInputFiles(spark: SparkSession, table: String)
       : Seq[String] =
-    freshView(spark, table).inputFiles.toSeq.sorted
+    freshFileStatuses(spark, table).map(_._1)
+
+  /** [[freshInputFiles]] with each file's status (length, mtime): the
+    * path strings `Dataset.inputFiles` gives, read off the analyzed
+    * relation's file index (no optimizer pass), sorted. */
+  private[graft] def freshFileStatuses(spark: SparkSession, table: String)
+      : Seq[(String, org.apache.hadoop.fs.FileStatus)] =
+    freshView(spark, table).queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation
+    }.flatMap {
+      case org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+          idx: org.apache.spark.sql.execution.datasources
+            .PartitioningAwareFileIndex, _, _, _, _, _) =>
+        idx.allFiles()
+      case r => throw new IllegalStateException(
+        s"$table is not a listed file table (${r.getClass.getSimpleName})")
+    }.map(f => f.getPath.toUri.toString -> f).toMap.toSeq.sortBy(_._1)
 
   /** The group key of mergeable state: `Seq("g")` when the frame
     * carries a `g` column (grouped state — one bounded state per key),

@@ -1139,110 +1139,139 @@ object Similarity {
 
   /** The probe-visible rows of the sharded index: active-epoch rows of
     * committed (shard, gen) pairs minus each shard's active tombstones
-    * — ONE scan + one LOCAL-relation semi-join + one anti-join at ANY
-    * shard count (the per-shard layout planned one scan + two
-    * broadcasts PER SHARD). The commit set rides the already-collected
-    * protocol state ([[svState]]) as a local relation, so liveness
-    * resolution costs the plan nothing beyond the broadcast; the epoch
-    * In-filter reaches the scan and prunes retired/orphan epochs'
-    * files from their row-group stats. */
+    * — ONE scan + one anti-join at ANY shard count (the per-shard
+    * layout planned one scan + two broadcasts PER SHARD). The commit
+    * set rides the already-collected protocol state ([[svState]]) as an
+    * exact `(shard, epoch, gen)` predicate ([[committedAt]]), so
+    * liveness resolution adds no join and no broadcast job to the
+    * plan; the epoch In-filter reaches the scan and prunes
+    * retired/orphan epochs' files from their row-group stats. */
   private[graft] def svLiveRows(spark: SparkSession, st: SvState,
       bucketedRead: Boolean = false): DataFrame = {
-    import spark.implicits._
     val stored = (
       if (bucketedRead)
         graft.sources.MapFiles.readBucketed(spark, st.dataT)
       else spark.table(st.dataT))
       .filter(col("epoch").isin(
         st.epochs.distinct.sorted.map(Long.box): _*))
-    val commits = st.committed.toSeq.toDF("shard", "gen", "epoch")
-    val committed = stored.join(broadcast(commits),
-      Seq("shard", "gen", "epoch"), "left_semi")
-    MergeTables.withoutTombstones(spark, st.dataT, committed, "id", "id")(
+      .filter(committedAt(st))
+    MergeTables.withoutTombstones(spark, st.dataT, stored, "id", "id")(
       atActiveEpochs(st))
   }
 
+  /** The snapshot's commit set as a predicate: a row is live iff its
+    * (shard, gen, epoch) triple is one of `st.committed` — the rows a
+    * semi-join against the committed set keeps (the protocol writes no
+    * null keys). One struct In over a compaction-bounded literal list,
+    * evaluated in the scan's stage; it is not a source filter, so the
+    * scan's pushed filters stay the epoch and cell In sets. */
+  private def committedAt(st: SvState): Column =
+    struct(col("shard"), col("gen"), col("epoch")).isin(
+      st.committed.map { case (s, g, e) =>
+        struct(lit(s).as("shard"), lit(g).as("gen"), lit(e).as("epoch"))
+      }: _*)
+
   /** The `(shard, epoch)`-keyed rows of `df` at each shard's ACTIVE
     * epoch — the sharded index's tombstone scope (a retrain retires the
-    * older tombstones) and the centroid GC's keep set. */
-  private def atActiveEpochs(st: SvState)(df: DataFrame): DataFrame = {
-    import df.sparkSession.implicits._
-    val actives = st.epochs.zipWithIndex
-      .map { case (e, s) => (s, e) }.toSeq.toDF("shard", "epoch")
-    df.join(broadcast(actives), Seq("shard", "epoch"), "left_semi")
-  }
+    * older tombstones) and the centroid GC's keep set. A predicate
+    * from the snapshot, like [[committedAt]]. */
+  private def atActiveEpochs(st: SvState)(df: DataFrame): DataFrame =
+    df.filter(st.epochs.zipWithIndex.map { case (e, s) =>
+      col("shard") === s && col("epoch") === e
+    }.reduce(_ || _))
 
   /** The ONE-PLAN candidate stage of every probe: probe rows joined
     * against the stored bucketed table, pre-rank. `cellsOf` is the
     * plan-side combined-kernel column (flat or two-level, per-shard
     * dials baked into the expression), `localSel` its driver twin.
     * Candidates keep the `shard` column for the served path's
-    * per-shard re-rank branch.
+    * per-shard re-rank branch. Only int8 codes cross the join.
     *
-    * The query side repartitions on `gcell` to the index's OWN bucket
-    * count — one query-sized exchange that is both the materialization
-    * barrier keeping pack_quant out of the candidate stage
-    * ([[ivfAdcTopK]]'s 39.6 s collapse signature) and co-partitioning
-    * with the bucketed layout, so the stored side joins with NO
-    * shuffle (plan-asserted). Only int8 codes cross the join.
+    * SNAPSHOT: a BOUNDED snapshot of the query side (limit-probed, so
+    * a backfill-sized panel costs one truncated scan, never a driver
+    * OOM) is packed ON THE DRIVER with the kernels the plan would run
+    * (`max_abs`, `pack_quant` and the combined cell kernel's twin
+    * `localSel`; float→double widening is exact, null elements read as
+    * 0.0 like the unsafe-row getters) into `(q_id, q_qc, qscale,
+    * gcell)` rows — the probe side, a local relation. One
+    * materialization, so a nondeterministic query source cannot
+    * diverge between the probes and the cell set. The snapshot collect
+    * is the probe's one Spark job at construction time.
     *
-    * CELL PUSHDOWN: the join alone never prunes the stored parquet. A
-    * BOUNDED snapshot of the query side (limit-probed, so a
-    * backfill-sized panel costs one truncated scan, never a driver
-    * OOM) becomes BOTH the probe source and the input to the
-    * driver-side cell derivation — one materialization, so a
-    * nondeterministic query source cannot diverge between the In set
-    * and the joined probes. Cells come from the SAME kernel the plan
-    * runs (float→double widening is exact; null elements read as 0.0
-    * like the unsafe-row getters). The In filter reaches the scan,
+    * CELL PUSHDOWN: the join alone never prunes the stored parquet. The
+    * snapshot's gcell set becomes an In filter that reaches the scan,
     * where the gcell bloom filter and sorted min/max skip non-probed
-    * row groups. Batch plans only: a streaming probe side cannot be
-    * collected, so it keeps the join-only shape, as does a query side
-    * that outgrows the snapshot cap; the In filter is also skipped when
-    * the cell set stops being selective. Result-identical by
-    * construction: a stored row whose cell no probe emits can never
-    * join. The snapshot collect is a Spark job at construction time. */
+    * row groups; it is skipped when the cell set stops being
+    * selective. Result-identical by construction: a stored row whose
+    * cell no probe emits can never join.
+    *
+    * JOIN SHAPE: the packed local relation has a known size, so the
+    * planner picks the join — a small batch broadcasts, a large one
+    * shuffles only the probe side onto the stored buckets (the
+    * bucketed layout satisfies the join's distribution,
+    * plan-asserted), or the pruned stored side broadcasts. No choice
+    * can re-run `pack_quant` per candidate in the join stage
+    * ([[ivfAdcTopK]]'s 39.6 s collapse signature): the codes are data.
+    * A streaming query side cannot be collected, nor can one that
+    * outgrows the snapshot cap: those keep the join-only shape, packed
+    * by the plan kernels and repartitioned on `gcell` to the index's
+    * OWN bucket count — the materialization barrier and the
+    * co-partitioning with the bucketed layout in one query-sized
+    * exchange. */
   private def svProbeCandidates(queries: DataFrame, idCol: String,
       vecCol: String, st: SvState, buckets: Int,
       cellsOf: Column => Column,
       localSel: Array[Double] => Array[Long]): DataFrame = {
     val spark = queries.sparkSession
+    val side = queries.select(col(idCol), col(vecCol))
     val snapped: Option[Array[org.apache.spark.sql.Row]] =
       if (queries.isStreaming) None
       else {
-        val rows = queries.select(col(idCol), col(vecCol))
-          .limit(maxPushdownQueries + 1).collect()
+        val rows = side.limit(maxPushdownQueries + 1).collect()
         if (rows.length > maxPushdownQueries) None else Some(rows)
       }
-    val probeSrc = snapped match {
-      case Some(rows) => spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*),
-        queries.select(col(idCol), col(vecCol)).schema)
-      case None => queries
-    }
     // qscale rides along (r21, ADVICE r20 high): the query-side maxAbs
     // the mixed-mode served merge needs to put quantized estimates on
     // the exact-dot scale — idot × (scale/127) × (qscale/127) ≈ the
     // true dot. Probe-only rankings ignore it (per-query constant).
-    val probes = probeSrc.select(col(idCol).as("q_id"),
-        VectorOps.packQuant(col(vecCol), VectorOps.maxAbs(col(vecCol)))
-          .as("q_qc"),
-        VectorOps.maxAbs(col(vecCol)).as("qscale"),
-        explode(cellsOf(col(vecCol))).as("gcell"))
-      .repartition(buckets, col("gcell"))
     val stored = svLiveRows(spark, st)
-    val prunable = snapped match {
-      case None => stored
+    val (probes, prunable) = snapped match {
       case Some(rows) =>
-        val vecIdx = 1 // (idCol, vecCol) projection above
-        val cellSet = rows.iterator
-          .filterNot(_.isNullAt(vecIdx))
-          .flatMap(r => localSel(r.getSeq[Number](vecIdx)
-            .map(x => if (x == null) 0.0 else x.doubleValue()).toArray))
-          .toSet
-        if (cellSet.size > 4096) stored
-        else stored.filter(
-          col("gcell").isin(cellSet.toSeq.sorted.map(Long.box): _*))
+        import org.apache.spark.sql.types._
+        // the plan kernels' input check, which the driver path bypasses
+        require(side.schema(1).dataType match {
+            case ArrayType(FloatType | DoubleType, _) => true
+            case _                                    => false
+          }, s"$vecCol must be array<float|double>, got " +
+            side.schema(1).dataType.sql)
+        val packed = rows.iterator.filterNot(_.isNullAt(1)).flatMap { r =>
+          val v = r.getSeq[Number](1)
+            .map(x => if (x == null) 0.0 else x.doubleValue()).toArray
+          val a = new org.apache.spark.sql.catalyst.util.GenericArrayData(v)
+          val scale = graft.functions.Int8Ops.maxAbs(a, isFloat = false)
+          val qc = graft.functions.Int8Ops.packQuant(a, isFloat = false,
+            scale)
+          localSel(v).iterator.map(g =>
+            org.apache.spark.sql.Row(r.get(0), qc, scale, g))
+        }.toArray
+        val schema = StructType(Seq(
+          StructField("q_id", side.schema(0).dataType),
+          StructField("q_qc", BinaryType, nullable = false),
+          StructField("qscale", DoubleType, nullable = false),
+          StructField("gcell", LongType, nullable = false)))
+        val cellSet = packed.iterator.map(_.getLong(3)).toSet
+        (spark.createDataFrame(java.util.Arrays.asList(packed: _*), schema),
+          if (cellSet.size > 4096) stored
+          else stored.filter(
+            col("gcell").isin(cellSet.toSeq.sorted.map(Long.box): _*)))
+      case None =>
+        (queries.select(col(idCol).as("q_id"),
+            VectorOps.packQuant(col(vecCol), VectorOps.maxAbs(col(vecCol)))
+              .as("q_qc"),
+            VectorOps.maxAbs(col(vecCol)).as("qscale"),
+            explode(cellsOf(col(vecCol))).as("gcell"))
+          .repartition(buckets, col("gcell")),
+          stored)
     }
     probes.join(prunable, Seq("gcell"))
       .filter(col("q_id") =!= col("id"))
@@ -1441,16 +1470,21 @@ object Similarity {
     val res = svPerShard(st.nShards) { s =>
       val groups = math.max(1,
         math.ceil(math.sqrt(nlists(s).toDouble)).toInt)
-      def ceilingLeg() = svShardCeiling(queries, idCol, vecCol, k, st,
-        s, nlists(s)).localCheckpoint()
-      def recallVs(ref: DataFrame, ranked: DataFrame): Double =
-        recallOfApprox(ref, ranked, k).agg(avg("recall")).head()
-          .getDouble(0)
+      def ceilingLeg() = pinned(svShardCeiling(queries, idCol, vecCol, k,
+        st, s, nlists(s)))
+      // mean recall as total hits / (k × queries): integer sums and one
+      // division, so the value (and a dial measured exactly at the
+      // target) does not move with the plan's summation order
+      def recallVs(ref: DataFrame, ranked: DataFrame): Double = {
+        val r = recallOfApprox(ref, ranked, k)
+          .agg(sum("hits"), count(lit(1))).head()
+        r.getLong(0).toDouble / (k.toLong * r.getLong(1))
+      }
       def probeAt(np: Int, gp: Int) = rankByScaledIdot(
         svShardCandidates(queries, idCol, vecCol, st, s, np, gp), k)
-      val ref = vecs.fold(ceilingLeg())(v => exactMipsTopK(
+      val ref = vecs.fold(ceilingLeg())(v => pinned(exactMipsTopK(
         v.filter(shardOf(idCol, st.nShards) === s), queries, idCol,
-        vecCol, k).localCheckpoint())
+        vecCol, k)))
       try {
         val (np, npRec) = tuneDial(nlists(s), targetRecall, minGain)(
           np => recallVs(ref, probeAt(np, 0)))
@@ -1490,9 +1524,9 @@ object Similarity {
                     e2eFlat)
                 else escalate(v)
               }
-            } finally if (vecs.isDefined) dropCheckpoint(ceiling)
+            } finally if (vecs.isDefined) ceiling.unpersist(false)
         }
-      } finally dropCheckpoint(ref)
+      } finally ref.unpersist(false)
     }
     requireSvStable(spark, table, key0)
     res
@@ -2111,19 +2145,20 @@ object Similarity {
         (col("hits") / lit(k.toDouble)).as("recall"))
   }
 
-  /** Free a `localCheckpoint()`'d frame's cached blocks once its
-    * consumer is done (r18 verdict audit note): the tuners' audit legs
-    * are monitoring-cadence temporaries, and a long-lived serving
-    * driver should not keep panel × k rows pinned in the block manager
-    * until session GC. A localCheckpoint returns a LogicalRDD over the
-    * cached internal RDD — unpersisting that RDD is the release; no-op
-    * on any other plan shape. */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  /** A tuner audit leg materialized once: persisted and filled by one
+    * job (the eager local checkpoint's job count), so every recall the
+    * tune measures against it reads the same rows. The caller releases
+    * it with `unpersist` once its audits are done (r18 verdict audit
+    * note: monitoring-cadence temporaries should not keep panel × k
+    * rows pinned in a long-lived serving driver) — a cached plan's
+    * release, unlike a local checkpoint's, truncates no lineage and so
+    * logs no warning. */
+  private def pinned(df: DataFrame): DataFrame = {
+    val p = df.persist()
+    p.foreachPartition((rows: Iterator[org.apache.spark.sql.Row]) =>
+      rows.foreach(_ => ()))
+    p
+  }
 
   /** Doubling + binary search for the smallest dial value in [1, max]
     * whose measured recall meets `target`, with the plateau cutoff —

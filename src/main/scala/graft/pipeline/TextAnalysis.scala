@@ -178,7 +178,8 @@ object TextAnalysis {
     * (plan-asserted). df needs no corpus-wide vocabulary: a term's
     * containing-doc count equals its candidate-postings count, and the
     * (term, df) / per-query-term tables re-enter as broadcasts (query-
-    * scale). N and avgdl are one partial-agg'd scan. The per-query top-k
+    * scale). N and avgdl are one partial-agg'd scan, read on the driver
+    * and passed as literals ([[scalarCols]]). The per-query top-k
     * is the bounded-state [[graft.agg.TopKAggregator]] (map-side partial,
     * ≤k rows per query per task into the shuffle) — never a window sort
     * of a popular term's full candidate set through one reducer. */
@@ -186,10 +187,10 @@ object TextAnalysis {
       queries: DataFrame, qIdCol: String, qTextCol: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75,
       conjunctive: Boolean = false): DataFrame = {
-    val stats = corpusStats(docs, textCol)
+    val stats = corpusStats(docs, textCol).head()
     // lazy checkpoint: qterms re-enters as the candidate restriction
     // AND bm25Rank's broadcast — cache on first compute so the query
-    // subtree derives once (see bm25TopKIndexed; query-scale rows)
+    // subtree derives once (query-scale rows)
     val qterms = queryTerms(queries, qIdCol, qTextCol)
       .localCheckpoint(false)
     // Materialize the candidate postings ONCE (r21): bm25Rank references
@@ -211,7 +212,13 @@ object TextAnalysis {
     // corpus is not.
     val tf = bm25CandidateTf(docs, idCol, textCol, qterms)
       .localCheckpoint(true)
-    bm25Rank(tf, qterms, stats, k, k1, b, conjunctive)
+    // the checkpoint carries no term partitioning: df as a term-count
+    // broadcast, so the postings rows never shuffle for it
+    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    val Seq(nDocs, sumDl) =
+      (0 to 1).map(i => Option.when(!stats.isNullAt(i))(stats.getLong(i)))
+    bm25Rank(tf.join(broadcast(dfreq), "term"), qterms, nDocs, sumDl,
+      k, k1, b, conjunctive)
   }
 
   /** [[queryTerms]] behind a package-visible name, so the plan spec can
@@ -237,7 +244,7 @@ object TextAnalysis {
   }
 
   /** The BM25 corpus scalars as EXACT INTEGERS — (n_docs, sum_dl), with
-    * avgdl derived as one double division at use time ([[withAvgdl]]).
+    * avgdl derived as one double division at use time ([[scalarCols]]).
     * Integer accumulation makes the scalars order-independent AND
     * mergeable without drift: appending a batch to a persisted index
     * ([[appendBm25Index]]) adds two longs, and the merged scalars are
@@ -249,10 +256,17 @@ object TextAnalysis {
     docs.select(size(words(col(textCol))).cast("long").as("n"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("sum_dl"))
 
-  /** avgdl = sum_dl / n_docs, the one place the double is made. */
-  private def withAvgdl(stats: DataFrame): DataFrame =
-    stats.select(col("n_docs"),
-      (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
+  /** The corpus scalars as literal Columns `(n_docs, avgdl)`, avgdl =
+    * sum_dl / n_docs — the one place the double is made, the oracle's
+    * `CAST(sum AS DOUBLE) / count` division. Both probes sum the
+    * scalars on the driver, so the scoring tail needs no join for them.
+    * An absent scalar (no committed stats, an empty corpus) reads as
+    * null, as the joined one-row frame did. */
+  private def scalarCols(nDocs: Option[Long], sumDl: Option[Long])
+      : (Column, Column) = (
+    nDocs.fold(lit(null).cast("long"))(lit(_)),
+    (for (n <- nDocs if n != 0L; d <- sumDl) yield lit(d.toDouble / n))
+      .getOrElse(lit(null).cast("double")))
 
   /** The distinct (q_id, term) pairs of a query table — the broadcast
     * that candidate-restricts both BM25 paths. Each row also carries
@@ -271,21 +285,26 @@ object TextAnalysis {
     * micro-unit quantization, and the TopKAggregator cut, so the
     * persisted-index path provably computes the identical ranking (qb3
     * shares qb1's oracle on the strength of this). `tf` rows are the
-    * CANDIDATE postings (doc_id, term, dl, tf); df per term equals the
-    * candidate-postings count, so no corpus-wide vocabulary exists on
-    * either path. `stats` arrives as [[corpusStats]]'s integer scalars. */
-  private def bm25Rank(tf: DataFrame, qterms: DataFrame, stats: DataFrame,
-      k: Int, k1: Double, b: Double,
-      conjunctive: Boolean = false): DataFrame = {
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val w = tf.join(broadcast(dfreq), "term")
-      .join(broadcast(qterms), "term")
+    * CANDIDATE postings (doc_id, term, dl, tf, df), df per term being
+    * the candidate-postings count, so no corpus-wide vocabulary exists
+    * on either path; each caller attaches df in the form its frame's
+    * partitioning makes free. The corpus scalars arrive as literal
+    * Columns ([[scalarCols]]). The weight rows take ONE shuffle, keyed
+    * by `q_id`: the per-(query, doc) score sum and the per-query cut
+    * both run on that partitioning, so the scored pairs never move a
+    * second time. */
+  private def bm25Rank(tf: DataFrame, qterms: DataFrame,
+      nDocs: Option[Long], sumDl: Option[Long], k: Int, k1: Double,
+      b: Double, conjunctive: Boolean = false): DataFrame = {
+    val (n, avgdl) = scalarCols(nDocs, sumDl)
+    val w = tf.join(broadcast(qterms), "term")
       .filter(col("doc_id") =!= col("q_id"))
-      .crossJoin(broadcast(withAvgdl(stats)))
-      .withColumn("w",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
+      .select(col("q_id"), col("doc_id"), col("nq"),
+        (log(lit(1.0) + (n - col("df") + 0.5) / (col("df") + 0.5))
           * (col("tf") * (k1 + 1))
-          / (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))))
+          / (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl)))
+          .as("w"))
+      .repartition(col("q_id"))
     // conjunctive (AND) semantics: keep only docs matching EVERY
     // distinct query term. tf is per (doc, term) and qterms is distinct
     // per (q, term), so each (q, doc, term) contributes exactly one w
@@ -535,7 +554,8 @@ object TextAnalysis {
     * orphan files of crashed appends are filtered out at the scan and
     * cost only their own read, never correctness. */
   private[graft] def committedIndex(spark: SparkSession, table: String,
-      bucketedRead: Boolean = false): (DataFrame, DataFrame) = {
+      bucketedRead: Boolean = false)
+      : (DataFrame, (Option[Long], Option[Long])) = {
     // heal a compactor crash's DROP/RENAME window first — with in-loop
     // compaction (qfm) the window is hit proportionally more often,
     // and this read is the first touch of every probe/append/delete.
@@ -560,9 +580,6 @@ object TextAnalysis {
       val vs = srows.flatMap(_.values.get(f)).collect { case l: Long => l }
       if (vs.isEmpty) None else Some(vs.sum)
     }
-    import spark.implicits._
-    val stats = Seq((sumOpt("n_docs"), sumOpt("sum_dl")))
-      .toDF("n_docs", "sum_dl")
     val gens = srows.map(_.getLong("gen")).distinct
     // empty commit set (unreachable through the write protocol, but the
     // old semi-join returned empty rather than throwing — keep that)
@@ -574,7 +591,7 @@ object TextAnalysis {
       else spark.table(table)
     val live = MergeTables.withoutTombstones(spark, table,
       committedOnly(stored), "doc_id", "doc_id")(committedOnly)
-    (live, stats)
+    (live, (sumOpt("n_docs"), sumOpt("sum_dl")))
   }
 
   /** The pre-aggregated postings of one document set — the rows both
@@ -822,21 +839,33 @@ object TextAnalysis {
   }
 
   /** [[bm25TopK]] probing the PERSISTED index instead of re-exploding
-    * the corpus per run — the production lexical-retrieval shape. When
-    * the distinct query-term set is small (≤ `maxPushdownTerms`, the
-    * common serving case) it becomes an `In` PREDICATE on the stored
-    * scan — pushed to parquet, where the MapFile layout's bloom filter
-    * on `term` plus min/max stats skip non-matching row groups, so the
-    * probe reads a FRACTION of the postings instead of scanning them
-    * all (plan-asserted: `PushedFilters: [In(term, ...)]`). The
-    * driver-side term collect is bounded by the cap (the repo's
-    * bounded-collect class: centroids, bucket offsets); past the cap
-    * the probe falls back to the broadcast semi-restrict, which scans
-    * linearly but still never shuffles the stored side. df derives
-    * from the candidate rows either way, and the scoring tail is
-    * [[bm25Rank]] verbatim — identical output contract and ranking, so
-    * qb3 shares qb1's oracle, proving the stored index loses nothing
-    * (both candidate paths are spec-gated indexed == direct).
+    * the corpus per run — the production lexical-retrieval shape.
+    *
+    * Construction runs ONE Spark job: a bounded collect of the parsed
+    * `(q_id, nq, term)` rows (the query-term snapshot; the ADC probe's
+    * query snapshot is the same discipline). The snapshot is both the
+    * pushdown term source and, as a local relation, the query-term
+    * broadcast of [[bm25Rank]] — the caller's query subtree runs once
+    * and the two uses cannot diverge. When the distinct term set is
+    * small (≤ `maxPushdownTerms`, the common serving case) it becomes
+    * an `In` PREDICATE on the stored scan — pushed to parquet, where
+    * the MapFile layout's bloom filter on `term` plus min/max stats
+    * skip non-matching row groups, and bucket pruning skips whole
+    * buckets (plan-asserted: `PushedFilters: [In(term, ...)]`); past
+    * that cap the probe falls back to a broadcast semi-restrict, which
+    * scans linearly but never shuffles the stored side. A query side
+    * past the snapshot's row cap keeps a lazy checkpoint instead, which
+    * the bounded term collect populates.
+    *
+    * Execution reads the candidate postings ONCE: df is a window count
+    * per term over the term-bucketed scan, whose partitioning already
+    * is the window's distribution (no exchange), the corpus scalars are
+    * literals summed on the driver from the `_s` sidecar
+    * ([[committedIndex]]), and scoring plus the per-query cut share one
+    * `q_id` shuffle. The scoring tail is [[bm25Rank]] verbatim —
+    * identical output contract and ranking, so qb3 shares qb1's oracle,
+    * proving the stored index loses nothing (both candidate paths are
+    * spec-gated indexed == direct).
     *
     * `conjunctive = true` (qe6) ranks only documents containing EVERY
     * distinct query term — the search-engine `+term1 +term2` contract
@@ -850,28 +879,39 @@ object TextAnalysis {
       maxPushdownTerms: Int = 256, conjunctive: Boolean = false)
       : DataFrame = {
     val spark = queries.sparkSession
-    val (tf, stats) = committedIndex(spark, table)
-    // LAZY checkpoint (r22): the parsed query-term frame is referenced
-    // by the bounded term-collect below AND re-enters the executed plan
-    // as bm25Rank's broadcast — without the cache the caller's query
-    // subtree (often a corpus scan + tokenize) executes once per
-    // reference. Lazy, not eager: the collect job this construction
-    // already runs populates the cache, so no extra job is added (the
-    // empty-frame sink inits stay analysis-plus-one-collect). The
-    // frame is query-scale — the same rows bm25Rank broadcasts.
-    val qterms = queryTerms(queries, qIdCol, qTextCol)
-      .localCheckpoint(false)
-    val termSet = qterms.select("term").distinct()
-    // limit(cap+1) bounds the collect even on a pathological query set:
-    // cap+1 rows back means "too many — don't push a huge IN list"
-    val terms = termSet.limit(maxPushdownTerms + 1).collect()
-      .map(_.getString(0))
+    val (tf, (nDocs, sumDl)) = committedIndex(spark, table)
+    val parsed = queryTerms(queries, qIdCol, qTextCol)
+    // the query-term snapshot (see above); past its cap, the LAZY
+    // checkpoint — the bounded term collect populates it and the rank
+    // reuses it, so the query subtree still runs once
+    val snap = parsed.limit(maxSnapshotTermRows + 1).collect()
+    val (qterms, terms) =
+      if (snap.length <= maxSnapshotTermRows)
+        (spark.createDataFrame(java.util.Arrays.asList(snap: _*),
+            parsed.schema),
+          snap.map(_.getString(2)).distinct.take(maxPushdownTerms + 1))
+      else {
+        val cp = parsed.localCheckpoint(false)
+        (cp, cp.select("term").distinct().limit(maxPushdownTerms + 1)
+          .collect().map(_.getString(0)))
+      }
+    // cap+1 terms back means "too many — don't push a huge IN list":
+    // the broadcast semi-restrict scans linearly but never shuffles
+    // the stored side
     val cand =
       if (terms.length <= maxPushdownTerms)
         tf.filter(col("term").isInCollection(terms.toSeq))
-      else tf.join(broadcast(termSet), "term")
-    bm25Rank(cand, qterms, stats, k, k1, b, conjunctive)
+      else tf.join(broadcast(qterms.select("term").distinct()), "term")
+    // the postings scan arrives term-bucketed, which is the window's
+    // distribution: df costs no exchange and no second postings scan
+    bm25Rank(cand.withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("term"))),
+      qterms, nDocs, sumDl, k, k1, b, conjunctive)
   }
+
+  /** The row cap of [[bm25TopKIndexed]]'s query-term snapshot — a
+    * query-scale local relation (a serving batch is tens of rows). */
+  private val maxSnapshotTermRows = 65536
 
   /** [[bm25TopKIndexed]] with the QUERIES AS A STREAM — the online
     * lexical serving shape beside the dense tier's

@@ -3,23 +3,31 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side reads of the tiny PROTOCOL SIDECAR tables (`_g`, `_sh`,
-  * `_serve`): the same crash-healed, catalog-fresh part-file listing a
-  * Spark collect would scan ([[graft.pipeline.MergeTables.freshInputFiles]]
-  * — heal + refreshTable + fresh listing), decoded on the driver with the
-  * parquet Group API instead of through a Spark job.
+  * `_serve`, `_s`): the same crash-healed, catalog-fresh part-file
+  * listing a Spark collect would scan
+  * ([[graft.pipeline.MergeTables.freshFileStatuses]] — heal +
+  * refreshTable + fresh listing), decoded on the driver with the parquet
+  * Group API instead of through a Spark job.
   *
-  * Why: every persisted-index PROBE construction resolved its protocol
+  * Why: every persisted-index PROBE construction resolves its protocol
   * state (active epoch, shard layout, committed generations, stored
-  * serving dials) through one-or-more blocking `collect()`/`head()` jobs
-  * over tables that are BOUNDED BY THE PROTOCOL, not the corpus (a
-  * handful of rows under the compaction contract). On local[32] each such
-  * job costs a full plan + schedule + task round-trip (~0.1 s) — the
-  * per-probe serving metadata floor the r21 verdict names. A driver-side
-  * footer-and-rows read of the same fresh files is ~2-5 ms and has
-  * IDENTICAL freshness semantics: the listing is re-taken per call, so a
-  * foreign append/retrain/compaction is seen exactly as the job form saw
-  * it (TTL=0 contract unchanged; the TTL caches above this layer are
+  * serving dials, corpus scalars) from tables that are BOUNDED BY THE
+  * PROTOCOL, not the corpus (a handful of rows under the compaction
+  * contract). A Spark job per read costs a full plan + schedule + task
+  * round-trip (~0.1 s on local[32]); the driver-side read has IDENTICAL
+  * freshness semantics: the listing is re-taken per call, so a foreign
+  * append/retrain/compaction is seen exactly as the job form saw it
+  * (TTL=0 contract unchanged; the TTL caches above this layer are
   * untouched).
+  *
+  * Decoded once: part files are immutable and uuid-named (every
+  * mutation under the write/append/compact protocol adds or replaces
+  * files, never rewrites one), so a file's rows are memoized under
+  * (path, length, mtime) and only files new to the listing are decoded
+  * — a parquet footer-and-rows decode of a one-row file costs more than
+  * the listing itself. The memo keeps, per table, only the files of its
+  * latest listing: a file that leaves the listing is never served again
+  * and its rows are released at the next read.
   *
   * Scope: flat primitive schemas only (long/int/double/string/boolean —
   * exactly what the protocol sidecars hold). NEVER used for data tables,
@@ -64,15 +72,40 @@ object SidecarRead {
     }
   }
 
+  /** (path, length, mtime) of one listed part file. */
+  private type FileKey = (String, Long, Long)
+
+  /** Per table (qualified by the session's current database): the
+    * decoded rows of each file of its latest listing. */
+  private val decoded = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[FileKey, Seq[Row]]]()
+
   /** All rows of `table`, crash-healed and freshly listed (the
     * [[graft.pipeline.MergeTables.freshView]] discipline), decoded
-    * driver-side. Throws if the table does not exist (callers check
+    * driver-side — only the files this table's previous read did not
+    * list. Throws if the table does not exist (callers check
     * `tableExists` first, as the job form did). Row order is
     * file-sorted then row-group order — NOT a contract; callers reduce
     * (max/find) or sort, exactly like the collect form's callers. */
-  def rows(spark: SparkSession, table: String): Seq[Row] =
-    graft.pipeline.MergeTables.freshInputFiles(spark, table)
-      .flatMap(readFile(spark, table, _))
+  def rows(spark: SparkSession, table: String): Seq[Row] = {
+    val files = graft.pipeline.MergeTables.freshFileStatuses(spark, table)
+      .map { case (p, st) => (p, st.getLen, st.getModificationTime) }
+    val key = memoKey(spark, table)
+    val prev = Option(decoded.get(key)).getOrElse(Map.empty)
+    val now =
+      files.map(f => f -> prev.getOrElse(f, readFile(spark, table, f._1)))
+    decoded.put(key, now.toMap)
+    now.flatMap(_._2)
+  }
+
+  /** The paths the memo holds for `table` — its latest listing's. */
+  private[graft] def memoizedFiles(spark: SparkSession, table: String)
+      : Set[String] =
+    Option(decoded.get(memoKey(spark, table)))
+      .fold(Set.empty[String])(_.keySet.map(_._1))
+
+  private def memoKey(spark: SparkSession, table: String): String =
+    spark.catalog.currentDatabase + "." + table
 
   private def readFile(spark: SparkSession, table: String,
       file: String): Seq[Row] = {

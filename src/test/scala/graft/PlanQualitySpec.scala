@@ -1342,4 +1342,112 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
           s"$q card scans a non-maintained source: $p")
     }
   }
+
+  /** The Spark jobs `body` starts, construction included — counted by a
+    * listener over the jobs carrying this call's local-property tag
+    * (broadcast and AQE stage jobs inherit it). A marker job after
+    * `body` flushes the listener bus, which delivers in order. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val tag = "planq-" + java.util.UUID.randomUUID()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try body finally sc.setLocalProperty(key, tag + "-end")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(tag + "-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(tag + "-end"), "listener bus never drained")
+      var n = 0
+      seen.forEach(t => if (t == tag) n += 1)
+      (out, n)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("served round: the batch ADC probe and the BM25 probe plan only work — no gcell probe shuffle, no commit semi-join, one postings scan, one shuffle, at most 4 jobs per probe") {
+    // a serving batch (20 queries) against each persisted tier at the
+    // DEFAULT broadcast threshold, warm (the first probe after a build
+    // also reads the centroids into the quantizer broadcast). The ADC
+    // probe's snapshot is a small local relation of packed probe rows
+    // the planner broadcasts: a forced gcell repartition under it
+    // would add a shuffle job and a 16-task broadcast collect that do
+    // no work, and
+    // the commit set is a predicate from the protocol snapshot, not a
+    // LeftSemi join over a broadcast local table. The BM25 probe reads
+    // the postings once (df is a window over the term-bucketed scan),
+    // takes the corpus scalars as literals (no nested-loop cross join)
+    // and scores and cuts on ONE q_id shuffle.
+    import graft.pipeline.{Similarity, TextAnalysis}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions.col
+    val vecs = Tables.embeddings(spark, d)
+    val docs = Tables.documents(spark, d)
+    val qv = vecs.filter(col("vec_id") % 25 === 0)
+    val qt = docs.filter(col("doc_id") % 25 === 0)
+      .selectExpr("doc_id AS q_id",
+        "array_join(slice(filter(split(text, ' '), w -> length(w) > 0), 1, 8), ' ') AS qtext")
+    val (_, nprobe) = Similarity.ivfParams(vecs.count())
+    try {
+      Similarity.writeIvfAdcIndexSharded(vecs, "vec_id", "embedding",
+        "planq_adc_idx", nShards = 2)
+      TextAnalysis.writeBm25Index(docs, "doc_id", "text", "planq_bm25_idx")
+      val adcProbes = Seq[() => org.apache.spark.sql.DataFrame](
+        () => Similarity.ivfAdcTopKIndexedSharded(qv, "vec_id",
+          "embedding", k = 10, "planq_adc_idx"),
+        () => Similarity.ivfAdcTopKIndexedShardedTuned(qv, "vec_id",
+          "embedding", k = 10, "planq_adc_idx",
+          Seq.fill(2)(Similarity.ShardDials(nprobe, 0.0, 2, 0.0))))
+      for (probe <- adcProbes) {
+        probe().collect() // warm: the quantizer broadcast memo
+        val (df, jobs) = jobsOf { val df = probe(); df.collect(); df }
+        val p = df.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0)
+        assert(!p.contains("Exchange hashpartitioning(gcell"),
+          "the ADC probe side is shuffled on gcell:\n" + p.take(4000))
+        assert(!p.contains("LeftSemi"),
+          "the ADC commit set is a semi-join:\n" + p.take(4000))
+        // the snapshot's codes are packed on the driver: no join choice
+        // can re-run pack_quant per candidate
+        assert(!p.contains("packquantexpr"),
+          "the snapshot probe packs in the plan:\n" + p.take(4000))
+        assert(p.contains("In(gcell"),
+          "vacuous gate: no probed-cell In set:\n" + p.take(4000))
+        assert(jobs <= 4, s"ADC probe ran $jobs jobs:\n" + p.take(4000))
+      }
+      val bm = () => TextAnalysis.bm25TopKIndexed(qt, "q_id", "qtext",
+        "planq_bm25_idx", k = 10)
+      bm().collect()
+      val (df, jobs) = jobsOf { val df = bm(); df.collect(); df }
+      val plan = df.queryExecution.executedPlan
+      val p = plan.toString.split("== Initial Plan ==")(0)
+      val postingScans = planNodes(plan).collect {
+        case s: FileSourceScanExec
+          if s.tableIdentifier.exists(_.table == "planq_bm25_idx") => s
+      }
+      assert(postingScans.size == 1,
+        s"${postingScans.size} postings scans:\n" + p.take(4000))
+      assert(!p.contains("BroadcastNestedLoopJoin"), p.take(4000))
+      val exchanges = p.linesIterator
+        .count(_.contains("Exchange hashpartitioning"))
+      assert(exchanges == 1,
+        s"$exchanges hash exchanges in the BM25 probe:\n" + p.take(4000))
+      assert(jobs <= 4, s"BM25 probe ran $jobs jobs:\n" + p.take(4000))
+    } finally {
+      AdcKit.drop("planq_adc_idx")
+      spark.sql("DROP TABLE IF EXISTS planq_bm25_idx")
+      spark.sql("DROP TABLE IF EXISTS planq_bm25_idx_s")
+    }
+  }
 }

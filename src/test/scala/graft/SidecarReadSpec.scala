@@ -143,4 +143,85 @@ class SidecarReadSpec extends AnyFunSuite with SparkTest {
       assert(failure(r.getDouble("s")).contains("expected double"))
     } finally spark.sql("DROP TABLE IF EXISTS screl_row")
   }
+
+  test("decoded-once reads stay fresh: after append, compaction, re-tune and same-name rebuild the reader equals a Spark collect, serves no departed file, and memoizes only the latest listing") {
+    // the reader memoizes each part file's decoded rows under (path,
+    // length, mtime); every lifecycle step below rewrites or adds
+    // sidecar files, so a stale memo entry would show as a row the
+    // collect does not return, a row of a file no longer listed, or a
+    // memo holding more than the current listing
+    import graft.pipeline.{MergeTables, TextAnalysis}
+    val n = 400L
+    val corpus = spark.range(n).select(col("id").as("vec_id"), expr(
+      "transform(sequence(0, 63), i -> cast(" +
+      "pmod(hash(id, 11, i), 2000) / 1000.0d - 1.0d as float))")
+      .as("embedding"))
+    val docs = spark.range(500).select(col("id").as("doc_id"), expr(
+      "concat_ws(' ', transform(sequence(0, 7), " +
+      "i -> concat('w', pmod(hash(id, 13, i), 60))))").as("text"))
+    val tables = Seq("scfr_adc_sh", "scfr_adc_sv_g", "scfr_adc_serve",
+      "scfr_bm_s")
+    def serve(np: Int) = Similarity.writeShardServing(spark, "scfr_adc",
+      Seq.fill(2)(Similarity.ShardServing("probe",
+        Similarity.ShardDials(np, 0.9, 1, 0.9), depth = 0, recall = 0.9)))
+    var departed = Set.empty[String]
+    def check(step: String): Unit = for (t <- tables) {
+      val got = SidecarRead.rows(spark, t)
+      spark.catalog.refreshTable(t)
+      val listed = MergeTables.freshInputFiles(spark, t).toSet
+      assert(sorted(got.map(_.values)) == sparkRows(t), s"$step: $t rows")
+      assert(got.forall(r => listed(r.file)),
+        s"$step: $t served a file outside its listing")
+      assert(got.forall(r => !departed(r.file)),
+        s"$step: $t served a departed file")
+      assert(SidecarRead.memoizedFiles(spark, t) == listed,
+        s"$step: $t memo holds " + SidecarRead.memoizedFiles(spark, t) +
+          " for listing " + listed)
+    }
+    def listing(): Set[String] =
+      tables.filter(spark.catalog.tableExists)
+        .flatMap(MergeTables.freshInputFiles(spark, _)).toSet
+    def step(name: String)(mutate: => Unit): Unit = {
+      val before = listing()
+      mutate
+      departed ++= before -- listing()
+      check(name)
+    }
+    try {
+      step("build") {
+        Similarity.writeIvfAdcIndexSharded(
+          corpus.filter(col("vec_id") * 2 < n), "vec_id", "embedding",
+          "scfr_adc", nShards = 2, dim = 64)
+        serve(2)
+        TextAnalysis.writeBm25Index(docs.filter(col("doc_id") < 250),
+          "doc_id", "text", "scfr_bm")
+      }
+      step("append") {
+        Similarity.appendIvfAdcIndexSharded(
+          corpus.filter(col("vec_id") * 2 >= n), "vec_id", "embedding",
+          "scfr_adc")
+        TextAnalysis.appendBm25Index(docs.filter(col("doc_id") >= 250),
+          "doc_id", "text", "scfr_bm")
+      }
+      step("compaction") {
+        Similarity.compactIvfAdcIndexSharded(spark, "scfr_adc")
+        TextAnalysis.compactBm25Index(spark, "scfr_bm")
+      }
+      step("re-tune")(serve(3))
+      step("same-name rebuild") {
+        Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+          "scfr_adc", nShards = 2, dim = 64)
+        serve(4)
+        TextAnalysis.writeBm25Index(docs, "doc_id", "text", "scfr_bm")
+      }
+      assert(departed.nonEmpty,
+        "vacuous gate: no sidecar file ever left a listing")
+      assert(SidecarRead.rows(spark, "scfr_adc_serve")
+        .forall(_.getInt("nprobe") == 4), "re-tuned dials not served")
+    } finally {
+      AdcKit.drop("scfr_adc")
+      for (t <- Seq("scfr_bm", "scfr_bm_s", "scfr_bm_t"))
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
 }

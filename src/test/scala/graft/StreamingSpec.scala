@@ -315,8 +315,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       (12L, "banana durian"), (13L, "apple cherry banana"))
     try {
       TextAnalysis.writeBm25Index(corpus, "doc_id", "text", "qb4_eq_idx")
-      val sink = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_qb4_spec_sink").getAbsolutePath
+      val sink = tmpDir("qb4_spec_sink")
       val ms = MemoryStream[(Long, String)](spark)
       val (first, second) = queries.partition(_._1 % 2 == 0)
       val q = TextAnalysis.startStreamBm25TopK(
@@ -351,8 +350,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     // the query set across two batches and comparing to the batch tier
     import graft.pipeline.Similarity
     withAdcIndex("qa6_eq_idx") { (vecs, rows) =>
-      val sink = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_qa6_spec_sink").getAbsolutePath
+      val sink = tmpDir("qa6_spec_sink")
       val ms = MemoryStream[(Long, Array[Float])](spark)
       val (first, second) = rows.partition(_._1 % 2 == 0)
       val q = Similarity.startStreamAdcTopKSharded(
@@ -439,8 +437,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       val rows = (queries.as[(Long, String, Array[Float])].collect()
         :+ lexOnly).toSeq
       assert(rows.size >= 4, s"need >= 4 queries, got ${rows.size}")
-      val sink = new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_qc4_spec_sink").getAbsolutePath
+      val sink = tmpDir("qc4_spec_sink")
       val ms = MemoryStream[(Long, String, Array[Float])](spark)
       val (first, second) = rows.partition(_._1 % 20 == 0)
       val q = Similarity.startStreamHybridTopK(
