@@ -1039,7 +1039,7 @@ object Similarity {
     * the per-shard quantizers. */
   private def svBuildLayout(vecs: DataFrame, idCol: String,
       vecCol: String, dataT: String, nShards: Int, counts: Array[Long],
-      dim: Int, targetRecall: Double, buckets: Int, init: String,
+      dim: Int, targetRecall: Double, init: String,
       cents: Seq[Array[Array[Double]]]): Seq[Array[Array[Double]]] = {
     val spark = vecs.sparkSession
     // a fresh layout has no committed batches, no tombstones, no stale
@@ -1057,7 +1057,7 @@ object Similarity {
     try graft.sources.MapFiles.write(
       svPackedRows(vecs, idCol, vecCol, bc, nShards, gen = 0L,
         _ => lit(0L)),
-      "gcell", buckets, dataT)
+      "gcell", ivfIndexBuckets, dataT)
     finally bc.unpersist(false)
     graft.sources.MapFiles.write(
       svCentroidRows(spark, quants, 0L), "cell", 1, dataT + "_c")
@@ -1088,8 +1088,8 @@ object Similarity {
     * build-then-`getEntry` contract (mapred/MapFileOutputFormat.java:39). */
   def writeIvfAdcIndexSharded(vecs: DataFrame, idCol: String,
       vecCol: String, table: String, nShards: Int = 1, dim: Int = 64,
-      targetRecall: Double = 0.8, buckets: Int = ivfIndexBuckets,
-      init: String = "first", cents: Seq[Array[Array[Double]]] = Nil)
+      targetRecall: Double = 0.8, init: String = "first",
+      cents: Seq[Array[Array[Double]]] = Nil)
       : Seq[Array[Array[Double]]] = {
     require(nShards >= 1, s"nShards=$nShards")
     requireShardableName(table)
@@ -1125,7 +1125,7 @@ object Similarity {
     val dataT = svDataTable(table, 0L)
     invalidateSvCaches(table, dataT)
     val quants = svBuildLayout(vecs, idCol, vecCol, dataT, nShards,
-      counts, dim, targetRecall, buckets, init, cents)
+      counts, dim, targetRecall, init, cents)
     import spark.implicits._
     // a previous JVM's sidecar directory survives in the shared
     // warehouse while this session's catalog has no row for it —
@@ -1187,23 +1187,16 @@ object Similarity {
     * Candidates keep the `shard` column for the served path's
     * per-shard re-rank branch. Only int8 codes cross the join.
     *
-    * SNAPSHOT: a BOUNDED snapshot of the query side (limit-probed, so
-    * a backfill-sized panel costs one truncated scan, never a driver
-    * OOM) is packed ON THE DRIVER with the kernels the plan would run
-    * (`max_abs`, `pack_quant` and the combined cell kernel's twin
-    * `localSel`; float→double widening is exact, null elements read as
-    * 0.0 like the unsafe-row getters) into `(q_id, q_qc, qscale,
-    * gcell)` rows — the probe side, a local relation. One
-    * materialization, so a nondeterministic query source cannot
-    * diverge between the probes and the cell set. The snapshot collect
-    * is the probe's one Spark job at construction time.
-    *
-    * CELL PUSHDOWN: the join alone never prunes the stored parquet. The
-    * snapshot's gcell set becomes an In filter that reaches the scan,
-    * where the gcell bloom filter and sorted min/max skip non-probed
-    * row groups; it is skipped when the cell set stops being
-    * selective. Result-identical by construction: a stored row whose
-    * cell no probe emits can never join.
+    * PROBE SIDE: [[graft.sources.MapFiles.probeSide]] — the query
+    * snapshot, the gcell In pushdown (up to 4,096 cells) and its one
+    * fallback. This tier's packing: the driver runs the kernels the
+    * plan would run (`max_abs`, `pack_quant` and `localSel`;
+    * float→double widening is exact, null elements read as 0.0 like
+    * the unsafe-row getters) into `(q_id, q_qc, qscale, gcell)` rows.
+    * A streamed or over-cap side is packed by the plan kernels and
+    * repartitioned on `gcell` to the index's bucket count — the
+    * materialization barrier and the co-partitioning with the bucketed
+    * layout in one query-sized exchange.
     *
     * JOIN SHAPE: the packed local relation has a known size, so the
     * planner picks the join — a small batch broadcasts, a large one
@@ -1211,81 +1204,66 @@ object Similarity {
     * bucketed layout satisfies the join's distribution,
     * plan-asserted), or the pruned stored side broadcasts. No choice
     * can re-run `pack_quant` per candidate in the join stage
-    * ([[ivfAdcTopK]]'s 39.6 s collapse signature): the codes are data.
-    * A streaming query side cannot be collected, nor can one that
-    * outgrows the snapshot cap: those keep the join-only shape, packed
-    * by the plan kernels and repartitioned on `gcell` to the index's
-    * OWN bucket count — the materialization barrier and the
-    * co-partitioning with the bucketed layout in one query-sized
-    * exchange. */
+    * ([[ivfAdcTopK]]'s 39.6 s collapse signature): the codes are data. */
   private def svProbeCandidates(queries: DataFrame, idCol: String,
-      vecCol: String, st: SvState, buckets: Int,
-      cellsOf: Column => Column,
+      vecCol: String, st: SvState, cellsOf: Column => Column,
       localSel: Array[Double] => Array[Long]): DataFrame = {
-    val spark = queries.sparkSession
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val side = queries.select(col(idCol), col(vecCol))
-    val snapped: Option[Array[org.apache.spark.sql.Row]] =
-      if (queries.isStreaming) None
-      else {
-        val rows = side.limit(maxPushdownQueries + 1).collect()
-        if (rows.length > maxPushdownQueries) None else Some(rows)
-      }
+    // the plan kernels' input check, which the driver packing bypasses
+    require(side.schema(1).dataType match {
+        case ArrayType(FloatType | DoubleType, _) => true
+        case _                                    => false
+      }, s"$vecCol must be array<float|double>, got " +
+        side.schema(1).dataType.sql)
     // qscale rides along (r21, ADVICE r20 high): the query-side maxAbs
     // the mixed-mode served merge needs to put quantized estimates on
     // the exact-dot scale — idot × (scale/127) × (qscale/127) ≈ the
     // true dot. Probe-only rankings ignore it (per-query constant).
-    val stored = svLiveRows(spark, st)
-    val (probes, prunable) = snapped match {
-      case Some(rows) =>
-        import org.apache.spark.sql.types._
-        // the plan kernels' input check, which the driver path bypasses
-        require(side.schema(1).dataType match {
-            case ArrayType(FloatType | DoubleType, _) => true
-            case _                                    => false
-          }, s"$vecCol must be array<float|double>, got " +
-            side.schema(1).dataType.sql)
-        val packed = rows.iterator.filterNot(_.isNullAt(1)).flatMap { r =>
+    val packing = graft.sources.MapFiles.Packing(
+      StructType(Seq(
+        StructField("q_id", side.schema(0).dataType),
+        StructField("q_qc", BinaryType, nullable = false),
+        StructField("qscale", DoubleType, nullable = false),
+        StructField("gcell", LongType, nullable = false))),
+      r =>
+        if (r.isNullAt(1)) Iterator.empty
+        else {
           val v = r.getSeq[Number](1)
             .map(x => if (x == null) 0.0 else x.doubleValue()).toArray
           val a = new org.apache.spark.sql.catalyst.util.GenericArrayData(v)
           val scale = graft.functions.Int8Ops.maxAbs(a, isFloat = false)
           val qc = graft.functions.Int8Ops.packQuant(a, isFloat = false,
             scale)
-          localSel(v).iterator.map(g =>
-            org.apache.spark.sql.Row(r.get(0), qc, scale, g))
-        }.toArray
-        val schema = StructType(Seq(
-          StructField("q_id", side.schema(0).dataType),
-          StructField("q_qc", BinaryType, nullable = false),
-          StructField("qscale", DoubleType, nullable = false),
-          StructField("gcell", LongType, nullable = false)))
-        val cellSet = packed.iterator.map(_.getLong(3)).toSet
-        (spark.createDataFrame(java.util.Arrays.asList(packed: _*), schema),
-          if (cellSet.size > 4096) stored
-          else stored.filter(
-            col("gcell").isin(cellSet.toSeq.sorted.map(Long.box): _*)))
-      case None =>
-        (queries.select(col(idCol).as("q_id"),
-            VectorOps.packQuant(col(vecCol), VectorOps.maxAbs(col(vecCol)))
-              .as("q_qc"),
-            VectorOps.maxAbs(col(vecCol)).as("qscale"),
-            explode(cellsOf(col(vecCol))).as("gcell"))
-          .repartition(buckets, col("gcell")),
-          stored)
-    }
-    probes.join(prunable, Seq("gcell"))
+          localSel(v).iterator.map(g => Row(r.get(0), qc, scale, g))
+        },
+      _.select(col(idCol).as("q_id"),
+          VectorOps.packQuant(col(vecCol), VectorOps.maxAbs(col(vecCol)))
+            .as("q_qc"),
+          VectorOps.maxAbs(col(vecCol)).as("qscale"),
+          explode(cellsOf(col(vecCol))).as("gcell"))
+        .repartition(ivfIndexBuckets, col("gcell")))
+    val (probes, stored) = graft.sources.MapFiles.probeSide(side,
+      svLiveRows(queries.sparkSession, st), "gcell", maxProbedCells,
+      packing = Some(packing))
+    probes.join(stored, Seq("gcell"))
       .filter(col("q_id") =!= col("id"))
       .select(col("q_id"), col("id").as("nb_id"),
         VectorOps.i8Dot(col("q_qc"), col("qc")).as("idot"),
         col("scale"), col("qscale"), col("shard"))
   }
 
+  /** The most probed cells [[svProbeCandidates]] pushes to the stored
+    * scan as an In list; past it the cell set stops being selective. */
+  private val maxProbedCells = 4096
+
   /** [[svProbeCandidates]] through the FLAT combined kernel at
     * per-shard `nprobes` (0 skips a shard). */
   private def svFlatCandidates(queries: DataFrame, idCol: String,
       vecCol: String, st: SvState, bc: Broadcast[ShardedQuant],
-      nprobes: Array[Int], buckets: Int): DataFrame =
-    svProbeCandidates(queries, idCol, vecCol, st, buckets,
+      nprobes: Array[Int]): DataFrame =
+    svProbeCandidates(queries, idCol, vecCol, st,
       v => NearestCellsSharded.flat(v, bc, nprobes),
       v => NearestCellsSharded.nearestFlat(
         new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
@@ -1295,8 +1273,8 @@ object Similarity {
     * per-shard (`nprobes`, `gprobes`) (nprobe 0 skips a shard). */
   private def svHierCandidates(queries: DataFrame, idCol: String,
       vecCol: String, st: SvState, bc: Broadcast[ShardedHier],
-      nprobes: Array[Int], gprobes: Array[Int], buckets: Int): DataFrame =
-    svProbeCandidates(queries, idCol, vecCol, st, buckets,
+      nprobes: Array[Int], gprobes: Array[Int]): DataFrame =
+    svProbeCandidates(queries, idCol, vecCol, st,
       v => NearestCellsSharded.hier(v, bc, gprobes, nprobes),
       v => NearestCellsSharded.nearestHier(
         new org.apache.spark.sql.catalyst.util.GenericArrayData(v),
@@ -1306,13 +1284,13 @@ object Similarity {
     * pre-rank — package-visible so the plan specs can assert the
     * stored side's bucketed, vector-free join shape on it. */
   private[graft] def svFracCandidates(queries: DataFrame, idCol: String,
-      vecCol: String, table: String, targetRecall: Double = 0.8,
-      buckets: Int = ivfIndexBuckets): DataFrame = {
+      vecCol: String, table: String, targetRecall: Double = 0.8)
+      : DataFrame = {
     val spark = queries.sparkSession
     val st = svState(spark, table)
     val bc = svQuantBc(spark, st)
     svFlatCandidates(queries, idCol, vecCol, st, bc,
-      svFracNprobes(bc, targetRecall), buckets)
+      svFracNprobes(bc, targetRecall))
   }
 
   /** Each shard's fraction-law nprobe from its OWN stored nlist — the
@@ -1347,10 +1325,9 @@ object Similarity {
     * q99 shares q89's oracle: the stored index loses nothing. */
   def ivfAdcTopKIndexedSharded(queries: DataFrame, idCol: String,
       vecCol: String, k: Int, table: String,
-      targetRecall: Double = 0.8, buckets: Int = ivfIndexBuckets)
-      : DataFrame =
+      targetRecall: Double = 0.8): DataFrame =
     rankByScaledIdot(svFracCandidates(queries, idCol, vecCol, table,
-      targetRecall, buckets), k)
+      targetRecall), k)
 
   /** Per-shard serving dials of the TUNED sharded probe — what
     * [[tuneShardServing]] derives and [[ivfAdcTopKIndexedShardedTuned]]
@@ -1378,16 +1355,16 @@ object Similarity {
     * kernel. */
   private def svShardCandidates(queries: DataFrame, idCol: String,
       vecCol: String, st: SvState, shard: Int, nprobe: Int,
-      gprobe: Int, buckets: Int = ivfIndexBuckets): DataFrame = {
+      gprobe: Int): DataFrame = {
     val spark = queries.sparkSession
     def only(dial: Int) =
       Array.tabulate(st.nShards)(s => if (s == shard) dial else 0)
     if (gprobe <= 0)
       svFlatCandidates(queries, idCol, vecCol, st, svQuantBc(spark, st),
-        only(nprobe), buckets)
+        only(nprobe))
     else
       svHierCandidates(queries, idCol, vecCol, st, svHierBc(spark, st),
-        only(nprobe), only(gprobe), buckets)
+        only(nprobe), only(gprobe))
   }
 
   /** One shard's quantizer CEILING: every live stored row of the shard
@@ -1708,13 +1685,12 @@ object Similarity {
         else idot
       svHierCandidates(queries, idCol, vecCol, st, svHierBc(spark, st),
           dialsIn("probe")(_.dials.nprobe),
-          dialsIn("probe")(_.dials.gprobe), ivfIndexBuckets)
+          dialsIn("probe")(_.dials.gprobe))
         .select(col("q_id"), col("nb_id"), score.as("score"))
     }
     val rerank = vecs.filter(_ => modes("rerank")).map { corpus =>
       val cands = svFlatCandidates(queries, idCol, vecCol, st,
-        svQuantBc(spark, st), dialsIn("rerank")(_.dials.nprobe),
-        ivfIndexBuckets)
+        svQuantBc(spark, st), dialsIn("rerank")(_.dials.nprobe))
       // a depth tuned at a smaller k still re-ranks at least k
       // survivors: fewer could never fill the caller's top-k
       val depths = typedLit(servings.zipWithIndex.collect {
@@ -1762,13 +1738,12 @@ object Similarity {
     * q70s discipline). */
   def startStreamAdcTopKSharded(stream: DataFrame, idCol: String,
       vecCol: String, k: Int, table: String, sinkDir: String,
-      targetRecall: Double = 0.8,
-      buckets: Int = ivfIndexBuckets)
+      targetRecall: Double = 0.8)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val st = svState(stream.sparkSession, table)
     val bc = svQuantBc(stream.sparkSession, st)
     startProbeSink(svFlatCandidates(stream, idCol, vecCol, st, bc,
-      svFracNprobes(bc, targetRecall), buckets), sinkDir)(
+      svFracNprobes(bc, targetRecall)), sinkDir)(
       rankByScaledIdot(_, k))
   }
 
@@ -2051,8 +2026,8 @@ object Similarity {
     * (mapred/MapFileOutputFormat.java:39,101-107). */
   def reshardIvfAdcIndex(vecs: DataFrame, idCol: String, vecCol: String,
       table: String, newShards: Int, dim: Int = 64,
-      targetRecall: Double = 0.8, buckets: Int = ivfIndexBuckets,
-      init: String = "first"): Unit = MergeTables.withTableLock(table) {
+      targetRecall: Double = 0.8, init: String = "first")
+      : Unit = MergeTables.withTableLock(table) {
     require(newShards >= 1, s"newShards=$newShards")
     val spark = vecs.sparkSession
     val st = svState(spark, table, fresh = true)
@@ -2078,7 +2053,7 @@ object Similarity {
       "reshardIvfAdcIndex")
     val dataT2 = svDataTable(table, g2)
     svBuildLayout(survivors, idCol, vecCol, dataT2, newShards, counts,
-      dim, targetRecall, buckets, init, cents = Nil)
+      dim, targetRecall, init, cents = Nil)
     // inert land 2: carry the replay marks — the old generation's live
     // stream keys and prior marks, folded per lineage (floor rows ride
     // along), into the new generation's mark table
@@ -2241,13 +2216,6 @@ object Similarity {
     * the quantizer broadcast. */
   def invalidateQuantKeyCache(table: String): Unit =
     svStateCache.keySet().removeIf(_._2 == table)
-
-  /** Snapshot cap for the probe-side cell pushdown: a query batch up
-    * to this many rows is collected once (≤ ~16 MB of 64-float
-    * vectors) and drives both the probe plan and the pushed In set; a
-    * larger batch keeps the join-only shape, distributed end to
-    * end. */
-  private val maxPushdownQueries = 65536
 
   /** Two-stage quantized retrieval (qa1) — the composition
     * [[Quantize]]'s Scaladoc promises, closed: [[ivfAdcTopK]] generates

@@ -396,11 +396,9 @@ object TextAnalysis {
     * append by [[writeBm25Index]]/[[appendBm25Index]]), so a phrase
     * probe never touches document text:
     *
-    *   - the phrase's term set reaches the stored scan as a pushed `In`
-    *     predicate (the [[bm25TopKIndexed]] bounded-collect convention
-    *     — parquet bloom on `term` + min/max stats skip non-matching
-    *     row groups; past `maxPushdownTerms` it falls back to a
-    *     broadcast semi-restrict);
+    *   - the probe side is [[graft.sources.MapFiles.probeSide]] over
+    *     the phrase words: one bounded snapshot, the phrase term set as
+    *     a pushed `In(term)` (up to 256 terms) and its one fallback;
     *   - positions never unpack: the stored arrays make the adjacency
     *     chain an ARRAY-INTERSECTION fold — an n-word phrase's hit
     *     positions are ∩_j (positions(t_j) − j), exactly the
@@ -429,22 +427,16 @@ object TextAnalysis {
     * semantics. */
   def phraseMatchesIndexed(queries: DataFrame, qIdCol: String,
       qTextCol: String, table: String, candidates: DataFrame = null,
-      candIdCol: String = "doc_id", n: Int = 2,
-      maxPushdownTerms: Int = 256): DataFrame = {
+      candIdCol: String = "doc_id", n: Int = 2): DataFrame = {
     require(n >= 2, s"phraseMatchesIndexed needs >= 2 words, got $n")
     // qp and post re-enter the fold (anchor + one leg per remaining
-    // phrase position) as the SAME lazy frame objects: both are cheap
-    // pruned-scan pipelines, and keeping them lazy preserves the one
-    // pipelined DAG (see above) while repeated subtrees dedupe at
-    // their exchange boundaries where the planner can
-    // lazy checkpoint: qp is referenced by the pushdown term-collect,
-    // the anchor broadcast, and each fold leg's restriction — cache on
-    // first compute (the collect job construction already runs) so the
-    // caller's query subtree derives once (query-scale rows)
-    val qp = phraseWords(queries, qIdCol, qTextCol, n)
-      .localCheckpoint(false)
-    val post = phrasePostIndexed(qp, table, candidates, candIdCol, n,
-      maxPushdownTerms)
+    // phrase position) as the SAME frame objects: qp is the probe
+    // side's snapshot, post a cheap pruned-scan pipeline kept lazy, so
+    // the serving stack stays one pipelined DAG (see above) while
+    // repeated subtrees dedupe at their exchange boundaries
+    val (qp, post) = phrasePostIndexed(
+      phraseWords(queries, qIdCol, qTextCol, n), table, candidates,
+      candIdCol, n)
     var cur = post.join(broadcast(qp), col("term") === col("t0"))
       .filter(col("doc_id") =!= col("q_id"))
       .select(col("q_id") +: col("doc_id") +: col("positions").as("acc") +:
@@ -467,31 +459,30 @@ object TextAnalysis {
       .filter(col("n_hits") > 0)
   }
 
-  /** The stored-scan stage of [[phraseMatchesIndexed]] — phrase-term
-    * pushdown, optional candidate semi-restrict, positions still
-    * PACKED. Package-visible so PlanQualitySpec can assert the
-    * scan-level claims (index-only file scans, pushed `In(term)`,
-    * broadcast candidate restriction) on the live plan. */
+  /** The probe side and stored-scan stage of [[phraseMatchesIndexed]]:
+    * `(phrase words, postings)` — the [[graft.sources.MapFiles.probeSide]]
+    * snapshot of the phrase words `qp` and the postings restricted to
+    * their terms, then optionally semi-restricted to `candidates`,
+    * positions still PACKED. Package-visible so PlanQualitySpec can
+    * assert the scan-level claims (index-only file scans, pushed
+    * `In(term)`, broadcast candidate restriction) on the live plan. */
   private[graft] def phrasePostIndexed(qp: DataFrame, table: String,
-      candidates: DataFrame, candIdCol: String, n: Int,
-      maxPushdownTerms: Int = 256): DataFrame = {
-    val spark = qp.sparkSession
-    val termSet = qp.select(explode(array(
-      (0 until n).map(j => col(s"t$j")): _*)).as("term")).distinct()
-    val terms = termSet.limit(maxPushdownTerms + 1).collect()
-      .map(_.getString(0))
-    val stored = committedIndex(spark, table)._1
-    val restricted =
-      if (terms.length <= maxPushdownTerms)
-        stored.filter(col("term").isInCollection(terms.toSeq))
-      else stored.join(broadcast(termSet), "term")
+      candidates: DataFrame, candIdCol: String, n: Int)
+      : (DataFrame, DataFrame) = {
+    val (probes, restricted) = graft.sources.MapFiles.probeSide(qp,
+      committedIndex(qp.sparkSession, table)._1, "term", maxProbedTerms,
+      keyCols = (0 until n).map(j => s"t$j"))
     val narrowed =
       if (candidates == null) restricted
       else restricted.join(broadcast(candidates
           .select(col(candIdCol).cast("long").as("doc_id")).distinct()),
         Seq("doc_id"), "left_semi")
-    narrowed.select(col("doc_id"), col("term"), col("positions"))
+    (probes, narrowed.select(col("doc_id"), col("term"), col("positions")))
   }
+
+  /** The most distinct query terms a BM25 or phrase probe pushes to
+    * the stored scan as an In list. */
+  private val maxProbedTerms = 256
 
   /** Persisted BM25 postings index — write-once-probe-many lexical
     * retrieval, the third persisted tier beside the minhash archive
@@ -841,21 +832,12 @@ object TextAnalysis {
   /** [[bm25TopK]] probing the PERSISTED index instead of re-exploding
     * the corpus per run — the production lexical-retrieval shape.
     *
-    * Construction runs ONE Spark job: a bounded collect of the parsed
-    * `(q_id, nq, term)` rows (the query-term snapshot; the ADC probe's
-    * query snapshot is the same discipline). The snapshot is both the
-    * pushdown term source and, as a local relation, the query-term
-    * broadcast of [[bm25Rank]] — the caller's query subtree runs once
-    * and the two uses cannot diverge. When the distinct term set is
-    * small (≤ `maxPushdownTerms`, the common serving case) it becomes
-    * an `In` PREDICATE on the stored scan — pushed to parquet, where
-    * the MapFile layout's bloom filter on `term` plus min/max stats
-    * skip non-matching row groups, and bucket pruning skips whole
-    * buckets (plan-asserted: `PushedFilters: [In(term, ...)]`); past
-    * that cap the probe falls back to a broadcast semi-restrict, which
-    * scans linearly but never shuffles the stored side. A query side
-    * past the snapshot's row cap keeps a lazy checkpoint instead, which
-    * the bounded term collect populates.
+    * The probe side is [[graft.sources.MapFiles.probeSide]] over the
+    * parsed `(q_id, nq, term)` rows: construction runs ONE Spark job
+    * (the bounded snapshot), whose local relation is both the
+    * query-term broadcast of [[bm25Rank]] and the source of the pushed
+    * `In(term)` predicate (plan-asserted: `PushedFilters: [In(term,
+    * ...)]`), up to 256 terms; past that, its one broadcast semi-join.
     *
     * Execution reads the candidate postings ONCE: df is a window count
     * per term over the term-bucketed scan, whose partitioning already
@@ -876,42 +858,16 @@ object TextAnalysis {
     * are already query-restricted, so it adds no scan or shuffle. */
   def bm25TopKIndexed(queries: DataFrame, qIdCol: String, qTextCol: String,
       table: String, k: Int, k1: Double = 1.2, b: Double = 0.75,
-      maxPushdownTerms: Int = 256, conjunctive: Boolean = false)
-      : DataFrame = {
-    val spark = queries.sparkSession
-    val (tf, (nDocs, sumDl)) = committedIndex(spark, table)
-    val parsed = queryTerms(queries, qIdCol, qTextCol)
-    // the query-term snapshot (see above); past its cap, the LAZY
-    // checkpoint — the bounded term collect populates it and the rank
-    // reuses it, so the query subtree still runs once
-    val snap = parsed.limit(maxSnapshotTermRows + 1).collect()
-    val (qterms, terms) =
-      if (snap.length <= maxSnapshotTermRows)
-        (spark.createDataFrame(java.util.Arrays.asList(snap: _*),
-            parsed.schema),
-          snap.map(_.getString(2)).distinct.take(maxPushdownTerms + 1))
-      else {
-        val cp = parsed.localCheckpoint(false)
-        (cp, cp.select("term").distinct().limit(maxPushdownTerms + 1)
-          .collect().map(_.getString(0)))
-      }
-    // cap+1 terms back means "too many — don't push a huge IN list":
-    // the broadcast semi-restrict scans linearly but never shuffles
-    // the stored side
-    val cand =
-      if (terms.length <= maxPushdownTerms)
-        tf.filter(col("term").isInCollection(terms.toSeq))
-      else tf.join(broadcast(qterms.select("term").distinct()), "term")
+      conjunctive: Boolean = false): DataFrame = {
+    val (tf, (nDocs, sumDl)) = committedIndex(queries.sparkSession, table)
+    val (qterms, cand) = graft.sources.MapFiles.probeSide(
+      queryTerms(queries, qIdCol, qTextCol), tf, "term", maxProbedTerms)
     // the postings scan arrives term-bucketed, which is the window's
     // distribution: df costs no exchange and no second postings scan
     bm25Rank(cand.withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("term"))),
       qterms, nDocs, sumDl, k, k1, b, conjunctive)
   }
-
-  /** The row cap of [[bm25TopKIndexed]]'s query-term snapshot — a
-    * query-scale local relation (a serving batch is tens of rows). */
-  private val maxSnapshotTermRows = 65536
 
   /** [[bm25TopKIndexed]] with the QUERIES AS A STREAM — the online
     * lexical serving shape beside the dense tier's

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 /** MapFile — the reference's sorted, indexed K/V store and its partitioned
@@ -167,16 +168,94 @@ object MapFiles {
     lookupTable(spark, table)
 
   /** Point lookup — `MapFileOutputFormat.getEntry`: all rows for `key`,
-    * read from exactly one bucket with the predicate pushed to the scan. */
+    * with the predicate pushed to the scan. The ROWS come from exactly
+    * one bucket's files; the TASKS do not shrink with them — the
+    * bucketed scan still plans one task per bucket, and all but one
+    * read nothing (16 tasks, 15 of them empty, on a 16-bucket table). */
   def getEntry(spark: SparkSession, table: String, keyCol: String,
       key: Any): DataFrame =
     lookupTable(spark, table).filter(col(keyCol) === lit(key))
 
-  /** Batched point lookups (IN-list) — still bucket-pruned: only the
-    * buckets holding any of the probed keys are read. */
+  /** Batched point lookups (IN-list) — still bucket-pruned: rows are
+    * read only from the buckets holding any of the probed keys, while
+    * the scan keeps one task per bucket (the pruned ones run empty). */
   def getEntries(spark: SparkSession, table: String, keyCol: String,
       keys: Seq[Any]): DataFrame =
     lookupTable(spark, table).filter(col(keyCol).isin(keys: _*))
+
+  /** The row cap of [[probeSide]]'s query snapshot: a serving batch is
+    * tens of rows; 65,536 rows of 64-float vectors are ~16 MB. */
+  private val snapshotRows = 65536
+
+  /** A tier's own packing of its probe rows: `rows` is the driver twin
+    * of the plan kernels `planned` applies, mapping one snapshot row to
+    * its packed rows of `schema`. */
+  private[graft] final case class Packing(schema: StructType,
+      rows: Row => Iterator[Row], planned: DataFrame => DataFrame)
+
+  /** The probe side of every persisted probe (ADC, BM25, phrase) — the
+    * one place that decides which stored keys a probe may touch, the
+    * `getEntries` step of `MapFileOutputFormat.getEntry`
+    * (mapred/MapFileOutputFormat.java:96-115) for a whole query batch.
+    * Returns `(probes, restricted)`: the probe rows and `stored`
+    * restricted to the keys they carry in `keyCols` (default `key`).
+    *
+    *   - SNAPSHOT: a batch `side` gets ONE bounded collect. At or under
+    *     65,536 rows it is packed on the driver (`packing.rows`, none =
+    *     as is) into a local relation — the probe rows and the key set
+    *     come from one materialization, so a nondeterministic source
+    *     cannot diverge between them, and the collect is the probe's
+    *     one construction job. Over the cap the planned side is lazily
+    *     checkpointed and its keys come from one capped distinct
+    *     collect, which fills the checkpoint.
+    *   - STREAMING: a streaming side cannot be collected; it alone
+    *     keeps the plan-side probe (`packing.planned`) over the
+    *     unrestricted stored side.
+    *   - PUSHDOWN: at or under `keyCap` distinct keys the sorted key
+    *     set is an `In` filter that reaches the stored scan — bucket
+    *     pruning, the key bloom filter and sorted min/max skip what no
+    *     probe can reach.
+    *   - FALLBACK: above `keyCap`, a broadcast left-semi join on the key
+    *     column — no huge In list, the stored side is never shuffled,
+    *     and what follows the restriction (BM25's df window) still sees
+    *     only probed keys.
+    *
+    * Both restrictions are result-identical: a stored row whose key no
+    * probe carries can never join. Probes hold no table lock; this is
+    * where a snapshot-pinned read would fix the file set. */
+  private[graft] def probeSide(side: DataFrame, stored: DataFrame,
+      key: String, keyCap: Int, keyCols: Seq[String] = Nil,
+      packing: Option[Packing] = None): (DataFrame, DataFrame) = {
+    val kc = if (keyCols.isEmpty) Seq(key) else keyCols
+    val planned = packing.fold(side)(_.planned(side))
+    if (side.isStreaming) return (planned, stored)
+    val rows = side.limit(snapshotRows + 1).collect()
+    val (probes, keys) =
+      if (rows.length <= snapshotRows) {
+        val schema = packing.fold(side.schema)(_.schema)
+        val packed = packing.fold(rows)(p => rows.flatMap(p.rows))
+        val at = kc.map(schema.fieldIndex)
+        (side.sparkSession.createDataFrame(
+            java.util.Arrays.asList(packed: _*), schema),
+          packed.iterator.flatMap(r => at.iterator.map(r.get))
+            .distinct.take(keyCap + 1).toSeq)
+      } else {
+        val cp = planned.localCheckpoint(false)
+        (cp, keysOf(cp, kc, key).limit(keyCap + 1).collect()
+          .map(_.get(0)).toSeq)
+      }
+    (probes,
+      if (keys.length <= keyCap)
+        stored.filter(col(key).isInCollection(keys.sortWith(
+          (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0)))
+      else stored.join(broadcast(keysOf(probes, kc, key)), Seq(key),
+        "left_semi"))
+  }
+
+  /** The distinct values of `probes`' key columns, as `key`. */
+  private def keysOf(probes: DataFrame, keyCols: Seq[String], key: String)
+      : DataFrame =
+    probes.select(explode(array(keyCols.map(col): _*)).as(key)).distinct()
 
   /** SetFile (io/SetFile.java:27) — a MapFile holding keys only. The
     * layout is the distinct sorted key set; [[containsKey]] is the
@@ -185,8 +264,10 @@ object MapFiles {
       table: String): Unit =
     write(df.select(keyCol).distinct(), keyCol, buckets, table)
 
-  /** SetFile membership probe — reads one bucket, and inside it the
-    * bloom filter + min/max stats answer most negatives from metadata. */
+  /** SetFile membership probe — reads rows from one bucket (the scan
+    * still runs one task per bucket, the others empty), and inside it
+    * the bloom filter + min/max stats answer most negatives from
+    * metadata. */
   def containsKey(spark: SparkSession, table: String, keyCol: String,
       key: Any): Boolean =
     !getEntry(spark, table, keyCol, key).isEmpty

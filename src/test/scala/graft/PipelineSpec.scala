@@ -2273,6 +2273,36 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         "tuneShardServing's hier recall disagrees with the audit")
     } finally AdcKit.drop("adc_hier_idx")
   }
+
+  test("ivfAdcTopKIndexedSharded: a batch over the 65,536-row snapshot cap ranks each query as it ranks alone") {
+    // the over-cap probe side: the plan kernels behind a lazy
+    // checkpoint, its cells from one capped distinct collect — sampled
+    // queries must rank exactly as in a small (driver-packed) batch
+    def vectors(n: Long, salt: Int) = spark.range(n).select(
+      col("id"), expr("transform(sequence(0, 7), i -> cast(" +
+        s"pmod(hash(id, $salt, i), 2000) / 1000.0d - 1.0d as float))")
+        .as("embedding"))
+    val corpus = vectors(64, 31).withColumnRenamed("id", "vec_id")
+    val queries = vectors(65537, 17)
+      .select((col("id") + 1000000L).as("vec_id"), col("embedding"))
+    try {
+      Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
+        "adc_overcap_idx", dim = 8)
+      val all = Similarity.ivfAdcTopKIndexedSharded(queries, "vec_id",
+        "embedding", k = 3, "adc_overcap_idx")
+      assert(all.queryExecution.analyzed.collectFirst {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r
+        }.isDefined, "the 65,537-query batch took the snapshot path")
+      val sampled = AdcKit.ranks(all).filter(_._1 % 4099 == 0)
+      val alone = AdcKit.probe(
+        queries.filter(col("vec_id") % 4099 === 0), "adc_overcap_idx")
+      assert(alone.nonEmpty && sampled == alone,
+        s"over-cap=${sampled.take(12)} alone=${alone.take(12)}")
+      // a backfill-sized batch still pushes its probed cells
+      assert(all.queryExecution.executedPlan.toString.contains("In(gcell"),
+        "the over-cap batch read the stored side unrestricted")
+    } finally AdcKit.drop("adc_overcap_idx")
+  }
 }
 
 class TextAnalysisSpec extends AnyFunSuite with SparkTest {
@@ -2719,17 +2749,54 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
         .as[(Long, Long, Int, Long)].collect().sortBy(r => (r._1, r._3))
       assert(direct.nonEmpty && direct.toSeq == indexed.toSeq,
         s"direct=${direct.toSeq} indexed=${indexed.toSeq}")
-      // past the pushdown cap the probe falls back to the broadcast
-      // semi-restrict — same rows, gated here with a cap of 1 (the
-      // query set has 4 distinct terms)
-      val fallback = TextAnalysis.bm25TopKIndexed(qs, "q_id", "qtext",
-          "bm25_spec_idx", k = 3, maxPushdownTerms = 1)
+      // past the 256-term pushdown cap the probe falls back to the
+      // broadcast semi-join — same rows: one more query carries 300
+      // terms no document holds, so it ranks nothing on either path
+      val wide = qs.union(Seq((99L, (0 until 300).map("nx" + _)
+        .mkString(" "))).toDF("q_id", "qtext"))
+      val fellBack = TextAnalysis.bm25TopKIndexed(wide, "q_id", "qtext",
+          "bm25_spec_idx", k = 3)
+      val fallback = fellBack
         .as[(Long, Long, Int, Long)].collect().sortBy(r => (r._1, r._3))
+      assert(!fellBack.queryExecution.executedPlan.toString
+        .contains("In(term"), "the 301-term probe pushed an In list")
       assert(fallback.toSeq == direct.toSeq,
         s"fallback=${fallback.toSeq} direct=${direct.toSeq}")
     } finally {
       spark.sql("DROP TABLE IF EXISTS bm25_spec_idx")
       spark.sql("DROP TABLE IF EXISTS bm25_spec_idx_s")
+    }
+  }
+
+  test("bm25TopKIndexed: a query side over the 65,536-term-row snapshot cap equals bm25TopK") {
+    // 16,385 queries of 4 distinct terms = 65,540 term rows: the probe
+    // side is lazily checkpointed and its 50 terms still pushed
+    val docs = (0 until 40).map(i => (i.toLong,
+        (0 until 6).map(j => s"w${(i * 7 + j * 3) % 50}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val qs = spark.range(16385).select((col("id") + 1000L).as("q_id"),
+      expr("concat_ws(' ', transform(sequence(0, 3), " +
+        "j -> concat('w', cast(pmod(id * 5 + j * 11, 50) as string))))")
+        .as("qtext"))
+    try {
+      TextAnalysis.writeBm25Index(docs, "doc_id", "text", "bm25_overcap_idx")
+      val direct = TextAnalysis.bm25TopK(docs, "doc_id", "text",
+          qs, "q_id", "qtext", k = 3)
+        .as[(Long, Long, Int, Long)].collect().sortBy(r => (r._1, r._3))
+      val probe = TextAnalysis.bm25TopKIndexed(qs, "q_id", "qtext",
+          "bm25_overcap_idx", k = 3)
+      assert(probe.queryExecution.analyzed.collectFirst {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r
+        }.isDefined, "the 65,540-row query side took the snapshot path")
+      val indexed = probe.as[(Long, Long, Int, Long)].collect()
+        .sortBy(r => (r._1, r._3))
+      assert(direct.length == 16385 * 3 && direct.toSeq == indexed.toSeq,
+        s"direct=${direct.take(6).toSeq} indexed=${indexed.take(6).toSeq}")
+      assert(probe.queryExecution.executedPlan.toString.contains("In(term"),
+        "the over-cap query side read every posting")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS bm25_overcap_idx")
+      spark.sql("DROP TABLE IF EXISTS bm25_overcap_idx_s")
     }
   }
 
@@ -3128,11 +3195,16 @@ class TextAnalysisSpec extends AnyFunSuite with SparkTest {
           "qtext", "phr_spec_idx")
         .as[(Long, Long, Long)].collect().toSet
       assert(indexedAll == scanAll, s"indexedAll=$indexedAll scanAll=$scanAll")
-      // past the pushdown cap: the broadcast semi-restrict fallback
-      // must produce the same rows
-      val fallback = TextAnalysis.phraseMatchesIndexed(qs, "q_id",
-          "qtext", "phr_spec_idx", cands, "doc_id", maxPushdownTerms = 1)
-        .as[(Long, Long, Long)].collect().toSet
+      // past the 256-term pushdown cap: the broadcast semi-join
+      // fallback must produce the same rows — 150 more two-word
+      // queries carry 300 terms no document holds
+      val wide = qs.union((0 until 150).map(i => (1000L + i, s"nx$i ny$i"))
+        .toDF("q_id", "qtext"))
+      val fellBack = TextAnalysis.phraseMatchesIndexed(wide, "q_id",
+          "qtext", "phr_spec_idx", cands, "doc_id")
+      val fallback = fellBack.as[(Long, Long, Long)].collect().toSet
+      assert(!fellBack.queryExecution.executedPlan.toString
+        .contains("In(term"), "the 300-term probe pushed an In list")
       assert(fallback == scan, s"fallback=$fallback scan=$scan")
       // n=3 adjacency chain over stored positions
       val scan3 = TextAnalysis.phraseMatches(docs, "doc_id", "text",

@@ -996,8 +996,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import spark.implicits._
     val docs = Tables.documents(spark, d)
-    // the probe's final frame hides behind its materialization barrier,
-    // so assert on the package-visible scan stage (phrasePostIndexed,
+    // assert on the package-visible scan stage (phrasePostIndexed,
     // the svFracCandidates convention) with a hand-built phrase-word
     // frame (q_id, t0, t1) of real corpus terms
     val qp = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 100 === 0)
@@ -1009,7 +1008,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
     val cands = (0L until 50L).toDF("doc_id")
     try {
       TextAnalysis.writeBm25Index(docs, "doc_id", "text", "phr_plan_idx")
-      val probe = TextAnalysis.phrasePostIndexed(qp, "phr_plan_idx",
+      val (_, probe) = TextAnalysis.phrasePostIndexed(qp, "phr_plan_idx",
         cands, "doc_id", n = 2)
       probe.collect()
       val p = probe.queryExecution.executedPlan.toString
@@ -1448,6 +1447,37 @@ class PlanQualitySpec extends AnyFunSuite with SparkTest {
       AdcKit.drop("planq_adc_idx")
       spark.sql("DROP TABLE IF EXISTS planq_bm25_idx")
       spark.sql("DROP TABLE IF EXISTS planq_bm25_idx_s")
+    }
+  }
+
+  test("phrase probe at or under the caps: one construction job and the phrase terms pushed to the postings scan") {
+    // the third persisted probe on the shared probe side: one bounded
+    // snapshot of the phrase words is the whole construction, and
+    // their terms reach the stored scan as an In list
+    import graft.pipeline.TextAnalysis
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, d)
+    val qt = docs.filter(col("doc_id") % 25 === 0)
+      .selectExpr("doc_id AS q_id",
+        "array_join(slice(filter(split(text, ' '), w -> length(w) > 0), 1, 8), ' ') AS qtext")
+    try {
+      TextAnalysis.writeBm25Index(docs, "doc_id", "text", "planq_phr_idx")
+      val probe = () => TextAnalysis.phraseMatchesIndexed(qt, "q_id",
+        "qtext", "planq_phr_idx")
+      probe().collect()
+      val (df, jobs) = jobsOf(probe())
+      df.collect()
+      assert(jobs == 1, s"phrase probe construction ran $jobs jobs")
+      // the scan metadata, not the plan string, which abbreviates it
+      val pushed = planNodes(df.queryExecution.executedPlan).collect {
+        case s: FileSourceScanExec => s.metadata("PushedFilters")
+      }
+      assert(pushed.nonEmpty && pushed.forall(_.contains("In(term, [")),
+        pushed.mkString("\n"))
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS planq_phr_idx")
+      spark.sql("DROP TABLE IF EXISTS planq_phr_idx_s")
     }
   }
 }
