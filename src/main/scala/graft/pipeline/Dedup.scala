@@ -525,7 +525,7 @@ object Dedup {
     MergeTables.recoverCompactCrash(spark, table)
     val stored =
       if (bucketedRead) graft.sources.MapFiles.readBucketed(spark, table)
-      else spark.table(table)
+      else MergeTables.freshView(spark, table)
     MergeTables.withoutTombstones(spark, table, stored, "id", "id")(
       identity)
   }

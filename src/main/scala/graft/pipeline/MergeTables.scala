@@ -294,10 +294,11 @@ private[graft] object MergeTables {
     * table. */
   def replayed(spark: SparkSession, table: String, key: Long)
       : Boolean = {
-    // heal a crashed compaction first: with in-loop compaction this
-    // check can be the first read after the crash window
-    recoverCompactCrash(spark, table)
-    if (!spark.table(table).filter(col("batch_key") === key).isEmpty) true
+    // healed and refreshed first: with in-loop compaction this check
+    // can be the first read after the crash window, and the key may
+    // have landed from another session (a stream's micro-batch clone)
+    if (!freshView(spark, table).filter(col("batch_key") === key).isEmpty)
+      true
     else if (key < Similarity.streamBatchKeyBase) false
     else {
       val ht = hwmTable(table)
@@ -1061,37 +1062,41 @@ private[graft] object MergeTables {
     spark.table(table)
   }
 
-  /** [[freshView]]'s file snapshot: the crash-recovered, catalog-fresh
-    * sorted part-file listing of `table` — the content-addressed
-    * staleness key for anything memoized against the table's stored
-    * state (every mutation under the write/append/compact protocol
-    * rewrites or adds part files). A snapshot read WITHOUT this
-    * discipline inherits both of freshView's failure modes: the first
-    * read after a compactor crashed mid-swap throws table-not-found
-    * where the heal recovers it, and a relation cached by an earlier
-    * read in this session keeps the listing unchanged across another
-    * session's append (ADVICE r17). Metadata-only, bounded-file work
-    * under the compaction contract. */
+  /** [[freshView]]'s file snapshot: the crash-recovered, sorted
+    * part-file listing of `table` — the content-addressed staleness key
+    * for anything memoized against the table's stored state (every
+    * mutation under the write/append/compact protocol rewrites or adds
+    * part files). Taken straight from the catalog location on every
+    * call, so another session's append is seen by the next read; the
+    * heal keeps the first read after a compactor crashed mid-swap from
+    * throwing table-not-found (ADVICE r17). Metadata-only,
+    * bounded-file work under the compaction contract. */
   private[graft] def freshInputFiles(spark: SparkSession, table: String)
       : Seq[String] =
     freshFileStatuses(spark, table).map(_._1)
 
-  /** [[freshInputFiles]] with each file's status (length, mtime): the
-    * path strings `Dataset.inputFiles` gives, read off the analyzed
-    * relation's file index (no optimizer pass), sorted. */
+  /** [[freshInputFiles]] with each file's status (length, mtime): one
+    * listing of the table's unpartitioned catalog location, keeping
+    * what Spark's file index keeps (no `_…` commit markers, `.…`
+    * checksum siblings or `…._COPYING_` partials), so the paths equal
+    * the refreshed table's `Dataset.inputFiles`, sorted. */
   private[graft] def freshFileStatuses(spark: SparkSession, table: String)
-      : Seq[(String, org.apache.hadoop.fs.FileStatus)] =
-    freshView(spark, table).queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation
-    }.flatMap {
-      case org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          idx: org.apache.spark.sql.execution.datasources
-            .PartitioningAwareFileIndex, _, _, _, _, _) =>
-        idx.allFiles()
-      case r => throw new IllegalStateException(
-        s"$table is not a listed file table (${r.getClass.getSimpleName})")
-    }.map(f => f.getPath.toUri.toString -> f).toMap.toSeq.sortBy(_._1)
+      : Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
+    recoverCompactCrash(spark, table)
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table))
+    require(meta.partitionColumnNames.isEmpty,
+      s"$table is partitioned — not a flat listed file table")
+    val dir = new org.apache.hadoop.fs.Path(meta.location)
+    dir.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(dir).toSeq
+      .filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".") &&
+          !n.endsWith("._COPYING_")
+      }
+      .map(f => f.getPath.toUri.toString -> f).sortBy(_._1)
+  }
 
   /** The group key of mergeable state: `Seq("g")` when the frame
     * carries a `g` column (grouped state — one bounded state per key),
@@ -1210,7 +1215,7 @@ private[graft] object MergeTables {
     val tt = tombstoneTable(table)
     if (!spark.catalog.tableExists(tt)) rows
     else {
-      val ids = scope(spark.table(tt)).select(tombId).distinct()
+      val ids = scope(freshView(spark, tt)).select(tombId).distinct()
       rows.join(broadcast(
           if (rowId == tombId) ids else ids.withColumnRenamed(tombId, rowId)),
         Seq(rowId), "left_anti")

@@ -840,39 +840,11 @@ object Similarity {
     def memoKey: String = spark.sparkContext.applicationId + ":" + key
   }
 
-  /** The ONE serving TTL cache (`graft.adc.quantKeyTtlMs`): (application,
-    * index) → (read-at nanos, snapshot). A snapshot carries its centroid
-    * listing, so a cache hit serves the protocol rows AND the broadcast
-    * memo key with no sidecar read and no listing. The age test runs
-    * against the CURRENT conf TTL at read time, so lowering (or
-    * clearing) the TTL takes effect on the very next plan. One entry
-    * per index.
-    *
-    * Staleness contract: mutators and the stored-decision serve read
-    * fresh (`fresh = true`), which also drops the entry, and every
-    * in-process mutation invalidates it, so an in-process change is
-    * seen by the next plan. A FOREIGN process's retrain, rebuild or
-    * append inside a TTL window is seen by the fraction-law and
-    * explicit-dial probes only at expiry or an explicit
-    * [[invalidateQuantKeyCache]]; meanwhile the cached epochs keep
-    * filtering the (already swapped) stored table, so a foreign
-    * retrain yields EMPTY results, not stale neighbors. Default 0 =
-    * fresh per plan (the oracle-gated rows keep it). */
-  private val svStateCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (Long, SvState)]()
-
-  private[graft] def svState(spark: SparkSession, table: String,
-      fresh: Boolean = false): SvState = {
-    val ttlMs =
-      if (fresh) 0L
-      else spark.conf.getOption("graft.adc.quantKeyTtlMs")
-        .map(_.toLong).getOrElse(0L)
-    val ck = (spark.sparkContext.applicationId, table)
-    if (ttlMs > 0L) {
-      val hit = svStateCache.get(ck)
-      if (hit != null &&
-          System.nanoTime() - hit._1 < ttlMs * 1000000L) return hit._2
-    }
+  /** The index's state as it stands now: every call re-reads the
+    * sidecars and re-lists, so a foreign process's retrain, rebuild or
+    * append is seen by the very next probe. */
+  private[graft] def svState(spark: SparkSession, table: String)
+      : SvState = {
     val (nShards, rsgen) = readShardMeta(spark, table)
     val dataT = svDataTable(table, rsgen)
     val gt = dataT + "_g"
@@ -891,25 +863,20 @@ object Similarity {
       s"$table: shard $s has no committed generations — corrupt index"))
     val committed = rows.iterator
       .filter { case (s, _, e) => e == epochs(s) }.toArray
-    val st = SvState(table, nShards, rsgen, dataT, epochs, committed)(spark)
-    if (ttlMs > 0L) svStateCache.put(ck, (System.nanoTime(), st))
-    else svStateCache.remove(ck)
-    st
+    SvState(table, nShards, rsgen, dataT, epochs, committed)(spark)
   }
 
-  /** Drop every in-process cached handle on a sharded index — the TTL
-    * snapshot and the combined broadcasts — after any layout/epoch
-    * mutation. */
-  private def invalidateSvCaches(table: String, dataT: String): Unit = {
+  /** Release the combined broadcasts of a sharded index's data table
+    * after any layout/epoch mutation. */
+  private def invalidateSvCaches(dataT: String): Unit = {
     Option(svQuantMemo.remove(dataT)).foreach(_._2.unpersist(false))
     Option(svHierMemo.remove(dataT)).foreach(_._2.unpersist(false))
-    invalidateQuantKeyCache(table)
   }
 
   /** [[SvState.key]] of the index's current, freshly read state. */
   private[graft] def svStateNow(spark: SparkSession, table: String)
       : String =
-    svState(spark, table, fresh = true).key
+    svState(spark, table).key
 
   /** Fail LOUDLY if the index's quantizer state changed since `key0`
     * — the multi-audit tuner's guard. Each audit resolves the state
@@ -931,9 +898,7 @@ object Similarity {
     * the trainers hold). */
   private def readSvCentroids(spark: SparkSession, st: SvState)
       : Array[Array[Array[Double]]] = {
-    MergeTables.recoverCompactCrash(spark, st.dataT + "_c")
-    spark.catalog.refreshTable(st.dataT + "_c")
-    val rows = spark.table(st.dataT + "_c")
+    val rows = MergeTables.freshView(spark, st.dataT + "_c")
       .select(col("shard").cast("int"), col("cell"), col("cent"),
         col("epoch"))
       .collect()
@@ -1123,7 +1088,7 @@ object Similarity {
           "drop them explicitly or pick another name")
     }
     val dataT = svDataTable(table, 0L)
-    invalidateSvCaches(table, dataT)
+    invalidateSvCaches(dataT)
     val quants = svBuildLayout(vecs, idCol, vecCol, dataT, nShards,
       counts, dim, targetRecall, init, cents)
     import spark.implicits._
@@ -1151,7 +1116,7 @@ object Similarity {
     val stored = (
       if (bucketedRead)
         graft.sources.MapFiles.readBucketed(spark, st.dataT)
-      else spark.table(st.dataT))
+      else MergeTables.freshView(spark, st.dataT))
       .filter(col("epoch").isin(
         st.epochs.distinct.sorted.map(Long.box): _*))
       .filter(committedAt(st))
@@ -1441,7 +1406,7 @@ object Similarity {
       s"targetRecall=$targetRecall")
     require(maxDepthFactor >= 1, s"maxDepthFactor=$maxDepthFactor")
     val spark = queries.sparkSession
-    val st = svState(spark, table, fresh = true)
+    val st = svState(spark, table)
     val key0 = st.key
     val nlists = svQuantBc(spark, st).value.quants.map(_.norms2.length)
     val res = svPerShard(st.nShards) { s =>
@@ -1562,7 +1527,7 @@ object Similarity {
     * reshard, rebuild or centroid GC — [[SvState.key]]). */
   def readShardServing(spark: SparkSession, table: String)
       : Option[Seq[ShardServing]] =
-    servingRows(spark, svState(spark, table, fresh = true))
+    servingRows(spark, svState(spark, table))
 
   /** The stored serving rows of `st`'s index when they were tuned
     * against exactly `st` — metadata + one sidecar read; no ceiling or
@@ -1615,7 +1580,7 @@ object Similarity {
       vecCol: String, k: Int, table: String,
       vecs: Option[DataFrame] = None): DataFrame = {
     val spark = queries.sparkSession
-    val st = svState(spark, table, fresh = true)
+    val st = svState(spark, table)
     val servings = servingRows(spark, st).getOrElse(
       throw new IllegalStateException(
         s"$table has no fresh per-shard serving rows — a shard was " +
@@ -1626,7 +1591,7 @@ object Similarity {
   }
 
   /** The tuned probe at EXPLICIT per-shard dials — the dial-sweep
-    * primitive (every shard in probe mode, the index state TTL-served
+    * primitive (every shard in probe mode, the index state read fresh
     * like the fraction-law probe). OPT-IN serving path: recall is a
     * measured, gated quantity; never substituted under an oracle-gated
     * query. */
@@ -1791,7 +1756,7 @@ object Similarity {
       MergeTables.withTableLock(table) {
     val spark = newVecs.sparkSession
     requireNonNegIds(newVecs, idCol, "appendIvfAdcIndexSharded")
-    val st = svState(spark, table, fresh = true)
+    val st = svState(spark, table)
     val gen = graft.sources.MapFiles.freshGen()
     svAppendRowsOnly(newVecs, idCol, vecCol, st, gen)
     svCommitGen(spark, st, gen)
@@ -1806,7 +1771,7 @@ object Similarity {
       ids: DataFrame, idCol: String): Unit =
       MergeTables.withTableLock(table) {
     requireNonNegIds(ids, idCol, "deleteIvfVecsSharded")
-    val st = svState(spark, table, fresh = true)
+    val st = svState(spark, table)
     val em = svEpochMap(st)
     MergeTables.landTombstones(
       ids.select(col(idCol).cast("long").as("id")).distinct()
@@ -1827,7 +1792,7 @@ object Similarity {
       lineage: Long = 0L): Unit = {
     val spark = batch.sparkSession
     // resolved at its first use, the key-table read under the lock
-    lazy val st = svState(spark, table, fresh = true)
+    lazy val st = svState(spark, table)
     MergeTables.landOnce(spark, table, st.dataT + "_g", lineage,
         batchId) { key =>
       val gen = graft.sources.MapFiles.freshGen()
@@ -1852,7 +1817,7 @@ object Similarity {
       maxGen: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = vecStream.sparkSession
-    val st = svState(spark, table, fresh = true)
+    val st = svState(spark, table)
     MergeTables.startKeyedStream(vecStream, Seq(st.dataT + "_g")) {
       (batch, batchId, lineage) =>
         streamAppendAdcBatchSharded(batch, batchId, idCol, vecCol, table,
@@ -1877,7 +1842,7 @@ object Similarity {
     * it compacted. */
   def compactIvfAdcIndexSharded(spark: SparkSession, table: String,
       maxGen: Int = 0): Boolean = MergeTables.withTableLock(table) {
-    val st = svState(spark, table, fresh = true)
+    val st = svState(spark, table)
     val dataT = st.dataT
     MergeTables.compactIfOver(spark, table, dataT + "_g", maxGen) {
       for (t <- Seq(dataT, dataT + "_g", MergeTables.tombstoneTable(dataT),
@@ -1908,7 +1873,7 @@ object Similarity {
         MergeTables.swapInKeyed(spark,
           atActiveEpochs(st)(spark.table(dataT + "_c")).localCheckpoint(),
           "cell", dataT + "_c")
-      invalidateSvCaches(table, dataT)
+      invalidateSvCaches(dataT)
     }
   }
 
@@ -1931,7 +1896,7 @@ object Similarity {
       MergeTables.withTableLock(table) {
     val spark = vecs.sparkSession
     requireNonNegIds(vecs, idCol, "retrainIvfAdcShard")
-    val st = svState(spark, table, fresh = true)
+    val st = svState(spark, table)
     require(shard >= 0 && shard < st.nShards,
       s"shard $shard outside [0, ${st.nShards})")
     val dataT = st.dataT
@@ -1982,7 +1947,7 @@ object Similarity {
         .toSeq.toDF("shard", "gen", "batch_key", "epoch"),
       "gen", dataT + "_g")
     spark.catalog.refreshTable(dataT)
-    invalidateSvCaches(table, dataT)
+    invalidateSvCaches(dataT)
     quantizer
   }
 
@@ -2030,7 +1995,7 @@ object Similarity {
       : Unit = MergeTables.withTableLock(table) {
     require(newShards >= 1, s"newShards=$newShards")
     val spark = vecs.sparkSession
-    val st = svState(spark, table, fresh = true)
+    val st = svState(spark, table)
     // r19 verdict item 4: the old generation's key table is rewritten
     // away below — refuse while a live streaming lineage holds it
     MergeTables.requireNoWriterLease(spark, st.dataT + "_g",
@@ -2064,7 +2029,7 @@ object Similarity {
     MergeTables.swapInKeyed(spark,
       Seq((newShards, g2)).toDF("nshards", "rsgen"), "nshards",
       table + "_sh")
-    invalidateSvCaches(table, st.dataT)
+    invalidateSvCaches(st.dataT)
     // post-commit GC, inert either way: the retired generation's tables
     // and any swap shadows they left
     dropStaleShardGens(spark, table, liveGen = g2)
@@ -2207,15 +2172,6 @@ object Similarity {
         if (prev != null) prev._2.unpersist(false)
         (key, spark.sparkContext.broadcast(make))
       })._2
-
-  /** Drop the TTL-cached snapshot ([[svState]]: protocol rows and
-    * centroid listing) of index `table` — the explicit invalidation
-    * hook for a serving loop that learns of a FOREIGN mutation out of
-    * band (in-process mutators call it themselves). The next probe
-    * re-reads the sidecars, re-lists the centroid files and re-keys
-    * the quantizer broadcast. */
-  def invalidateQuantKeyCache(table: String): Unit =
-    svStateCache.keySet().removeIf(_._2 == table)
 
   /** Two-stage quantized retrieval (qa1) — the composition
     * [[Quantize]]'s Scaladoc promises, closed: [[ivfAdcTopK]] generates

@@ -579,7 +579,7 @@ object TextAnalysis {
       else df.filter(col("gen").isInCollection(gens))
     val stored =
       if (bucketedRead) graft.sources.MapFiles.readBucketed(spark, table)
-      else spark.table(table)
+      else MergeTables.freshView(spark, table)
     val live = MergeTables.withoutTombstones(spark, table,
       committedOnly(stored), "doc_id", "doc_id")(committedOnly)
     (live, (sumOpt("n_docs"), sumOpt("sum_dl")))

@@ -3,11 +3,10 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side reads of the tiny PROTOCOL SIDECAR tables (`_g`, `_sh`,
-  * `_serve`, `_s`): the same crash-healed, catalog-fresh part-file
-  * listing a Spark collect would scan
-  * ([[graft.pipeline.MergeTables.freshFileStatuses]] — heal +
-  * refreshTable + fresh listing), decoded on the driver with the parquet
-  * Group API instead of through a Spark job.
+  * `_serve`, `_s`): the same crash-healed part files a Spark collect
+  * would scan ([[graft.pipeline.MergeTables.freshFileStatuses]] — heal
+  * + one listing of the catalog location), decoded on the driver with
+  * the parquet Group API instead of through a Spark job.
   *
   * Why: every persisted-index PROBE construction resolves its protocol
   * state (active epoch, shard layout, committed generations, stored
@@ -16,9 +15,8 @@ import org.apache.spark.sql.SparkSession
   * contract). A Spark job per read costs a full plan + schedule + task
   * round-trip (~0.1 s on local[32]); the driver-side read has IDENTICAL
   * freshness semantics: the listing is re-taken per call, so a foreign
-  * append/retrain/compaction is seen exactly as the job form saw it
-  * (TTL=0 contract unchanged; the TTL caches above this layer are
-  * untouched).
+  * append/retrain/compaction is seen exactly as the job form saw it.
+  * No cache above this layer outlives a call.
   *
   * Decoded once: part files are immutable and uuid-named (every
   * mutation under the write/append/compact protocol adds or replaces
@@ -80,8 +78,7 @@ object SidecarRead {
   private val decoded = new java.util.concurrent.ConcurrentHashMap[
     String, Map[FileKey, Seq[Row]]]()
 
-  /** All rows of `table`, crash-healed and freshly listed (the
-    * [[graft.pipeline.MergeTables.freshView]] discipline), decoded
+  /** All rows of `table`, crash-healed and freshly listed, decoded
     * driver-side — only the files this table's previous read did not
     * list. Throws if the table does not exist (callers check
     * `tableExists` first, as the job form did). Row order is

@@ -572,17 +572,6 @@ object GrowthBench {
           Similarity.ivfAdcTopKIndexedSharded(panel, "vec_id",
             "embedding", k = 3, s"gshard_idx_$sh"))
       }
-      // the serving metadata floor (r17 verdict item 5), measured on
-      // the widest fan-out: the SAME 8-shard probe with the
-      // quantizer-state TTL cache on — the delta vs qshard_probe_s8
-      // is the per-plan catalog refresh + centroid-listing cost the
-      // cache removes (×8 here, one per shard per plan)
-      spark.conf.set("graft.adc.quantKeyTtlMs", "60000")
-      Similarity.ivfAdcTopKIndexedSharded(panel, "vec_id", "embedding",
-        k = 3, "gshard_idx_8").count() // warm the cache off the clock
-      t("qshard_probe_s8_ttl") = time("qshard_probe_s8_ttl",
-        Similarity.ivfAdcTopKIndexedSharded(panel, "vec_id",
-          "embedding", k = 3, "gshard_idx_8"))
       // stream-vs-oneshot serving (r19; kept in r20 as the regression
       // row for the one-plan layout): the same panel as repeated
       // micro-batches through ONE started streaming fan-out vs
@@ -590,8 +579,8 @@ object GrowthBench {
       // not amortize the old per-shard floor (1.31 vs 1.24 s —
       // Catalyst re-plans per micro-batch, and the floor was
       // per-branch EXECUTION anyway); with the r20 one-table layout
-      // both forms should sit well under both numbers. Both warm,
-      // both under the TTL; 5 rounds each, per-round seconds.
+      // both forms should sit well under both numbers. Both warm;
+      // 5 rounds each, per-round seconds.
       locally {
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
         import spark.implicits._
@@ -626,7 +615,6 @@ object GrowthBench {
           f"(plan-floor amortization " +
           f"${t("qshard_oneshot_s8") / t("qshard_stream_batch_s8")}%.1fx)")
       }
-      spark.conf.unset("graft.adc.quantKeyTtlMs")
     }
 
     // ---- one decade further: the 100x tier (r16 verdict item 3) ----
@@ -925,8 +913,7 @@ object GrowthBench {
       // only on the unsharded tier. This block gates the
       // composition on the stack corpora: per-shard recall-gated
       // dials (tuneShardServing, each shard against its own quantizer
-      // ceiling), the two-level broadcast probe per shard, the
-      // serving TTL on every per-shard metadata read. Expected FLAT
+      // ceiling), the two-level broadcast probe per shard. Expected FLAT
       // in both corpus scale (s8: 1x -> 100x) and shard count (1x:
       // s1 -> s8 -> s32 — the s32 point is the r20 one-plan done-gate:
       // under the retired per-shard-plan fan-out it paid ~0.1 s/shard
@@ -960,17 +947,14 @@ object GrowthBench {
               .mkString(",") +
             f" min-recall=${dials.map(_.hierRecall).min}%.3f" +
             f" tune=${(System.nanoTime() - t0) / 1e9}%.1f s")
-          // the serving configuration: metadata under the TTL cache;
           // EVERY variant warmed off the clock (warm-to-warm, the
           // ADVICE r18 discipline)
-          spark.conf.set("graft.adc.quantKeyTtlMs", "60000")
           Similarity.ivfAdcTopKIndexedShardedTuned(probePanel,
             "vec_id", "embedding", k = 3, tbl, dials).count()
           t(s"qshard_tuned_${tag}_s$sh") =
             time(s"qshard_tuned_${tag}_s$sh",
               Similarity.ivfAdcTopKIndexedShardedTuned(probePanel,
                 "vec_id", "embedding", k = 3, tbl, dials))
-          spark.conf.unset("graft.adc.quantKeyTtlMs")
           // fused agreement: the qb7 stack with its dense leg through
           // the tuned fan-out vs the fraction-law fan-out, SAME index
           def agree(a: DataFrame, b: DataFrame): Double =

@@ -29,11 +29,11 @@ object AdcKit {
 
   /** The probe-visible rows: committed, active epoch, not tombstoned. */
   def liveRows(t: String): DataFrame =
-    Similarity.svLiveRows(spark, Similarity.svState(spark, t, fresh = true))
+    Similarity.svLiveRows(spark, Similarity.svState(spark, t))
 
   /** The active quantizer epoch of shard 0. */
   def epoch(t: String): Long =
-    Similarity.svState(spark, t, fresh = true).epochs(0)
+    Similarity.svState(spark, t).epochs(0)
 
   /** Sorted (q_id, nb_id, rank) rows of a retrieval result. */
   def ranks(df: DataFrame): Seq[(Long, Long, Int)] = {

@@ -971,7 +971,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       val pre = probe()
       val orphanGen = 777L
       Similarity.svAppendRowsOnly(batch, "vec_id", "embedding",
-        Similarity.svState(spark, "adc_atom_idx", fresh = true), orphanGen)
+        Similarity.svState(spark, "adc_atom_idx"), orphanGen)
       assert(spark.table("adc_atom_idx_sv")
         .filter(col("gen") === orphanGen).count() > 0)
       assert(probe() == pre, "uncommitted append leaked into the probe")
@@ -1219,9 +1219,9 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
         "embedding", "adc_ilv_idx")
       val (genA, genB) = (7001L, 7002L)
       // writer A rows, writer B rows, B commits, then A commits
-      val stA = Similarity.svState(spark, "adc_ilv_idx", fresh = true)
+      val stA = Similarity.svState(spark, "adc_ilv_idx")
       Similarity.svAppendRowsOnly(a, "vec_id", "embedding", stA, genA)
-      val stB = Similarity.svState(spark, "adc_ilv_idx", fresh = true)
+      val stB = Similarity.svState(spark, "adc_ilv_idx")
       Similarity.svAppendRowsOnly(b, "vec_id", "embedding", stB, genB)
       Similarity.svCommitGen(spark, stB, genB)
       Similarity.svCommitGen(spark, stA, genA)
@@ -1384,7 +1384,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       val before = rows(Similarity.ivfAdcTopKIndexedSharded(queries,
         "vec_id", "embedding", k = 3, "atm_idx"))
       // (a) the crash window: rows land, no commit
-      val st = Similarity.svState(spark, "atm_idx", fresh = true)
+      val st = Similarity.svState(spark, "atm_idx")
       Similarity.svAppendRowsOnly(batch, "vec_id", "embedding", st,
         gen = 424242L)
       assert(rows(Similarity.ivfAdcTopKIndexedSharded(queries,
@@ -2092,14 +2092,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     } finally AdcKit.drop("adc_rbld_idx", "adc_rbld_ref")
   }
 
-  test("quantizer state-key TTL cache: a warm cache hides a rebuild only until the next invalidation point — hook or expiry") {
-    // r17 verdict item 5: graft.adc.quantKeyTtlMs > 0 serves the
-    // protocol state and the centroid-file listing from one cached
-    // snapshot so a high-QPS serving loop stops paying sidecar reads +
-    // a listing per plan. The documented trade is that a foreign same-epoch rebuild
-    // is seen only at the next invalidation point; this pins BOTH
-    // halves — the staleness window exists (the cache is real), and
-    // both invalidation points (explicit hook, TTL expiry) end it.
+  test("a foreign same-name rebuild is seen by the very next fraction-law, explicit-dials and stream-start probe") {
+    // every ADC call reads the index state fresh: no conf, no hook, no
+    // staleness window. A FOREIGN rebuild — another process drops and
+    // rebuilds the index at the same name — leaves this process's
+    // broadcast memos untouched (an in-process build clears them) and
+    // restarts the epoch numbers, so only the centroid-file snapshot
+    // can tell the states apart. Simulated by swapping the tables'
+    // contents through the catalog without the write path.
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val a = spark.range(300).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
       "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d" +
@@ -2111,62 +2112,116 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
       " + pmod(hash(id, 43, i), 100) / 1000.0d - 0.05d as float))")
       .as("embedding"))
     val queries = b.filter(col("vec_id") % 30 === 0)
-    def rows(table: String) = AdcKit.probe(queries, table)
-    // a FOREIGN rebuild: another process drops and rebuilds the index
-    // at the same name — our catalog sees new tables/files at the same
-    // epoch numbers, but OUR caches are untouched (a build in this
-    // process clears them, which is why an in-process rebuild is
-    // always detected; the cache trade only exists for foreign ones).
-    // Simulated by swapping the tables' contents through the catalog
-    // without the write path.
+    val dials = Seq(Similarity.ShardDials(2, 0.9, 1, 0.9))
+    def frac(table: String) = AdcKit.probe(queries, table)
+    def tuned(table: String) = AdcKit.ranks(
+      Similarity.ivfAdcTopKIndexedShardedTuned(queries, "vec_id",
+        "embedding", k = 3, table, dials))
+    def streamed(table: String) = {
+      val sink = tmpDir("adc_fresh_sink")
+      val ms = MemoryStream[(Long, Array[Float])](spark)
+      val q = Similarity.startStreamAdcTopKSharded(
+        ms.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
+        k = 3, table, sink)
+      try {
+        ms.addData(queries.select("vec_id", "embedding")
+          .as[(Long, Array[Float])].collect().toSeq)
+        q.processAllAvailable()
+      } finally q.stop()
+      AdcKit.ranks(spark.read.parquet(sink))
+    }
+    def all(table: String) = (frac(table), tuned(table), streamed(table))
     def foreignSwapFrom(src: String): Unit =
       for (sfx <- Seq("_sv", "_sv_c", "_sv_g")) {
         val staged = spark.table(src + sfx).localCheckpoint()
-        spark.sql(s"DROP TABLE IF EXISTS adc_ttl_idx$sfx")
-        staged.write.saveAsTable("adc_ttl_idx" + sfx)
+        spark.sql(s"DROP TABLE IF EXISTS adc_frs_idx$sfx")
+        staged.write.saveAsTable("adc_frs_idx" + sfx)
       }
     try {
       Similarity.writeIvfAdcIndexSharded(a, "vec_id", "embedding",
-        "adc_ttl_idx")
-      spark.conf.set("graft.adc.quantKeyTtlMs", "3600000")
-      rows("adc_ttl_idx") // warm the caches + quantizer memo on A
+        "adc_frs_idx")
+      val before = all("adc_frs_idx") // warms every memo on A's state
       Similarity.writeIvfAdcIndexSharded(b, "vec_id", "embedding",
-        "adc_ttl_b")
-      foreignSwapFrom("adc_ttl_b")
-      val ref = rows("adc_ttl_b")
-      assert(rows("adc_ttl_idx") != ref,
-        "the TTL cache did not serve the cached listing — the probe " +
-          "re-listed per plan, so the cache saves nothing")
-      // invalidation point 1: the explicit hook
-      Similarity.invalidateQuantKeyCache("adc_ttl_idx")
-      assert(rows("adc_ttl_idx") == ref,
-        "rebuild not detected after invalidateQuantKeyCache")
-      // invalidation point 2: TTL expiry — foreign-swap back to corpus
-      // A's index under a short TTL, wait past it; the probe must
-      // re-key and rank like A's own fresh build
-      spark.conf.set("graft.adc.quantKeyTtlMs", "100")
-      rows("adc_ttl_idx") // re-warm the cache on B's state
-      Similarity.writeIvfAdcIndexSharded(a, "vec_id", "embedding",
-        "adc_ttl_a2")
-      foreignSwapFrom("adc_ttl_a2")
-      Thread.sleep(150)
-      assert(rows("adc_ttl_idx") == rows("adc_ttl_a2"),
-        "rebuild not detected after the TTL expired")
+        "adc_frs_b")
+      val ref = all("adc_frs_b")
+      assert(ref._1.nonEmpty && ref._2.nonEmpty && ref._3.nonEmpty &&
+        before._1 != ref._1 && before._2 != ref._2 && before._3 != ref._3,
+        "vacuous gate: the two indexes rank alike")
+      foreignSwapFrom("adc_frs_b")
+      val got = all("adc_frs_idx")
+      assert(got._1 == ref._1, "fraction-law probe served the old state")
+      assert(got._2 == ref._2, "explicit-dials probe served the old state")
+      assert(got._3 == ref._3, "stream-start probe served the old state")
+    } finally AdcKit.drop("adc_frs_idx", "adc_frs_b")
+  }
+
+  test("another session's append and delete, and a streamed append, are seen by this session's next probe") {
+    // each session caches a table's relation with its file listing; a
+    // probe that read its stored side through that cache would miss
+    // what another session landed — another user's session here, a
+    // stream's micro-batch clone below — and a takedown would go
+    // unenforced
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val other = spark.newSession()
+    def docs(s: org.apache.spark.sql.SparkSession, ids: Seq[Long],
+        text: String) = s.createDataFrame(ids.map(i => (i, text)))
+      .toDF("doc_id", "text")
+    def lexIds(s: org.apache.spark.sql.SparkSession): Set[Long] =
+      TextAnalysis.bm25TopKIndexed(
+          s.createDataFrame(Seq((0L, "fresh streamed"))).toDF("q_id", "qtext"),
+          "q_id", "qtext", "sess_bm", k = 5)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    def vecs(s: org.apache.spark.sql.SparkSession) =
+      s.range(400).select(col("id").as("vec_id"), expr(
+        "transform(sequence(0, 63), i -> cast(" +
+        "pmod(hash(id, 17, i), 2000) / 1000.0d - 1.0d as float))")
+        .as("embedding"))
+    def denseIds(s: org.apache.spark.sql.SparkSession): Set[Long] =
+      Similarity.ivfAdcTopKIndexedSharded(
+          vecs(s).filter(col("vec_id") === 311), "vec_id", "embedding",
+          k = 3, "sess_adc")
+        .select("nb_id").collect().map(_.getLong(0)).toSet
+    try {
+      TextAnalysis.writeBm25Index(docs(spark, 0L until 200L, "old words"),
+        "doc_id", "text", "sess_bm")
+      assert(lexIds(spark).isEmpty) // caches this session's relation
+      TextAnalysis.appendBm25Index(docs(other, 1000L to 1002L, "fresh"),
+        "doc_id", "text", "sess_bm")
+      assert(lexIds(other) == Set(1000L, 1001L, 1002L))
+      assert(lexIds(spark) == Set(1000L, 1001L, 1002L),
+        "this session's probe missed the other session's append")
+      val ms = MemoryStream[(Long, String)](spark)
+      val q = TextAnalysis.startStreamAppendBm25Index(
+        ms.toDF().toDF("doc_id", "text"), "doc_id", "text", "sess_bm")
+      ms.addData((2000L, "streamed"), (2001L, "streamed"))
+      graft.streaming.EventStreams.drain(q)
+      assert(lexIds(spark) == Set(1000L, 1001L, 1002L, 2000L, 2001L),
+        "this session's probe missed the streamed append")
+
+      Similarity.writeIvfAdcIndexSharded(vecs(spark), "vec_id",
+        "embedding", "sess_adc")
+      Similarity.deleteIvfVecsSharded(spark, "sess_adc",
+        Seq(5L).toDF("vec_id"), "vec_id")
+      val victim = denseIds(spark).min // caches the tombstones
+      Similarity.deleteIvfVecsSharded(other, "sess_adc",
+        other.range(victim, victim + 1).toDF("vec_id"), "vec_id")
+      assert(!denseIds(other).contains(victim))
+      assert(!denseIds(spark).contains(victim),
+        "this session's probe served an id the other session deleted")
     } finally {
-      spark.conf.unset("graft.adc.quantKeyTtlMs")
-      AdcKit.drop("adc_ttl_idx", "adc_ttl_b", "adc_ttl_a2")
+      for (t <- Seq("sess_bm", "sess_bm_s", "sess_bm_t", "sess_bm_s_hwm"))
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+      AdcKit.drop("sess_adc")
     }
   }
 
-  test("an in-process retrain is probe-visible immediately even under the serving TTL cache") {
-    // the TTL trade (a FOREIGN rebuild waits for expiry or the hook)
-    // must not leak onto in-process mutators: retrain and compaction
-    // call invalidateQuantKeyCache, which drops the cached snapshot —
-    // protocol state and centroid listing together — so a warm serving
-    // loop in the same process sees its own retrain's epoch flip on
-    // the very next plan, not at expiry. (A cached pre-retrain epoch
-    // would filter the stored side to retired rows and the probe would
-    // silently serve nothing.)
+  test("an in-process retrain is probe-visible immediately") {
+    // a warm serving loop in the same process sees its own retrain's
+    // epoch flip on the very next plan: protocol state and centroid
+    // listing are read per call, and the retrain releases the stale
+    // quantizer broadcast. (A pre-retrain epoch would filter the
+    // stored side to retired rows and the probe would silently serve
+    // nothing.)
     val a = spark.range(300).select(col("id").as("vec_id"), expr(
       "transform(sequence(0, 63), i -> cast(" +
       "pmod(hash(pmod(id, 8), 11, i), 2000) / 1000.0d - 1.0d" +
@@ -2182,19 +2237,15 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     try {
       Similarity.writeIvfAdcIndexSharded(a, "vec_id", "embedding",
         "adc_rtl_idx")
-      spark.conf.set("graft.adc.quantKeyTtlMs", "3600000")
-      rows("adc_rtl_idx") // warm state + listing caches + memo
+      rows("adc_rtl_idx") // warm the quantizer memo
       Similarity.retrainIvfAdcIndexSharded(b, "vec_id", "embedding",
         "adc_rtl_idx")
       Similarity.writeIvfAdcIndexSharded(b, "vec_id", "embedding",
         "adc_rtl_ref")
       val got = rows("adc_rtl_idx")
       assert(got.nonEmpty && got == rows("adc_rtl_ref"),
-        "in-process retrain hidden by the warm serving TTL cache")
-    } finally {
-      spark.conf.unset("graft.adc.quantKeyTtlMs")
-      AdcKit.drop("adc_rtl_idx", "adc_rtl_ref")
-    }
+        "in-process retrain hidden by the warm quantizer memo")
+    } finally AdcKit.drop("adc_rtl_idx", "adc_rtl_ref")
   }
 
   test("requireQuantStable: a mid-tune same-name rebuild fails the tune even when the epoch NUMBER matches") {

@@ -144,7 +144,7 @@ class SidecarReadSpec extends AnyFunSuite with SparkTest {
     } finally spark.sql("DROP TABLE IF EXISTS screl_row")
   }
 
-  test("decoded-once reads stay fresh: after append, compaction, re-tune and same-name rebuild the reader equals a Spark collect, serves no departed file, and memoizes only the latest listing") {
+  test("decoded-once reads stay fresh: after append, delete, compaction, re-tune, reshard and same-name rebuild the reader equals a Spark collect, serves no departed file, and memoizes only the latest listing") {
     // the reader memoizes each part file's decoded rows under (path,
     // length, mtime); every lifecycle step below rewrites or adds
     // sidecar files, so a stale memo entry would show as a row the
@@ -159,24 +159,37 @@ class SidecarReadSpec extends AnyFunSuite with SparkTest {
     val docs = spark.range(500).select(col("id").as("doc_id"), expr(
       "concat_ws(' ', transform(sequence(0, 7), " +
       "i -> concat('w', pmod(hash(id, 13, i), 60))))").as("text"))
-    val tables = Seq("scfr_adc_sh", "scfr_adc_sv_g", "scfr_adc_serve",
+    // the ADC data table moves to a new name at a reshard
+    def dataT =
+      if (!spark.catalog.tableExists("scfr_adc_sh")) "scfr_adc_sv"
+      else Similarity.svState(spark, "scfr_adc").dataT
+    def tables = Seq("scfr_adc_sh", dataT + "_g", "scfr_adc_serve",
       "scfr_bm_s")
     def serve(np: Int) = Similarity.writeShardServing(spark, "scfr_adc",
       Seq.fill(2)(Similarity.ShardServing("probe",
         Similarity.ShardDials(np, 0.9, 1, 0.9), depth = 0, recall = 0.9)))
     var departed = Set.empty[String]
-    def check(step: String): Unit = for (t <- tables) {
-      val got = SidecarRead.rows(spark, t)
-      spark.catalog.refreshTable(t)
-      val listed = MergeTables.freshInputFiles(spark, t).toSet
-      assert(sorted(got.map(_.values)) == sparkRows(t), s"$step: $t rows")
-      assert(got.forall(r => listed(r.file)),
-        s"$step: $t served a file outside its listing")
-      assert(got.forall(r => !departed(r.file)),
-        s"$step: $t served a departed file")
-      assert(SidecarRead.memoizedFiles(spark, t) == listed,
-        s"$step: $t memo holds " + SidecarRead.memoizedFiles(spark, t) +
-          " for listing " + listed)
+    def check(step: String): Unit = {
+      for (t <- tables) {
+        val got = SidecarRead.rows(spark, t)
+        spark.catalog.refreshTable(t)
+        val listed = MergeTables.freshInputFiles(spark, t).toSet
+        assert(sorted(got.map(_.values)) == sparkRows(t), s"$step: $t rows")
+        assert(got.forall(r => listed(r.file)),
+          s"$step: $t served a file outside its listing")
+        assert(got.forall(r => !departed(r.file)),
+          s"$step: $t served a departed file")
+        assert(SidecarRead.memoizedFiles(spark, t) == listed,
+          s"$step: $t memo holds " + SidecarRead.memoizedFiles(spark, t) +
+            " for listing " + listed)
+      }
+      // the catalog-location listing is the file set Spark would scan
+      for (t <- tables ++ Seq(dataT + "_c", "scfr_bm")) {
+        spark.catalog.refreshTable(t)
+        assert(MergeTables.freshInputFiles(spark, t) ==
+          spark.table(t).inputFiles.toSeq.sorted,
+          s"$step: $t listing differs from Spark's inputFiles")
+      }
     }
     def listing(): Set[String] =
       tables.filter(spark.catalog.tableExists)
@@ -203,11 +216,22 @@ class SidecarReadSpec extends AnyFunSuite with SparkTest {
         TextAnalysis.appendBm25Index(docs.filter(col("doc_id") >= 250),
           "doc_id", "text", "scfr_bm")
       }
+      step("delete") {
+        Similarity.deleteIvfVecsSharded(spark, "scfr_adc",
+          spark.range(0, n, 7).toDF("vec_id"), "vec_id")
+        TextAnalysis.deleteBm25Docs(spark, "scfr_bm",
+          spark.range(0, 500, 9).toDF("doc_id"), "doc_id")
+      }
       step("compaction") {
         Similarity.compactIvfAdcIndexSharded(spark, "scfr_adc")
         TextAnalysis.compactBm25Index(spark, "scfr_bm")
       }
       step("re-tune")(serve(3))
+      step("reshard") {
+        Similarity.reshardIvfAdcIndex(corpus, "vec_id", "embedding",
+          "scfr_adc", newShards = 2)
+        serve(3)
+      }
       step("same-name rebuild") {
         Similarity.writeIvfAdcIndexSharded(corpus, "vec_id", "embedding",
           "scfr_adc", nShards = 2, dim = 64)
@@ -219,7 +243,7 @@ class SidecarReadSpec extends AnyFunSuite with SparkTest {
       assert(SidecarRead.rows(spark, "scfr_adc_serve")
         .forall(_.getInt("nprobe") == 4), "re-tuned dials not served")
     } finally {
-      AdcKit.drop("scfr_adc")
+      AdcKit.drop("scfr_adc", "scfr_adc_r1")
       for (t <- Seq("scfr_bm", "scfr_bm_s", "scfr_bm_t"))
         spark.sql(s"DROP TABLE IF EXISTS $t")
     }
